@@ -1,6 +1,6 @@
 """One benchmark session in a fresh process: set up, run the job cold,
-then warm until the deadline, then optionally time the layer prefixes;
-optionally traced.
+then untimed warm-ups, then warm until the deadline, then optionally
+time the layer prefixes; optionally traced.
 
 Usage: python3 perfbench/child.py SPEC.json
 
@@ -78,9 +78,12 @@ def main(spec_path: str) -> None:
             rec["ok"] = False
         return rec
 
-    cold, warm = None, []
+    cold, warmup, warm = None, [], []
     if spec["executions"]:
         cold = execute("cold")
+        # untimed: the JIT keeps speeding the job up over its first few
+        # warm executions
+        warmup = [execute(f"warmup:{i}") for i in range(spec["warmup"])]
         while len(warm) < spec["min_warm"] or (
                 time.time() < spec["warm_until"] and len(warm) < spec["max_warm"]):
             warm.append(execute(f"warm:{len(warm)}"))
@@ -116,7 +119,7 @@ def main(spec_path: str) -> None:
     sc.setJobDescription(None)
     spark.stop()
     out = {"setup_s": setup_s, "get_spark_s": get_spark_s, "cold": cold,
-           "warm": warm, "input_rows": wl.input_rows, **extra}
+           "warmup": warmup, "warm": warm, "input_rows": wl.input_rows, **extra}
     with open(spec["result_path"], "w") as f:
         json.dump(out, f)
 

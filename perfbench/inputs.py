@@ -6,7 +6,8 @@ reused by later runs with the same seed; generating them is never part
 of a timed region.
 
 * ``points_rai`` — point table (uniform on the 10°x10° world plus a
-  share packed into the (2.5°, 2.5°) hot cell) and short road segments.
+  share packed into the (2.5°, 2.5°) hot cell) and short road segments,
+  the same number of which pass the hot cell under every seed.
   The reference is an independent numpy even-odd ray-cast against the
   harness country rings plus an exact point-to-segment distance.
 * ``image_rai`` — image tiles in the fixture's format and size mix and
@@ -24,13 +25,25 @@ import tempfile
 
 import numpy as np
 
+# Bumped whenever what a seed generates changes, so that no cache built
+# by an older version of this file is reused.
+VERSION = 2
+
 # points_rai sizes.  The segment count and cutoff put roughly 60% of the
 # points within the cutoff of some road, so both outcomes of the
 # near-road flag are common.
 N_POINTS = 1_000_000
 HOT_SHARE = 0.10
+HOT_XY = 2.5  # degrees; corner of the 0.001° hot square
 N_SEGMENTS = 1_000
 SEG_HALF_SPAN = 0.4  # degrees; segment end = start + U(-span, span)
+# The hot square holds a tenth of the points, so what it costs to flag
+# them must not hang on how many random roads happen to pass it: no
+# random segment's bounding box comes within HOT_CLEAR of it, and
+# HOT_SEGMENTS segments start within HOT_START of it (within the cutoff).
+HOT_SEGMENTS = 2
+HOT_CLEAR = 0.5  # degrees
+HOT_START = 0.02  # degrees
 CUTOFF_M = 10_000.0
 POINTS_LEVEL = 9  # assign_countries cell level, as in the flagship
 
@@ -45,7 +58,7 @@ TILE_SIZES = (32, 64, 128)
 
 def input_dir(cache_root: str, workload: str, seed: int) -> str:
     """Directory holding one seed's inputs and reference; built on demand."""
-    out = os.path.join(cache_root, f"{workload}-seed{seed}")
+    out = os.path.join(cache_root, f"{workload}-v{VERSION}-seed{seed}")
     if os.path.isfile(os.path.join(out, "reference.json")):
         return out
     os.makedirs(cache_root, exist_ok=True)
@@ -82,17 +95,30 @@ def _points(seed: int) -> tuple[np.ndarray, np.ndarray]:
     lat = rng.uniform(0.0, 10.0, N_POINTS)
     # hot cell: a 0.001° square at (2.5, 2.5), scattered through the table
     hot = rng.choice(N_POINTS, n_hot, replace=False)
-    lon[hot] = 2.5 + rng.uniform(0.0, 1e-3, n_hot)
-    lat[hot] = 2.5 + rng.uniform(0.0, 1e-3, n_hot)
+    lon[hot] = HOT_XY + rng.uniform(0.0, 1e-3, n_hot)
+    lat[hot] = HOT_XY + rng.uniform(0.0, 1e-3, n_hot)
     return lon, lat
+
+
+def _segments_from(rng, start: np.ndarray) -> np.ndarray:
+    end = np.clip(start + rng.uniform(-SEG_HALF_SPAN, SEG_HALF_SPAN, start.shape),
+                  0.0, 10.0 - 1e-9)
+    return np.concatenate([start, end], axis=1)  # ax, ay, bx, by
 
 
 def _segments(seed: int) -> np.ndarray:
     rng = np.random.default_rng([seed, 2])
-    a = rng.uniform(0.0, 10.0, (N_SEGMENTS, 2))
-    b = np.clip(a + rng.uniform(-SEG_HALF_SPAN, SEG_HALF_SPAN, (N_SEGMENTS, 2)),
-                0.0, 10.0 - 1e-9)
-    return np.concatenate([a, b], axis=1)  # ax, ay, bx, by
+    n_rand = N_SEGMENTS - HOT_SEGMENTS
+    rand = np.empty((0, 4))
+    while len(rand) < n_rand:
+        segs = _segments_from(rng, rng.uniform(0.0, 10.0, (n_rand, 2)))
+        lo = np.minimum(segs[:, :2], segs[:, 2:])
+        hi = np.maximum(segs[:, :2], segs[:, 2:])
+        clear = ((lo > HOT_XY + 1e-3 + HOT_CLEAR) | (hi < HOT_XY - HOT_CLEAR)).any(axis=1)
+        rand = np.concatenate([rand, segs[clear]])
+    hot = _segments_from(
+        rng, HOT_XY + rng.uniform(-HOT_START, HOT_START, (HOT_SEGMENTS, 2)))
+    return np.concatenate([rand[:n_rand], hot])
 
 
 def _even_odd_inside(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
@@ -156,7 +182,11 @@ def build_points(out_dir: str, seed: int) -> None:
         pa.table({"point_id": np.arange(N_POINTS, dtype=np.int64),
                   "lon": lon, "lat": lat}),
         os.path.join(out_dir, "points.parquet"),
-        row_group_size=1 << 16,
+        # Spark gives each scan task whole row groups; with ~16 groups for
+        # 4 tasks, which task a group lands in hangs on a few bytes of
+        # file size, and the busiest task did 4 or 5 groups' work
+        # depending on the seed.  Small groups keep the tasks even.
+        row_group_size=1 << 13,
     )
     pq.write_table(
         pa.table({"road_id": np.arange(N_SEGMENTS, dtype=np.int64),

@@ -32,11 +32,12 @@ class PointsRai:
     """near-road flag -> country assignment -> per-country aggregate."""
 
     name = "points_rai"
-    # warm executions per untraced run (fewer only if --seconds runs out
-    # first, never fewer than min_warm); warm executions per session of a
-    # traced run; timed prefix repetitions per traced session.  A fixed
-    # count keeps the warm median at the same positions in every run.
-    min_warm, max_warm, trace_warm, prefix_reps = 2, 6, 2, 2
+    # untimed warm-ups and timed warm executions per untraced run; warm
+    # executions per session of a traced run; timed prefix repetitions per
+    # traced session.  The job speeds up over its first warm executions
+    # (JIT), so a count that --seconds could cut short would move the
+    # warm median with the host's load: the counts are fixed.
+    warmup, min_warm, max_warm, trace_warm, prefix_reps = 2, 5, 5, 2, 1
     scaling = True  # the traced run also measures local[1]
 
     def __init__(self, spark, in_dir: str, work_dir: str):
@@ -109,7 +110,7 @@ class ImageRai:
 
     name = "image_rai"
     # one execution costs ~10 s warm and ~25 s cold on 4 cores
-    min_warm, max_warm, trace_warm, prefix_reps = 1, 1, 1, 1
+    warmup, min_warm, max_warm, trace_warm, prefix_reps = 0, 1, 1, 1, 1
     scaling = False
 
     def __init__(self, spark, in_dir: str, work_dir: str):

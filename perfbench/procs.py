@@ -79,9 +79,11 @@ def tree_cpu_s(root: int) -> float:
 class TreeSampler:
     """Background sampler of a process tree: peak resident memory and the
     Python workers forked.  Memory is the summed PSS, so the pages forked
-    workers share with their daemon count once, however many workers run."""
+    workers share with their daemon count once, however many workers run.
+    Reading the PSS of a 2 GB JVM takes ~30 ms of kernel time and holds
+    its address-space lock, so the tree is sampled once a second."""
 
-    def __init__(self, root: int, period_s: float = 0.2):
+    def __init__(self, root: int, period_s: float = 1.0):
         self.root = root
         self.period_s = period_s
         self.peak_rss_mb = 0.0
@@ -113,6 +115,15 @@ class TreeSampler:
                 if "daemon" in cmd and cmd == _cmdline(ppid):
                     self.worker_pids.add(pid)
             self._stop.wait(self.period_s)
+
+
+def cpu_ticks() -> tuple[int, int]:
+    """(steal, total) jiffies over all CPUs since boot, from /proc/stat:
+    steal is time the hypervisor ran something else while a CPU of this
+    machine was ready to run."""
+    with open("/proc/stat") as f:
+        ticks = [int(x) for x in f.readline().split()[1:]]
+    return ticks[7], sum(ticks)
 
 
 def become_subreaper() -> None:

@@ -5,10 +5,12 @@
 Run from the root of a source checkout.  Each run builds its inputs from
 the seed (cached per seed under ``.perfbench/cache``), then starts a
 fresh Spark session on ``local[nproc]`` in a new process, which sets up,
-runs the workload's job once cold and then warm until ``--seconds``
-after its launch.  Every execution is checked against the seed's
-reference outside the timed region.  One client runs one job at a time
-(closed loop).
+runs the workload's job once cold, then a fixed number of untimed
+warm-ups and timed warm executions, sized so that a run takes about
+``--seconds`` on 4 cores (the counts are fixed, so a slow host makes
+the run longer rather than the sample smaller).  Every execution is
+checked against the seed's reference outside the timed region.  One
+client runs one job at a time (closed loop).
 
 ``--trace 0`` prints the end-to-end metrics.  ``--trace 1`` runs an
 untraced and a traced session with the same executions, plus (for
@@ -44,7 +46,10 @@ CHILD_TIMEOUT_S = 150
 
 def _spark_defaults(conf_dir: str, tmp: str, events: str | None) -> None:
     lines = [
-        f"spark.driver.extraJavaOptions -Djava.io.tmpdir={tmp} -XX:-UsePerfData",
+        # a heap of fixed size: how far G1 grows it otherwise varies from
+        # run to run by hundreds of MB
+        f"spark.driver.extraJavaOptions -Djava.io.tmpdir={tmp} -XX:-UsePerfData"
+        f" -Xms{DRIVER_MEM}",
         f"spark.sql.warehouse.dir {os.path.join(tmp, 'warehouse')}",
         "spark.ui.showConsoleProgress false",
     ]
@@ -62,13 +67,13 @@ def _spark_defaults(conf_dir: str, tmp: str, events: str | None) -> None:
 
 def run_session(work: str, wl, in_dir: str, cores: int, budget_s: float,
                 min_warm: int, traced: bool = False, executions: bool = True,
-                prefix_reps: int = 0) -> dict:
+                prefix_reps: int = 0, warmup: int = 0) -> dict:
     """One fresh process with its own empty TMPDIR and Spark local dirs,
     so no state carries over between sessions; all are deleted after.
 
-    ``executions``: run the job cold, then warm at least ``min_warm``
-    times and until ``budget_s`` after launch.  ``prefix_reps``: then time
-    each layer prefix that often."""
+    ``executions``: run the job cold, then ``warmup`` untimed times, then
+    warm at least ``min_warm`` times and until ``budget_s`` after launch.
+    ``prefix_reps``: then time each layer prefix that often."""
     sdir = tempfile.mkdtemp(prefix="session-", dir=work)
     tmp, local = os.path.join(sdir, "tmp"), os.path.join(sdir, "local")
     events = os.path.join(sdir, "events") if traced else None
@@ -87,7 +92,7 @@ def run_session(work: str, wl, in_dir: str, cores: int, budget_s: float,
     result_path = os.path.join(sdir, "result.json")
     spec = {"workload": wl.name, "in_dir": in_dir, "work_dir": sdir,
             "cores": cores, "trace": traced, "executions": executions,
-            "prefix_reps": prefix_reps, "min_warm": min_warm,
+            "prefix_reps": prefix_reps, "warmup": warmup, "min_warm": min_warm,
             "max_warm": max(min_warm, wl.max_warm),
             "result_path": result_path}
     spec_path = os.path.join(sdir, "spec.json")
@@ -127,7 +132,8 @@ def run_session(work: str, wl, in_dir: str, cores: int, budget_s: float,
 
 
 def _execs(s: dict) -> list[dict]:
-    return [] if s.get("crashed") or s["cold"] is None else [s["cold"], *s["warm"]]
+    return [] if s.get("crashed") or s["cold"] is None else [
+        s["cold"], *s["warmup"], *s["warm"]]
 
 
 def _tally(sessions: list[dict]) -> tuple[int, int]:
@@ -193,6 +199,7 @@ def main() -> int:
         return 2
     cores = len(os.sched_getaffinity(0))
     env_info = environment(args, cores)
+    steal0 = procs.cpu_ticks()
     state = os.path.join(ROOT, ".perfbench")
     in_dir = inputs.input_dir(os.path.join(state, "cache"), args.workload, args.seed)
     os.makedirs(os.path.join(state, "work"), exist_ok=True)
@@ -215,12 +222,15 @@ def main() -> int:
                 layers.per_layer(wl.name, cores, *sessions[:2],
                                  sessions[2] if len(sessions) > 2 else None)
         else:
-            sessions = [run_session(work, wl, in_dir, cores, args.seconds, wl.min_warm)]
+            sessions = [run_session(work, wl, in_dir, cores, args.seconds, wl.min_warm,
+                                    warmup=wl.warmup)]
             metrics = None if sessions[0].get("crashed") else end_to_end(sessions[0])
     finally:
         shutil.rmtree(work, ignore_errors=True)
     attempted, failed = _tally(sessions)
     env_info["loadavg_end"] = list(os.getloadavg())
+    steal1 = procs.cpu_ticks()
+    env_info["cpu_steal_frac"] = (steal1[0] - steal0[0]) / max(1, steal1[1] - steal0[1])
     if metrics is None:
         sys.stderr.write("every session crashed; no result\n")
         return 1
