@@ -339,6 +339,31 @@ def tile_summary(
     )
 
 
+def _estimate_rows(df: DataFrame) -> int | None:
+    """Cheap row estimate from Catalyst plan statistics (no Spark job),
+    for burn_cost_summaries' ``auto`` strategy: rowCount when the CBO has
+    one, else sizeInBytes / 64 — a deliberately LOW bytes-per-row guess,
+    so wide tables overestimate rows and pick the cogroup path (no
+    broadcast requirement) early.  ``None`` when the stats are
+    unavailable — the caller MUST treat None as "unbounded" and pick
+    cogroup (ADVICE r03: returning 0 here silently selected the
+    broadcast path, the exact direction the auto mode exists to
+    prevent)."""
+    try:
+        stats = df._jdf.queryExecution().optimizedPlan().stats()
+        if stats.rowCount().isDefined():
+            return int(str(stats.rowCount().get()))
+        return int(str(stats.sizeInBytes())) // 64
+    except Exception:  # noqa: BLE001 — stats are advisory
+        import warnings
+
+        warnings.warn(
+            "plan-stats row estimate unavailable; auto strategy falls "
+            "back to the scale-safe path", stacklevel=2,
+        )
+        return None
+
+
 def burn_cost_summaries(
     images_geo: DataFrame,
     segs: DataFrame,
@@ -383,8 +408,6 @@ def burn_cost_summaries(
         # count was a full extra Spark job before the returned plan even
         # ran).  None (stats unavailable) ⇒ cogroup, the path with no
         # broadcast requirement — safe at any scale.
-        from .spatial import _estimate_rows
-
         est = _estimate_rows(segs)
         strategy = (
             "broadcast"

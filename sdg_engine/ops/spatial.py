@@ -646,54 +646,17 @@ def snap_nearest_road(
     )
 
 
-def near_road_semi(
-    points_geo: DataFrame,
-    segs: DataFrame,
-    cutoff_m: float,
-    level: int | None = None,
-    id_col: str = "image_id",
-) -> DataFrame:
-    """Shuffle-free 'within cutoff of any road' filter (J1+J4 existence
-    form).
-
-    LEFT SEMI broadcast hash join on the point's cell against the
-    kring(1)-expanded segment cover, with the exact point→segment
-    distance as an extra join predicate.  No shuffle touches the fact
-    table — this is the flagship's scale path (a per-point argmin is
-    only needed when the nearest road itself is asked for; see
-    knn_nearest_road)."""
-    from ..sqlgen import point_seg_dist_expr
-
-    if level is None:
-        level = level_for_cutoff(cutoff_m)
-    probe = with_point_cell(points_geo, level, "lon", "lat", "cell_id")
-    build = segments_with_cells(segs, level, k_expand=0)
-    build = with_kring(
-        build, level, 1, "cell_id", "ring_cell_id",
-        idx_cols=("cell_id_ix", "cell_id_iy"),
-    )
-    build = (
-        build.select(F.col("ring_cell_id").alias("rcell"), "ax", "ay", "bx", "by")
-        .dropDuplicates(["rcell", "ax", "ay", "bx", "by"])
-    )
-    dist = point_seg_dist_expr("lon", "lat", "ax", "ay", "bx", "by")
-    cond = (probe.cell_id == build.rcell) & (
-        F.expr(dist) <= F.lit(float(cutoff_m))
-    )
-    return probe.join(F.broadcast(build), cond, "left_semi").drop("cell_id")
-
-
 def pip_country_udf(rings: dict[str, np.ndarray]):
     """Arrow-batched exact ray-cast PIP: (lon, lat) -> country or NULL.
 
     Vectorized numpy even-odd crossing (geom.points_in_polygon) over
     all rings; identical IEEE arithmetic to the oracle's SQL crossing
-    sum.  Used for the boundary-cell fallback in assign_countries — a
-    literal CASE expression computes the same thing JVM-side but its
-    generated code blew whole-stage codegen past the JIT method limit
-    when fused with the EXISTS probe (measured 5-20× slowdowns of the
-    WHOLE fused stage); the Arrow boundary keeps JVM stages small and
-    the Python side is pure vectorized numpy (BASELINE.json:15)."""
+    sum.  This is assign_countries' stage 2: it decides the
+    boundary-cell rows in the same pass as the cell join.  Keeping the
+    ray-cast out of the JVM keeps the fused probe stage small (a
+    literal multi-ring CASE there blew whole-stage codegen past the JIT
+    method limit: 5-20× slowdowns of the WHOLE stage), and the Python
+    side is pure vectorized numpy (BASELINE.json:15)."""
     from ..geom import points_in_polygon
 
     items = list(rings.items())
@@ -1035,8 +998,7 @@ def _country_dims(spark, rings: dict[str, np.ndarray], level: int):
     The interior cover is built COMPACTED (C2 ★, cells.compact) and
     uncompacted back to ``level`` for the broadcast-hash join (see
     assign_countries for the trade-off).  Returns
-    (interior_df[icell, country_code], boundary_df[bcell],
-    edges_df[country_code, x0, y0, x1, y1])."""
+    (interior_df[icell, country_code], boundary_df[bcell])."""
     key = (spark.sparkContext.applicationId, _rings_key(rings), level)
     if key in _DIMS_CACHE:
         return _DIMS_CACHE[key]
@@ -1047,11 +1009,6 @@ def _country_dims(spark, rings: dict[str, np.ndarray], level: int):
         if cc_cells.size:
             comp = C.compact(cc_cells)  # canonical compacted cover
             int_rows += [(int(c), cc) for c in C.uncompact(comp, level)]
-    edge_rows = []
-    for cc, ring in rings.items():
-        for i in range(len(ring) - 1):
-            edge_rows.append((cc, float(ring[i, 0]), float(ring[i, 1]),
-                              float(ring[i + 1, 0]), float(ring[i + 1, 1])))
     # Materialize the dims as (tiny) parquet and read back: a
     # createDataFrame ExistingRDD re-runs a Python deserialization pass
     # inside EVERY broadcast build (~0.8 s serial per query execution —
@@ -1064,8 +1021,12 @@ def _country_dims(spark, rings: dict[str, np.ndarray], level: int):
 
     import pandas as _pd
 
-    tag = "dims_" + _hl.blake2b(repr((_rings_key(rings), level)).encode(),
-                                digest_size=8).hexdigest()
+    # the subdirectory layout is part of the key, so a directory holding
+    # another layout is never picked up as this one
+    tag = "dims_" + _hl.blake2b(
+        repr((_rings_key(rings), level, ("interior", "boundary"))).encode(),
+        digest_size=8,
+    ).hexdigest()
 
     def _write(tmp: str) -> None:
         spark.createDataFrame(
@@ -1077,16 +1038,11 @@ def _country_dims(spark, rings: dict[str, np.ndarray], level: int):
             _pd.DataFrame({"bcell": _pd.array([int(b) for b in boundary],
                                               dtype="int64")})
         ).coalesce(1).write.mode("overwrite").parquet(_os.path.join(tmp, "boundary"))
-        spark.createDataFrame(
-            _pd.DataFrame(edge_rows,
-                          columns=["country_code", "x0", "y0", "x1", "y1"])
-        ).coalesce(1).write.mode("overwrite").parquet(_os.path.join(tmp, "edges"))
 
     base = _publish_dim_dir(tag, _write)
     interior_df = spark.read.parquet(_os.path.join(base, "interior"))
     boundary_df = spark.read.parquet(_os.path.join(base, "boundary"))
-    edges_df = spark.read.parquet(_os.path.join(base, "edges"))
-    result = (interior_df, boundary_df, edges_df)
+    result = (interior_df, boundary_df)
     _DIMS_CACHE[key] = result
     return result
 
@@ -1140,11 +1096,12 @@ def _ring_cell_test(cids: np.ndarray, level: int, ring: np.ndarray):
     # r06: loop over the FEW edges with (ncell,) vectors instead of one
     # (ncell × nedge) broadcast — the p coefficients (±dx, ±dy) depend
     # only on the edge, so they are scalars per iteration and the big
-    # where()-masked temporaries (~20 × ncell·nedge doubles at the
-    # strip-refinement level: 800k cells × 10 edges) disappear.  Same
-    # elementwise IEEE arithmetic ⇒ bit-identical classification
-    # (pinned by tests/test_spatial.py's brute-force twins).  Measured
-    # 4.5 s → 0.5 s for the level-9→12 strip prestage on the r06 host.
+    # where()-masked temporaries (~20 × ncell·nedge doubles) disappear.
+    # Same elementwise IEEE arithmetic ⇒ bit-identical classification
+    # (pinned against a scalar per-cell, per-edge twin by
+    # tests/test_cells.py::test_ring_cell_test_matches_scalar_twin).
+    # Measured 4.5 s → 0.5 s for an 800k-cell × 10-edge prestage on the
+    # r06 host.
     n = len(cids)
     crosses = np.zeros(n, dtype=bool)
     for e in range(len(ring) - 1):
@@ -1170,264 +1127,53 @@ def _ring_cell_test(cids: np.ndarray, level: int, ring: np.ndarray):
     return crosses, ctr_in
 
 
-def _strip_rows(rings: dict[str, np.ndarray], level: int, hi: int):
-    """Cached numpy prestage for the strip dim: children (at ``hi``) of
-    the level-``level`` boundary cells, classified
-    interior-to-one-country (cc) or still-boundary (None)."""
-    key = (_rings_key(rings), level, hi, "striprows")
-    if key in _CLASSIFY_CACHE:
-        return _CLASSIFY_CACHE[key]
-    _interior, boundary = _classify_country_cells(rings, level)
-    bnd = np.asarray(sorted(boundary), dtype=np.int64)
-    kids = bnd
-    for _ in range(hi - level):
-        kids = C.children(kids).reshape(-1)
-    interior: list[tuple[int, str]] = []
-    bset: set[int] = set()
-    for cc, ring in rings.items():
-        crosses, ctr_in = _ring_cell_test(kids, hi, ring)
-        bset.update(int(c) for c in kids[crosses])
-        for c in kids[~crosses][ctr_in]:
-            interior.append((int(c), cc))
-    rows = [(c, cc) for c, cc in interior if c not in bset]
-    rows += [(b, None) for b in sorted(bset)]
-    _CLASSIFY_CACHE[key] = rows
-    return rows
-
-
-def boundary_fraction(rings: dict[str, np.ndarray], level: int, hi: int) -> float:
-    """World-area fraction still needing the exact ray-cast after the
-    strip refinement at ``hi`` — the driver-side bound that picks
-    assign_countries' stage-2 strategy (no Spark job: the classify/strip
-    numpy prestages are already cached)."""
-    if hi > level:
-        n_undecided = sum(1 for _, cc in _strip_rows(rings, level, hi) if cc is None)
-    else:
-        _interior, boundary = _classify_country_cells(rings, level)
-        n_undecided = len(boundary)
-    return n_undecided / float((1 << hi) ** 2)
-
-
-def _estimate_rows(df: DataFrame) -> int | None:
-    """Cheap driver-side row estimate from Catalyst plan statistics
-    (rowCount when the CBO has one, else sizeInBytes / 64 — a
-    deliberately LOW bytes-per-row guess so wide tables overestimate
-    rows and flip to the safe strategy early).  ``None`` when the stats
-    are unavailable — callers MUST treat None as "unbounded" and pick
-    their scale-safe strategy (ADVICE r03: returning 0 here silently
-    selected the broadcast-back path, the exact direction the auto mode
-    exists to prevent)."""
-    try:
-        stats = df._jdf.queryExecution().optimizedPlan().stats()
-        if stats.rowCount().isDefined():
-            return int(str(stats.rowCount().get()))
-        return int(str(stats.sizeInBytes())) // 64
-    except Exception:  # noqa: BLE001 — stats are advisory
-        import warnings
-
-        warnings.warn(
-            "plan-stats row estimate unavailable; auto strategy falls "
-            "back to the scale-safe path", stacklevel=2,
-        )
-        return None
-
-
-def _strip_dim(spark, rings: dict[str, np.ndarray], level: int, hi: int):
-    """Refinement dim over the boundary STRIP (see _strip_rows).
-
-    Returned DataFrame: (scell bigint, s_cc string) — ``s_cc`` NULL means
-    still boundary at ``hi`` (needs exact ray-cast).  Cells of the strip
-    that are outside every ring are OMITTED (Jordan: center outside + no
-    crossing edge ⇒ whole cell outside), so a probe miss after the
-    level-``level`` boundary match means "in no country".
-    """
-    key = (spark.sparkContext.applicationId, _rings_key(rings), level, hi, "strip")
-    if key in _DIMS_CACHE:
-        return _DIMS_CACHE[key]
-    rows = _strip_rows(rings, level, hi)
-
-    import hashlib as _hl
-    import os as _os
-
-    import pandas as _pd
-
-    tag = "strip_" + _hl.blake2b(
-        repr((_rings_key(rings), level, hi, "strip")).encode(), digest_size=8
-    ).hexdigest()
-
-    def _write(tmp: str) -> None:
-        pdf = _pd.DataFrame(rows, columns=["scell", "s_cc"])
-        pdf["scell"] = pdf["scell"].astype("int64")
-        spark.createDataFrame(pdf).coalesce(1).write.mode("overwrite").parquet(
-            _os.path.join(tmp, "strip")
-        )
-
-    base = _publish_dim_dir(tag, _write)
-    df = spark.read.parquet(_os.path.join(base, "strip"))
-    _DIMS_CACHE[key] = df
-    return df
-
-
 def assign_countries(
     images_geo: DataFrame,
     rings: dict[str, np.ndarray],
     level: int = 7,
     id_col: str = "image_id",
-    use_udf: bool | None = None,
-    broadcast_back_max_rows: int = 4_000_000,
-    case_min_rows: int = 2_000_000,
 ) -> DataFrame:
-    """J2 ★: two-stage country assignment (SURVEY.md §2.4).
+    """J2 ★: two-stage country assignment (SURVEY.md §2.4), one pass.
 
     Stage 1 — cell-candidate generation (C2): a driver-side numpy
     prestage classifies level-``level`` cells as interior to one
     country (built compacted via cells.compact, uncompacted for the
     broadcast-hash join — see _country_dims) or boundary.  One
-    broadcast join tags each point with its interior country or NULL.
-    Stage 2 — exact ray-casting PIP fills the NULLs; COALESCE keeps it
-    a single-pass plan with no union (a union-of-branches variant
-    re-planned and recomputed the upstream DAG per branch).
+    broadcast join against interior ∪ boundary cells tags each point
+    with its interior country or NULL, and drops points in neither.
+    Stage 2 — the Arrow-batched numpy ray-cast (pip_country_udf) fills
+    the NULLs in the same projection.  lon/lat are null-masked for rows
+    already decided, so the numpy kernel only works on boundary-cell
+    rows.  COALESCE keeps it a single-pass plan: no union, and no
+    isolated undecided subset broadcast back (both re-plan and
+    recompute the upstream DAG; the subset variant measured slower).
 
-    Stage 2 default is the JVM ``pip_country_case_expr`` — the SAME
-    expression text the DuckDB oracle runs (parity by construction) —
-    evaluated in ITS OWN tiny stage: boundary-cell rows (~1%) are
-    projected to (id, lon, lat), repartitioned (the exchange is a
-    codegen-stage break), ray-cast there, and the (id, country) result
-    is BROADCAST back onto the main stream.  Isolation is load-bearing:
-    inlining the multi-ring CASE into the fused probe stage pushed the
-    generated method past the JIT's huge-method limit and deoptimized
-    the WHOLE stage to interpreted bytecode (measured 12× on all rows,
-    not just boundary ones).  The upstream is computed twice (once for
-    the main stream, once column-pruned to id+lon+lat for the boundary
-    branch) — the second pass prunes to 3 columns so payload bytes are
-    never re-read.  ``use_udf=True`` selects the Arrow-batched numpy
-    ray-cast instead (single-pass; used when ring/edge count would make
-    the literal CASE unreasonable, or when the boundary fraction is too
-    large to broadcast back).  Requires ``id_col`` values to be unique.
+    The UDF is marked nondeterministic so Catalyst keeps the
+    ``country_code IS NOT NULL`` filter above the projection.  A
+    deterministic UDF is inlined into the pushed-down filter and
+    extracted twice, which sends every row across the Arrow boundary
+    twice.
 
-    ``use_udf=None`` (default) AUTO-SELECTS stage 2 (VERDICT r02 #1:
-    the JVM path broadcasts a fact-derived (id, country) set back onto
-    the stream — perfect while the boundary row count is small, but at
-    10^12 rows even a 0.15% boundary fraction is 1.5e9 rows, which
-    cannot broadcast): expected boundary rows are bounded DRIVER-SIDE
-    with no extra Spark job, as the plan-stats row estimate × the
-    cached still-boundary area fraction (boundary_fraction); above
-    ``broadcast_back_max_rows`` the single-pass Arrow ray-cast runs
-    instead — mirroring burn_cost_summaries' auto strategy.  The bound
-    assumes ~uniform point density; a caller with known extreme skew
-    INTO the boundary strip should pass use_udf=True explicitly.
-
-    Output: input columns + country_code.
+    ``id_col`` names the caller's row key; the single-pass plan never
+    joins on it.  Output: input columns + country_code.
     """
-    spark = images_geo.sparkSession
-    if use_udf is None:
-        hi_auto = level + min(3, C.MAX_LEVEL - level)
-        n_rows = _estimate_rows(images_geo)
-        if n_rows is None:
-            use_udf = True  # unbounded ⇒ the scale-safe Arrow ray-cast
-        else:
-            est = n_rows * boundary_fraction(rings, level, hi_auto)
-            # r06 LOWER bound: the literal-CASE stage pays a fixed
-            # multi-second driver-side janino compile of the multi-ring
-            # expression (re-paid whenever the 100-entry codegen cache
-            # has evicted it — i.e. on every fresh plan in a busy
-            # session).  Below ~2M input rows that fixed cost cannot
-            # amortize and the Arrow ray-cast (identical decisions,
-            # certified by the same oracles) is strictly cheaper;
-            # above it the compiled CASE wins per-row.  The row guess
-            # for THIS bound comes from a payload-free projection
-            # (id + lon + lat): _estimate_rows deliberately inflates
-            # byte-heavy tables for the UPPER bound's safety, but an
-            # image table's blob column must not make a 10k-row input
-            # look like millions here.  Measured: image_zonal_stats
-            # first-plan 7.3 s → 2.4 s, no steady-state regression.
-            if est > broadcast_back_max_rows:
-                use_udf = True  # broadcast-back can't hold the boundary set
-            else:
-                # lazy: each _estimate_rows call runs a full Catalyst
-                # optimization pass driver-side (~0.3-0.5 s on the r06
-                # host for the join-blown scaled plan) — only pay for
-                # the lower-bound probe when the upper bound didn't
-                # already decide.
-                n_rows_l = _estimate_rows(
-                    images_geo.select(id_col, "lon", "lat")
-                )
-                use_udf = n_rows_l is not None and n_rows_l < case_min_rows
-    interior_df, boundary_df, edges_df = _country_dims(spark, rings, level)
-
-    in_cols = list(images_geo.columns)
+    interior_df, boundary_df = _country_dims(images_geo.sparkSession, rings, level)
     cells_df = interior_df.unionByName(
         boundary_df.select(F.col("bcell").alias("icell"),
                            F.lit(None).cast("string").alias("country_code"))
     ).withColumnRenamed("country_code", "_int_cc")
-    if use_udf:
-        pts = with_point_cell(images_geo, level, "lon", "lat", "cell_lvl",
-                              keep_idx=True)
-        joined = pts.join(
-            F.broadcast(cells_df), pts.cell_lvl == cells_df.icell, "inner"
-        )
-        pip = pip_country_udf(rings)
-        masked_lon = F.when(F.col("_int_cc").isNull(), F.col("lon"))
-        masked_lat = F.when(F.col("_int_cc").isNull(), F.col("lat"))
-        out = joined.withColumn(
-            "country_code", F.coalesce(F.col("_int_cc"), pip(masked_lon, masked_lat))
-        )
-        return (
-            out.filter(F.col("country_code").isNotNull())
-            .select(*in_cols, "country_code")
-        )
-    from ..sqlgen import pack_cell_expr, pip_country_case_expr
-
-    # Grid indices are computed ONCE at the refinement level ``hi``; the
-    # level-``level`` key is derived by shifting them (one FLOOR chain in
-    # the generated code instead of two).
-    refine = min(3, C.MAX_LEVEL - level)
-    hi = level + refine
-    pts = with_point_cell(images_geo, hi, "lon", "lat", "cell_hi", keep_idx=True)
-    pts = pts.withColumn(
-        "cell_lvl",
-        F.coalesce(
-            F.expr(pack_cell_expr(f"(cell_hi_ix >> {refine})",
-                                  f"(cell_hi_iy >> {refine})", level)),
-            F.lit(-1),
-        ),
+    pts = with_point_cell(images_geo, level, "lon", "lat", "cell_lvl",
+                          keep_idx=True)
+    joined = pts.join(
+        F.broadcast(cells_df), pts.cell_lvl == cells_df.icell, "inner"
     )
-    joined = pts.join(F.broadcast(cells_df), pts.cell_lvl == cells_df.icell, "inner")
-    if refine > 0:
-        # refinement join: decides ~(1 - 2^-refine) of the boundary-cell
-        # rows JVM-side, shrinking the ray-cast branch (and its serial
-        # broadcast-back collect) by the same factor
-        strip = _strip_dim(spark, rings, level, hi).withColumn("_s_hit", F.lit(1))
-        joined = joined.join(
-            F.broadcast(strip), joined.cell_hi == strip.scell, "left"
-        )
-        undecided = (
-            F.col("_int_cc").isNull()
-            & F.col("_s_hit").isNotNull()
-            & F.col("s_cc").isNull()
-        )
-        decided = F.coalesce(F.col("_int_cc"), F.col("s_cc"))
-    else:
-        undecided = F.col("_int_cc").isNull()
-        decided = F.col("_int_cc")
-
-    pip_case = F.expr(pip_country_case_expr(rings, "lon", "lat"))
-    bnd = (
-        joined.filter(undecided)
-        .select(id_col, "lon", "lat")
-        # exchange = codegen-stage break: the giant CASE must not fuse
-        # into (and deoptimize) the probe stage — see docstring.  NOTE:
-        # no isNotNull filter on _bnd_cc here — a filter on the CASE
-        # alias is rewritten and pushed THROUGH the exchange into the
-        # fact stream (measured 20×); unmatched rows are dropped by the
-        # final country_code filter instead.
-        .repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("_bnd_cc", pip_case)
-        .select(id_col, "_bnd_cc")
+    pip = pip_country_udf(rings).asNondeterministic()
+    masked_lon = F.when(F.col("_int_cc").isNull(), F.col("lon"))
+    masked_lat = F.when(F.col("_int_cc").isNull(), F.col("lat"))
+    out = joined.withColumn(
+        "country_code", F.coalesce(F.col("_int_cc"), pip(masked_lon, masked_lat))
     )
-    out = joined.join(F.broadcast(bnd), id_col, "left")
-    out = out.withColumn("country_code", F.coalesce(decided, F.col("_bnd_cc")))
     return (
         out.filter(F.col("country_code").isNotNull())
-        .select(*in_cols, "country_code")
+        .select(*images_geo.columns, "country_code")
     )

@@ -90,11 +90,10 @@ def flagship_rai(spark, sf_dir):
     # scale architecture: country assignment and the near-road flag are
     # both broadcast/map-side, feeding ONE aggregation pass — the only
     # shuffle over the fact table is the input redistribution.  The flag
-    # uses the existence form (exists() over the per-cell segment array)
-    # — RAI needs "within cutoff of ANY road", not the argmin.
-    # flag BEFORE country assignment: the EXISTS-join projection cannot
-    # be pushed through assign_countries' union (Catalyst
-    # PushProjectionThroughUnion chokes on the correlated attributes)
+    # uses the existence form (a correlated EXISTS → ExistenceJoin) —
+    # RAI needs "within cutoff of ANY road", not the argmin.
+    # flag BEFORE country assignment: the ExistenceJoin then probes the
+    # point stream below the ray-cast's Arrow stage
     flagged = SP.with_near_road_flag(pts, segs, KNN_CUTOFF_M)
     cc = SP.assign_countries(flagged, harness_rings(), level=9, id_col="point_id")
     return (

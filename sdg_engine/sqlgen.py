@@ -12,13 +12,12 @@ Fragments are emitted as ``(column_name, sql_expr)`` step lists: the
 Spark side applies them with ``DataFrame.withColumn(name,
 F.expr(sql))`` (whole-stage codegen — the spatial hot path never
 leaves the JVM), while the oracle side chains them into nested
-``SELECT``s.  This mirrors SURVEY.md C1/J2/J4's operators:
+``SELECT``s.  This mirrors SURVEY.md C1/C3/J4's operators:
 
 * :func:`point_cell_steps` — C1 cell encoding (Z-order quadtree pack)
 * :func:`kring` is expressed with ``sequence``/``range`` explosions in
   the query builders (C3)
 * :func:`point_seg_dist_steps` — J4's exact point→segment distance
-* :func:`pip_crossing_expr` — J2's ray-cast crossing test
 """
 
 from __future__ import annotations
@@ -217,52 +216,6 @@ def geohash_steps(px: str, py: str, precision: int = 6, out: str = "gh") -> list
     )
     steps.append((out, f"concat({chars})"))
     return steps
-
-
-def pip_crossing_expr(px: str, py: str, x0: str, y0: str, x1: str, y1: str) -> str:
-    """J2: 1 if the +x ray from (px,py) crosses edge (x0,y0)-(x1,y1).
-
-    Half-open vertex rule (y0 <= py) <> (y1 <= py) avoids double
-    counting; the divisor (y1-y0) is provably nonzero when the
-    straddle condition holds.
-    """
-    return (
-        f"(CASE WHEN ((({y0}) <= ({py})) <> (({y1}) <= ({py}))) "
-        f"AND ((({x0}) + ((({py}) - ({y0})) * (({x1}) - ({x0})) / (({y1}) - ({y0})))) > ({px})) "
-        f"THEN 1 ELSE 0 END)"
-    )
-
-
-def pip_country_case_expr(rings: dict, px: str, py: str) -> str:
-    """Exact ray-cast PIP over literal country rings as ONE CASE expr.
-
-    For each country the even-odd crossing count is a sum of
-    :func:`pip_crossing_expr` terms with the ring coordinates embedded
-    as double literals (repr round-trip ⇒ bit-identical in any engine).
-    Evaluated lazily (CASE) so callers pay it only on boundary-cell
-    rows — this keeps J2 a single streaming projection: no edge join,
-    no union, no re-computation of the upstream plan (SURVEY.md §4).
-    """
-    whens = []
-    for cc, ring in rings.items():
-        terms = []
-        for i in range(len(ring) - 1):
-            x0, y0 = float(ring[i, 0]), float(ring[i, 1])
-            x1, y1 = float(ring[i + 1, 0]), float(ring[i + 1, 1])
-            terms.append(
-                pip_crossing_expr(px, py, repr(x0), repr(y0), repr(x1), repr(y1))
-            )
-        # bbox precheck short-circuits the 18-term crossing sum for the
-        # ~3/4 of candidates outside this country's bounding box (the
-        # guard is a superset test — ring ⊆ bbox — so never wrong)
-        bbox = (
-            f"({px} >= {ring[:, 0].min()!r} AND {px} <= {ring[:, 0].max()!r} "
-            f"AND {py} >= {ring[:, 1].min()!r} AND {py} <= {ring[:, 1].max()!r})"
-        )
-        whens.append(
-            f"WHEN ({bbox} AND ((({' + '.join(terms)}) % 2) = 1)) THEN '{cc}'"
-        )
-    return "(CASE " + " ".join(whens) + " ELSE NULL END)"
 
 
 def chain_select(base_sql: str, steps: list[tuple[str, str]], keep: list[str]) -> str:

@@ -201,3 +201,120 @@ def test_pyramid_rollup_conserves_counts(spark):
     assert len(set(per_level.values())) == 1  # same total at every level
     bad = df.filter(F.expr("(cell >> 54) != level")).count()
     assert bad == 0
+
+
+def _scalar_edge_hits_rect(ax, ay, bx, by, x0, y0, x1, y1):
+    """Textbook Liang-Barsky for one segment vs one closed rect, with
+    early rejection."""
+    dx, dy = bx - ax, by - ay
+    t0, t1 = 0.0, 1.0
+    for p, q in ((-dx, ax - x0), (dx, x1 - ax), (-dy, ay - y0), (dy, y1 - ay)):
+        if p == 0.0:
+            if q < 0.0:
+                return False  # parallel to this side and outside it
+            continue
+        r = q / p
+        if p < 0.0:
+            if r > t1:
+                return False
+            t0 = max(t0, r)
+        else:
+            if r < t0:
+                return False
+            t1 = min(t1, r)
+    return t0 <= t1
+
+
+def _scalar_point_in_ring(px, py, ring):
+    """Even-odd +x ray-cast with the half-open vertex rule, one edge at
+    a time."""
+    inside = False
+    for e in range(len(ring) - 1):
+        x0, y0 = float(ring[e, 0]), float(ring[e, 1])
+        x1, y1 = float(ring[e + 1, 0]), float(ring[e + 1, 1])
+        if (y0 <= py) != (y1 <= py):
+            if x0 + (py - y0) * (x1 - x0) / (y1 - y0) > px:
+                inside = not inside
+    return inside
+
+
+def _scalar_ring_cell_test(cids, level, ring):
+    size = WORLD_SIZE / (1 << level)
+    _lvl, ix, iy = C.unpack(cids)
+    crosses, ctr_in = [], []
+    for i in range(len(cids)):
+        x0 = WORLD_MIN + float(ix[i]) * size
+        y0 = WORLD_MIN + float(iy[i]) * size
+        x1, y1 = x0 + size, y0 + size
+        hit = any(
+            _scalar_edge_hits_rect(float(ring[e, 0]), float(ring[e, 1]),
+                                   float(ring[e + 1, 0]), float(ring[e + 1, 1]),
+                                   x0, y0, x1, y1)
+            for e in range(len(ring) - 1)
+        )
+        crosses.append(hit)
+        if not hit:
+            ctr_in.append(_scalar_point_in_ring(x0 + size / 2, y0 + size / 2, ring))
+    return np.array(crosses, dtype=bool), np.array(ctr_in, dtype=bool)
+
+
+def _cells_around(ring, level, pad=2):
+    """Every level-``level`` cell of the ring's bbox grown by ``pad``
+    cells (clipped to the world)."""
+    size = WORLD_SIZE / (1 << level)
+    n = 1 << level
+    lo = np.floor((ring.min(axis=0) - WORLD_MIN) / size).astype(int) - pad
+    hi = np.floor((ring.max(axis=0) - WORLD_MIN) / size).astype(int) + pad
+    lo, hi = np.clip(lo, 0, n - 1), np.clip(hi, 0, n - 1)
+    ix, iy = np.meshgrid(np.arange(lo[0], hi[0] + 1), np.arange(lo[1], hi[1] + 1))
+    return C.pack(level, ix.ravel(), iy.ravel())
+
+
+def test_ring_cell_test_matches_scalar_twin():
+    """ops.spatial._ring_cell_test (edge-looped, cell-vectorized) agrees
+    EXACTLY with a scalar per-cell, per-edge Liang-Barsky and ray-cast
+    on seeded random rings and cells, and on degenerate rings: edges on
+    cell sides, vertices on cell corners, a diagonal through corners,
+    axis-parallel edges off the grid and a zero-length edge."""
+    from sdg_engine.ops.spatial import _ring_cell_test
+
+    rng = np.random.default_rng(20260417)
+    g = WORLD_SIZE / (1 << 6)  # level-6 grid step
+    cases = [
+        # rectangle on grid lines: every edge lies on cell sides
+        (6, np.array([[10, 10], [14, 10], [14, 13], [10, 13], [10, 10]]) * g),
+        # triangle with its vertices on cell corners; the hypotenuse
+        # runs exactly through the corners of the diagonal cells
+        (6, np.array([[20, 20], [26, 20], [20, 26], [20, 20]]) * g),
+        # axis-parallel edges off the grid, and a repeated vertex
+        (6, np.array([[3.01, 3.02], [4.33, 3.02], [4.33, 3.02],
+                      [4.33, 4.71], [3.01, 4.71], [3.01, 3.02]])),
+        # the same grid rectangle seen from a finer level
+        (8, np.array([[10, 10], [14, 10], [14, 13], [10, 13], [10, 10]]) * g),
+    ]
+    for k in range(12):
+        level = int(rng.integers(4, 10))
+        n = int(rng.integers(3, 11))
+        ctr = rng.uniform(2.0, 8.0, 2)
+        ang = np.sort(rng.uniform(0.0, 2 * np.pi, n))
+        if k % 3 == 2:
+            rng.shuffle(ang)  # self-intersecting: even-odd still applies
+        rad = rng.uniform(0.2, 1.5, n)
+        pts = ctr + np.c_[rad * np.cos(ang), rad * np.sin(ang)]
+        if k % 2:
+            step = WORLD_SIZE / (1 << level)
+            pts = np.round(pts / step) * step  # vertices on cell corners
+        cases.append((level, np.vstack([pts, pts[:1]])))
+
+    n_cross = n_in = n_out = 0
+    for level, ring in cases:
+        ring = np.asarray(ring, dtype=np.float64)
+        cids = _cells_around(ring, level)
+        got_x, got_in = _ring_cell_test(cids, level, ring)
+        want_x, want_in = _scalar_ring_cell_test(cids, level, ring)
+        assert got_x.tolist() == want_x.tolist(), (level, ring.tolist())
+        assert got_in.tolist() == want_in.tolist(), (level, ring.tolist())
+        n_cross += int(want_x.sum())
+        n_in += int(want_in.sum())
+        n_out += int((~want_in).sum())
+    assert n_cross and n_in and n_out  # every outcome is exercised
