@@ -132,6 +132,24 @@ def test_spatial_join_salted_is_row_identical(spark):
     assert salted.exceptAll(plain).count() == 0
 
 
+def test_assign_countries_udf_variant(spark):
+    """The boundary PIP runs as one Arrow-batched ray-cast stage (no
+    broadcast-back, no sort-merge join): one ``_pip`` call whose inputs
+    are null-masked for rows an interior cell already decided, with the
+    country_code filter kept above it."""
+    cc = SP.assign_countries(points_df(spark, SF), harness_rings(), 9,
+                             id_col="point_id")
+    plan = _plan(cc)
+    assert "ArrowEvalPython" in plan  # the Arrow-batched boundary PIP stage
+    assert "SortMergeJoin" not in plan
+    assert plan.count("_pip(") == 1
+    assert re.search(r"_pip\(CASE WHEN isnull\(_int_cc#\d+\) THEN lon#", plan)
+    lines = plan.splitlines()
+    arrow = next(i for i, ln in enumerate(lines) if "ArrowEvalPython" in ln)
+    assert any("Filter isnotnull(coalesce(_int_cc" in ln for ln in lines[:arrow])
+    assert not any("Filter" in ln and "_int_cc" in ln for ln in lines[arrow:])
+
+
 def test_exactness_baselines_are_broadcast_bounded(spark):
     """The two deliberate cartesian exactness baselines must plan as a
     streaming pass probing a tiny BROADCAST side (BroadcastNestedLoopJoin)
