@@ -24,10 +24,10 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    from sdg_engine.session import ENGINE_CONFS
+    from sdg_engine.session import ENGINE_CONFS, LOCAL_ENGINE_CONFS
 
     b = SparkSession.builder.appName("bench_subset").master(f"local[{cpus}]")
-    for k, v in {**ENGINE_CONFS, **overrides}.items():
+    for k, v in {**ENGINE_CONFS, **LOCAL_ENGINE_CONFS, **overrides}.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

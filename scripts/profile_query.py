@@ -27,10 +27,10 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    from sdg_engine.session import ENGINE_CONFS
+    from sdg_engine.session import ENGINE_CONFS, LOCAL_ENGINE_CONFS
 
     b = SparkSession.builder.appName(f"profile_{name}").master(f"local[{cpus}]")
-    for k, v in ENGINE_CONFS.items():
+    for k, v in {**ENGINE_CONFS, **LOCAL_ENGINE_CONFS}.items():
         b = b.config(k, v)
     b = (
         b.config("spark.eventLog.enabled", "true")

@@ -103,10 +103,6 @@ def unpack(cell_id: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return level, ix, iy
 
 
-def level_of(cell_id: np.ndarray) -> np.ndarray:
-    return np.asarray(cell_id, dtype=np.int64) >> np.int64(_LEVEL_SHIFT)
-
-
 def parent(cell_id: np.ndarray, steps: int = 1) -> np.ndarray:
     """Ancestor ``steps`` levels up (quadtree prefix truncation)."""
     cell_id = np.asarray(cell_id, dtype=np.int64)

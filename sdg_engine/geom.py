@@ -96,22 +96,6 @@ def points_in_polygon(
     return (crossings.sum(axis=1) % 2).astype(bool)
 
 
-def polygon_area(ring: np.ndarray) -> float:
-    """Signed shoelace area (CCW positive), degree² units."""
-    x = ring[:, 0]
-    y = ring[:, 1]
-    return 0.5 * float(np.sum(x[:-1] * y[1:] - x[1:] * y[:-1]))
-
-
-def bbox_of(coords: np.ndarray) -> tuple[float, float, float, float]:
-    return (
-        float(coords[:, 0].min()),
-        float(coords[:, 1].min()),
-        float(coords[:, 0].max()),
-        float(coords[:, 1].max()),
-    )
-
-
 def polyline_length_m(coords: np.ndarray) -> float:
     """Total polyline length in meters (X6 geometry length)."""
     d = np.diff(coords, axis=0)

@@ -299,7 +299,7 @@ def write_road_mvt(
 
     n = 1 << level
     size = WORLD_SIZE / n
-    covered = segments_with_cells(segs, level, k_expand=0).select(
+    covered = segments_with_cells(segs, level).select(
         "cell_id", F.col("cell_id_ix").alias("tx"), F.col("cell_id_iy").alias("ty"),
         "road_id", "seg_id", "ax", "ay", "bx", "by",
     )

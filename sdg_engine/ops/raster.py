@@ -12,11 +12,19 @@ footprint; per-pixel "population" is the decoded luminance.  Per tile:
    ``CostDistance`` (SURVEY.md A2);
 3. **masked sum**: population within ``cutoff_m`` of a road vs total.
 
-Execution shape: ``images.groupBy(cell).cogroup(roads.groupBy(cell))
-.applyInPandas`` — the exact Spark-native analogue of the reference's
-keyed-RDD cogroup + per-tile visitor (SURVEY.md §3.1), one shuffle per
-side, vectorized numpy inside.  Roads are pre-expanded by kring(1) so
-cross-border segments are present (C3 halo; SURVEY.md §7 hard part 2).
+Execution shape (``burn_cost_summaries``): the roads are pre-expanded
+by kring(1) (``spatial.ring_cover``) so cross-border segments are
+present (C3 halo; SURVEY.md §7 hard part 2), then either
+
+* ``broadcast`` — that cover is collected into a cell→segments dict
+  and broadcast, and the images run through a map-only
+  ``mapInPandas``; or
+* ``cogroup`` — ``images.groupBy(cell).cogroup(roads.groupBy(cell))
+  .applyInPandas``, the Spark-native analogue of the reference's
+  keyed-RDD cogroup + per-tile visitor (SURVEY.md §3.1), one shuffle
+  per side.
+
+Both run the same vectorized numpy per tile.
 """
 
 from __future__ import annotations
@@ -24,12 +32,11 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .. import METERS_PER_DEG
 from ..codecs import decode_image
 from ..geom import clip_segments_to_rect
-from .spatial import segments_with_cells, with_point_cell
+from .spatial import ring_cover, with_point_cell
 
 _SUMMARY_SCHEMA = (
     "image_id string, cell_id bigint, pop_total double, pop_near double, "
@@ -386,11 +393,13 @@ def burn_cost_summaries(
       executor broadcast (country-scale jobs).
     * ``cogroup`` — ``images.groupBy(cell) COGROUP roads.groupBy(cell)``,
       the reference's per-tile join shape: one shuffle per side, no
-      broadcast requirement — the planet-scale path, with skew.py
-      salting for hot cells.
+      broadcast requirement — the only path once the road cover cannot
+      be collected.  Hot cells are NOT salted: one cell's images and
+      roads load into one group.
 
-    ``auto`` picks by counting road segments (cheap metadata count)
-    against ``broadcast_max_segs``.
+    ``auto`` compares a Catalyst plan-statistics row estimate of
+    ``segs`` (``_estimate_rows``; no Spark job) against
+    ``broadcast_max_segs``; no estimate ⇒ cogroup.
 
     Correctness constraint (both paths): footprint half-size (≤0.008°,
     FIXTURES.md) must be < cell size (0.156° at level 6) for the
@@ -422,8 +431,12 @@ def burn_cost_summaries(
         "fp_xmin", "fp_ymin", "fp_xmax", "fp_ymax", *passthrough,
     ]
     out_schema = _SUMMARY_SCHEMA + "".join(f", {c} string" for c in passthrough)
-    road_side = segments_with_cells(segs, level, k_expand=1).select(
-        "cell_id", "ax", "ay", "bx", "by"
+    # deduped: a segment reaching one ring cell from several covering
+    # cells must reach the tile once (n_segs counts them)
+    road_side = (
+        ring_cover(segs, level)
+        .dropDuplicates(["road_id", "seg_id", "cell_id"])
+        .select("cell_id", "ax", "ay", "bx", "by")
     )
 
     if strategy == "broadcast":

@@ -23,7 +23,7 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
@@ -203,12 +203,13 @@ def road_segments(roads: DataFrame) -> DataFrame:
     )
 
 
-def segments_with_cells(segs: DataFrame, level: int, k_expand: int = 0) -> DataFrame:
-    """Cover each segment's bbox with cells at ``level`` (+ optional k-ring).
+def segments_with_cells(segs: DataFrame, level: int) -> DataFrame:
+    """Cover each segment's bbox with cells at ``level``.
 
-    The build side of J1/J4: exploded (cell_id, segment) rows.
-    ``k_expand`` > 0 pre-expands the road side so the probe side can
-    join on its single point cell (one shuffle, no probe-side blowup).
+    The build side of J1 and the MVT tile cover: exploded (cell_id,
+    segment) rows, with the grid indices kept as ``cell_id_ix`` /
+    ``cell_id_iy``.  The cutoff searches expand this cover by kring(1)
+    through :func:`ring_cover`.
     """
     segs = (
         segs.withColumn("_xmin", F.expr("LEAST(ax, bx)"))
@@ -217,18 +218,28 @@ def segments_with_cells(segs: DataFrame, level: int, k_expand: int = 0) -> DataF
         .withColumn("_ymax", F.expr("GREATEST(ay, by)"))
     )
     covered = cover_bbox_cells(segs, level, "_xmin", "_ymin", "_xmax", "_ymax")
-    covered = covered.drop("_xmin", "_ymin", "_xmax", "_ymax")
-    if k_expand > 0:
-        covered = with_kring(
-            covered, level, k_expand, "cell_id", "ring_cell_id",
-            idx_cols=("cell_id_ix", "cell_id_iy"),
-        )
-        covered = (
-            covered.drop("cell_id", "k_ring", "cell_id_ix", "cell_id_iy")
-            .withColumnRenamed("ring_cell_id", "cell_id")
-            .dropDuplicates(["road_id", "seg_id", "cell_id"])
-        )
-    return covered
+    return covered.drop("_xmin", "_ymin", "_xmax", "_ymax")
+
+
+def ring_cover(segs: DataFrame, level: int) -> DataFrame:
+    """C3 road side of every cutoff search (J4 kNN/top-k/snap, the
+    near-road flag, the burn's halo): each segment expanded to the
+    kring(1) of the cells its bbox covers, so a point joins on its
+    single cell (completeness proof in knn_nearest_road).
+
+    Output: cell_id (the ring cell), road_id, seg_id, ax, ay, bx, by,
+    k_ring (Chebyshev distance from the covering cell).  NOT deduped —
+    a segment reaches one ring cell from several covering cells; each
+    caller picks its own reduction.
+    """
+    ring = with_kring(
+        segments_with_cells(segs, level), level, 1, "cell_id", "ring_cell_id",
+        idx_cols=("cell_id_ix", "cell_id_iy"),
+    )
+    return ring.select(
+        F.col("ring_cell_id").alias("cell_id"),
+        "road_id", "seg_id", "ax", "ay", "bx", "by", "k_ring",
+    )
 
 
 def compact_cover(dense_cells: DataFrame, level: int, cell: str = "cell_id") -> DataFrame:
@@ -442,6 +453,18 @@ def level_for_cutoff(cutoff_m: float) -> int:
     return level
 
 
+def _within_cutoff(points: DataFrame, cover: DataFrame, level: int,
+                   cutoff_m: float, id_col: str) -> DataFrame:
+    """(point, segment) pairs within ``cutoff_m``: the point's cell
+    equi-joined with a ring_cover, then the exact distance ``dist_m``
+    (its ``dist_m_*`` intermediates kept for snap_nearest_road)."""
+    probe = with_point_cell(points, level, "lon", "lat", "cell_id")
+    joined = probe.select(id_col, "lon", "lat", "cell_id").join(cover, "cell_id", "inner")
+    steps = point_seg_dist_steps("lon", "lat", "ax", "ay", "bx", "by", "dist_m")
+    joined = apply_steps(joined, steps)
+    return joined.filter(F.col("dist_m") <= F.lit(float(cutoff_m)))
+
+
 def knn_nearest_road(
     images_geo: DataFrame,
     segs: DataFrame,
@@ -464,26 +487,11 @@ def knn_nearest_road(
     """
     if level is None:
         level = level_for_cutoff(cutoff_m)
-    probe = with_point_cell(images_geo, level, "lon", "lat", "cell_id")
-    build = segments_with_cells(segs, level, k_expand=0)
-    build = with_kring(
-        build, level, 1, "cell_id", "ring_cell_id",
-        idx_cols=("cell_id_ix", "cell_id_iy"),
-    )
-    build = (
-        build.select(
-            F.col("ring_cell_id").alias("cell_id"),
-            "road_id",
-            "seg_id",
-            "ax",
-            "ay",
-            "bx",
-            "by",
-            "k_ring",
-        )
-        # a segment can reach the same ring cell from several covering
-        # cells — keep the MIN Chebyshev distance so k_ring is
-        # deterministic (endpoints are constant per (road_id, seg_id))
+    # a segment can reach the same ring cell from several covering
+    # cells — keep the MIN Chebyshev distance so k_ring is
+    # deterministic (endpoints are constant per (road_id, seg_id))
+    cover = (
+        ring_cover(segs, level)
         .groupBy("cell_id", "road_id", "seg_id")
         .agg(
             F.min("k_ring").alias("k_ring"),
@@ -493,12 +501,7 @@ def knn_nearest_road(
             F.first("by").alias("by"),
         )
     )
-    joined = probe.select(id_col, "lon", "lat", "cell_id").join(
-        build, "cell_id", "inner"
-    )
-    steps = point_seg_dist_steps("lon", "lat", "ax", "ay", "bx", "by", "dist_m")
-    joined = apply_steps(joined, steps).drop(*[n for n, _ in steps[:-1]])
-    joined = joined.filter(F.col("dist_m") <= F.lit(float(cutoff_m)))
+    joined = _within_cutoff(images_geo, cover, level, cutoff_m, id_col)
     # argmin via min(struct(...)): struct comparison is lexicographic, so
     # this reproduces the (dist, road_id, seg_id, k_ring) tie-break of a
     # row_number window — but with MAP-SIDE partial aggregation, so the
@@ -548,27 +551,10 @@ def knn_topk_roads(
     """
     if level is None:
         level = level_for_cutoff(cutoff_m)
-    probe = with_point_cell(images_geo, level, "lon", "lat", "cell_id")
-    build = segments_with_cells(segs, level, k_expand=0)
-    build = with_kring(
-        build, level, 1, "cell_id", "ring_cell_id",
-        idx_cols=("cell_id_ix", "cell_id_iy"),
-    )
-    build = (
-        build.select(
-            F.col("ring_cell_id").alias("cell_id"),
-            "road_id", "seg_id", "ax", "ay", "bx", "by",
-        )
-        # a segment reaches the same ring cell from several covering
-        # cells; endpoints are functionally dependent on (road, seg)
-        .dropDuplicates(["cell_id", "road_id", "seg_id"])
-    )
-    joined = probe.select(id_col, "lon", "lat", "cell_id").join(
-        build, "cell_id", "inner"
-    )
-    steps = point_seg_dist_steps("lon", "lat", "ax", "ay", "bx", "by", "dist_m")
-    joined = apply_steps(joined, steps).drop(*[n for n, _ in steps[:-1]])
-    joined = joined.filter(F.col("dist_m") <= F.lit(float(cutoff_m)))
+    # a segment reaches the same ring cell from several covering
+    # cells; endpoints are functionally dependent on (road, seg)
+    cover = ring_cover(segs, level).dropDuplicates(["cell_id", "road_id", "seg_id"])
+    joined = _within_cutoff(images_geo, cover, level, cutoff_m, id_col)
     per_road = joined.groupBy(id_col, "road_id").agg(
         F.min("dist_m").alias("dist_m")
     )
@@ -603,25 +589,8 @@ def snap_nearest_road(
     """
     if level is None:
         level = level_for_cutoff(cutoff_m)
-    probe = with_point_cell(points_geo, level, "lon", "lat", "cell_id")
-    build = segments_with_cells(segs, level, k_expand=0)
-    build = with_kring(
-        build, level, 1, "cell_id", "ring_cell_id",
-        idx_cols=("cell_id_ix", "cell_id_iy"),
-    )
-    build = (
-        build.select(
-            F.col("ring_cell_id").alias("cell_id"),
-            "road_id", "seg_id", "ax", "ay", "bx", "by",
-        )
-        .dropDuplicates(["cell_id", "road_id", "seg_id"])
-    )
-    joined = probe.select(id_col, "lon", "lat", "cell_id").join(
-        build, "cell_id", "inner"
-    )
-    steps = point_seg_dist_steps("lon", "lat", "ax", "ay", "bx", "by", "dist_m")
-    joined = apply_steps(joined, steps)
-    joined = joined.filter(F.col("dist_m") <= F.lit(float(cutoff_m)))
+    cover = ring_cover(segs, level).dropDuplicates(["cell_id", "road_id", "seg_id"])
+    joined = _within_cutoff(points_geo, cover, level, cutoff_m, id_col)
     # argmin via min(struct): (dist, road, seg) is the deterministic
     # tie-break; the trailing fields are functionally dependent on
     # (road_id, seg_id) so they never influence the comparison
@@ -683,9 +652,6 @@ def pip_country_udf(rings: dict[str, np.ndarray]):
     return _pip
 
 
-_VIEW_SEQ = [0]
-
-
 def with_near_road_flag(
     points_geo: DataFrame,
     segs: DataFrame,
@@ -695,108 +661,39 @@ def with_near_road_flag(
 ) -> DataFrame:
     """Map-side 'within cutoff of any road' boolean column.
 
-    Expressed as a correlated SQL ``EXISTS`` so Catalyst plans a
-    **BroadcastHashJoin ExistenceJoin** — one codegen'd hash probe per
-    point with the exact point→segment distance as the extra join
-    predicate, producing a boolean without dropping or duplicating
-    rows.  (A higher-order ``exists()`` lambda over a per-cell array
-    column computes the same thing but is evaluated interpreted —
-    measured ~9× slower; a left-semi join computes the filter but loses
-    the non-matching rows the flagship's n_points still needs.)"""
+    A correlated ``EXISTS`` subquery over the :func:`ring_cover`, built
+    with the DataFrame subquery API (no temp views, nothing written to
+    the session catalog).  While the cover fits the broadcast threshold
+    Catalyst plans a **BroadcastHashJoin ExistenceJoin** — one
+    codegen'd hash probe per point with the exact point→segment
+    distance as the extra join predicate, producing a boolean without
+    dropping or duplicating rows.  A cover too large to broadcast (a
+    planet-scale road network) plans as a **SortMergeJoin
+    ExistenceJoin** on the cell key: one shuffle per side, no broadcast
+    and no nested loop (pinned in tests/test_plans.py).  (A
+    higher-order ``exists()`` lambda over a per-cell array column
+    computes the same thing but is evaluated interpreted — measured ~9×
+    slower; a left-semi join computes the filter but loses the
+    non-matching rows the flagship's n_points still needs.)"""
     from ..sqlgen import point_seg_dist_expr
 
     if level is None:
         level = level_for_cutoff(cutoff_m)
-    spark = points_geo.sparkSession
-    probe = with_point_cell(points_geo, level, "lon", "lat", "_ncell")
-    build = segments_with_cells(segs, level, k_expand=0)
-    build = with_kring(
-        build, level, 1, "cell_id", "ring_cell_id",
-        idx_cols=("cell_id_ix", "cell_id_iy"),
-    )
+    probe = with_point_cell(points_geo, level, "lon", "lat", "_ncell").alias("p")
     # duplicates (a segment reaching one ring cell via several cover
     # cells) cannot change EXISTS semantics — skipping the dedup saves
     # the build side's only shuffle
-    build = build.select(
-        F.col("ring_cell_id").alias("rcell"), "ax", "ay", "bx", "by"
-    )
-    _VIEW_SEQ[0] += 1
-    pv = f"_nrf_probe_{id(points_geo)}_{_VIEW_SEQ[0]}"
-    sv = f"_nrf_segs_{id(segs)}_{_VIEW_SEQ[0]}"
-    probe.createOrReplaceTempView(pv)
-    build.createOrReplaceTempView(sv)
-    dist = point_seg_dist_expr("p.lon", "p.lat", "s.ax", "s.ay", "s.bx", "s.by")
-    out_cols = ", ".join(f"p.{c}" for c in points_geo.columns)
-    try:
-        # spark.sql ANALYZES eagerly — the returned plan is bound, so the
-        # views can be dropped immediately (they otherwise accumulate in
-        # the session catalog for its whole lifetime)
-        return spark.sql(
-            f"SELECT {out_cols}, EXISTS(SELECT 1 FROM {sv} s WHERE s.rcell = p._ncell "
-            f"AND {dist} <= CAST({float(cutoff_m)} AS DOUBLE)) AS {out} FROM {pv} p"
-        )
-    finally:
-        spark.catalog.dropTempView(pv)
-        spark.catalog.dropTempView(sv)
-
-
-def prepare_bucketed_flag_tables(
-    points_geo: DataFrame,
-    segs: DataFrame,
-    cutoff_m: float,
-    points_table: str = "points_bucketed",
-    cover_table: str = "cover_bucketed",
-    level: int | None = None,
-    n_buckets: int = 64,
-) -> int:
-    """Write both sides of the near-road join as bucketed tables
-    (storage.write_bucketed_table) keyed by cell.
-
-    One-time layout cost; afterwards with_near_road_flag_bucketed joins
-    them with NO exchange and NO broadcast.  Returns the level used.
-    """
-    from ..storage import write_bucketed_table
-
-    if level is None:
-        level = level_for_cutoff(cutoff_m)
-    probe = with_point_cell(points_geo, level, "lon", "lat", "cell_id")
-    build = segments_with_cells(segs, level, k_expand=0)
-    build = with_kring(
-        build, level, 1, "cell_id", "ring_cell_id",
-        idx_cols=("cell_id_ix", "cell_id_iy"),
-    ).select(F.col("ring_cell_id").alias("cell_id"), "ax", "ay", "bx", "by")
-    write_bucketed_table(probe, points_table, "cell_id", n_buckets)
-    write_bucketed_table(build, cover_table, "cell_id", n_buckets)
-    return level
-
-
-def with_near_road_flag_bucketed(
-    spark,
-    cutoff_m: float,
-    points_table: str = "points_bucketed",
-    cover_table: str = "cover_bucketed",
-    out: str = "near_road",
-) -> DataFrame:
-    """Scale path of with_near_road_flag: EXISTS over two tables
-    bucketed on the cell key (prepare_bucketed_flag_tables).
-
-    The whole-road-network broadcast of the default path cannot build
-    at planet scale (~10⁸ segments × 9 ring cells); here BOTH sides are
-    co-located by layout, so Catalyst plans a SortMergeJoin
-    ExistenceJoin with NO Exchange on either side and no broadcast —
-    pinned in tests/test_plans.py.  The fact table is read, probed and
-    flagged without ever being shuffled."""
-    from ..sqlgen import point_seg_dist_expr
-
-    p = spark.table(points_table)
-    dist = point_seg_dist_expr("p.lon", "p.lat", "s.ax", "s.ay", "s.bx", "s.by")
-    out_cols = ", ".join(f"p.{c}" for c in p.columns if c != "cell_id")
-    return spark.sql(
-        f"SELECT {out_cols}, EXISTS(SELECT 1 FROM {cover_table} s "
-        f"WHERE s.cell_id = p.cell_id "
-        f"AND {dist} <= CAST({float(cutoff_m)} AS DOUBLE)) AS {out} "
-        f"FROM {points_table} p"
-    )
+    build = ring_cover(segs, level).select(
+        F.col("cell_id").alias("rcell"), "ax", "ay", "bx", "by"
+    ).alias("s")
+    # p.lon / p.lat resolve as outer references once the subquery is
+    # analyzed lazily, which the explicit .outer() key below triggers
+    dist = F.expr(point_seg_dist_expr("p.lon", "p.lat", "s.ax", "s.ay", "s.bx", "s.by"))
+    near = build.where(
+        (F.col("s.rcell") == F.col("p._ncell").outer())
+        & (dist <= F.lit(float(cutoff_m)))
+    ).exists()
+    return probe.select(*[F.col(f"p.{c}") for c in points_geo.columns], near.alias(out))
 
 
 def knn_ring_iterative(
@@ -820,7 +717,7 @@ def knn_ring_iterative(
     tie-break.
     """
     cellsize_m = WORLD_SIZE / (1 << level) * METERS_PER_DEG
-    build = segments_with_cells(segs, level, k_expand=0).select(
+    build = segments_with_cells(segs, level).select(
         F.col("cell_id").alias("rcell"), "road_id", "seg_id", "ax", "ay", "bx", "by"
     )
     steps = point_seg_dist_steps("lon", "lat", "ax", "ay", "bx", "by", "dist_m")

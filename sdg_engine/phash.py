@@ -81,9 +81,5 @@ def phash64(img: np.ndarray) -> int:
     return int(val)
 
 
-def phash_batch(imgs: list[np.ndarray]) -> np.ndarray:
-    return np.array([phash64(im) for im in imgs], dtype=np.int64)
-
-
 def hamming64(a: int, b: int) -> int:
     return bin((a ^ b) & ((1 << 64) - 1)).count("1")

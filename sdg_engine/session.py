@@ -80,15 +80,15 @@ LOCAL_ENGINE_CONFS = {
     + ((os.pathsep + os.environ["PYTHONPATH"])
        if os.environ.get("PYTHONPATH") else ""),
 }
-ENGINE_CONFS.update(LOCAL_ENGINE_CONFS)  # scripts build local sessions
 
 
 def get_spark(app: str = "sdg_engine", master: str | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     m = master or f"local[{cpus}]"
     builder = SparkSession.builder.appName(app).master(m)
-    for k, v in ENGINE_CONFS.items():
-        if not m.startswith("local") and k in LOCAL_ENGINE_CONFS:
-            continue  # never point a remote executor at a driver path
+    confs = dict(ENGINE_CONFS)
+    if m.startswith("local"):  # a remote executor never sees a driver path
+        confs.update(LOCAL_ENGINE_CONFS)
+    for k, v in confs.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

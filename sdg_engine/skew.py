@@ -4,8 +4,8 @@ range-partitioned shuffles, AQE skew-split").
 
 Three layers, used together:
 1. AQE skew-join split — config, session.py (free);
-2. ``repartitionByRange`` on cell_id for range-local shuffles — the
-   Z-order key makes ranges spatially coherent;
+2. ``DataFrame.repartitionByRange`` on cell_id for range-local
+   shuffles — the Z-order key makes ranges spatially coherent;
 3. explicit SALTING for grouped/cogrouped per-cell work (where AQE
    can't split a single group): a driver-side histogram finds hot
    cells (the dense-urban fixture cell), and the group key becomes
@@ -61,10 +61,3 @@ def with_salt(
             F.pmod(F.xxhash64(F.col(id_col)), F.col("n_salt")).cast("int"),
         ).otherwise(F.lit(0)),
     ).drop("n_salt")
-
-
-def repartition_by_cell_range(df: DataFrame, n: int, cell_col: str = "cell_id") -> DataFrame:
-    """Range-partitioned shuffle on the Z-order cell key — spatially
-    coherent partitions (neighbors land together), the layout the
-    images table would be written with on Iceberg (SURVEY.md §4)."""
-    return df.repartitionByRange(n, F.col(cell_col))

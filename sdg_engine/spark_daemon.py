@@ -12,7 +12,7 @@ from a daemon that already holds the imports makes each worker's copy
 free (COW pages), cutting the burst to fork latency.
 
 Wired via ``spark.python.daemon.module`` (public Spark conf; the
-factory launches ``python -m <module>``) in session.ENGINE_CONFS, with
+factory launches ``python -m <module>``) in session.LOCAL_ENGINE_CONFS, with
 ``spark.executorEnv.PYTHONPATH`` extended so this package resolves in
 the daemon subprocess.  Every import is best-effort: a worker that
 needs a missing module fails at use-time exactly as it would without

@@ -238,8 +238,3 @@ def apply_steps(df, steps: list[tuple[str, str]]):
     for name, expr in steps:
         df = df.withColumn(name, F.expr(expr))
     return df
-
-
-def drop_intermediates(df, steps: list[tuple[str, str]], keep_last: int = 1):
-    names = [n for n, _ in steps[:-keep_last]] if keep_last else [n for n, _ in steps]
-    return df.drop(*names)

@@ -105,34 +105,6 @@ def read_images_for_cells(
     return df.filter(F.col("cell_bucket").isin(buckets))
 
 
-def write_bucketed_table(
-    df: DataFrame, table: str, key: str, n_buckets: int = 64,
-    sort: bool = True, fmt: str = "parquet",
-) -> None:
-    """Spark-native bucketed table (Iceberg ``bucket(N, key)`` stand-in):
-    both sides of a cell equi-join written with the SAME (key, N) join
-    WITHOUT any exchange — the shuffle is paid once at write time, then
-    every subsequent join/aggregation on the key is co-located by
-    layout.  This is the flagship's scale path when the road cover
-    exceeds the broadcast threshold (a planet-scale road network cannot
-    build-side-broadcast)."""
-    import os
-    import shutil
-
-    spark = df.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    # a stale managed-table directory (from a previous session whose
-    # catalog is gone) blocks saveAsTable with LOCATION_ALREADY_EXISTS
-    wh = spark.conf.get("spark.sql.warehouse.dir", "")
-    loc = os.path.join(wh.removeprefix("file:"), table.lower())
-    if loc and os.path.exists(loc):
-        shutil.rmtree(loc, ignore_errors=True)
-    w = df.write.mode("overwrite").format(fmt).bucketBy(n_buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.saveAsTable(table)
-
-
 # ---------------------------------------------------------------------------
 # Snapshot commits + time travel (Iceberg metadata shape on local parquet;
 # r04).  The real catalog path stays config-gated (module docstring) —

@@ -318,3 +318,77 @@ def test_ring_cell_test_matches_scalar_twin():
         n_in += int(want_in.sum())
         n_out += int((~want_in).sum())
     assert n_cross and n_in and n_out  # every outcome is exercised
+
+
+def _brute_ring_cover(segs: np.ndarray, level: int) -> dict:
+    """Reference for ops.spatial.ring_cover (segment i is road i // 2,
+    seg i % 2): plain loops over the grid indices ``[ix0-1, ix1+1] ×
+    [iy0-1, iy1+1]`` of each segment's bbox, clipped to the world; the
+    value is the Chebyshev distance from the cell to the bbox's index
+    rectangle."""
+    import math
+
+    n = 1 << level
+
+    def index(v: float) -> int:
+        return min(max(math.floor((v - WORLD_MIN) / WORLD_SIZE * float(n)), 0), n - 1)
+
+    want = {}
+    for i, (ax, ay, bx, by) in enumerate(segs.tolist()):
+        ix0, ix1 = index(min(ax, bx)), index(max(ax, bx))
+        iy0, iy1 = index(min(ay, by)), index(max(ay, by))
+        for gx in range(ix0 - 1, ix1 + 2):
+            for gy in range(iy0 - 1, iy1 + 2):
+                if not (0 <= gx < n and 0 <= gy < n):
+                    continue
+                k = max(ix0 - gx, gx - ix1, iy0 - gy, gy - iy1, 0)
+                want[(int(C.pack(level, gx, gy)), i // 2, i % 2)] = k
+    return want
+
+
+def test_ring_cover_matches_brute_force(spark):
+    """ops.spatial.ring_cover (bbox cover, then kring(1)) against the
+    brute-force neighbourhood: the distinct (cell, road, seg) set and
+    the min k_ring per triple agree, on seeded random segments and on
+    zero-length, axis-parallel, world-edge and many-cell segments."""
+    from sdg_engine.ops.spatial import ring_cover
+
+    level = 5
+    step = WORLD_SIZE / (1 << level)
+    rng = np.random.default_rng(20261017)
+    a = rng.uniform(WORLD_MIN, WORLD_MIN + WORLD_SIZE, (60, 2))
+    b = a + rng.uniform(-2.5 * step, 2.5 * step, (60, 2))
+    hi = WORLD_MIN + WORLD_SIZE
+    special = [
+        (4.2, 6.1, 4.2, 6.1),  # zero-length
+        (7 * step, 9 * step, 7 * step, 9 * step),  # zero-length on a corner
+        (1.3, 2.0, 4.9, 2.0),  # horizontal
+        (3.0, 0.4, 3.0, 8.8),  # vertical
+        (5 * step, 1.0, 5 * step, 2.0),  # vertical on a grid line
+        (WORLD_MIN, WORLD_MIN, WORLD_MIN, WORLD_MIN),  # world corner
+        (hi, hi, hi - 0.5 * step, hi),  # top edge, clamped index
+        (WORLD_MIN - 0.4, 5.0, WORLD_MIN + 0.2, 5.3),  # leaves the world
+        (hi - 0.1, WORLD_MIN, hi + 0.3, WORLD_MIN + 0.1),  # right-bottom
+        (0.1, 0.2, 9.7, 9.9),  # many cells: nearly the whole world
+        (9.9, 0.05, 0.05, 9.9),  # many cells, reversed direction
+    ]
+    segs = np.vstack([np.c_[a, b], np.array(special)])
+
+    df = spark.createDataFrame(
+        [(i // 2, i % 2, *map(float, s)) for i, s in enumerate(segs)],
+        "road_id bigint, seg_id int, ax double, ay double, bx double, by double",
+    )
+    got = ring_cover(df, level).toPandas()
+    want = _brute_ring_cover(segs, level)
+
+    got_min = got.groupby(["cell_id", "road_id", "seg_id"])["k_ring"].min()
+    assert set(got_min.index) == set(want)
+    assert {k: int(v) for k, v in got_min.items()} == want
+    # endpoints ride along unchanged
+    ends = got[["road_id", "seg_id", "ax", "ay", "bx", "by"]].drop_duplicates()
+    assert len(ends) == len(segs)
+    ends = ends.sort_values(["road_id", "seg_id"])[["ax", "ay", "bx", "by"]]
+    assert np.array_equal(ends.to_numpy(), segs)
+    # duplicates exist (a ring cell reached from several covering
+    # cells): ring_cover leaves the reduction to its callers
+    assert len(got) > len(got_min)
