@@ -6,11 +6,13 @@ Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 line::
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {...}, "sf": ...,
+     "queries": {...}, "queries_<family>": {...}, "sf": ...,
      "rows_per_sec": ..., "scaling": {...}}
 
 ``value`` is total wall seconds across the headline queries (warm-up
-run of the flagship discarded).  ``scaling`` evidences the north
+run of the flagship discarded).  Every other registered query is timed
+once under ``queries_<family>`` (one key per family in
+``sdg_engine.queries.FAMILIES``).  ``scaling`` evidences the north
 rule's N→4N criterion on the local stand-in: the same flagship job at
 local[2] vs local[8] (N and 4N cores) on a mult× derived input, with
 efficiency = (thr_4N/thr_N)/4 (BASELINE.md).  Disable with
@@ -38,129 +40,6 @@ def _session(cpus: str):
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 
-
-# r05 additions, timed separately so `value` (the HEADLINE total) stays
-# comparable across rounds; image-fixture queries pin sf0.01 regardless
-# of SF_DIR (their goldens embed it).
-R5_EXTRAS = [
-    "events_asof_join",
-    "events_funnel",
-    "hll_distinct",
-    "pagerank_roads",
-    "road_graph_bfs",
-    "bm25_top_docs",
-    "sample_weighted",
-    "roads_simplify_dp",
-    "mvt_pyramid_simplified",
-    "image_hillshade",
-    "image_flow_d8",
-    "image_watershed",
-    "image_viewshed",
-    "image_pit_fill",
-    "snapshot_position_deletes",
-    "snapshot_metadata_tables",
-    "events_sessionize_batch",
-    "events_auc",
-    "doc_bigram_rarity",
-    "snapshot_rollback",
-    "image_texture_glcm",
-    "roads_sinuosity",
-    "image_quadtree",
-    "streaming_static_enrich",
-    "image_contours",
-    "image_zonal_stats",
-    "country_convex_hull",
-    "image_regions",
-    "events_retention",
-    "pivot_orders_status",
-    "pmi_bigrams",
-    "events_outliers",
-    "snapshot_compaction",
-    "snapshot_diff",
-    "roads_buffer_cells",
-    "road_intersections",
-    "streaming_left_join",
-    "multimodal_audio_stft",
-    "grid_idw",
-    "fuzzy_name_pairs",
-    "event_transitions",
-    "customer_gini",
-    "cells_morans_i",
-    "bloom_filter_join",
-    "cms_heavy_hitters",
-    "kmv_set_similarity",
-    "hist_quantiles",
-    "triangle_count_roads",
-    "events_acf",
-    "events_gapfill",
-    "orders_skyline",
-    "route_interpolate",
-    "shortest_path_weighted",
-    "cusum_changepoint",
-    "phrase_search",
-    "events_trend",
-    "drift_chisq",
-    "market_basket_brands",
-    "customer_rfm",
-    "bpe_merge_candidates",
-    "geohash_cells",
-    "contamination_check",
-    "dataset_mix_weights",
-    "vocab_oov_rate",
-    "hilbert_cells",
-    "ann_pq_topk",
-    "link_prediction_roads",
-    "spatial_dbscan",
-    "snapshot_zone_map",
-    "events_ewma",
-    "events_seasonality",
-    "rake_keywords",
-    "doc_word_diversity",
-    "label_propagation_roads",
-    "voronoi_assign",
-    "image_sobel_edges",
-    "source_binaryfile_images",
-    "groupingsets_orders",
-    "events_rolling_range",
-    "dedup_containment",
-    "streaming_snapshot_sink",
-    "snapshot_partition_prune",
-    "osm_qatile_source",
-    "events_variant_json",
-    "ann_recall_eval",
-    "snapshot_mor_deletes",
-    "snapshot_bloom_index",
-    "snapshot_incremental_mv",
-    "snapshot_zorder_cluster",
-    "snapshot_wap_publish",
-    "events_welch_ttest",
-    "cells_line_density",
-    "kcore_roads",
-    "cells_kde",
-    "udtf_word_runs",
-    "textrank_keywords",
-    "events_ks_test",
-    "events_mann_kendall",
-    "doc_normalized_dedup",
-    "events_seq_trigrams",
-    "events_regression",
-    "cells_getis_ord",
-    "orc_roundtrip_events",
-    "image_slope_aspect",
-    "image_strahler",
-    "image_hist_equalize",
-    "image_morphology",
-    "ann_sq8_recall",
-    "roads_supercover_cells",
-    "events_benford",
-    "bitmap_distinct_users",
-    "events_twap",
-    "roads_dissolve",
-    "snapshot_expire",
-    "dedup_lsh_recall",
-    "streaming_session_window",
-    "q17_small_quantity_revenue",
-]
 
 HEADLINE = [
     "flagship_rai",
@@ -211,7 +90,7 @@ def main() -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
-    from sdg_engine.queries import QUERIES
+    from sdg_engine.queries import FAMILIES, FAMILY, QUERIES
 
     # Idle-window gate (r05, VERDICT item 3): BENCH_r04.json was captured
     # in a loadavg-9.5→12.6 co-tenant window and misreported an unchanged
@@ -234,27 +113,18 @@ def main() -> None:
     _materialize(QUERIES["flagship_rai"](spark, sf_dir))
     queries = run_queries(spark, sf_dir, HEADLINE)
     total = round(sum(queries.values()), 3)
-    queries_r5 = run_queries(spark, sf_dir, R5_EXTRAS)
-    from sdg_engine.queries_r5b import QUERIES_R5B
-    from sdg_engine.queries_tpch import QUERIES_TPCH
-
-    queries_tpch = run_queries(spark, sf_dir, list(QUERIES_TPCH))
-    queries_r5b = run_queries(spark, sf_dir, list(QUERIES_R5B))
-    from sdg_engine.queries_r5c import QUERIES_R5C
-
-    queries_r5c = run_queries(spark, sf_dir, list(QUERIES_R5C))
-    from sdg_engine.queries_r5d import QUERIES_R5D
-
-    queries_r5d = run_queries(spark, sf_dir, list(QUERIES_R5D))
-    from sdg_engine.queries_r5e import QUERIES_R5E
-
-    queries_r5d.update(run_queries(spark, sf_dir, list(QUERIES_R5E)))
-    from sdg_engine.queries_r5f import QUERIES_R5F
-
-    queries_r5d.update(run_queries(spark, sf_dir, list(QUERIES_R5F)))
-    from sdg_engine.queries_r5g import QUERIES_R5G
-
-    queries_r5d.update(run_queries(spark, sf_dir, list(QUERIES_R5G)))
+    # every other registered query, once, grouped by family; timed
+    # apart from HEADLINE so `value` stays comparable across runs.
+    # Image-fixture queries pin sf0.01 regardless of SF_DIR (their
+    # goldens embed it).
+    by_family = {
+        f"queries_{fam}": run_queries(
+            spark,
+            sf_dir,
+            [n for n in QUERIES if FAMILY[n] == fam and n not in HEADLINE],
+        )
+        for fam in FAMILIES
+    }
     flagship_thr = n_input / queries["flagship_rai"] if queries["flagship_rai"] else 0.0
     spark.stop()
 
@@ -290,11 +160,7 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": queries,
-        "queries_r5": queries_r5,
-        "queries_tpch": queries_tpch,
-        "queries_r5b": queries_r5b,
-        "queries_r5c": queries_r5c,
-        "queries_r5d": queries_r5d,
+        **by_family,
         "sf": sf,
         "input_rows": n_input,
         "rows_per_sec": round(flagship_thr, 1),

@@ -922,7 +922,7 @@ def make_pyramid_simplified_golden(sf: float = 0.01) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from sdg_engine.queries_r5 import PYR_SIMPLIFY_EPS
+    from sdg_engine.queries.spatial import PYR_SIMPLIFY_EPS
 
     zs, rids, sids, axs, ays, bxs, bys = [], [], [], [], [], [], []
     for r in FX.roads_records(sf):
@@ -2427,7 +2427,7 @@ def make_clip_golden() -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from sdg_engine.queries import AOI_RING
+    from sdg_engine.queries.spatial import AOI_RING
 
     clip = [(float(x), float(y)) for x, y in AOI_RING[:-1]]
 

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 def select_training_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup keepers ∩ quality keeps — the curated corpus."""
-    from ..queries_ext import doc_quality_filter
+    from ..queries.text import doc_quality_filter
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     keyed = docs.selectExpr(
@@ -83,7 +83,7 @@ def export_tfrecords(selected: DataFrame, out_dir: str) -> None:
 
 def verify_shards(spark: SparkSession, out_dir: str) -> dict:
     """CRC-verified re-ingest: counts + a 48-bit text fingerprint sum."""
-    from ..queries_r5 import _b12_cells
+    from ..queries._common import _b12_cells
 
     bf = (
         spark.read.format("binaryFile")

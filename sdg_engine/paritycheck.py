@@ -1,6 +1,6 @@
 """Local replica of the driver's Spark-vs-DuckDB correctness gate.
 
-Runs each queries.py builder AND its oracles.py SQL on the same
+Runs each registered query builder AND its oracle SQL on the same
 parquet, canonicalizes both results (columns sorted by name, rows
 sorted, floats repr'd), and diffs them.  Stricter than the driver's
 value hash, so passing here implies passing there.

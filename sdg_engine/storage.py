@@ -278,8 +278,6 @@ def read_snapshot_pruned(spark: SparkSession, path: str, col: str,
     ``(df, files_scanned, files_total)``; the caller still applies the
     row-level residual predicate (zone maps prune FILES, not rows).
     """
-    import os
-
     return read_snapshot_pruned_box(spark, path, {col: (lo, hi)}, as_of)
 
 
@@ -298,6 +296,26 @@ def read_snapshot_pruned_box(spark: SparkSession, path: str,
     deletes still apply to the kept files.  Returns
     ``(df, files_scanned, files_total)``; the caller applies the
     row-level residual (zones prune FILES, not rows)."""
+    def keep(e: dict) -> bool:
+        stats = e.get("stats") or {}
+        for col, (lo, hi) in preds.items():
+            s = stats.get(col)
+            if s is not None and (s[1] < lo or s[0] > hi):
+                return False
+        return True
+
+    return _read_pruned(spark, path, as_of, keep, "stats_cols")
+
+
+def _read_pruned(spark: SparkSession, path: str, as_of: int | None,
+                 keep, hint: str):
+    """The pruned snapshot read behind the zone-map, Bloom and
+    partition readers: resolve ``as_of`` (default: head), keep the
+    manifest's data files for which ``keep(entry)`` holds, and read
+    them through ``_read_manifest_df`` — the same committed schema,
+    merge-on-read deletes and renames as ``read_snapshot``.  ``hint``
+    names the ``write_snapshot`` option that records the per-file
+    manifest.  Returns ``(df, files_scanned, files_total)``."""
     import os
 
     hist = snapshot_history(path)
@@ -313,19 +331,12 @@ def read_snapshot_pruned_box(spark: SparkSession, path: str,
         entries = files_map.get(d)
         if entries is None:
             raise ValueError(
-                f"snapshot {snap_id} has no zone-map stats for {d} "
-                f"(commit with write_snapshot(..., stats_cols=[...]))"
+                f"snapshot {snap_id} has no file manifest for {d} "
+                f"(commit with write_snapshot(..., {hint}=[...]))"
             )
         for e in entries:
             total += 1
-            stats = e.get("stats") or {}
-            keep = True
-            for col, (lo, hi) in preds.items():
-                s = stats.get(col)
-                if s is not None and (s[1] < lo or s[0] > hi):
-                    keep = False
-                    break
-            if keep:
+            if keep(e):
                 dir_files.setdefault(d, []).append(
                     os.path.join(d, e["file"])
                 )
@@ -392,38 +403,15 @@ def read_snapshot_point(spark: SparkSession, path: str, col: str,
     committed bloom for ``col`` are always read (fail-open, like zone
     maps).  Merge-on-read deletes still apply.  Returns
     ``(df, files_scanned, files_total)``."""
-    import os
-
-    hist = snapshot_history(path)
-    if not hist:
-        raise ValueError(f"no snapshots at {path}")
-    snap_id = hist[-1] if as_of is None else as_of
-    m = _read_manifest(path, snap_id)
-    files_map = m.get("files") or {}
     cells = _bloom_cells(value)
-    dir_files: dict[str, list[str]] = {}
-    n_keep = 0
-    total = 0
-    for d in m["dirs"]:
-        entries = files_map.get(d)
-        if entries is None:
-            raise ValueError(
-                f"snapshot {snap_id} has no file manifest for {d} "
-                f"(commit with write_snapshot(..., bloom_cols=[...]))"
-            )
-        for e in entries:
-            total += 1
-            words = (e.get("bloom") or {}).get(col)
-            hit = words is None or all(
-                words[c // 64] >> (c % 64) & 1 for c in cells
-            )
-            if hit:
-                dir_files.setdefault(d, []).append(
-                    os.path.join(d, e["file"])
-                )
-                n_keep += 1
-    df = _read_manifest_df(spark, m, dir_files=dir_files)
-    return df, n_keep, total
+
+    def keep(e: dict) -> bool:
+        words = (e.get("bloom") or {}).get(col)
+        return words is None or all(
+            words[c // 64] >> (c % 64) & 1 for c in cells
+        )
+
+    return _read_pruned(spark, path, as_of, keep, "bloom_cols")
 
 
 def table_check(path: str) -> str | None:
@@ -574,49 +562,19 @@ def read_snapshot_partitioned(spark: SparkSession, path: str, eq: dict,
     ``eq`` key — the manifest carries the dir-name ``k=v`` segments, so
     pruning happens before Spark plans the scan.  Values compare as
     their hive dir-name strings; files with no recorded value for a key
-    are always read (fail-open).  Reads set ``basePath`` per data dir
-    so Spark still derives the partition columns from the kept leaf
-    files.  Returns ``(df, files_scanned, files_total)``.
+    are always read (fail-open).  Deletes, renames and the committed
+    schema apply exactly as in ``read_snapshot``.  Returns
+    ``(df, files_scanned, files_total)``.
     """
-    import os
-    from functools import reduce
 
-    hist = snapshot_history(path)
-    if not hist:
-        raise ValueError(f"no snapshots at {path}")
-    snap_id = hist[-1] if as_of is None else as_of
-    m = _read_manifest(path, snap_id)
-    files_map = m.get("files") or {}
-    keep_by_dir: dict[str, list[str]] = {}
-    total = 0
-    for d in m["dirs"]:
-        entries = files_map.get(d)
-        if entries is None:
-            raise ValueError(
-                f"snapshot {snap_id} has no file manifest for {d} "
-                f"(commit with write_snapshot(..., partition_by=[...]))"
-            )
-        for e in entries:
-            total += 1
-            parts = e.get("parts") or {}
-            if all(parts.get(k, str(v)) == str(v) for k, v in eq.items()):
-                keep_by_dir.setdefault(d, []).append(
-                    os.path.join(d, e["file"])
-                )
-    if not keep_by_dir:
+    def keep(e: dict) -> bool:
+        parts = e.get("parts") or {}
+        return all(parts.get(k, str(v)) == str(v) for k, v in eq.items())
+
+    df, n_scan, total = _read_pruned(spark, path, as_of, keep,
+                                     "partition_by")
+    if not n_scan:
         raise ValueError(f"no files match partitions {eq} at {path}")
-    deletes = m.get("deletes") or []
-    dfs = []
-    for d, fl in sorted(keep_by_dir.items()):
-        df = spark.read.option("basePath", d).parquet(*fl)
-        for e in deletes:
-            if d in e["applies_to"]:
-                ks = (spark.read.parquet(e["dir"])
-                      .select(e["key"]).distinct())
-                df = df.join(F.broadcast(ks), e["key"], "left_anti")
-        dfs.append(df)
-    df = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs)
-    n_scan = sum(len(v) for v in keep_by_dir.values())
     return df, n_scan, total
 
 
@@ -658,27 +616,35 @@ def _read_manifest_df_disk(spark: SparkSession, m: dict,
     scan (grouping keeps the plan O(distinct delete scopes), not
     O(dirs)); with no deletes this is the single-scan fast path.
     ``dir_files`` optionally restricts each dir to an explicit file
-    list (the zone-map / partition pruning paths)."""
+    list (the zone-map / Bloom / partition pruning paths); the files of
+    a hive-partitioned dir are read with that dir as ``basePath``, so
+    Spark still derives the partition columns from the kept leaf
+    files."""
     from functools import reduce
 
     from pyspark.sql.types import StructType
 
     schema = (StructType.fromJson(m["schema"])
               if m.get("schema") is not None else None)
+    files_map = m.get("files") or {}
 
-    def _read(paths: list[str]) -> DataFrame:
+    def _scan(paths: list[str], base: str | None = None) -> DataFrame:
         r = spark.read
         if schema is not None:
             r = r.schema(schema)
+        if base is not None:
+            r = r.option("basePath", base)
         return r.parquet(*paths)
 
-    def _paths(dirs: list[str]) -> list[str]:
+    def _read(dirs: list[str]) -> DataFrame:
         if dir_files is None:
-            return dirs
-        out: list[str] = []
-        for d in dirs:
-            out.extend(dir_files.get(d, []))
-        return out
+            return _scan(dirs)
+        hive = {d for d in dirs
+                if any(e.get("parts") for e in files_map.get(d, []))}
+        flat = [f for d in dirs if d not in hive for f in dir_files[d]]
+        scans = [_scan(flat)] if flat else []
+        scans += [_scan(dir_files[d], base=d) for d in dirs if d in hive]
+        return reduce(lambda a, b: a.unionByName(b), scans)
 
     deletes = m.get("deletes") or []
     pos_deletes = m.get("pos_deletes") or []
@@ -691,7 +657,7 @@ def _read_manifest_df_disk(spark: SparkSession, m: dict,
             raise ValueError("all files pruned and manifest has no schema")
         return spark.createDataFrame([], schema)
     if not deletes and not pos_deletes:
-        return _read(_paths(dirs_all))
+        return _read(dirs_all)
     groups: dict[tuple, list[str]] = {}
     for d in dirs_all:
         sig = tuple(
@@ -703,7 +669,7 @@ def _read_manifest_df_disk(spark: SparkSession, m: dict,
         groups.setdefault(sig, []).append(d)
     parts = []
     for sig, dirs in sorted(groups.items()):
-        df = _read(_paths(dirs))
+        df = _read(dirs)
         pos_idx = [j for kind, j in sig if kind == "p"]
         if pos_idx:
             # position deletes key on the PHYSICAL row address — the

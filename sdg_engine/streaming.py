@@ -740,7 +740,7 @@ def stream_dedup_then_window(
 # pure function of its offsets, which is exactly the contract
 # exactly-once recovery needs (same offsets => same rows).  SPEC for
 # the derived columns lives in the query that consumes it
-# (queries_r5f.streaming_pysource_windows) and is mirrored verbatim by
+# (queries.streaming.streaming_pysource_windows) and is mirrored verbatim by
 # its DuckDB range() oracle.
 # ---------------------------------------------------------------------------
 

@@ -164,7 +164,7 @@ def test_connected_components_union_find_oracle(spark):
     import numpy as np
     import pandas as pd
 
-    from sdg_engine.queries_ext import connected_components
+    from sdg_engine.queries.text import connected_components
 
     rng = np.random.default_rng(11)
     n = 300
@@ -289,6 +289,36 @@ def test_snapshot_schema_evolution(spark, tmp_path):
     bad = spark.createDataFrame(pd.DataFrame({"k": ["not-an-int"]}))
     with _pytest.raises(ValueError, match="conflict"):
         write_snapshot(bad, tbl, mode="append")
+
+
+def test_partition_pruned_read_applies_deletes_and_renames(spark, tmp_path):
+    """The partition-pruned reader reads through the same manifest path
+    as read_snapshot: a position delete hides its row and a metadata
+    rename surfaces the new column name on the pruned read too."""
+    import pandas as pd
+
+    from sdg_engine.storage import (delete_positions_where, read_snapshot,
+                                    read_snapshot_partitioned, rename_column,
+                                    write_snapshot)
+
+    tbl = str(tmp_path / "part_tbl")
+    ids = list(range(10))
+    pdf = pd.DataFrame({"id": ids, "k": [i % 2 for i in ids],
+                        "v": [10 * i for i in ids]})
+    write_snapshot(spark.createDataFrame(pdf), tbl, partition_by=["k"])
+    delete_positions_where(spark, tbl, "id = 4")
+    assert 4 not in {r.id for r in read_snapshot(spark, tbl).collect()}
+    df, n_scan, n_tot = read_snapshot_partitioned(spark, tbl, {"k": 0})
+    assert sorted(r.id for r in df.collect()) == [0, 2, 6, 8]
+    assert 0 < n_scan < n_tot
+    assert {r.k for r in df.collect()} == {0}
+
+    rename_column(tbl, "v", "val")
+    df, _, _ = read_snapshot_partitioned(spark, tbl, {"k": 1})
+    assert "val" in df.columns and "v" not in df.columns
+    assert sorted((r.id, r.val) for r in df.collect()) == [
+        (i, 10 * i) for i in (1, 3, 5, 7, 9)
+    ]
 
 
 def test_render_colormap_png(spark):

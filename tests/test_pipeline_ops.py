@@ -110,7 +110,7 @@ def test_kmeans_lloyd_monotonicity(spark):
     """Each Lloyd iteration cannot increase total within-cluster squared
     distance (assignment and update steps are both argmin/mean optimal).
     Run the query's own building blocks for 1 vs 2 iterations."""
-    from sdg_engine.queries_ext import kmeans_embeddings
+    from sdg_engine.queries.ann import kmeans_embeddings
 
     def total_ss(iters):
         # re-run the query with k fixed and varying iterations, summing
@@ -161,7 +161,7 @@ def test_kmeans_lloyd_monotonicity(spark):
 
 
 def test_kmeans_query_partitions_all_vectors(spark):
-    from sdg_engine.queries_ext import kmeans_embeddings
+    from sdg_engine.queries.ann import kmeans_embeddings
 
     res = kmeans_embeddings(spark, SF).toPandas()
     n_vecs = spark.read.parquet(f"{SF}/embeddings.parquet").count()
@@ -172,7 +172,7 @@ def test_kmeans_query_partitions_all_vectors(spark):
 def test_sample_stratified_exact_quotas(spark):
     """Quotas are exact per stratum (capped by stratum size) and the
     draw is stable across invocations."""
-    from sdg_engine.queries_ext import sample_stratified
+    from sdg_engine.queries.text import sample_stratified
 
     got = sample_stratified(spark, SF).toPandas()
     langs = (
@@ -197,7 +197,7 @@ def test_embedding_cosine_neardup_pairs_are_verified(spark):
     shares at least one LSH band (candidate condition)."""
     import numpy as np
 
-    from sdg_engine.queries_ext import embedding_cosine_neardup
+    from sdg_engine.queries.ann import embedding_cosine_neardup
 
     got = embedding_cosine_neardup(spark, SF).toPandas()
     emb = (
@@ -253,7 +253,7 @@ def test_pack_sequences_two_level_prefix_equals_naive(spark):
     (no 'move everything to one partition' plan)."""
     from pyspark.sql import Window
 
-    from sdg_engine.queries_ext import pack_sequences
+    from sdg_engine.queries.text import pack_sequences
 
     got = pack_sequences(spark, SF)
     docs = spark.read.parquet(f"{SF}/documents.parquet")

@@ -311,7 +311,8 @@ def test_minhash_bucketed_band_join_is_exchange_free(spark):
     in BENCH/BASELINE.md), so the salted join stays the default and this
     pin keeps the reuse-layout capability honest (it pays when one
     signature layout feeds repeated dedup passes)."""
-    from sdg_engine.queries import _minhash_sig_df, _t
+    from sdg_engine.queries.text import _minhash_sig_df
+    from sdg_engine.queries._common import _t
 
     sig = _minhash_sig_df(_t(spark, SF, "documents"))
     bands = sig.selectExpr(
@@ -347,10 +348,10 @@ def test_neardup_buckets_below_stop_cap(spark):
     """The stop-bucket rule must be INERT at harness scales (the oracle
     and engine agree trivially when nothing is dropped): largest
     (band, bval) bucket stays far below _NEARDUP_STOP_BUCKET."""
-    from sdg_engine.queries_ext import _NEARDUP_STOP_BUCKET
+    from sdg_engine.queries.ann import _NEARDUP_STOP_BUCKET
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    from sdg_engine.queries_ext import _dot_plane_expr
+    from sdg_engine.queries.ann import _dot_plane_expr
 
     b0 = " + ".join(
         f"(CASE WHEN {_dot_plane_expr(j)} > CAST(0 AS DOUBLE) THEN {1 << j} ELSE 0 END)"
@@ -455,7 +456,8 @@ def test_bm25_small_sides_broadcast(spark):
 
 def test_dp_and_hillshade_are_map_only(spark):
     """Payload operators never shuffle payload bytes: zero Exchange."""
-    from sdg_engine.queries_r5 import image_hillshade, roads_simplify_dp
+    from sdg_engine.queries.image import image_hillshade
+    from sdg_engine.queries.spatial import roads_simplify_dp
 
     for fn in (roads_simplify_dp, image_hillshade):
         assert "Exchange" not in _plan(fn(spark, SF))
@@ -528,7 +530,7 @@ def test_skyline_and_interpolate_are_joinless(spark):
 
 def test_sobel_is_map_only(spark):
     """Sobel edge stats: payload bytes never shuffle — zero Exchange."""
-    from sdg_engine.queries_r5 import image_sobel_edges
+    from sdg_engine.queries.image import image_sobel_edges
 
     assert "Exchange" not in _plan(image_sobel_edges(spark, SF))
 
@@ -536,7 +538,7 @@ def test_sobel_is_map_only(spark):
 def test_flow_d8_is_map_only(spark):
     """D8 flow accumulation: payload bytes never shuffle — zero
     Exchange (the per-image DAG sweep is local under clamp borders)."""
-    from sdg_engine.queries_r5 import image_flow_d8
+    from sdg_engine.queries.image import image_flow_d8
 
     assert "Exchange" not in _plan(image_flow_d8(spark, SF))
 
@@ -544,7 +546,7 @@ def test_flow_d8_is_map_only(spark):
 def test_terrain_trio_is_map_only(spark):
     """Watershed / viewshed / pit-fill: payload bytes never shuffle —
     zero Exchange in all three plans."""
-    from sdg_engine.queries_r5 import (
+    from sdg_engine.queries.image import (
         image_pit_fill,
         image_viewshed,
         image_watershed,
@@ -557,7 +559,7 @@ def test_terrain_trio_is_map_only(spark):
 def test_terrain_r5b_is_map_only(spark):
     """Slope/aspect, Strahler, equalization, morphology: payload bytes
     never shuffle — zero Exchange in all four plans."""
-    from sdg_engine.queries_r5 import (
+    from sdg_engine.queries.image import (
         image_hist_equalize,
         image_morphology,
         image_slope_aspect,
@@ -571,14 +573,14 @@ def test_terrain_r5b_is_map_only(spark):
 
 def test_glcm_is_map_only(spark):
     """GLCM texture stats: payload bytes never shuffle."""
-    from sdg_engine.queries_r5 import image_texture_glcm
+    from sdg_engine.queries.image import image_texture_glcm
 
     assert "Exchange" not in _plan(image_texture_glcm(spark, SF))
 
 
 def test_quadtree_is_map_only(spark):
     """Quadtree compression stats: payload bytes never shuffle."""
-    from sdg_engine.queries_r5 import image_quadtree
+    from sdg_engine.queries.image import image_quadtree
 
     assert "Exchange" not in _plan(image_quadtree(spark, SF))
 
@@ -587,7 +589,7 @@ def test_voronoi_broadcast_bounded_fanout(spark):
     """Voronoi assignment: the seed side must broadcast (the bounded
     16-row cartesian pattern), the argmin must partially aggregate
     map-side, and nothing may sort-merge."""
-    from sdg_engine.queries_r5 import voronoi_assign
+    from sdg_engine.queries.spatial import voronoi_assign
 
     plan = _plan(voronoi_assign(spark, SF))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
@@ -599,7 +601,7 @@ def test_voronoi_broadcast_bounded_fanout(spark):
 def test_groupingsets_single_expand_single_scan(spark):
     """GROUPING SETS must plan as ONE Expand over ONE scan — three cuts
     without three passes."""
-    from sdg_engine.queries_r5 import groupingsets_orders
+    from sdg_engine.queries.relational import groupingsets_orders
 
     plan = _plan(groupingsets_orders(spark, SF))
     assert plan.count("Expand") == 1
@@ -610,7 +612,7 @@ def test_rolling_and_smoothing_single_exchange(spark):
     """EWMA / RANGE rolling window: the only exchanges are the hourly
     agg + the tiny single-partition window — the events scan itself
     exchanges once (map-side partial agg first)."""
-    from sdg_engine.queries_r5 import events_ewma, events_rolling_range
+    from sdg_engine.queries.relational import events_ewma, events_rolling_range
 
     for fn in (events_ewma, events_rolling_range):
         plan = _plan(fn(spark, SF))
@@ -623,7 +625,7 @@ def test_rolling_and_smoothing_single_exchange(spark):
 def test_containment_never_cartesian(spark):
     """Containment dedup joins the bounded inverted index — equi-joins
     only, never a cartesian/BNLJ over documents."""
-    from sdg_engine.queries_r5 import dedup_containment
+    from sdg_engine.queries.text import dedup_containment
 
     plan = _plan(dedup_containment(spark, SF))
     assert "CartesianProduct" not in plan
@@ -634,7 +636,7 @@ def test_supercover_no_cartesian_and_one_agg_key(spark):
     """Supercover rasterization: explode-driven fanout only — no
     nested-loop/cartesian join anywhere, and the pre-rollup exchange
     hashes on the (kind, cell) agg key, never on segment rows."""
-    from sdg_engine.queries_r5 import roads_supercover_cells
+    from sdg_engine.queries.spatial import roads_supercover_cells
 
     plan = _plan(roads_supercover_cells(spark, SF))
     assert "CartesianProduct" not in plan
@@ -647,7 +649,7 @@ def test_ks_test_windows_are_bucketed(spark):
     tiny bucket-offset table; the per-score cumulative window is
     partitioned by bucket (never a single global partition over the
     distinct-score relation)."""
-    from sdg_engine.queries_r5 import events_ks_test
+    from sdg_engine.queries.relational import events_ks_test
 
     plan = _plan(events_ks_test(spark, SF))
     # structural pin: two window operators, one partitioned by _b
@@ -658,7 +660,7 @@ def test_ks_test_windows_are_bucketed(spark):
 def test_bitmap_distinct_is_two_level(spark):
     """Bitmap distinct: word bitmaps fold map-side (partial bit_or
     before the exchange) — the mergeable-summary shape."""
-    from sdg_engine.queries_r5 import bitmap_distinct_users
+    from sdg_engine.queries.relational import bitmap_distinct_users
 
     plan = _plan(bitmap_distinct_users(spark, SF))
     assert "partial_bit_or" in plan
@@ -669,7 +671,7 @@ def test_q17_correlated_subquery_is_decorrelated(spark):
     """The correlated scalar subquery must be rewritten by Catalyst
     into a per-part aggregate + equi-join: no subquery node and no
     nested-loop join may survive into the executed plan."""
-    from sdg_engine.queries_r5 import q17_small_quantity_revenue
+    from sdg_engine.queries.relational import q17_small_quantity_revenue
 
     plan = _plan(q17_small_quantity_revenue(spark, SF))
     assert "Subquery" not in plan
@@ -682,7 +684,7 @@ def test_q21_exists_pair_decorrelates(spark):
     """Q21's EXISTS + NOT EXISTS over the same fact table must plan as
     existence/anti hash joins on l_orderkey — never a per-row subquery
     or a nested loop (the decorrelation stress the query exists for)."""
-    from sdg_engine.queries_tpch import q21_latest_shipper
+    from sdg_engine.queries.relational import q21_latest_shipper
 
     plan = _plan(q21_latest_shipper(spark, SF))
     assert "BroadcastNestedLoop" not in plan
@@ -695,7 +697,7 @@ def test_q19_disjunctive_brackets_keep_hash_join(spark):
     """Q19's OR-of-brackets predicate must stay a residual on the
     p_partkey hash join with part broadcast — Catalyst must not fall
     back to a nested loop over the disjunction."""
-    from sdg_engine.queries_tpch import q19_bracketed_revenue
+    from sdg_engine.queries.relational import q19_bracketed_revenue
 
     plan = _plan(q19_bracketed_revenue(spark, SF))
     assert "BroadcastHashJoin" in plan
@@ -707,7 +709,7 @@ def test_q18_having_aggregates_before_joins(spark):
     """Q18 groups the fact table FIRST (orderkey agg + HAVING) so only
     the tiny survivor set reaches the orders/customer joins — the scan
     side must show exactly one fact aggregation below the joins."""
-    from sdg_engine.queries_tpch import q18_large_volume_orders
+    from sdg_engine.queries.relational import q18_large_volume_orders
 
     plan = _plan(q18_large_volume_orders(spark, SF))
     assert "CartesianProduct" not in plan
@@ -728,11 +730,11 @@ def test_recursive_cte_runs_natively(spark):
     builder now MATERIALIZES the walk internally (codegen-off scope —
     UnionLoop recompiles per level), so the pin checks the walk
     statement's own plan; the builder still runs that exact SQL."""
-    from sdg_engine.queries import _t
-    from sdg_engine.queries_r5b import (
+    from sdg_engine.queries._common import _t
+    from sdg_engine.queries.relational import (
         RECURSIVE_LINKED_SQL,
-        RECURSIVE_WALK_SQL,
         recursive_order_chain,
+        RECURSIVE_WALK_SQL,
     )
 
     _t(spark, SF, "orders").createOrReplaceTempView("_rchain_orders")
@@ -749,7 +751,7 @@ def test_q2_correlated_min_decorrelates(spark):
     """Q2's correlated scalar MIN over the derived partsupp must plan
     as a per-part aggregate + equi-join — no per-row subquery, no
     nested loop; region/nation/supplier stay broadcast dims."""
-    from sdg_engine.queries_tpch import q2_min_cost_supplier
+    from sdg_engine.queries.relational import q2_min_cost_supplier
 
     plan = _plan(q2_min_cost_supplier(spark, SF))
     assert "BroadcastNestedLoop" not in plan
@@ -760,7 +762,7 @@ def test_q2_correlated_min_decorrelates(spark):
 def test_q11_global_threshold_is_single_broadcast_row(spark):
     """Q11's grand-total threshold must fold to one row joined back by
     broadcast — never a nested loop over the per-part aggregate."""
-    from sdg_engine.queries_tpch import q11_important_stock
+    from sdg_engine.queries.relational import q11_important_stock
 
     plan = _plan(q11_important_stock(spark, SF))
     assert "CartesianProduct" not in plan
@@ -770,7 +772,7 @@ def test_q11_global_threshold_is_single_broadcast_row(spark):
 def test_terrain_r5c_is_map_only(spark):
     """TPI/TRI and flow length: payload bytes never shuffle — zero
     Exchange in both plans."""
-    from sdg_engine.queries_r5c import image_flow_length, image_tpi_tri
+    from sdg_engine.queries.image import image_flow_length, image_tpi_tri
 
     for fn in (image_tpi_tri, image_flow_length):
         assert "Exchange" not in _plan(fn(spark, SF)), fn.__name__
@@ -780,7 +782,7 @@ def test_lateral_topk_decorrelates_to_window_group_limit(spark):
     """The LATERAL ORDER BY/LIMIT subquery must be decorrelated into
     WindowGroupLimit partial top-k + a broadcast equi-join — never a
     per-row subquery or a nested loop."""
-    from sdg_engine.queries_r5d import lateral_topk_orders
+    from sdg_engine.queries.relational import lateral_topk_orders
 
     plan = _plan(lateral_topk_orders(spark, SF))
     assert "BroadcastNestedLoop" not in plan
@@ -793,7 +795,8 @@ def test_snap_and_edt_stay_map_shaped(spark):
     """points_snap_roads reduces candidates with a map-side partial
     min(struct) agg (no window over raw candidate pairs); image_edt is
     map-only — payload bytes never shuffle."""
-    from sdg_engine.queries_r5d import image_edt, points_snap_roads
+    from sdg_engine.queries.image import image_edt
+    from sdg_engine.queries.spatial import points_snap_roads
 
     plan = _plan(points_snap_roads(spark, SF))
     assert "partial_min" in plan or "partial min" in plan.lower()
@@ -805,7 +808,7 @@ def test_snap_and_edt_stay_map_shaped(spark):
 def test_wave26plus_kernels_are_map_only(spark):
     """Harris / skeleton / LBP / Canny-NMS / dither / DoG: payload
     bytes never shuffle — zero Exchange in all six plans."""
-    from sdg_engine.queries_r5f import (
+    from sdg_engine.queries.image import (
         image_canny_nms,
         image_dither_fs,
         image_dog_blobs,
@@ -823,7 +826,7 @@ def test_wave26plus_kernels_are_map_only(spark):
 def test_simhash_band_join_no_cartesian(spark):
     """The banded near-dup join must plan as a band equi-join —
     CartesianProduct / BroadcastNestedLoopJoin are forbidden."""
-    from sdg_engine.queries_r5f import simhash_neardup_pairs
+    from sdg_engine.queries.text import simhash_neardup_pairs
 
     p = _plan(simhash_neardup_pairs(spark, SF))
     assert "CartesianProduct" not in p
@@ -833,7 +836,7 @@ def test_simhash_band_join_no_cartesian(spark):
 def test_tfidf_topk_probe_is_broadcast(spark):
     """The query-vector probe must broadcast (it is query-length
     sized); no cartesian anywhere."""
-    from sdg_engine.queries_r5f import tfidf_cosine_topk
+    from sdg_engine.queries.text import tfidf_cosine_topk
 
     p = _plan(tfidf_cosine_topk(spark, SF))
     assert "BroadcastHashJoin" in p
@@ -843,7 +846,7 @@ def test_tfidf_topk_probe_is_broadcast(spark):
 def test_wave37_kernels_are_map_only(spark):
     """Haar DWT + seam carving: payload bytes never shuffle — zero
     Exchange in both plans."""
-    from sdg_engine.queries_r5g import image_haar_energy, image_seam_carve
+    from sdg_engine.queries.image import image_haar_energy, image_seam_carve
 
     for fn in (image_haar_energy, image_seam_carve):
         assert "Exchange" not in _plan(fn(spark, SF)), fn.__name__
@@ -852,7 +855,8 @@ def test_wave37_kernels_are_map_only(spark):
 def test_wave44_kernels_are_map_only(spark):
     """Template match + VW simplify: payload/geometry never shuffles —
     zero Exchange in both plans."""
-    from sdg_engine.queries_r5g import image_template_match, roads_simplify_vw
+    from sdg_engine.queries.image import image_template_match
+    from sdg_engine.queries.spatial import roads_simplify_vw
 
     for fn in (image_template_match, roads_simplify_vw):
         assert "Exchange" not in _plan(fn(spark, SF)), fn.__name__
@@ -860,6 +864,6 @@ def test_wave44_kernels_are_map_only(spark):
 
 def test_wave45_palette_is_map_only(spark):
     """Median-cut palette: payload bytes never shuffle."""
-    from sdg_engine.queries_r5g import image_palette_mediancut
+    from sdg_engine.queries.image import image_palette_mediancut
 
     assert "Exchange" not in _plan(image_palette_mediancut(spark, SF))

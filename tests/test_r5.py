@@ -37,7 +37,7 @@ def test_asof_picks_strictly_prior_view(spark, sf_dir):
 
     with tempfile.TemporaryDirectory() as d:
         pdf.to_parquet(os.path.join(d, "events.parquet"))
-        from sdg_engine.queries_r5 import events_asof_join
+        from sdg_engine.queries.relational import events_asof_join
 
         got = {
             r["event_id"]: (r["view_event_id"], r["gap_us"])
@@ -53,7 +53,7 @@ def test_asof_picks_strictly_prior_view(spark, sf_dir):
 
 
 def test_funnel_stages_partition_users(spark, sf_dir):
-    from sdg_engine.queries_r5 import events_funnel
+    from sdg_engine.queries.relational import events_funnel
 
     rows = events_funnel(spark, sf_dir).collect()
     n_users = spark.read.parquet(f"{sf_dir}/events.parquet").select(
@@ -67,7 +67,7 @@ def test_funnel_stages_partition_users(spark, sf_dir):
 def test_hll_estimate_within_error_band(spark, sf_dir):
     """HLL with m=256 has relative error sigma ~= 1.04/sqrt(256) = 6.5%;
     assert the deterministic estimate lands within 3 sigma (~20%)."""
-    from sdg_engine.queries_r5 import hll_distinct
+    from sdg_engine.queries.relational import hll_distinct
 
     row = hll_distinct(spark, sf_dir).collect()[0]
     assert row["exact_distinct"] > 640  # outside linear-counting regime
@@ -77,7 +77,7 @@ def test_hll_estimate_within_error_band(spark, sf_dir):
 def test_pagerank_known_graph(spark):
     """3-node path graph a-b-c (undirected): symmetric ends, center
     highest; mass conserved up to per-node FLOOR losses."""
-    from sdg_engine.queries_r5 import _PR_UNIT, pagerank
+    from sdg_engine.queries.graph import _PR_UNIT, pagerank
 
     edges = spark.createDataFrame(
         [Row(src=s, dst=d) for s, d in [(1, 2), (2, 1), (2, 3), (3, 2)]]
@@ -96,7 +96,7 @@ def test_pagerank_known_graph(spark):
 
 
 def test_pagerank_roads_mass_conserved(spark, sf_dir):
-    from sdg_engine.queries_r5 import _PR_UNIT, pagerank_roads
+    from sdg_engine.queries.graph import _PR_UNIT, pagerank_roads
 
     rows = pagerank_roads(spark, sf_dir).collect()
     total = sum(r["pr"] for r in rows)
@@ -108,7 +108,7 @@ def test_pagerank_roads_mass_conserved(spark, sf_dir):
 def test_bm25_rank1_contains_rare_term(spark, sf_dir):
     """The rare query term ('dup', df~25 of 500) dominates idf; the top
     doc must actually contain it, and ranks must be 1..k dense."""
-    from sdg_engine.queries_r5 import bm25_top_docs
+    from sdg_engine.queries.text import bm25_top_docs
 
     rows = sorted(bm25_top_docs(spark, sf_dir).collect(), key=lambda r: r["rnk"])
     assert [r["rnk"] for r in rows] == list(range(1, len(rows) + 1))
@@ -294,7 +294,7 @@ def test_pit_fill_crater_and_invariants():
 
 
 def test_zonal_stats_covers_all_images(spark, sf_dir):
-    from sdg_engine.queries_r5 import image_zonal_stats
+    from sdg_engine.queries.image import image_zonal_stats
 
     rows = image_zonal_stats(spark, sf_dir).collect()
     assert len(rows) == 4  # the 2x2 country tiling
@@ -308,7 +308,7 @@ def test_weighted_sample_prefers_heavy_docs(spark, sf_dir):
     """Priority sampling draws ~proportional to weight: the sampled
     docs' mean n_chars must exceed the corpus mean (and the draw is
     deterministic — two runs identical)."""
-    from sdg_engine.queries_r5 import sample_weighted
+    from sdg_engine.queries.relational import sample_weighted
 
     a = [(r["doc_id"], r["priority"]) for r in sample_weighted(spark, sf_dir).collect()]
     b = [(r["doc_id"], r["priority"]) for r in sample_weighted(spark, sf_dir).collect()]
@@ -328,8 +328,11 @@ def test_simplified_pyramid_coarser_zoom_fewer_vertices(spark, sf_dir):
     import os
 
     from sdg_engine import mvt as MVT
-    from sdg_engine.queries_r5 import PYR_SIMPLIFY_EPS, _simplified_segments
-    from sdg_engine.queries_ext import _fixture_images
+    from sdg_engine.queries.spatial import (
+        _simplified_segments,
+        PYR_SIMPLIFY_EPS,
+    )
+    from sdg_engine.queries._common import _fixture_images
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     counts = {
@@ -354,7 +357,7 @@ def test_simplified_pyramid_coarser_zoom_fewer_vertices(spark, sf_dir):
 def test_bfs_levels_form_partition(spark, sf_dir):
     """Hop levels start at 0 with exactly the seed, are contiguous, and
     label each reached node once (counts sum to distinct nodes)."""
-    from sdg_engine.queries_r5 import road_graph_bfs
+    from sdg_engine.queries.graph import road_graph_bfs
 
     rows = sorted(road_graph_bfs(spark, sf_dir).collect(), key=lambda r: r["hops"])
     hops = [r["hops"] for r in rows]
@@ -435,7 +438,7 @@ def test_region_labeling_matches_flood_fill():
 def test_retention_triangle_shape(spark, sf_dir):
     """Offsets are non-negative; each cohort's offset-0 row contains
     the whole cohort (every user is active in their first week)."""
-    from sdg_engine.queries_r5 import events_retention
+    from sdg_engine.queries.relational import events_retention
 
     rows = events_retention(spark, sf_dir).collect()
     assert all(r["week_offset"] >= 0 for r in rows)
@@ -453,7 +456,7 @@ def test_retention_triangle_shape(spark, sf_dir):
 def test_pmi_top_bigram_is_high_lift(spark, sf_dir):
     """The top bigram's observed/expected ratio must exceed 1x (lift
     over independence) and ranks are dense."""
-    from sdg_engine.queries_r5 import pmi_bigrams
+    from sdg_engine.queries.text import pmi_bigrams
 
     rows = sorted(pmi_bigrams(spark, sf_dir).collect(), key=lambda r: r["rnk"])
     assert [r["rnk"] for r in rows] == list(range(1, len(rows) + 1))
@@ -464,7 +467,7 @@ def test_pmi_top_bigram_is_high_lift(spark, sf_dir):
 def test_outlier_zscores_bounded(spark, sf_dir):
     """Population z-scores: by Chebyshev at most n/9 events can sit
     beyond 3 sigma; the extreme event must be a real row."""
-    from sdg_engine.queries_r5 import events_outliers
+    from sdg_engine.queries.relational import events_outliers
 
     rows = events_outliers(spark, sf_dir).collect()
     ids = {
@@ -514,8 +517,8 @@ def test_compaction_preserves_history(spark, sf_dir, tmp_path):
 def test_buffer_cells_superset_of_hit_cells(spark, sf_dir):
     """Every cell CONTAINING a segment endpoint of a kind must be in
     that kind's 20 km buffer (distance 0 < d); buffers are nonempty."""
-    from sdg_engine.queries_r5 import roads_buffer_cells
-    from sdg_engine.queries_ext import _fixture_images
+    from sdg_engine.queries.spatial import roads_buffer_cells
+    from sdg_engine.queries._common import _fixture_images
     from sdg_engine.ops.spatial import road_segments
 
     rows = roads_buffer_cells(spark, sf_dir).collect()
@@ -527,7 +530,7 @@ def test_buffer_cells_superset_of_hit_cells(spark, sf_dir):
 def test_streaming_left_join_emits_nulls(spark, sf_dir):
     """The outer-ness is load-bearing: unmatched clicks appear with
     NULL view (counted), matched never exceed total."""
-    from sdg_engine.queries_r5 import streaming_left_join
+    from sdg_engine.queries.streaming import streaming_left_join
 
     rows = streaming_left_join(spark, sf_dir).collect()
     assert rows and any(r["n_unmatched"] > 0 for r in rows)
@@ -540,7 +543,7 @@ def test_crossing_test_truth_table():
     endpoint (touch), collinear overlap, and disjoint cases."""
     from pyspark.sql import functions as F  # noqa: F401
 
-    from sdg_engine.queries_r5 import _X_TEST
+    from sdg_engine.queries.spatial import _X_TEST
     import duckdb
 
     def crosses(a, b):
@@ -559,7 +562,7 @@ def test_crossing_test_truth_table():
 
 
 def test_road_intersections_symmetric_kinds(spark, sf_dir):
-    from sdg_engine.queries_r5 import road_intersections
+    from sdg_engine.queries.spatial import road_intersections
 
     rows = road_intersections(spark, sf_dir).collect()
     assert rows and all(r["kind_lo"] <= r["kind_hi"] for r in rows)
@@ -581,7 +584,7 @@ def test_stft_centroid_tracks_tone(spark):
 
 
 def test_snapshot_diff_partitions(spark, sf_dir):
-    from sdg_engine.queries_r5 import snapshot_diff
+    from sdg_engine.queries.lakehouse import snapshot_diff
 
     rows = {r["change"]: r["n_rows"] for r in snapshot_diff(spark, sf_dir).collect()}
     assert rows == {"added": 100, "removed": 100, "unchanged": 200}
@@ -590,7 +593,7 @@ def test_snapshot_diff_partitions(spark, sf_dir):
 def test_idw_interpolates_within_value_range(spark, sf_dir):
     """IDW is a convex combination: every cell's value lies inside the
     global value range, and dense coverage fills the whole grid."""
-    from sdg_engine.queries_r5 import grid_idw
+    from sdg_engine.queries.spatial import grid_idw
 
     rows = grid_idw(spark, sf_dir).collect()
     assert len(rows) == 32 * 32  # 60 km radius covers every level-5 cell
@@ -602,7 +605,7 @@ def test_idw_interpolates_within_value_range(spark, sf_dir):
 def test_fuzzy_pairs_are_real_edits(spark, sf_dir):
     """Distances are in 1..3 and symmetric-count sanity: every block
     with pairs at distance d has n_pairs > 0."""
-    from sdg_engine.queries_r5 import fuzzy_name_pairs
+    from sdg_engine.queries.text import fuzzy_name_pairs
 
     rows = fuzzy_name_pairs(spark, sf_dir).collect()
     assert rows and all(1 <= r["d"] <= 3 and r["n_pairs"] > 0 for r in rows)
@@ -611,7 +614,7 @@ def test_fuzzy_pairs_are_real_edits(spark, sf_dir):
 def test_transitions_conserve_rows(spark, sf_dir):
     """Sum of transition counts = total events - one per user (the
     first event of every user has no predecessor)."""
-    from sdg_engine.queries_r5 import event_transitions
+    from sdg_engine.queries.relational import event_transitions
 
     rows = event_transitions(spark, sf_dir).collect()
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -622,7 +625,8 @@ def test_transitions_conserve_rows(spark, sf_dir):
 def test_gini_and_morans_bounds(spark, sf_dir):
     """Gini in [0, 1); Moran's I in [-1, 1] and ~0 for hash-scattered
     points (no spatial structure in the fixture)."""
-    from sdg_engine.queries_r5 import cells_morans_i, customer_gini
+    from sdg_engine.queries.spatial import cells_morans_i
+    from sdg_engine.queries.relational import customer_gini
 
     g = customer_gini(spark, sf_dir).collect()[0]
     assert 0 <= g["gini_bp"] < 10000
@@ -763,7 +767,7 @@ def test_sinuosity_straight_vs_bent():
     import math
 
     from pyspark.sql import functions as F  # noqa: F401
-    from sdg_engine.queries_r5 import roads_sinuosity  # noqa: F401
+    from sdg_engine.queries.spatial import roads_sinuosity  # noqa: F401
 
     # kernel-free check: the metric is defined by the SPEC — verify
     # the closed form the query computes on two hand polylines
@@ -833,7 +837,7 @@ def test_rollback_is_metadata_only_and_auditable(spark, tmp_path):
 def test_auc_known_values(spark, sf_dir):
     """AUC sanity on the harness data: micros in [0, 1e6]; U2 ties out
     with n_pos/n_neg bounds (0 <= u2 <= 2*n_pos*n_neg)."""
-    from sdg_engine.queries_r5 import events_auc
+    from sdg_engine.queries.relational import events_auc
 
     r = events_auc(spark, sf_dir).collect()[0]
     assert 0 <= r.auc_micros <= 1_000_000
@@ -845,7 +849,7 @@ def test_zorder_cluster_prunes_box(spark, tmp_path):
     """Clustered rewrite: one file per occupied z-bucket with tight
     2-D zones; the quadrant box opens 2/8 files vs 4/4 on the
     row-order layout, and pruned content equals the direct filter."""
-    from sdg_engine.queries_r5 import _ZBUCKET, _ZQX, _ZQY
+    from sdg_engine.queries.lakehouse import _ZBUCKET, _ZQX, _ZQY
     from sdg_engine.storage import (cluster_snapshot,
                                     read_snapshot_pruned_box,
                                     write_snapshot)
@@ -876,7 +880,7 @@ def test_kcore_converged_and_valid(spark, sf_dir):
     (one extra windowed-filter round changes nothing), and the core
     is internally consistent: 2·edges >= 2·nodes (every core node
     keeps degree >= 2)."""
-    from sdg_engine.queries_r5 import _KCORE_K, kcore_roads
+    from sdg_engine.queries.graph import _KCORE_K, kcore_roads
 
     r = kcore_roads(spark, sf_dir).collect()[0]
     assert r["n_core_nodes"] >= 0
@@ -888,7 +892,7 @@ def test_kcore_converged_and_valid(spark, sf_dir):
 def test_kde_top10_ranked(spark, sf_dir):
     """Top-10 rows, ranks 1..10, non-increasing density, all positive
     (kernel weights are positive integers)."""
-    from sdg_engine.queries_r5 import cells_kde
+    from sdg_engine.queries.spatial import cells_kde
 
     rows = sorted(cells_kde(spark, sf_dir).collect(),
                   key=lambda r: r["rnk"])
@@ -900,7 +904,7 @@ def test_kde_top10_ranked(spark, sf_dir):
 def test_udtf_word_runs_sequential_rle(spark, sf_dir):
     """The UDTF's RLE matches a driver-side python twin on the raw
     text: total repeated-word mass and the longest run agree."""
-    from sdg_engine.queries_r5 import udtf_word_runs
+    from sdg_engine.queries.text import udtf_word_runs
 
     rows = udtf_word_runs(spark, sf_dir).collect()
     got = {r["word"]: (r["n_runs"], r["max_run"], r["sum_len"])
@@ -1119,7 +1123,7 @@ def test_supercover_spec_contains_all_sampled_cells():
 
     import numpy as np
 
-    from sdg_engine.queries_r5 import _SC_LEVEL
+    from sdg_engine.queries.spatial import _SC_LEVEL
 
     n = 1 << _SC_LEVEL
     cell = 10.0 / n

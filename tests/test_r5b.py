@@ -1,4 +1,4 @@
-"""INDEPENDENT invariant gates for the wave-5 operators (queries_r5b).
+"""INDEPENDENT invariant gates for the wave-5 operators.
 
 The DuckDB oracles for these queries share fragments or recurrences
 with the engine; these tests check each result against a SECOND,
@@ -28,7 +28,7 @@ def test_pca_matches_dense_integer_recurrence(spark):
     exact-eigenvector equality gate is NOT appropriate here: the
     fixture embeddings are near-isotropic — eigengap ratio ~0.93 — so
     8 rounds genuinely shouldn't isolate the top eigenvector.)"""
-    from sdg_engine.queries_r5b import (
+    from sdg_engine.queries.ann import (
         _PCA_DAMP,
         _PCA_DIM,
         _PCA_ROUNDS,
@@ -61,9 +61,9 @@ def test_pca_matches_dense_integer_recurrence(spark):
 def test_hits_matches_dense_matvec(spark):
     """Top hubs/authorities must match a dense numpy run of the same
     unnormalized recurrence (independent: adjacency matrix powers)."""
-    from sdg_engine.queries_r5b import _HITS_ITERS, hits_roads
+    from sdg_engine.queries.graph import _HITS_ITERS, hits_roads
     from sdg_engine.harness import segments_df
-    from sdg_engine.queries_r5 import _PR_NODE_A, _PR_NODE_B
+    from sdg_engine.queries.graph import _PR_NODE_A, _PR_NODE_B
 
     out = _pdf(hits_roads(spark, SF))
     segs = _pdf(
@@ -94,7 +94,7 @@ def test_zipf_slope_closed_form(spark):
     from fractions import Fraction
     from math import floor
 
-    from sdg_engine.queries_r5b import zipf_word_slope
+    from sdg_engine.queries.text import zipf_word_slope
 
     row = _pdf(zipf_word_slope(spark, SF)).iloc[0]
     n, sx, sy, sxy, sxx = (int(row[c]) for c in ("n_words", "sx", "sy", "sxy", "sxx"))
@@ -109,7 +109,7 @@ def test_ams_estimate_within_band(spark):
     sigma <= F2 * sqrt(2/16); assert the estimate lands within 3
     sigma (md5 signs are fixed, so this is a determinism-backed check
     like the HLL band gate)."""
-    from sdg_engine.queries_r5b import ams_f2_sketch
+    from sdg_engine.queries.relational import ams_f2_sketch
 
     row = _pdf(ams_f2_sketch(spark, SF)).iloc[0]
     f2, est = int(row["f2_exact"]), int(row["f2_ams"])
@@ -120,7 +120,7 @@ def test_ams_estimate_within_band(spark):
 def test_theil_sen_matches_bruteforce(spark):
     """Median slope must equal a brute-force numpy recompute (all
     pairwise slopes, numpy lower median) over the same hourly series."""
-    from sdg_engine.queries_r5b import events_theil_sen
+    from sdg_engine.queries.relational import events_theil_sen
 
     row = _pdf(events_theil_sen(spark, SF)).iloc[0]
     ev = _pdf(spark.read.parquet(f"{SF}/events.parquet").selectExpr(
@@ -138,7 +138,7 @@ def test_theil_sen_matches_bruteforce(spark):
 
 
 def test_mad_matches_bruteforce(spark):
-    from sdg_engine.queries_r5b import events_mad
+    from sdg_engine.queries.relational import events_mad
 
     row = _pdf(events_mad(spark, SF)).iloc[0]
     ev = _pdf(spark.read.parquet(f"{SF}/events.parquet").selectExpr(
@@ -155,7 +155,7 @@ def test_scd2_conserves_events_and_chains(spark):
     """Interval ledger invariants: open intervals == users (every user
     has exactly one current state); interval count == total state
     changes + users; closed durations are non-negative."""
-    from sdg_engine.queries_r5b import scd2_user_state
+    from sdg_engine.queries.relational import scd2_user_state
 
     out = _pdf(scd2_user_state(spark, SF))
     ev = _pdf(spark.read.parquet(f"{SF}/events.parquet").selectExpr(
@@ -175,7 +175,7 @@ def test_recursive_chain_anchors_and_conservation(spark):
     """Depth-1 rows == customers with >= 1 order; chain counts are
     non-increasing with depth; run-cents at depth 1 equal the sum of
     each customer's first-order cents (pandas recompute)."""
-    from sdg_engine.queries_r5b import recursive_order_chain
+    from sdg_engine.queries.relational import recursive_order_chain
 
     out = _pdf(recursive_order_chain(spark, SF)).sort_values("depth")
     orders = _pdf(spark.read.parquet(f"{SF}/orders.parquet").selectExpr(
@@ -190,7 +190,7 @@ def test_recursive_chain_anchors_and_conservation(spark):
 
 
 def test_unpivot_value_conservation(spark):
-    from sdg_engine.queries_r5b import unpivot_order_metrics
+    from sdg_engine.queries.relational import unpivot_order_metrics
 
     out = _pdf(unpivot_order_metrics(spark, SF))
     piv = out.pivot(index="o_orderstatus", columns="metric", values="val")
@@ -203,7 +203,7 @@ def test_unpivot_value_conservation(spark):
 
 
 def test_collation_counts_consistent(spark):
-    from sdg_engine.queries_r5b import collation_token_dedup
+    from sdg_engine.queries.text import collation_token_dedup
 
     row = _pdf(collation_token_dedup(spark, SF)).iloc[0]
     assert 0 < row.n_ci <= row.n_cs <= row.n_tokens

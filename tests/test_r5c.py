@@ -1,4 +1,4 @@
-"""INDEPENDENT invariant gates for the wave-6 operators (queries_r5c).
+"""INDEPENDENT invariant gates for the wave-6 operators.
 
 The DuckDB oracles for these queries share expression fragments with
 the engine; these tests recompute each result through a SECOND path
@@ -30,7 +30,7 @@ def _hourly(spark, col_filter=None):
 
 
 def test_spearman_matches_pandas_rank(spark):
-    from sdg_engine.queries_r5c import events_spearman
+    from sdg_engine.queries.relational import events_spearman
 
     out = _pdf(events_spearman(spark, SF)).iloc[0]
     ev = _hourly(spark)
@@ -53,7 +53,7 @@ def test_spearman_matches_pandas_rank(spark):
 
 
 def test_runs_test_matches_bruteforce(spark):
-    from sdg_engine.queries_r5c import events_runs_test
+    from sdg_engine.queries.relational import events_runs_test
 
     out = _pdf(events_runs_test(spark, SF)).iloc[0]
     ev = _hourly(spark)
@@ -76,7 +76,7 @@ def test_runs_test_matches_bruteforce(spark):
 
 
 def test_kruskal_matches_pandas_rank(spark):
-    from sdg_engine.queries_r5c import events_kruskal
+    from sdg_engine.queries.relational import events_kruskal
 
     out = _pdf(events_kruskal(spark, SF)).iloc[0]
     ev = _hourly(spark)
@@ -100,7 +100,7 @@ def test_kruskal_matches_pandas_rank(spark):
 
 
 def test_readability_matches_python_re(spark):
-    from sdg_engine.queries_r5c import doc_readability
+    from sdg_engine.queries.text import doc_readability
 
     out = _pdf(doc_readability(spark, SF)).set_index("lang").sort_index()
     docs = _pdf(spark.read.parquet(f"{SF}/documents.parquet"))
@@ -127,7 +127,7 @@ def test_readability_matches_python_re(spark):
 
 
 def test_repetition_matches_counter(spark):
-    from sdg_engine.queries_r5c import doc_repetition
+    from sdg_engine.queries.text import doc_repetition
 
     out = _pdf(doc_repetition(spark, SF)).set_index("lang").sort_index()
     docs = _pdf(spark.read.parquet(f"{SF}/documents.parquet"))
@@ -154,7 +154,7 @@ def test_repetition_matches_counter(spark):
 
 def test_centroids_inside_ring_bbox(spark):
     from sdg_engine.harness import ring_edge_rows
-    from sdg_engine.queries_r5c import country_centroids
+    from sdg_engine.queries.spatial import country_centroids
 
     out = _pdf(country_centroids(spark, SF))
     edges = {}
@@ -179,7 +179,7 @@ def test_centroids_inside_ring_bbox(spark):
 
 def test_hausdorff_matches_numpy_bruteforce(spark):
     from sdg_engine.jobs.rai import fixture_dir
-    from sdg_engine.queries_r5c import roads_hausdorff
+    from sdg_engine.queries.spatial import roads_hausdorff
 
     out = _pdf(roads_hausdorff(spark, SF))
     roads = pd.read_parquet(f"{fixture_dir(0.01)}/roads.parquet")
@@ -267,7 +267,7 @@ def test_betweenness_matches_python_brandes(spark):
     from collections import defaultdict, deque
 
     from sdg_engine.jobs.rai import fixture_dir
-    from sdg_engine.queries_r5c import _BC_HOPS, _BC_SEEDS, betweenness_roads
+    from sdg_engine.queries.graph import _BC_HOPS, _BC_SEEDS, betweenness_roads
 
     out = _pdf(betweenness_roads(spark, SF))
     roads = pd.read_parquet(f"{fixture_dir(0.01)}/roads.parquet")
@@ -328,7 +328,7 @@ def test_dtw_matches_numpy_band_dp(spark):
     rolling rows over a dense cost matrix with the band masked to inf,
     vs the engine's per-cell python loops) on series recomputed with
     pandas — exact BIGINT equality."""
-    from sdg_engine.queries_r5c import _DTW_BAND, _DTW_DAYS, events_dtw
+    from sdg_engine.queries.relational import _DTW_BAND, _DTW_DAYS, events_dtw
 
     out = _pdf(events_dtw(spark, SF)).set_index("event_type").sort_index()
     ev = _hourly(spark)
@@ -373,7 +373,7 @@ def test_streaming_streaks_match_pandas_runs(spark):
     """The stateful streak fold across 4 time-ordered micro-batches
     must equal a single-pass pandas run-length recompute (earliest-max
     tie-break)."""
-    from sdg_engine.queries_r5c import streaming_user_streaks
+    from sdg_engine.queries.streaming import streaming_user_streaks
 
     out = _pdf(streaming_user_streaks(spark, SF)).set_index("user_id")
     ev = _pdf(spark.read.parquet(f"{SF}/events.parquet")).sort_values(
@@ -411,8 +411,11 @@ def test_box_downscale_kernel_analytic():
 def test_forecast_ols_matches_pandas(spark):
     """Rolling-OLS backtest must match a pandas recompute (rolling
     windows + the same closed-form double chain)."""
-    from sdg_engine.queries_r5c import (
-        _FC_DET, _FC_K, _FC_SI, events_forecast_ols,
+    from sdg_engine.queries.relational import (
+        _FC_DET,
+        _FC_K,
+        _FC_SI,
+        events_forecast_ols,
     )
 
     out = _pdf(events_forecast_ols(spark, SF)).iloc[0]
@@ -442,7 +445,7 @@ def test_forecast_ols_matches_pandas(spark):
 def test_rank_functions_invariants(spark):
     """NTILE buckets are balanced within 1; counts conserve; cume_dist
     sums match the closed form sum_{r=1..n} r/n in micros."""
-    from sdg_engine.queries_r5c import orders_rank_functions
+    from sdg_engine.queries.relational import orders_rank_functions
 
     out = _pdf(orders_rank_functions(spark, SF))
     orders = _pdf(spark.read.parquet(f"{SF}/orders.parquet"))
@@ -459,7 +462,7 @@ def test_ripley_k_matches_numpy_bruteforce(spark):
     """Cell-blocked pair counts must equal an O(n^2) numpy brute force
     over the same quantized bounded point set (r_max == cell size, so
     blocking provably loses nothing)."""
-    from sdg_engine.queries_r5c import _RK_BOUND, _RK_RADII, cells_ripley_k
+    from sdg_engine.queries.spatial import _RK_BOUND, _RK_RADII, cells_ripley_k
 
     out = _pdf(cells_ripley_k(spark, SF)).set_index("r_micro")
     orders = _pdf(spark.read.parquet(f"{SF}/orders.parquet"))
@@ -492,7 +495,7 @@ def test_bootstrap_ci_matches_hashlib(spark):
     md5-derived indices (determinism across engines AND languages)."""
     import hashlib
 
-    from sdg_engine.queries_r5c import _BS_B, events_bootstrap_ci
+    from sdg_engine.queries.relational import _BS_B, events_bootstrap_ci
 
     out = _pdf(events_bootstrap_ci(spark, SF)).iloc[0]
     ev = _hourly(spark)
@@ -516,7 +519,7 @@ def test_bootstrap_ci_matches_hashlib(spark):
 def test_davies_bouldin_matches_numpy(spark):
     """Per-label scatter and worst-ratio columns must match a dense
     numpy recompute of the same integer chains."""
-    from sdg_engine.queries_r5c import embeddings_davies_bouldin
+    from sdg_engine.queries.ann import embeddings_davies_bouldin
 
     out = _pdf(embeddings_davies_bouldin(spark, SF)).set_index("label")
     emb = _pdf(spark.read.parquet(f"{SF}/embeddings.parquet"))
@@ -570,7 +573,7 @@ def test_resample_points_matches_numpy(spark):
     from collections import defaultdict
 
     from sdg_engine.jobs.rai import fixture_dir
-    from sdg_engine.queries_r5c import roads_resample_points
+    from sdg_engine.queries.spatial import roads_resample_points
 
     out = _pdf(roads_resample_points(spark, SF)).set_index(["kind", "k"])
     roads = pd.read_parquet(f"{fixture_dir(0.01)}/roads.parquet")
@@ -608,7 +611,7 @@ def test_resample_points_matches_numpy(spark):
 
 
 def test_abc_analysis_matches_pandas(spark):
-    from sdg_engine.queries_r5c import orders_abc_analysis
+    from sdg_engine.queries.relational import orders_abc_analysis
 
     out = _pdf(orders_abc_analysis(spark, SF)).set_index("abc").sort_index()
     li = _pdf(spark.read.parquet(f"{SF}/lineitem.parquet"))
@@ -635,7 +638,10 @@ def test_markov_stationary_matches_python(spark):
     mass is conserved up to the per-term FLOOR loss."""
     from collections import defaultdict
 
-    from sdg_engine.queries_r5c import _MK_ROUNDS, events_markov_stationary
+    from sdg_engine.queries.relational import (
+        _MK_ROUNDS,
+        events_markov_stationary,
+    )
 
     out = _pdf(events_markov_stationary(spark, SF)).set_index("event_type")
     ev = _pdf(spark.read.parquet(f"{SF}/events.parquet")).sort_values(
@@ -666,7 +672,7 @@ def test_frechet_matches_python_recursion(spark):
     import sys
 
     from sdg_engine.jobs.rai import fixture_dir
-    from sdg_engine.queries_r5c import roads_frechet, roads_hausdorff
+    from sdg_engine.queries.spatial import roads_frechet, roads_hausdorff
 
     out = _pdf(roads_frechet(spark, SF))
     haus = _pdf(roads_hausdorff(spark, SF)).set_index(["ra", "rb"])

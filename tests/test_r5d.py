@@ -1,4 +1,4 @@
-"""INDEPENDENT invariant gates for the wave-9 operators (queries_r5d).
+"""INDEPENDENT invariant gates for the wave-9 operators.
 
 The DuckDB oracles for these queries share expression fragments with
 the engine; these tests recompute each result through a SECOND path
@@ -24,7 +24,7 @@ def _pdf(df) -> pd.DataFrame:
 
 
 def test_concurrency_matches_sweep_simulation(spark):
-    from sdg_engine.queries_r5d import events_concurrency
+    from sdg_engine.queries.relational import events_concurrency
 
     out = _pdf(events_concurrency(spark, SF)).set_index("day")
     ev = _pdf(spark.read.parquet(f"{SF}/events.parquet"))
@@ -65,7 +65,7 @@ def test_concurrency_matches_sweep_simulation(spark):
 
 
 def test_listagg_matches_pandas_join(spark):
-    from sdg_engine.queries_r5d import orders_listagg
+    from sdg_engine.queries.relational import orders_listagg
 
     out = _pdf(orders_listagg(spark, SF)).set_index("o_orderstatus")
     o = _pdf(spark.read.parquet(f"{SF}/orders.parquet"))
@@ -90,10 +90,10 @@ def _octant_trig(dx: int, dy: int) -> int:
 
 
 def test_bearing_octants_match_trig(spark):
-    from sdg_engine.queries_r5d import roads_bearing_octants
+    from sdg_engine.queries.spatial import roads_bearing_octants
 
     out = _pdf(roads_bearing_octants(spark, SF))
-    from sdg_engine.queries_ext import _fixture_images
+    from sdg_engine.queries._common import _fixture_images
 
     _imgs, roads = _fixture_images(spark, SF, pin_sf=0.01)
     rp = _pdf(roads.selectExpr("kind", "coords"))
@@ -119,7 +119,7 @@ def test_bearing_octants_match_trig(spark):
 
 
 def test_silhouette_matches_numpy(spark):
-    from sdg_engine.queries_r5d import embeddings_silhouette
+    from sdg_engine.queries.ann import embeddings_silhouette
 
     out = _pdf(embeddings_silhouette(spark, SF)).set_index("label")
     emb = _pdf(spark.read.parquet(f"{SF}/embeddings.parquet"))
@@ -167,8 +167,8 @@ def test_mst_matches_prim(spark):
     engine's distributed Boruvka and the golden's scalar Kruskal)."""
     import heapq
 
-    from sdg_engine.queries_r5d import mst_roads
-    from sdg_engine.queries_r5 import _spw_edges
+    from sdg_engine.queries.graph import mst_roads
+    from sdg_engine.queries.graph import _spw_edges
 
     out = _pdf(mst_roads(spark, SF)).iloc[0]
     ed = _pdf(_spw_edges(spark, SF).filter("src < dst"))
@@ -201,8 +201,8 @@ def test_mst_matches_prim(spark):
 
 
 def test_snap_agrees_with_knn_and_lies_on_segment(spark):
-    from sdg_engine.queries import spatial_knn_nearest
-    from sdg_engine.queries_r5d import points_snap_roads
+    from sdg_engine.queries.spatial import spatial_knn_nearest
+    from sdg_engine.queries.spatial import points_snap_roads
 
     snap = _pdf(points_snap_roads(spark, SF)).set_index("point_id")
     knn = _pdf(spatial_knn_nearest(spark, SF)).set_index("point_id")
@@ -262,7 +262,7 @@ def test_otsu_kernel_analytic():
 
 
 def test_chained_aggs_match_pandas_twolevel(spark):
-    from sdg_engine.queries_r5d import streaming_chained_aggs
+    from sdg_engine.queries.streaming import streaming_chained_aggs
 
     out = _pdf(streaming_chained_aggs(spark, SF))
     ev = _pdf(spark.read.parquet(f"{SF}/events.parquet"))
@@ -283,7 +283,7 @@ def test_chained_aggs_match_pandas_twolevel(spark):
 
 
 def test_partition_evolution_prunes_old_spec_only(spark):
-    from sdg_engine.queries_r5d import snapshot_partition_evolution
+    from sdg_engine.queries.lakehouse import snapshot_partition_evolution
 
     out = _pdf(snapshot_partition_evolution(spark, SF)).iloc[0]
     docs = _pdf(spark.read.parquet(f"{SF}/documents.parquet"))
@@ -363,7 +363,7 @@ def test_edt_kernel_matches_bruteforce_all_pairs(spark):
 
 
 def test_lateral_topk_matches_pandas(spark):
-    from sdg_engine.queries_r5d import lateral_topk_orders
+    from sdg_engine.queries.relational import lateral_topk_orders
 
     out = _pdf(lateral_topk_orders(spark, SF))
     o = _pdf(spark.read.parquet(f"{SF}/orders.parquet"))
@@ -381,7 +381,7 @@ def test_lateral_topk_matches_pandas(spark):
 
 
 def test_xml_roundtrip_preserves_values(spark):
-    from sdg_engine.queries_r5d import xml_roundtrip_events
+    from sdg_engine.queries.lakehouse import xml_roundtrip_events
 
     out = _pdf(xml_roundtrip_events(spark, SF)).set_index("event_type")
     ev = _pdf(spark.read.parquet(f"{SF}/events.parquet"))
@@ -401,7 +401,7 @@ def test_xml_roundtrip_preserves_values(spark):
 def test_decision_stump_matches_fraction_brute(spark):
     from fractions import Fraction
 
-    from sdg_engine.queries_r5d import orders_decision_stump
+    from sdg_engine.queries.relational import orders_decision_stump
 
     out = _pdf(orders_decision_stump(spark, SF)).iloc[0]
     o = _pdf(spark.read.parquet(f"{SF}/orders.parquet"))
@@ -427,7 +427,7 @@ def test_decision_stump_matches_fraction_brute(spark):
 
 
 def test_rolling_wau_matches_set_union(spark):
-    from sdg_engine.queries_r5d import events_rolling_wau
+    from sdg_engine.queries.relational import events_rolling_wau
 
     out = _pdf(events_rolling_wau(spark, SF)).set_index("day")
     ev = _pdf(spark.read.parquet(f"{SF}/events.parquet"))
@@ -470,8 +470,8 @@ def test_clip_area_matches_exact_rational(spark):
     intersection area, and inside [0, min(areas)]."""
     from fractions import Fraction
 
-    from sdg_engine.queries import AOI_RING
-    from sdg_engine.queries_r5d import country_clip_area
+    from sdg_engine.queries.spatial import AOI_RING
+    from sdg_engine.queries.spatial import country_clip_area
 
     out = _pdf(country_clip_area(spark, SF)).set_index("country_code")
     from sdg_engine.fixtures import get_country_rings
@@ -526,7 +526,7 @@ def test_clip_kernel_identity_and_containment():
     import numpy as np
 
     from sdg_engine.geom import clip_polygon_convex, ring_area_seq
-    from sdg_engine.queries import AOI_RING
+    from sdg_engine.queries.spatial import AOI_RING
 
     aoi = np.array(AOI_RING[:-1], dtype=np.float64)
     self_clip = clip_polygon_convex(aoi, aoi)
@@ -541,8 +541,8 @@ def test_clip_kernel_identity_and_containment():
 
 def test_topology_errors_match_bruteforce(spark):
     from sdg_engine.geom import point_segment_dist_sq
-    from sdg_engine.queries_ext import _fixture_images
-    from sdg_engine.queries_r5d import roads_topology_errors
+    from sdg_engine.queries._common import _fixture_images
+    from sdg_engine.queries.spatial import roads_topology_errors
     from sdg_engine import METERS_PER_DEG
 
     out = _pdf(roads_topology_errors(spark, SF)).set_index("kind")
@@ -637,8 +637,8 @@ def test_webdataset_shards_parse_and_group(spark):
     import io
     import tarfile
 
-    from sdg_engine.queries_ext import _fixture_images
-    from sdg_engine.queries_r5d import webdataset_roundtrip_images
+    from sdg_engine.queries._common import _fixture_images
+    from sdg_engine.queries.lakehouse import webdataset_roundtrip_images
 
     out = _pdf(webdataset_roundtrip_images(spark, SF)).set_index("fmt")
     src = _pdf(
@@ -662,7 +662,7 @@ def test_bpe_training_matches_counter_twin(spark):
     scale, so the multi-round merge application is load-bearing)."""
     from collections import Counter
 
-    from sdg_engine.queries_r5d import bpe_train_merges
+    from sdg_engine.queries.text import bpe_train_merges
 
     out = _pdf(bpe_train_merges(spark, SF))
     docs = _pdf(spark.read.parquet(f"{SF}/documents.parquet"))
@@ -704,9 +704,9 @@ def test_aoi_length_matches_sampling(spark):
     approximates the inside fraction — must agree with the analytic
     t-interval within sampling error, and exactly on containment
     invariants (inside <= total, untouched kinds sum zero)."""
-    from sdg_engine.queries import AOI_RING
-    from sdg_engine.queries_ext import _fixture_images
-    from sdg_engine.queries_r5d import roads_in_aoi_length
+    from sdg_engine.queries.spatial import AOI_RING
+    from sdg_engine.queries._common import _fixture_images
+    from sdg_engine.queries.spatial import roads_in_aoi_length
 
     out = _pdf(roads_in_aoi_length(spark, SF))
     assert (out.sum_in_micros <= out.sum_len_micros).all()
@@ -758,7 +758,7 @@ def test_ssim_kernel_bounds_and_identity():
 
 
 def test_winsorized_mean_matches_numpy(spark):
-    from sdg_engine.queries_r5d import supplier_winsorized_mean
+    from sdg_engine.queries.relational import supplier_winsorized_mean
 
     out = _pdf(supplier_winsorized_mean(spark, SF)).iloc[0]
     s = _pdf(spark.read.parquet(f"{SF}/supplier.parquet"))
@@ -783,7 +783,7 @@ def test_constraint_rejects_atomically(spark):
     import os
     import tempfile
 
-    from sdg_engine.queries_ext import _stream_base
+    from sdg_engine.queries._common import _stream_base
     from sdg_engine.storage import (
         read_snapshot, snapshot_history, table_check, write_snapshot,
     )
@@ -817,7 +817,7 @@ def test_constraint_rejects_atomically(spark):
 
 
 def test_hourly_peaks_are_peaks(spark):
-    from sdg_engine.queries_r5d import events_hourly_peaks
+    from sdg_engine.queries.relational import events_hourly_peaks
 
     out = _pdf(events_hourly_peaks(spark, SF))
     ev = _pdf(spark.read.parquet(f"{SF}/events.parquet"))

@@ -14,9 +14,9 @@ def _pdf(df) -> pd.DataFrame:
 
 
 def test_graph_diameter_matches_python_bfs(spark):
-    from sdg_engine.queries_r5 import _BFS_NODE
-    from sdg_engine.queries_r5e import roads_graph_diameter
-    from sdg_engine.queries_ext import _fixture_images
+    from sdg_engine.queries._common import _BFS_NODE
+    from sdg_engine.queries.graph import roads_graph_diameter
+    from sdg_engine.queries._common import _fixture_images
 
     out = _pdf(roads_graph_diameter(spark, SF)).iloc[0]
     rp = _pdf(_fixture_images(spark, SF, pin_sf=0.01)[1])
@@ -90,7 +90,7 @@ def test_fast_kernel_detects_synthetic_corner():
 
 
 def test_seasonal_decompose_matches_pandas(spark):
-    from sdg_engine.queries_r5e import events_seasonal_decompose
+    from sdg_engine.queries.relational import events_seasonal_decompose
 
     out = _pdf(events_seasonal_decompose(spark, SF)).set_index("dow")
     ev = _pdf(spark.read.parquet(f"{SF}/events.parquet"))
@@ -130,7 +130,7 @@ def test_hll_merge_invariants(spark):
     transcendental on the oracle path) is only in its accuracy regime
     once cardinalities clear ~2.5m = 640; raw user counts (150) sit
     below the knee, user-days (~1600/type) are comfortably above."""
-    from sdg_engine.queries_r5e import hll_union_merge
+    from sdg_engine.queries.relational import hll_union_merge
 
     sf01 = "/root/testdata/sf0.01"
     out = _pdf(hll_union_merge(spark, sf01)).set_index("event_type")
@@ -218,7 +218,7 @@ def test_hough_kernel_vs_counter_twin():
 
 
 def test_customer_deciles_invariants(spark):
-    from sdg_engine.queries_r5e import customer_deciles
+    from sdg_engine.queries.relational import customer_deciles
 
     out = _pdf(customer_deciles(spark, SF)).sort_values("decile")
     od = _pdf(spark.read.parquet(f"{SF}/orders.parquet"))
@@ -241,7 +241,7 @@ def test_roads_strokes_vs_union_find_twin(spark):
     import math
 
     from sdg_engine.jobs.rai import fixture_dir
-    from sdg_engine.queries_r5e import roads_strokes
+    from sdg_engine.queries.spatial import roads_strokes
 
     out = _pdf(roads_strokes(spark, SF)).set_index("kind")
     pdf = _pdf(spark.read.parquet(f"{fixture_dir(0.01)}/roads.parquet"))
@@ -303,7 +303,7 @@ def test_roads_strokes_vs_union_find_twin(spark):
 
 
 def test_quantile_sketch_eval_exactness(spark):
-    from sdg_engine.queries_r5e import quantile_sketch_eval
+    from sdg_engine.queries.relational import quantile_sketch_eval
 
     out = _pdf(quantile_sketch_eval(spark, SF)).sort_values("pct")
     od = _pdf(spark.read.parquet(f"{SF}/orders.parquet"))
@@ -355,7 +355,7 @@ def test_canny_hysteresis_analytic():
 
 
 def test_best_f1_matches_brute_force(spark):
-    from sdg_engine.queries_r5e import events_best_f1_threshold
+    from sdg_engine.queries.relational import events_best_f1_threshold
 
     out = _pdf(events_best_f1_threshold(spark, SF))
     assert len(out) == 1
@@ -379,7 +379,7 @@ def test_best_f1_matches_brute_force(spark):
 
 
 def test_dedup_then_window_drops_duplicates(spark):
-    from sdg_engine.queries_r5e import streaming_dedup_then_window
+    from sdg_engine.queries.streaming import streaming_dedup_then_window
 
     out = _pdf(streaming_dedup_then_window(spark, SF))
     ev = _pdf(spark.read.parquet(f"{SF}/events.parquet"))

@@ -146,7 +146,7 @@ def test_cow_delete_refuses_mor_pending_head(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 def test_wilcoxon_matches_python_twin(spark):
-    from sdg_engine.queries_r5f import _DAY_US, events_wilcoxon
+    from sdg_engine.queries.relational import _DAY_US, events_wilcoxon
 
     out = _pdf(events_wilcoxon(spark, SF)).iloc[0]
     ev = _pdf(
@@ -187,7 +187,7 @@ def test_wilcoxon_matches_python_twin(spark):
 # ---------------------------------------------------------------------------
 
 def test_brand_cf_matches_python_twin(spark):
-    from sdg_engine.queries_r5f import brand_affinity_cf
+    from sdg_engine.queries.relational import brand_affinity_cf
 
     out = _pdf(brand_affinity_cf(spark, SF))
     li = _pdf(spark.read.parquet(f"{SF}/lineitem.parquet")[
@@ -230,7 +230,7 @@ def test_brand_cf_matches_python_twin(spark):
 
 
 def test_observe_metrics_consistency(spark):
-    from sdg_engine.queries_r5f import observe_scan_metrics
+    from sdg_engine.queries.relational import observe_scan_metrics
 
     out = _pdf(observe_scan_metrics(spark, SF)).iloc[0]
     # observed scan totals must equal the downstream aggregate totals
@@ -304,7 +304,7 @@ def test_zhang_suen_line_is_fixed_point():
 def test_ticker_stream_matches_python_twin(spark):
     from collections import defaultdict
 
-    from sdg_engine.queries_r5f import (
+    from sdg_engine.queries.streaming import (
         _TICK_N,
         streaming_pysource_windows,
     )
@@ -336,7 +336,7 @@ def test_ticker_stream_matches_python_twin(spark):
 def test_bpe_encode_matches_python_twin(spark):
     from collections import Counter
 
-    from sdg_engine.queries_r5f import bpe_encode_docs
+    from sdg_engine.queries.text import bpe_encode_docs
 
     out = _pdf(bpe_encode_docs(spark, SF)).set_index("lang")
     docs = _pdf(
@@ -387,7 +387,7 @@ def test_bpe_encode_matches_python_twin(spark):
 # ---------------------------------------------------------------------------
 
 def test_anova_matches_python_twin(spark):
-    from sdg_engine.queries_r5f import _EV_TYPES, events_anova
+    from sdg_engine.queries.relational import _EV_TYPES, events_anova
 
     out = _pdf(events_anova(spark, SF)).iloc[0]
     ev = _pdf(spark.read.parquet(f"{SF}/events.parquet").selectExpr(
@@ -415,7 +415,7 @@ def test_anova_matches_python_twin(spark):
 def test_hour_circular_matches_python_twin(spark):
     import math
 
-    from sdg_engine.queries_r5f import events_hour_circular
+    from sdg_engine.queries.relational import events_hour_circular
 
     out = _pdf(events_hour_circular(spark, SF)).set_index("event_type")
     ev = _pdf(spark.read.parquet(f"{SF}/events.parquet").selectExpr(
@@ -436,7 +436,7 @@ def test_hour_circular_matches_python_twin(spark):
 
 
 def test_cohort_ltv_monotone_and_consistent(spark):
-    from sdg_engine.queries_r5f import orders_cohort_ltv
+    from sdg_engine.queries.relational import orders_cohort_ltv
 
     out = _pdf(orders_cohort_ltv(spark, SF))
     o = _pdf(spark.read.parquet(f"{SF}/orders.parquet").selectExpr(
@@ -511,7 +511,7 @@ def test_zlib_ratio_matches_python_twin(spark):
     import zlib
     from collections import defaultdict
 
-    from sdg_engine.queries_r5f import doc_zlib_ratio
+    from sdg_engine.queries.text import doc_zlib_ratio
 
     out = _pdf(doc_zlib_ratio(spark, SF)).set_index("lang")
     docs = _pdf(spark.read.parquet(f"{SF}/documents.parquet")[
@@ -534,7 +534,7 @@ def test_zlib_ratio_matches_python_twin(spark):
 def test_pipe_syntax_matches_dataframe_form(spark):
     from pyspark.sql import functions as F
 
-    from sdg_engine.queries_r5f import pipe_syntax_revenue
+    from sdg_engine.queries.relational import pipe_syntax_revenue
 
     out = _pdf(pipe_syntax_revenue(spark, SF)).set_index("rf")
     li = spark.read.parquet(f"{SF}/lineitem.parquet")
@@ -564,7 +564,7 @@ def test_pipe_syntax_matches_dataframe_form(spark):
 # ---------------------------------------------------------------------------
 
 def test_pinball_conditioned_predictor_wins(spark):
-    from sdg_engine.queries_r5f import events_pinball_eval
+    from sdg_engine.queries.relational import events_pinball_eval
 
     out = _pdf(events_pinball_eval(spark, SF))
     ev = _pdf(spark.read.parquet(f"{SF}/events.parquet").selectExpr(
@@ -665,8 +665,8 @@ def test_simhash_pairs_recall_vs_brute_force(spark):
     """Every hamming<=6 pair that shares at least one 12-bit band MUST
     be found (banding is exact for band-colliding pairs), and every
     reported pair must verify against brute-force hamming."""
-    from sdg_engine.queries_ext import simhash60
-    from sdg_engine.queries_r5f import simhash_neardup_pairs
+    from sdg_engine.queries.text import simhash60
+    from sdg_engine.queries.text import simhash_neardup_pairs
 
     out = _pdf(simhash_neardup_pairs(spark, SF))
     sigs = {r.doc_id: int(r.simhash)
@@ -755,7 +755,7 @@ def test_tfidf_topk_matches_python_twin(spark):
     import math
     from collections import Counter
 
-    from sdg_engine.queries_r5f import tfidf_cosine_topk
+    from sdg_engine.queries.text import tfidf_cosine_topk
 
     out = _pdf(tfidf_cosine_topk(spark, SF))
     docs = _pdf(spark.read.parquet(f"{SF}/documents.parquet")[
@@ -796,8 +796,8 @@ def test_bipartite_check_matches_python_bfs(spark):
     import math
     from collections import deque
 
-    from sdg_engine.queries_ext import _fixture_images
-    from sdg_engine.queries_r5f import roads_bipartite_check
+    from sdg_engine.queries._common import _fixture_images
+    from sdg_engine.queries.graph import roads_bipartite_check
 
     out = _pdf(roads_bipartite_check(spark, SF)).iloc[0]
     rp = _pdf(_fixture_images(spark, SF, pin_sf=0.01)[1])
@@ -839,7 +839,7 @@ def test_bipartite_check_matches_python_bfs(spark):
 def test_conversion_ztest_matches_scalar(spark):
     import math
 
-    from sdg_engine.queries_r5f import events_conversion_ztest
+    from sdg_engine.queries.relational import events_conversion_ztest
 
     out = _pdf(events_conversion_ztest(spark, SF)).iloc[0]
     ev = pd.read_parquet(SF + "/events.parquet",
@@ -862,7 +862,7 @@ def test_conversion_ztest_matches_scalar(spark):
 def test_hhi_concentration_matches_scalar_and_bounds(spark):
     import math
 
-    from sdg_engine.queries_r5f import events_hhi_concentration
+    from sdg_engine.queries.relational import events_hhi_concentration
 
     out = _pdf(events_hhi_concentration(spark, SF))
     ev = pd.read_parquet(SF + "/events.parquet",
@@ -878,3 +878,38 @@ def test_hhi_concentration_matches_scalar_and_bounds(spark):
         assert int(r.hhi_ppm) == want
         # HHI in (1e6/n, 1e6]: equality floor .. single-whale ceiling
         assert 1_000_000 // per.size <= int(r.hhi_ppm) <= 1_000_001
+
+
+def test_hhi_concentration_large_totals_exact(spark, tmp_path):
+    """Per-type cents totals past 4e9 (their squares overflow BIGINT)
+    and past 4e12 (S² / 1e6 overflows BIGINT too): the query and its
+    DuckDB oracle both match exact Python ints."""
+    import duckdb
+
+    from sdg_engine.oracles import ORACLES
+    from sdg_engine.queries.relational import events_hhi_concentration
+
+    users = [1, 2, 3, 4, 5]
+    dollars = [25_000_000.0, 12_500_000.0, 7_000_000.0, 3.25, 0.5]
+    ev = pd.DataFrame({
+        "event_type": ["purchase"] * 5 + ["view"] * 5 + ["click"] * 5,
+        "user_id": users * 3,
+        "value": dollars + [1.0, 2.0, 3.0, 4.0, 5.0]
+        + [4e10, 2.5e10, 1.25, 3.0, 1e10],
+    })
+    ev.to_parquet(tmp_path / "events.parquet", index=False)
+    out = _pdf(events_hhi_concentration(spark, str(tmp_path)))
+    con = duckdb.connect()
+    con.execute("CREATE VIEW events AS SELECT * FROM read_parquet("
+                f"'{tmp_path / 'events.parquet'}')")
+    oracle = con.execute(ORACLES["events_hhi_concentration"]).df()
+    for t, g in ev.groupby("event_type"):
+        cents = [int(c) for c in np.floor(g["value"] * 100 + 0.5)]
+        s, ss = sum(cents), sum(c * c for c in cents)
+        want = ss // (s * s // 1_000_000)
+        for got in (out, oracle):
+            r = got[got["event_type"] == t].iloc[0]
+            assert int(r.total_cents) == s
+            assert int(r.hhi_ppm) == want
+    assert int(ev[ev.event_type == "purchase"].value.sum() * 100) > 4e9
+    assert int(ev[ev.event_type == "click"].value.sum() * 100) > 4e12

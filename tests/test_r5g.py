@@ -12,7 +12,7 @@ def _pdf(df) -> pd.DataFrame:
 def test_sql_udf_matches_inline_expression(spark):
     from pyspark.sql import functions as F
 
-    from sdg_engine.queries_r5g import sql_udf_revenue
+    from sdg_engine.queries.relational import sql_udf_revenue
 
     out = _pdf(sql_udf_revenue(spark, SF)).set_index("flag")
     li = spark.read.parquet(SF + "/lineitem.parquet")
@@ -31,7 +31,7 @@ def test_sql_udf_matches_inline_expression(spark):
 
 
 def test_session_variable_is_live_after_builder(spark):
-    from sdg_engine.queries_r5g import session_variable_segments
+    from sdg_engine.queries.relational import session_variable_segments
 
     session_variable_segments(spark, SF).collect()
     # the threshold variable holds the computed mean balance
@@ -41,7 +41,7 @@ def test_session_variable_is_live_after_builder(spark):
 
 
 def test_arrow_doc_stats_independent_of_batch_size(spark):
-    from sdg_engine.queries_r5g import arrow_doc_stats
+    from sdg_engine.queries.text import arrow_doc_stats
 
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key, None)
@@ -70,7 +70,7 @@ def test_arrow_doc_stats_independent_of_batch_size(spark):
 
 
 def test_grouped_agg_median_matches_scalar(spark):
-    from sdg_engine.queries_r5g import grouped_agg_user_median
+    from sdg_engine.queries.relational import grouped_agg_user_median
 
     out = _pdf(grouped_agg_user_median(spark, SF)).set_index("event_type")
     ev = pd.read_parquet(SF + "/events.parquet",
@@ -159,7 +159,7 @@ def test_avro_sync_marker_corruption_detected(tmp_path):
 # ---------------------------------------------------------------------------
 
 def test_nelson_aalen_matches_scalar(spark):
-    from sdg_engine.queries_r5g import events_nelson_aalen
+    from sdg_engine.queries.relational import events_nelson_aalen
 
     out = _pdf(events_nelson_aalen(spark, SF))
     ev = pd.read_parquet(SF + "/events.parquet",
@@ -204,7 +204,7 @@ def test_doc_term_chisq_scalar_twin(spark):
     import math
     import re
 
-    from sdg_engine.queries_r5g import doc_term_chisq
+    from sdg_engine.queries.text import doc_term_chisq
 
     out = _pdf(doc_term_chisq(spark, SF))
     docs = pd.read_parquet(SF + "/documents.parquet",
@@ -352,14 +352,14 @@ def test_tws_running_totals_where_protobuf_exists(spark):
     containers without it the driver worker crashes with ImportError
     before batch 0 — so the end-to-end check runs only where the dep
     exists, and the query stays out of the oracle registry (see
-    queries_r5g.streaming_tws_totals docstring)."""
+    queries.streaming.streaming_tws_totals docstring)."""
     import pytest
 
     try:
         from google.protobuf import descriptor  # noqa: F401
     except ImportError:
         pytest.skip("python protobuf not installed (tws wire protocol)")
-    from sdg_engine.queries_r5g import streaming_tws_totals
+    from sdg_engine.queries.streaming import streaming_tws_totals
 
     out = _pdf(streaming_tws_totals(spark, SF))
     ev = pd.read_parquet(SF + "/events.parquet",
@@ -384,7 +384,7 @@ def test_tws_running_totals_where_protobuf_exists(spark):
 def test_community_modularity_identities(spark):
     import math
 
-    from sdg_engine.queries_r5g import community_modularity
+    from sdg_engine.queries.graph import community_modularity
 
     out = _pdf(community_modularity(spark, SF))
     m = None
@@ -408,7 +408,7 @@ def test_community_modularity_identities(spark):
 def test_doc_lang_classifier_matches_scalar(spark):
     import re
 
-    from sdg_engine.queries_r5g import doc_lang_classifier
+    from sdg_engine.queries.text import doc_lang_classifier
 
     out = _pdf(doc_lang_classifier(spark, SF))
     docs = pd.read_parquet(SF + "/documents.parquet",
@@ -453,7 +453,7 @@ def test_doc_lang_classifier_matches_scalar(spark):
 def test_permutation_test_matches_scalar(spark):
     import hashlib
 
-    from sdg_engine.queries_r5g import events_permutation_test
+    from sdg_engine.queries.relational import events_permutation_test
 
     out = _pdf(events_permutation_test(spark, SF)).iloc[0]
     ev = pd.read_parquet(SF + "/events.parquet",
@@ -484,7 +484,7 @@ def test_permutation_test_matches_scalar(spark):
 
 
 def test_holt_linear_matches_scalar(spark):
-    from sdg_engine.queries_r5g import orders_holt_linear
+    from sdg_engine.queries.relational import orders_holt_linear
 
     out = _pdf(orders_holt_linear(spark, SF)).sort_values("t")
     orders = pd.read_parquet(SF + "/orders.parquet",
@@ -554,7 +554,7 @@ def test_biquad_engine_matches_fully_scalar():
 def test_cuped_matches_scalar_and_bounds(spark):
     import math
 
-    from sdg_engine.queries_r5g import events_cuped_eval
+    from sdg_engine.queries.relational import events_cuped_eval
 
     out = _pdf(events_cuped_eval(spark, SF)).iloc[0]
     ev = pd.read_parquet(SF + "/events.parquet",
@@ -590,7 +590,7 @@ def test_cuped_matches_scalar_and_bounds(spark):
 # ---------------------------------------------------------------------------
 
 def test_attribution_linear_matches_scalar(spark):
-    from sdg_engine.queries_r5g import events_attribution_linear
+    from sdg_engine.queries.relational import events_attribution_linear
 
     out = _pdf(events_attribution_linear(spark, SF))
     ev = pd.read_parquet(SF + "/events.parquet",
@@ -631,7 +631,7 @@ def test_attribution_linear_matches_scalar(spark):
 
 
 def test_matryoshka_recall_bounds_and_universe(spark):
-    from sdg_engine.queries_r5g import ann_matryoshka_recall
+    from sdg_engine.queries.ann import ann_matryoshka_recall
 
     out = _pdf(ann_matryoshka_recall(spark, SF))
     # one row per query vector, recall in {0, 333, 666, 1000}
@@ -718,7 +718,7 @@ def test_vw_engine_matches_rescan_twin():
 def test_tscore_matches_scalar_and_is_sorted(spark):
     import math
 
-    from sdg_engine.queries_r5g import doc_collocation_tscore
+    from sdg_engine.queries.text import doc_collocation_tscore
 
     out = _pdf(doc_collocation_tscore(spark, SF)).sort_values("rnk")
     docs = pd.read_parquet(SF + "/documents.parquet", columns=["text"])
@@ -846,7 +846,7 @@ def test_rename_column_swap_roundtrip(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 def test_char_lm_score_matches_scalar(spark):
-    from sdg_engine.queries_r5g import doc_char_lm_score
+    from sdg_engine.queries.text import doc_char_lm_score
 
     out = _pdf(doc_char_lm_score(spark, SF)).set_index("lang")
     docs = pd.read_parquet(SF + "/documents.parquet",
@@ -878,7 +878,7 @@ def test_char_lm_score_matches_scalar(spark):
 def test_vocab_coverage_curve_is_monotone_and_exact(spark):
     from collections import Counter
 
-    from sdg_engine.queries_r5g import vocab_coverage_curve
+    from sdg_engine.queries.text import vocab_coverage_curve
 
     out = _pdf(vocab_coverage_curve(spark, SF)).sort_values("i")
     docs = pd.read_parquet(SF + "/documents.parquet", columns=["text"])
@@ -900,7 +900,7 @@ def test_vocab_coverage_curve_is_monotone_and_exact(spark):
 # ---------------------------------------------------------------------------
 
 def test_ngram_novelty_matches_scalar(spark):
-    from sdg_engine.queries_r5g import doc_ngram_novelty
+    from sdg_engine.queries.text import doc_ngram_novelty
 
     out = _pdf(doc_ngram_novelty(spark, SF)).set_index("lang")
     docs = pd.read_parquet(SF + "/documents.parquet",
@@ -938,7 +938,7 @@ def test_ngram_novelty_matches_scalar(spark):
 
 
 def test_dedup_impact_bounds(spark):
-    from sdg_engine.queries_r5g import dedup_impact_report
+    from sdg_engine.queries.text import dedup_impact_report
 
     out = _pdf(dedup_impact_report(spark, SF))
     for r in out.itertuples():

@@ -142,6 +142,33 @@ def test_entry_contract(spark):
     assert len(q) >= 20
 
 
+def test_registry_families():
+    """One registry: every query sits in exactly one family module, each
+    oracle module holds exactly its own family's oracles, and every
+    builder documents itself."""
+    import importlib
+
+    from sdg_engine.queries import FAMILIES, FAMILY, QUERIES
+
+    seen: dict[str, str] = {}
+    for fam in FAMILIES:
+        qmod = importlib.import_module(f"sdg_engine.queries.{fam}")
+        omod = importlib.import_module(f"sdg_engine.oracles.{fam}")
+        for name in qmod.QUERIES:
+            assert name not in seen, (name, seen.get(name), fam)
+            seen[name] = fam
+        names = set(omod.ORACLES)
+        if hasattr(omod, "fixture_oracles"):
+            lazy = set(omod.fixture_oracles())
+            assert not names & lazy, names & lazy
+            names |= lazy
+        assert names == set(qmod.QUERIES), (fam, names ^ set(qmod.QUERIES))
+    assert seen == FAMILY
+    assert set(seen) == set(QUERIES)
+    undocumented = [n for n, fn in QUERIES.items() if not (fn.__doc__ or "").strip()]
+    assert not undocumented, undocumented
+
+
 @pytest.mark.parametrize(
     "name",
     [
