@@ -202,6 +202,26 @@ def psnr(a: np.ndarray, b: np.ndarray) -> float:
     return 10.0 * np.log10(255.0 * 255.0 / mse)
 
 
+def luma(img: np.ndarray) -> np.ndarray:
+    """BT.601 luma of an (h, w, 3) image as float64.  Every channel is
+    cast before its multiply and the terms add left to right — golden
+    twins spell the same op order, so the float64 bits must not move."""
+    return (
+        0.299 * img[:, :, 0].astype(np.float64)
+        + 0.587 * img[:, :, 1].astype(np.float64)
+        + 0.114 * img[:, :, 2].astype(np.float64)
+    )
+
+
+def luma_milli(img: np.ndarray) -> np.ndarray:
+    """BT.601 luma × 1000 as exact int64 (integer weights, no rounding)."""
+    return (
+        299 * img[:, :, 0].astype(np.int64)
+        + 587 * img[:, :, 1].astype(np.int64)
+        + 114 * img[:, :, 2].astype(np.int64)
+    )
+
+
 # ---------------------------------------------------------------------------
 # X1/X2 audio twin: RIFF/WAVE PCM16 codec, pure numpy (no audio libs) —
 # built from the public RIFF spec the same way the PNG codec was, so the

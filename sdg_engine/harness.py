@@ -51,12 +51,6 @@ NODE_X = "(CAST((s_suppkey * 131 + i * 17) % 1000 AS DOUBLE) / CAST(100 AS DOUBL
 NODE_Y = "(CAST((s_suppkey * 211 + i * 23) % 1000 AS DOUBLE) / CAST(100 AS DOUBLE))"
 
 
-def load_tables(spark, sf_dir: str) -> dict:
-    from .tablecache import read_table
-
-    return {t: read_table(spark, f"{sf_dir}/{t}.parquet") for t in TABLES}
-
-
 def points_df(spark, sf_dir: str):
     """Derived point set: (point_id, lon, lat) — pure codegen arithmetic."""
     from pyspark.sql import functions as F

@@ -14,12 +14,11 @@ the exact point a real decoder (ffmpeg/soundfile) would be invoked.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from ..codecs import decode_wav, encode_wav
+from .payload import map_rows
 
 AUDIO_SCHEMA = (
     "media_id string, bytes binary, codec string, sample_rate int, "
@@ -36,8 +35,6 @@ def synth_audio_table(spark, n: int = 64) -> DataFrame:
     sine+noise waveform per clip, encoded by the from-scratch PCM16
     codec (codecs.encode_wav) — the decode path is exercised for real,
     like PNG on the image side."""
-    from ..codecs import encode_wav
-
     rng = np.random.default_rng(1234)
     rows = []
     for i in range(n):
@@ -154,8 +151,6 @@ def _decode_audio(data: bytes, codec: str, sr: int, n_ch: int, n_samples: int,
     (opus/flac/mp3) are the documented stub — a real build calls
     soundfile/ffmpeg there."""
     if codec in ("wav", "pcm16"):
-        from ..codecs import decode_wav
-
         samples, _sr = decode_wav(data)
         return samples.astype(np.float64) / 32768.0
     if not deterministic_fake:
@@ -168,6 +163,31 @@ def _decode_audio(data: bytes, codec: str, sr: int, n_ch: int, n_samples: int,
     return rng.standard_normal((n_samples, n_ch))
 
 
+def _mono(r, fake: bool) -> np.ndarray:
+    """One audio row decoded (or stubbed) and mixed down to mono."""
+    n_samples = int(r.sample_rate * r.duration_ms / 1000)
+    return _decode_audio(bytes(r.bytes), r.codec, r.sample_rate,
+                         int(r.n_channels), n_samples, fake).mean(axis=1)
+
+
+def _video_stack(r, fake: bool) -> np.ndarray:
+    """One video row as an (n_frames, h, w) uint8 luma stack: ``rawvid``
+    decodes for real; other codecs take the seeded stub (or raise
+    NotImplementedError when ``fake`` is off)."""
+    if r.codec == "rawvid":
+        return decode_rawvid(bytes(r.bytes))
+    if not fake:
+        raise NotImplementedError(
+            f"real {r.codec} decode requires ffmpeg (not bundled); "
+            "pass deterministic_fake=True"
+        )
+    seed = int.from_bytes(bytes(r.bytes)[:8], "big") % (2**32)
+    rng = np.random.default_rng(seed)
+    return rng.integers(
+        0, 256, size=(int(r.n_frames), int(r.h), int(r.w))
+    ).astype(np.uint8)
+
+
 def audio_features(audio: DataFrame, deterministic_fake: bool = True) -> DataFrame:
     """Decode → per-clip features (RMS, zero-crossing rate, peak).
 
@@ -175,24 +195,14 @@ def audio_features(audio: DataFrame, deterministic_fake: bool = True) -> DataFra
     codec call is the documented stub."""
     fake = bool(deterministic_fake)
 
-    def _feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                n_samples = int(r.sample_rate * r.duration_ms / 1000)
-                wav = _decode_audio(bytes(r.bytes), r.codec, r.sample_rate,
-                                    int(r.n_channels), n_samples, fake)
-                mono = wav.mean(axis=1)
-                rms = float(np.sqrt(np.mean(mono * mono)))
-                zcr = float(np.mean(np.abs(np.diff(np.signbit(mono).astype(np.int8)))))
-                out.append((r.media_id, rms, zcr, float(np.abs(mono).max()),
-                            len(mono)))
-            yield pd.DataFrame(
-                out, columns=["media_id", "rms", "zcr", "peak", "n_samples"]
-            )
+    def _feat(r):
+        mono = _mono(r, fake)
+        rms = float(np.sqrt(np.mean(mono * mono)))
+        zcr = float(np.mean(np.abs(np.diff(np.signbit(mono).astype(np.int8)))))
+        yield (r.media_id, rms, zcr, float(np.abs(mono).max()), len(mono))
 
-    return audio.mapInPandas(
-        _feat,
+    return map_rows(
+        audio, _feat,
         "media_id string, rms double, zcr double, peak double, n_samples long",
     )
 
@@ -207,36 +217,28 @@ def video_frame_sample(video: DataFrame, every_n: int = 12,
     NotImplementedError when ``deterministic_fake=False``)."""
     fake = bool(deterministic_fake)
 
-    def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                if r.codec == "rawvid":
-                    stack = decode_rawvid(bytes(r.bytes))
-                    for fi in range(0, len(stack), every_n):
-                        out.append(
-                            (r.media_id, fi, float(fi / r.fps),
-                             float(stack[fi].mean()))
-                        )
-                    continue
-                if not fake:
-                    raise NotImplementedError(
-                        f"real {r.codec} decode requires ffmpeg (not in "
-                        "this container); pass deterministic_fake=True"
-                    )
-                seed = int.from_bytes(bytes(r.bytes)[:8], "big") % (2**32)
-                rng = np.random.default_rng(seed)
-                for fi in range(0, int(r.n_frames), every_n):
-                    frame = rng.integers(0, 256, size=(int(r.h), int(r.w)))
-                    out.append(
-                        (r.media_id, fi, float(fi / r.fps), float(frame.mean()))
-                    )
-            yield pd.DataFrame(
-                out, columns=["media_id", "frame_idx", "t_sec", "mean_luma"]
+    def _frames(r):
+        if r.codec == "rawvid":
+            stack = decode_rawvid(bytes(r.bytes))
+            for fi in range(0, len(stack), every_n):
+                yield (r.media_id, fi, float(fi / r.fps),
+                       float(stack[fi].mean()))
+            return
+        if not fake:
+            raise NotImplementedError(
+                f"real {r.codec} decode requires ffmpeg (not in "
+                "this container); pass deterministic_fake=True"
             )
+        # one seeded (h, w) draw per SAMPLED frame — a different stream
+        # from _video_stack's whole-clip draw
+        seed = int.from_bytes(bytes(r.bytes)[:8], "big") % (2**32)
+        rng = np.random.default_rng(seed)
+        for fi in range(0, int(r.n_frames), every_n):
+            frame = rng.integers(0, 256, size=(int(r.h), int(r.w)))
+            yield (r.media_id, fi, float(fi / r.fps), float(frame.mean()))
 
-    return video.mapInPandas(
-        _frames,
+    return map_rows(
+        video, _frames,
         "media_id string, frame_idx int, t_sec double, mean_luma double",
     )
 
@@ -250,28 +252,18 @@ def audio_spectral_features(audio: DataFrame,
     SPEC — so the oracle compares float-exactly, like RMS/ZCR."""
     fake = bool(deterministic_fake)
 
-    def _spec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                n_samples = int(r.sample_rate * r.duration_ms / 1000)
-                wav = _decode_audio(bytes(r.bytes), r.codec, r.sample_rate,
-                                    int(r.n_channels), n_samples, fake)
-                mono = wav.mean(axis=1)
-                mag = np.abs(np.fft.rfft(mono))
-                freqs = np.fft.rfftfreq(len(mono), 1.0 / r.sample_rate)
-                total = float(mag.sum())
-                centroid = float((freqs * mag).sum() / total) if total > 0 else 0.0
-                peak_bin = int(np.argmax(mag))  # first max (deterministic)
-                out.append((r.media_id, centroid, float(freqs[peak_bin]),
-                            float((mag * mag).sum()), len(mag)))
-            yield pd.DataFrame(
-                out, columns=["media_id", "centroid_hz", "peak_hz",
-                              "energy", "n_bins"]
-            )
+    def _spec(r):
+        mono = _mono(r, fake)
+        mag = np.abs(np.fft.rfft(mono))
+        freqs = np.fft.rfftfreq(len(mono), 1.0 / r.sample_rate)
+        total = float(mag.sum())
+        centroid = float((freqs * mag).sum() / total) if total > 0 else 0.0
+        peak_bin = int(np.argmax(mag))  # first max (deterministic)
+        yield (r.media_id, centroid, float(freqs[peak_bin]),
+               float((mag * mag).sum()), len(mag))
 
-    return audio.mapInPandas(
-        _spec,
+    return map_rows(
+        audio, _spec,
         "media_id string, centroid_hz double, peak_hz double, "
         "energy double, n_bins int",
     )
@@ -287,36 +279,16 @@ def video_scene_cuts(video: DataFrame, threshold: float = 3.0,
     fake = bool(deterministic_fake)
     thr = float(threshold)
 
-    def _cuts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                if r.codec == "rawvid":
-                    stack = decode_rawvid(bytes(r.bytes))
-                elif fake:
-                    seed = int.from_bytes(bytes(r.bytes)[:8], "big") % (2**32)
-                    rng = np.random.default_rng(seed)
-                    stack = rng.integers(
-                        0, 256, size=(int(r.n_frames), int(r.h), int(r.w))
-                    ).astype(np.uint8)
-                else:
-                    raise NotImplementedError(
-                        f"real {r.codec} decode requires ffmpeg (not in "
-                        "this container); pass deterministic_fake=True"
-                    )
-                means = stack.reshape(len(stack), -1).mean(axis=1)
-                jumps = np.abs(np.diff(means))
-                cut_idx = np.nonzero(jumps > thr)[0] + 1
-                out.append((
-                    r.media_id, len(stack), int(len(cut_idx)),
-                    int(cut_idx[0]) if len(cut_idx) else -1,
-                ))
-            yield pd.DataFrame(
-                out, columns=["media_id", "n_frames", "n_cuts", "first_cut"]
-            )
+    def _cuts(r):
+        stack = _video_stack(r, fake)
+        means = stack.reshape(len(stack), -1).mean(axis=1)
+        jumps = np.abs(np.diff(means))
+        cut_idx = np.nonzero(jumps > thr)[0] + 1
+        yield (r.media_id, len(stack), int(len(cut_idx)),
+               int(cut_idx[0]) if len(cut_idx) else -1)
 
-    return video.mapInPandas(
-        _cuts,
+    return map_rows(
+        video, _cuts,
         "media_id string, n_frames int, n_cuts int, first_cut int",
     )
 
@@ -334,31 +306,19 @@ def audio_stft_frames(audio: DataFrame, frame: int = 256, hop: int = 128,
     Map-only mapInPandas like the other payload ops."""
     fake = bool(deterministic_fake)
 
-    def _stft(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                n_samples = int(r.sample_rate * r.duration_ms / 1000)
-                wav = _decode_audio(bytes(r.bytes), r.codec, r.sample_rate,
-                                    int(r.n_channels), n_samples, fake)
-                mono = wav.mean(axis=1)
-                freqs = np.fft.rfftfreq(frame, 1.0 / r.sample_rate)
-                n_frames = max(0, (len(mono) - frame) // hop + 1)
-                for f in range(n_frames):
-                    seg = mono[f * hop : f * hop + frame]
-                    mag = np.abs(np.fft.rfft(seg))
-                    total = float(mag.sum())
-                    cen = float((freqs * mag).sum() / total) if total > 0 else 0.0
-                    out.append(
-                        (r.media_id, f, float((mag * mag).sum()), cen)
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "frame_idx", "energy", "centroid_hz"],
-            )
+    def _stft(r):
+        mono = _mono(r, fake)
+        freqs = np.fft.rfftfreq(frame, 1.0 / r.sample_rate)
+        n_frames = max(0, (len(mono) - frame) // hop + 1)
+        for f in range(n_frames):
+            seg = mono[f * hop : f * hop + frame]
+            mag = np.abs(np.fft.rfft(seg))
+            total = float(mag.sum())
+            cen = float((freqs * mag).sum() / total) if total > 0 else 0.0
+            yield (r.media_id, f, float((mag * mag).sum()), cen)
 
-    return audio.mapInPandas(
-        _stft,
+    return map_rows(
+        audio, _stft,
         "media_id string, frame_idx int, energy double, centroid_hz double",
     )
 
@@ -376,49 +336,38 @@ def audio_pitch_autocorr(audio: DataFrame,
     accumulates r(k) with arbitrary-precision Python ints."""
     fake = bool(deterministic_fake)
 
-    def _pitch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..codecs import decode_wav
-
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                if r.codec in ("wav", "pcm16"):
-                    pcm, sr = decode_wav(bytes(r.bytes))
-                elif fake:
-                    n_samples = int(r.sample_rate * r.duration_ms / 1000)
-                    seed = int.from_bytes(
-                        bytes(r.bytes)[:8].ljust(8, b"\0"), "big") % (2**32)
-                    rng = np.random.default_rng(seed)
-                    pcm = np.clip(
-                        np.round(rng.standard_normal(
-                            (n_samples, int(r.n_channels))) * 8192.0),
-                        -32768, 32767,
-                    ).astype(np.int16)
-                    sr = int(r.sample_rate)
-                else:
-                    raise NotImplementedError(
-                        f"real {r.codec} decode requires an audio codec "
-                        "library; pass deterministic_fake=True"
-                    )
-                x = pcm.astype(np.int64).sum(axis=1)
-                lo, hi = max(1, sr // 2000), sr // 100
-                best_lag, best_r, n_lags = -1, 0, 0
-                for k in range(lo, min(hi, len(x) - 1) + 1):
-                    n_lags += 1
-                    rk = int(np.dot(x[:-k], x[k:]))
-                    if best_lag < 0 or rk > best_r:
-                        best_lag, best_r = k, rk
-                out.append((
-                    r.media_id, best_lag, float(sr) / float(best_lag),
-                    best_r, n_lags,
-                ))
-            yield pd.DataFrame(
-                out, columns=["media_id", "lag", "f0_hz", "r_peak",
-                              "n_lags"]
+    def _pitch(r):
+        if r.codec in ("wav", "pcm16"):
+            pcm, sr = decode_wav(bytes(r.bytes))
+        elif fake:
+            n_samples = int(r.sample_rate * r.duration_ms / 1000)
+            seed = int.from_bytes(
+                bytes(r.bytes)[:8].ljust(8, b"\0"), "big") % (2**32)
+            rng = np.random.default_rng(seed)
+            pcm = np.clip(
+                np.round(rng.standard_normal(
+                    (n_samples, int(r.n_channels))) * 8192.0),
+                -32768, 32767,
+            ).astype(np.int16)
+            sr = int(r.sample_rate)
+        else:
+            raise NotImplementedError(
+                f"real {r.codec} decode requires an audio codec "
+                "library; pass deterministic_fake=True"
             )
+        x = pcm.astype(np.int64).sum(axis=1)
+        lo, hi = max(1, sr // 2000), sr // 100
+        best_lag, best_r, n_lags = -1, 0, 0
+        for k in range(lo, min(hi, len(x) - 1) + 1):
+            n_lags += 1
+            rk = int(np.dot(x[:-k], x[k:]))
+            if best_lag < 0 or rk > best_r:
+                best_lag, best_r = k, rk
+        yield (r.media_id, best_lag, float(sr) / float(best_lag), best_r,
+               n_lags)
 
-    return audio.mapInPandas(
-        _pitch,
+    return map_rows(
+        audio, _pitch,
         "media_id string, lag int, f0_hz double, r_peak bigint, "
         "n_lags int",
     )
@@ -444,74 +393,53 @@ def video_motion_blocks(video: DataFrame, block: int = 8, search: int = 4,
     fake = bool(deterministic_fake)
     blk, srch = int(block), int(search)
 
-    def _motion(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                if r.codec == "rawvid":
-                    stack = decode_rawvid(bytes(r.bytes))
-                elif fake:
-                    seed = int.from_bytes(bytes(r.bytes)[:8], "big") % (2**32)
-                    rng = np.random.default_rng(seed)
-                    stack = rng.integers(
-                        0, 256, size=(int(r.n_frames), int(r.h), int(r.w))
-                    ).astype(np.uint8)
-                else:
-                    raise NotImplementedError(
-                        f"real {r.codec} decode requires ffmpeg; pass "
-                        "deterministic_fake=True"
-                    )
-                n, h, w = stack.shape
-                pos = [(by, bx)
-                       for by in range(srch, h - blk - srch + 1, blk)
-                       for bx in range(srch, w - blk - srch + 1, blk)]
-                s64 = stack.astype(np.int64)
-                n_pairs = n - 1
-                n_blocks = n_moving = sum_sad = sum_abs_mv = chk = 0
-                flat = 0
-                for t in range(1, n):
-                    cur = np.stack([s64[t, by:by + blk, bx:bx + blk]
-                                    for by, bx in pos])
-                    win = np.stack([
-                        s64[t - 1, by - srch:by + blk + srch,
-                            bx - srch:bx + blk + srch]
-                        for by, bx in pos
-                    ])
-                    best_sad = None
-                    for dy in range(-srch, srch + 1):
-                        for dx in range(-srch, srch + 1):
-                            sad = np.abs(
-                                cur - win[:, srch + dy:srch + dy + blk,
-                                          srch + dx:srch + dx + blk]
-                            ).sum(axis=(1, 2))
-                            if best_sad is None:
-                                best_sad = sad.copy()
-                                best_dy = np.full(len(pos), dy, np.int64)
-                                best_dx = np.full(len(pos), dx, np.int64)
-                            else:
-                                better = sad < best_sad
-                                best_sad[better] = sad[better]
-                                best_dy[better] = dy
-                                best_dx[better] = dx
-                    n_blocks += len(pos)
-                    n_moving += int(((best_dy != 0) | (best_dx != 0)).sum())
-                    sum_sad += int(best_sad.sum())
-                    sum_abs_mv += int((np.abs(best_dy)
-                                       + np.abs(best_dx)).sum())
-                    wgt = (np.arange(flat, flat + len(pos),
-                                     dtype=np.int64) % 97) + 1
-                    code = (best_dy + srch) * (2 * srch + 1) + best_dx + srch
-                    chk += int((wgt * code).sum())
-                    flat += len(pos)
-                out.append((r.media_id, n_pairs, n_blocks, n_moving,
-                            sum_sad, sum_abs_mv, chk))
-            yield pd.DataFrame(
-                out, columns=["media_id", "n_pairs", "n_blocks",
-                              "n_moving", "sum_sad", "sum_abs_mv", "chk"]
-            )
+    def _motion(r):
+        stack = _video_stack(r, fake)
+        n, h, w = stack.shape
+        pos = [(by, bx)
+               for by in range(srch, h - blk - srch + 1, blk)
+               for bx in range(srch, w - blk - srch + 1, blk)]
+        s64 = stack.astype(np.int64)
+        n_pairs = n - 1
+        n_blocks = n_moving = sum_sad = sum_abs_mv = chk = 0
+        flat = 0
+        for t in range(1, n):
+            cur = np.stack([s64[t, by:by + blk, bx:bx + blk]
+                            for by, bx in pos])
+            win = np.stack([
+                s64[t - 1, by - srch:by + blk + srch,
+                    bx - srch:bx + blk + srch]
+                for by, bx in pos
+            ])
+            best_sad = None
+            for dy in range(-srch, srch + 1):
+                for dx in range(-srch, srch + 1):
+                    sad = np.abs(
+                        cur - win[:, srch + dy:srch + dy + blk,
+                                  srch + dx:srch + dx + blk]
+                    ).sum(axis=(1, 2))
+                    if best_sad is None:
+                        best_sad = sad.copy()
+                        best_dy = np.full(len(pos), dy, np.int64)
+                        best_dx = np.full(len(pos), dx, np.int64)
+                    else:
+                        better = sad < best_sad
+                        best_sad[better] = sad[better]
+                        best_dy[better] = dy
+                        best_dx[better] = dx
+            n_blocks += len(pos)
+            n_moving += int(((best_dy != 0) | (best_dx != 0)).sum())
+            sum_sad += int(best_sad.sum())
+            sum_abs_mv += int((np.abs(best_dy) + np.abs(best_dx)).sum())
+            wgt = (np.arange(flat, flat + len(pos), dtype=np.int64) % 97) + 1
+            code = (best_dy + srch) * (2 * srch + 1) + best_dx + srch
+            chk += int((wgt * code).sum())
+            flat += len(pos)
+        yield (r.media_id, n_pairs, n_blocks, n_moving, sum_sad, sum_abs_mv,
+               chk)
 
-    return video.mapInPandas(
-        _motion,
+    return map_rows(
+        video, _motion,
         "media_id string, n_pairs int, n_blocks bigint, n_moving bigint, "
         "sum_sad bigint, sum_abs_mv bigint, chk bigint",
     )
@@ -535,39 +463,27 @@ def audio_decimate_stats(audio: DataFrame) -> DataFrame:
     chk).  Engine mechanics: strided numpy slices per tap (the golden
     twin loops samples scalar)."""
 
-    def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..codecs import decode_wav
+    def _dec(r):
+        pcm, _sr = decode_wav(bytes(r.bytes))
+        x = pcm[:, 0].astype(np.int64)
+        n = len(x)
+        lo = 2  # smallest n with 2n-3 >= 0
+        hi = (n - 4) // 2  # largest n with 2n+3 <= n-1
+        if hi < lo:
+            yield (r.media_id, n, 0, 0, 0, 0)
+            return
+        ctr = 2 * np.arange(lo, hi + 1, dtype=np.int64)
+        y = (
+            -x[ctr - 3] + 9 * x[ctr - 1] + 16 * x[ctr]
+            + 9 * x[ctr + 1] - x[ctr + 3]
+        )
+        y = y // 32
+        wgt = (np.arange(lo, hi + 1, dtype=np.int64) % 97) + 1
+        yield (r.media_id, n, int(y.size), int(np.abs(y).sum()),
+               int(np.abs(y).max()), int((y * wgt).sum()))
 
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                pcm, _sr = decode_wav(bytes(r.bytes))
-                x = pcm[:, 0].astype(np.int64)
-                n = len(x)
-                lo = 2  # smallest n with 2n-3 >= 0
-                hi = (n - 4) // 2  # largest n with 2n+3 <= n-1
-                if hi < lo:
-                    out.append((r.media_id, n, 0, 0, 0, 0))
-                    continue
-                ctr = 2 * np.arange(lo, hi + 1, dtype=np.int64)
-                y = (
-                    -x[ctr - 3] + 9 * x[ctr - 1] + 16 * x[ctr]
-                    + 9 * x[ctr + 1] - x[ctr + 3]
-                )
-                y = y // 32
-                wgt = (np.arange(lo, hi + 1, dtype=np.int64) % 97) + 1
-                out.append((
-                    r.media_id, n, int(y.size), int(np.abs(y).sum()),
-                    int(np.abs(y).max()), int((y * wgt).sum()),
-                ))
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "n_in", "n_out", "sum_abs",
-                         "max_abs", "chk"],
-            )
-
-    return audio.mapInPandas(
-        _dec,
+    return map_rows(
+        audio, _dec,
         "media_id string, n_in bigint, n_out bigint, sum_abs bigint, "
         "max_abs bigint, chk bigint",
     )
@@ -615,31 +531,20 @@ def audio_biquad_stats(audio: DataFrame) -> DataFrame:
     """Per-clip biquad low-pass stats: (n, sum_abs_y, max_abs_y, y_last,
     chk) over channel-0 PCM16."""
 
-    def _bq(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..codecs import decode_wav
+    def _bq(r):
+        pcm, _sr = decode_wav(bytes(r.bytes))
+        y = biquad_kernel(pcm[:, 0].astype(np.int64))
+        wgt = [(k % 97) + 1 for k in range(len(y))]
+        yield (
+            r.media_id, len(y),
+            sum(abs(v) for v in y),
+            max((abs(v) for v in y), default=0),
+            y[-1] if y else 0,
+            sum(v * w for v, w in zip(y, wgt)),
+        )
 
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                pcm, _sr = decode_wav(bytes(r.bytes))
-                x = pcm[:, 0].astype(np.int64)
-                y = biquad_kernel(x)
-                wgt = [(k % 97) + 1 for k in range(len(y))]
-                out.append((
-                    r.media_id, len(y),
-                    sum(abs(v) for v in y),
-                    max((abs(v) for v in y), default=0),
-                    y[-1] if y else 0,
-                    sum(v * w for v, w in zip(y, wgt)),
-                ))
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "n", "sum_abs_y", "max_abs_y",
-                         "y_last", "chk"],
-            )
-
-    return audio.mapInPandas(
-        _bq,
+    return map_rows(
+        audio, _bq,
         "media_id string, n bigint, sum_abs_y bigint, max_abs_y bigint,"
         " y_last bigint, chk bigint",
     )

@@ -1,7 +1,8 @@
 """Image-payload operators (SURVEY.md §2.8 X1-X5; BASELINE.json:15).
 
-All Arrow-batched ``mapInPandas`` / pandas UDFs — the batch loop is
-Python, the per-image work is numpy (no per-row Python in expressions).
+All Arrow-batched ``mapInPandas`` / pandas UDFs.  :func:`map_rows` owns
+the per-row Python boundary (batch loop, row tuples, output frame);
+the per-image work is numpy (no per-row Python in expressions).
 The invariant surface (decoded-pixel PSNR, caption byte-equality,
 phash stability) is exposed as DataFrame operators so pipelines can
 gate themselves (the pytest gate uses them too).
@@ -9,17 +10,49 @@ gate themselves (the pytest gate uses them too).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..codecs import decode_image, encode_image, luma, luma_milli, psnr
+from ..crs import warp_tile
+from ..phash import phash64, resize_area
+from ..tiff import encode_tiff
+
 _IMAGES_SCHEMA = (
     "image_id string, bytes binary, w int, h int, fmt string, "
     "caption string, phash bigint"
 )
+_IMG_COLS = ("image_id", "bytes", "w", "h", "fmt")
+_GEO_COLS = ("image_id", "bytes", "fmt", "w", "h",
+             "fp_xmin", "fp_ymin", "fp_xmax", "fp_ymax")
+
+
+def map_rows(df: DataFrame, fn: Callable[[tuple], Iterable[tuple]],
+             schema: str) -> DataFrame:
+    """One map-only ``mapInPandas`` that calls ``fn(row)`` per input
+    row (a namedtuple of ``df``'s columns).  ``fn`` returns the output
+    tuples for that row in ``schema`` field order: one for a 1:1 op,
+    several for an explode, none to drop the row.  Output frames are
+    built by position (Spark assigns non-string labels in schema
+    order), so the column names live only in ``schema``; a batch with
+    no output rows yields no frame."""
+
+    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = [t for r in pdf.itertuples(index=False) for t in fn(r)]
+            if out:
+                yield pd.DataFrame(out)
+
+    return df.mapInPandas(_batches, schema)
+
+
+def _decode(r) -> np.ndarray:
+    """Decode one images row (bytes, fmt, w, h) to (h, w, 3) uint8."""
+    return decode_image(bytes(r.bytes), r.fmt, int(r.w), int(r.h))
 
 
 def decode_stats(images: DataFrame) -> DataFrame:
@@ -29,30 +62,19 @@ def decode_stats(images: DataFrame) -> DataFrame:
     shape matches the w/h columns).
     """
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sdg_engine.codecs import decode_image
+    def _stats(r):
+        try:
+            img = _decode(r)
+            ok = img.shape == (int(r.h), int(r.w), 3)
+            row = (r.image_id, float(luma(img).mean()), int(img.min()),
+                   int(img.max()), ok)
+        except Exception:  # noqa: BLE001 — corrupt row -> ok=False
+            row = (r.image_id, None, None, None, False)
+        yield row
 
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    img = decode_image(bytes(r.bytes), r.fmt, int(r.w), int(r.h))
-                    ok = img.shape == (int(r.h), int(r.w), 3)
-                    lum = (
-                        0.299 * img[:, :, 0].astype(np.float64)
-                        + 0.587 * img[:, :, 1]
-                        + 0.114 * img[:, :, 2]
-                    )
-                    out.append((r.image_id, float(lum.mean()), int(img.min()),
-                                int(img.max()), ok))
-                except Exception:  # noqa: BLE001 — corrupt row -> ok=False
-                    out.append((r.image_id, None, None, None, False))
-            yield pd.DataFrame(
-                out, columns=["image_id", "mean_lum", "min_px", "max_px", "ok"]
-            )
-
-    return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        _stats, "image_id string, mean_lum double, min_px int, max_px int, ok boolean"
+    return map_rows(
+        images.select(*_IMG_COLS), _stats,
+        "image_id string, mean_lum double, min_px int, max_px int, ok boolean",
     )
 
 
@@ -68,40 +90,24 @@ def thumbnails(images: DataFrame, tw: int = 16, th: int = 16) -> DataFrame:
     independent generator-pixel twin in the oracle (jpg rows NULL —
     lossy decode, gated by PSNR in tests instead)."""
 
-    def _thumb(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sdg_engine.codecs import decode_image, encode_image
-        from sdg_engine.phash import resize_area
+    def _thumb(r):
+        try:
+            img = _decode(r)
+            chans = [
+                resize_area(img[:, :, c].astype(np.float64), th, tw)
+                for c in range(3)
+            ]
+            thumb = np.clip(
+                np.rint(np.stack(chans, axis=-1)), 0, 255
+            ).astype(np.uint8)
+            row = (r.image_id, encode_image(thumb, "png"), tw, th,
+                   float(luma(thumb).mean()), True)
+        except Exception:  # noqa: BLE001 — corrupt row -> ok=False
+            row = (r.image_id, None, tw, th, None, False)
+        yield row
 
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    img = decode_image(bytes(r.bytes), r.fmt, int(r.w), int(r.h))
-                    chans = [
-                        resize_area(img[:, :, c].astype(np.float64), th, tw)
-                        for c in range(3)
-                    ]
-                    thumb = np.clip(
-                        np.rint(np.stack(chans, axis=-1)), 0, 255
-                    ).astype(np.uint8)
-                    data = encode_image(thumb, "png")
-                    lum = (
-                        0.299 * thumb[:, :, 0].astype(np.float64)
-                        + 0.587 * thumb[:, :, 1]
-                        + 0.114 * thumb[:, :, 2]
-                    )
-                    out.append(
-                        (r.image_id, data, tw, th, float(lum.mean()), True)
-                    )
-                except Exception:  # noqa: BLE001 — corrupt row -> ok=False
-                    out.append((r.image_id, None, tw, th, None, False))
-            yield pd.DataFrame(
-                out,
-                columns=["image_id", "thumb", "tw", "th", "mean_lum", "ok"],
-            )
-
-    return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        _thumb,
+    return map_rows(
+        images.select(*_IMG_COLS), _thumb,
         "image_id string, thumb binary, tw int, th int, mean_lum double, ok boolean",
     )
 
@@ -113,26 +119,13 @@ def transcode(images: DataFrame, to_fmt: str) -> DataFrame:
     computed phash (which must equal the input phash on lossless paths
     — the invariant tests assert it)."""
 
-    def _tx(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sdg_engine.codecs import decode_image, encode_image
-        from sdg_engine.phash import phash64
+    def _tx(r):
+        data = encode_image(_decode(r), to_fmt)
+        rt = decode_image(data, to_fmt, int(r.w), int(r.h))
+        yield (r.image_id, data, int(r.w), int(r.h), to_fmt, r.caption,
+               np.int64(phash64(rt)))
 
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                img = decode_image(bytes(r.bytes), r.fmt, int(r.w), int(r.h))
-                data = encode_image(img, to_fmt)
-                rt = decode_image(data, to_fmt, int(r.w), int(r.h))
-                out.append(
-                    (r.image_id, data, int(r.w), int(r.h), to_fmt, r.caption,
-                     np.int64(phash64(rt)))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["image_id", "bytes", "w", "h", "fmt", "caption", "phash"],
-            )
-
-    return images.mapInPandas(_tx, _IMAGES_SCHEMA)
+    return map_rows(images, _tx, _IMAGES_SCHEMA)
 
 
 def verify_invariants(inputs: DataFrame, outputs: DataFrame) -> DataFrame:
@@ -157,31 +150,20 @@ def verify_invariants(inputs: DataFrame, outputs: DataFrame) -> DataFrame:
         F.col("caption").alias("caption_out"),
         F.col("phash").alias("phash_out"),
     )
-    joined = a.join(b, "image_id")
 
-    def _check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sdg_engine.codecs import decode_image, psnr
+    def _check(r):
+        da = decode_image(bytes(r.bytes_in), r.fmt_in, int(r.w), int(r.h))
+        db = decode_image(bytes(r.bytes_out), r.fmt_out, int(r.w), int(r.h))
+        p = psnr(da, db)
+        yield (
+            r.image_id,
+            1e9 if p == float("inf") else float(p),
+            r.caption_in == r.caption_out,
+            int(bin((int(r.phash_in) ^ int(r.phash_out)) & ((1 << 64) - 1)).count("1")),
+        )
 
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                da = decode_image(bytes(r.bytes_in), r.fmt_in, int(r.w), int(r.h))
-                db = decode_image(bytes(r.bytes_out), r.fmt_out, int(r.w), int(r.h))
-                p = psnr(da, db)
-                out.append(
-                    (
-                        r.image_id,
-                        1e9 if p == float("inf") else float(p),
-                        r.caption_in == r.caption_out,
-                        int(bin((int(r.phash_in) ^ int(r.phash_out)) & ((1 << 64) - 1)).count("1")),
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["image_id", "psnr", "caption_equal", "phash_hamming"]
-            )
-
-    return joined.mapInPandas(
-        _check,
+    return map_rows(
+        a.join(b, "image_id"), _check,
         "image_id string, psnr double, caption_equal boolean, phash_hamming int",
     )
 
@@ -237,31 +219,20 @@ def warp_checksums(images_geo: DataFrame, dst_crs: str,
 
     Needs fp_xmin..fp_ymax from ops.spatial.with_geo."""
 
-    def _warp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sdg_engine.codecs import decode_image
-        from sdg_engine.crs import warp_tile
+    def _warp(r):
+        warped = warp_tile(
+            _decode(r), (r.fp_xmin, r.fp_ymin, r.fp_xmax, r.fp_ymax),
+            dst_crs, out_w, out_h,
+        )
+        yield (
+            r.image_id,
+            int(warped.astype(np.int64).sum()),
+            int((warped != 0).any(axis=2).sum()),
+        )
 
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                img = decode_image(bytes(r.bytes), r.fmt, int(r.w), int(r.h))
-                warped = warp_tile(
-                    img, (r.fp_xmin, r.fp_ymin, r.fp_xmax, r.fp_ymax),
-                    dst_crs, out_w, out_h,
-                )
-                out.append((
-                    r.image_id,
-                    int(warped.astype(np.int64).sum()),
-                    int((warped != 0).any(axis=2).sum()),
-                ))
-            yield pd.DataFrame(
-                out, columns=["image_id", "warp_sum", "n_nonfill"]
-            )
-
-    cols = ["image_id", "bytes", "fmt", "w", "h",
-            "fp_xmin", "fp_ymin", "fp_xmax", "fp_ymax"]
-    return images_geo.select(*cols).mapInPandas(
-        _warp, "image_id string, warp_sum bigint, n_nonfill int"
+    return map_rows(
+        images_geo.select(*_GEO_COLS), _warp,
+        "image_id string, warp_sum bigint, n_nonfill int",
     )
 
 
@@ -275,35 +246,24 @@ def transcode_geotiff(images_geo: DataFrame) -> DataFrame:
 
     Needs fp_xmin..fp_ymax from ops.spatial.with_geo."""
 
-    def _tx(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sdg_engine.codecs import decode_image
-        from sdg_engine.tiff import encode_tiff
+    def _tx(r):
+        ps = ((r.fp_xmax - r.fp_xmin) / int(r.w),
+              (r.fp_ymax - r.fp_ymin) / int(r.h))
+        data = encode_tiff(
+            _decode(r), pixel_scale=ps, tiepoint=(r.fp_xmin, r.fp_ymax)
+        )
+        yield (r.image_id, data, int(r.w), int(r.h), "tif")
 
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                img = decode_image(bytes(r.bytes), r.fmt, int(r.w), int(r.h))
-                ps = ((r.fp_xmax - r.fp_xmin) / int(r.w),
-                      (r.fp_ymax - r.fp_ymin) / int(r.h))
-                data = encode_tiff(
-                    img, pixel_scale=ps, tiepoint=(r.fp_xmin, r.fp_ymax)
-                )
-                out.append((r.image_id, data, int(r.w), int(r.h), "tif"))
-            yield pd.DataFrame(
-                out, columns=["image_id", "bytes", "w", "h", "fmt"]
-            )
-
-    cols = ["image_id", "bytes", "fmt", "w", "h",
-            "fp_xmin", "fp_ymin", "fp_xmax", "fp_ymax"]
-    return images_geo.select(*cols).mapInPandas(
-        _tx, "image_id string, bytes binary, w int, h int, fmt string"
+    return map_rows(
+        images_geo.select(*_GEO_COLS), _tx,
+        "image_id string, bytes binary, w int, h int, fmt string",
     )
 
 
 # --- S6b (r05): colormapped PNG rendering of a binned raster layer ---------
 
-# 8-stop value ramp (cool→hot), arbitrary literals shared verbatim with
-# the DuckDB oracle (oracles_ext.IMAGE_RENDER_COLORMAP's VALUES list)
+# 8-stop value ramp (cool→hot), arbitrary literals; the DuckDB oracle
+# (oracles.image._render_colormap_sql) emits them as its lut VALUES list
 COLORMAP_RAMP = [
     (16, 16, 96), (32, 48, 128), (48, 96, 160), (64, 144, 192),
     (128, 192, 208), (192, 208, 144), (224, 160, 64), (240, 64, 32),
@@ -360,8 +320,8 @@ def render_colormap_png(cells: DataFrame, tile_px: int = 8) -> DataFrame:
 
 # SPEC shared with the golden twin (scripts/make_goldens.py) — the
 # expression ORDER is part of the spec so float64 bits match:
-#   z    = edge-replicated pad of the luminance raster (all-three-
-#          astype lum shape: 0.299*R + 0.587*G + 0.114*B)
+#   z    = edge-replicated pad of codecs.luma(img) (float64 BT.601,
+#          every channel cast before its multiply)
 #   dzdx = ((tr + 2*r + br) - (tl + 2*l + bl)) / 8.0
 #   dzdy = ((bl + 2*b + br) - (tl + 2*t + tr)) / 8.0
 #   slope  = arctan(Z_FACTOR * sqrt(dzdx*dzdx + dzdy*dzdy))
@@ -403,35 +363,13 @@ def hillshade_stats(images: DataFrame) -> DataFrame:
     seamless mosaics is ops/raster's kring(1) halo exchange.
     """
 
-    def _shade(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sdg_engine.codecs import decode_image
+    def _shade(r):
+        s8 = horn_shade8(luma(_decode(r)))
+        yield (r.image_id, int(s8.size), int(s8.sum()), int(s8.min()),
+               int(s8.max()))
 
-        for pdf in batches:
-            out = []
-            for rr in pdf.itertuples(index=False):
-                img = decode_image(bytes(rr.bytes), rr.fmt, int(rr.w), int(rr.h))
-                lum = (
-                    0.299 * img[:, :, 0].astype(np.float64)
-                    + 0.587 * img[:, :, 1].astype(np.float64)
-                    + 0.114 * img[:, :, 2].astype(np.float64)
-                )
-                s8 = horn_shade8(lum)
-                out.append(
-                    (
-                        rr.image_id,
-                        int(s8.size),
-                        int(s8.sum()),
-                        int(s8.min()),
-                        int(s8.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["image_id", "n_px", "sum_shade", "min_shade", "max_shade"],
-            )
-
-    return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        _shade,
+    return map_rows(
+        images.select(*_IMG_COLS), _shade,
         "image_id string, n_px int, sum_shade bigint, "
         "min_shade int, max_shade int",
     )
@@ -440,12 +378,12 @@ def hillshade_stats(images: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Sobel edge density (r05) — the sharpness/blur curation signal an
 # image-corpus pipeline scores before training-set selection.  ALL
-# INTEGER: luma in BT.601 integer milli-units (299R + 587G + 114B),
+# INTEGER: luma in BT.601 integer milli-units (codecs.luma_milli),
 # L1 gradient magnitude |gx| + |gy|, fold-order exact by construction.
 # ---------------------------------------------------------------------------
 
 # SPEC shared with the golden twin (scripts/make_goldens.py):
-#   L  = 299*R + 587*G + 114*B  (int64, edge-replicated pad)
+#   L  = codecs.luma_milli(img)  (int64, edge-replicated pad)
 #   gx = (tr + 2*r + br) - (tl + 2*l + bl)
 #   gy = (bl + 2*b + br) - (tl + 2*t + tr)
 #   mag = |gx| + |gy|; edge pixel when mag > SOBEL_EDGE_T
@@ -467,42 +405,20 @@ def sobel_stats(images: DataFrame) -> DataFrame:
     """Per-image Sobel edge stats: decode -> integer BT.601 luma ->
     3x3 Sobel L1 magnitude -> (n_px, n_edges, sum_mag, max_mag).
 
-    Map-only mapInPandas like hillshade_stats — payload bytes never
-    shuffle, the 3x3 halo is interior to each image (edge-replicate),
-    and every value is an exact BIGINT, so the checksums are
-    fold-order independent at any partitioning.
+    Map-only like hillshade_stats — payload bytes never shuffle, the
+    3x3 halo is interior to each image (edge-replicate), and every
+    value is an exact BIGINT, so the checksums are fold-order
+    independent at any partitioning.
     """
 
-    def _edges(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sdg_engine.codecs import decode_image
+    def _edges(lum):
+        mag = sobel_mag(lum)
+        return (int(mag.size), int((mag > SOBEL_EDGE_T).sum()),
+                int(mag.sum()), int(mag.max()))
 
-        for pdf in batches:
-            out = []
-            for rr in pdf.itertuples(index=False):
-                img = decode_image(bytes(rr.bytes), rr.fmt, int(rr.w), int(rr.h))
-                lum = (
-                    299 * img[:, :, 0].astype(np.int64)
-                    + 587 * img[:, :, 1].astype(np.int64)
-                    + 114 * img[:, :, 2].astype(np.int64)
-                )
-                mag = sobel_mag(lum)
-                out.append(
-                    (
-                        rr.image_id,
-                        int(mag.size),
-                        int((mag > SOBEL_EDGE_T).sum()),
-                        int(mag.sum()),
-                        int(mag.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["image_id", "n_px", "n_edges", "sum_mag", "max_mag"],
-            )
-
-    return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        _edges,
-        "image_id string, n_px int, n_edges int, sum_mag bigint, max_mag bigint",
+    return _int_terrain_op(
+        images, _edges,
+        "n_px int, n_edges int, sum_mag bigint, max_mag bigint",
     )
 
 
@@ -513,7 +429,7 @@ def sobel_stats(images: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 # SPEC shared with the golden twin (scripts/make_goldens.py):
-#   elev = 299*R + 587*G + 114*B  (int64 milli-luma)
+#   elev = codecs.luma_milli(img)  (int64 milli-luma)
 #   neighbors in FIXED order N NE E SE S SW W NW; out-of-bounds
 #   neighbor = the cell itself (clamp), so its drop is 0 and it can
 #   never win the strict-positive steepest-descent test
@@ -566,45 +482,20 @@ def d8_flow_stats(images: DataFrame) -> DataFrame:
     """Per-image D8 flow-accumulation stats: decode -> integer luma
     DEM -> steepest-descent accumulation -> exact-BIGINT summaries.
 
-    Map-only mapInPandas like hillshade/sobel — payload bytes never
-    shuffle; the per-image DAG sweep is local (a DEM tile's flow field
-    is interior under clamp borders), and every output is an exact
-    integer, fold-order independent at any partitioning."""
+    Map-only like hillshade/sobel — payload bytes never shuffle; the
+    per-image DAG sweep is local (a DEM tile's flow field is interior
+    under clamp borders), and every output is an exact integer,
+    fold-order independent at any partitioning."""
 
-    def _flow(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sdg_engine.codecs import decode_image
+    def _flow(lum):
+        acc, n_sinks = d8_flow_accum(lum)
+        wgt = (np.arange(acc.size, dtype=np.int64) % 97) + 1
+        return (int(acc.size), n_sinks, int(acc.sum()), int(acc.max()),
+                int((acc * wgt).sum()))
 
-        for pdf in batches:
-            out = []
-            for rr in pdf.itertuples(index=False):
-                img = decode_image(bytes(rr.bytes), rr.fmt, int(rr.w), int(rr.h))
-                lum = (
-                    299 * img[:, :, 0].astype(np.int64)
-                    + 587 * img[:, :, 1].astype(np.int64)
-                    + 114 * img[:, :, 2].astype(np.int64)
-                )
-                acc, n_sinks = d8_flow_accum(lum)
-                wgt = (np.arange(acc.size, dtype=np.int64) % 97) + 1
-                out.append(
-                    (
-                        rr.image_id,
-                        int(acc.size),
-                        n_sinks,
-                        int(acc.sum()),
-                        int(acc.max()),
-                        int((acc * wgt).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["image_id", "n_px", "n_sinks",
-                         "sum_acc", "max_acc", "chk"],
-            )
-
-    return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        _flow,
-        "image_id string, n_px int, n_sinks int, "
-        "sum_acc bigint, max_acc bigint, chk bigint",
+    return _int_terrain_op(
+        images, _flow,
+        "n_px int, n_sinks int, sum_acc bigint, max_acc bigint, chk bigint",
     )
 
 
@@ -617,31 +508,18 @@ def d8_flow_stats(images: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _int_terrain_op(images: DataFrame, kernel, cols: list[str],
-                    schema_tail: str) -> DataFrame:
+def _int_terrain_op(images: DataFrame, kernel, schema_tail: str) -> DataFrame:
     """Shared map-only scaffold for the integer terrain stats ops:
-    decode -> int64 milli-luma DEM -> per-image kernel(lum) -> row
-    tuple.  Payload bytes never shuffle (zero Exchange, plan-pinned
-    per query); every kernel output is an exact integer so results are
-    partitioning- and fold-order-independent."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sdg_engine.codecs import decode_image
-
-        for pdf in batches:
-            out = []
-            for rr in pdf.itertuples(index=False):
-                img = decode_image(bytes(rr.bytes), rr.fmt, int(rr.w), int(rr.h))
-                lum = (
-                    299 * img[:, :, 0].astype(np.int64)
-                    + 587 * img[:, :, 1].astype(np.int64)
-                    + 114 * img[:, :, 2].astype(np.int64)
-                )
-                out.append((rr.image_id, *kernel(lum)))
-            yield pd.DataFrame(out, columns=["image_id", *cols])
-
-    return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        _run, "image_id string, " + schema_tail
+    decode -> int64 milli-luma DEM -> per-image kernel(lum) -> the row
+    (image_id, *kernel(lum)) under ``"image_id string, " +
+    schema_tail``.  Payload bytes never shuffle (one MapInPandas, zero
+    Exchange — pinned in tests/test_plans.py); every kernel output is
+    an exact integer so results are partitioning- and fold-order-
+    independent."""
+    return map_rows(
+        images.select(*_IMG_COLS),
+        lambda r: [(r.image_id, *kernel(luma_milli(_decode(r))))],
+        "image_id string, " + schema_tail,
     )
 
 
@@ -682,7 +560,6 @@ def watershed_stats(images: DataFrame) -> DataFrame:
     _int_terrain_op)."""
     return _int_terrain_op(
         images, watershed_stats_kernel,
-        ["n_px", "n_basins", "largest_px", "sum_sq", "chk"],
         "n_px int, n_basins int, largest_px int, sum_sq bigint, chk bigint",
     )
 
@@ -755,7 +632,6 @@ def viewshed_stats(images: DataFrame) -> DataFrame:
     _int_terrain_op)."""
     return _int_terrain_op(
         images, viewshed_stats_kernel,
-        ["n_px", "n_visible", "sum_vis_lum", "chk"],
         "n_px int, n_visible int, sum_vis_lum bigint, chk bigint",
     )
 
@@ -811,7 +687,6 @@ def pit_fill_stats(images: DataFrame) -> DataFrame:
     _int_terrain_op)."""
     return _int_terrain_op(
         images, pit_fill_stats_kernel,
-        ["n_px", "n_raised", "sum_delta", "chk"],
         "n_px int, n_raised int, sum_delta bigint, chk bigint",
     )
 
@@ -850,7 +725,6 @@ def glcm_stats(images: DataFrame) -> DataFrame:
     """Per-image GLCM texture stats (map-only; see _int_terrain_op)."""
     return _int_terrain_op(
         images, glcm_features,
-        ["n_pairs", "contrast", "energy", "homog_mils"],
         "n_pairs int, contrast bigint, energy bigint, homog_mils bigint",
     )
 
@@ -920,7 +794,6 @@ def quadtree_stats(images: DataFrame) -> DataFrame:
     _int_terrain_op)."""
     return _int_terrain_op(
         images, quadtree_stats_kernel,
-        ["n_px", "n_leaves", "max_depth", "sum_range", "sum_depth_px"],
         "n_px int, n_leaves int, max_depth int, sum_range bigint, "
         "sum_depth_px bigint",
     )
@@ -961,30 +834,11 @@ def marching_squares_stats(lum: np.ndarray, iso: float = CONTOUR_ISO):
 def contour_stats(images: DataFrame, iso: float = CONTOUR_ISO) -> DataFrame:
     """Per-image marching-squares contour stats at the iso-luminance
     level — decode -> threshold -> 2x2 case grid -> integer sums.
-    Map-only mapInPandas like decode_stats/hillshade_stats: payload
-    bytes never shuffle."""
-
-    def _ms(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sdg_engine.codecs import decode_image
-
-        for pdf in batches:
-            out = []
-            for rr in pdf.itertuples(index=False):
-                img = decode_image(bytes(rr.bytes), rr.fmt, int(rr.w), int(rr.h))
-                lum = (
-                    0.299 * img[:, :, 0].astype(np.float64)
-                    + 0.587 * img[:, :, 1].astype(np.float64)
-                    + 0.114 * img[:, :, 2].astype(np.float64)
-                )
-                out.append((rr.image_id,) + marching_squares_stats(lum, iso))
-            yield pd.DataFrame(
-                out,
-                columns=["image_id", "n_cells", "n_crossed", "n_segments",
-                         "sum_case"],
-            )
-
-    return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        _ms,
+    Map-only like decode_stats/hillshade_stats: payload bytes never
+    shuffle."""
+    return map_rows(
+        images.select(*_IMG_COLS),
+        lambda r: [(r.image_id, *marching_squares_stats(luma(_decode(r)), iso))],
         "image_id string, n_cells int, n_crossed int, n_segments int, "
         "sum_case bigint",
     )
@@ -1061,7 +915,6 @@ def slope_aspect_stats(images: DataFrame) -> DataFrame:
     """Per-image Horn slope/aspect stats (map-only; _int_terrain_op)."""
     return _int_terrain_op(
         images, slope_aspect_kernel,
-        ["n_px", "n_flat", "hist_chk", "n_steep", "sum_s2"],
         "n_px int, n_flat bigint, hist_chk bigint, n_steep bigint, "
         "sum_s2 bigint",
     )
@@ -1114,7 +967,6 @@ def strahler_stats(images: DataFrame) -> DataFrame:
     """Per-image Strahler-order stats (map-only; _int_terrain_op)."""
     return _int_terrain_op(
         images, strahler_stats_kernel,
-        ["n_px", "max_order", "sum_order", "n_ge2", "chk"],
         "n_px int, max_order bigint, sum_order bigint, n_ge2 bigint, "
         "chk bigint",
     )
@@ -1153,7 +1005,6 @@ def hist_equalize_stats(images: DataFrame) -> DataFrame:
     """Per-image histogram-equalization stats (map-only)."""
     return _int_terrain_op(
         images, hist_equalize_kernel,
-        ["n_px", "sum_eq", "n_levels_out", "max_eq", "chk"],
         "n_px int, sum_eq bigint, n_levels_out bigint, max_eq bigint, "
         "chk bigint",
     )
@@ -1196,7 +1047,6 @@ def morphology_stats(images: DataFrame) -> DataFrame:
     """Per-image 3x3 morphology stats (map-only)."""
     return _int_terrain_op(
         images, morphology_kernel,
-        ["n_px", "sum_erode", "sum_dilate", "n_edge", "chk"],
         "n_px int, sum_erode bigint, sum_dilate bigint, n_edge bigint, "
         "chk bigint",
     )
@@ -1230,7 +1080,6 @@ def median3_stats(images: DataFrame) -> DataFrame:
     """Per-image 3x3 median-filter stats (map-only)."""
     return _int_terrain_op(
         images, median3_kernel,
-        ["n_px", "sum_med", "n_changed", "max_absdiff", "chk"],
         "n_px int, sum_med bigint, n_changed bigint, max_absdiff bigint, "
         "chk bigint",
     )
@@ -1263,7 +1112,6 @@ def box_downscale_stats(images: DataFrame) -> DataFrame:
     """Per-image 2x box-downscale stats (map-only)."""
     return _int_terrain_op(
         images, box_downscale_kernel,
-        ["n_out", "sum_ds", "max_ds", "min_ds", "chk"],
         "n_out int, sum_ds bigint, max_ds bigint, min_ds bigint, "
         "chk bigint",
     )
@@ -1309,7 +1157,6 @@ def otsu_stats(images: DataFrame) -> DataFrame:
     """Per-image Otsu binarization stats (map-only)."""
     return _int_terrain_op(
         images, otsu_kernel,
-        ["thr", "n_fg", "sum_fg", "chk"],
         "thr int, n_fg bigint, sum_fg bigint, chk bigint",
     )
 
@@ -1353,7 +1200,6 @@ def tpi_tri_stats(images: DataFrame) -> DataFrame:
     """Per-image TPI/TRI terrain-index stats (map-only)."""
     return _int_terrain_op(
         images, tpi_tri_kernel,
-        ["n_px", "sum_tri", "max_tri", "n_ridge", "n_valley", "chk"],
         "n_px int, sum_tri bigint, max_tri bigint, n_ridge bigint, "
         "n_valley bigint, chk bigint",
     )
@@ -1403,7 +1249,6 @@ def flow_length_stats(images: DataFrame) -> DataFrame:
     """Per-image D8 downstream flow-length stats (map-only)."""
     return _int_terrain_op(
         images, flow_length_kernel,
-        ["n_px", "n_sinks", "sum_len", "max_len", "chk"],
         "n_px int, n_sinks int, sum_len bigint, max_len bigint, "
         "chk bigint",
     )
@@ -1459,7 +1304,6 @@ def edt_stats(images: DataFrame) -> DataFrame:
     """Per-image exact-EDT stats (map-only)."""
     return _int_terrain_op(
         images, edt_kernel,
-        ["n_px", "n_fg", "sum_d2", "max_d2", "chk"],
         "n_px int, n_fg bigint, sum_d2 bigint, max_d2 bigint, chk bigint",
     )
 
@@ -1491,7 +1335,6 @@ def fft_sharpness_stats(images: DataFrame) -> DataFrame:
     """Per-image FFT sharpness stats (map-only)."""
     return _int_terrain_op(
         images, fft_sharpness_kernel,
-        ["n_px", "hf_ratio_micros", "peak_u", "peak_v"],
         "n_px int, hf_ratio_micros bigint, peak_u int, peak_v int",
     )
 
@@ -1542,7 +1385,6 @@ def ssim_recon_stats(images: DataFrame) -> DataFrame:
     """Per-image reconstruction-SSIM stats (map-only)."""
     return _int_terrain_op(
         images, ssim_recon_kernel,
-        ["n_px", "sum_recon", "ssim_micros", "chk"],
         "n_px int, sum_recon bigint, ssim_micros bigint, chk bigint",
     )
 
@@ -1602,7 +1444,6 @@ def fast_corner_stats(images: DataFrame) -> DataFrame:
     """Per-image FAST-12 corner stats (map-only)."""
     return _int_terrain_op(
         images, fast_corner_kernel,
-        ["n_interior", "n_corners", "n_bright", "n_dark", "chk"],
         "n_interior int, n_corners bigint, n_bright bigint, "
         "n_dark bigint, chk bigint",
     )
@@ -1665,7 +1506,6 @@ def affine_bilinear_stats(images: DataFrame) -> DataFrame:
     """Per-image fixed-point bilinear rotation stats (map-only)."""
     return _int_terrain_op(
         images, affine_bilinear_kernel,
-        ["n_sampled", "sum_out", "max_out", "chk"],
         "n_sampled bigint, sum_out bigint, max_out bigint, chk bigint",
     )
 
@@ -1765,7 +1605,6 @@ def canny_hysteresis_stats(images: DataFrame) -> DataFrame:
     """Per-image hysteresis edge stats (map-only)."""
     return _int_terrain_op(
         images, canny_hysteresis_kernel,
-        ["n_weak", "n_strong", "n_final", "chk"],
         "n_weak bigint, n_strong bigint, n_final bigint, chk bigint",
     )
 
@@ -1774,7 +1613,6 @@ def hough_lines_stats(images: DataFrame) -> DataFrame:
     """Per-image dominant-line Hough stats (map-only)."""
     return _int_terrain_op(
         images, hough_lines_kernel,
-        ["n_edges", "best_votes", "best_theta", "best_rho", "chk"],
         "n_edges bigint, best_votes bigint, best_theta bigint, "
         "best_rho bigint, chk bigint",
     )
@@ -1851,7 +1689,6 @@ def harris_corner_stats(images: DataFrame) -> DataFrame:
     """Per-image Harris corner stats (map-only)."""
     return _int_terrain_op(
         images, harris_corner_kernel,
-        ["n_interior", "n_corners", "sum_rq", "max_r", "chk"],
         "n_interior bigint, n_corners bigint, sum_rq bigint, "
         "max_r bigint, chk bigint",
     )
@@ -1934,7 +1771,6 @@ def zhang_suen_stats(images: DataFrame) -> DataFrame:
     """Per-image skeletonization stats (map-only)."""
     return _int_terrain_op(
         images, zhang_suen_kernel,
-        ["n_fg", "n_skel", "n_iters", "chk"],
         "n_fg bigint, n_skel bigint, n_iters bigint, chk bigint",
     )
 
@@ -1979,7 +1815,6 @@ def lbp_texture_stats(images: DataFrame) -> DataFrame:
     """Per-image LBP texture stats (map-only)."""
     return _int_terrain_op(
         images, lbp_texture_kernel,
-        ["n_interior", "n_uniform", "sum_code", "chk"],
         "n_interior bigint, n_uniform bigint, sum_code bigint, chk bigint",
     )
 
@@ -2049,7 +1884,6 @@ def canny_nms_stats(images: DataFrame) -> DataFrame:
     """Per-image thin-edge stats (map-only)."""
     return _int_terrain_op(
         images, canny_nms_kernel,
-        ["n_raw", "n_thin", "chk"],
         "n_raw bigint, n_thin bigint, chk bigint",
     )
 
@@ -2118,7 +1952,6 @@ def dither_fs_stats(images: DataFrame) -> DataFrame:
     """Per-image Floyd-Steinberg dither stats (map-only)."""
     return _int_terrain_op(
         images, dither_fs_kernel,
-        ["n_px", "n_on", "chk"],
         "n_px bigint, n_on bigint, chk bigint",
     )
 
@@ -2188,7 +2021,6 @@ def dog_blob_stats(images: DataFrame) -> DataFrame:
     """Per-image DoG blob stats (map-only)."""
     return _int_terrain_op(
         images, dog_blob_kernel,
-        ["n_core", "n_bright", "n_dark", "sum_absdog", "chk"],
         "n_core bigint, n_bright bigint, n_dark bigint, "
         "sum_absdog bigint, chk bigint",
     )
@@ -2235,7 +2067,6 @@ def haar_energy_stats(images: DataFrame) -> DataFrame:
     """Per-image Haar subband energies (map-only)."""
     return _int_terrain_op(
         images, haar_energy_kernel,
-        ["n_px", "e_ll2", "e_h1", "e_v1", "e_d1", "e_h2", "e_v2", "e_d2"],
         "n_px bigint, e_ll2 bigint, e_h1 bigint, e_v1 bigint,"
         " e_d1 bigint, e_h2 bigint, e_v2 bigint, e_d2 bigint",
     )
@@ -2296,7 +2127,6 @@ def seam_carve_stats(images: DataFrame) -> DataFrame:
     """Per-image vertical-seam stats (map-only)."""
     return _int_terrain_op(
         images, seam_carve_kernel,
-        ["seam_cost", "top_col", "bottom_col", "sum_energy", "chk"],
         "seam_cost bigint, top_col bigint, bottom_col bigint,"
         " sum_energy bigint, chk bigint",
     )
@@ -2348,7 +2178,6 @@ def template_match_stats(images: DataFrame) -> DataFrame:
     """Per-image template-match stats (map-only)."""
     return _int_terrain_op(
         images, template_match_kernel,
-        ["n_pos", "best_ssd", "best_row", "best_col", "ssd_chk"],
         "n_pos bigint, best_ssd bigint, best_row bigint,"
         " best_col bigint, ssd_chk bigint",
     )
@@ -2427,23 +2256,9 @@ def palette_mediancut_kernel(px: np.ndarray) -> tuple[int, int, int, int]:
 
 def palette_mediancut_stats(images: DataFrame) -> DataFrame:
     """Per-image median-cut palette stats (map-only)."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sdg_engine.codecs import decode_image
-
-        for pdf in batches:
-            out = []
-            for rr in pdf.itertuples(index=False):
-                img = decode_image(bytes(rr.bytes), rr.fmt, int(rr.w),
-                                   int(rr.h))
-                out.append((rr.image_id, *palette_mediancut_kernel(img)))
-            yield pd.DataFrame(
-                out,
-                columns=["image_id", "n_distinct", "n_boxes", "err",
-                         "chk"],
-            )
-
-    return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        _run, "image_id string, n_distinct bigint, n_boxes bigint,"
-        " err bigint, chk bigint"
+    return map_rows(
+        images.select(*_IMG_COLS),
+        lambda r: [(r.image_id, *palette_mediancut_kernel(_decode(r)))],
+        "image_id string, n_distinct bigint, n_boxes bigint,"
+        " err bigint, chk bigint",
     )

@@ -34,8 +34,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from .. import METERS_PER_DEG
-from ..codecs import decode_image
+from ..codecs import decode_image, luma
 from ..geom import clip_segments_to_rect
+from ..skew import spread
+from .payload import _IMG_COLS, _decode, map_rows
 from .spatial import ring_cover, with_point_cell
 
 _SUMMARY_SCHEMA = (
@@ -264,11 +266,7 @@ def summarize_tile_rows(rows, segs_of, cutoff: float,
     metas = []
     for i, row in enumerate(rows):
         img = decode_image(bytes(row.bytes), row.fmt, int(row.w), int(row.h))
-        lum = (
-            0.299 * img[:, :, 0].astype(np.float64)
-            + 0.587 * img[:, :, 1].astype(np.float64)
-            + 0.114 * img[:, :, 2].astype(np.float64)
-        )
+        lum = luma(img)
         segs = segs_of(i, row)
         mask = burn_mask(int(row.w), int(row.h),
                          row.fp_xmin, row.fp_ymin, row.fp_xmax, row.fp_ymax,
@@ -325,12 +323,7 @@ def tile_summary(
     per-tile math is identical by construction; the DISTRIBUTED parts
     (which segments reach which tile, halo exchange) are what the Spark
     tests exercise."""
-    img = decode_image(data, fmt, w, h)
-    lum = (
-        0.299 * img[:, :, 0].astype(np.float64)
-        + 0.587 * img[:, :, 1].astype(np.float64)
-        + 0.114 * img[:, :, 2].astype(np.float64)
-    )
+    lum = luma(decode_image(data, fmt, w, h))
     mask = burn_mask(w, h, xmin, ymin, xmax, ymax, segs)
     if mask.any():
         dist_px = chamfer_distance(mask)
@@ -481,14 +474,12 @@ def burn_cost_summaries(
                              "px_total", "px_near", "n_segs", *passthrough],
                 )
 
-        out = pts.select(*img_cols)
-        # local fixture files scan as 1-2 partitions — spread them so the
-        # map-only stage uses the cluster; a production multi-file table
-        # already has >= parallelism partitions and skips this shuffle
-        par = images_geo.sparkSession.sparkContext.defaultParallelism
-        if out.rdd.getNumPartitions() < par:
-            out = out.repartition(par)
-        result = out.mapInPandas(_map_batches, out_schema)
+        # local fixture files scan as 1-2 partitions — spread them on
+        # image_id so the map-only stage uses the cluster; a production
+        # multi-file table already has enough partitions and skips it
+        result = spread(pts.select(*img_cols), "image_id").mapInPandas(
+            _map_batches, out_schema
+        )
         result._sdg_road_lut_bc = bc  # explicit cleanup handle (see above)
         return result
 
@@ -590,27 +581,8 @@ def region_stats(images, iso: float = 128.0):
     region stitching at mosaic scale is the kring(1) halo pattern
     (ops/raster burn) + a component merge on border runs — out of
     scope here where tiles are whole images."""
-    import pandas as pd
-
-    def _reg(batches):
-        from sdg_engine.codecs import decode_image
-
-        for pdf in batches:
-            out = []
-            for rr in pdf.itertuples(index=False):
-                img = decode_image(bytes(rr.bytes), rr.fmt, int(rr.w), int(rr.h))
-                lum = (
-                    0.299 * img[:, :, 0].astype(np.float64)
-                    + 0.587 * img[:, :, 1].astype(np.float64)
-                    + 0.114 * img[:, :, 2].astype(np.float64)
-                )
-                n, largest, fg = label_region_stats(lum >= iso)
-                out.append((rr.image_id, n, largest, fg))
-            yield pd.DataFrame(
-                out, columns=["image_id", "n_regions", "largest_px", "n_fg"]
-            )
-
-    return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        _reg,
+    return map_rows(
+        images.select(*_IMG_COLS),
+        lambda r: [(r.image_id, *label_region_stats(luma(_decode(r)) >= iso))],
         "image_id string, n_regions int, largest_px int, n_fg int",
     )

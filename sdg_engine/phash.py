@@ -13,6 +13,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from .codecs import luma
+
 _N = 32  # DCT input size
 
 
@@ -61,12 +63,7 @@ def _resize_area(gray: np.ndarray, out: int = _N) -> np.ndarray:
 
 def phash64(img: np.ndarray) -> int:
     """64-bit perceptual hash of an (h, w, 3) uint8 image."""
-    gray = (
-        0.299 * img[:, :, 0].astype(np.float64)
-        + 0.587 * img[:, :, 1].astype(np.float64)
-        + 0.114 * img[:, :, 2].astype(np.float64)
-    )
-    small = _resize_area(gray, _N)
+    small = _resize_area(luma(img), _N)
     dct = _DCT @ small @ _DCT.T
     block = dct[:8, :8].copy().reshape(-1)
     med = np.median(block[1:])  # skip DC

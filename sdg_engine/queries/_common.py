@@ -94,24 +94,6 @@ def _drain_confs(spark, parts: str = "8", nodata: bool = True):
         )
 
 
-def _spread(df, key: str = "doc_id"):
-    """Scale-ADAPTIVE underparallelism fix (r06, guide §2.5 "input
-    skew ... repartition immediately after the read"): a small corpus
-    arrives as ONE parquet split, so every expensive projection chained
-    on the scan (interpreted shingle HOFs, md5 chains) runs in a single
-    task while the other cores idle.  Hash-repartition on the row key
-    ONLY when the scan has fewer partitions than the session's
-    parallelism — a 100 TB scan already has thousands of splits and
-    takes the `df` branch untouched (no extra exchange of the corpus).
-    Deterministic key (never round-robin: rand-keyed repartition breaks
-    under task retry, SPARK-38388) and row-identity is trivially
-    preserved."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        return df.repartition(par, F.col(key))
-    return df
-
-
 def _fixture_sf(sf_dir: str) -> float:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     return float(m.group(1)) if m else 0.001

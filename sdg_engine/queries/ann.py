@@ -6,7 +6,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ._common import _drain_confs, _spread, _t
+from ..skew import spread
+from ._common import _drain_confs, _t
 
 
 _DOT = (
@@ -518,10 +519,10 @@ def ann_pq_topk(spark, sf_dir):
     IVF-ADC shape.  Centroid updates ROUND(avg, 6) in both engines
     (full-mantissa values ⇒ no boundary ties; kmeans precedent).
     """
-    # r06: _spread — the interpreted HOF distance evaluations
+    # r06: spread — the interpreted HOF distance evaluations
     # (sub × 16 centroids per assign pass) otherwise run in the
     # single-split scan's one task (guide §2.5)
-    emb = _spread(_t(spark, sf_dir, "embeddings"), "vec_id").select(
+    emb = spread(_t(spark, sf_dir, "embeddings"), "vec_id").select(
         "vec_id", F.expr("CAST(embedding AS ARRAY<DOUBLE>)").alias("emb")
     )
     sub = (

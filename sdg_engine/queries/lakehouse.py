@@ -7,11 +7,11 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F
 
+from ..skew import spread
 from ._common import (
     _TS_US,
     _b12_cells,
     _fixture_images,
-    _spread,
     _stream_base,
     _t,
 )
@@ -1320,7 +1320,7 @@ def avro_roundtrip_events(spark, sf_dir):
             {"name": "props", "type": ["null", "string"]},
         ],
     }
-    # r06: _spread parallelizes the export (one shard per partition —
+    # r06: spread parallelizes the export (one shard per partition —
     # the single-split scan wrote ONE shard from one task; now even
     # AND odd shard ids exist, so both codec paths run, and the
     # re-ingest decodes shards in parallel), and the writer is an
@@ -1328,7 +1328,7 @@ def avro_roundtrip_events(spark, sf_dir):
     # pickled every Row one at a time across the Python boundary —
     # guide §4.1).  Row content per record is identical; the oracle
     # aggregates are shard-layout-independent.
-    ev = _spread(_t(spark, sf_dir, "events"), "event_id").selectExpr(
+    ev = spread(_t(spark, sf_dir, "events"), "event_id").selectExpr(
         "event_id", "unix_micros(CAST(ts AS TIMESTAMP)) AS ts_us",
         "user_id", "event_type", "value", "props",
     )

@@ -8,6 +8,7 @@ import pandas as pd
 from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..ops.payload import map_rows
 from ._common import _TS_US, _b12_cells, _drain_confs, _t
 
 
@@ -2953,8 +2954,6 @@ def events_dtw(spark, sf_dir):
     lattice as a shortest-path DAG, Bellman-Ford unrolled 54 rounds
     with zero-weight self-loop moves (single back-reference per round,
     the shortest_path_weighted technique)."""
-    import pandas as pd
-
     ev = _t(spark, sf_dir, "events").selectExpr(
         "event_type AS t",
         f"CAST(FLOOR({_TS_US} / {_DAY_US}) AS BIGINT) AS day",
@@ -2987,36 +2986,30 @@ def events_dtw(spark, sf_dir):
     base = arrs.filter("t = 'view'").selectExpr("vs AS bs")
     pairs = arrs.filter("t <> 'view'").crossJoin(F.broadcast(base))
 
-    def _dp(batches):
+    def _dp(r):
         inf = 1 << 62
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                a = [int(x) for x in r.vs]
-                b = [int(x) for x in r.bs]
-                n = len(a)
-                dpt = [[inf] * n for _ in range(n)]
-                for i in range(n):
-                    lo = max(0, i - _DTW_BAND)
-                    hi = min(n, i + _DTW_BAND + 1)
-                    for j in range(lo, hi):
-                        c = abs(a[i] - b[j])
-                        if i == 0 and j == 0:
-                            best = 0
-                        else:
-                            best = min(
-                                dpt[i - 1][j] if i else inf,
-                                dpt[i][j - 1] if j else inf,
-                                dpt[i - 1][j - 1] if i and j else inf,
-                            )
-                        dpt[i][j] = c + best
-                rows.append((r.t, n, dpt[n - 1][n - 1]))
-            yield pd.DataFrame(
-                rows, columns=["event_type", "n_days", "dtw_cost"]
-            )
+        a = [int(x) for x in r.vs]
+        b = [int(x) for x in r.bs]
+        n = len(a)
+        dpt = [[inf] * n for _ in range(n)]
+        for i in range(n):
+            lo = max(0, i - _DTW_BAND)
+            hi = min(n, i + _DTW_BAND + 1)
+            for j in range(lo, hi):
+                c = abs(a[i] - b[j])
+                if i == 0 and j == 0:
+                    best = 0
+                else:
+                    best = min(
+                        dpt[i - 1][j] if i else inf,
+                        dpt[i][j - 1] if j else inf,
+                        dpt[i - 1][j - 1] if i and j else inf,
+                    )
+                dpt[i][j] = c + best
+        yield (r.t, n, dpt[n - 1][n - 1])
 
-    return pairs.mapInPandas(
-        _dp, "event_type string, n_days int, dtw_cost bigint"
+    return map_rows(
+        pairs, _dp, "event_type string, n_days int, dtw_cost bigint"
     )
 
 

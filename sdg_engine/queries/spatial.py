@@ -16,11 +16,12 @@ from pyspark.sql import functions as F
 
 from ..harness import KNN_CUTOFF_M, harness_rings, points_df, segments_df
 from ..ops import spatial as SP
+from ..ops.payload import map_rows
+from ..skew import spread
 from ._common import (
     _BFS_NODE,
     _components_jump,
     _fixture_images,
-    _spread,
     _stream_base,
     _t,
 )
@@ -441,29 +442,20 @@ def roads_simplify_dp(spark, sf_dir):
     bound caps per-row work.  Oracle: committed INDEPENDENT golden
     (scripts/make_goldens.py make_dp_golden — scalar recursive twin).
     """
-    import numpy as np
-    import pandas as pd
+    from ..geom import dp_keep_mask
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
 
-    def _dp(batches):
-        from sdg_engine.geom import dp_keep_mask
+    def _dp(r):
+        pts = np.array([[p["x"], p["y"]] for p in r.coords])
+        keep = dp_keep_mask(pts, 0.01)
+        mask = 0
+        for k in np.nonzero(keep)[0]:
+            mask |= 1 << int(k)
+        yield (r.road_id, r.kind, len(pts), int(keep.sum()), mask)
 
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                pts = np.array([[p["x"], p["y"]] for p in r.coords])
-                keep = dp_keep_mask(pts, 0.01)
-                mask = 0
-                for k in np.nonzero(keep)[0]:
-                    mask |= 1 << int(k)
-                out.append((r.road_id, r.kind, len(pts), int(keep.sum()), mask))
-            yield pd.DataFrame(
-                out, columns=["road_id", "kind", "n_pts", "n_kept", "kept_mask"]
-            )
-
-    return roads.select("road_id", "kind", "coords").mapInPandas(
-        _dp,
+    return map_rows(
+        roads.select("road_id", "kind", "coords"), _dp,
         "road_id bigint, kind string, n_pts int, n_kept int, kept_mask bigint",
     )
 
@@ -478,29 +470,18 @@ def _simplified_segments(roads, eps: float):
     segments (road_id, seg_id, ax, ay, bx, by) — map-only mapInPandas;
     coordinates are the ORIGINAL vertices (DP only drops, never moves),
     so they round-trip parquet exactly for the golden compare."""
-    import numpy as np
-    import pandas as pd
+    from ..geom import dp_keep_mask
 
-    def _seg(batches):
-        from sdg_engine.geom import dp_keep_mask
+    def _seg(r):
+        pts = np.array([[p["x"], p["y"]] for p in r.coords])
+        kept = np.nonzero(dp_keep_mask(pts, eps))[0]
+        for si in range(len(kept) - 1):
+            a, b = pts[kept[si]], pts[kept[si + 1]]
+            yield (r.road_id, si, float(a[0]), float(a[1]),
+                   float(b[0]), float(b[1]))
 
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                pts = np.array([[p["x"], p["y"]] for p in r.coords])
-                kept = np.nonzero(dp_keep_mask(pts, eps))[0]
-                for si in range(len(kept) - 1):
-                    a, b = pts[kept[si]], pts[kept[si + 1]]
-                    out.append(
-                        (r.road_id, si, float(a[0]), float(a[1]),
-                         float(b[0]), float(b[1]))
-                    )
-            yield pd.DataFrame(
-                out, columns=["road_id", "seg_id", "ax", "ay", "bx", "by"]
-            )
-
-    return roads.select("road_id", "coords").mapInPandas(
-        _seg,
+    return map_rows(
+        roads.select("road_id", "coords"), _seg,
         "road_id bigint, seg_id int, ax double, ay double, "
         "bx double, by double",
     )
@@ -904,9 +885,9 @@ def geohash_cells(spark, sf_dir):
     from ..harness import PX, PY
     from ..sqlgen import apply_steps, geohash_steps
 
-    # r06: _spread — the 6-level base-32 string construction otherwise
+    # r06: spread — the 6-level base-32 string construction otherwise
     # runs inside the single-split scan task (guide §2.5)
-    pts = _spread(_t(spark, sf_dir, "orders"), "o_orderkey").selectExpr(
+    pts = spread(_t(spark, sf_dir, "orders"), "o_orderkey").selectExpr(
         "o_orderkey AS point_id", f"{PX} AS lon", f"{PY} AS lat"
     )
     steps = geohash_steps("lon", "lat", 6, "gh")
@@ -1587,8 +1568,6 @@ def roads_frechet(spark, sf_dir):
     lattice, Bellman-relaxed with MATERIALIZED unrolled rounds and
     self-loop moves (the events_dtw technique with a max-min
     semiring)."""
-    import pandas as pd
-
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     first = roads.selectExpr(
         "road_id",
@@ -1610,35 +1589,29 @@ def roads_frechet(spark, sf_dir):
         .select("ra", "rb", "qa", "qb")
     )
 
-    def _dp(batches):
+    def _dp(r):
         inf = 1 << 62
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                a = [(int(p["x"]), int(p["y"])) for p in r.qa]
-                b = [(int(p["x"]), int(p["y"])) for p in r.qb]
-                na, nb = len(a), len(b)
-                dpt = [[inf] * nb for _ in range(na)]
-                for i in range(na):
-                    for j in range(nb):
-                        d = ((a[i][0] - b[j][0]) ** 2
-                             + (a[i][1] - b[j][1]) ** 2)
-                        if i == 0 and j == 0:
-                            prev = 0
-                        else:
-                            prev = min(
-                                dpt[i - 1][j] if i else inf,
-                                dpt[i][j - 1] if j else inf,
-                                dpt[i - 1][j - 1] if i and j else inf,
-                            )
-                        dpt[i][j] = max(d, prev)  # every cell reachable
-                rows.append((r.ra, r.rb, na, nb, dpt[na - 1][nb - 1]))
-            yield pd.DataFrame(
-                rows, columns=["ra", "rb", "n_a", "n_b", "f_sq"]
-            )
+        a = [(int(p["x"]), int(p["y"])) for p in r.qa]
+        b = [(int(p["x"]), int(p["y"])) for p in r.qb]
+        na, nb = len(a), len(b)
+        dpt = [[inf] * nb for _ in range(na)]
+        for i in range(na):
+            for j in range(nb):
+                d = ((a[i][0] - b[j][0]) ** 2
+                     + (a[i][1] - b[j][1]) ** 2)
+                if i == 0 and j == 0:
+                    prev = 0
+                else:
+                    prev = min(
+                        dpt[i - 1][j] if i else inf,
+                        dpt[i][j - 1] if j else inf,
+                        dpt[i - 1][j - 1] if i and j else inf,
+                    )
+                dpt[i][j] = max(d, prev)  # every cell reachable
+        yield (r.ra, r.rb, na, nb, dpt[na - 1][nb - 1])
 
-    out = pairs.mapInPandas(
-        _dp, "ra bigint, rb bigint, n_a int, n_b int, f_sq bigint"
+    out = map_rows(
+        pairs, _dp, "ra bigint, rb bigint, n_a int, n_b int, f_sq bigint"
     )
     return out.selectExpr(
         "ra", "rb", "n_a", "n_b", "f_sq",
@@ -1824,8 +1797,6 @@ def country_clip_area(spark, sf_dir):
     hillshade rule), different mechanics."""
     import os
 
-    import pandas as pd
-
     from ..geom import clip_polygon_convex, ring_area_seq
     from ..jobs.rai import fixture_dir
 
@@ -1833,30 +1804,21 @@ def country_clip_area(spark, sf_dir):
     countries = spark.read.parquet(cdir)
     aoi = [tuple(p) for p in AOI_RING[:-1]]
 
-    def _clip(batches):
-        import numpy as np
+    def _clip(r):
+        ring = np.array([(p["x"], p["y"]) for p in r.ring])
+        if (ring[0] == ring[-1]).all():
+            ring = ring[:-1]
+        inter = clip_polygon_convex(ring, np.array(aoi))
+        a_c = abs(ring_area_seq(ring))
+        a_i = abs(ring_area_seq(inter)) if len(inter) >= 3 else 0.0
+        yield (
+            r.country_code, int(len(ring)), int(len(inter)),
+            int(np.floor(a_i * 1e9)), int(np.floor(a_c * 1e9)),
+            int(np.floor(a_i / a_c * 1_000_000.0)),
+        )
 
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                ring = np.array([(p["x"], p["y"]) for p in r.ring])
-                if (ring[0] == ring[-1]).all():
-                    ring = ring[:-1]
-                inter = clip_polygon_convex(ring, np.array(aoi))
-                a_c = abs(ring_area_seq(ring))
-                a_i = abs(ring_area_seq(inter)) if len(inter) >= 3 else 0.0
-                out.append((
-                    r.country_code, int(len(ring)), int(len(inter)),
-                    int(np.floor(a_i * 1e9)), int(np.floor(a_c * 1e9)),
-                    int(np.floor(a_i / a_c * 1_000_000.0)),
-                ))
-            yield pd.DataFrame(out, columns=[
-                "country_code", "n_in", "n_out", "inter_area_nano",
-                "country_area_nano", "frac_micros",
-            ])
-
-    return countries.mapInPandas(
-        _clip,
+    return map_rows(
+        countries, _clip,
         "country_code string, n_in int, n_out int, inter_area_nano "
         "bigint, country_area_nano bigint, frac_micros bigint",
     )
@@ -2119,35 +2081,24 @@ def roads_simplify_vw(spark, sf_dir):
     per step — same removals, different mechanics.  Output carries
     the kept-vertex BITMASK (n_pts <= 42 fits bigint) like the DP
     twin, so one flipped keep decision fails the hash."""
-    import numpy as np
+    from ..geom import vw_keep_mask
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
 
-    def _vw(batches):
-        from sdg_engine.geom import vw_keep_mask
+    def _vw(r):
+        q = np.array([
+            [int(np.floor(p["x"] * 1e5 + 0.5)),
+             int(np.floor(p["y"] * 1e5 + 0.5))]
+            for p in r.coords
+        ], dtype=np.int64)
+        keep, removed = vw_keep_mask(q, _VW_A2_MIN)
+        mask = 0
+        for k in np.nonzero(keep)[0]:
+            mask |= 1 << int(k)
+        yield (r.road_id, r.kind, len(q), int(keep.sum()), mask, removed)
 
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                q = np.array([
-                    [int(np.floor(p["x"] * 1e5 + 0.5)),
-                     int(np.floor(p["y"] * 1e5 + 0.5))]
-                    for p in r.coords
-                ], dtype=np.int64)
-                keep, removed = vw_keep_mask(q, _VW_A2_MIN)
-                mask = 0
-                for k in np.nonzero(keep)[0]:
-                    mask |= 1 << int(k)
-                out.append((r.road_id, r.kind, len(q),
-                            int(keep.sum()), mask, removed))
-            yield pd.DataFrame(
-                out,
-                columns=["road_id", "kind", "n_in", "n_kept",
-                         "keep_mask", "removed_a2"],
-            )
-
-    return roads.select("road_id", "kind", "coords").mapInPandas(
-        _vw,
+    return map_rows(
+        roads.select("road_id", "kind", "coords"), _vw,
         "road_id bigint, kind string, n_in bigint, n_kept bigint,"
         " keep_mask bigint, removed_a2 bigint",
     )

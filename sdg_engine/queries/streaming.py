@@ -119,6 +119,51 @@ def streaming_interval_join(spark, sf_dir):
     return res
 
 
+def _interval_join_inputs(spark, sf_dir, prefix: str):
+    """Input files for the stream-stream outer interval joins; returns
+    (in_dir, out, ck) under a fresh :func:`_stream_base` dir.
+
+    Events before 2024-01-11 (DEMO BOUND: join-state churn is per-row
+    and the full sf0.1 month ran 125 s in the bench for no extra
+    semantic coverage; the oracles apply the same absolute bound), in
+    TWO chronological chunks — the drained result depends only on the
+    FINAL watermark, so extra chunk boundaries only re-pay per-batch
+    fixed cost (~1-1.5 s each) — then two trailing FILLER files (gotcha
+    16a: outer-join NULL eviction runs at the end of the batch AFTER
+    the watermark crosses the bound).  'signup' filler rows join
+    neither side, so they advance the watermark without touching join
+    state.  FileStreamSource orders pending files by mtime ONLY (ms
+    resolution, no path tie-break), so the files get strictly
+    increasing whole-second mtimes in the order they were written."""
+    import datetime as _dt
+    import os
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    base = _stream_base(spark, prefix)
+    in_dir = os.path.join(base, "in")
+    os.makedirs(in_dir)
+    t = pq.read_table(f"{sf_dir}/events.parquet")
+    t = t.filter(
+        pa.compute.less(t["ts"], pa.scalar(_dt.datetime(2024, 1, 11)))
+    )
+    t = t.take(pa.compute.sort_indices(t, sort_keys=[("ts", "ascending")]))
+    n = t.num_rows
+    filler = t.filter(pa.compute.equal(t["event_type"], "signup")).slice(0, 4)
+    files = [(t.slice(k * n // 2, (k + 1) * n // 2 - k * n // 2),
+              f"chunk-{k:02d}.parquet") for k in range(2)]
+    files += [(filler, f"chunk-9{k}-filler.parquet") for k in range(2)]
+    t0 = time.time()
+    for i, (tbl, name) in enumerate(files):
+        path = os.path.join(in_dir, name)
+        pq.write_table(tbl, path)
+        os.utime(path, (t0 + i, t0 + i))
+    return in_dir, os.path.join(base, "out"), os.path.join(base, "ck")
+
+
 def streaming_left_join(spark, sf_dir):
     """Stream-stream LEFT OUTER interval join drained to parquet: the
     outer-join state-eviction path (NULL emission for clicks the
@@ -127,60 +172,9 @@ def streaming_left_join(spark, sf_dir):
     batches and every bounded click's NULL row flushes before the
     drain ends; the DuckDB oracle is the plain batch left join over
     the same click bound."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from .. import streaming as STR
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = _stream_base(spark, "slj_")
-    in_dir = os.path.join(base, "in")
-    os.makedirs(in_dir)
-    t = pq.read_table(f"{sf_dir}/events.parquet")
-    # DEMO BOUND: first 10 days only — join-state churn is per-row and
-    # the full sf0.1 month ran 125 s in the bench for no extra semantic
-    # coverage; the oracle applies the same absolute bound.
-    import datetime as _dt
-
-    t = t.filter(
-        pa.compute.less(t["ts"], pa.scalar(_dt.datetime(2024, 1, 11)))
-    )
-    idx = pa.compute.sort_indices(t, sort_keys=[("ts", "ascending")])
-    t = t.take(idx)
-    n = t.num_rows
-    # r06: TWO chronological data chunks (was four) — the drained
-    # result depends only on the FINAL watermark (same data => same max
-    # ts) and the two trailing fillers still drive the post-jump
-    # evictions (16a), so the extra chunk boundaries only re-paid
-    # per-batch fixed cost (~1-1.5 s each).  Parity PASS sf0.01+sf0.1.
-    for k in range(2):  # chronological chunks -> monotone watermark
-        pq.write_table(
-            t.slice(k * n // 2, (k + 1) * n // 2 - k * n // 2),
-            os.path.join(in_dir, f"chunk-{k:02d}.parquet"),
-        )
-    # trailing FILLER batches (gotcha 16a: outer-join NULL eviction
-    # runs at end of the batch AFTER the watermark crosses the bound —
-    # the final data batch alone leaves the last horizon's evictions
-    # pending).  'signup' rows join neither side, so they advance the
-    # watermark without touching join state.
-    filler = t.filter(pa.compute.equal(t["event_type"], "signup")).slice(0, 4)
-    for k in range(2):
-        pq.write_table(
-            filler, os.path.join(in_dir, f"chunk-9{k}-filler.parquet")
-        )
-    # r06 review fix: FileStreamSource orders pending files by mtime
-    # ONLY (ms resolution, no path tie-break) — tiny sequential writes
-    # on tmpfs can tie, and the chronological-chunk -> monotone-
-    # watermark contract needs a deterministic order.  Pin strictly
-    # increasing whole-second mtimes explicitly.
-    import time as _time
-
-    _t0 = _time.time()
-    for _i, _f in enumerate(sorted(os.listdir(in_dir))):
-        os.utime(os.path.join(in_dir, _f), (_t0 + _i, _t0 + _i))
-    out, ck = os.path.join(base, "out"), os.path.join(base, "ck")
+    in_dir, out, ck = _interval_join_inputs(spark, sf_dir, "slj_")
     # stateful-join state stores (4 per join) are one per shuffle
     # partition PER BATCH — at 32 partitions that is 128 store commits
     # a batch, pure fixed cost at harness size.  8 is plenty here;
@@ -608,51 +602,9 @@ def streaming_full_outer_join(spark, sf_dir):
     left join (gotchas 16a/16c); the comparison bound keeps both
     eviction horizons provably under the final global watermark, and
     the oracle is the plain batch FULL JOIN under the same bounds."""
-    import datetime as _dt
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from .. import streaming as STR
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = _stream_base(spark, "sfj_")
-    in_dir = os.path.join(base, "in")
-    os.makedirs(in_dir)
-    t = pq.read_table(f"{sf_dir}/events.parquet")
-    t = t.filter(
-        pa.compute.less(t["ts"], pa.scalar(_dt.datetime(2024, 1, 11)))
-    )
-    idx = pa.compute.sort_indices(t, sort_keys=[("ts", "ascending")])
-    t = t.take(idx)
-    n = t.num_rows
-    # r06: TWO chronological data chunks (was four) — the drained
-    # result depends only on the FINAL watermark (same data => same max
-    # ts) and the two trailing fillers still drive the post-jump
-    # evictions (16a), so the extra chunk boundaries only re-paid
-    # per-batch fixed cost (~1-1.5 s each).  Parity PASS sf0.01+sf0.1.
-    for k in range(2):
-        pq.write_table(
-            t.slice(k * n // 2, (k + 1) * n // 2 - k * n // 2),
-            os.path.join(in_dir, f"chunk-{k:02d}.parquet"),
-        )
-    filler = t.filter(pa.compute.equal(t["event_type"], "signup")).slice(0, 4)
-    for k in range(2):
-        pq.write_table(
-            filler, os.path.join(in_dir, f"chunk-9{k}-filler.parquet")
-        )
-    # r06 review fix: FileStreamSource orders pending files by mtime
-    # ONLY (ms resolution, no path tie-break) — tiny sequential writes
-    # on tmpfs can tie, and the chronological-chunk -> monotone-
-    # watermark contract needs a deterministic order.  Pin strictly
-    # increasing whole-second mtimes explicitly.
-    import time as _time
-
-    _t0 = _time.time()
-    for _i, _f in enumerate(sorted(os.listdir(in_dir))):
-        os.utime(os.path.join(in_dir, _f), (_t0 + _i, _t0 + _i))
-    out, ck = os.path.join(base, "out"), os.path.join(base, "ck")
+    in_dir, out, ck = _interval_join_inputs(spark, sf_dir, "sfj_")
     with _drain_confs(spark, nodata=False):
         STR.stream_interval_join_full(spark, in_dir, out, ck,
                                       emit_before="2024-01-10 00:00:00")

@@ -7,7 +7,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ._common import _drain_confs, _spread, _t
+from ..skew import spread
+from ._common import _drain_confs, _t
 
 
 def dedup_fingerprint(spark, sf_dir):
@@ -93,11 +94,11 @@ def _minhash_sig_df(docs):
     # explode(sequence) + substring, NOT transform(..., i -> ...): the
     # lambda HOF is interpreted (gotcha 4) — measured 20x slower than
     # this codegen'd form on the shingle paths (r05).  Same rows.
-    # r06: _spread parallelizes the explode + 4×md5 partial aggregate
+    # r06: spread parallelizes the explode + 4×md5 partial aggregate
     # across cores — the corpus arrives as ONE parquet split, so this
     # md5-dense pre-shuffle stage otherwise runs in a single task
     # (guide §2.5; no-op at scale where the scan is already wide).
-    sh = _spread(docs).selectExpr(
+    sh = spread(docs, "doc_id").selectExpr(
         "doc_id",
         "text",
         "explode(sequence(1, greatest(length(text) - 11, 1), 4)) AS i",
@@ -224,7 +225,7 @@ def simhash60(spark, sf_dir):
     s_i > 0 ⟺ 2·c_i > n_tok: bit-identical simhash, 60× fewer
     aggregate input rows, one exchange instead of two (the (doc,i)
     grain exchange is gone).  Measured 4.4 s → 0.6 s at sf0.1."""
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"), "doc_id")
     toks = docs.select(
         "doc_id", F.explode(F.expr("split(text, ' ')")).alias("tok")
     ).withColumn(
@@ -1012,10 +1013,10 @@ def phrase_search(spark, sf_dir):
     Output per phrase: matching docs, total occurrences, doc-id
     checksum.
     """
-    # r06: _spread — the posexplode over the corpus otherwise runs in
+    # r06: spread — the posexplode over the corpus otherwise runs in
     # the single-split scan task (guide §2.5)
     toks = (
-        _spread(_t(spark, sf_dir, "documents"))
+        spread(_t(spark, sf_dir, "documents"), "doc_id")
         .selectExpr("doc_id", "posexplode(split(text, ' ')) AS (pos, tok)")
         .filter(F.col("tok") != "")
         .localCheckpoint()  # postings reused by both phrase legs
@@ -1086,10 +1087,10 @@ def contamination_check(spark, sf_dir):
     practice, and the explicit worst-bucket bound; mirrored in the
     oracle so the bound is semantics, not a silent cap).
     """
-    # r06: _spread — the shingle explode + concat_ws + the distinct's
+    # r06: spread — the shingle explode + concat_ws + the distinct's
     # partial aggregate otherwise run inside the corpus scan's single
     # task (guide §2.5; no-op on a wide scan)
-    docs = _spread(_t(spark, sf_dir, "documents")).selectExpr(
+    docs = spread(_t(spark, sf_dir, "documents"), "doc_id").selectExpr(
         "doc_id", "split(text, ' ') AS tk"
     )
     sh = (
@@ -1280,10 +1281,10 @@ def dedup_containment(spark, sf_dir):
     # UNORDERED pairs (a < b — half the distinct set), each pair's
     # array_intersect runs ONCE, and both directed rows are emitted
     # from it with stack() (n_a = the direction's own set size).
-    # Result rows identical, oracle unchanged.  _spread parallelizes
+    # Result rows identical, oracle unchanged.  spread parallelizes
     # the single-split scan's shingle projection (guide §2.5).
     docs = _t(spark, sf_dir, "documents")
-    sets = _shingle_sets(_spread(docs)).localCheckpoint()
+    sets = _shingle_sets(spread(docs, "doc_id")).localCheckpoint()
     inv = sets.select("doc_id", F.explode("sh").alias("s"))
     rare = (
         inv.groupBy("s")
@@ -1431,9 +1432,9 @@ def doc_normalized_dedup(spark, sf_dir):
     ASCII-range regexes behave identically in Java regex (Spark) and
     RE2 (DuckDB); the oracle runs the same normalization chain."""
     # r06 guide §2.5: the two-regex normalization chain is the query's
-    # CPU and the harness scan is one split — _spread parallelizes the
+    # CPU and the harness scan is one split — spread parallelizes the
     # projection + partial agg (no-op on a many-split production scan).
-    docs = _spread(_t(spark, sf_dir, "documents")).selectExpr(
+    docs = spread(_t(spark, sf_dir, "documents"), "doc_id").selectExpr(
         "doc_id",
         "md5(trim(regexp_replace(regexp_replace(lower(text), "
         "'[^a-z0-9 ]', ' '), ' +', ' '))) AS nkey",
@@ -2152,11 +2153,12 @@ def doc_char_lm_score(spark, sf_dir):
     (explode 3x, join at char grain, shuffle char rows) is what this
     replaces; per-doc sums weight each distinct bigram by its count —
     row-identical to the per-transition fold."""
-    # r06: _spread — the char-grain explode + (doc, xy) partial
+    # r06: spread — the char-grain explode + (doc, xy) partial
     # aggregate is the query's hot stage and otherwise runs in the
     # corpus scan's single task (guide §2.5; no-op on a wide scan)
-    docs = _spread(
-        _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
+    docs = spread(
+        _t(spark, sf_dir, "documents").select("doc_id", "lang", "text"),
+        "doc_id",
     )
     pd_xy = (
         docs.filter("length(text) >= 2").selectExpr(
@@ -2261,10 +2263,11 @@ def doc_ngram_novelty(spark, sf_dir):
     pairwise anything, scale-safe by construction).  Shingles via
     explode(sequence) + codegen'd projection (gotcha 16b's fast form).
     Per-lang rollup: mean novelty in ppm + the least-novel doc."""
-    # r06: _spread — shingle explode + per-doc partial agg otherwise
+    # r06: spread — shingle explode + per-doc partial agg otherwise
     # runs inside the single-split scan task (guide §2.5)
-    docs = _spread(
-        _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
+    docs = spread(
+        _t(spark, sf_dir, "documents").select("doc_id", "lang", "text"),
+        "doc_id",
     )
     sh = (
         docs.selectExpr(

@@ -18,6 +18,24 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def spread(df: DataFrame, key: str) -> DataFrame:
+    """Underparallelism fix for small inputs (guide §2.5 "input skew ...
+    repartition immediately after the read"): a small table arrives as
+    one or two parquet splits, so every expensive per-row stage chained
+    on the scan runs in that many tasks while the other cores idle.
+    Hash-repartition on ``key`` ONLY when the plan has fewer partitions
+    than the session's parallelism — a 100 TB scan already has
+    thousands of splits and comes back untouched (no extra exchange).
+    A hash key, never round-robin: round-robin either sorts every
+    partition first (spark.sql.execution.sortBeforeRepartition) or
+    breaks under task retry (SPARK-38388); rows are unchanged.  The
+    partition probe plans ``df`` once on the driver."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < par:
+        return df.repartition(par, F.col(key))
+    return df
+
+
 def cell_histogram(df: DataFrame, cell_col: str = "cell_id") -> DataFrame:
     """A5: per-cell row counts (drives the salting plan)."""
     return df.groupBy(cell_col).agg(F.count(F.lit(1)).alias("n_rows"))

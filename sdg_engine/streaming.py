@@ -744,9 +744,6 @@ def stream_dedup_then_window(
 # its DuckDB range() oracle.
 # ---------------------------------------------------------------------------
 
-TICKER_BASE_US = 1_600_000_000_000_000
-TICKER_STEP_US = 37_000_000
-
 
 def make_ticker_datasource():
     """Built lazily so importing sdg_engine never requires the

@@ -12,30 +12,19 @@ read would produce.
 Scope guard: callers pass only immutable fixture paths (the sf_dir
 tables).  Mutable engine outputs (lakehouse snapshot dirs, streaming
 sinks) must keep calling ``spark.read`` directly — their file listing
-changes between reads.  The memo is keyed by applicationId and drops
-every entry when a new session appears, so handles never outlive their
-JVM context.
+changes between reads.  The memo lives on the session object itself,
+so a handle is only ever served to the session that read it (sibling
+sessions from ``newSession()`` share an applicationId but not their
+SQL conf) and is dropped with its session.
 """
 
 from __future__ import annotations
 
-import threading
-
-_LOCK = threading.Lock()
-_CACHE: dict = {}
-
 
 def read_table(spark, path: str):
     """Memoized ``spark.read.parquet(path)`` for immutable fixture paths."""
-    app = spark.sparkContext.applicationId
-    key = (app, path)
-    with _LOCK:
-        df = _CACHE.get(key)
-        if df is not None:
-            return df
-    df = spark.read.parquet(path)
-    with _LOCK:
-        if _CACHE and next(iter(_CACHE))[0] != app:
-            _CACHE.clear()  # new session: old handles are dead weight
-        _CACHE[key] = df
+    memo = spark.__dict__.setdefault("_sdg_tables", {})
+    df = memo.get(path)
+    if df is None:
+        df = memo[path] = spark.read.parquet(path)
     return df

@@ -118,3 +118,19 @@ def test_phash_near_invariant_under_lossy():
     # bits whose DCT coeff sits near the median can flip under lossy
     # re-encode; 12 is the near-dup boundary (distinct scenes are >12)
     assert hamming64(phash64(img), phash64(lossy)) <= 12
+
+
+def test_luma_helpers_match_bt601():
+    """codecs.luma is bit-identical to the BT.601 spelling whose later
+    channels are promoted by the multiply (the golden twins' form), and
+    luma_milli is its exact integer counterpart."""
+    img = _rand_img(7, h=40, w=56)
+    ref = 0.299 * img[:, :, 0].astype(np.float64) + 0.587 * img[:, :, 1] + 0.114 * img[:, :, 2]
+    lum = X.luma(img)
+    assert lum.dtype == np.float64
+    assert (lum.view(np.int64) == ref.view(np.int64)).all()
+    milli = X.luma_milli(img)
+    assert milli.dtype == np.int64
+    px = img.astype(np.int64)
+    assert (milli == 299 * px[:, :, 0] + 587 * px[:, :, 1] + 114 * px[:, :, 2]).all()
+    assert np.abs(milli / 1000.0 - lum).max() < 1e-9

@@ -400,3 +400,47 @@ def test_snapshot_merge_and_expire(spark, tmp_path):
         == got3
     with _pytest.raises(ValueError, match="not in history"):
         read_snapshot(spark, tbl, as_of=1)
+
+
+def test_map_rows_by_position_explodes_and_empty_partitions(spark):
+    """map_rows: fn's tuples land in schema order (no column names in
+    the frame), a row may yield 0..k output rows, a partition with no
+    input rows or no output rows yields nothing, and an all-NULL
+    column converts to its schema type."""
+
+    def _fn(r):
+        for j in range(r.id % 3):  # 0, 1 or 2 rows per input row
+            yield (f"r{r.id}", r.id * 10 + j, None, j == 1)
+
+    src = spark.range(0, 6, numPartitions=16)  # 10+ empty partitions
+    out = PL.map_rows(src, _fn, "name string, v bigint, nil double, odd boolean")
+    assert out.columns == ["name", "v", "nil", "odd"]
+    got = sorted(tuple(r) for r in out.collect())
+    want = sorted(
+        (f"r{i}", i * 10 + j, None, j == 1) for i in range(6) for j in range(i % 3)
+    )
+    assert got == want
+    assert dict(out.dtypes)["nil"] == "double"
+    # every input row dropped: still a valid, empty frame
+    none = PL.map_rows(src, lambda r: [], "name string, v bigint")
+    assert none.count() == 0
+
+
+def test_read_table_memo_is_per_session(spark):
+    """tablecache keeps one handle per session: a sibling session from
+    newSession() shares the applicationId but gets its own frame, bound
+    to its own SQL conf."""
+    from sdg_engine.jobs.rai import fixture_dir
+    from sdg_engine.tablecache import read_table
+
+    path = os.path.join(fixture_dir(SF), "images.parquet")
+    s2 = spark.newSession()
+    a = read_table(spark, path)
+    b = read_table(s2, path)
+    assert read_table(spark, path) is a
+    assert read_table(s2, path) is b
+    assert b is not a
+    assert b.sparkSession is s2
+    s2.conf.set("spark.sql.shuffle.partitions", "3")
+    assert b.sparkSession.conf.get("spark.sql.shuffle.partitions") == "3"
+    assert a.sparkSession.conf.get("spark.sql.shuffle.partitions") != "3"

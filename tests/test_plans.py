@@ -867,3 +867,40 @@ def test_wave45_palette_is_map_only(spark):
     from sdg_engine.queries.image import image_palette_mediancut
 
     assert "Exchange" not in _plan(image_palette_mediancut(spark, SF))
+
+
+def test_payload_row_maps_plan_map_only(spark):
+    """Every per-row payload op (ops.payload.map_rows) plans as the scan
+    plus projections and ONE MapInPandas — no Exchange anywhere, so
+    payload bytes never shuffle."""
+    import os
+
+    from sdg_engine.jobs.rai import fixture_dir
+    from sdg_engine.ops import multimodal as MM
+    from sdg_engine.ops import payload as PL
+    from sdg_engine.ops import raster as RS
+
+    images = spark.read.parquet(os.path.join(fixture_dir(0.001), "images.parquet"))
+    geo = SP.with_geo(images)
+    audio = MM.synth_audio_table(spark, 4)
+    video = MM.synth_video_table(spark, 2)
+    ops = {
+        "decode_stats": PL.decode_stats(images),
+        "thumbnails": PL.thumbnails(images),
+        "transcode": PL.transcode(images, "png"),
+        "warp_checksums": PL.warp_checksums(geo, "UTM:31"),
+        "transcode_geotiff": PL.transcode_geotiff(geo),
+        "hillshade_stats": PL.hillshade_stats(images),
+        "sobel_stats": PL.sobel_stats(images),
+        "d8_flow_stats": PL.d8_flow_stats(images),
+        "watershed_stats": PL.watershed_stats(images),
+        "contour_stats": PL.contour_stats(images),
+        "palette_mediancut_stats": PL.palette_mediancut_stats(images),
+        "region_stats": RS.region_stats(images),
+        "audio_stft_frames": MM.audio_stft_frames(audio),
+        "video_motion_blocks": MM.video_motion_blocks(video),
+    }
+    for name, df in ops.items():
+        plan = _plan(df)
+        assert plan.count("MapInPandas") == 1, name
+        assert "Exchange" not in plan, name
