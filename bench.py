@@ -128,7 +128,7 @@ def main() -> None:
     flagship_thr = n_input / queries["flagship_rai"] if queries["flagship_rai"] else 0.0
     spark.stop()
 
-    # image-payload pipeline (A1 burn + A2 cost-distance cogroup) at the
+    # image-payload pipeline (A1 burn + A2 cost-distance, map-only) at the
     # FIXED sf0.01 fixture (10k tiles; cached after first generation) so
     # the number is comparable across rounds regardless of SF_DIR
     spark = _session(cpus)

@@ -5,11 +5,12 @@ the reference's PopulationNearRoadsJob.
 Pipeline (all operators from ops/):
   images ──with_geo──▶ lon/lat + footprint     (pandas UDF geocode)
          ──assign_countries──▶ country          (J2: cells + ray-cast)
-         ──with_near_road_flag──▶ near_road     (J1/J4 existence join)
          ──burn_cost_summaries──▶ per-tile pop  (A1 burn + A2 chamfer)
+         ──join country on image_id──▶ per-image summary
          ──groupBy(country)──▶ RAI summary      (A3)
   forgotten = images with pop_near == 0         (J5)
          ──transcode──▶ PNG sink                (S6; invariants hold)
+         ──transcode_geotiff──▶ GeoTIFF sink    (S6; footprint grid tags)
 
 Run standalone:  spark-submit --py-files sdg_engine.zip -m sdg_engine.jobs.rai
 (or `python -m sdg_engine.jobs.rai [sf] [out_dir]` locally).
@@ -55,12 +56,11 @@ def rai_summaries(
     geo = SP.with_geo(images)
     cc = SP.assign_countries(geo, FX.get_country_rings(), level=9)
     segs = SP.road_segments(roads)
-    # Deliberately JOIN country back by image_id instead of passing it
-    # through the burn: the passthrough couples the byte-heavy burn
-    # stage with J2's broadcast dims in ONE stage, and the combined
-    # heap peak OOMs a default-1g driver session (measured).  The
-    # join-back keeps the heavy pass dim-free; the country pass is
-    # column-pruned (no bytes) and cheap.
+    # The country is JOINED back by image_id after the burn: carrying it
+    # into the burn puts the byte-heavy burn and J2's broadcast dims in
+    # ONE stage, and the combined heap peak OOMs a default-1g driver
+    # session (measured).  The join-back keeps the heavy pass dim-free;
+    # the country pass is column-pruned (no bytes) and cheap.
     tiles = RS.burn_cost_summaries(
         geo.select("image_id", "lon", "lat", "bytes", "fmt",
                    "w", "h", "fp_xmin", "fp_ymin", "fp_xmax", "fp_ymax"),

@@ -34,6 +34,8 @@ import sys
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..ops.payload import map_rows
+
 
 def select_training_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup keepers ∩ quality keeps — the curated corpus."""
@@ -91,23 +93,15 @@ def verify_shards(spark: SparkSession, out_dir: str) -> dict:
         .load(out_dir)
     )
 
-    def _parse(batches):
-        import pandas as pd
-
+    def _parse(r):
         from sdg_engine.tfrecord import decode_example, read_tfrecords
 
-        for pdf in batches:
-            rows = []
-            for blob in pdf["content"]:
-                for rec in read_tfrecords(bytes(blob)):
-                    ex = decode_example(rec)
-                    rows.append((ex["doc_id"][0],
-                                 ex["text"].decode("utf-8")))
-            yield pd.DataFrame(rows, columns=["doc_id", "text"])
+        for rec in read_tfrecords(bytes(r.content)):
+            ex = decode_example(rec)
+            yield (ex["doc_id"][0], ex["text"].decode("utf-8"))
 
-    parsed = bf.select("content").mapInPandas(
-        _parse, "doc_id bigint, text string"
-    )
+    parsed = map_rows(bf.select("content"), _parse,
+                      "doc_id bigint, text string")
     fp = " + ".join(
         f"({c} * {4096 ** (3 - j)})"
         for j, c in enumerate(_b12_cells("h", 4))

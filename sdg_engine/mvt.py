@@ -291,8 +291,8 @@ def write_road_mvt(
 
     Execution shape: segment→tile cover (JVM cell explode) then ONE
     groupBy(tile).applyInPandas whose per-group numpy does clip +
-    quantize + encode — the same keyed-cogroup shape as the raster
-    burn (A1), so skew salting applies unchanged if a tile runs hot.
+    quantize + encode — a keyed group, so skew salting (skew.py)
+    applies if a tile runs hot.
     """
     from .geom import clip_segments_to_rect, segments_intersect_rect
     from .ops.spatial import segments_with_cells
@@ -304,7 +304,7 @@ def write_road_mvt(
         "road_id", "seg_id", "ax", "ay", "bx", "by",
     )
 
-    def _encode(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _encode(key, pdf):
         tx, ty = int(pdf["tx"].iloc[0]), int(pdf["ty"].iloc[0])
         x0 = WORLD_MIN + tx * size
         y0 = WORLD_MIN + ty * size
@@ -389,8 +389,8 @@ def write_road_mvt_pyramid(
     and recomputes the upstream DAG per branch; separate writes over a
     DISK_ONLY-persisted input pay the upstream scan once).  Tile count
     grows 4× per zoom while work per tile shrinks — total bytes stay
-    ~O(segments · zooms), and every pass is the same keyed-cogroup
-    shape as the single-zoom sink, so skew salting carries over.
+    ~O(segments · zooms), and every pass is the same keyed group as
+    the single-zoom sink, so skew salting carries over.
 
     Returns the read-back union of all zooms (z column disambiguates).
     """

@@ -283,7 +283,7 @@ def render_colormap_png(cells: DataFrame, tile_px: int = 8) -> DataFrame:
     cells: (tx, ty, px, py, bin) — tile address, within-tile pixel
     (south-origin py), ramp bin 0..7.  Uncovered pixels render
     background black.  One groupBy(tile).applyInPandas — the same
-    keyed-cogroup shape as the MVT sink, skew salting applies.
+    keyed group as the MVT sink, skew salting applies.
 
     The emitted channel sums are computed from the DECODED png, so the
     row certifies the encode→decode round trip per tile; the DuckDB
@@ -294,7 +294,7 @@ def render_colormap_png(cells: DataFrame, tile_px: int = 8) -> DataFrame:
 
     ramp = np.array(COLORMAP_RAMP, dtype=np.uint8)
 
-    def _render(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _render(key, pdf):
         tx, ty = int(pdf["tx"].iloc[0]), int(pdf["ty"].iloc[0])
         img = np.zeros((tile_px, tile_px, 3), dtype=np.uint8)
         px = pdf["px"].to_numpy(np.int64)

@@ -12,19 +12,13 @@ footprint; per-pixel "population" is the decoded luminance.  Per tile:
    ``CostDistance`` (SURVEY.md A2);
 3. **masked sum**: population within ``cutoff_m`` of a road vs total.
 
-Execution shape (``burn_cost_summaries``): the roads are pre-expanded
-by kring(1) (``spatial.ring_cover``) so cross-border segments are
-present (C3 halo; SURVEY.md §7 hard part 2), then either
-
-* ``broadcast`` — that cover is collected into a cell→segments dict
-  and broadcast, and the images run through a map-only
-  ``mapInPandas``; or
-* ``cogroup`` — ``images.groupBy(cell).cogroup(roads.groupBy(cell))
-  .applyInPandas``, the Spark-native analogue of the reference's
-  keyed-RDD cogroup + per-tile visitor (SURVEY.md §3.1), one shuffle
-  per side.
-
-Both run the same vectorized numpy per tile.
+Execution shape (``burn_cost_summaries``): one map-only plan.  The
+roads are pre-expanded by kring(1) (``spatial.ring_cover``) so
+cross-border segments are present (C3 halo; SURVEY.md §7 hard part 2);
+that cover is collected into a cell→segments dict and broadcast, and
+the images run through one ``mapInPandas`` that burns each tile against
+its cell's segments in one local pass (the per-tile shape of *Raptor*'s
+vector-to-raster join).  The cover must fit one driver collect.
 """
 
 from __future__ import annotations
@@ -40,6 +34,7 @@ from ..skew import spread
 from .payload import _IMG_COLS, _decode, map_rows
 from .spatial import ring_cover, with_point_cell
 
+_NO_SEGS = np.zeros((0, 4))
 _SUMMARY_SCHEMA = (
     "image_id string, cell_id bigint, pop_total double, pop_near double, "
     "px_total int, px_near int, n_segs int"
@@ -245,11 +240,12 @@ def weighted_cost_batch(
     return d / 3.0
 
 
-def summarize_tile_rows(rows, segs_of, cutoff: float,
+def summarize_tile_rows(rows, lut: dict, cutoff: float,
                         friction_from_lum: bool = False):
-    """Shared batched kernel for both burn strategies: ``rows`` is an
-    iterable of row tuples (image_id, bytes, fmt, w, h, fp_*…),
-    ``segs_of(i, row)`` returns the candidate segment array for row i.
+    """Batched burn kernel: ``rows`` is an iterable of row tuples with
+    cell_id, bytes, fmt, w, h and fp_* fields; ``lut`` maps a cell_id to
+    its candidate segments (n,4 array ax,ay,bx,by), and a cell missing
+    from it has none.
 
     Decode/burn/sums stay per-tile (bit-identical to tile_summary, the
     golden oracle); the chamfer transform runs BATCHED per (h, w) group.
@@ -264,10 +260,10 @@ def summarize_tile_rows(rows, segs_of, cutoff: float,
     lums: list[np.ndarray] = []
     masks: list[np.ndarray] = []
     metas = []
-    for i, row in enumerate(rows):
+    for row in rows:
         img = decode_image(bytes(row.bytes), row.fmt, int(row.w), int(row.h))
         lum = luma(img)
-        segs = segs_of(i, row)
+        segs = lut.get(int(row.cell_id), _NO_SEGS)
         mask = burn_mask(int(row.w), int(row.h),
                          row.fp_xmin, row.fp_ymin, row.fp_xmax, row.fp_ymax,
                          segs)
@@ -319,10 +315,9 @@ def tile_summary(
 ) -> tuple[float, float, int, int]:
     """Numpy oracle for one tile: (pop_total, pop_near, px_total, px_near).
 
-    Shared by the Spark cogroup UDF and the golden generator — the
-    per-tile math is identical by construction; the DISTRIBUTED parts
-    (which segments reach which tile, halo exchange) are what the Spark
-    tests exercise."""
+    The golden generator's and the tests' reference: summarize_tile_rows
+    does the same per-tile math batched, so the Spark tests exercise the
+    DISTRIBUTED parts (which segments reach which tile, the halo)."""
     lum = luma(decode_image(data, fmt, w, h))
     mask = burn_mask(w, h, xmin, ymin, xmax, ymax, segs)
     if mask.any():
@@ -339,177 +334,84 @@ def tile_summary(
     )
 
 
-def _estimate_rows(df: DataFrame) -> int | None:
-    """Cheap row estimate from Catalyst plan statistics (no Spark job),
-    for burn_cost_summaries' ``auto`` strategy: rowCount when the CBO has
-    one, else sizeInBytes / 64 — a deliberately LOW bytes-per-row guess,
-    so wide tables overestimate rows and pick the cogroup path (no
-    broadcast requirement) early.  ``None`` when the stats are
-    unavailable — the caller MUST treat None as "unbounded" and pick
-    cogroup (ADVICE r03: returning 0 here silently selected the
-    broadcast path, the exact direction the auto mode exists to
-    prevent)."""
-    try:
-        stats = df._jdf.queryExecution().optimizedPlan().stats()
-        if stats.rowCount().isDefined():
-            return int(str(stats.rowCount().get()))
-        return int(str(stats.sizeInBytes())) // 64
-    except Exception:  # noqa: BLE001 — stats are advisory
-        import warnings
-
-        warnings.warn(
-            "plan-stats row estimate unavailable; auto strategy falls "
-            "back to the scale-safe path", stacklevel=2,
-        )
-        return None
-
-
 def burn_cost_summaries(
     images_geo: DataFrame,
     segs: DataFrame,
     cutoff_m: float = 250.0,
     level: int = 6,
-    strategy: str = "auto",
-    broadcast_max_segs: int = 2_000_000,
     friction_from_lum: bool = False,
 ) -> DataFrame:
     """A1+A2 distributed: per-image burn/cost-distance/masked-sum.
 
-    Two physical strategies, same semantics:
+    One MAP-ONLY plan: the kring(1)-expanded road cover is collected and
+    broadcast as a cell→segments dict, the images are spread on
+    ``image_id``, and one ``mapInPandas`` runs the per-tile work.  Image
+    bytes never shuffle, and peak task memory is one Arrow batch.
 
-    * ``broadcast`` — the kring(1)-expanded road cover is collected and
-      broadcast as a cell→segments dict; the per-tile work runs as
-      ``mapInPandas`` over the images — a MAP-ONLY plan: image bytes
-      never shuffle, and peak task memory is one Arrow batch (the
-      cogroup loads a whole cell group, which OOMs a default-1g driver
-      session on dense cells).  Right whenever the road network fits an
-      executor broadcast (country-scale jobs).
-    * ``cogroup`` — ``images.groupBy(cell) COGROUP roads.groupBy(cell)``,
-      the reference's per-tile join shape: one shuffle per side, no
-      broadcast requirement — the only path once the road cover cannot
-      be collected.  Hot cells are NOT salted: one cell's images and
-      roads load into one group.
+    Limit: the cover (about 9× the segment count) must fit one driver
+    collect.  Past that the collect fails with Spark's own
+    ``spark.driver.maxResultSize`` error; there is no fallback plan.
+    Burn one country's roads at a time, as the reference does.
 
-    ``auto`` compares a Catalyst plan-statistics row estimate of
-    ``segs`` (``_estimate_rows``; no Spark job) against
-    ``broadcast_max_segs``; no estimate ⇒ cogroup.
-
-    Correctness constraint (both paths): footprint half-size (≤0.008°,
-    FIXTURES.md) must be < cell size (0.156° at level 6) for the
-    kring(1) halo to cover footprints that straddle the center cell's
-    border — only segments CROSSING the footprint affect the burn, and
-    such segments lie within half·√2 of the image center.  Level
-    tradeoff (measured, 10k tiles): finer levels → more groups →
-    per-group applyInPandas overhead dominates (level 9: 79s); coarser
-    → bigger per-group candidate seg lists (level 4: 40s); level 6 ≈ 8s.
+    Correctness constraint: footprint half-size (≤0.008°, FIXTURES.md)
+    must be < cell size (0.156° at level 6) for the kring(1) halo to
+    cover footprints that straddle the center cell's border — only
+    segments CROSSING the footprint affect the burn, and such segments
+    lie within half·√2 of the image center.  A coarser level gives each
+    tile more candidate segments; a finer one a bigger cover.
     """
     cutoff = float(cutoff_m)
-    friction = bool(friction_from_lum)  # plain local for the UDF closures
-    if strategy == "auto":
-        # plan-stats bound, NOT segs.count() (r03 verdict: the eager
-        # count was a full extra Spark job before the returned plan even
-        # ran).  None (stats unavailable) ⇒ cogroup, the path with no
-        # broadcast requirement — safe at any scale.
-        est = _estimate_rows(segs)
-        strategy = (
-            "broadcast"
-            if est is not None and est <= broadcast_max_segs
-            else "cogroup"
-        )
-
+    friction = bool(friction_from_lum)  # plain local for the UDF closure
     pts = with_point_cell(images_geo, level, "lon", "lat", "cell_id")
-    passthrough = [c for c in ("country_code",) if c in images_geo.columns]
-    img_cols = [
-        "cell_id", "image_id", "bytes", "fmt", "w", "h",
-        "fp_xmin", "fp_ymin", "fp_xmax", "fp_ymax", *passthrough,
-    ]
-    out_schema = _SUMMARY_SCHEMA + "".join(f", {c} string" for c in passthrough)
     # deduped: a segment reaching one ring cell from several covering
     # cells must reach the tile once (n_segs counts them)
-    road_side = (
+    cover = (
         ring_cover(segs, level)
         .dropDuplicates(["road_id", "seg_id", "cell_id"])
         .select("cell_id", "ax", "ay", "bx", "by")
+        .toPandas()
     )
+    cover_np = cover[["ax", "ay", "bx", "by"]].to_numpy(dtype=np.float64)
+    cells = cover["cell_id"].to_numpy(dtype=np.int64)
+    order = np.argsort(cells, kind="stable")
+    cells, cover_np = cells[order], cover_np[order]
+    uniq, first = np.unique(cells, return_index=True)
+    bounds = np.append(first, len(cells))
+    lut = {
+        int(c): cover_np[s:e]
+        for c, s, e in zip(uniq, bounds[:-1], bounds[1:])
+    }
+    # Broadcast lifetime (documented leak, ADVICE r02): the LUT must
+    # outlive the RETURNED lazy DataFrame, so it cannot be unpersisted
+    # here.  It is released by Spark's ContextCleaner once the frame
+    # (and this closure) are garbage-collected; small-heap harness
+    # sessions additionally force that GC in queries._common._prep.
+    # Callers that loop many distinct road networks through one
+    # big-heap session should materialize the result and call
+    # ``df._sdg_road_lut_bc.unpersist()`` between iterations.
+    bc = images_geo.sparkSession.sparkContext.broadcast(lut)
 
-    if strategy == "broadcast":
-        cover = road_side.toPandas()
-        cover_np = cover[["ax", "ay", "bx", "by"]].to_numpy(dtype=np.float64)
-        cells = cover["cell_id"].to_numpy(dtype=np.int64)
-        order = np.argsort(cells, kind="stable")
-        cells, cover_np = cells[order], cover_np[order]
-        uniq, first = np.unique(cells, return_index=True)
-        bounds = np.append(first, len(cells))
-        lut = {
-            int(c): cover_np[s:e]
-            for c, s, e in zip(uniq, bounds[:-1], bounds[1:])
-        }
-        # Broadcast lifetime (documented leak, ADVICE r02): the LUT must
-        # outlive the RETURNED lazy DataFrame, so it cannot be unpersisted
-        # here.  It is released by Spark's ContextCleaner once the frame
-        # (and this closure) are garbage-collected; small-heap harness
-        # sessions additionally force that GC in queries._prep.  Callers
-        # that loop many distinct road networks through one big-heap
-        # session should materialize the result and call
-        # ``df._sdg_road_lut_bc.unpersist()`` between iterations.
-        bc = images_geo.sparkSession.sparkContext.broadcast(lut)
-        empty = np.zeros((0, 4))
-
-        def _map_batches(batches):
-            for pdf in batches:
-                rows = list(pdf.itertuples(index=False))
-                extra = [pdf[c].tolist() for c in passthrough]
-                sums = summarize_tile_rows(
-                    rows, lambda i, r: bc.value.get(int(r.cell_id), empty),
-                    cutoff, friction_from_lum=friction,
-                )
-                out = [
-                    (row.image_id, int(row.cell_id), *s[:4], s[4],
-                     *(col[j] for col in extra))
-                    for j, (row, s) in enumerate(zip(rows, sums))
-                ]
+    def _map_batches(batches):
+        for pdf in batches:
+            rows = list(pdf.itertuples(index=False))
+            if rows:
+                sums = summarize_tile_rows(rows, bc.value, cutoff,
+                                           friction_from_lum=friction)
                 yield pd.DataFrame(
-                    out,
-                    columns=["image_id", "cell_id", "pop_total", "pop_near",
-                             "px_total", "px_near", "n_segs", *passthrough],
+                    [(r.image_id, int(r.cell_id), *t)
+                     for r, t in zip(rows, sums)]
                 )
 
-        # local fixture files scan as 1-2 partitions — spread them on
-        # image_id so the map-only stage uses the cluster; a production
-        # multi-file table already has enough partitions and skips it
-        result = spread(pts.select(*img_cols), "image_id").mapInPandas(
-            _map_batches, out_schema
-        )
-        result._sdg_road_lut_bc = bc  # explicit cleanup handle (see above)
-        return result
-
-    img_side = pts.select(*img_cols)
-
-    def _summarize(key, imgs: pd.DataFrame, roads: pd.DataFrame) -> pd.DataFrame:
-        seg_arr = (
-            roads[["ax", "ay", "bx", "by"]].to_numpy(dtype=np.float64)
-            if len(roads)
-            else np.zeros((0, 4))
-        )
-        rows = list(imgs.itertuples(index=False))
-        extra = [imgs[c].tolist() for c in passthrough]
-        sums = summarize_tile_rows(rows, lambda i, r: seg_arr, cutoff,
-                                   friction_from_lum=friction)
-        out = [
-            (row.image_id, key[0], *s[:4], s[4], *(col[j] for col in extra))
-            for j, (row, s) in enumerate(zip(rows, sums))
-        ]
-        return pd.DataFrame(
-            out,
-            columns=["image_id", "cell_id", "pop_total", "pop_near",
-                     "px_total", "px_near", "n_segs", *passthrough],
-        )
-
-    return (
-        img_side.groupBy("cell_id")
-        .cogroup(road_side.groupBy("cell_id"))
-        .applyInPandas(_summarize, out_schema)
-    )
+    # local fixture files scan as 1-2 partitions — spread them on
+    # image_id so the map-only stage uses the cluster; a production
+    # multi-file table already has enough partitions and skips it
+    result = spread(
+        pts.select("cell_id", "image_id", "bytes", "fmt", "w", "h",
+                   "fp_xmin", "fp_ymin", "fp_xmax", "fp_ymax"),
+        "image_id",
+    ).mapInPandas(_map_batches, _SUMMARY_SCHEMA)
+    result._sdg_road_lut_bc = bc  # explicit cleanup handle (see above)
+    return result
 
 
 # ---------------------------------------------------------------------------

@@ -199,7 +199,7 @@ def read_qatiles(spark: SparkSession, path: str,
     bottleneck, no shuffle (map-only until the caller aggregates).
     ``xyz_y`` carries the XYZ (north-origin) row alongside the engine's
     south-origin ``ty`` — the TMS flip both ways."""
-    import pandas as pd
+    from .ops.payload import map_rows
 
     if n_splits is None:
         n_splits = spark.sparkContext.defaultParallelism
@@ -214,22 +214,11 @@ def read_qatiles(spark: SparkSession, path: str,
         len(ranges), "lo"
     )
 
-    def _scan(batches):
-        for pdf in batches:
-            out = []
-            for lo_, hi_ in zip(pdf["lo"], pdf["hi"]):
-                for row in _decode_mbtiles_rows(path, int(lo_), int(hi_)):
-                    z, tx, ty, xyzy, fid, rid, nv, coords = row
-                    out.append((
-                        z, tx, ty, xyzy, fid, rid, nv,
-                        [{"x": x, "y": y} for x, y in coords],
-                    ))
-            yield pd.DataFrame(
-                out, columns=["z", "tx", "ty", "xyz_y", "feat_id",
-                              "road_id", "n_vertices", "coords"],
-            )
+    def _scan(r):
+        for *head, coords in _decode_mbtiles_rows(path, r.lo, r.hi):
+            yield (*head, [{"x": x, "y": y} for x, y in coords])
 
-    return rdf.mapInPandas(_scan, QATILE_FEATURE_SCHEMA)
+    return map_rows(rdf, _scan, QATILE_FEATURE_SCHEMA)
 
 
 def _rowid_bounds(path: str) -> tuple[int | None, int | None]:
@@ -381,7 +370,7 @@ def assemble_relation_rings(member_ways: DataFrame,
     import numpy as np
     import pandas as pd
 
-    def _stitch(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _stitch(key, pdf):
         ways = [
             np.array([[p["x"], p["y"]] for p in c], dtype=np.float64)
             for c in pdf["coords"]

@@ -25,11 +25,10 @@ def image_rai_summary(spark, sf_dir):
     country assignment, or the codecs flips a per-image mils value and
     fails the driver's value hash.
 
-    Safe in the driver's default-1g session because rai_summaries'
-    auto strategy picks the MAP-ONLY broadcast burn (road cover →
-    cell-keyed dict; image bytes never shuffle, peak task memory is one
-    Arrow batch) — the old cogroup path loaded whole cell groups and
-    needed a limit(2000) cap here."""
+    Safe in the driver's default-1g session because the burn is
+    MAP-ONLY (road cover → broadcast cell-keyed dict; image bytes never
+    shuffle, peak task memory is one Arrow batch), so no row cap is
+    needed here."""
     from ..jobs.rai import rai_summaries
 
     images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F
 
+from ..ops.payload import map_rows
 from ..skew import spread
 from ._common import (
     _TS_US,
@@ -1057,26 +1058,16 @@ def tfrecord_roundtrip_docs(spark, sf_dir):
         .load(out)
     )
 
-    def _parse(batches):
-        import pandas as pd
-
+    def _parse(r):
         from sdg_engine.tfrecord import decode_example, read_tfrecords
 
-        for pdf in batches:
-            rows = []
-            for blob in pdf["content"]:
-                for rec in read_tfrecords(bytes(blob)):
-                    ex = decode_example(rec)
-                    rows.append((
-                        ex["doc_id"][0],
-                        ex["lang"].decode("utf-8"),
-                        ex["text"].decode("utf-8"),
-                    ))
-            yield pd.DataFrame(rows, columns=["doc_id", "lang", "text"])
+        for rec in read_tfrecords(bytes(r.content)):
+            ex = decode_example(rec)
+            yield (ex["doc_id"][0], ex["lang"].decode("utf-8"),
+                   ex["text"].decode("utf-8"))
 
-    parsed = bf.select("content").mapInPandas(
-        _parse, "doc_id bigint, lang string, text string"
-    )
+    parsed = map_rows(bf.select("content"), _parse,
+                      "doc_id bigint, lang string, text string")
     cells = _b12_cells("h", 4)
     fp = " + ".join(f"({c} * {4096 ** (3 - j)})" for j, c in enumerate(cells))
     return (
@@ -1148,33 +1139,23 @@ def webdataset_roundtrip_images(spark, sf_dir):
         .load(out)
     )
 
-    def _untar(batches):
+    def _untar(r):
         import io
         import tarfile
 
-        import pandas as pd
+        samples: dict = {}
+        with tarfile.open(fileobj=io.BytesIO(bytes(r.content))) as tar:
+            for m in tar.getmembers():
+                stem, ext = m.name.rsplit(".", 1)
+                samples.setdefault(stem, {})[ext] = tar.extractfile(m).read()
+        for stem, parts in samples.items():
+            cap = parts.pop("txt").decode("utf-8")
+            (fmt, content), = parts.items()
+            yield (stem, fmt, content, cap)
 
-        for pdf in batches:
-            rows = []
-            for blob in pdf["content"]:
-                samples: dict = {}
-                with tarfile.open(fileobj=io.BytesIO(bytes(blob))) as tar:
-                    for m in tar.getmembers():
-                        stem, ext = m.name.rsplit(".", 1)
-                        samples.setdefault(stem, {})[ext] = (
-                            tar.extractfile(m).read()
-                        )
-                for stem, parts in samples.items():
-                    cap = parts.pop("txt").decode("utf-8")
-                    (fmt, content), = parts.items()
-                    rows.append((stem, fmt, content, cap))
-            yield pd.DataFrame(
-                rows, columns=["image_id", "fmt", "content", "caption"]
-            )
-
-    parsed = bf.select("content").mapInPandas(
-        _untar, "image_id string, fmt string, content binary, "
-                "caption string"
+    parsed = map_rows(
+        bf.select("content"), _untar,
+        "image_id string, fmt string, content binary, caption string",
     )
     cells_b = _b12_cells("hb", 4)
     fp_b = " + ".join(
@@ -1368,26 +1349,15 @@ def avro_roundtrip_events(spark, sf_dir):
         .load(out)
     )
 
-    def _parse(batches):
+    def _parse(row):
         from sdg_engine.avro import read_avro
 
-        for pdf in batches:
-            rows = []
-            for blob in pdf["content"]:
-                _, recs = read_avro(bytes(blob))
-                rows.extend(
-                    (r["event_id"], r["ts_us"], r["user_id"],
-                     r["event_type"], r["value"])
-                    for r in recs
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["event_id", "ts_us", "user_id", "event_type",
-                         "value"],
-            )
+        _, recs = read_avro(bytes(row.content))
+        return [(r["event_id"], r["ts_us"], r["user_id"], r["event_type"],
+                 r["value"]) for r in recs]
 
-    decoded = bf.select("content").mapInPandas(
-        _parse,
+    decoded = map_rows(
+        bf.select("content"), _parse,
         "event_id bigint, ts_us bigint, user_id bigint,"
         " event_type string, value double",
     )
@@ -1436,27 +1406,15 @@ def polyline_roundtrip_roads(spark, sf_dir):
         _encode, "road_id bigint, kind string, poly string"
     )
 
-    def _decode(batches):
+    def _decode(r):
         from sdg_engine.polyline import decode_polyline
 
-        for pdf in batches:
-            rows = []
-            for rid, kind, poly in zip(pdf["road_id"], pdf["kind"],
-                                       pdf["poly"]):
-                pts = decode_polyline(poly)
-                rows.append((
-                    rid, kind, len(pts),
-                    sum(p[0] for p in pts), sum(p[1] for p in pts),
-                    pts[-1][0] - pts[0][0],
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=["road_id", "kind", "n_pts", "sum_qx", "sum_qy",
-                         "drift_qx"],
-            )
+        pts = decode_polyline(r.poly)
+        yield (r.road_id, r.kind, len(pts), sum(p[0] for p in pts),
+               sum(p[1] for p in pts), pts[-1][0] - pts[0][0])
 
-    decoded = encoded.mapInPandas(
-        _decode,
+    decoded = map_rows(
+        encoded, _decode,
         "road_id bigint, kind string, n_pts bigint, sum_qx bigint,"
         " sum_qy bigint, drift_qx bigint",
     )

@@ -551,7 +551,7 @@ def country_convex_hull(spark, sf_dir):
         "country_code", F.explode("coords").alias("c")
     ).select("country_code", F.col("c.x").alias("x"), F.col("c.y").alias("y"))
 
-    def _hull(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _hull(key, pdf):
         from sdg_engine.geom import convex_hull, shoelace_area_mils
 
         pts = pdf[["x", "y"]].to_numpy(dtype=np.float64)

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..ops.payload import map_rows
 from ..skew import spread
 from ._common import _drain_confs, _t
 
@@ -1662,6 +1663,25 @@ def doc_repetition(spark, sf_dir):
 _BPE_ROUNDS = 8
 
 
+def _bpe_merge(t: list, a: str, b: str) -> list:
+    """Greedy-leftmost merge of every adjacent (a, b) pair in tokens t."""
+    # r06 fast path: most vocabulary words do not contain the pair at
+    # all — two C-speed membership tests skip the scalar merge walk
+    # (same output: the walk is a no-op without both tokens present)
+    if a not in t or b not in t:
+        return t
+    res = []
+    i = 0
+    while i < len(t):
+        if i + 1 < len(t) and t[i] == a and t[i + 1] == b:
+            res.append(a + b)
+            i += 2
+        else:
+            res.append(t[i])
+            i += 1
+    return res
+
+
 def bpe_train_merges(spark, sf_dir):
     """FULL BPE TRAINING LOOP (8 merge rounds) — the multi-round
     extension of bpe_merge_candidates' single iteration, i.e. actual
@@ -1677,8 +1697,6 @@ def bpe_train_merges(spark, sf_dir):
     Output: the 8 merges (rank, left, right, pair count at selection).
     Oracle: committed golden from an INDEPENDENT scalar Counter-based
     BPE trainer over the same parquet (scripts/make_goldens.py)."""
-    import pandas as pd
-
     vocab = (
         _t(spark, sf_dir, "documents")
         .selectExpr("explode(split(text, ' ')) AS w")
@@ -1707,34 +1725,11 @@ def bpe_train_merges(spark, sf_dir):
         a, b, cnt = best[0].a, best[0].b, int(best[0].cnt)
         merges.append((rank, a, b, cnt))
 
-        def _apply(batches, _a=a, _b=b):
-            for pdf in batches:
-                out = []
-                for toks in pdf["toks"]:
-                    t = list(toks)
-                    # r06 fast path: most vocabulary words do not
-                    # contain the merge pair at all — two C-speed
-                    # membership tests skip the scalar merge walk
-                    # (same output: the walk is a no-op without both
-                    # tokens present)
-                    if _a not in t or _b not in t:
-                        out.append(t)
-                        continue
-                    res = []
-                    i = 0
-                    while i < len(t):
-                        if (i + 1 < len(t) and t[i] == _a
-                                and t[i + 1] == _b):
-                            res.append(_a + _b)
-                            i += 2
-                        else:
-                            res.append(t[i])
-                            i += 1
-                    out.append(res)
-                yield pd.DataFrame({"toks": out, "n": pdf["n"]})
+        def _apply(r, _a=a, _b=b):
+            yield (_bpe_merge(list(r.toks), _a, _b), r.n)
 
-        vocab = vocab.mapInPandas(
-            _apply, "toks array<string>, n bigint"
+        vocab = map_rows(
+            vocab, _apply, "toks array<string>, n bigint"
         ).localCheckpoint()
     return spark.createDataFrame(
         merges, "rank int, lhs string, rhs string, cnt bigint"
@@ -1752,8 +1747,6 @@ def bpe_encode_docs(spark, sf_dir):
     doc count, word instances, encoded token count, char count.
     Oracle: committed golden from the INDEPENDENT scalar trainer +
     dict-lookup encoder (scripts/make_goldens.py)."""
-    import pandas as pd
-
     merges = [
         (r.lhs, r.rhs)
         for r in bpe_train_merges(spark, sf_dir).orderBy("rank").collect()
@@ -1764,31 +1757,13 @@ def bpe_encode_docs(spark, sf_dir):
     ).filter("length(w) > 0")
     vocab = wpd.select("w").distinct()
 
-    def _enc(batches, _merges=merges):
-        for pdf in batches:
-            lens = []
-            for w in pdf["w"]:
-                t = list(w)
-                for a, b in _merges:
-                    # r06 fast path: skip the merge walk when the pair
-                    # cannot occur (C-speed membership tests; the walk
-                    # is a no-op without both tokens present)
-                    if a not in t or b not in t:
-                        continue
-                    res = []
-                    i = 0
-                    while i < len(t):
-                        if i + 1 < len(t) and t[i] == a and t[i + 1] == b:
-                            res.append(a + b)
-                            i += 2
-                        else:
-                            res.append(t[i])
-                            i += 1
-                    t = res
-                lens.append(len(t))
-            yield pd.DataFrame({"w": pdf["w"], "tok_len": lens})
+    def _enc(r, _merges=merges):
+        t = list(r.w)
+        for a, b in _merges:
+            t = _bpe_merge(t, a, b)
+        yield (r.w, len(t))
 
-    enc = vocab.mapInPandas(_enc, "w string, tok_len int")
+    enc = map_rows(vocab, _enc, "w string, tok_len int")
     word_stats = (
         wpd.join(F.broadcast(enc), "w")
         .groupBy("lang")
@@ -1812,23 +1787,16 @@ def doc_zlib_ratio(spark, sf_dir):
     codec, the libm-trig precedent) lengths via one Arrow-batched
     map pass, aggregated per lang with the ratio in exact mils.
     Golden twin recomputes through pandas scalar plumbing."""
-    import pandas as pd
-
     docs = _t(spark, sf_dir, "documents").select("lang", "text")
 
-    def _comp(batches):
+    def _comp(r):
         import zlib
 
-        for pdf in batches:
-            raw = [len(t.encode("utf-8")) for t in pdf["text"]]
-            comp = [len(zlib.compress(t.encode("utf-8"), 6))
-                    for t in pdf["text"]]
-            yield pd.DataFrame({
-                "lang": pdf["lang"], "raw_len": raw, "comp_len": comp,
-            })
+        raw = r.text.encode("utf-8")
+        yield (r.lang, len(raw), len(zlib.compress(raw, 6)))
 
     return (
-        docs.mapInPandas(_comp, "lang string, raw_len long, comp_len long")
+        map_rows(docs, _comp, "lang string, raw_len long, comp_len long")
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -1967,7 +1935,7 @@ def arrow_doc_stats(spark, sf_dir):
     Arrow hook (one abstraction BELOW mapInPandas: no pandas object
     materialization, kernels run on Arrow buffers) that completes the
     vectorized-Python API ladder next to mapInPandas (codecs),
-    cogrouped applyInPandas (tile burn), applyInPandasWithState
+    grouped applyInPandas (MVT sink), applyInPandasWithState
     (sessionize), arrow-optimized pandas UDFs, and the Python UDTF.
     Map-only over the scan; the per-lang rollup is the only exchange.
     At 100 TB this is the shape of every decode pass in the repo."""

@@ -392,3 +392,104 @@ def test_ring_cover_matches_brute_force(spark):
     # duplicates exist (a ring cell reached from several covering
     # cells): ring_cover leaves the reduction to its callers
     assert len(got) > len(got_min)
+
+
+def _brute_knn(pts: np.ndarray, segs: np.ndarray, ids: np.ndarray,
+               cutoff: float, level: int) -> dict:
+    """Reference for ops.spatial.knn_nearest_road: every point against
+    every segment, the same plate-carrée distance as
+    ``sqlgen.point_seg_dist_steps`` (same operation order, so equal
+    geometry gives bit-equal distances), then the first of the
+    (dist, road_id, seg_id) order among segments within ``cutoff``.
+    k_ring is the Chebyshev distance from the point's cell to the
+    segment's bbox cells.  Point i -> (road_id, dist_m, k_ring)."""
+    px, py = pts[:, :1], pts[:, 1:]
+    ax, ay, bx, by = (segs[:, j][None, :] for j in range(4))
+    dx, dy = bx - ax, by - ay
+    len2 = dx * dx + dy * dy
+    num = (px - ax) * dx + (py - ay) * dy
+    t = np.divide(num, len2, out=np.zeros_like(num), where=len2 > 0)
+    t = np.minimum(1.0, np.maximum(0.0, t))
+    ex = px - (ax + t * dx)
+    ey = py - (ay + t * dy)
+    dist = np.sqrt(ex * ex + ey * ey) * 111320.0
+    pix, piy = C.xy_to_index(pts[:, 0], pts[:, 1], level)
+    ix0, iy0 = C.xy_to_index(np.minimum(segs[:, 0], segs[:, 2]),
+                             np.minimum(segs[:, 1], segs[:, 3]), level)
+    ix1, iy1 = C.xy_to_index(np.maximum(segs[:, 0], segs[:, 2]),
+                             np.maximum(segs[:, 1], segs[:, 3]), level)
+    want = {}
+    for i in range(len(pts)):
+        cand = np.flatnonzero(dist[i] <= cutoff)
+        if len(cand) == 0:
+            continue
+        j = cand[np.lexsort((ids[cand, 1], ids[cand, 0], dist[i, cand]))[0]]
+        k = max(ix0[j] - pix[i], pix[i] - ix1[j],
+                iy0[j] - piy[i], piy[i] - iy1[j], 0)
+        want[i] = (int(ids[j, 0]), float(dist[i, j]), int(k))
+    return want
+
+
+def test_knn_nearest_road_matches_brute_force(spark):
+    """ops.spatial.knn_nearest_road (kring(1) road cover, cell join,
+    min-struct argmin) against a numpy argmin over ALL segments, on
+    seeded random points and segments plus: zero-length segments,
+    points on cell corners and edges, a point exactly at the cutoff
+    (kept) and one ulp past it (dropped), equal-distance ties broken by
+    road_id then seg_id, and points with no road in reach (absent)."""
+    from sdg_engine.ops.spatial import knn_nearest_road, level_for_cutoff
+
+    rng = np.random.default_rng(20261018)
+    qx, qy = 6.0, 6.0  # isolated zero-length segment for the cutoff case
+    at = qy + 3000.0 / 111320.0
+    cutoff = (at - qy) * 111320.0  # what the engine computes, bit for bit
+    level = level_for_cutoff(cutoff)
+    step = WORLD_SIZE / (1 << level)
+
+    a = rng.uniform(3.0, 3.5, (150, 2))
+    b = a + rng.uniform(-1.5 * step, 1.5 * step, (150, 2))
+    b[:15] = a[:15]  # zero-length
+    segs = np.vstack([np.c_[a, b], [(qx, qy, qx, qy)]])
+    ids = np.array([(i // 3, i % 3) for i in range(len(segs))])
+    # exact ties: copies of 20 segments under other (road_id, seg_id)
+    # keys, lower or higher than the original's
+    dup = rng.choice(150, 20, replace=False)
+    dup_ids = [(ids[j, 0], 7) if n % 3 == 0 else (rng.integers(0, 60), 9)
+               for n, j in enumerate(dup)]
+    segs = np.vstack([segs, segs[dup]])
+    ids = np.vstack([ids, dup_ids])
+
+    grid = step * np.arange(int(3.0 / step) + 1, int(3.5 / step) + 1)
+    corners = np.array([(x, y) for x in grid[::2] for y in grid[::3]])
+    edges = np.c_[grid, rng.uniform(3.0, 3.5, len(grid))]
+    pts = np.vstack([
+        rng.uniform(2.98, 3.52, (400, 2)),
+        corners, edges, edges[:, ::-1],
+        # the copies' own endpoints: distance 0, tied with the original
+        a[dup], b[dup],
+        rng.uniform(8.0, 8.5, (10, 2)),  # no road in reach
+        [(qx, at), (qx, np.nextafter(at, np.inf))],
+    ])
+
+    df_segs = spark.createDataFrame(
+        [(int(i[0]), int(i[1]), *map(float, s)) for i, s in zip(ids, segs)],
+        "road_id bigint, seg_id int, ax double, ay double, bx double, by double",
+    )
+    df_pts = spark.createDataFrame(
+        [(f"p{i:05d}", float(x), float(y)) for i, (x, y) in enumerate(pts)],
+        "image_id string, lon double, lat double",
+    )
+    got = knn_nearest_road(df_pts, df_segs, cutoff).toPandas()
+    want = _brute_knn(pts, segs, ids, cutoff, level)
+
+    n = len(pts)
+    assert n - 2 in want and n - 1 not in want  # the cutoff pair
+    assert not any(i in want for i in range(n - 12, n - 2))  # far points
+    assert any(k == 1 for _, _, k in want.values())  # found via the halo
+    got = {int(r.image_id[1:]): (int(r.road_id), r.dist_m, int(r.k_ring))
+           for r in got.itertuples(index=False)}
+    assert set(got) == set(want)
+    for i, (road, dist, k) in want.items():
+        assert got[i][0] == road, i
+        assert abs(got[i][1] - dist) <= 1e-6, i
+        assert got[i][2] == k, i

@@ -84,16 +84,14 @@ def test_phash_near_dup_pairs(spark, images):
 
 
 def test_burn_cost_cogroup_matches_oracle(spark, images):
-    """Distributed A1+A2 (cogroup) == per-tile numpy oracle with ALL
-    segments brute force (validates candidate generation + halo).
-    The strategy is pinned: ``auto`` would pick by a plan-statistics
-    row estimate, which can move this small input to broadcast."""
+    """Distributed A1+A2 == per-tile numpy oracle with ALL segments
+    brute force: checks the road LUT's candidate generation and kring(1)
+    halo at level 9, on an in-memory road frame."""
     geo = SP.with_geo(images.limit(60))
     roads = FX.roads_records(SF)
     segs = SP.road_segments(spark.createDataFrame(roads))
     got = (
-        RS.burn_cost_summaries(geo, segs, cutoff_m=250.0, level=9,
-                               strategy="cogroup")
+        RS.burn_cost_summaries(geo, segs, cutoff_m=250.0, level=9)
         .orderBy("image_id")
         .toPandas()
     )

@@ -105,12 +105,48 @@ def test_assign_countries_is_broadcast_only(spark):
 
 
 def test_burn_auto_strategy_has_a_row_estimate(spark):
-    """burn_cost_summaries' auto strategy bounds the road count from
-    plan statistics; a parquet-backed input must yield an estimate
-    (None would force the cogroup path)."""
+    """burn_cost_summaries has one plan: the broadcast road LUT and one
+    map-only ``MapInPandas``, never a cogroup, whatever the road frame's
+    plan statistics say — for the parquet roads the job reads and for
+    the same roads built in memory, whose row estimate is far too high."""
+    import os
+
+    from sdg_engine import fixtures as FX
+    from sdg_engine.jobs.rai import fixture_dir
     from sdg_engine.ops import raster as RS
 
-    assert RS._estimate_rows(segments_df(spark, SF)) > 0
+    d = fixture_dir(0.001)
+    geo = SP.with_geo(spark.read.parquet(os.path.join(d, "images.parquet")))
+    for roads in (spark.read.parquet(os.path.join(d, "roads.parquet")),
+                  spark.createDataFrame(FX.roads_records(0.001))):
+        plan = _plan(RS.burn_cost_summaries(geo, SP.road_segments(roads)))
+        assert plan.count("MapInPandas") == 1
+        assert "FlatMapCoGroupsInPandas" not in plan
+
+
+def test_grouped_pandas_builders_infer_no_eval_type(spark, tmp_path):
+    """Each ``applyInPandas`` function annotates all of its parameters
+    or none, so building its plan raises no "Cannot infer the eval type
+    from type hints" warning (a partly annotated function warns on every
+    build)."""
+    import warnings
+
+    from sdg_engine import mvt as MVT
+    from sdg_engine.ops.payload import render_colormap_png
+    from sdg_engine.osm import assemble_relation_rings, relation_fixture
+    from sdg_engine.queries.spatial import country_convex_hull
+
+    cells = spark.createDataFrame(
+        [(0, 0, 1, 2, 3)], "tx int, ty int, px int, py int, bin int")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        render_colormap_png(cells)
+        assemble_relation_rings(*relation_fixture(spark))
+        MVT.write_road_mvt(segments_df(spark, SF), str(tmp_path / "mvt"),
+                           level=4)
+        country_convex_hull(spark, SF)
+    assert not [w for w in caught
+                if "Cannot infer the eval type" in str(w.message)]
 
 
 def test_spatial_join_salted_is_row_identical(spark):
