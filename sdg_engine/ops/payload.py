@@ -120,12 +120,26 @@ def transcode(images: DataFrame, to_fmt: str) -> DataFrame:
     — the invariant tests assert it)."""
 
     def _tx(r):
-        data = encode_image(_decode(r), to_fmt)
-        rt = decode_image(data, to_fmt, int(r.w), int(r.h))
-        yield (r.image_id, data, int(r.w), int(r.h), to_fmt, r.caption,
-               np.int64(phash64(rt)))
+        yield _transcoded(r, _decode(r), to_fmt)
 
     return map_rows(images, _tx, _IMAGES_SCHEMA)
+
+
+def _transcoded(r, img: np.ndarray, to_fmt: str) -> tuple:
+    """The images-schema row of ``r`` with its decoded pixels ``img``
+    re-encoded to ``to_fmt`` and the phash of the round-tripped bytes."""
+    data = encode_image(img, to_fmt)
+    rt = decode_image(data, to_fmt, int(r.w), int(r.h))
+    return (r.image_id, data, int(r.w), int(r.h), to_fmt, r.caption,
+            np.int64(phash64(rt)))
+
+
+def _geotiff(r, img: np.ndarray) -> bytes:
+    """``img`` (the decoded pixels of ``r``) as a deflate GeoTIFF whose
+    grid tags come from ``r``'s footprint."""
+    ps = ((r.fp_xmax - r.fp_xmin) / int(r.w),
+          (r.fp_ymax - r.fp_ymin) / int(r.h))
+    return encode_tiff(img, pixel_scale=ps, tiepoint=(r.fp_xmin, r.fp_ymax))
 
 
 def verify_invariants(inputs: DataFrame, outputs: DataFrame) -> DataFrame:
@@ -247,16 +261,28 @@ def transcode_geotiff(images_geo: DataFrame) -> DataFrame:
     Needs fp_xmin..fp_ymax from ops.spatial.with_geo."""
 
     def _tx(r):
-        ps = ((r.fp_xmax - r.fp_xmin) / int(r.w),
-              (r.fp_ymax - r.fp_ymin) / int(r.h))
-        data = encode_tiff(
-            _decode(r), pixel_scale=ps, tiepoint=(r.fp_xmin, r.fp_ymax)
-        )
-        yield (r.image_id, data, int(r.w), int(r.h), "tif")
+        yield (r.image_id, _geotiff(r, _decode(r)), int(r.w), int(r.h), "tif")
 
     return map_rows(
         images_geo.select(*_GEO_COLS), _tx,
         "image_id string, bytes binary, w int, h int, fmt string",
+    )
+
+
+def transcode_png_geotiff(images_geo: DataFrame) -> DataFrame:
+    """:func:`transcode` to PNG and :func:`transcode_geotiff` from one
+    decode per tile: ``transcode(images, "png")``'s row plus the tile's
+    GeoTIFF bytes in ``tif``, each byte-identical to its one-sink twin.
+
+    Needs caption and fp_xmin..fp_ymax (ops.spatial.with_geo)."""
+
+    def _tx(r):
+        img = _decode(r)
+        yield (*_transcoded(r, img, "png"), _geotiff(r, img))
+
+    return map_rows(
+        images_geo.select(*_GEO_COLS, "caption"), _tx,
+        _IMAGES_SCHEMA + ", tif binary",
     )
 
 

@@ -67,7 +67,7 @@ def test_lcc_roundtrip_and_parallel_scale():
     dlam = 1e-4
     x1, y1 = C.lcc_forward(np.array([5.0]), np.array([3.0]), **p)
     x2, y2 = C.lcc_forward(np.array([5.0 + dlam]), np.array([3.0]), **p)
-    proj_d = float(np.hypot(x2 - x1, y2 - y1))
+    proj_d = float(np.hypot(x2 - x1, y2 - y1)[0])
     phi = np.radians(3.0)
     nu = C.WGS84_A / np.sqrt(1 - C.WGS84_E2 * np.sin(phi) ** 2)
     true_d = nu * np.cos(phi) * np.radians(dlam)

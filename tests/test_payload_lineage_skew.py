@@ -442,3 +442,39 @@ def test_read_table_memo_is_per_session(spark):
     s2.conf.set("spark.sql.shuffle.partitions", "3")
     assert b.sparkSession.conf.get("spark.sql.shuffle.partitions") == "3"
     assert a.sparkSession.conf.get("spark.sql.shuffle.partitions") != "3"
+
+
+def test_forgotten_sink_one_pass_matches_two_pass_sinks(spark, tmp_path):
+    """forgotten_sink decodes each forgotten tile once and writes both
+    sinks from that pass: its PNG rows equal ``transcode(forgotten,
+    "png")`` and its GeoTIFF rows equal ``transcode_geotiff`` byte for
+    byte, and the PNG output passes the payload invariants."""
+    from sdg_engine.jobs.rai import fixture_dir, forgotten_sink, rai_summaries
+
+    d = fixture_dir(SF)
+    images = spark.read.parquet(os.path.join(d, "images.parquet"))
+    roads = spark.read.parquet(os.path.join(d, "roads.parquet"))
+    per_image, _ = rai_summaries(spark, images, roads)
+    forgotten_sink(images, per_image, str(tmp_path))
+    forgotten = images.join(
+        per_image.filter(F.col("pop_near") == 0).select("image_id"),
+        "image_id", "left_semi",
+    )
+
+    def rows(df):
+        return sorted(tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
+                      for r in df.collect())
+
+    png = spark.read.parquet(str(tmp_path / "forgotten_png"))
+    png_cols = ["image_id", "bytes", "w", "h", "fmt", "caption", "phash"]
+    assert png.columns == png_cols
+    got_png = rows(png)
+    assert 0 < len(got_png) < images.count()
+    assert got_png == rows(PL.transcode(forgotten, "png").select(*png_cols))
+    tif = spark.read.parquet(str(tmp_path / "forgotten_geotiff"))
+    assert tif.columns == ["image_id", "bytes", "w", "h", "fmt"]
+    assert rows(tif) == rows(PL.transcode_geotiff(SP.with_geo(forgotten)))
+    inv = PL.verify_invariants(forgotten, png).toPandas()
+    assert len(inv) == len(got_png)
+    assert (inv["psnr"] >= 40).all()
+    assert inv["caption_equal"].all()

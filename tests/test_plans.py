@@ -926,6 +926,7 @@ def test_payload_row_maps_plan_map_only(spark):
         "transcode": PL.transcode(images, "png"),
         "warp_checksums": PL.warp_checksums(geo, "UTM:31"),
         "transcode_geotiff": PL.transcode_geotiff(geo),
+        "transcode_png_geotiff": PL.transcode_png_geotiff(geo),
         "hillshade_stats": PL.hillshade_stats(images),
         "sobel_stats": PL.sobel_stats(images),
         "d8_flow_stats": PL.d8_flow_stats(images),
@@ -940,3 +941,29 @@ def test_payload_row_maps_plan_map_only(spark):
         plan = _plan(df)
         assert plan.count("MapInPandas") == 1, name
         assert "Exchange" not in plan, name
+
+
+def test_rai_summaries_materialize_once_per_call(spark):
+    """rai_summaries checkpoints per_image, so per_country aggregates
+    the checkpoint (no Python stage re-runs the burn or the ray-cast),
+    and each call checkpoints its own frame: a second call on a subset
+    of the images returns that subset's rows, not the first call's."""
+    import os
+
+    from sdg_engine.jobs.rai import fixture_dir, rai_summaries
+
+    d = fixture_dir(0.001)
+    images = spark.read.parquet(os.path.join(d, "images.parquet"))
+    roads = spark.read.parquet(os.path.join(d, "roads.parquet"))
+    per_image, per_country = rai_summaries(spark, images, roads)
+    assert sum(r["n_images"] for r in per_country.collect()) == images.count()
+    plan = _plan(per_country)
+    assert "Scan ExistingRDD" in plan
+    assert "MapInPandas" not in plan
+    assert "ArrowEvalPython" not in plan
+    sub = images.filter(F.col("image_id") < "img000000000100")
+    n_sub = sub.count()
+    assert 0 < n_sub < images.count()
+    per_image_sub, _ = rai_summaries(spark, sub, roads)
+    assert per_image_sub.count() == n_sub
+    assert per_image.count() == images.count()
