@@ -36,6 +36,7 @@ from ..lineage import run_bucketed
 from ..ops import payload as PL
 from ..ops import raster as RS
 from ..ops import spatial as SP
+from ..session import scoped_confs
 
 CUTOFF_M = 250.0  # sub-footprint cutoff so the burn mask is non-trivial
 # next to this checkout's package, so separate checkouts keep separate caches
@@ -63,10 +64,13 @@ def rai_summaries(
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (per_image, per_country) summary DataFrames.
 
-    ``per_image`` is local-checkpointed (lazily: the first action that
-    reads it computes it once) and ``per_country`` aggregates that
-    checkpoint, so every sink of one job shares one pass of decode,
-    burn, chamfer and ray-cast.  Each call checkpoints a new frame, so
+    ``per_image`` is local-checkpointed and ``per_country`` aggregates
+    that checkpoint, so every sink of one job shares one pass of
+    decode, burn, chamfer and ray-cast.  The call itself is not lazy:
+    under AQE, ``localCheckpoint(eager=False)`` still runs the plan's
+    shuffle and broadcast stages (burn, ray-cast, join-back) before it
+    returns, so a caller that only builds or inspects the frames pays
+    for most of the upstream.  Each call checkpoints a new frame, so
     no call reads an earlier call's results; the blocks are freed when
     the frame is garbage-collected.  Trade-off: checkpoint blocks live
     only on the executors, so losing an executor fails the job instead
@@ -123,14 +127,11 @@ def forgotten_sink(
     # partitions nor turns it into a broadcast join, and each partition
     # runs the Python passes: 7.2 s vs 1.8 s for both sinks (358 tiles,
     # local[4]).  Nothing downstream reads that partitioning.
-    spark = images.sparkSession
-    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "true")
-    try:
+    with scoped_confs(
+        images.sparkSession,
+        {"spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true"},
+    ):
         both = PL.transcode_png_geotiff(SP.with_geo(forgotten)).persist()
-    finally:
-        spark.conf.set(key, prev)
     try:
         out = both.drop("tif")
         out.write.mode("overwrite").parquet(os.path.join(out_dir, "forgotten_png"))

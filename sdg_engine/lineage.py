@@ -25,6 +25,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import scoped_confs
+
 # wall_sec is PASS-level (the wall time of the single partitionBy pass
 # that committed this bucket's data), not per-bucket — all buckets
 # written by one pass share the value.
@@ -85,12 +87,10 @@ def run_bucketed(
     ).filter(F.col("bucket").isin(todo))
     if not todo:
         raise RuntimeError(f"injected failure before bucket {fail_at_bucket}")
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with scoped_confs(
+        spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    ):
         bucketed.write.mode("overwrite").partitionBy("bucket").parquet(out_dir)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     wall = round(time.time() - t0, 3)
 
     committed = spark.read.option("basePath", out_dir).parquet(

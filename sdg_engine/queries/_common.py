@@ -3,11 +3,12 @@ session prep, the image-fixture and streaming-drain set-up."""
 
 from __future__ import annotations
 
-import contextlib
 import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import scoped_confs
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -51,7 +52,6 @@ def _prep(spark: SparkSession) -> None:
     ensure_pyfiles(spark)
 
 
-@contextlib.contextmanager
 def _drain_confs(spark, parts: str = "8", nodata: bool = True):
     """Scoped confs for a streaming drain or tiny-relation iterative
     loop (saved/restored): shuffle partitions down to ``parts``
@@ -73,25 +73,13 @@ def _drain_confs(spark, parts: str = "8", nodata: bool = True):
     four filler-driven drains).  Drains whose results DO flush in a
     no-data batch (native session windows, chained aggs — measured
     FAIL with the conf off) keep the default."""
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    old_wscg = spark.conf.get("spark.sql.codegen.wholeStage")
-    old_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled"
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    confs = {
+        "spark.sql.shuffle.partitions": parts,
+        "spark.sql.codegen.wholeStage": "false",
+    }
     if not nodata:
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", "false"
-        )
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        spark.conf.set("spark.sql.codegen.wholeStage", old_wscg)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", old_nodata
-        )
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    return scoped_confs(spark, confs)
 
 
 def _fixture_sf(sf_dir: str) -> float:

@@ -1,12 +1,64 @@
-"""Structured Streaming queries: each builder writes its input files,
-drains them with an availableNow trigger and returns the sink's rows."""
+"""Structured Streaming queries: each builder stages its input files
+with :func:`_stage_inputs`, drains them with an availableNow trigger
+and returns the sink's rows."""
 
 from __future__ import annotations
 
+import datetime as _dt
+import os
+import shutil
+import time
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ._common import _drain_confs, _stream_base, _t
+from .. import streaming as STR
+from ..session import scoped_confs
+from ._common import _drain_confs, _stream_base
+
+
+def _stage_inputs(spark, prefix: str, files) -> tuple[str, str, str]:
+    """Stage one drain's input files under a fresh :func:`_stream_base`
+    dir; returns (in_dir, out, ck).  ``files`` lists ``(name, src)`` in
+    micro-batch order: a path ``src`` is copied, a pyarrow Table is
+    written.  FileStreamSource orders pending files by mtime ONLY (ms
+    resolution, no path tie-break), so each file gets a whole-second
+    mtime one second after the previous file's — files written within
+    one millisecond would otherwise drain in an arbitrary order.  Also
+    pins the session time zone to UTC, which the drains' event-time
+    windows and timestamp sinks assume."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    base = _stream_base(spark, prefix)
+    in_dir = os.path.join(base, "in")
+    os.makedirs(in_dir)
+    t0 = int(time.time())
+    for i, (name, src) in enumerate(files):
+        path = os.path.join(in_dir, name)
+        if isinstance(src, str):
+            shutil.copy(src, path)
+        else:
+            pq.write_table(src, path)
+        os.utime(path, (t0 + i, t0 + i))
+    return in_dir, os.path.join(base, "out"), os.path.join(base, "ck")
+
+
+def _ntile_chunks(sf_dir, k: int):
+    """The events cut into ``k`` chunk files as ``NTILE(k) OVER (ORDER
+    BY ts, event_id)`` cuts them: contiguous in (ts, event_id) order,
+    the first ``n % k`` chunks one row longer."""
+    t = pq.read_table(f"{sf_dir}/events.parquet")
+    t = t.take(pc.sort_indices(
+        t, sort_keys=[("ts", "ascending"), ("event_id", "ascending")]
+    ))
+    q, r = divmod(t.num_rows, k)
+    files, lo = [], 0
+    for c in range(k):
+        files.append((f"chunk{c}.parquet", t.slice(lo, q + (c < r))))
+        lo += q + (c < r)
+    return files
 
 
 def streaming_hourly_closed(spark, sf_dir):
@@ -15,23 +67,15 @@ def streaming_hourly_closed(spark, sf_dir):
     sink's contents.  Oracle-checked: the append-mode output is exactly
     the windows closed at the final watermark, which DuckDB computes
     relationally."""
-    import os
-    import shutil
-
-    from .. import streaming as STR
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = _stream_base(spark, "hourly_")
-    in_dir = os.path.join(base, "in")
-    os.makedirs(in_dir)
-    shutil.copy(f"{sf_dir}/events.parquet", os.path.join(in_dir, "events.parquet"))
-    out, ck = os.path.join(base, "out"), os.path.join(base, "ck")
-    STR.stream_events_hourly(spark, in_dir, out, ck)
-    res = spark.read.parquet(out).select(
+    in_dir, out, ck = _stage_inputs(
+        spark, "hourly_", [("events.parquet", f"{sf_dir}/events.parquet")]
+    )
+    with _drain_confs(spark):
+        STR.stream_events_hourly(spark, in_dir, out, ck)
+    return spark.read.parquet(out).select(
         F.unix_timestamp("hour_start").alias("hour_epoch"),
         "event_type", "n", "sum_value_floor",
     )
-    return res
 
 
 def streaming_dedup_docs(spark, sf_dir):
@@ -40,23 +84,17 @@ def streaming_dedup_docs(spark, sf_dir):
     (lang, md5(text)) keys.  The aggregate is computed batch-side from
     the deduped sink, so the result is independent of stream read
     order and matches the DuckDB COUNT(DISTINCT) oracle exactly."""
-    import os
-    import shutil
-
-    from .. import streaming as STR
-
-    base = _stream_base(spark, "sdedup_")
-    in_dir = os.path.join(base, "in")
-    os.makedirs(in_dir)
-    shutil.copy(f"{sf_dir}/documents.parquet", os.path.join(in_dir, "documents.parquet"))
-    out, ck = os.path.join(base, "out"), os.path.join(base, "ck")
-    STR.stream_dedup_docs(spark, in_dir, out, ck)
-    res = (
+    in_dir, out, ck = _stage_inputs(
+        spark, "sdedup_",
+        [("documents.parquet", f"{sf_dir}/documents.parquet")],
+    )
+    with _drain_confs(spark):
+        STR.stream_dedup_docs(spark, in_dir, out, ck)
+    return (
         spark.read.parquet(out)
         .groupBy("lang")
         .agg(F.count(F.lit(1)).alias("n_unique"))
     )
-    return res
 
 
 def streaming_dedup_watermarked(spark, sf_dir):
@@ -70,18 +108,12 @@ def streaming_dedup_watermarked(spark, sf_dir):
     the same COUNT(DISTINCT).  The horizon-crossing behavior
     (re-emission after state eviction) is pinned separately in
     tests/test_streaming.py."""
-    import os
-    import shutil
-
-    from .. import streaming as STR
-
-    base = _stream_base(spark, "sdwm_")
-    in_dir = os.path.join(base, "in")
-    os.makedirs(in_dir)
-    shutil.copy(f"{sf_dir}/documents.parquet",
-                os.path.join(in_dir, "documents.parquet"))
-    out, ck = os.path.join(base, "out"), os.path.join(base, "ck")
-    STR.stream_dedup_docs_watermarked(spark, in_dir, out, ck)
+    in_dir, out, ck = _stage_inputs(
+        spark, "sdwm_",
+        [("documents.parquet", f"{sf_dir}/documents.parquet")],
+    )
+    with _drain_confs(spark):
+        STR.stream_dedup_docs_watermarked(spark, in_dir, out, ck)
     return (
         spark.read.parquet(out)
         .groupBy("lang")
@@ -95,19 +127,12 @@ def streaming_interval_join(spark, sf_dir):
     batch-side from the emitted pairs — the result is the exact batch
     interval join, independent of micro-batch boundaries (DuckDB
     oracle).  State on both sides is watermark-bounded."""
-    import os
-    import shutil
-
-    from .. import streaming as STR
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = _stream_base(spark, "sij_")
-    in_dir = os.path.join(base, "in")
-    os.makedirs(in_dir)
-    shutil.copy(f"{sf_dir}/events.parquet", os.path.join(in_dir, "events.parquet"))
-    out, ck = os.path.join(base, "out"), os.path.join(base, "ck")
-    STR.stream_interval_join(spark, in_dir, out, ck)
-    res = (
+    in_dir, out, ck = _stage_inputs(
+        spark, "sij_", [("events.parquet", f"{sf_dir}/events.parquet")]
+    )
+    with _drain_confs(spark):
+        STR.stream_interval_join(spark, in_dir, out, ck)
+    return (
         spark.read.parquet(out)
         .groupBy("user_id")
         .agg(
@@ -116,12 +141,10 @@ def streaming_interval_join(spark, sf_dir):
             F.max("view_id").alias("max_view"),
         )
     )
-    return res
 
 
-def _interval_join_inputs(spark, sf_dir, prefix: str):
-    """Input files for the stream-stream outer interval joins; returns
-    (in_dir, out, ck) under a fresh :func:`_stream_base` dir.
+def _interval_join_files(sf_dir):
+    """Input files of the stream-stream outer interval joins.
 
     Events before 2024-01-11 (DEMO BOUND: join-state churn is per-row
     and the full sf0.1 month ran 125 s in the bench for no extra
@@ -132,36 +155,16 @@ def _interval_join_inputs(spark, sf_dir, prefix: str):
     16a: outer-join NULL eviction runs at the end of the batch AFTER
     the watermark crosses the bound).  'signup' filler rows join
     neither side, so they advance the watermark without touching join
-    state.  FileStreamSource orders pending files by mtime ONLY (ms
-    resolution, no path tie-break), so the files get strictly
-    increasing whole-second mtimes in the order they were written."""
-    import datetime as _dt
-    import os
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = _stream_base(spark, prefix)
-    in_dir = os.path.join(base, "in")
-    os.makedirs(in_dir)
+    state."""
     t = pq.read_table(f"{sf_dir}/events.parquet")
-    t = t.filter(
-        pa.compute.less(t["ts"], pa.scalar(_dt.datetime(2024, 1, 11)))
-    )
-    t = t.take(pa.compute.sort_indices(t, sort_keys=[("ts", "ascending")]))
+    t = t.filter(pc.less(t["ts"], pa.scalar(_dt.datetime(2024, 1, 11))))
+    t = t.take(pc.sort_indices(t, sort_keys=[("ts", "ascending")]))
     n = t.num_rows
-    filler = t.filter(pa.compute.equal(t["event_type"], "signup")).slice(0, 4)
-    files = [(t.slice(k * n // 2, (k + 1) * n // 2 - k * n // 2),
-              f"chunk-{k:02d}.parquet") for k in range(2)]
-    files += [(filler, f"chunk-9{k}-filler.parquet") for k in range(2)]
-    t0 = time.time()
-    for i, (tbl, name) in enumerate(files):
-        path = os.path.join(in_dir, name)
-        pq.write_table(tbl, path)
-        os.utime(path, (t0 + i, t0 + i))
-    return in_dir, os.path.join(base, "out"), os.path.join(base, "ck")
+    filler = t.filter(pc.equal(t["event_type"], "signup")).slice(0, 4)
+    files = [(f"chunk-{k:02d}.parquet",
+              t.slice(k * n // 2, (k + 1) * n // 2 - k * n // 2))
+             for k in range(2)]
+    return files + [(f"chunk-9{k}-filler.parquet", filler) for k in range(2)]
 
 
 def streaming_left_join(spark, sf_dir):
@@ -172,23 +175,24 @@ def streaming_left_join(spark, sf_dir):
     batches and every bounded click's NULL row flushes before the
     drain ends; the DuckDB oracle is the plain batch left join over
     the same click bound."""
-    from .. import streaming as STR
-
-    in_dir, out, ck = _interval_join_inputs(spark, sf_dir, "slj_")
+    in_dir, out, ck = _stage_inputs(
+        spark, "slj_", _interval_join_files(sf_dir)
+    )
     # stateful-join state stores (4 per join) are one per shuffle
     # partition PER BATCH — at 32 partitions that is 128 store commits
     # a batch, pure fixed cost at harness size.  8 is plenty here;
     # _drain_confs also turns codegen off for the drain (r06 — see its
     # docstring) and restores both right after.
     with _drain_confs(spark, nodata=False):
-        STR.stream_interval_join_left(spark, in_dir, out, ck,
-                                      emit_before="2024-01-10 00:00:00")
+        STR.stream_interval_join(spark, in_dir, out, ck, how="left",
+                                 emit_before="2024-01-10 00:00:00",
+                                 max_files=1)
     return (
         spark.read.parquet(out)
         # a full day below the stream cutoff: the final global watermark
         # is throttled by the filtered click side to ~(cutoff - 2 h), so
         # only clicks with c_ts + 30 min safely below it are guaranteed
-        # their NULL emission (see stream_interval_join_left docstring)
+        # their NULL emission (see the stream_interval_join docstring)
         .filter(F.expr("c_ts < TIMESTAMP '2024-01-09 00:00:00'"))
         .groupBy("user_id")
         .agg(
@@ -212,20 +216,13 @@ def streaming_snapshot_sink(spark, sf_dir):
     so stream ingestion, commit protocol, and snapshot read are all
     load-bearing.  Values fold as integer mils (gotcha 8).
     """
-    import os
-
-    from .. import streaming as STR
     from ..storage import read_snapshot, snapshot_history
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = _stream_base(spark, "snapsink_")
-    in_dir = os.path.join(base, "in")
-    table = os.path.join(base, "tbl")
-    ck = os.path.join(base, "ck")
-    if not os.path.exists(in_dir):
-        _t(spark, sf_dir, "events").repartition(4).write.parquet(in_dir)
-        with _drain_confs(spark, nodata=False):  # r06: see _drain_confs
-            STR.stream_snapshot_sink(spark, in_dir, table, ck)
+    in_dir, table, ck = _stage_inputs(
+        spark, "snapsink_", _ntile_chunks(sf_dir, 4)
+    )
+    with _drain_confs(spark, nodata=False):  # r06: see _drain_confs
+        STR.stream_snapshot_sink(spark, in_dir, table, ck)
     n_snaps = len(snapshot_history(table))
     return (
         read_snapshot(spark, table)
@@ -252,19 +249,9 @@ def streaming_static_enrich(spark, sf_dir):
     the inner join drops nothing; the aggregate reads the SINK, so a
     broken join (missed or duplicated rows) flips counts or tiers.
     Oracle: the same tier CASE computed relationally from events."""
-    import os
-    import shutil
-
-    from .. import streaming as STR
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = _stream_base(spark, "senrich_")
-    in_dir = os.path.join(base, "in")
-    os.makedirs(in_dir)
-    shutil.copy(f"{sf_dir}/events.parquet",
-                os.path.join(in_dir, "events.parquet"))
-    out = os.path.join(base, "out")
-    ck = os.path.join(base, "ck")
+    in_dir, out, ck = _stage_inputs(
+        spark, "senrich_", [("events.parquet", f"{sf_dir}/events.parquet")]
+    )
     dim = (
         spark.read.parquet(os.path.join(in_dir, "events.parquet"))
         .select("user_id").distinct()
@@ -300,18 +287,9 @@ def streaming_session_window(spark, sf_dir):
     watermark semantics themselves are oracle-checked.  Output is the
     one-row session ledger (counts/cents/single-event sessions/max
     padded duration)."""
-    import os
-    import shutil
-
-    from .. import streaming as STR
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = _stream_base(spark, "sesswin_")
-    in_dir = os.path.join(base, "in")
-    os.makedirs(in_dir)
-    shutil.copy(f"{sf_dir}/events.parquet",
-                os.path.join(in_dir, "events.parquet"))
-    out, ck = os.path.join(base, "out"), os.path.join(base, "ck")
+    in_dir, out, ck = _stage_inputs(
+        spark, "sesswin_", [("events.parquet", f"{sf_dir}/events.parquet")]
+    )
     with _drain_confs(spark):  # r06: codegen off per drained batch
         STR.stream_sessions_native(spark, in_dir, out, ck)
     sess = spark.read.parquet(out).selectExpr(
@@ -346,51 +324,9 @@ def streaming_user_streaks(spark, sf_dir):
     shuffle partitions (1 store x partitions x 2 batches), restored
     after.  Oracle: the classic batch gaps-and-islands run analysis
     (rn - run ROW_NUMBER grouping), earliest-max tie-break."""
-    import os
-
-    from .. import streaming as STR
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = _stream_base(spark, "streak_")
-    in_dir = os.path.join(base, "in")
-    os.makedirs(in_dir)
-    ev = _t(spark, sf_dir, "events")
-    # ONE ntile window (contiguous time-order quartiles).  r06: the
-    # four chunks are written by a SINGLE partitionBy("chunk") job —
-    # the old form ran four filter+coalesce(1) write jobs over a
-    # persisted copy (4 actions + a cache), where one dynamic-partition
-    # write emits the same one-file-per-chunk layout in one pass
-    # (guide §2.4: remove passes outright).  File CONTENT per chunk is
-    # identical (the state fold re-sorts each batch by ts, event_id);
-    # the k-ordered sequential moves keep mtimes + lexical names = the
-    # file-source batch order, exactly as before.
-    ranked = ev.selectExpr(
-        "*", "NTILE(2) OVER (ORDER BY ts, event_id) AS chunk"
+    in_dir, out, ck = _stage_inputs(
+        spark, "streak_", _ntile_chunks(sf_dir, 2)
     )
-    import glob as _glob
-    import shutil
-
-    chunks_dir = os.path.join(base, "chunks")
-    ranked.coalesce(1).write.partitionBy("chunk").parquet(chunks_dir)
-    import time as _time
-
-    t_base = _time.time()
-    for k in range(2):
-        part = _glob.glob(
-            os.path.join(chunks_dir, f"chunk={k + 1}", "part-*.parquet")
-        )[0]
-        dst = os.path.join(in_dir, f"chunk{k}.parquet")
-        shutil.move(part, dst)
-        # r06 review fix: batch order must NOT rest on move timing —
-        # both parts come from ONE write job and a same-filesystem
-        # rename preserves near-identical mtimes, while Spark's
-        # FileStreamSource orders pending files by TIMESTAMP ONLY (no
-        # path tie-break), so a millisecond tie would let chunk1 drain
-        # before chunk0 and flip the order-sensitive state fold.  Pin
-        # strictly increasing whole-second mtimes explicitly.
-        os.utime(dst, (t_base + k, t_base + k))
-    shutil.rmtree(chunks_dir)
-    out, ck = os.path.join(base, "out"), os.path.join(base, "ck")
     with _drain_confs(spark, nodata=False):
         STR.stream_user_streaks(spark, in_dir, out, ck)
     sink = spark.read.parquet(out)
@@ -413,18 +349,9 @@ def streaming_chained_aggs(spark, sf_dir):
     max(ts) - watermark).  The drain runs at 8 shuffle partitions
     (gotcha 16d: state-store fixed cost = stores x partitions x
     batches — two cascaded stores here)."""
-    import os
-    import shutil
-
-    from .. import streaming as STR
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = _stream_base(spark, "chained_")
-    in_dir = os.path.join(base, "in")
-    os.makedirs(in_dir)
-    shutil.copy(f"{sf_dir}/events.parquet",
-                os.path.join(in_dir, "events.parquet"))
-    out, ck = os.path.join(base, "out"), os.path.join(base, "ck")
+    in_dir, out, ck = _stage_inputs(
+        spark, "chained_", [("events.parquet", f"{sf_dir}/events.parquet")]
+    )
     with _drain_confs(spark):
         STR.stream_chained_windows(spark, in_dir, out, ck)
     return spark.read.parquet(out).select(
@@ -440,18 +367,10 @@ def streaming_dedup_then_window(spark, sf_dir):
     file, one per micro-batch), so the dedup state is load-bearing:
     closed windows match the batch twin over DISTINCT events exactly.
     Drained at 8 shuffle partitions (gotcha 16d, two state stores)."""
-    import os
-    import shutil
-
-    from .. import streaming as STR
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = _stream_base(spark, "dedupwin_")
-    in_dir = os.path.join(base, "in")
-    os.makedirs(in_dir)
-    shutil.copy(f"{sf_dir}/events.parquet", os.path.join(in_dir, "a.parquet"))
-    shutil.copy(f"{sf_dir}/events.parquet", os.path.join(in_dir, "b.parquet"))
-    out, ck = os.path.join(base, "out"), os.path.join(base, "ck")
+    events = f"{sf_dir}/events.parquet"
+    in_dir, out, ck = _stage_inputs(
+        spark, "dedupwin_", [("a.parquet", events), ("b.parquet", events)]
+    )
     with _drain_confs(spark, nodata=False):
         STR.stream_dedup_then_window(spark, in_dir, out, ck)
     return spark.read.parquet(out).select(
@@ -476,12 +395,9 @@ def streaming_pysource_windows(spark, sf_dir):
     single-batch for Python stream sources, so the multi-batch offset
     path is exercised deliberately).  Oracle: the same arithmetic over
     DuckDB range(0, N) — fully live, no golden."""
-    import time
     import uuid
 
-    from ..streaming import make_ticker_datasource
-
-    spark.dataSource.register(make_ticker_datasource())
+    spark.dataSource.register(STR.make_ticker_datasource())
     name = f"tick_{uuid.uuid4().hex[:8]}"
     src = spark.readStream.format("ticker").option(
         "n_rows", str(_TICK_N)
@@ -538,52 +454,16 @@ def streaming_tws_totals(spark, sf_dir):
     first batch (measured r05 wave 39).  The full path is kept wired
     and pytest runs it wherever protobuf exists (the
     applyInPandasWithState twins cover stateful semantics here)."""
-    import glob as _glob
-    import os
-    import shutil
-
-    from pyspark.sql import Window
-
-    from .. import streaming as STR
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = _stream_base(spark, "tws_")
-    in_dir = os.path.join(base, "in")
-    os.makedirs(in_dir)
-    ev = _t(spark, sf_dir, "events")
-    ranked = ev.selectExpr(
-        "*", "NTILE(4) OVER (ORDER BY ts, event_id) AS chunk"
-    ).persist()
-    for k in range(4):
-        tmp = os.path.join(base, f"tmp{k}")
-        (
-            ranked.filter(f"chunk = {k + 1}")
-            .drop("chunk")
-            .coalesce(1)
-            .write.parquet(tmp)
-        )
-        part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        shutil.move(part, os.path.join(in_dir, f"chunk{k}.parquet"))
-        shutil.rmtree(tmp)
-    ranked.unpersist()
-    out, ck = os.path.join(base, "out"), os.path.join(base, "ck")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    old_prov = spark.conf.get(prov_key, None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
+    in_dir, out, ck = _stage_inputs(
+        spark, "tws_", _ntile_chunks(sf_dir, 4)
     )
-    try:
+    with scoped_confs(spark, {
+        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.streaming.stateStore.providerClass":
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider",
+    }):
         STR.stream_tws_running_totals(spark, in_dir, out, ck)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        if old_prov is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, old_prov)
     sink = spark.read.parquet(out)
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
@@ -602,12 +482,13 @@ def streaming_full_outer_join(spark, sf_dir):
     left join (gotchas 16a/16c); the comparison bound keeps both
     eviction horizons provably under the final global watermark, and
     the oracle is the plain batch FULL JOIN under the same bounds."""
-    from .. import streaming as STR
-
-    in_dir, out, ck = _interval_join_inputs(spark, sf_dir, "sfj_")
+    in_dir, out, ck = _stage_inputs(
+        spark, "sfj_", _interval_join_files(sf_dir)
+    )
     with _drain_confs(spark, nodata=False):
-        STR.stream_interval_join_full(spark, in_dir, out, ck,
-                                      emit_before="2024-01-10 00:00:00")
+        STR.stream_interval_join(spark, in_dir, out, ck, how="full",
+                                 emit_before="2024-01-10 00:00:00",
+                                 max_files=1)
     return (
         spark.read.parquet(out)
         .filter(F.expr(

@@ -7,6 +7,7 @@ locally they run on local[N].  SURVEY.md §4.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -92,3 +93,21 @@ def get_spark(app: str = "sdg_engine", master: str | None = None) -> SparkSessio
     for k, v in confs.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextlib.contextmanager
+def scoped_confs(spark: SparkSession, confs: dict):
+    """Set runtime SQL confs for the ``with`` body.  On exit each key
+    gets its previous value back; a key that had no value before is
+    unset, so it falls back to Spark's default again."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -1,21 +1,30 @@
 """§2.10 Structured Streaming surface (beyond the batch-only reference).
 
 The reference pipeline is batch; its resume story is lineage.py.  This
-module adds the Spark-native streaming shape a continuously-ingesting
-deployment would run — same operators, declared as a streaming plan:
+module declares the same kind of operators as streaming plans, each a
+drain built from the same three pieces:
 
-* :func:`stream_events_hourly` — file-source ingest → watermarked
-  event-time window aggregation → parquet sink with checkpoint.  The
-  ``availableNow`` trigger drains whatever input exists and stops, so
-  the same code is both the backfill batch and the live stream (the
-  lakehouse pattern); the checkpoint makes re-runs incremental.
-* :func:`stream_sessionize` — custom stateful operator via
-  ``applyInPandasWithState``: per-user session assembly with a 30-min
-  gap timeout, the streaming twin of the batch ``sessionize_users``
-  window chain.
+* :func:`_source` — the parquet file-source reader: a fixed schema and
+  ``maxFilesPerTrigger`` files per micro-batch.  FileStreamSource
+  takes pending files in mtime order, so the order in which the caller
+  staged the files is the batch order.
+* :func:`_sink` — the availableNow parquet sink with its checkpoint:
+  it drains whatever input exists and stops, so the same code is both
+  the backfill batch and the live stream (the lakehouse pattern), and
+  the checkpoint makes re-runs incremental.
+* :func:`stream_interval_join` — the one stream-stream interval join
+  (inner, left or full outer) over the click and view sides of the
+  events stream.
 
-Both are verified in tests against the BATCH implementations of the
-same semantics (streaming result == batch oracle on the same rows).
+Between source and sink sit the drains' own operators: watermarked
+windows (single and chained), dedup (plain and watermark-bounded),
+native session windows, a stream-static broadcast join and the custom
+stateful operators (``applyInPandasWithState`` sessionize and streaks,
+``transformWithStateInPandas`` running totals).  The exactly-once
+snapshot sink keeps its own ``foreachBatch`` sink, and the Python
+ticker source feeds a memory sink (Python sources cannot run
+availableNow).  Each drain is checked against a batch twin of the same
+semantics, in tests or by its DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -29,6 +38,28 @@ EVENTS_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
     "value double, props string"
 )
+
+
+def _source(
+    spark: SparkSession, in_dir: str, schema: str, max_files: int
+) -> DataFrame:
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files)
+        .parquet(in_dir)
+    )
+
+
+def _sink(df: DataFrame, mode: str, out_dir: str, checkpoint: str) -> None:
+    (
+        df.writeStream.outputMode(mode)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .format("parquet")
+        .option("path", out_dir)
+        .start()
+        .awaitTermination()
+    )
 
 
 def stream_events_hourly(
@@ -45,11 +76,7 @@ def stream_events_hourly(
     ``watermark`` are finalized and evicted — late rows beyond it are
     dropped, which is the documented streaming-vs-batch difference.
     Append output mode emits each window exactly once, on close."""
-    src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(in_dir)
-    )
+    src = _source(spark, in_dir, EVENTS_SCHEMA, 4)
     agg = (
         src.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
@@ -62,15 +89,7 @@ def stream_events_hourly(
             "sum_value_floor",
         )
     )
-    (
-        agg.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", out_dir)
-        .start()
-        .awaitTermination()
-    )
+    _sink(agg, "append", out_dir, checkpoint)
 
 
 DOCS_SCHEMA = (
@@ -93,23 +112,11 @@ def stream_dedup_docs(
     the deterministic key columns are emitted — WHICH duplicate row
     wins depends on read order, so no payload column leaks into the
     sink."""
-    src = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(in_dir)
-    )
+    src = _source(spark, in_dir, DOCS_SCHEMA, 4)
     deduped = src.select("lang", F.md5("text").alias("fp")).dropDuplicates(
         ["lang", "fp"]
     )
-    (
-        deduped.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", out_dir)
-        .start()
-        .awaitTermination()
-    )
+    _sink(deduped, "append", out_dir, checkpoint)
 
 
 def stream_dedup_docs_watermarked(
@@ -134,11 +141,7 @@ def stream_dedup_docs_watermarked(
     tests).  The harness oracle runs with the horizon ≫ the fixture's
     doc_id span, where the drained result provably equals plain
     first-occurrence dedup, so DuckDB can state it relationally."""
-    src = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(in_dir)
-    )
+    src = _source(spark, in_dir, DOCS_SCHEMA, max_files)
     deduped = (
         src.select(
             "lang",
@@ -152,15 +155,7 @@ def stream_dedup_docs_watermarked(
         .dropDuplicatesWithinWatermark(["lang", "fp"])
         .select("lang", "fp")
     )
-    (
-        deduped.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", out_dir)
-        .start()
-        .awaitTermination()
-    )
+    _sink(deduped, "append", out_dir, checkpoint)
 
 
 def stream_interval_join(
@@ -170,36 +165,62 @@ def stream_interval_join(
     checkpoint: str,
     watermark: str = "2 hours",
     interval_s: int = 1800,
+    how: str = "inner",
+    emit_before: str | None = None,
+    max_files: int = 4,
 ) -> None:
     """Stream-stream INTERVAL join (the canonical two-stream shape):
     click events joined to the same user's view events from the
-    preceding ``interval_s`` seconds.
+    preceding ``interval_s`` seconds; ``how`` is ``"inner"``,
+    ``"left"`` or ``"full"``.
 
     Both sides carry an event-time watermark and the join condition
     carries the time bound, so each side's state store retains only
     rows inside ``interval + watermark`` — bounded state, the form
-    Spark's state cleanup requires for stream-stream joins.  Inner
-    join + append mode: every (click, view) match is emitted exactly
-    once; with the 2 h watermark ≫ the 30 min interval no in-range
-    match can be evicted before its partner arrives, so the drained
-    result equals the batch interval join (oracle-checked as
-    ``streaming_interval_join``)."""
-    clicks = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(in_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", watermark)
+    Spark's state cleanup requires for stream-stream joins (and the
+    outer joins require outright).  Sink columns per mode:
+
+    * inner — (user_id, click_id, view_id).  Append mode emits every
+      (click, view) match exactly once; with the 2 h watermark ≫ the
+      30 min interval no in-range match can be evicted before its
+      partner arrives, so the drained result equals the batch interval
+      join (oracle-checked as ``streaming_interval_join``).
+    * left — (user_id, click_id, c_ts, view_id).  An unmatched click is
+      also emitted once with a NULL view, when the watermark proves no
+      match can still arrive: in a batch AFTER the watermark passes
+      ``c_ts + interval`` — the outer-join state-EVICTION semantics the
+      inner mode never exercises.
+    * full — (user_id, click_id, c_ts, view_id, v_ts), user_id from
+      whichever side is present.  An unmatched view also emits a
+      NULL-click row when the watermark passes ``v_ts + interval`` (a
+      view at v_ts can match clicks up to v_ts + interval, the mirror
+      horizon).
+
+    For the outer modes the caller must (a) feed time-ordered
+    multi-file input one file per trigger (``max_files=1`` — batches
+    keep running and the watermark keeps advancing) and (b) compare
+    only rows whose eviction horizon is provably crossed by the FINAL
+    global watermark.  ``emit_before`` keeps only clicks with ``ts <
+    emit_before``; the global watermark is the MIN over both sides, so
+    the filtered click side throttles it to ~(emit_before − delay), and
+    only rows whose ANCHOR timestamp (c_ts when a click is present,
+    v_ts otherwise) + interval lies below that are guaranteed flushed
+    (measured: the last in-bound click sat 20 min inside the 30-min
+    interval and never evicted).  The timestamps are carried through
+    the output so the caller can apply that bound; under it the drained
+    output equals the batch outer join (oracle-checked)."""
+    clicks = _source(spark, in_dir, EVENTS_SCHEMA, max_files).filter(
+        F.col("event_type") == "click"
     )
+    if emit_before is not None:
+        clicks = clicks.filter(F.expr(f"ts < TIMESTAMP '{emit_before}'"))
+    clicks = clicks.select(
+        F.col("user_id").alias("c_user"),
+        F.col("event_id").alias("click_id"),
+        F.col("ts").alias("c_ts"),
+    ).withWatermark("c_ts", watermark)
     views = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(in_dir)
+        _source(spark, in_dir, EVENTS_SCHEMA, max_files)
         .filter(F.col("event_type") == "view")
         .select(
             F.col("user_id").alias("v_user"),
@@ -208,23 +229,22 @@ def stream_interval_join(
         )
         .withWatermark("v_ts", watermark)
     )
+    user = F.col("c_user").alias("user_id")
+    cols = {
+        "inner": [user, "click_id", "view_id"],
+        "left": [user, "click_id", "c_ts", "view_id"],
+        "full": [F.coalesce("c_user", "v_user").alias("user_id"),
+                 "click_id", "c_ts", "view_id", "v_ts"],
+    }[how]
     joined = clicks.join(
         views,
         F.expr(
             f"c_user = v_user AND v_ts >= c_ts - INTERVAL {interval_s} SECOND "
             f"AND v_ts <= c_ts"
         ),
-        "inner",
-    ).select(F.col("c_user").alias("user_id"), "click_id", "view_id")
-    (
-        joined.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", out_dir)
-        .start()
-        .awaitTermination()
-    )
+        how,
+    ).select(*cols)
+    _sink(joined, "append", out_dir, checkpoint)
 
 
 _SESSION_STATE_SCHEMA = "start long, last long, n int"
@@ -296,11 +316,7 @@ def stream_sessionize(
 ) -> None:
     """Custom stateful streaming operator: per-user sessionization with
     a 30-min gap, state timeout driven by the event-time watermark."""
-    src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(in_dir)
-    )
+    src = _source(spark, in_dir, EVENTS_SCHEMA, 4)
     sessions = (
         src.withWatermark("ts", watermark)
         .groupBy("user_id")
@@ -312,15 +328,7 @@ def stream_sessionize(
             GroupStateTimeout.EventTimeTimeout,
         )
     )
-    (
-        sessions.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", out_dir)
-        .start()
-        .awaitTermination()
-    )
+    _sink(sessions, "append", out_dir, checkpoint)
 
 
 def stream_static_enrich(
@@ -337,23 +345,11 @@ def stream_static_enrich(
     re-planned into each micro-batch as a broadcast hash join), so
     the fixed per-batch cost that dominates stateful streams (gotcha
     16d) does not apply here at any partitioning."""
-    src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(in_dir)
-    )
+    src = _source(spark, in_dir, EVENTS_SCHEMA, 4)
     joined = src.join(F.broadcast(dim), "user_id").select(
         "event_id", "user_id", "tier", "event_type", "value"
     )
-    (
-        joined.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", out_dir)
-        .start()
-        .awaitTermination()
-    )
+    _sink(joined, "append", out_dir, checkpoint)
 
 
 def stream_snapshot_sink(
@@ -383,11 +379,7 @@ def stream_snapshot_sink(
 
     from .storage import write_snapshot
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    src = _source(spark, in_dir, schema, 1)
     marker = os.path.join(table_path, "_last_batch")
 
     def _commit(df: DataFrame, batch_id: int) -> None:
@@ -435,81 +427,6 @@ def batch_hourly_closed(spark: SparkSession, events: DataFrame,
     )
 
 
-def stream_interval_join_left(
-    spark: SparkSession,
-    in_dir: str,
-    out_dir: str,
-    checkpoint: str,
-    watermark: str = "2 hours",
-    interval_s: int = 1800,
-    emit_before: str = "2024-01-25 00:00:00",
-) -> None:
-    """Stream-stream LEFT OUTER interval join: every click joined to
-    the same user's views from the preceding ``interval_s`` seconds, or
-    emitted once with NULL view when the watermark proves no match can
-    still arrive — the outer-join state-EVICTION semantics the inner
-    variant never exercises.
-
-    Spark requires watermarks on both sides plus a time-bound join
-    condition for outer joins (state would otherwise grow forever);
-    the NULL row for an unmatched click is emitted only in a batch
-    AFTER the watermark passes ``c_ts + interval``, so the caller must
-    (a) feed time-ordered multi-file input (one file per trigger —
-    batches keep running and the watermark keeps advancing) and
-    (b) compare only clicks whose eviction horizon is provably crossed
-    by the FINAL global watermark.  The global watermark is the MIN
-    over both sides, and the click side's filtered stream tops out just
-    under ``emit_before`` — so the final watermark is ~(emit_before −
-    delay), and only clicks with ``c_ts + interval < emit_before −
-    delay`` are guaranteed flushed (measured: the last in-bound click
-    sat 20 min inside the 30-min interval and never evicted).  c_ts is
-    carried through the output so the caller can apply that bound;
-    under it the drained output equals the batch left join
-    (oracle-checked)."""
-    clicks = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-        .filter(F.col("event_type") == "click")
-        .filter(F.expr(f"ts < TIMESTAMP '{emit_before}'"))
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", watermark)
-    )
-    views = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", watermark)
-    )
-    joined = clicks.join(
-        views,
-        F.expr(
-            f"c_user = v_user AND v_ts >= c_ts - INTERVAL {interval_s} SECOND "
-            f"AND v_ts <= c_ts"
-        ),
-        "leftOuter",
-    ).select(F.col("c_user").alias("user_id"), "click_id", "c_ts", "view_id")
-    (
-        joined.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", out_dir)
-        .start()
-        .awaitTermination()
-    )
-
-
 def stream_sessions_native(
     spark: SparkSession,
     in_dir: str,
@@ -527,11 +444,7 @@ def stream_sessions_native(
     the availableNow drain applies the final watermark before
     terminating, so the sink holds precisely the sessions whose end
     cleared max(event time) − delay."""
-    src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(in_dir)
-    )
+    src = _source(spark, in_dir, EVENTS_SCHEMA, 4)
     agg = (
         src.withWatermark("ts", watermark)
         .groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
@@ -547,15 +460,7 @@ def stream_sessions_native(
             "user_id", "n_events", "sum_cents",
         )
     )
-    (
-        agg.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", out_dir)
-        .start()
-        .awaitTermination()
-    )
+    _sink(agg, "append", out_dir, checkpoint)
 
 
 _STREAK_STATE_SCHEMA = (
@@ -605,11 +510,7 @@ def stream_user_streaks(
     per-user event-type streak over time-ordered micro-batches
     (maxFilesPerTrigger=1 over ts-chunked input files — batch order =
     event-time order, the property the run-length fold needs)."""
-    src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    src = _source(spark, in_dir, EVENTS_SCHEMA, 1)
     streaks = src.groupBy("user_id").applyInPandasWithState(
         _streak_fn,
         _STREAK_OUT_SCHEMA,
@@ -617,15 +518,7 @@ def stream_user_streaks(
         "append",
         GroupStateTimeout.NoTimeout,
     )
-    (
-        streaks.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", out_dir)
-        .start()
-        .awaitTermination()
-    )
+    _sink(streaks, "append", out_dir, checkpoint)
 
 
 def stream_chained_windows(
@@ -643,11 +536,7 @@ def stream_chained_windows(
     availableNow's trailing no-data batches flush the cascade: hourly
     windows whose end <= final watermark are emitted exactly once
     (verified empirically — row-identical with the batch twin)."""
-    src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(in_dir)
-    )
+    src = _source(spark, in_dir, EVENTS_SCHEMA, 4)
     q15 = (
         src.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "15 minutes").alias("w15"), "event_type")
@@ -666,15 +555,7 @@ def stream_chained_windows(
             "n_quarters", "max_quarter",
         )
     )
-    (
-        hourly.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", out_dir)
-        .start()
-        .awaitTermination()
-    )
+    _sink(hourly, "append", out_dir, checkpoint)
 
 
 def stream_dedup_then_window(
@@ -692,11 +573,7 @@ def stream_dedup_then_window(
     late-beyond-watermark — both leave the closed windows identical to
     the batch twin over the DISTINCT events (verified empirically on a
     doubled input)."""
-    src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    src = _source(spark, in_dir, EVENTS_SCHEMA, 1)
     dd = (
         src.withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(["event_id"])
@@ -718,15 +595,7 @@ def stream_dedup_then_window(
             "sum_cents",
         )
     )
-    (
-        agg.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", out_dir)
-        .start()
-        .awaitTermination()
-    )
+    _sink(agg, "append", out_dir, checkpoint)
 
 
 # ---------------------------------------------------------------------------
@@ -879,14 +748,9 @@ def stream_tws_running_totals(
     the ts-chunked file source (maxFilesPerTrigger=1 — each chunk is
     one micro-batch, so every user emits a strictly-growing n_events
     row per batch it appears in)."""
-    src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-        .selectExpr(
-            "user_id", "event_type",
-            "CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents",
-        )
+    src = _source(spark, in_dir, EVENTS_SCHEMA, 1).selectExpr(
+        "user_id", "event_type",
+        "CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents",
     )
     totals = src.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=_make_tws_processor(),
@@ -894,79 +758,4 @@ def stream_tws_running_totals(
         outputMode="Append",
         timeMode="None",
     )
-    (
-        totals.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", out_dir)
-        .start()
-        .awaitTermination()
-    )
-
-
-def stream_interval_join_full(
-    spark: SparkSession,
-    in_dir: str,
-    out_dir: str,
-    checkpoint: str,
-    watermark: str = "2 hours",
-    interval_s: int = 1800,
-    emit_before: str = "2024-01-25 00:00:00",
-) -> None:
-    """Stream-stream FULL OUTER interval join (r05 wave 46) — the last
-    join mode (inner and left are certified): BOTH sides now carry
-    eviction semantics, so an unmatched click emits a NULL-view row
-    when the watermark passes ``c_ts + interval``, and an unmatched
-    view emits a NULL-click row when it passes ``v_ts + interval``
-    (a view at v_ts can match clicks up to v_ts + interval, the
-    mirror horizon).  Gotcha 16c applies twice: the bounded click
-    side throttles the global watermark to ~(emit_before − delay),
-    so the caller compares only rows whose ANCHOR timestamp (c_ts
-    when a click is present, v_ts otherwise) is far enough below the
-    bound that both horizons are provably crossed."""
-    clicks = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-        .filter(F.col("event_type") == "click")
-        .filter(F.expr(f"ts < TIMESTAMP '{emit_before}'"))
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", watermark)
-    )
-    views = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", watermark)
-    )
-    joined = clicks.join(
-        views,
-        F.expr(
-            f"c_user = v_user AND v_ts >= c_ts - INTERVAL {interval_s} SECOND "
-            f"AND v_ts <= c_ts"
-        ),
-        "fullOuter",
-    ).select(
-        F.expr("COALESCE(c_user, v_user)").alias("user_id"),
-        "click_id", "c_ts", "view_id", "v_ts",
-    )
-    (
-        joined.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", out_dir)
-        .start()
-        .awaitTermination()
-    )
+    _sink(totals, "append", out_dir, checkpoint)

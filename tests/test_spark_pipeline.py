@@ -169,6 +169,22 @@ def test_registry_families():
     assert not undocumented, undocumented
 
 
+def test_scoped_confs_restores_and_unsets(spark):
+    """scoped_confs puts a set key back to its previous value and unsets
+    a key that had none, also when the body raises."""
+    from sdg_engine.session import scoped_confs
+
+    had, fresh = "spark.sql.shuffle.partitions", "spark.sdg_engine.test.scoped"
+    before = spark.conf.get(had)
+    assert spark.conf.get(fresh, None) is None
+    with pytest.raises(RuntimeError):
+        with scoped_confs(spark, {had: "3", fresh: "on"}):
+            assert (spark.conf.get(had), spark.conf.get(fresh)) == ("3", "on")
+            raise RuntimeError
+    assert spark.conf.get(had) == before
+    assert spark.conf.get(fresh, None) is None
+
+
 @pytest.mark.parametrize(
     "name",
     [
@@ -178,11 +194,25 @@ def test_registry_families():
         "spatial_join_cells",
         "minhash_signatures",
         "ann_cosine_topk",
+        "streaming_hourly_closed",
+        "streaming_dedup_docs",
+        "streaming_dedup_watermarked",
+        "streaming_interval_join",
+        "streaming_session_window",
+        "streaming_static_enrich",
+        "streaming_snapshot_sink",
+        "streaming_left_join",
+        "streaming_user_streaks",
+        "streaming_chained_aggs",
+        "streaming_dedup_then_window",
+        "streaming_pysource_windows",
+        "streaming_full_outer_join",
     ],
 )
 def test_oracle_parity_subset(spark, sf_dir, name):
-    """Driver-shaped compare on the judge-critical queries (full sweep
-    runs in paritycheck.check_all; kept to a subset here for runtime)."""
+    """Driver-shaped compare on the judge-critical queries and on every
+    streaming drain (full sweep runs in paritycheck.check_all; kept to a
+    subset here for runtime)."""
     from sdg_engine.oracles import ORACLES
     from sdg_engine.paritycheck import compare, run_oracle
     from sdg_engine.queries import QUERIES

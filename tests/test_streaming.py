@@ -279,3 +279,35 @@ def test_snapshot_sink_exactly_once_under_redelivery(spark, tmp_path):
     hist2 = snapshot_history(table)
     assert hist2 == hist1
     assert read_snapshot(spark, table).count() == n1
+
+
+def test_stage_inputs_pins_mtimes_in_write_order(tmp_path, monkeypatch):
+    """FileStreamSource orders pending files by mtime alone, so the
+    drain input stager must give files it writes within one second
+    strictly increasing whole-second mtimes, in list order (not name
+    order).  Spark-free: a stub stands in for the session."""
+    import tempfile
+    from types import SimpleNamespace
+
+    import pyarrow as pa
+
+    from sdg_engine.queries.streaming import _stage_inputs
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    confs = {}
+    spark = SimpleNamespace(
+        conf=SimpleNamespace(set=confs.__setitem__),
+        sparkContext=SimpleNamespace(applicationId="local-stage-test"),
+    )
+    src = str(tmp_path / "src.parquet")
+    pq.write_table(pa.table({"x": [1]}), src)
+    names = ["c.parquet", "a.parquet", "b.parquet"]
+    in_dir, out, ck = _stage_inputs(
+        spark, "stage_",
+        [(names[0], src), (names[1], pa.table({"x": [2]})), (names[2], src)],
+    )
+    assert sorted(os.listdir(in_dir)) == sorted(names)
+    mtimes = [os.stat(os.path.join(in_dir, n)).st_mtime for n in names]
+    assert all(b - a >= 1 for a, b in zip(mtimes, mtimes[1:])), mtimes
+    assert confs == {"spark.sql.session.timeZone": "UTC"}
+    assert os.path.dirname(out) == os.path.dirname(ck) == os.path.dirname(in_dir)
