@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from .. import streaming as STR
 from ..session import scoped_confs
-from ._common import _drain_confs, _stream_base
+from ._common import _drain_confs, _stream_base, _t
 
 
 def _stage_inputs(spark, prefix: str, files) -> tuple[str, str, str]:
@@ -70,8 +70,7 @@ def streaming_hourly_closed(spark, sf_dir):
     in_dir, out, ck = _stage_inputs(
         spark, "hourly_", [("events.parquet", f"{sf_dir}/events.parquet")]
     )
-    with _drain_confs(spark):
-        STR.stream_events_hourly(spark, in_dir, out, ck)
+    STR.stream_events_hourly(spark, in_dir, out, ck)
     return spark.read.parquet(out).select(
         F.unix_timestamp("hour_start").alias("hour_epoch"),
         "event_type", "n", "sum_value_floor",
@@ -88,8 +87,7 @@ def streaming_dedup_docs(spark, sf_dir):
         spark, "sdedup_",
         [("documents.parquet", f"{sf_dir}/documents.parquet")],
     )
-    with _drain_confs(spark):
-        STR.stream_dedup_docs(spark, in_dir, out, ck)
+    STR.stream_dedup_docs(spark, in_dir, out, ck)
     return (
         spark.read.parquet(out)
         .groupBy("lang")
@@ -112,8 +110,7 @@ def streaming_dedup_watermarked(spark, sf_dir):
         spark, "sdwm_",
         [("documents.parquet", f"{sf_dir}/documents.parquet")],
     )
-    with _drain_confs(spark):
-        STR.stream_dedup_docs_watermarked(spark, in_dir, out, ck)
+    STR.stream_dedup_docs_watermarked(spark, in_dir, out, ck)
     return (
         spark.read.parquet(out)
         .groupBy("lang")
@@ -130,8 +127,7 @@ def streaming_interval_join(spark, sf_dir):
     in_dir, out, ck = _stage_inputs(
         spark, "sij_", [("events.parquet", f"{sf_dir}/events.parquet")]
     )
-    with _drain_confs(spark):
-        STR.stream_interval_join(spark, in_dir, out, ck)
+    STR.stream_interval_join(spark, in_dir, out, ck)
     return (
         spark.read.parquet(out)
         .groupBy("user_id")
@@ -184,9 +180,7 @@ def streaming_left_join(spark, sf_dir):
     # _drain_confs also turns codegen off for the drain (r06 — see its
     # docstring) and restores both right after.
     with _drain_confs(spark, nodata=False):
-        STR.stream_interval_join(spark, in_dir, out, ck, how="left",
-                                 emit_before="2024-01-10 00:00:00",
-                                 max_files=1)
+        STR.stream_interval_join(spark, in_dir, out, ck, how="left")
     return (
         spark.read.parquet(out)
         # a full day below the stream cutoff: the final global watermark
@@ -218,8 +212,11 @@ def streaming_snapshot_sink(spark, sf_dir):
     """
     from ..storage import read_snapshot, snapshot_history
 
-    in_dir, table, ck = _stage_inputs(
-        spark, "snapsink_", _ntile_chunks(sf_dir, 4)
+    in_dir, table, ck = _stage_inputs(spark, "snapsink_", [])
+    # the 4 input files are one round-robin Spark write, not staged
+    # chunks (into the fresh, empty in_dir, hence append)
+    _t(spark, sf_dir, "events").repartition(4).write.mode("append").parquet(
+        in_dir
     )
     with _drain_confs(spark, nodata=False):  # r06: see _drain_confs
         STR.stream_snapshot_sink(spark, in_dir, table, ck)
@@ -486,9 +483,7 @@ def streaming_full_outer_join(spark, sf_dir):
         spark, "sfj_", _interval_join_files(sf_dir)
     )
     with _drain_confs(spark, nodata=False):
-        STR.stream_interval_join(spark, in_dir, out, ck, how="full",
-                                 emit_before="2024-01-10 00:00:00",
-                                 max_files=1)
+        STR.stream_interval_join(spark, in_dir, out, ck, how="full")
     return (
         spark.read.parquet(out)
         .filter(F.expr(

@@ -50,9 +50,9 @@ def _source(
     )
 
 
-def _sink(df: DataFrame, mode: str, out_dir: str, checkpoint: str) -> None:
+def _sink(df: DataFrame, out_dir: str, checkpoint: str) -> None:
     (
-        df.writeStream.outputMode(mode)
+        df.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .format("parquet")
@@ -89,7 +89,7 @@ def stream_events_hourly(
             "sum_value_floor",
         )
     )
-    _sink(agg, "append", out_dir, checkpoint)
+    _sink(agg, out_dir, checkpoint)
 
 
 DOCS_SCHEMA = (
@@ -116,7 +116,7 @@ def stream_dedup_docs(
     deduped = src.select("lang", F.md5("text").alias("fp")).dropDuplicates(
         ["lang", "fp"]
     )
-    _sink(deduped, "append", out_dir, checkpoint)
+    _sink(deduped, out_dir, checkpoint)
 
 
 def stream_dedup_docs_watermarked(
@@ -155,7 +155,12 @@ def stream_dedup_docs_watermarked(
         .dropDuplicatesWithinWatermark(["lang", "fp"])
         .select("lang", "fp")
     )
-    _sink(deduped, "append", out_dir, checkpoint)
+    _sink(deduped, out_dir, checkpoint)
+
+
+# Click bound of the outer interval joins (see stream_interval_join);
+# the full-join oracle states the same bound.
+_OUTER_CLICK_BOUND = "2024-01-10 00:00:00"
 
 
 def stream_interval_join(
@@ -166,8 +171,6 @@ def stream_interval_join(
     watermark: str = "2 hours",
     interval_s: int = 1800,
     how: str = "inner",
-    emit_before: str | None = None,
-    max_files: int = 4,
 ) -> None:
     """Stream-stream INTERVAL join (the canonical two-stream shape):
     click events joined to the same user's view events from the
@@ -196,24 +199,27 @@ def stream_interval_join(
       view at v_ts can match clicks up to v_ts + interval, the mirror
       horizon).
 
-    For the outer modes the caller must (a) feed time-ordered
-    multi-file input one file per trigger (``max_files=1`` — batches
-    keep running and the watermark keeps advancing) and (b) compare
+    The inner mode reads 4 files per trigger.  The outer modes read one
+    file per trigger, so over time-ordered multi-file input the batches
+    keep running and the watermark keeps advancing, and they keep only
+    clicks with ``ts < _OUTER_CLICK_BOUND``.  The caller must compare
     only rows whose eviction horizon is provably crossed by the FINAL
-    global watermark.  ``emit_before`` keeps only clicks with ``ts <
-    emit_before``; the global watermark is the MIN over both sides, so
-    the filtered click side throttles it to ~(emit_before − delay), and
+    global watermark: the global watermark is the MIN over both sides,
+    so the filtered click side throttles it to ~(bound − delay), and
     only rows whose ANCHOR timestamp (c_ts when a click is present,
     v_ts otherwise) + interval lies below that are guaranteed flushed
     (measured: the last in-bound click sat 20 min inside the 30-min
     interval and never evicted).  The timestamps are carried through
     the output so the caller can apply that bound; under it the drained
     output equals the batch outer join (oracle-checked)."""
+    max_files = 4 if how == "inner" else 1
     clicks = _source(spark, in_dir, EVENTS_SCHEMA, max_files).filter(
         F.col("event_type") == "click"
     )
-    if emit_before is not None:
-        clicks = clicks.filter(F.expr(f"ts < TIMESTAMP '{emit_before}'"))
+    if how != "inner":
+        clicks = clicks.filter(
+            F.expr(f"ts < TIMESTAMP '{_OUTER_CLICK_BOUND}'")
+        )
     clicks = clicks.select(
         F.col("user_id").alias("c_user"),
         F.col("event_id").alias("click_id"),
@@ -244,7 +250,7 @@ def stream_interval_join(
         ),
         how,
     ).select(*cols)
-    _sink(joined, "append", out_dir, checkpoint)
+    _sink(joined, out_dir, checkpoint)
 
 
 _SESSION_STATE_SCHEMA = "start long, last long, n int"
@@ -328,7 +334,7 @@ def stream_sessionize(
             GroupStateTimeout.EventTimeTimeout,
         )
     )
-    _sink(sessions, "append", out_dir, checkpoint)
+    _sink(sessions, out_dir, checkpoint)
 
 
 def stream_static_enrich(
@@ -349,7 +355,7 @@ def stream_static_enrich(
     joined = src.join(F.broadcast(dim), "user_id").select(
         "event_id", "user_id", "tier", "event_type", "value"
     )
-    _sink(joined, "append", out_dir, checkpoint)
+    _sink(joined, out_dir, checkpoint)
 
 
 def stream_snapshot_sink(
@@ -460,7 +466,7 @@ def stream_sessions_native(
             "user_id", "n_events", "sum_cents",
         )
     )
-    _sink(agg, "append", out_dir, checkpoint)
+    _sink(agg, out_dir, checkpoint)
 
 
 _STREAK_STATE_SCHEMA = (
@@ -518,7 +524,7 @@ def stream_user_streaks(
         "append",
         GroupStateTimeout.NoTimeout,
     )
-    _sink(streaks, "append", out_dir, checkpoint)
+    _sink(streaks, out_dir, checkpoint)
 
 
 def stream_chained_windows(
@@ -555,7 +561,7 @@ def stream_chained_windows(
             "n_quarters", "max_quarter",
         )
     )
-    _sink(hourly, "append", out_dir, checkpoint)
+    _sink(hourly, out_dir, checkpoint)
 
 
 def stream_dedup_then_window(
@@ -595,7 +601,7 @@ def stream_dedup_then_window(
             "sum_cents",
         )
     )
-    _sink(agg, "append", out_dir, checkpoint)
+    _sink(agg, out_dir, checkpoint)
 
 
 # ---------------------------------------------------------------------------
@@ -758,4 +764,4 @@ def stream_tws_running_totals(
         outputMode="Append",
         timeMode="None",
     )
-    _sink(totals, "append", out_dir, checkpoint)
+    _sink(totals, out_dir, checkpoint)
