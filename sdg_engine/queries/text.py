@@ -68,30 +68,13 @@ def lang_stopword_score(spark, sf_dir):
 _MINHASH_SEEDS = ["s1", "s2", "s3", "s4"]
 
 
-def _minhash_cols():
-    """12-char shingles at stride 4 → 4 md5-order minhashes as per-row
-    array HOF expressions.  Kept as the compact single-projection form
-    for composition; note HOF lambdas evaluate INTERPRETED (CLAUDE.md
-    gotcha 4) — _minhash_sig_df is the codegen'd aggregation twin."""
-    shingles = (
-        "transform(sequence(1, greatest(length(text) - 11, 1), 4), "
-        "i -> substring(text, i, 12))"
-    )
-    return [
-        F.expr(
-            f"array_min(transform({shingles}, s -> md5(concat(s, '{seed}'))))"
-        ).alias(f"mh{j + 1}")
-        for j, seed in enumerate(_MINHASH_SEEDS)
-    ]
-
-
 def _minhash_sig_df(docs):
     """Signatures via EXPLODE + codegen aggregation: one shingle row per
     (doc, position), md5 per seed computed whole-stage-codegen'd, then
-    a single map-side-combined groupBy(doc).min per seed.  Identical
-    values to _minhash_cols (min over the same multiset) but the hash
-    work runs compiled instead of interpreted HOF lambdas, and the
-    shuffle carries one pre-reduced row per (partition, doc)."""
+    a single map-side-combined groupBy(doc).min per seed: the min of
+    md5(shingle || seed) over each doc's 12-char shingles at stride 4.
+    The hash work runs compiled, not as interpreted HOF lambdas, and
+    the shuffle carries one pre-reduced row per (partition, doc)."""
     # explode(sequence) + substring, NOT transform(..., i -> ...): the
     # lambda HOF is interpreted (gotcha 4) — measured 20x slower than
     # this codegen'd form on the shingle paths (r05).  Same rows.

@@ -73,6 +73,8 @@ ENGINE_CONFS = {
 # (COW) — the first Python-evaluated stage of a session otherwise
 # forks local[N] workers that EACH pay the import burst (measured
 # 6.1 s → 3.0 s for a 32-task first Arrow stage on the r06 host).
+# The daemon also removes a cost every Python task paid (zip directory
+# re-reads, a gc walk of the preloaded heap); see its docstring.
 # executorEnv extends the daemon subprocess's PYTHONPATH so the
 # preload module resolves (same machine in local mode by definition).
 LOCAL_ENGINE_CONFS = {

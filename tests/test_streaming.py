@@ -1,36 +1,33 @@
 """§2.10 streaming: watermarked window agg + custom stateful operator,
 each verified against the batch implementation of the same semantics."""
 
-import glob
+import datetime as dt
 import os
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from sdg_engine import streaming as STR
+from sdg_engine.queries.streaming import _stage_inputs
 
 SF = "/root/testdata/sf0.001"
 
 
-def _split_events(tmp_path, n_files=5):
-    """Events parquet split into n time-ordered files (micro-batches)."""
-    t = pq.read_table(f"{SF}/events.parquet").to_pandas().sort_values("ts")
-    in_dir = str(tmp_path / "in")
-    os.makedirs(in_dir)
-    step = (len(t) + n_files - 1) // n_files
-    for i in range(n_files):
-        part = t.iloc[i * step:(i + 1) * step]
-        if len(part):
-            part.to_parquet(os.path.join(in_dir, f"part{i}.parquet"))
-    return in_dir
+def _split_events(spark, prefix, n_files=5):
+    """Events parquet split into n time-ordered files (micro-batches),
+    staged with pinned mtimes in batch order; returns (in_dir, out, ck)."""
+    t = pq.read_table(f"{SF}/events.parquet")
+    t = t.take(pc.sort_indices(t, sort_keys=[("ts", "ascending")]))
+    step = (t.num_rows + n_files - 1) // n_files
+    files = [(f"part{i}.parquet", t.slice(i * step, step))
+             for i in range(n_files) if i * step < t.num_rows]
+    return _stage_inputs(spark, prefix, files)
 
 
-def test_stream_hourly_matches_batch_closed_windows(spark, tmp_path):
-    in_dir = _split_events(tmp_path)
-    out = str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+def test_stream_hourly_matches_batch_closed_windows(spark):
+    in_dir, out, ck = _split_events(spark, "t_hourly_")
     STR.stream_events_hourly(spark, in_dir, out, ck)
     got = spark.read.parquet(out)
     events = spark.read.parquet(f"{SF}/events.parquet")
@@ -39,26 +36,21 @@ def test_stream_hourly_matches_batch_closed_windows(spark, tmp_path):
     assert got.exceptAll(want).count() + want.exceptAll(got).count() == 0
 
 
-def test_stream_hourly_checkpoint_incremental(spark, tmp_path):
+def test_stream_hourly_checkpoint_incremental(spark):
     """Re-running over the same input with the same checkpoint emits
     nothing new (exactly-once over the file source)."""
-    in_dir = _split_events(tmp_path)
-    out = str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
+    in_dir, out, ck = _split_events(spark, "t_hourly_ck_")
     STR.stream_events_hourly(spark, in_dir, out, ck)
     n1 = spark.read.parquet(out).count()
     STR.stream_events_hourly(spark, in_dir, out, ck)  # no new input
     assert spark.read.parquet(out).count() == n1
 
 
-def test_stream_sessionize_matches_batch(spark, tmp_path):
+def test_stream_sessionize_matches_batch(spark):
     """Closed sessions from the stateful streaming operator equal the
     batch window-chain sessionization, for sessions that END before the
     final watermark (the streaming-visible subset)."""
-    in_dir = _split_events(tmp_path)
-    out = str(tmp_path / "out_s")
-    ck = str(tmp_path / "ck_s")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    in_dir, out, ck = _split_events(spark, "t_sessionize_")
     STR.stream_sessionize(spark, in_dir, out, ck)
     got = spark.read.parquet(out).toPandas()
     assert len(got) > 0
@@ -99,19 +91,17 @@ def test_stream_sessionize_matches_batch(spark, tmp_path):
     assert must <= got_set
 
 
-def test_stream_dedup_docs_dedupes_across_batches(spark, tmp_path):
+def test_stream_dedup_docs_dedupes_across_batches(spark):
     """Streaming dedup: duplicated input files across micro-batches
     yield each (lang, fp) key exactly once, and re-running with the
     same checkpoint (state restored) emits nothing for replayed keys."""
     import shutil
 
     docs = f"{SF}/documents.parquet"
-    in_dir = str(tmp_path / "in_d")
-    os.makedirs(in_dir)
-    shutil.copy(docs, os.path.join(in_dir, "a.parquet"))
-    shutil.copy(docs, os.path.join(in_dir, "b.parquet"))  # full duplicate batch
-    out = str(tmp_path / "out_d")
-    ck = str(tmp_path / "ck_d")
+    in_dir, out, ck = _stage_inputs(spark, "t_dedup_", [
+        ("a.parquet", docs),
+        ("b.parquet", docs),  # full duplicate batch
+    ])
     STR.stream_dedup_docs(spark, in_dir, out, ck)
     got = spark.read.parquet(out)
     n1 = got.count()
@@ -124,20 +114,21 @@ def test_stream_dedup_docs_dedupes_across_batches(spark, tmp_path):
     )
     assert n1 == want
     # third copy of the same rows: state (restored from checkpoint)
-    # suppresses every already-seen key
-    shutil.copy(docs, os.path.join(in_dir, "c.parquet"))
+    # suppresses every already-seen key; its mtime follows b's, as the
+    # stager would have pinned it
+    c = os.path.join(in_dir, "c.parquet")
+    shutil.copy(docs, c)
+    t_b = os.stat(os.path.join(in_dir, "b.parquet")).st_mtime + 1
+    os.utime(c, (t_b, t_b))
     STR.stream_dedup_docs(spark, in_dir, out, ck)
     assert spark.read.parquet(out).count() == n1
 
 
-def test_stream_interval_join_matches_batch(spark, tmp_path):
+def test_stream_interval_join_matches_batch(spark):
     """Stream-stream interval join over micro-batched input equals the
     batch interval join (the 2 h watermark >> 30 min interval means no
     in-range match is evicted before its partner arrives)."""
-    in_dir = _split_events(tmp_path)
-    out = str(tmp_path / "out_j")
-    ck = str(tmp_path / "ck_j")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    in_dir, out, ck = _split_events(spark, "t_ijoin_")
     STR.stream_interval_join(spark, in_dir, out, ck)
     got = spark.read.parquet(out)
     ev = spark.read.parquet(f"{SF}/events.parquet")
@@ -156,90 +147,80 @@ def test_stream_interval_join_matches_batch(spark, tmp_path):
     assert got.exceptAll(want).count() + want.exceptAll(got).count() == 0
 
 
-def test_stream_sessionize_late_event_does_not_crash(spark, tmp_path):
+def test_stream_sessionize_late_event_does_not_crash(spark):
     """r03 review regression pin: a user whose (late-arriving) newest
     event satisfies last + GAP <= watermark used to make _sessionize_fn
     set an event-time timeout at/below the watermark — Spark rejects
     that with IllegalArgumentException and kills the query.  The clamp
     (max(timeout, watermark+1)) must let the stream drain cleanly."""
-    base = pd.Timestamp("2024-01-01 00:00:00")
-    in_dir = str(tmp_path / "in_late")
-    os.makedirs(in_dir)
+    base = dt.datetime(2024, 1, 1)
 
-    def _write(name, rows):
-        pd.DataFrame(
-            {
-                "event_id": [r[0] for r in rows],
-                "ts": [base + pd.Timedelta(seconds=r[1]) for r in rows],
-                "user_id": [r[2] for r in rows],
-                "event_type": ["click"] * len(rows),
-                "value": [1.0] * len(rows),
-                "props": ["{}"] * len(rows),
-            }
-        ).to_parquet(
-            os.path.join(in_dir, name),
-            coerce_timestamps="us",  # Spark reads TIMESTAMP(us), not ns INT64
-            allow_truncated_timestamps=True,
-        )
+    def _events(rows):
+        return pa.table({
+            "event_id": [r[0] for r in rows],
+            # Spark reads TIMESTAMP(us), not ns INT64
+            "ts": pa.array([base + dt.timedelta(seconds=r[1]) for r in rows],
+                           pa.timestamp("us")),
+            "user_id": [r[2] for r in rows],
+            "event_type": ["click"] * len(rows),
+            "value": [1.0] * len(rows),
+            "props": ["{}"] * len(rows),
+        })
 
-    # batch 1 (files ordered by name; maxFilesPerTrigger=4): user 1 at
-    # t=0 plus user 2 far in the future -> watermark jumps ~3 days
-    _write("a1.parquet", [(1, 0, 1), (2, 3 * 86400, 2)])
-    _write("a2.parquet", [(3, 3 * 86400 + 60, 2)])
-    _write("a3.parquet", [(4, 3 * 86400 + 120, 2)])
-    _write("a4.parquet", [(5, 3 * 86400 + 180, 2)])
-    # batch 2: a LATE event for user 1 (t=60s — far below the watermark;
-    # last + GAP is ~3 days below it too) — pre-fix this crashed with
-    # 'timeout timestamp cannot be earlier than watermark'
-    _write("b5.parquet", [(6, 60, 1)])
-    # batch 3: advance the watermark further so user 1's (clamped)
-    # timeout fires and the merged session is emitted
-    _write("c6.parquet", [(7, 6 * 86400, 3)])
-
-    out = str(tmp_path / "out_late")
-    ck = str(tmp_path / "ck_late")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    in_dir, out, ck = _stage_inputs(spark, "t_late_", [
+        # batch 1 (maxFilesPerTrigger=4): user 1 at t=0 plus user 2 far
+        # in the future -> watermark jumps ~3 days
+        ("a1.parquet", _events([(1, 0, 1), (2, 3 * 86400, 2)])),
+        ("a2.parquet", _events([(3, 3 * 86400 + 60, 2)])),
+        ("a3.parquet", _events([(4, 3 * 86400 + 120, 2)])),
+        ("a4.parquet", _events([(5, 3 * 86400 + 180, 2)])),
+        # batch 2: a LATE event for user 1 (t=60s — far below the
+        # watermark; last + GAP is ~3 days below it too) — pre-fix this
+        # crashed with 'timeout timestamp cannot be earlier than watermark'
+        ("b5.parquet", _events([(6, 60, 1)])),
+        # batch 3: advance the watermark further so user 1's (clamped)
+        # timeout fires and the merged session is emitted
+        ("c6.parquet", _events([(7, 6 * 86400, 3)])),
+    ])
     STR.stream_sessionize(spark, in_dir, out, ck)  # must not raise
     got = spark.read.parquet(out)
     # user 1's t=0 session was closed by the event-time timeout
     assert got.filter(F.col("user_id") == 1).count() >= 1
 
 
-def test_stream_dedup_watermarked_state_is_horizon_bounded(spark, tmp_path):
+def test_stream_dedup_watermarked_state_is_horizon_bounded(spark):
     """r04 (verdict item 7): dropDuplicatesWithinWatermark must (a) drop
     duplicates arriving INSIDE the lateness horizon, and (b) EVICT a
     key's state once the watermark passes its ts + delay — proven by the
     re-emission of a duplicate arriving beyond the horizon (under plain
     dropDuplicates it would still be dropped; state there only grows)."""
-    in_dir = str(tmp_path / "in_wm")
-    os.makedirs(in_dir)
 
-    def _docs(name, rows):
-        pd.DataFrame(
-            {
-                "doc_id": [r[0] for r in rows],
-                "text": [r[1] for r in rows],
-                "lang": ["en"] * len(rows),
-                "source": ["s"] * len(rows),
-                "n_chars": [len(r[1]) for r in rows],
-            }
-        ).to_parquet(os.path.join(in_dir, name))
+    def _docs(rows):
+        return pa.table({
+            "doc_id": [r[0] for r in rows],
+            "text": [r[1] for r in rows],
+            "lang": ["en"] * len(rows),
+            "source": ["s"] * len(rows),
+            "n_chars": [len(r[1]) for r in rows],
+        })
 
-    # batch 1: A first seen at t=1 (NOT t=0 — the initial watermark is
-    # 0 and rows at/below it are dropped as late, empirically), B at t=5
-    _docs("a.parquet", [(1, "textA"), (5, "textB")])
-    # batch 2: B duplicate at t=7 (inside the 10 s horizon -> dropped);
-    # the t=50 row advances the watermark for LATER batches to 40
-    _docs("b.parquet", [(7, "textB"), (50, "textC")])
-    # batch 3 (filler): state cleanup runs at END of the batch whose
-    # eviction watermark (40 s) covers A (1+10) and B (5+10) — eviction
-    # is end-of-batch, AFTER input processing, so the re-emission probe
-    # must arrive one batch later
-    _docs("c.parquet", [(60, "textD")])
-    # batch 4: A duplicate at t=100 — state evicted, so it RE-EMITS
-    _docs("d.parquet", [(100, "textA")])
-
-    out, ck = str(tmp_path / "out_wm"), str(tmp_path / "ck_wm")
+    in_dir, out, ck = _stage_inputs(spark, "t_dedup_wm_", [
+        # batch 1: A first seen at t=1 (NOT t=0 — the initial watermark
+        # is 0 and rows at/below it are dropped as late, empirically), B
+        # at t=5
+        ("a.parquet", _docs([(1, "textA"), (5, "textB")])),
+        # batch 2: B duplicate at t=7 (inside the 10 s horizon ->
+        # dropped); the t=50 row advances the watermark for LATER
+        # batches to 40
+        ("b.parquet", _docs([(7, "textB"), (50, "textC")])),
+        # batch 3 (filler): state cleanup runs at END of the batch whose
+        # eviction watermark (40 s) covers A (1+10) and B (5+10) —
+        # eviction is end-of-batch, AFTER input processing, so the
+        # re-emission probe must arrive one batch later
+        ("c.parquet", _docs([(60, "textD")])),
+        # batch 4: A duplicate at t=100 — state evicted, so it RE-EMITS
+        ("d.parquet", _docs([(100, "textA")])),
+    ])
     STR.stream_dedup_docs_watermarked(
         spark, in_dir, out, ck, watermark="10 seconds", max_files=1
     )
@@ -254,7 +235,7 @@ def test_stream_dedup_watermarked_state_is_horizon_bounded(spark, tmp_path):
     assert counts[fp("textD")] == 1
 
 
-def test_snapshot_sink_exactly_once_under_redelivery(spark, tmp_path):
+def test_snapshot_sink_exactly_once_under_redelivery(spark):
     """The foreachBatch snapshot sink must be idempotent by batchId:
     wiping the CHECKPOINT (so availableNow re-delivers every batch
     from scratch) while keeping the table's _last_batch marker must
@@ -263,10 +244,7 @@ def test_snapshot_sink_exactly_once_under_redelivery(spark, tmp_path):
 
     from sdg_engine.storage import read_snapshot, snapshot_history
 
-    in_dir = _split_events(tmp_path, n_files=3)
-    table = str(tmp_path / "tbl")
-    ck = str(tmp_path / "ck")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    in_dir, table, ck = _split_events(spark, "t_snapshot_", n_files=3)
     STR.stream_snapshot_sink(spark, in_dir, table, ck)
     hist1 = snapshot_history(table)
     n1 = read_snapshot(spark, table).count()
@@ -288,10 +266,6 @@ def test_stage_inputs_pins_mtimes_in_write_order(tmp_path, monkeypatch):
     order).  Spark-free: a stub stands in for the session."""
     import tempfile
     from types import SimpleNamespace
-
-    import pyarrow as pa
-
-    from sdg_engine.queries.streaming import _stage_inputs
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     confs = {}
