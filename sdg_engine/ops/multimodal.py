@@ -3,13 +3,12 @@ opaque ``binary`` columns with typed metadata; decode/feature-extract/
 resize/frame-sample as pandas UDFs over mapInPandas).
 
 Images are fully real in this engine (ops/payload.py, codecs.py).
-Audio/video decoders need codec libraries absent from this container,
-so here the SPARK-SIDE PLUMBING is real and tested — schemas, Arrow
-batch shapes, partitioning, UDF signatures — while the codec inner
-call is stubbed: ``deterministic_fake=True`` (default) synthesizes a
-seeded waveform/frame tensor from the bytes so pipelines are testable
-end-to-end; ``deterministic_fake=False`` raises NotImplementedError at
-the exact point a real decoder (ffmpeg/soundfile) would be invoked.
+Audio and video decode for real from the from-scratch containers the
+fixtures emit: ``wav``/``pcm16`` (codecs.decode_wav) and ``rawvid``
+(decode_rawvid).  Compressed codecs (opus/flac/mp3, h264/vp9) need
+codec libraries the engine does not bundle, so their decode raises
+NotImplementedError at the exact point a real decoder
+(soundfile/ffmpeg) would be invoked.
 """
 
 from __future__ import annotations
@@ -53,8 +52,7 @@ def synth_audio_table(spark, n: int = 64) -> DataFrame:
 
 def synth_opaque_audio_table(spark, n: int = 16) -> DataFrame:
     """Opaque compressed-codec fixture (opus/flac/mp3 bytes are seeded
-    noise): exercises the documented stub path — real decoders need
-    codec libraries this container doesn't have."""
+    noise): exercises the NotImplementedError decode path."""
     rng = np.random.default_rng(1234)
     rows = [
         (
@@ -127,7 +125,7 @@ def synth_video_table(spark, n: int = 32) -> DataFrame:
 
 def synth_opaque_video_table(spark, n: int = 8) -> DataFrame:
     """Opaque compressed-codec video (h264/vp9 bytes are seeded noise):
-    exercises the documented stub path."""
+    exercises the NotImplementedError decode path."""
     rng = np.random.default_rng(4321)
     rows = [
         (
@@ -144,59 +142,44 @@ def synth_opaque_video_table(spark, n: int = 8) -> DataFrame:
     return spark.createDataFrame(rows, VIDEO_SCHEMA)
 
 
-def _decode_audio(data: bytes, codec: str, sr: int, n_ch: int, n_samples: int,
-                  deterministic_fake: bool) -> np.ndarray:
+def _no_decoder(codec: str) -> NotImplementedError:
+    return NotImplementedError(
+        f"real {codec} decode requires a codec library (soundfile/ffmpeg) "
+        "that the engine does not bundle"
+    )
+
+
+def _decode_audio(data: bytes, codec: str) -> np.ndarray:
     """Decode point.  ``wav``/``pcm16`` decode FOR REAL via the
     from-scratch RIFF parser (codecs.decode_wav); compressed codecs
-    (opus/flac/mp3) are the documented stub — a real build calls
-    soundfile/ffmpeg there."""
-    if codec in ("wav", "pcm16"):
-        samples, _sr = decode_wav(data)
-        return samples.astype(np.float64) / 32768.0
-    if not deterministic_fake:
-        raise NotImplementedError(
-            f"real {codec} decode requires an audio codec library "
-            "(not in this container); pass deterministic_fake=True"
-        )
-    seed = int.from_bytes(data[:8].ljust(8, b"\0"), "big") % (2**32)
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((n_samples, n_ch))
+    (opus/flac/mp3) raise — a real build calls soundfile/ffmpeg
+    there."""
+    if codec not in ("wav", "pcm16"):
+        raise _no_decoder(codec)
+    samples, _sr = decode_wav(data)
+    return samples.astype(np.float64) / 32768.0
 
 
-def _mono(r, fake: bool) -> np.ndarray:
-    """One audio row decoded (or stubbed) and mixed down to mono."""
-    n_samples = int(r.sample_rate * r.duration_ms / 1000)
-    return _decode_audio(bytes(r.bytes), r.codec, r.sample_rate,
-                         int(r.n_channels), n_samples, fake).mean(axis=1)
+def _mono(r) -> np.ndarray:
+    """One audio row decoded and mixed down to mono."""
+    return _decode_audio(bytes(r.bytes), r.codec).mean(axis=1)
 
 
-def _video_stack(r, fake: bool) -> np.ndarray:
+def _video_stack(r) -> np.ndarray:
     """One video row as an (n_frames, h, w) uint8 luma stack: ``rawvid``
-    decodes for real; other codecs take the seeded stub (or raise
-    NotImplementedError when ``fake`` is off)."""
-    if r.codec == "rawvid":
-        return decode_rawvid(bytes(r.bytes))
-    if not fake:
-        raise NotImplementedError(
-            f"real {r.codec} decode requires ffmpeg (not bundled); "
-            "pass deterministic_fake=True"
-        )
-    seed = int.from_bytes(bytes(r.bytes)[:8], "big") % (2**32)
-    rng = np.random.default_rng(seed)
-    return rng.integers(
-        0, 256, size=(int(r.n_frames), int(r.h), int(r.w))
-    ).astype(np.uint8)
+    decodes for real; other codecs raise NotImplementedError."""
+    if r.codec != "rawvid":
+        raise _no_decoder(r.codec)
+    return decode_rawvid(bytes(r.bytes))
 
 
-def audio_features(audio: DataFrame, deterministic_fake: bool = True) -> DataFrame:
+def audio_features(audio: DataFrame) -> DataFrame:
     """Decode → per-clip features (RMS, zero-crossing rate, peak).
 
-    Arrow-batched mapInPandas; the numpy feature math is real, only the
-    codec call is the documented stub."""
-    fake = bool(deterministic_fake)
+    Arrow-batched mapInPandas over real numpy feature math."""
 
     def _feat(r):
-        mono = _mono(r, fake)
+        mono = _mono(r)
         rms = float(np.sqrt(np.mean(mono * mono)))
         zcr = float(np.mean(np.abs(np.diff(np.signbit(mono).astype(np.int8)))))
         yield (r.media_id, rms, zcr, float(np.abs(mono).max()), len(mono))
@@ -207,35 +190,17 @@ def audio_features(audio: DataFrame, deterministic_fake: bool = True) -> DataFra
     )
 
 
-def video_frame_sample(video: DataFrame, every_n: int = 12,
-                       deterministic_fake: bool = True) -> DataFrame:
+def video_frame_sample(video: DataFrame, every_n: int = 12) -> DataFrame:
     """Frame-sample: one row per sampled frame with its luma mean —
     explode of per-frame rows out of mapInPandas.
 
     ``rawvid`` clips decode FOR REAL (decode_rawvid); compressed codecs
-    (h264/vp9) take the documented stub path (seeded fake frames, or
-    NotImplementedError when ``deterministic_fake=False``)."""
-    fake = bool(deterministic_fake)
+    (h264/vp9) raise NotImplementedError."""
 
     def _frames(r):
-        if r.codec == "rawvid":
-            stack = decode_rawvid(bytes(r.bytes))
-            for fi in range(0, len(stack), every_n):
-                yield (r.media_id, fi, float(fi / r.fps),
-                       float(stack[fi].mean()))
-            return
-        if not fake:
-            raise NotImplementedError(
-                f"real {r.codec} decode requires ffmpeg (not in "
-                "this container); pass deterministic_fake=True"
-            )
-        # one seeded (h, w) draw per SAMPLED frame — a different stream
-        # from _video_stack's whole-clip draw
-        seed = int.from_bytes(bytes(r.bytes)[:8], "big") % (2**32)
-        rng = np.random.default_rng(seed)
-        for fi in range(0, int(r.n_frames), every_n):
-            frame = rng.integers(0, 256, size=(int(r.h), int(r.w)))
-            yield (r.media_id, fi, float(fi / r.fps), float(frame.mean()))
+        stack = _video_stack(r)
+        for fi in range(0, len(stack), every_n):
+            yield (r.media_id, fi, float(fi / r.fps), float(stack[fi].mean()))
 
     return map_rows(
         video, _frames,
@@ -243,17 +208,15 @@ def video_frame_sample(video: DataFrame, every_n: int = 12,
     )
 
 
-def audio_spectral_features(audio: DataFrame,
-                            deterministic_fake: bool = True) -> DataFrame:
+def audio_spectral_features(audio: DataFrame) -> DataFrame:
     """Spectral feature extraction (r04): decode → mono → real FFT →
     magnitude spectrum → centroid (Hz), peak bin frequency, total
     energy.  numpy's rfft is deterministic for a given input, and the
     golden twin regenerates the identical waveform from the fixture
     SPEC — so the oracle compares float-exactly, like RMS/ZCR."""
-    fake = bool(deterministic_fake)
 
     def _spec(r):
-        mono = _mono(r, fake)
+        mono = _mono(r)
         mag = np.abs(np.fft.rfft(mono))
         freqs = np.fft.rfftfreq(len(mono), 1.0 / r.sample_rate)
         total = float(mag.sum())
@@ -269,18 +232,16 @@ def audio_spectral_features(audio: DataFrame,
     )
 
 
-def video_scene_cuts(video: DataFrame, threshold: float = 3.0,
-                     deterministic_fake: bool = True) -> DataFrame:
+def video_scene_cuts(video: DataFrame, threshold: float = 3.0) -> DataFrame:
     """Scene-cut detection (r04): per clip, frames whose mean-luma jump
     from the previous frame exceeds ``threshold`` gray levels — the
     keyframe-selection primitive of a video training pipeline.  Emits
     (n_frames, n_cuts, first_cut) per clip; ``first_cut`` is −1 when
     the clip has none."""
-    fake = bool(deterministic_fake)
     thr = float(threshold)
 
     def _cuts(r):
-        stack = _video_stack(r, fake)
+        stack = _video_stack(r)
         means = stack.reshape(len(stack), -1).mean(axis=1)
         jumps = np.abs(np.diff(means))
         cut_idx = np.nonzero(jumps > thr)[0] + 1
@@ -293,8 +254,8 @@ def video_scene_cuts(video: DataFrame, threshold: float = 3.0,
     )
 
 
-def audio_stft_frames(audio: DataFrame, frame: int = 256, hop: int = 128,
-                      deterministic_fake: bool = True) -> DataFrame:
+def audio_stft_frames(audio: DataFrame, frame: int = 256,
+                      hop: int = 128) -> DataFrame:
     """STFT frame features (r05): decode → mono → FULL frames of
     ``frame`` samples at ``hop`` stride → per-frame rfft magnitude →
     (energy, spectral centroid in Hz) per frame — the spectrogram
@@ -304,10 +265,9 @@ def audio_stft_frames(audio: DataFrame, frame: int = 256, hop: int = 128,
     the same framing): frame f covers samples [f*hop, f*hop + frame);
     partial tails are dropped; centroid 0.0 for an all-zero frame.
     Map-only mapInPandas like the other payload ops."""
-    fake = bool(deterministic_fake)
 
     def _stft(r):
-        mono = _mono(r, fake)
+        mono = _mono(r)
         freqs = np.fft.rfftfreq(frame, 1.0 / r.sample_rate)
         n_frames = max(0, (len(mono) - frame) // hop + 1)
         for f in range(n_frames):
@@ -323,8 +283,7 @@ def audio_stft_frames(audio: DataFrame, frame: int = 256, hop: int = 128,
     )
 
 
-def audio_pitch_autocorr(audio: DataFrame,
-                         deterministic_fake: bool = True) -> DataFrame:
+def audio_pitch_autocorr(audio: DataFrame) -> DataFrame:
     """PITCH (f0) estimate via INTEGER AUTOCORRELATION (r05 wave 11):
     decode the real PCM16 samples, sum channels as exact ints, and take
     r(k) = sum x_i * x_{i+k} over int64 for lags sr//2000 .. sr//100
@@ -334,27 +293,11 @@ def audio_pitch_autocorr(audio: DataFrame,
     independent.  The golden twin regenerates the waveform from the
     fixture SPEC, re-quantizes with the independent PCM16 rule, and
     accumulates r(k) with arbitrary-precision Python ints."""
-    fake = bool(deterministic_fake)
 
     def _pitch(r):
-        if r.codec in ("wav", "pcm16"):
-            pcm, sr = decode_wav(bytes(r.bytes))
-        elif fake:
-            n_samples = int(r.sample_rate * r.duration_ms / 1000)
-            seed = int.from_bytes(
-                bytes(r.bytes)[:8].ljust(8, b"\0"), "big") % (2**32)
-            rng = np.random.default_rng(seed)
-            pcm = np.clip(
-                np.round(rng.standard_normal(
-                    (n_samples, int(r.n_channels))) * 8192.0),
-                -32768, 32767,
-            ).astype(np.int16)
-            sr = int(r.sample_rate)
-        else:
-            raise NotImplementedError(
-                f"real {r.codec} decode requires an audio codec "
-                "library; pass deterministic_fake=True"
-            )
+        if r.codec not in ("wav", "pcm16"):
+            raise _no_decoder(r.codec)
+        pcm, sr = decode_wav(bytes(r.bytes))
         x = pcm.astype(np.int64).sum(axis=1)
         lo, hi = max(1, sr // 2000), sr // 100
         best_lag, best_r, n_lags = -1, 0, 0
@@ -373,8 +316,8 @@ def audio_pitch_autocorr(audio: DataFrame,
     )
 
 
-def video_motion_blocks(video: DataFrame, block: int = 8, search: int = 4,
-                        deterministic_fake: bool = True) -> DataFrame:
+def video_motion_blocks(video: DataFrame, block: int = 8,
+                        search: int = 4) -> DataFrame:
     """BLOCK-MATCHING MOTION ESTIMATION (r05 wave 11): for every
     consecutive frame pair, every interior ``block``x``block`` block of
     the current frame finds the shift (dy, dx) in [-search, search]^2
@@ -390,11 +333,10 @@ def video_motion_blocks(video: DataFrame, block: int = 8, search: int = 4,
     position-weighted checksum of the (dy, dx) codes.  Engine path:
     vectorized numpy over the block stack per shift; the golden twin
     runs scalar per-block loops instead."""
-    fake = bool(deterministic_fake)
     blk, srch = int(block), int(search)
 
     def _motion(r):
-        stack = _video_stack(r, fake)
+        stack = _video_stack(r)
         n, h, w = stack.shape
         pos = [(by, bx)
                for by in range(srch, h - blk - srch + 1, blk)

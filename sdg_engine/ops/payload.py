@@ -427,25 +427,16 @@ def sobel_mag(lum_i: np.ndarray) -> np.ndarray:
     return np.abs(gx) + np.abs(gy)
 
 
-def sobel_stats(images: DataFrame) -> DataFrame:
-    """Per-image Sobel edge stats: decode -> integer BT.601 luma ->
-    3x3 Sobel L1 magnitude -> (n_px, n_edges, sum_mag, max_mag).
-
-    Map-only like hillshade_stats — payload bytes never shuffle, the
-    3x3 halo is interior to each image (edge-replicate), and every
-    value is an exact BIGINT, so the checksums are fold-order
-    independent at any partitioning.
-    """
-
-    def _edges(lum):
-        mag = sobel_mag(lum)
-        return (int(mag.size), int((mag > SOBEL_EDGE_T).sum()),
-                int(mag.sum()), int(mag.max()))
-
-    return _int_terrain_op(
-        images, _edges,
-        "n_px int, n_edges int, sum_mag bigint, max_mag bigint",
-    )
+def sobel_edge_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int]:
+    """SOBEL EDGE DENSITY — the sharpness/blur curation signal (blurry
+    or flat images score low and get filtered before training): 3x3
+    Sobel L1 magnitude of the integer BT.601 luma, an edge pixel when
+    mag > SOBEL_EDGE_T.  Returns (n_px, n_edges, sum_mag, max_mag).
+    Golden twin: generator pixels + clamp-indexed Sobel (all integer,
+    so parity is exact)."""
+    mag = sobel_mag(lum_i)
+    return (int(mag.size), int((mag > SOBEL_EDGE_T).sum()),
+            int(mag.sum()), int(mag.max()))
 
 
 # ---------------------------------------------------------------------------
@@ -504,25 +495,19 @@ def d8_flow_accum(lum_i: np.ndarray) -> tuple[np.ndarray, int]:
     return np.asarray(al, dtype=np.int64), int((flat_t < 0).sum())
 
 
-def d8_flow_stats(images: DataFrame) -> DataFrame:
-    """Per-image D8 flow-accumulation stats: decode -> integer luma
-    DEM -> steepest-descent accumulation -> exact-BIGINT summaries.
-
-    Map-only like hillshade/sobel — payload bytes never shuffle; the
-    per-image DAG sweep is local (a DEM tile's flow field is interior
-    under clamp borders), and every output is an exact integer,
-    fold-order independent at any partitioning."""
-
-    def _flow(lum):
-        acc, n_sinks = d8_flow_accum(lum)
-        wgt = (np.arange(acc.size, dtype=np.int64) % 97) + 1
-        return (int(acc.size), n_sinks, int(acc.sum()), int(acc.max()),
-                int((acc * wgt).sum()))
-
-    return _int_terrain_op(
-        images, _flow,
-        "n_px int, n_sinks int, sum_acc bigint, max_acc bigint, chk bigint",
-    )
+def d8_flow_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
+    """D8 FLOW-DIRECTION + ACCUMULATION — the hydrology terrain op
+    (GeoTrellis focal flow/accumulation analogue) next to hillshade:
+    steepest descent per the SPEC above, then d8_flow_accum's one
+    high-to-low sweep (a tile's flow field is interior under clamp
+    borders).  Returns (n_px, n_sinks, sum_acc, max_acc, chk).  Golden
+    twin: generator pixels + argmax-stacked targets + memoized
+    postorder DFS — a different accumulation algorithm than the
+    engine sweep."""
+    acc, n_sinks = d8_flow_accum(lum_i)
+    wgt = (np.arange(acc.size, dtype=np.int64) % 97) + 1
+    return (int(acc.size), n_sinks, int(acc.sum()), int(acc.max()),
+            int((acc * wgt).sum()))
 
 
 # ---------------------------------------------------------------------------
@@ -535,7 +520,8 @@ def d8_flow_stats(images: DataFrame) -> DataFrame:
 
 
 def _int_terrain_op(images: DataFrame, kernel, schema_tail: str) -> DataFrame:
-    """Shared map-only scaffold for the integer terrain stats ops:
+    """Shared map-only scaffold for the per-image integer kernel
+    queries (the queries/image.py ``_KERNELS`` table):
     decode -> int64 milli-luma DEM -> per-image kernel(lum) -> the row
     (image_id, *kernel(lum)) under ``"image_id string, " +
     schema_tail``.  Payload bytes never shuffle (one MapInPandas, zero
@@ -570,24 +556,19 @@ def d8_watershed(lum_i: np.ndarray) -> tuple[np.ndarray, int]:
 
 
 def watershed_stats_kernel(lum: np.ndarray) -> tuple[int, int, int, int, int]:
-    # SPEC: labels = sink flat index; largest_px = max basin size;
-    # sum_sq = sum over basins of size^2 (the collision/Simpson mass —
-    # position-independent); chk = sum((label_i + 1) * wgt_i), wgt as
-    # in the flow op (position-aware).
+    """WATERSHED BASINS — partition the DEM into its D8 drainage basins:
+    each cell is labeled with the sink its steepest-descent path ends at
+    (d8_watershed resolves the labels by pointer jumping).  Returns
+    (n_px, n_basins, largest_px, sum_sq, chk): sum_sq = sum over basins
+    of size^2 (the collision/Simpson mass — position-independent); chk =
+    sum((label_i + 1) * wgt_i), wgt as in the flow op (position-aware).
+    Golden twin: generator pixels + stacked-argmax targets + memoized
+    scalar chain walking."""
     labels, n_basins = d8_watershed(lum)
     sizes = np.bincount(labels, minlength=labels.size).astype(np.int64)
     wgt = (np.arange(labels.size, dtype=np.int64) % 97) + 1
     return (int(labels.size), n_basins, int(sizes.max()),
             int((sizes * sizes).sum()), int(((labels + 1) * wgt).sum()))
-
-
-def watershed_stats(images: DataFrame) -> DataFrame:
-    """Per-image D8 watershed-basin stats (map-only; see
-    _int_terrain_op)."""
-    return _int_terrain_op(
-        images, watershed_stats_kernel,
-        "n_px int, n_basins int, largest_px int, sum_sq bigint, chk bigint",
-    )
 
 
 # Viewshed SPEC (shared with the golden twin):
@@ -647,19 +628,17 @@ def viewshed_visible(lum_i: np.ndarray) -> np.ndarray:
 
 
 def viewshed_stats_kernel(lum: np.ndarray) -> tuple[int, int, int, int]:
+    """VIEWSHED from the center cell (GeoTrellis viewshed analogue): a
+    target is visible iff every exact integer-DDA intermediate sample
+    along the ray subtends a strictly smaller slope (cross-multiplied
+    rationals — no floats anywhere; SPEC above).  Engine:
+    viewshed_visible's vectorized any-violation sweep over ray steps.
+    Returns (n_px, n_visible, sum_vis_lum, chk).  Golden twin: the same
+    SPEC, visibility reduced via running max-slope rationals instead."""
     vis = viewshed_visible(lum)
     wgt = (np.arange(vis.size, dtype=np.int64) % 97) + 1
     return (int(vis.size), int(vis.sum()),
             int(lum.ravel()[vis].sum()), int(wgt[vis].sum()))
-
-
-def viewshed_stats(images: DataFrame) -> DataFrame:
-    """Per-image viewshed stats from the center cell (map-only; see
-    _int_terrain_op)."""
-    return _int_terrain_op(
-        images, viewshed_stats_kernel,
-        "n_px int, n_visible int, sum_vis_lum bigint, chk bigint",
-    )
 
 
 def pit_fill(lum_i: np.ndarray) -> np.ndarray:
@@ -699,22 +678,18 @@ def pit_fill(lum_i: np.ndarray) -> np.ndarray:
 
 
 def pit_fill_stats_kernel(lum: np.ndarray) -> tuple[int, int, int, int]:
-    # SPEC: n_raised = cells where filled > elev; sum_delta = total
-    # fill volume; chk = sum(filled_i * wgt_i) (position-aware).
+    """PRIORITY-FLOOD DEPRESSION FILLING — the DEM-conditioning pass
+    hydrology pipelines run before flow routing: filled(c) is the unique
+    minimax fixpoint (pit_fill: vectorized Bellman iteration).  Returns
+    (n_px, n_raised, sum_delta, chk): n_raised = cells where filled >
+    elev; sum_delta = total fill volume; chk = sum(filled_i * wgt_i)
+    (position-aware).  Golden twin: cells settled one at a time off a
+    border-seeded min-heap (Barnes et al. 2014)."""
     filled = pit_fill(lum)
     delta = (filled - lum).ravel()
     wgt = (np.arange(delta.size, dtype=np.int64) % 97) + 1
     return (int(delta.size), int((delta > 0).sum()), int(delta.sum()),
             int((filled.ravel() * wgt).sum()))
-
-
-def pit_fill_stats(images: DataFrame) -> DataFrame:
-    """Per-image priority-flood pit-fill stats (map-only; see
-    _int_terrain_op)."""
-    return _int_terrain_op(
-        images, pit_fill_stats_kernel,
-        "n_px int, n_raised int, sum_delta bigint, chk bigint",
-    )
 
 
 # GLCM SPEC (shared with the golden twin): quantize q = min(15,
@@ -728,10 +703,13 @@ def pit_fill_stats(images: DataFrame) -> DataFrame:
 
 
 def glcm_features(lum_i: np.ndarray) -> tuple[int, int, int, int]:
-    """Gray-level co-occurrence texture features — the classic Haralick
-    curation signal (flat/synthetic images separate from natural
-    texture).  Engine: flat bincount over combined 16*qa+qb codes (the
-    golden twin scatter-adds into a 16x16 matrix instead)."""
+    """GLCM TEXTURE features (Haralick contrast / energy / homogeneity) —
+    the texture-curation signal separating flat or synthetic images from
+    natural ones, per the SPEC above: integer features only (homogeneity
+    uses per-cell integer DIV by 1+(i-j)^2, never a float fold).  Returns
+    (n_pairs, contrast, energy, homog_mils).  Engine: flat bincount over
+    combined 16*qa+qb codes; golden twin: generator pixels scatter-added
+    into a 16x16 matrix instead."""
     q = np.minimum(lum_i // 16000, 15)
     pairs_h = (16 * q[:, :-1] + q[:, 1:]).ravel()
     pairs_v = (16 * q[:-1, :] + q[1:, :]).ravel()
@@ -744,14 +722,6 @@ def glcm_features(lum_i: np.ndarray) -> tuple[int, int, int, int]:
         int((c * d2).sum()),
         int((c * c).sum()),
         int(((1000 * c) // (1 + d2)).sum()),
-    )
-
-
-def glcm_stats(images: DataFrame) -> DataFrame:
-    """Per-image GLCM texture stats (map-only; see _int_terrain_op)."""
-    return _int_terrain_op(
-        images, glcm_features,
-        "n_pairs int, contrast bigint, energy bigint, homog_mils bigint",
     )
 
 
@@ -803,8 +773,15 @@ def quadtree_leaves(lum_i: np.ndarray) -> list[tuple[int, int, int]]:
 
 
 def quadtree_stats_kernel(lum: np.ndarray) -> tuple[int, int, int, int, int]:
-    # outputs: n_px, n_leaves, max_depth, sum_range (Σ leaf ranges),
-    # sum_depth_px (Σ depth · leaf pixels — the weighted tree cost)
+    """QUADTREE homogeneous-block compression — the engine's spatial
+    quadtree family adapted to CONTENT (GeoTrellis-world: pyramid/quad
+    decomposition): a block is a leaf iff its luma range <= _QT_THRESH,
+    else it splits in 4 (quadtree_leaves, top-down).  Returns (n_px,
+    n_leaves, max_depth, sum_range, sum_depth_px): sum_range = Σ leaf
+    ranges, sum_depth_px = Σ depth · leaf pixels (the weighted tree
+    cost).  Golden twin: leaves selected BOTTOM-UP on vectorized min/max
+    pyramids (equivalent by range monotonicity under containment; a
+    different algorithm than the engine's top-down split stack)."""
     leaves = quadtree_leaves(lum)
     return (
         int(lum.size),
@@ -812,16 +789,6 @@ def quadtree_stats_kernel(lum: np.ndarray) -> tuple[int, int, int, int, int]:
         max(d for d, _s, _r in leaves),
         sum(r for _d, _s, r in leaves),
         sum(d * s * s for d, s, _r in leaves),
-    )
-
-
-def quadtree_stats(images: DataFrame) -> DataFrame:
-    """Per-image quadtree-compression stats (map-only; see
-    _int_terrain_op)."""
-    return _int_terrain_op(
-        images, quadtree_stats_kernel,
-        "n_px int, n_leaves int, max_depth int, sum_range bigint, "
-        "sum_depth_px bigint",
     )
 
 
@@ -902,10 +869,15 @@ def _horn_grads(lum_i: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 
 
 def slope_aspect_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
-    """Vectorized octant classification per the SPEC above (the golden
-    twin runs a scalar per-pixel if/elif chain over np.ix_ clamp
-    gathers instead).  Returns (n_px, n_flat, hist_chk, n_steep,
-    sum_s2) — hist_chk = sum over octants of (k+1)*count_k."""
+    """SLOPE / ASPECT classification — the terrain derivative the
+    reference's GeoTrellis stack publishes next to hillshade: Horn 3x3
+    gradients, aspect bucketed into 8 octants by a first-match INTEGER
+    rule (no atan2 — sign/magnitude comparisons only, so parity is
+    exact), slope energy gx^2+gy^2 as int64 (SPEC above).  Returns
+    (n_px, n_flat, hist_chk, n_steep, sum_s2) — hist_chk = sum over
+    octants of (k+1)*count_k.  Engine: vectorized np.select; golden
+    twin: generator pixels + np.ix_ clamp gathers + a scalar per-pixel
+    octant chain."""
     gx, gy = _horn_grads(lum_i)
     ax, ay = np.abs(gx), np.abs(gy)
     flat = (gx == 0) & (gy == 0)
@@ -934,15 +906,6 @@ def slope_aspect_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
         int((cnt * (np.arange(8, dtype=np.int64) + 1)).sum()),
         int((s2 > _SA_STEEP).sum()),
         int(s2.sum()),
-    )
-
-
-def slope_aspect_stats(images: DataFrame) -> DataFrame:
-    """Per-image Horn slope/aspect stats (map-only; _int_terrain_op)."""
-    return _int_terrain_op(
-        images, slope_aspect_kernel,
-        "n_px int, n_flat bigint, hist_chk bigint, n_steep bigint, "
-        "sum_s2 bigint",
     )
 
 
@@ -978,6 +941,12 @@ def strahler_orders(lum_i: np.ndarray) -> np.ndarray:
 
 
 def strahler_stats_kernel(lum: np.ndarray) -> tuple[int, int, int, int, int]:
+    """STRAHLER STREAM ORDER over the D8 flow DAG — the stream-network
+    hierarchy op completing the hydrology family (flow -> accumulation
+    -> watershed -> order): order 1 at leaves, +1 where >= 2 upstream
+    branches of equal max order meet (strahler_orders: one high-to-low
+    elevation sweep).  Returns (n_px, max_order, sum_order, n_ge2, chk).
+    Golden twin: stacked-argmax targets + memoized postorder DFS."""
     orders = strahler_orders(lum)
     wgt = (np.arange(orders.size, dtype=np.int64) % 97) + 1
     return (
@@ -989,15 +958,6 @@ def strahler_stats_kernel(lum: np.ndarray) -> tuple[int, int, int, int, int]:
     )
 
 
-def strahler_stats(images: DataFrame) -> DataFrame:
-    """Per-image Strahler-order stats (map-only; _int_terrain_op)."""
-    return _int_terrain_op(
-        images, strahler_stats_kernel,
-        "n_px int, max_order bigint, sum_order bigint, n_ge2 bigint, "
-        "chk bigint",
-    )
-
-
 # hist-equalize SPEC (shared with the golden twin): v = lum // 1000
 # (0..255), cdf = inclusive cumulative histogram, cdfmin = smallest
 # nonzero cdf value, eq(v) = (cdf[v] - cdfmin) * 255 // max(npx -
@@ -1006,9 +966,12 @@ def strahler_stats(images: DataFrame) -> DataFrame:
 
 
 def hist_equalize_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
-    """Vectorized bincount/cumsum equalization (the golden twin builds
-    the CDF with a scalar counting dict).  Returns (n_px, sum_eq,
-    n_levels_out, max_eq, chk) with chk = sum((idx%97+1) * eq_pixel)."""
+    """HISTOGRAM EQUALIZATION — the contrast-normalization step of an
+    imagery ingest pipeline, as the classic integer remap of the SPEC
+    above (all integer division — exact at any partitioning).  Engine:
+    vectorized bincount/cumsum LUT; golden twin: the CDF built with a
+    scalar counting dict.  Returns (n_px, sum_eq, n_levels_out, max_eq,
+    chk) with chk = sum((idx%97+1) * eq_pixel)."""
     v = (lum_i // 1000).ravel()
     cnt = np.bincount(v, minlength=256).astype(np.int64)
     cdf = np.cumsum(cnt)
@@ -1027,15 +990,6 @@ def hist_equalize_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
     )
 
 
-def hist_equalize_stats(images: DataFrame) -> DataFrame:
-    """Per-image histogram-equalization stats (map-only)."""
-    return _int_terrain_op(
-        images, hist_equalize_kernel,
-        "n_px int, sum_eq bigint, n_levels_out bigint, max_eq bigint, "
-        "chk bigint",
-    )
-
-
 # morphology SPEC (shared with the golden twin): 3x3 erosion = window
 # min, dilation = window max, under clamp (edge-replicate) borders;
 # gradient = dilate - erode; edge iff gradient > 20000 milli-luma.
@@ -1043,10 +997,13 @@ _MORPH_EDGE = 20_000
 
 
 def morphology_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
-    """Edge-replicated pad + 9 contiguous slices (views); the golden
-    twin gathers each offset with np.ix_ clamp indices instead.
-    Returns (n_px, sum_erode, sum_dilate, n_edge, chk) with chk =
-    sum((idx%97+1) * gradient)."""
+    """3x3 MORPHOLOGY (erosion / dilation / morphological gradient) under
+    clamp borders — the denoise/edge-strength curation signal next to
+    Sobel; min/max filters are also the focal-statistics primitive of the
+    raster family.  Engine: edge-replicated pad + 8 contiguous slice
+    min/maxes (views, never gathers); golden twin: np.ix_ clamp gathers
+    per offset.  Returns (n_px, sum_erode, sum_dilate, n_edge, chk) with
+    chk = sum((idx%97+1) * gradient)."""
     h, w = lum_i.shape
     p = np.pad(lum_i, 1, mode="edge")
     er = lum_i.copy()
@@ -1069,22 +1026,13 @@ def morphology_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
     )
 
 
-def morphology_stats(images: DataFrame) -> DataFrame:
-    """Per-image 3x3 morphology stats (map-only)."""
-    return _int_terrain_op(
-        images, morphology_kernel,
-        "n_px int, sum_erode bigint, sum_dilate bigint, n_edge bigint, "
-        "chk bigint",
-    )
-
-
 def median3_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
     """3x3 MEDIAN FILTER under clamp borders — the order-statistic
-    denoiser completing focal statistics (min/max live in morphology):
-    median of 9 = the 5th smallest, exact integer.  Engine path:
-    pad-slice stack + np.partition; the golden twin sorts np.ix_
-    clamp gathers instead.  Returns (n_px, sum_med, n_changed,
-    max_absdiff, chk)."""
+    denoiser completing focal statistics (min/max live in morphology,
+    the linear stats in TPI/TRI): median of 9 = the 5th smallest, exact
+    integer.  Engine path: pad-slice stack + np.partition; the golden
+    twin sorts np.ix_ clamp gathers of generator pixels instead.
+    Returns (n_px, sum_med, n_changed, max_absdiff, chk)."""
     h, w = lum_i.shape
     p = np.pad(lum_i, 1, mode="edge")
     stack = np.stack(
@@ -1102,22 +1050,15 @@ def median3_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
     )
 
 
-def median3_stats(images: DataFrame) -> DataFrame:
-    """Per-image 3x3 median-filter stats (map-only)."""
-    return _int_terrain_op(
-        images, median3_kernel,
-        "n_px int, sum_med bigint, n_changed bigint, max_absdiff bigint, "
-        "chk bigint",
-    )
-
-
 def box_downscale_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
-    """2x BOX-FILTER DOWNSCALE (one pyramid level): each output pixel
-    is the integer mean of its 2x2 block — (a+b+c+d) DIV 4, exact at
-    any partitioning (odd trailing row/col is dropped, the floor-size
-    spec).  Engine path: strided SLICES (views) summed; the golden twin
-    reshapes into blocks instead.  Returns (n_out, sum_ds, max_ds,
-    min_ds, chk)."""
+    """2x BOX-FILTER DOWNSCALE — the image-pyramid level every
+    multiresolution serving/training pipeline materializes (the raster
+    twin of the cell-rollup spatial_pyramid): each output pixel is the
+    integer mean of its 2x2 block — (a+b+c+d) DIV 4, exact at any
+    partitioning (odd trailing row/col is dropped, the floor-size spec).
+    Engine path: strided SLICES (views) summed; the golden twin reshapes
+    generator pixels into blocks instead.  Returns (n_out, sum_ds,
+    max_ds, min_ds, chk)."""
     h, w = lum_i.shape
     h2, w2 = h // 2, w // 2
     c = lum_i[: h2 * 2, : w2 * 2]
@@ -1134,26 +1075,18 @@ def box_downscale_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
     )
 
 
-def box_downscale_stats(images: DataFrame) -> DataFrame:
-    """Per-image 2x box-downscale stats (map-only)."""
-    return _int_terrain_op(
-        images, box_downscale_kernel,
-        "n_out int, sum_ds bigint, max_ds bigint, min_ds bigint, "
-        "chk bigint",
-    )
-
-
 def otsu_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int]:
-    """OTSU THRESHOLD (exact): 256-bin histogram over lum DIV 1000,
-    threshold t maximizing the between-class variance — compared as the
-    EXACT rational (s0*N - S*w0)^2 / (w0*(N-w0)) via cross-multiplied
-    arbitrary-precision Python ints (the squared numerator overflows
-    int64 at real image sizes); strictly-greater keeps the SMALLEST t,
-    so the argmax is deterministic.  Foreground = bins > t.  Engine
-    path: np.bincount + vectorized cumsums feeding the scalar compare
-    loop; the golden twin accumulates running sums incrementally and
-    compares with fractions.Fraction instead.  Returns (thr, n_fg,
-    sum_fg, chk)."""
+    """OTSU THRESHOLD (exact) — the classic histogram-based binarization
+    (the segmentation step before region labeling): 256-bin histogram
+    over lum DIV 1000, threshold t maximizing the between-class variance
+    — compared as the EXACT rational (s0*N - S*w0)^2 / (w0*(N-w0)) via
+    cross-multiplied arbitrary-precision Python ints (the squared
+    numerator overflows int64 at real image sizes); strictly-greater
+    keeps the SMALLEST t, so the argmax is deterministic.  Foreground =
+    bins > t.  Engine path: np.bincount + vectorized cumsums feeding the
+    scalar compare loop; the golden twin builds a Counter histogram,
+    accumulates running sums incrementally and compares with
+    fractions.Fraction instead.  Returns (thr, n_fg, sum_fg, chk)."""
     b = (lum_i // 1000).ravel()
     hist = np.bincount(b, minlength=256).astype(np.int64)
     csum = np.cumsum(hist)
@@ -1179,14 +1112,6 @@ def otsu_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int]:
     )
 
 
-def otsu_stats(images: DataFrame) -> DataFrame:
-    """Per-image Otsu binarization stats (map-only)."""
-    return _int_terrain_op(
-        images, otsu_kernel,
-        "thr int, n_fg bigint, sum_fg bigint, chk bigint",
-    )
-
-
 # TPI/TRI SPEC (shared with the golden twin): 8-neighborhood under
 # clamp borders; TPI = 8*center - sum(neighbors), TRI = sum(|center -
 # neighbor|); ridge/valley threshold on |TPI| in milli-luma units.
@@ -1194,10 +1119,14 @@ _TPI_T = 8_000
 
 
 def tpi_tri_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int, int]:
-    """Topographic Position Index + Terrain Ruggedness Index stats per
-    the SPEC above, via an edge-replicated pad whose 8 neighbor reads
-    are contiguous SLICES (views, never gathers — the morphology
-    layout).  The golden twin uses np.ix_ clamp gathers instead."""
+    """TPI / TRI terrain indexes (Weiss topographic position; Riley
+    ruggedness) — the landform-classification signals next to
+    slope/aspect, per the SPEC above (ridge/valley when |TPI| clears the
+    milli-luma threshold).  Engine: an edge-replicated pad whose 8
+    neighbor reads are contiguous SLICES (views, never gathers — the
+    morphology layout); golden twin: generator pixels + np.ix_ clamp
+    gathers.  Returns (n_px, sum_tri, max_tri, n_ridge, n_valley,
+    chk)."""
     h, w = lum_i.shape
     p = np.pad(lum_i, 1, mode="edge")
     nb = (
@@ -1219,15 +1148,6 @@ def tpi_tri_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int, int]:
         int((tpi > _TPI_T).sum()),
         int((tpi < -_TPI_T).sum()),
         int((wgt * tri.ravel()).sum()),
-    )
-
-
-def tpi_tri_stats(images: DataFrame) -> DataFrame:
-    """Per-image TPI/TRI terrain-index stats (map-only)."""
-    return _int_terrain_op(
-        images, tpi_tri_kernel,
-        "n_px int, sum_tri bigint, max_tri bigint, n_ridge bigint, "
-        "n_valley bigint, chk bigint",
     )
 
 
@@ -1260,6 +1180,12 @@ def d8_flow_length(lum_i: np.ndarray) -> tuple[np.ndarray, int]:
 
 
 def flow_length_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
+    """D8 DOWNSTREAM FLOW LENGTH — the hydrology distance-to-outlet op
+    completing the flow family (direction -> accumulation -> watershed
+    -> order -> length): per-cell path length to its sink along the
+    steepest-descent chain (d8_flow_length: pointer jumping with additive
+    10/14 weights).  Returns (n_px, n_sinks, sum_len, max_len, chk).
+    Golden twin: stacked-argmax targets + memoized scalar chain walks."""
     length, n_sinks = d8_flow_length(lum_i)
     wgt = (np.arange(length.size, dtype=np.int64) % 97) + 1
     return (
@@ -1271,30 +1197,20 @@ def flow_length_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
     )
 
 
-def flow_length_stats(images: DataFrame) -> DataFrame:
-    """Per-image D8 downstream flow-length stats (map-only)."""
-    return _int_terrain_op(
-        images, flow_length_kernel,
-        "n_px int, n_sinks int, sum_len bigint, max_len bigint, "
-        "chk bigint",
-    )
-
-
 def edt_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
     """EXACT squared EUCLIDEAN DISTANCE TRANSFORM to the nearest BRIGHT
     pixel (luma >= 128000) — the exact companion to cost-distance's
-    chamfer 3-4 approximation.  Uses the separable decomposition
-    (2D EDT = 1D row pass over the 1D column pass, a theorem): pass 1
-    is the binary nearest-seed column scan (two sweeps), pass 2
-    minimizes d1 + (x-x')^2 via a VECTORIZED exact broadcast over
-    column offsets — O(n*w) with tile-bounded w, the right
+    chamfer 3-4 approximation (proximity rasters, buffer masks).  Uses
+    the separable decomposition (2D EDT = 1D row pass over the 1D column
+    pass, a theorem): pass 1 is the binary nearest-seed column scan (two
+    sweeps), pass 2 minimizes d1 + (x-x')^2 via a VECTORIZED exact
+    broadcast over column offsets — O(n*w) with tile-bounded w, the right
     constant-factor choice on SIMD for fixed tile sizes.  The golden
     twin runs the asymptotically-linear Felzenszwalb-Huttenlocher
-    lower-envelope instead, with exact Fraction hull intersections —
-    two genuinely different algorithms meeting at the same exact
-    integer transform.  All-integer outputs; images with no bright
-    pixel emit the -1 sentinel.  Returns (n_px, n_fg, sum_d2, max_d2,
-    chk)."""
+    lower-envelope instead, with exact Fraction hull intersections — two
+    genuinely different algorithms meeting at the same exact integer
+    transform.  All-integer outputs; images with no bright pixel emit
+    the -1 sentinel.  Returns (n_px, n_fg, sum_d2, max_d2, chk)."""
     h, w = lum_i.shape
     mask = lum_i >= 128_000
     n_px = int(lum_i.size)
@@ -1326,21 +1242,18 @@ def edt_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
     )
 
 
-def edt_stats(images: DataFrame) -> DataFrame:
-    """Per-image exact-EDT stats (map-only)."""
-    return _int_terrain_op(
-        images, edt_kernel,
-        "n_px int, n_fg bigint, sum_d2 bigint, max_d2 bigint, chk bigint",
-    )
-
-
 def fft_sharpness_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int]:
-    """FFT SHARPNESS: 2-D real FFT of the exact milli-luma raster;
-    high-frequency = wavenumber radius^2 beyond (min(h,w)//4)^2 with
-    folded row frequencies fu = min(u, h-u) — a pure-integer mask.
-    Energy ratio quantizes to micros through one shared double chain;
-    the dominant non-DC frequency is the FIRST argmax (deterministic).
-    Returns (n_px, hf_ratio_micros, peak_u, peak_v)."""
+    """FFT SHARPNESS: the fraction of spectral energy above a
+    quarter-Nyquist radius — the frequency-domain blur/sharpness curation
+    signal next to Sobel's spatial one.  2-D real FFT of the exact
+    milli-luma raster; high-frequency = wavenumber radius^2 beyond
+    (min(h,w)//4)^2 with folded row frequencies fu = min(u, h-u) — a
+    pure-integer mask.  Energy ratio quantizes to micros through one
+    shared double chain; the dominant non-DC frequency is the FIRST
+    argmax (deterministic).  Returns (n_px, hf_ratio_micros, peak_u,
+    peak_v).  Golden twin: regenerates the pixels from the generator SPEC
+    and runs the same in-process rfft2 (the decode_stats precedent — the
+    DECODE path is what the comparison exercises)."""
     h, w = lum_i.shape
     spec = np.fft.rfft2(lum_i.astype(np.float64))
     p = (spec * np.conj(spec)).real
@@ -1357,14 +1270,6 @@ def fft_sharpness_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int]:
     return (int(lum_i.size), ratio, k // p.shape[1], k % p.shape[1])
 
 
-def fft_sharpness_stats(images: DataFrame) -> DataFrame:
-    """Per-image FFT sharpness stats (map-only)."""
-    return _int_terrain_op(
-        images, fft_sharpness_kernel,
-        "n_px int, hf_ratio_micros bigint, peak_u int, peak_v int",
-    )
-
-
 # SSIM constants at milli-luma scale: C1 = (0.01 * 255000)^2,
 # C2 = (0.03 * 255000)^2 — the standard stabilizers.
 _SSIM_C1 = 6_502_500.0
@@ -1374,11 +1279,13 @@ _SSIM_C2 = 58_522_500.0
 def ssim_recon_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int]:
     """GLOBAL SSIM between the image and its 2x box-downscale +
     nearest-upsample RECONSTRUCTION — the perceptual quality metric
-    beyond PSNR (X3 family): a pyramid level's information loss as a
-    curation signal.  All moment sums (Sx, Sy, Sxx, Syy, Sxy) are
-    EXACT int64 over milli-luma; the closed-form SSIM evaluates once
-    per image in doubles with SPEC'd expression order and quantizes to
-    micros with one FLOOR.  Returns (n, sum_y, ssim_micros, chk)."""
+    beyond PSNR (X3 family): how much signal a pyramid level loses, as a
+    curation signal.  All moment sums (Sx, Sy, Sxx, Syy, Sxy) are EXACT
+    int64 over milli-luma; the closed-form SSIM evaluates once per image
+    in doubles with SPEC'd expression order and quantizes to micros with
+    one FLOOR.  Golden twin: reshape blocks + np.kron + python-int sums
+    (vs the engine's strided slices + np.repeat + numpy sums).  Returns
+    (n, sum_y, ssim_micros, chk)."""
     h, w = lum_i.shape
     h2, w2 = h // 2, w // 2
     c = lum_i[: h2 * 2, : w2 * 2]
@@ -1407,14 +1314,6 @@ def ssim_recon_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int]:
     )
 
 
-def ssim_recon_stats(images: DataFrame) -> DataFrame:
-    """Per-image reconstruction-SSIM stats (map-only)."""
-    return _int_terrain_op(
-        images, ssim_recon_kernel,
-        "n_px int, sum_recon bigint, ssim_micros bigint, chk bigint",
-    )
-
-
 # FAST-12: the standard Bresenham radius-3 circle, clockwise from
 # 12 o'clock — (dr, dc) offsets; threshold in milli-luma.
 FAST_CIRCLE = [
@@ -1426,13 +1325,15 @@ FAST_T = 3_000
 
 
 def fast_corner_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
-    """FAST-12 segment test on milli-luma: corner iff >= 12 CONTIGUOUS
-    circle neighbors (circular) are all > center + t (bright) or all
-    < center - t (dark).  Engine mechanics: 16 shifted views -> bool
-    stacks -> doubled-axis slice-ANDs over every 12-length arc; the
-    golden twin routes the same packed 16-bit codes through a
-    scalar-built 65536-entry max-circular-run lookup instead.
-    Returns (n_interior, n_corners, n_bright, n_dark, chk)."""
+    """FAST-12 CORNER DETECTION — the keypoint/texture curation signal
+    next to Sobel and GLCM: a pixel is a corner iff >= 12 CONTIGUOUS
+    circle neighbors (circular) are all > center + t (bright) or all <
+    center - t (dark), pure-integer comparisons on milli-luma, interior
+    pixels only.  Engine mechanics: 16 shifted views -> bool stacks ->
+    doubled-axis slice-ANDs over every 12-length arc; the golden twin
+    routes the same packed 16-bit codes through a scalar-built
+    65536-entry max-circular-run lookup instead — two different run
+    detectors.  Returns (n_interior, n_corners, n_bright, n_dark, chk)."""
     h, w = lum_i.shape
     if h < 7 or w < 7:
         return (0, 0, 0, 0, 0)
@@ -1466,15 +1367,6 @@ def fast_corner_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
     )
 
 
-def fast_corner_stats(images: DataFrame) -> DataFrame:
-    """Per-image FAST-12 corner stats (map-only)."""
-    return _int_terrain_op(
-        images, fast_corner_kernel,
-        "n_interior int, n_corners bigint, n_bright bigint, "
-        "n_dark bigint, chk bigint",
-    )
-
-
 # Fixed-point inverse-rotation matrix for the bilinear affine op:
 # 30 degrees, 16.16 literals — the SPEC both twins share.
 AFFINE_COS_FP = 56756  # round(cos(30deg) * 65536)
@@ -1482,16 +1374,17 @@ AFFINE_SIN_FP = 32768  # round(sin(30deg) * 65536)
 
 
 def affine_bilinear_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int]:
-    """30-degree rotation about the image center with FIXED-POINT
-    BILINEAR resampling: source coordinates on a DOUBLED grid stay
-    integral (dr2 = 2r - (h-1)), the inverse map is the 16.16 integer
-    matrix above, and the bilinear weights quantize to 1/256 BEFORE
-    the blend — every output pixel is one exact integer expression, so
-    the result is hash-stable at any partitioning.  Out-of-bounds
-    samples are skipped (counted).  Engine mechanics: flat
-    fancy-indexing over index arrays; the golden twin gathers through
-    four np.take calls on clamped indices instead.  Returns
-    (n_sampled, sum_out, max_out, chk)."""
+    """AFFINE ROTATION with FIXED-POINT BILINEAR resampling — the
+    interpolation family the nearest-neighbour CRS warp avoided, made
+    hash-exact: a 30-degree rotation about the image center, source
+    coordinates on a DOUBLED grid stay integral (dr2 = 2r - (h-1)), the
+    inverse map is the 16.16 integer matrix above, and the bilinear
+    weights quantize to 1/256 BEFORE the blend — every output pixel is
+    one exact integer expression, so the result is hash-stable at any
+    partitioning.  Out-of-bounds samples are skipped (counted).  Engine
+    mechanics: flat fancy-indexing over index arrays; the golden twin
+    gathers through four np.take calls on clamped indices instead.
+    Returns (n_sampled, sum_out, max_out, chk)."""
     h, w = lum_i.shape
     r = np.arange(h, dtype=np.int64)[:, None]
     c = np.arange(w, dtype=np.int64)[None, :]
@@ -1528,14 +1421,6 @@ def affine_bilinear_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int]:
     )
 
 
-def affine_bilinear_stats(images: DataFrame) -> DataFrame:
-    """Per-image fixed-point bilinear rotation stats (map-only)."""
-    return _int_terrain_op(
-        images, affine_bilinear_kernel,
-        "n_sampled bigint, sum_out bigint, max_out bigint, chk bigint",
-    )
-
-
 # ---------------------------------------------------------------------------
 # Hough line transform (r05 wave 23) — dominant-line detection over the
 # Sobel edge map, ALL INTEGER.  SPEC shared by both twins:
@@ -1559,11 +1444,14 @@ HOUGH_W = 1536       # accumulator stride per theta bin
 
 
 def hough_lines_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
-    """Dominant Hough line of an int64 luma raster.  Engine mechanics:
-    12 bincount passes summed into one flat accumulator (the golden
-    twin scatters with np.add.at into a (12, W) matrix instead, over a
-    clamp-indexed edge map).  Returns
-    (n_edges, best_votes, best_theta, best_rho, chk)."""
+    """DOMINANT-LINE HOUGH TRANSFORM over the certified Sobel edge map —
+    the straight-structure curation signal (documents/buildings/horizons
+    score high, natural texture low), all integer per the SPEC above; the
+    checksum folds votes^2 over the accumulator so the full vote surface
+    is oracle-visible.  Engine mechanics: 12 bincount passes summed into
+    one flat accumulator (the golden twin scatters with np.add.at into a
+    (12, W) matrix instead, over a clamp-indexed edge map of generator
+    pixels).  Returns (n_edges, best_votes, best_theta, best_rho, chk)."""
     h, w = lum_i.shape
     assert h + w < (HOUGH_W - HOUGH_OFF) * HOUGH_RHO_Q // 1024, "raster too large"
     mag = sobel_mag(lum_i)
@@ -1599,12 +1487,16 @@ CANNY_STRONG_T = 220_000  # strong-edge gate in luma milli-units
 
 
 def canny_hysteresis_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int]:
-    """Engine mechanics: vectorized binary propagation — final starts
-    at strong and repeatedly ORs in its 8-dilation masked to weak
-    until the fixpoint (each sweep advances the frontier one pixel;
-    the golden twin runs a scalar BFS flood with a deque instead).
-    The fixpoint is the unique connected closure, so both mechanics
-    meet exactly.  Returns (n_weak, n_strong, n_final, chk)."""
+    """TWO-THRESHOLD HYSTERESIS EDGE LINKING (the Canny stage after the
+    gradient): weak edges survive only when 8-connected — through other
+    weak pixels — to a strong edge, killing isolated noise while keeping
+    faint continuations of real contours.  Engine mechanics: vectorized
+    binary propagation — final starts at strong and repeatedly ORs in
+    its 8-dilation masked to weak until the fixpoint (each sweep advances
+    the frontier one pixel; the golden twin runs a scalar BFS flood with
+    a deque over clamp-indexed generator pixels instead).  The fixpoint
+    is the unique connected closure, so both mechanics meet exactly.
+    Returns (n_weak, n_strong, n_final, chk)."""
     mag = sobel_mag(lum_i)
     weak = mag > SOBEL_EDGE_T
     strong = mag > CANNY_STRONG_T
@@ -1624,23 +1516,6 @@ def canny_hysteresis_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int]:
     return (
         int(weak.sum()), int(strong.sum()), int(cur.sum()),
         int((idx + 1).sum()),
-    )
-
-
-def canny_hysteresis_stats(images: DataFrame) -> DataFrame:
-    """Per-image hysteresis edge stats (map-only)."""
-    return _int_terrain_op(
-        images, canny_hysteresis_kernel,
-        "n_weak bigint, n_strong bigint, n_final bigint, chk bigint",
-    )
-
-
-def hough_lines_stats(images: DataFrame) -> DataFrame:
-    """Per-image dominant-line Hough stats (map-only)."""
-    return _int_terrain_op(
-        images, hough_lines_kernel,
-        "n_edges bigint, best_votes bigint, best_theta bigint, "
-        "best_rho bigint, chk bigint",
     )
 
 
@@ -1667,12 +1542,17 @@ HARRIS_T = 50_000_000  # response gate (scaled-R units; the synthetic
 
 
 def harris_corner_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
-    """Engine mechanics: shifted-slice Sobel + slice-add box sums +
-    eight vectorized neighbor comparisons (the golden twin gathers
-    gradients through np.ix_ clamp indexes, box-sums via a summed-area
-    table, and runs NMS as a scalar loop over candidates — three
-    independent mechanisms, same SPEC).  Returns
-    (n_interior, n_corners, sum_rq, max_r, chk)."""
+    """HARRIS CORNER DETECTION — the classical eigen-response detector next
+    to FAST-12's arc test (two independent keypoint signals for image
+    curation): all-integer response R = 20·det(M) − trace(M)² (k = 0.05
+    exactly) over 3×3-summed Sobel products on the 255-scale gray
+    raster, deterministic raster-order NMS (SPEC above).  Engine
+    mechanics: shifted-slice Sobel + slice-add box sums + eight
+    vectorized neighbor comparisons (the golden twin gathers gradients
+    through np.ix_ clamp indexes, box-sums via a summed-area table, and
+    runs NMS as a scalar loop over candidates — three independent
+    mechanisms, same SPEC).  Returns (n_interior, n_corners, sum_rq,
+    max_r, chk)."""
     g = lum_i // 1000
     tl, t, tr = g[:-2, :-2], g[:-2, 1:-1], g[:-2, 2:]
     le, r = g[1:-1, :-2], g[1:-1, 2:]
@@ -1708,15 +1588,6 @@ def harris_corner_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
         int((np.maximum(core, 0) // 65536).sum()),
         int(core.max()) if core.size else 0,
         int((idx + 1).sum()),
-    )
-
-
-def harris_corner_stats(images: DataFrame) -> DataFrame:
-    """Per-image Harris corner stats (map-only)."""
-    return _int_terrain_op(
-        images, harris_corner_kernel,
-        "n_interior bigint, n_corners bigint, sum_rq bigint, "
-        "max_r bigint, chk bigint",
     )
 
 
@@ -1770,7 +1641,14 @@ _ZS_LUT = _zs_luts()
 
 
 def zhang_suen_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int]:
-    """Returns (n_fg, n_skel, n_iters, chk)."""
+    """MORPHOLOGICAL SKELETONIZATION (Zhang-Suen thinning) — reduces
+    every bright region to its 1-px medial skeleton, the classical
+    shape-analysis step after binarization (stroke extraction for the
+    document-image curation family).  Synchronous two-sub-pass deletion
+    to the deterministic fixpoint of the SPEC above, through the
+    vectorized-built _ZS_LUT predicates; the golden twin drives the same
+    SPEC through 256-entry LUTs built with scalar loops.  Returns (n_fg,
+    n_skel, n_iters, chk)."""
     g = lum_i // 1000
     fg = (g > SKEL_T).astype(np.uint8)
     n_fg = int(fg.sum())
@@ -1793,14 +1671,6 @@ def zhang_suen_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int]:
     return (n_fg, int(fg.sum()), it, int((idx + 1).sum()))
 
 
-def zhang_suen_stats(images: DataFrame) -> DataFrame:
-    """Per-image skeletonization stats (map-only)."""
-    return _int_terrain_op(
-        images, zhang_suen_kernel,
-        "n_fg bigint, n_skel bigint, n_iters bigint, chk bigint",
-    )
-
-
 # ---------------------------------------------------------------------------
 # Local Binary Patterns (r05 wave 29) — the classical texture code next
 # to GLCM.  SPEC shared by both twins:
@@ -1814,10 +1684,14 @@ def zhang_suen_stats(images: DataFrame) -> DataFrame:
 
 
 def lbp_texture_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int]:
-    """Engine mechanics: 8 shifted-slice comparisons summed with
-    bit-shift weights, transitions counted arithmetically (the golden
-    twin packs the same comparisons through 256-entry LUTs built with
-    scalar loops).  Returns (n_interior, n_uniform, sum_code, chk)."""
+    """LOCAL BINARY PATTERNS (Ojala texture codes — the rotation-sensitive
+    micro-texture signal next to GLCM's co-occurrence statistics): 8-bit
+    neighbor-comparison codes with the uniform-pattern count (circular
+    transitions <= 2), all integer.  Engine mechanics: 8 shifted-slice
+    comparisons summed with bit-shift weights, transitions counted
+    arithmetically (the golden twin packs the same comparisons via flat
+    np.take gathers + a scalar-built 256-entry transition LUT).  Returns
+    (n_interior, n_uniform, sum_code, chk)."""
     g = lum_i // 1000
     c = g[1:-1, 1:-1]
     nbs = (g[:-2, 1:-1], g[:-2, 2:], g[1:-1, 2:], g[2:, 2:],
@@ -1834,14 +1708,6 @@ def lbp_texture_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int]:
         int(uniform.sum()),
         int(code.sum()),
         int((wgt * code.ravel()).sum()),
-    )
-
-
-def lbp_texture_stats(images: DataFrame) -> DataFrame:
-    """Per-image LBP texture stats (map-only)."""
-    return _int_terrain_op(
-        images, lbp_texture_kernel,
-        "n_interior bigint, n_uniform bigint, sum_code bigint, chk bigint",
     )
 
 
@@ -1864,10 +1730,15 @@ TAN22_FP = 106  # round(tan(22.5 deg) * 256)
 
 
 def canny_nms_kernel(lum_i: np.ndarray) -> tuple[int, int, int]:
-    """Engine mechanics: vectorized sector masks + four pairs of
-    shifted magnitude slices (the golden twin walks candidates with a
-    scalar loop resolving each pixel's sector independently).
-    Returns (n_raw, n_thin, chk)."""
+    """CANNY DIRECTIONAL NON-MAX SUPPRESSION — the thin-edge stage between
+    the certified Sobel magnitude and the hysteresis linker: gradient
+    direction quantized to 22.5-degree sectors by cross-multiplied
+    integer tests (TAN22_FP, no atan2), each edge pixel survives only as
+    the strict maximum along its own gradient line (raster-earlier
+    neighbor breaks ties).  Engine mechanics: vectorized sector masks +
+    four pairs of shifted magnitude slices (the golden twin walks
+    candidates with a scalar loop resolving each pixel's sector
+    independently).  Returns (n_raw, n_thin, chk)."""
     tl, t, tr = lum_i[:-2, :-2], lum_i[:-2, 1:-1], lum_i[:-2, 2:]
     le, r = lum_i[1:-1, :-2], lum_i[1:-1, 2:]
     bl, b, br = lum_i[2:, :-2], lum_i[2:, 1:-1], lum_i[2:, 2:]
@@ -1906,14 +1777,6 @@ def canny_nms_kernel(lum_i: np.ndarray) -> tuple[int, int, int]:
     return (int(raw.sum()), int(keep.sum()), int((idx + 1).sum()))
 
 
-def canny_nms_stats(images: DataFrame) -> DataFrame:
-    """Per-image thin-edge stats (map-only)."""
-    return _int_terrain_op(
-        images, canny_nms_kernel,
-        "n_raw bigint, n_thin bigint, chk bigint",
-    )
-
-
 # ---------------------------------------------------------------------------
 # Floyd-Steinberg dithering (r05 wave 30) — 1-bit halftoning with
 # integer error diffusion.  SPEC shared by both twins:
@@ -1931,18 +1794,21 @@ def canny_nms_stats(images: DataFrame) -> DataFrame:
 
 
 def dither_fs_kernel(lum_i: np.ndarray) -> tuple[int, int, int]:
-    """Engine mechanics: plain-Python row lists (the golden twin runs a
-    fully scalar dict-free 2-D list walk).  Error diffusion is
-    inherently sequential — each pixel's decision depends on its left
-    and upper neighbors' residuals — so this stays a per-image kernel
-    behind the map-only decode path.  r06: the inner loop was rewritten
-    from per-element numpy indexing (``int(cur[c])`` / ``cur[c+1] +=``,
-    ~150 ns each) to Python-int list ops with an ``e == 0`` skip —
+    """FLOYD-STEINBERG DITHERING — 1-bit halftoning with all-integer FLOOR
+    error diffusion (the display/compression preprocessing op).  Error
+    diffusion is inherently sequential — each pixel's decision depends on
+    its left and upper neighbors' residuals — so it stays a per-image
+    kernel that parallelizes ACROSS images.  Engine mechanics:
+    plain-Python row lists (the golden twin runs a fully scalar
+    dict-free 2-D list walk).  r06: the inner loop was rewritten from
+    per-element numpy indexing (``int(cur[c])`` / ``cur[c+1] +=``, ~150
+    ns each) to Python-int list ops with an ``e == 0`` skip —
     bit-identical, measured 3.4× at every fixture raster size (an
-    anti-diagonal wavefront vectorization was ALSO bit-identical but
-    only broke even: diagonals are ≤ h elements, so per-diagonal numpy
-    dispatch overhead swallowed the vector win).
-    Returns (n_px, n_on, chk)."""
+    anti-diagonal wavefront vectorization was ALSO bit-identical but only
+    broke even: diagonals are ≤ h elements, so per-diagonal numpy
+    dispatch overhead swallowed the vector win).  A mid-gray field
+    dithers to ~50% on-pixels (pinned analytically in pytest).  Returns
+    (n_px, n_on, chk)."""
     g = lum_i // 1000
     h, w = g.shape
     rows = g.tolist()
@@ -1972,14 +1838,6 @@ def dither_fs_kernel(lum_i: np.ndarray) -> tuple[int, int, int]:
         if nxt is not None:
             cur = nxt
     return (h * w, n_on, chk)
-
-
-def dither_fs_stats(images: DataFrame) -> DataFrame:
-    """Per-image Floyd-Steinberg dither stats (map-only)."""
-    return _int_terrain_op(
-        images, dither_fs_kernel,
-        "n_px bigint, n_on bigint, chk bigint",
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2012,10 +1870,15 @@ def _binom_blur_valid(a: np.ndarray) -> np.ndarray:
 
 
 def dog_blob_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
-    """Engine mechanics: slice convolutions + vectorized 8-neighbor
-    comparisons (the golden twin convolves via np.take gathers and
-    resolves candidates with a scalar NMS loop).  Returns
-    (n_core, n_bright, n_dark, sum_absdog, chk)."""
+    """DIFFERENCE-OF-GAUSSIANS BLOB DETECTION — completes the keypoint
+    triad (Harris corners, Canny thin edges, DoG blobs): two levels of
+    the separable binomial pyramid on MILLI-luma (the fixture is smooth;
+    gray-unit DoG rounds away), two-polarity extremum NMS with the
+    deterministic raster-earlier tie rule, all integer.  Engine
+    mechanics: slice convolutions + vectorized 8-neighbor comparisons
+    (the golden twin convolves via flat np.take gathers and resolves
+    every candidate with a scalar NMS loop).  Returns (n_core, n_bright,
+    n_dark, sum_absdog, chk)."""
     b1 = _binom_blur_valid(lum_i)
     b2 = _binom_blur_valid(b1)
     dog = b1[2:-2, 2:-2] - b2
@@ -2043,15 +1906,6 @@ def dog_blob_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
     )
 
 
-def dog_blob_stats(images: DataFrame) -> DataFrame:
-    """Per-image DoG blob stats (map-only)."""
-    return _int_terrain_op(
-        images, dog_blob_kernel,
-        "n_core bigint, n_bright bigint, n_dark bigint, "
-        "sum_absdog bigint, chk bigint",
-    )
-
-
 # ---------------------------------------------------------------------------
 # 2-level integer Haar DWT subband energies (r05 wave 37).  SPEC shared
 # by both twins, ALL INTEGER because the transform is UNNORMALIZED
@@ -2076,9 +1930,14 @@ def _haar_blocks(g: np.ndarray):
 
 
 def haar_energy_kernel(lum_i: np.ndarray) -> tuple[int, ...]:
-    """Engine mechanics: strided-slice block arithmetic (the golden
-    twin gathers each block corner with scalar loops).  Returns
-    (n_px, e_ll2, e_h1, e_v1, e_d1, e_h2, e_v2, e_d2)."""
+    """2-LEVEL INTEGER HAAR DWT subband energies — the wavelet
+    frequency-split every compression/denoise/texture pipeline starts
+    from, in its UNNORMALIZED sum/difference form so the transform is
+    EXACT integer arithmetic (no division, no rounding spec to agree on —
+    the energies are fold-order-free BIGINTs by construction).  Engine
+    mechanics: strided-slice block arithmetic (the golden twin gathers
+    each block corner with scalar loops).  Returns (n_px, e_ll2, e_h1,
+    e_v1, e_d1, e_h2, e_v2, e_d2)."""
     g = lum_i // 1000
     hh, ww = (lum_i.shape[0] // 4) * 4, (lum_i.shape[1] // 4) * 4
     g = g[:hh, :ww]
@@ -2087,15 +1946,6 @@ def haar_energy_kernel(lum_i: np.ndarray) -> tuple[int, ...]:
     sq = lambda x: int((x.astype(np.int64) ** 2).sum())  # noqa: E731
     return (hh * ww, sq(ll2), sq(h1), sq(v1), sq(d1),
             sq(h2), sq(v2), sq(d2))
-
-
-def haar_energy_stats(images: DataFrame) -> DataFrame:
-    """Per-image Haar subband energies (map-only)."""
-    return _int_terrain_op(
-        images, haar_energy_kernel,
-        "n_px bigint, e_ll2 bigint, e_h1 bigint, e_v1 bigint,"
-        " e_d1 bigint, e_h2 bigint, e_v2 bigint, e_d2 bigint",
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2116,10 +1966,14 @@ _SEAM_INF = np.int64(1) << 40
 
 
 def seam_carve_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
-    """Engine mechanics: row-vectorized DP (three shifted copies +
-    np.minimum per row, argmin backtrack); the golden twin runs the
-    whole DP as scalar python ints.  Returns
-    (seam_cost, top_col, bottom_col, sum_energy, chk)."""
+    """VERTICAL SEAM CARVING — the content-aware-resize DP (min-energy
+    top-to-bottom 8-connected path over the clamped-gradient energy map),
+    the third inherently-sequential-per-image kernel next to the dither
+    and the skeleton fixpoint, parallel across images.  Engine mechanics:
+    row-vectorized DP (three shifted copies + np.minimum per row, argmin
+    backtrack); the golden twin runs the whole DP as scalar python ints;
+    leftmost-argmin ties in both.  Returns (seam_cost, top_col,
+    bottom_col, sum_energy, chk)."""
     g = lum_i // 1000
     h, w = g.shape
     dx = np.abs(g[:, np.minimum(np.arange(w) + 1, w - 1)]
@@ -2149,15 +2003,6 @@ def seam_carve_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
     return (cost, col, bottom, int(e.sum()), chk)
 
 
-def seam_carve_stats(images: DataFrame) -> DataFrame:
-    """Per-image vertical-seam stats (map-only)."""
-    return _int_terrain_op(
-        images, seam_carve_kernel,
-        "seam_cost bigint, top_col bigint, bottom_col bigint,"
-        " sum_energy bigint, chk bigint",
-    )
-
-
 # ---------------------------------------------------------------------------
 # Integer template matching (r05 wave 44).  SPEC shared by both twins:
 #   g = milli-luma // 1000
@@ -2177,10 +2022,14 @@ def _match_template() -> np.ndarray:
 
 
 def template_match_kernel(lum_i: np.ndarray) -> tuple[int, ...]:
-    """Engine mechanics: one shifted-slice accumulation per template
-    cell (64 vectorized adds — the golden twin gathers windows with
-    np.take and verifies the argmin with a scalar loop).  Returns
-    (n_pos, best_ssd, best_row, best_col, ssd_chk)."""
+    """INTEGER TEMPLATE MATCHING — min-SSD localization of a fixed 8x8
+    pattern (the where-is-this-patch primitive next to the detectors:
+    Harris/DoG find WHAT is interesting, matching finds WHERE a known
+    patch sits).  Engine mechanics: one shifted-slice accumulation per
+    template cell (64 vectorized adds, exact int64 — the golden twin
+    gathers windows with np.take and re-resolves the raster-earlier
+    argmin with a scalar loop).  Returns (n_pos, best_ssd, best_row,
+    best_col, ssd_chk)."""
     g = lum_i // 1000
     t = _match_template()
     hh, ww = g.shape
@@ -2197,15 +2046,6 @@ def template_match_kernel(lum_i: np.ndarray) -> tuple[int, ...]:
         flat // ow,
         flat % ow,
         int((ssd % 997).sum()),
-    )
-
-
-def template_match_stats(images: DataFrame) -> DataFrame:
-    """Per-image template-match stats (map-only)."""
-    return _int_terrain_op(
-        images, template_match_kernel,
-        "n_pos bigint, best_ssd bigint, best_row bigint,"
-        " best_col bigint, ssd_chk bigint",
     )
 
 

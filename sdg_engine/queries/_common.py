@@ -284,4 +284,7 @@ def _components_jump_inner(edges, verts_k, max_iter: int):
     return labels
 
 
+# events.ts is TIMESTAMP_NTZ in the parquet; _prep pins the session to
+# UTC so the NTZ->TIMESTAMP cast is the identity wall-clock mapping and
+# unix micros agree exactly with DuckDB's epoch_us over the naive value.
 _TS_US = "unix_micros(CAST(ts AS TIMESTAMP))"

@@ -104,6 +104,22 @@ def pagerank_roads(spark, sf_dir):
     return pagerank(edges).select("node", "pr")
 
 
+def _road_node_pairs(spark, sf_dir) -> DataFrame:
+    """The road graph's edges as ``(a, b)`` node pairs, one per
+    consecutive vertex pair of every sf0.01 road polyline, each vertex
+    quantized to its 0.1-degree node id (``_BFS_NODE``, shared with the
+    DuckDB oracles).  Not deduplicated, self-loops kept: each caller
+    orients, filters and checkpoints them itself."""
+    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    node = _BFS_NODE.format(x="c.x", y="c.y")
+    return roads.selectExpr(
+        f"transform(coords, c -> {node}) AS nds"
+    ).selectExpr(
+        "explode(transform(sequence(1, size(nds) - 1), "
+        "i -> struct(nds[i - 1] AS a, nds[i] AS b))) AS e"
+    ).select("e.a", "e.b")
+
+
 def road_graph_bfs(spark, sf_dir):
     """BFS hop distances over the ROAD NETWORK graph: polyline vertices
     quantized to 0.1-degree cells, consecutive vertices = edges (roads
@@ -117,14 +133,7 @@ def road_graph_bfs(spark, sf_dir):
     RECURSIVE CTE over the same roads parquet.
     Output: hops -> node count + node-id checksum (BIGINT sums, exact).
     """
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    node = _BFS_NODE.format(x="c.x", y="c.y")
-    segs = roads.selectExpr(
-        f"transform(coords, c -> {node}) AS nds"
-    ).selectExpr(
-        "explode(transform(sequence(1, size(nds) - 1), "
-        "i -> struct(nds[i - 1] AS a, nds[i] AS b))) AS e"
-    ).select("e.a", "e.b")
+    segs = _road_node_pairs(spark, sf_dir)
     edges = (
         segs.selectExpr("a AS src", "b AS dst")
         .unionAll(segs.selectExpr("b AS src", "a AS dst"))
@@ -177,14 +186,7 @@ def triangle_count_roads(spark, sf_dir):
     construction in DuckDB over the same roads parquet.
     Output: one row — triangle count + node-id checksum.
     """
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    node = _BFS_NODE.format(x="c.x", y="c.y")
-    segs = roads.selectExpr(
-        f"transform(coords, c -> {node}) AS nds"
-    ).selectExpr(
-        "explode(transform(sequence(1, size(nds) - 1), "
-        "i -> struct(nds[i - 1] AS a, nds[i] AS b))) AS e"
-    ).select("e.a", "e.b")
+    segs = _road_node_pairs(spark, sf_dir)
     und = (
         segs.selectExpr(
             "least(a, b) AS u", "greatest(a, b) AS v"
@@ -230,14 +232,7 @@ def _spw_edges(spark, sf_dir):
     """Weighted road-graph edges: the BFS cell quantization plus an
     integer Euclidean weight in cell-mils between cell centers
     (FLOOR(sqrt*1000) of integer deltas — deterministic)."""
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    node = _BFS_NODE.format(x="c.x", y="c.y")
-    segs = roads.selectExpr(
-        f"transform(coords, c -> {node}) AS nds"
-    ).selectExpr(
-        "explode(transform(sequence(1, size(nds) - 1), "
-        "i -> struct(nds[i - 1] AS a, nds[i] AS b))) AS e"
-    ).select("e.a", "e.b")
+    segs = _road_node_pairs(spark, sf_dir)
     und = (
         segs.selectExpr("least(a, b) AS u", "greatest(a, b) AS v")
         .filter(F.col("u") != F.col("v"))
@@ -313,16 +308,7 @@ def link_prediction_roads(spark, sf_dir):
     standard LP truncation); existing edges leave via a left-anti
     equi-join.  Same und/deg construction as triangle_count_roads.
     """
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    node = _BFS_NODE.format(x="c.x", y="c.y")
-    segs = (
-        roads.selectExpr(f"transform(coords, c -> {node}) AS nds")
-        .selectExpr(
-            "explode(transform(sequence(1, size(nds) - 1), "
-            "i -> struct(nds[i - 1] AS a, nds[i] AS b))) AS e"
-        )
-        .select("e.a", "e.b")
-    )
+    segs = _road_node_pairs(spark, sf_dir)
     und = (
         segs.selectExpr("least(a, b) AS u", "greatest(a, b) AS v")
         .filter(F.col("u") != F.col("v"))
@@ -380,16 +366,7 @@ def label_propagation_roads(spark, sf_dir):
     shortest_path_weighted does not arise).
     Output: community size + node-id checksum per surviving label.
     """
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    node = _BFS_NODE.format(x="c.x", y="c.y")
-    segs = (
-        roads.selectExpr(f"transform(coords, c -> {node}) AS nds")
-        .selectExpr(
-            "explode(transform(sequence(1, size(nds) - 1), "
-            "i -> struct(nds[i - 1] AS a, nds[i] AS b))) AS e"
-        )
-        .select("e.a", "e.b")
-    )
+    segs = _road_node_pairs(spark, sf_dir)
     und = (
         segs.selectExpr("least(a, b) AS u", "greatest(a, b) AS v")
         .filter(F.col("u") != F.col("v"))
@@ -443,14 +420,7 @@ def kcore_roads(spark, sf_dir):
     (an extra round changes nothing).  Output: one row — core node
     count, node-id checksum, core edge count.
     """
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    node = _BFS_NODE.format(x="c.x", y="c.y")
-    segs = roads.selectExpr(
-        f"transform(coords, c -> {node}) AS nds"
-    ).selectExpr(
-        "explode(transform(sequence(1, size(nds) - 1), "
-        "i -> struct(nds[i - 1] AS a, nds[i] AS b))) AS e"
-    ).select("e.a", "e.b")
+    segs = _road_node_pairs(spark, sf_dir)
     sym = (
         segs.selectExpr("a AS src", "b AS dst")
         .unionAll(segs.selectExpr("b AS src", "a AS dst"))
@@ -598,14 +568,7 @@ def closeness_roads(spark, sf_dir):
     (reached - 1) / sum(hops) in FLOOR micros.  Oracle: DuckDB
     recursive CTE over (seed, node) pairs with MIN(hops) dedup — the
     road_graph_bfs twin generalized to a labeled walk."""
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    node = _BFS_NODE.format(x="c.x", y="c.y")
-    segs = roads.selectExpr(
-        f"transform(coords, c -> {node}) AS nds"
-    ).selectExpr(
-        "explode(transform(sequence(1, size(nds) - 1), "
-        "i -> struct(nds[i - 1] AS a, nds[i] AS b))) AS e"
-    ).select("e.a", "e.b")
+    segs = _road_node_pairs(spark, sf_dir)
     edges = (
         segs.selectExpr("a AS src", "b AS dst")
         .unionAll(segs.selectExpr("b AS src", "a AS dst"))
@@ -670,14 +633,7 @@ def betweenness_roads(spark, sf_dir):
     Oracle: the identical recurrence as a generated linear CTE chain
     (single back-reference per round, MATERIALIZED multi-referenced
     bases — the label_propagation/shortest_path pattern)."""
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    node = _BFS_NODE.format(x="c.x", y="c.y")
-    segs = roads.selectExpr(
-        f"transform(coords, c -> {node}) AS nds"
-    ).selectExpr(
-        "explode(transform(sequence(1, size(nds) - 1), "
-        "i -> struct(nds[i - 1] AS a, nds[i] AS b))) AS e"
-    ).select("e.a", "e.b")
+    segs = _road_node_pairs(spark, sf_dir)
     edges = (
         segs.selectExpr("a AS src", "b AS dst")
         .unionAll(segs.selectExpr("b AS src", "a AS dst"))
@@ -904,14 +860,7 @@ def roads_graph_diameter(spark, sf_dir):
     (hops desc, node asc) deterministic.  Oracle: TWO chained
     recursive CTEs over the same quantized graph, identical 32-hop
     bound."""
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    node = _BFS_NODE.format(x="c.x", y="c.y")
-    segs = roads.selectExpr(
-        f"transform(coords, c -> {node}) AS nds"
-    ).selectExpr(
-        "explode(transform(sequence(1, size(nds) - 1), "
-        "i -> struct(nds[i - 1] AS a, nds[i] AS b))) AS e"
-    ).select("e.a", "e.b")
+    segs = _road_node_pairs(spark, sf_dir)
     edges = (
         segs.selectExpr("a AS src", "b AS dst")
         .unionAll(segs.selectExpr("b AS src", "a AS dst"))
@@ -966,14 +915,7 @@ def roads_bipartite_check(spark, sf_dir):
     certified frontier loop), then one pass over the edges counts
     same-parity endpoints — each is an odd cycle witness.  Oracle:
     recursive-CTE BFS + identical conflict count."""
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    node = _BFS_NODE.format(x="c.x", y="c.y")
-    segs = roads.selectExpr(
-        f"transform(coords, c -> {node}) AS nds"
-    ).selectExpr(
-        "explode(transform(sequence(1, size(nds) - 1), "
-        "i -> struct(nds[i - 1] AS a, nds[i] AS b))) AS e"
-    ).select("e.a", "e.b")
+    segs = _road_node_pairs(spark, sf_dir)
     edges = (
         segs.selectExpr("a AS src", "b AS dst")
         .unionAll(segs.selectExpr("b AS src", "a AS dst"))
@@ -1018,16 +960,7 @@ def community_modularity(spark, sf_dir):
     sum runs over the communities relation (small by construction)."""
     from pyspark.sql import Window
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    node = _BFS_NODE.format(x="c.x", y="c.y")
-    segs = (
-        roads.selectExpr(f"transform(coords, c -> {node}) AS nds")
-        .selectExpr(
-            "explode(transform(sequence(1, size(nds) - 1), "
-            "i -> struct(nds[i - 1] AS a, nds[i] AS b))) AS e"
-        )
-        .select("e.a", "e.b")
-    )
+    segs = _road_node_pairs(spark, sf_dir)
     und = (
         segs.selectExpr("least(a, b) AS u", "greatest(a, b) AS v")
         .filter(F.col("u") != F.col("v"))

@@ -7,7 +7,25 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..ops import payload as PL
 from ._common import _fixture_images
+
+# Golden subsets are bounded by image key: an unordered LIMIT may pick
+# a different subset across partitionings.
+_FIRST_500 = "img000000000500"
+
+
+def _golden_tiles(spark, sf_dir):
+    """The subset every golden-backed per-tile query reads: the first
+    500 tiles of the sf0.01 image fixture by key, jpg excluded.  sf0.01
+    whatever ``sf_dir`` is, because the DuckDB oracles and the committed
+    goldens embed that fixture.  No jpg, because a lossy decode has no
+    independent twin (the decode-stats NULL policy); jpg pixel fidelity
+    is PSNR-gated in tests/test_jpeg.py."""
+    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    return images.filter(
+        (F.col("image_id") < _FIRST_500) & (F.col("fmt") != "jpg")
+    )
 
 
 def image_rai_summary(spark, sf_dir):
@@ -89,16 +107,11 @@ def image_warp_utm(spark, sf_dir):
     projection behind every UTM EPSG code; nearest-neighbour, the
     GeoTrellis tile.reproject analogue).  Integer checksums make the
     result hash-stable; ORACLE-CHECKED against a committed golden from
-    generator pixels (jpg rows excluded — lossy, engine-decoded; their
-    pixel fidelity is PSNR-gated separately)."""
-    from ..ops import payload as PL
+    generator pixels."""
     from ..ops import spatial as SP
 
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    subset = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return PL.warp_checksums(SP.with_geo(subset), "UTM:31")
+    return PL.warp_checksums(SP.with_geo(_golden_tiles(spark, sf_dir)),
+                             "UTM:31")
 
 
 def image_decode_stats(spark, sf_dir):
@@ -113,12 +126,8 @@ def image_decode_stats(spark, sf_dir):
     written); their pixel fidelity is gated ≥40 dB in tests/test_jpeg.py.
     min/max pixel stats stay pytest-pinned (test_decode_stats_all_ok).
     """
-    from ..ops import payload as PL
-
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    # deterministic subset by key (an unordered LIMIT may pick a
-    # different subset across rounds/partitionings)
-    subset = images.filter(F.col("image_id") < "img000000000500")
+    subset = images.filter(F.col("image_id") < _FIRST_500)
     stats = PL.decode_stats(subset)
     meta = subset.select(
         "image_id", "fmt", F.length("bytes").cast("int").alias("n_bytes")
@@ -142,10 +151,8 @@ def image_thumbnails(spark, sf_dir):
     mean_lum (lossy decode; PSNR-gated in tests/test_jpeg.py).  The
     thumb bytes themselves are pinned in tests/test_codecs.py-style
     invariants (test_pipeline_ops)."""
-    from ..ops import payload as PL
-
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    subset = images.filter(F.col("image_id") < "img000000000500")
+    subset = images.filter(F.col("image_id") < _FIRST_500)
     th = PL.thumbnails(subset, 16, 16)
     meta = subset.select("image_id", "fmt")
     return meta.join(th, "image_id").select(
@@ -167,8 +174,6 @@ def image_near_dup_pairs(spark, sf_dir):
     from decoded bytes through a lossy transcode — cannot be expressed
     relationally and stays pinned in
     tests/test_payload_lineage_skew.py::test_phash_near_dup_pairs."""
-    from ..ops import payload as PL
-
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     subset = images.filter(F.col("image_id") < "img000000000400")
     return PL.phash_near_dup_pairs(subset, max_hamming=12)
@@ -245,120 +250,15 @@ def image_hillshade(spark, sf_dir):
     """Horn hillshade over the image tiles (luminance-as-elevation):
     decode -> 3x3 focal shade -> integer checksums per image (the
     classic GeoTrellis focal op re-expressed as a map-only Spark
-    stage).  jpg rows excluded (lossy decode has no independent twin —
-    decode-stats NULL policy); harness-bounded to the first 500 images
-    like the other golden-backed image queries.  Oracle: committed
-    INDEPENDENT golden (generator pixels + clamp-indexed Horn twin).
-    """
-    from ..ops.payload import hillshade_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return hillshade_stats(sel)
-
-
-def image_sobel_edges(spark, sf_dir):
-    """SOBEL EDGE DENSITY per image — the sharpness/blur curation
-    signal (blurry or flat images score low and get filtered before
-    training).  Decode -> integer BT.601 luma -> 3x3 Sobel L1
-    magnitude -> exact-BIGINT checksums; map-only like the other
-    decode-path queries.  jpg rows excluded (lossy decode has no
-    independent twin); harness-bounded to the first 500 images.
-    Oracle: committed INDEPENDENT golden (generator pixels +
-    clamp-indexed Sobel twin — all integer, so parity is trivial).
-    """
-    from ..ops.payload import sobel_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return sobel_stats(sel)
-
-
-def image_flow_d8(spark, sf_dir):
-    """D8 FLOW-DIRECTION + ACCUMULATION over the image tiles
-    (luminance-as-elevation) — the hydrology terrain op (GeoTrellis
-    focal flow/accumulation analogue) next to hillshade: steepest
-    descent among the 8 neighbors (clamp borders, strict drop, FIRST
-    winner), then acc = 1 + sum(upstream) via ONE high-to-low
-    elevation sweep (strict descent makes the flow field a DAG).
-    Map-only mapInPandas — payload bytes never shuffle; every output
-    is an exact int64.  jpg excluded / first-500 bound like the other
-    golden-backed image queries.  Oracle: committed INDEPENDENT golden
-    (generator pixels + argmax-stacked targets + memoized postorder
-    DFS — a different accumulation algorithm than the engine sweep).
-    """
-    from ..ops.payload import d8_flow_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return d8_flow_stats(sel)
-
-
-def image_watershed(spark, sf_dir):
-    """WATERSHED BASIN labeling over the image tiles — partition every
-    DEM into its D8 drainage basins (each cell labeled with the sink
-    its steepest-descent path terminates at).  Engine resolves labels
-    by vectorized POINTER JUMPING (O(log diameter) numpy rounds);
-    map-only mapInPandas, all-int64 outputs.  jpg excluded /
-    first-500 bound like the other golden-backed image queries.
-    Oracle: committed INDEPENDENT golden (generator pixels +
-    stacked-argmax targets + memoized scalar chain walking).
-    """
-    from ..ops.payload import watershed_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return watershed_stats(sel)
-
-
-def image_viewshed(spark, sf_dir):
-    """VIEWSHED from the center cell (GeoTrellis viewshed analogue,
-    luminance-as-elevation): a target is visible iff every exact
-    integer-DDA intermediate sample along the ray subtends a strictly
-    smaller slope (cross-multiplied rationals — no floats anywhere).
-    Engine: vectorized any-violation sweep over ray steps; map-only.
-    Oracle: committed INDEPENDENT golden (same SPEC, visibility
-    reduced via running max-slope rationals instead).
-    """
-    from ..ops.payload import viewshed_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return viewshed_stats(sel)
-
-
-def image_pit_fill(spark, sf_dir):
-    """PRIORITY-FLOOD depression filling (the DEM-conditioning pass
-    hydrology pipelines run before flow routing): filled(c) is the
-    unique minimax fixpoint max(elev, min over border-reaching paths
-    of the path max) — engine settles cells once each off a min-heap
-    seeded with the border ring (Barnes et al. 2014 recipe); map-only,
-    all-int64.  Oracle: committed INDEPENDENT golden (the same
-    fixpoint iterated as a shifted-view Bellman recurrence).
-    """
-    from ..ops.payload import pit_fill_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return pit_fill_stats(sel)
+    stage).  Oracle: committed INDEPENDENT golden (generator pixels +
+    clamp-indexed Horn twin)."""
+    return PL.hillshade_stats(_golden_tiles(spark, sf_dir))
 
 
 def image_zonal_stats(spark, sf_dir):
     """ZONAL STATISTICS (GeoTrellis polygonal-summary analogue): decode
-    every harness image, assign its footprint center to a country via
-    the two-stage PIP (J2), and aggregate per-zone luminance stats.
+    every golden-subset tile, assign its footprint center to a country
+    via the two-stage PIP (J2), and aggregate per-zone luminance stats.
 
     Cross-engine exactness: per-image mean_lum is snapped to integer
     mils (FLOOR(x*1000 + 0.5), pure IEEE ops on bit-identical doubles)
@@ -366,18 +266,14 @@ def image_zonal_stats(spark, sf_dir):
     the hash.  Oracle: decode-stats golden (independent generator
     pixels) joined to the rai per-image golden (independent
     generator-side country assignment) — a regression in decode, PIP,
-    or the join flips a zone sum.  jpg excluded (decode golden NULLs).
-    Plan: map-only decode + broadcast-dim PIP + one tiny zone agg — no
-    fact-table-wide exchange at any scale.
+    or the join flips a zone sum.  Plan: map-only decode +
+    broadcast-dim PIP + one tiny zone agg — no fact-table-wide exchange
+    at any scale.
     """
     from .. import fixtures as FX
-    from ..ops import payload as PL
     from ..ops import spatial as SP
 
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
+    sel = _golden_tiles(spark, sf_dir)
     cc = SP.assign_countries(SP.with_geo(sel), FX.get_country_rings(), level=9)
     stats = PL.decode_stats(sel)
     mils = "CAST(FLOOR(mean_lum * 1000.0 + 0.5) AS BIGINT)"
@@ -398,30 +294,18 @@ def image_zonal_stats(spark, sf_dir):
 def image_contours(spark, sf_dir):
     """Marching-squares contour stats at iso-luminance 128 per image
     (the raster->vector contouring op): decode -> case grid -> integer
-    segment/case sums.  jpg excluded, harness-bounded to 500 images;
-    oracle: committed independent golden (generator pixels + explicit
-    16-entry LUT twin)."""
-    from ..ops.payload import contour_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return contour_stats(sel)
+    segment/case sums.  Oracle: committed independent golden (generator
+    pixels + explicit 16-entry LUT twin)."""
+    return PL.contour_stats(_golden_tiles(spark, sf_dir))
 
 
 def image_regions(spark, sf_dir):
     """Connected-region stats of the iso-128 mask per image (the
     region-group / polygonize precursor): scan-line union-find inside
-    a map-only stage.  Oracle: committed INDEPENDENT flood-fill golden.
-    jpg excluded, 500-image harness subset."""
+    a map-only stage.  Oracle: committed INDEPENDENT flood-fill golden."""
     from ..ops.raster import region_stats
 
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return region_stats(sel)
+    return region_stats(_golden_tiles(spark, sf_dir))
 
 
 def multimodal_audio_stft(spark, sf_dir):
@@ -432,201 +316,6 @@ def multimodal_audio_stft(spark, sf_dir):
     from ..ops.multimodal import audio_stft_frames, synth_audio_table
 
     return audio_stft_frames(synth_audio_table(spark, 64))
-
-
-def image_texture_glcm(spark, sf_dir):
-    """GLCM TEXTURE features (Haralick contrast / energy /
-    homogeneity) — the texture-curation signal separating flat or
-    synthetic images from natural ones: 16-level quantized luma,
-    unnormalized co-occurrence over the right+down offsets, integer
-    features only (homogeneity uses per-cell integer DIV by
-    1+(i-j)^2, never a float fold).  Map-only like the other decode
-    queries.  Oracle: committed INDEPENDENT golden (scatter-add
-    matrix twin vs the engine's flat bincount)."""
-    from ..ops.payload import glcm_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return glcm_stats(sel)
-
-
-def image_quadtree(spark, sf_dir):
-    """QUADTREE homogeneous-block compression stats — the engine's
-    spatial quadtree family adapted to CONTENT (GeoTrellis-world:
-    pyramid/quad decomposition): a block is a leaf iff its luma range
-    <= 8000, else it splits in 4.  Map-only, all-integer.  Oracle:
-    committed INDEPENDENT golden — leaves selected BOTTOM-UP on
-    vectorized min/max pyramids (equivalent by range monotonicity
-    under containment; a genuinely different algorithm than the
-    engine's top-down split stack)."""
-    from ..ops.payload import quadtree_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return quadtree_stats(sel)
-
-
-def image_slope_aspect(spark, sf_dir):
-    """SLOPE / ASPECT classification (the terrain derivative the
-    reference's GeoTrellis stack publishes next to hillshade): Horn
-    3x3 gradients on the milli-luma DEM under clamp borders, aspect
-    bucketed into 8 octants by a first-match INTEGER rule (no atan2 —
-    sign/magnitude comparisons only, so parity is exact), slope energy
-    gx^2+gy^2 as int64.  Map-only mapInPandas like the other terrain
-    queries; jpg excluded / first-500 bound.  Oracle: committed
-    INDEPENDENT golden (generator pixels + np.ix_ clamp gathers + a
-    scalar per-pixel octant chain vs the engine's pad-slice
-    np.select)."""
-    from ..ops.payload import slope_aspect_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return slope_aspect_stats(sel)
-
-
-def image_strahler(spark, sf_dir):
-    """STRAHLER STREAM ORDER over the D8 flow DAG — the stream-network
-    hierarchy op completing the hydrology family (flow -> accumulation
-    -> watershed -> order): order 1 at leaves, +1 where >= 2 upstream
-    branches of equal max order meet.  Engine: ONE high-to-low
-    elevation sweep (strict drop means upstream orders are final
-    before their target folds them).  Map-only; exact int64.  Oracle:
-    committed INDEPENDENT golden (stacked-argmax targets + memoized
-    postorder DFS)."""
-    from ..ops.payload import strahler_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return strahler_stats(sel)
-
-
-def image_hist_equalize(spark, sf_dir):
-    """HISTOGRAM EQUALIZATION stats — the contrast-normalization step
-    of an imagery ingest pipeline, as the classic integer remap
-    eq(v) = (cdf(v) - cdfmin) * 255 // (npx - cdfmin) over 256 luma
-    levels (all integer division — exact at any partitioning).
-    Map-only; jpg excluded / first-500 bound.  Oracle: committed
-    INDEPENDENT golden (scalar counting-dict CDF vs the engine's
-    bincount/cumsum LUT)."""
-    from ..ops.payload import hist_equalize_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return hist_equalize_stats(sel)
-
-
-def image_morphology(spark, sf_dir):
-    """3x3 MORPHOLOGY (erosion / dilation / morphological gradient)
-    under clamp borders — the denoise/edge-strength curation signal
-    next to Sobel; min/max filters are also the focal-statistics
-    primitive of the raster family.  Engine: edge-replicated pad + 8
-    contiguous slice min/maxes (views, never gathers).  Map-only;
-    exact int64.  Oracle: committed INDEPENDENT golden (np.ix_ clamp
-    gathers per offset)."""
-    from ..ops.payload import morphology_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return morphology_stats(sel)
-
-
-def image_tpi_tri(spark, sf_dir):
-    """TPI / TRI terrain indexes (Weiss topographic position; Riley
-    ruggedness) — the landform-classification signals next to
-    slope/aspect: TPI = 8*center - neighborhood sum (ridge/valley when
-    |TPI| clears the milli-luma threshold), TRI = sum of absolute
-    neighbor differences.  All-int64, map-only mapInPandas like the
-    other terrain queries; jpg excluded / first-500 bound.  Oracle:
-    committed INDEPENDENT golden (generator pixels + np.ix_ clamp
-    gathers vs the engine's pad slices)."""
-    from ..ops.payload import tpi_tri_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return tpi_tri_stats(sel)
-
-
-def image_flow_length(spark, sf_dir):
-    """D8 DOWNSTREAM FLOW LENGTH — the hydrology distance-to-outlet op
-    completing the flow family (direction -> accumulation -> watershed
-    -> order -> LENGTH): per-cell path length along the steepest-
-    descent chain to its sink, integer 10/14 cardinal/diagonal weights
-    decided by the EFFECTIVE (clamp-degraded) displacement.  Engine:
-    vectorized pointer jumping with additive lengths (O(log path)
-    rounds).  Map-only; exact int64.  Oracle: committed INDEPENDENT
-    golden (stacked-argmax targets + memoized scalar chain walks)."""
-    from ..ops.payload import flow_length_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return flow_length_stats(sel)
-
-
-def image_box_downscale(spark, sf_dir):
-    """2x BOX-FILTER DOWNSCALE — the image-pyramid level every
-    multiresolution serving/training pipeline materializes (the raster
-    twin of the cell-rollup spatial_pyramid): each output pixel is the
-    integer mean of a 2x2 milli-luma block ((a+b+c+d) DIV 4 — exact at
-    any partitioning).  Map-only; jpg excluded / first-500 bound.
-    Oracle: committed INDEPENDENT golden (generator pixels + reshape
-    blocks vs the engine's strided slices)."""
-    from ..ops.payload import box_downscale_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return box_downscale_stats(sel)
-
-
-def image_median3(spark, sf_dir):
-    """3x3 MEDIAN FILTER stats — the order-statistic denoiser
-    completing the focal family (morphology has min/max, TPI/TRI the
-    linear stats): median of 9 = 5th smallest, exact integer at any
-    partitioning.  Map-only; jpg excluded / first-500 bound.  Oracle:
-    committed INDEPENDENT golden (generator pixels + sorted np.ix_
-    clamp gathers vs the engine's pad-slice np.partition)."""
-    from ..ops.payload import median3_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return median3_stats(sel)
-
-
-def image_otsu(spark, sf_dir):
-    """OTSU THRESHOLD per image — the classic histogram-based
-    binarization (the segmentation step before region labeling).
-    Exact: the between-class-variance argmax is compared as
-    cross-multiplied arbitrary-precision integers (the squared
-    numerator overflows int64), smallest-t tie-break.  Map-only; jpg
-    excluded / first-500 bound.  Oracle: committed INDEPENDENT golden
-    (Counter histogram + incremental running sums + Fraction compare
-    vs the engine's bincount cumsums)."""
-    from ..ops.payload import otsu_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return otsu_stats(sel)
 
 
 def multimodal_audio_pitch(spark, sf_dir):
@@ -650,42 +339,6 @@ def multimodal_video_motion(spark, sf_dir):
     return video_motion_blocks(synth_video_table(spark, 32))
 
 
-def image_edt(spark, sf_dir):
-    """EXACT squared EUCLIDEAN DISTANCE TRANSFORM to the nearest bright
-    pixel — the exact companion to image_cost_distance's chamfer 3-4
-    approximation (proximity rasters, buffer masks).  Map-only; jpg
-    excluded / first-500 bound.  Oracle: committed golden from the
-    INDEPENDENT Felzenszwalb-Huttenlocher lower-envelope algorithm
-    with exact Fraction hull intersections (vs the engine's
-    nearest-seed scans + vectorized offset broadcast)."""
-    from ..ops.payload import edt_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return edt_stats(sel)
-
-
-def image_fft_sharpness(spark, sf_dir):
-    """FFT SHARPNESS: fraction of spectral energy above a quarter-
-    Nyquist radius — the frequency-domain blur/sharpness curation
-    signal next to Sobel's spatial one.  The 2-D rfft runs on the
-    exact integer milli-luma raster; the mask is a pure-integer
-    wavenumber-radius compare; energies are float64 with the argmax
-    over non-DC magnitude deterministic (first max).  Oracle: golden
-    twin regenerates the pixels from the generator SPEC and runs the
-    same in-process rfft2 (the decode_stats precedent — the DECODE
-    path is what the comparison exercises)."""
-    from ..ops.payload import fft_sharpness_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return fft_sharpness_stats(sel)
-
-
 def multimodal_caption_consistency(spark, sf_dir):
     """CROSS-MODAL CONSISTENCY QA: image pairs that are perceptual
     near-dups (phash LSH bands + exact hamming <= 6 — the certified
@@ -694,8 +347,6 @@ def multimodal_caption_consistency(spark, sf_dir):
     curation pipeline runs before training.  Pure relational over the
     binding (phash, caption) columns, so the oracle reruns it verbatim;
     emits the pairs with their hamming and the agreement flag."""
-    from ..ops import payload as PL
-
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     subset = images.filter(F.col("image_id") < "img000000000400")
     pairs = PL.phash_near_dup_pairs(subset, max_hamming=6)
@@ -714,184 +365,6 @@ def multimodal_caption_consistency(spark, sf_dir):
     )
 
 
-def image_ssim_recon(spark, sf_dir):
-    """GLOBAL SSIM of the 2x box-downscale + nearest-upsample
-    reconstruction — the perceptual quality metric beyond PSNR (X3):
-    how much signal a pyramid level loses, per image.  Moment sums are
-    exact int64; one SPEC'd double chain evaluates the closed form and
-    FLOORs to micros.  Map-only; jpg excluded / first-500 bound.
-    Oracle: committed golden with independent mechanics (reshape
-    blocks + np.kron + python-int sums vs strided slices + np.repeat +
-    numpy sums)."""
-    from ..ops.payload import ssim_recon_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return ssim_recon_stats(sel)
-
-
-def image_fast_corners(spark, sf_dir):
-    """FAST-12 CORNER DETECTION (the keypoint/texture curation signal
-    next to Sobel and Harris-free GLCM): a pixel is a corner when some
-    CONTIGUOUS circular arc of >= 12 of its 16 Bresenham-circle
-    neighbors is uniformly brighter (or darker) than center +- t.
-    Pure-integer comparisons on milli-luma; interior pixels only.
-    Engine: 16 shifted views -> packed 16-bit codes -> sliced circular
-    AND; golden twin: the SAME codes through a 65536-entry max-run
-    LOOKUP TABLE built scalar — two different run detectors."""
-    from ..ops.payload import fast_corner_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return fast_corner_stats(sel)
-
-
-def image_affine_bilinear(spark, sf_dir):
-    """AFFINE ROTATION with FIXED-POINT BILINEAR resampling — the
-    interpolation family the nearest-neighbour CRS warp deliberately
-    avoided, made hash-exact: the inverse-rotation matrix is an
-    integer 16.16 fixed-point literal, source coordinates stay
-    integral on a doubled grid, and the bilinear weights quantize to
-    1/256 BEFORE the blend so every output pixel is one exact integer
-    expression.  Map-only; out-of-bounds samples are skipped (counted).
-    Oracle: committed golden with gather-based mechanics."""
-    from ..ops.payload import affine_bilinear_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return affine_bilinear_stats(sel)
-
-
-def image_hough_lines(spark, sf_dir):
-    """DOMINANT-LINE HOUGH TRANSFORM over the certified Sobel edge map
-    — the straight-structure curation signal (documents/buildings/
-    horizons score high, natural texture low).  ALL INTEGER: 12
-    fixed-point 15-degree theta bins, 4-pixel rho bins, votes by
-    bincount; argmax tie-break is the smallest (theta, rho), and the
-    checksum folds votes^2 over the accumulator so the full vote
-    surface is oracle-visible.  Map-only (payload bytes never
-    shuffle).  Oracle: committed golden with np.add.at scatter
-    mechanics over clamp-indexed generator pixels."""
-    from ..ops.payload import hough_lines_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return hough_lines_stats(sel)
-
-
-def image_canny_hysteresis(spark, sf_dir):
-    """TWO-THRESHOLD HYSTERESIS EDGE LINKING (the Canny stage after
-    the gradient): weak edges survive only when 8-connected — through
-    other weak pixels — to a strong edge, killing isolated noise while
-    keeping faint continuations of real contours.  The engine kernel
-    is a vectorized dilation fixpoint; the golden twin floods with a
-    scalar BFS deque — two different algorithms meeting at the unique
-    connected closure.  Map-only; every output is an exact integer.
-    Oracle: committed golden over clamp-indexed generator pixels."""
-    from ..ops.payload import canny_hysteresis_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return canny_hysteresis_stats(sel)
-
-
-def image_harris_corners(spark, sf_dir):
-    """HARRIS CORNER DETECTION (the classical eigen-response detector
-    next to FAST-12's arc test — two independent keypoint signals for
-    image curation): all-integer response R = 20·det(M) − trace(M)²
-    (k = 0.05 exactly) over 3×3-summed Sobel products on the
-    255-scale gray raster, deterministic raster-order NMS.  Map-only
-    over the decode path — payload bytes never shuffle.  Golden twin
-    recomputes the SPEC via np.ix_ gathers + summed-area-table box
-    sums + scalar NMS (three independent mechanisms)."""
-    from ..ops.payload import harris_corner_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return harris_corner_stats(sel)
-
-
-def image_skeleton_zs(spark, sf_dir):
-    """MORPHOLOGICAL SKELETONIZATION (Zhang-Suen thinning) — reduces
-    every bright region to its 1-px medial skeleton, the classical
-    shape-analysis step after binarization (stroke extraction for the
-    document-image curation family).  Synchronous two-sub-pass
-    deletion to the deterministic fixpoint; map-only over the decode
-    path.  Golden twin drives the same SPEC through 256-entry
-    predicate LUTs built with scalar loops (vs the engine's slice
-    arithmetic)."""
-    from ..ops.payload import zhang_suen_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return zhang_suen_stats(sel)
-
-
-def image_lbp_texture(spark, sf_dir):
-    """LOCAL BINARY PATTERNS (Ojala texture codes — the
-    rotation-sensitive micro-texture signal next to GLCM's
-    co-occurrence statistics): 8-bit neighbor-comparison codes with
-    the uniform-pattern count (circular transitions <= 2), all
-    integer, map-only.  Golden twin packs the same comparisons via
-    flat np.take gathers + a scalar-built 256-entry transition LUT."""
-    from ..ops.payload import lbp_texture_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return lbp_texture_stats(sel)
-
-
-def image_canny_nms(spark, sf_dir):
-    """CANNY DIRECTIONAL NON-MAX SUPPRESSION — the thin-edge stage
-    between the certified Sobel magnitude and the hysteresis linker:
-    gradient direction quantized to 22.5-degree sectors by
-    cross-multiplied integer tests (TAN22_FP = 106, no atan2), each
-    edge pixel survives only as the strict maximum along its own
-    gradient line (raster-earlier neighbor breaks ties).  Map-only,
-    all-integer.  Golden twin resolves every candidate with a scalar
-    loop."""
-    from ..ops.payload import canny_nms_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return canny_nms_stats(sel)
-
-
-def image_dither_fs(spark, sf_dir):
-    """FLOYD-STEINBERG DITHERING — 1-bit halftoning with integer error
-    diffusion (the display/compression preprocessing op; also the
-    classic example of an inherently SEQUENTIAL per-image kernel that
-    still parallelizes perfectly ACROSS images behind the map-only
-    decode path).  All-integer FLOOR diffusion; golden twin is a fully
-    scalar 2-D list walk.  A mid-gray field dithers to ~50% on-pixels
-    (pinned analytically in pytest)."""
-    from ..ops.payload import dither_fs_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return dither_fs_stats(sel)
-
-
 def multimodal_audio_decimate(spark, sf_dir):
     """SAMPLE-RATE REDUCTION (decimate-by-2 through the classic 32-sum
     half-band FIR, all-integer with floor division) over the REAL-WAV
@@ -902,56 +375,6 @@ def multimodal_audio_decimate(spark, sf_dir):
     from ..ops.multimodal import audio_decimate_stats, synth_audio_table
 
     return audio_decimate_stats(synth_audio_table(spark, 64))
-
-
-def image_dog_blobs(spark, sf_dir):
-    """DIFFERENCE-OF-GAUSSIANS BLOB DETECTION — completes the keypoint
-    triad (Harris corners, Canny thin edges, DoG blobs): two levels of
-    the separable binomial pyramid on MILLI-luma (the fixture is
-    smooth; gray-unit DoG rounds away), two-polarity extremum NMS with
-    the deterministic raster-earlier tie rule, all integer, map-only.
-    Golden twin convolves via flat np.take gathers and resolves every
-    candidate with a scalar loop."""
-    from ..ops.payload import dog_blob_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return dog_blob_stats(sel)
-
-
-def image_haar_energy(spark, sf_dir):
-    """2-LEVEL INTEGER HAAR DWT subband energies — the wavelet
-    frequency-split every compression/denoise/texture pipeline starts
-    from, in its UNNORMALIZED sum/difference form so the transform is
-    EXACT integer arithmetic (no division, no rounding spec to agree
-    on — the energies are fold-order-free BIGINTs by construction).
-    Map-only behind the decode path; golden twin gathers each 2x2
-    block corner with scalar loops (vs the engine's strided slices)."""
-    from ..ops.payload import haar_energy_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return haar_energy_stats(sel)
-
-
-def image_seam_carve(spark, sf_dir):
-    """VERTICAL SEAM CARVING — the content-aware-resize DP (min-energy
-    top-to-bottom 8-connected path over the clamped-gradient energy
-    map), the third inherently-sequential-per-image kernel next to the
-    dither and the skeleton fixpoint: row-vectorized DP in the engine,
-    fully scalar DP in the golden, leftmost-argmin ties in both.
-    Parallel across images, payload bytes never shuffle."""
-    from ..ops.payload import seam_carve_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return seam_carve_stats(sel)
 
 
 def multimodal_audio_biquad(spark, sf_dir):
@@ -969,22 +392,6 @@ def multimodal_audio_biquad(spark, sf_dir):
     return audio_biquad_stats(synth_audio_table(spark, 64))
 
 
-def image_template_match(spark, sf_dir):
-    """INTEGER TEMPLATE MATCHING — min-SSD localization of a fixed 8x8
-    pattern (the where-is-this-patch primitive next to the detectors:
-    Harris/DoG find WHAT is interesting, matching finds WHERE a known
-    patch sits).  SSD decomposes into 64 shifted-slice accumulations —
-    exact int64, map-only; the golden gathers windows with np.take and
-    re-resolves the raster-earlier argmin with a scalar loop."""
-    from ..ops.payload import template_match_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return template_match_stats(sel)
-
-
 def image_palette_mediancut(spark, sf_dir):
     """MEDIAN-CUT PALETTE EXTRACTION — the dominant-color primitive of
     image curation (and the classic GIF/PNG8 quantizer), fully
@@ -995,68 +402,227 @@ def image_palette_mediancut(spark, sf_dir):
     All integer; error = SSD of each pixel to ITS box's mean.  Golden:
     the same SPEC over scalar python dicts (vs the engine's sorted
     numpy distinct-color arrays)."""
-    from ..ops.payload import palette_mediancut_stats
+    return PL.palette_mediancut_stats(_golden_tiles(spark, sf_dir))
 
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return palette_mediancut_stats(sel)
+
+# The per-image integer kernel queries, one row each: query name ->
+# (ops.payload kernel, output fields after image_id).  Each runs its
+# kernel through _int_terrain_op over _golden_tiles (one map-only
+# MapInPandas), and its docstring is the kernel's, which names the
+# golden twin it is checked against.
+_KERNELS = {
+    "image_slope_aspect": (
+        PL.slope_aspect_kernel,
+        "n_px int, n_flat bigint, hist_chk bigint, n_steep bigint, "
+        "sum_s2 bigint",
+    ),
+    "image_strahler": (
+        PL.strahler_stats_kernel,
+        "n_px int, max_order bigint, sum_order bigint, n_ge2 bigint, "
+        "chk bigint",
+    ),
+    "image_hist_equalize": (
+        PL.hist_equalize_kernel,
+        "n_px int, sum_eq bigint, n_levels_out bigint, max_eq bigint, "
+        "chk bigint",
+    ),
+    "image_morphology": (
+        PL.morphology_kernel,
+        "n_px int, sum_erode bigint, sum_dilate bigint, n_edge bigint, "
+        "chk bigint",
+    ),
+    "image_texture_glcm": (
+        PL.glcm_features,
+        "n_pairs int, contrast bigint, energy bigint, homog_mils bigint",
+    ),
+    "image_quadtree": (
+        PL.quadtree_stats_kernel,
+        "n_px int, n_leaves int, max_depth int, sum_range bigint, "
+        "sum_depth_px bigint",
+    ),
+    "image_sobel_edges": (
+        PL.sobel_edge_kernel,
+        "n_px int, n_edges int, sum_mag bigint, max_mag bigint",
+    ),
+    "image_flow_d8": (
+        PL.d8_flow_kernel,
+        "n_px int, n_sinks int, sum_acc bigint, max_acc bigint, chk bigint",
+    ),
+    "image_watershed": (
+        PL.watershed_stats_kernel,
+        "n_px int, n_basins int, largest_px int, sum_sq bigint, chk bigint",
+    ),
+    "image_viewshed": (
+        PL.viewshed_stats_kernel,
+        "n_px int, n_visible int, sum_vis_lum bigint, chk bigint",
+    ),
+    "image_pit_fill": (
+        PL.pit_fill_stats_kernel,
+        "n_px int, n_raised int, sum_delta bigint, chk bigint",
+    ),
+    "image_tpi_tri": (
+        PL.tpi_tri_kernel,
+        "n_px int, sum_tri bigint, max_tri bigint, n_ridge bigint, "
+        "n_valley bigint, chk bigint",
+    ),
+    "image_flow_length": (
+        PL.flow_length_kernel,
+        "n_px int, n_sinks int, sum_len bigint, max_len bigint, chk bigint",
+    ),
+    "image_box_downscale": (
+        PL.box_downscale_kernel,
+        "n_out int, sum_ds bigint, max_ds bigint, min_ds bigint, chk bigint",
+    ),
+    "image_median3": (
+        PL.median3_kernel,
+        "n_px int, sum_med bigint, n_changed bigint, max_absdiff bigint, "
+        "chk bigint",
+    ),
+    "image_otsu": (
+        PL.otsu_kernel,
+        "thr int, n_fg bigint, sum_fg bigint, chk bigint",
+    ),
+    "image_edt": (
+        PL.edt_kernel,
+        "n_px int, n_fg bigint, sum_d2 bigint, max_d2 bigint, chk bigint",
+    ),
+    "image_fft_sharpness": (
+        PL.fft_sharpness_kernel,
+        "n_px int, hf_ratio_micros bigint, peak_u int, peak_v int",
+    ),
+    "image_ssim_recon": (
+        PL.ssim_recon_kernel,
+        "n_px int, sum_recon bigint, ssim_micros bigint, chk bigint",
+    ),
+    "image_fast_corners": (
+        PL.fast_corner_kernel,
+        "n_interior int, n_corners bigint, n_bright bigint, n_dark bigint, "
+        "chk bigint",
+    ),
+    "image_affine_bilinear": (
+        PL.affine_bilinear_kernel,
+        "n_sampled bigint, sum_out bigint, max_out bigint, chk bigint",
+    ),
+    "image_hough_lines": (
+        PL.hough_lines_kernel,
+        "n_edges bigint, best_votes bigint, best_theta bigint, "
+        "best_rho bigint, chk bigint",
+    ),
+    "image_canny_hysteresis": (
+        PL.canny_hysteresis_kernel,
+        "n_weak bigint, n_strong bigint, n_final bigint, chk bigint",
+    ),
+    "image_harris_corners": (
+        PL.harris_corner_kernel,
+        "n_interior bigint, n_corners bigint, sum_rq bigint, max_r bigint, "
+        "chk bigint",
+    ),
+    "image_skeleton_zs": (
+        PL.zhang_suen_kernel,
+        "n_fg bigint, n_skel bigint, n_iters bigint, chk bigint",
+    ),
+    "image_lbp_texture": (
+        PL.lbp_texture_kernel,
+        "n_interior bigint, n_uniform bigint, sum_code bigint, chk bigint",
+    ),
+    "image_canny_nms": (
+        PL.canny_nms_kernel,
+        "n_raw bigint, n_thin bigint, chk bigint",
+    ),
+    "image_dither_fs": (
+        PL.dither_fs_kernel,
+        "n_px bigint, n_on bigint, chk bigint",
+    ),
+    "image_dog_blobs": (
+        PL.dog_blob_kernel,
+        "n_core bigint, n_bright bigint, n_dark bigint, sum_absdog bigint, "
+        "chk bigint",
+    ),
+    "image_template_match": (
+        PL.template_match_kernel,
+        "n_pos bigint, best_ssd bigint, best_row bigint, best_col bigint, "
+        "ssd_chk bigint",
+    ),
+    "image_haar_energy": (
+        PL.haar_energy_kernel,
+        "n_px bigint, e_ll2 bigint, e_h1 bigint, e_v1 bigint, e_d1 bigint, "
+        "e_h2 bigint, e_v2 bigint, e_d2 bigint",
+    ),
+    "image_seam_carve": (
+        PL.seam_carve_kernel,
+        "seam_cost bigint, top_col bigint, bottom_col bigint, "
+        "sum_energy bigint, chk bigint",
+    ),
+}
+
+
+def _kernel_query(name, kernel, schema):
+    def build(spark, sf_dir):
+        return PL._int_terrain_op(_golden_tiles(spark, sf_dir), kernel,
+                                  schema)
+
+    build.__name__ = build.__qualname__ = name
+    build.__doc__ = kernel.__doc__
+    return build
 
 
 QUERIES = {
-    "multimodal_audio_features": multimodal_audio_features,
-    "multimodal_video_frames": multimodal_video_frames,
-    "multimodal_audio_spectral": multimodal_audio_spectral,
-    "multimodal_video_cuts": multimodal_video_cuts,
-    "image_render_colormap": image_render_colormap,
-    "image_rai_summary": image_rai_summary,
-    "image_cost_distance": image_cost_distance,
-    "image_warp_utm": image_warp_utm,
-    "image_decode_stats": image_decode_stats,
-    "image_near_dup_pairs": image_near_dup_pairs,
-    "image_thumbnails": image_thumbnails,
-    "image_slope_aspect": image_slope_aspect,
-    "image_strahler": image_strahler,
-    "image_hist_equalize": image_hist_equalize,
-    "image_morphology": image_morphology,
-    "image_texture_glcm": image_texture_glcm,
-    "image_quadtree": image_quadtree,
-    "image_sobel_edges": image_sobel_edges,
-    "image_flow_d8": image_flow_d8,
-    "image_watershed": image_watershed,
-    "image_viewshed": image_viewshed,
-    "image_pit_fill": image_pit_fill,
-    "image_hillshade": image_hillshade,
-    "image_zonal_stats": image_zonal_stats,
-    "image_contours": image_contours,
-    "image_regions": image_regions,
-    "multimodal_audio_stft": multimodal_audio_stft,
-    "image_tpi_tri": image_tpi_tri,
-    "image_flow_length": image_flow_length,
-    "image_box_downscale": image_box_downscale,
-    "image_median3": image_median3,
-    "image_otsu": image_otsu,
-    "multimodal_audio_pitch": multimodal_audio_pitch,
-    "multimodal_video_motion": multimodal_video_motion,
-    "image_edt": image_edt,
-    "image_fft_sharpness": image_fft_sharpness,
-    "multimodal_caption_consistency": multimodal_caption_consistency,
-    "image_ssim_recon": image_ssim_recon,
-    "image_fast_corners": image_fast_corners,
-    "image_affine_bilinear": image_affine_bilinear,
-    "image_hough_lines": image_hough_lines,
-    "image_canny_hysteresis": image_canny_hysteresis,
-    "image_harris_corners": image_harris_corners,
-    "image_skeleton_zs": image_skeleton_zs,
-    "image_lbp_texture": image_lbp_texture,
-    "image_canny_nms": image_canny_nms,
-    "image_dither_fs": image_dither_fs,
-    "multimodal_audio_decimate": multimodal_audio_decimate,
-    "image_dog_blobs": image_dog_blobs,
-    "image_palette_mediancut": image_palette_mediancut,
-    "image_template_match": image_template_match,
-    "multimodal_audio_biquad": multimodal_audio_biquad,
-    "image_haar_energy": image_haar_energy,
-    "image_seam_carve": image_seam_carve,
+    name: _kernel_query(name, *_KERNELS[name]) if name in _KERNELS
+    else globals()[name]
+    for name in (
+        "multimodal_audio_features",
+        "multimodal_video_frames",
+        "multimodal_audio_spectral",
+        "multimodal_video_cuts",
+        "image_render_colormap",
+        "image_rai_summary",
+        "image_cost_distance",
+        "image_warp_utm",
+        "image_decode_stats",
+        "image_near_dup_pairs",
+        "image_thumbnails",
+        "image_slope_aspect",
+        "image_strahler",
+        "image_hist_equalize",
+        "image_morphology",
+        "image_texture_glcm",
+        "image_quadtree",
+        "image_sobel_edges",
+        "image_flow_d8",
+        "image_watershed",
+        "image_viewshed",
+        "image_pit_fill",
+        "image_hillshade",
+        "image_zonal_stats",
+        "image_contours",
+        "image_regions",
+        "multimodal_audio_stft",
+        "image_tpi_tri",
+        "image_flow_length",
+        "image_box_downscale",
+        "image_median3",
+        "image_otsu",
+        "multimodal_audio_pitch",
+        "multimodal_video_motion",
+        "image_edt",
+        "image_fft_sharpness",
+        "multimodal_caption_consistency",
+        "image_ssim_recon",
+        "image_fast_corners",
+        "image_affine_bilinear",
+        "image_hough_lines",
+        "image_canny_hysteresis",
+        "image_harris_corners",
+        "image_skeleton_zs",
+        "image_lbp_texture",
+        "image_canny_nms",
+        "image_dither_fs",
+        "multimodal_audio_decimate",
+        "image_dog_blobs",
+        "image_palette_mediancut",
+        "image_template_match",
+        "multimodal_audio_biquad",
+        "image_haar_energy",
+        "image_seam_carve",
+    )
 }

@@ -283,12 +283,6 @@ def semi_join_parts(spark, sf_dir):
     )
 
 
-# events.ts is TIMESTAMP_NTZ in the parquet; _prep pins the session to
-# UTC so the NTZ->TIMESTAMP cast is the identity wall-clock mapping and
-# unix micros agree exactly with DuckDB's epoch_us over the naive value.
-_TS_US_SQL = "unix_micros(CAST(ts AS TIMESTAMP))"
-
-
 def events_asof_join(spark, sf_dir):
     """AS-OF JOIN: for every click, the most recent STRICTLY-PRIOR view
     by the same user (tie-break: (ts, event_id) total order).
@@ -320,7 +314,7 @@ def events_asof_join(spark, sf_dir):
         )
         .withColumn(
             "view_us",
-            F.last(F.when(is_view, F.expr(_TS_US_SQL)), ignorenulls=True).over(w),
+            F.last(F.when(is_view, F.expr(_TS_US)), ignorenulls=True).over(w),
         )
         .filter(F.col("event_type") == "click")
         .select(
@@ -329,7 +323,7 @@ def events_asof_join(spark, sf_dir):
             F.coalesce("view_event_id", F.lit(-1)).alias("view_event_id"),
             F.coalesce("view_value", F.lit(-1.0)).alias("view_value"),
             F.coalesce(
-                (F.expr(_TS_US_SQL) - F.col("view_us")).cast("long"), F.lit(-1)
+                (F.expr(_TS_US) - F.col("view_us")).cast("long"), F.lit(-1)
             ).alias("gap_us"),
         )
     )
@@ -348,7 +342,7 @@ def events_funnel(spark, sf_dir):
     micros (BIGINT MIN — fold-order exact).
     """
     ev = _t(spark, sf_dir, "events").select(
-        "user_id", "event_type", F.expr(_TS_US_SQL).alias("us")
+        "user_id", "event_type", F.expr(_TS_US).alias("us")
     )
     t1 = ev.groupBy("user_id").agg(
         F.min(F.when(F.col("event_type") == "view", F.col("us"))).alias("t1")
@@ -540,7 +534,7 @@ def events_retention(spark, sf_dir):
     user_id equi-join; the per-user first-week agg is map-side
     combinable and the cohort triangle is tiny at any scale."""
     ev = _t(spark, sf_dir, "events").select(
-        "user_id", F.expr(_TS_US_SQL).alias("us")
+        "user_id", F.expr(_TS_US).alias("us")
     ).selectExpr("user_id", f"{_RET_WEEK} AS wk")
     first = ev.groupBy("user_id").agg(F.min("wk").alias("cohort_week"))
     return (
@@ -952,6 +946,18 @@ def hist_quantiles(spark, sf_dir):
 _HOUR_US = 3_600_000_000
 
 
+def _hourly_counts(spark, sf_dir):
+    """The hourly event series ``(h, x)``: event count per observed
+    hour h (epoch micros DIV one hour).  One map-side-combinable hash
+    agg, so everything after it runs over observed hours, never rows."""
+    return (
+        _t(spark, sf_dir, "events")
+        .selectExpr(f"CAST(FLOOR({_TS_US} / {_HOUR_US}) AS BIGINT) AS h")
+        .groupBy("h")
+        .agg(F.count(F.lit(1)).alias("x"))
+    )
+
+
 def events_acf(spark, sf_dir):
     """AUTOCORRELATION (ACF) of the hourly event-count series at lags
     1..3 — the seasonality probe of a time-series pipeline.  Integer-
@@ -966,13 +972,8 @@ def events_acf(spark, sf_dir):
     row; the lag joins are equi-joins on hour over the tiny hourly
     series.  Nothing after the first agg is proportional to events.
     """
-    hourly = (
-        _t(spark, sf_dir, "events")
-        .selectExpr(f"CAST(FLOOR({_TS_US_SQL} / {_HOUR_US}) AS BIGINT) AS h")
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("x"))
-        .localCheckpoint()  # tiny (observed hours); referenced 3x below
-    )
+    # tiny (observed hours); referenced 3x below
+    hourly = _hourly_counts(spark, sf_dir).localCheckpoint()
     stats = hourly.agg(
         F.count(F.lit(1)).alias("n"), F.sum("x").alias("s")
     )
@@ -1018,7 +1019,7 @@ def events_gapfill(spark, sf_dir):
     hourly = (
         ev.selectExpr(
             "event_type AS t",
-            f"CAST(FLOOR({_TS_US_SQL} / {_HOUR_US}) AS BIGINT) AS h",
+            f"CAST(FLOOR({_TS_US} / {_HOUR_US}) AS BIGINT) AS h",
             "CAST(FLOOR(value * 1000 + 0.5) AS BIGINT) AS v_mils",
         )
         .groupBy("t", "h")
@@ -1101,13 +1102,8 @@ def cusum_changepoint(spark, sf_dir):
     Plan shape: one map-side-combined hourly agg; one sequential
     running-sum window over the tiny series; one final 1-row agg.
     """
-    hourly = (
-        _t(spark, sf_dir, "events")
-        .selectExpr(f"CAST(FLOOR({_TS_US_SQL} / {_HOUR_US}) AS BIGINT) AS h")
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("x"))
-        .localCheckpoint()  # tiny; stats + cusum branches
-    )
+    # tiny; stats + cusum branches
+    hourly = _hourly_counts(spark, sf_dir).localCheckpoint()
     stats = hourly.agg(
         F.count(F.lit(1)).alias("n"), F.sum("x").alias("s")
     )
@@ -1144,7 +1140,7 @@ def events_trend(spark, sf_dir):
         _t(spark, sf_dir, "events")
         .selectExpr(
             "event_type AS t",
-            f"CAST(FLOOR({_TS_US_SQL} / {_HOUR_US * 24}) AS BIGINT) AS day",
+            f"CAST(FLOOR({_TS_US} / {_HOUR_US * 24}) AS BIGINT) AS day",
         )
         .groupBy("t", "day")
         .agg(F.count(F.lit(1)).alias("y"))
@@ -1187,7 +1183,7 @@ def drift_chisq(spark, sf_dir):
     wt = (
         _t(spark, sf_dir, "events")
         .selectExpr(
-            f"CAST(FLOOR({_TS_US_SQL} / {_HOUR_US * 24 * 7}) AS BIGINT) AS wk",
+            f"CAST(FLOOR({_TS_US} / {_HOUR_US * 24 * 7}) AS BIGINT) AS wk",
             "event_type AS t",
         )
         .groupBy("wk", "t")
@@ -1377,12 +1373,7 @@ def events_ewma(spark, sf_dir):
     window is over hours, never rows.  Rows without 7 priors are
     excluded (spec'd identically in both engines).
     """
-    hourly = (
-        _t(spark, sf_dir, "events")
-        .selectExpr(f"CAST(FLOOR({_TS_US_SQL} / {_HOUR_US}) AS BIGINT) AS h")
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
+    hourly = _hourly_counts(spark, sf_dir)
     w = Window.orderBy("h")
     lagged = hourly.select(
         "h",
@@ -1415,7 +1406,7 @@ def events_seasonality(spark, sf_dir):
     """
     per_day = (
         _t(spark, sf_dir, "events")
-        .selectExpr(f"CAST(FLOOR({_TS_US_SQL} / {_DAY_US}) AS BIGINT) AS d")
+        .selectExpr(f"CAST(FLOOR({_TS_US} / {_DAY_US}) AS BIGINT) AS d")
         .groupBy("d")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -1476,12 +1467,7 @@ def events_rolling_range(spark, sf_dir):
     observed-hour series; both range windows run over that tiny series
     (length ∝ time span, not data volume).
     """
-    hourly = (
-        _t(spark, sf_dir, "events")
-        .selectExpr(f"CAST(FLOOR({_TS_US_SQL} / {_HOUR_US}) AS BIGINT) AS h")
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
+    hourly = _hourly_counts(spark, sf_dir)
     w = Window.orderBy("h").rangeBetween(-23, 0)
     return hourly.select(
         "h",
@@ -1535,7 +1521,7 @@ def events_sessionize_batch(spark, sf_dir):
     micros (engines cannot disagree on sub-second ordering; ties
     break on event_id)."""
     ev = _t(spark, sf_dir, "events").selectExpr(
-        "user_id", "event_id", f"{_TS_US_SQL} AS us"
+        "user_id", "event_id", f"{_TS_US} AS us"
     )
     w = Window.partitionBy("user_id").orderBy("us", "event_id")
     gap = F.col("us") - F.lag("us").over(w)
@@ -1736,13 +1722,8 @@ def events_mann_kendall(spark, sf_dir):
     the observation window — 720 rows for a month of hours — never by
     event volume), the same boundedness argument as events_acf's lag
     join.  Nothing after the first agg scales with the data."""
-    hourly = (
-        _t(spark, sf_dir, "events")
-        .selectExpr(f"CAST(FLOOR({_TS_US_SQL} / {_HOUR_US}) AS BIGINT) AS h")
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("x"))
-        .localCheckpoint()  # tiny (observed hours); both join sides
-    )
+    # tiny (observed hours); both join sides
+    hourly = _hourly_counts(spark, sf_dir).localCheckpoint()
     pairs = hourly.selectExpr("h AS h1", "x AS x1").join(
         hourly.selectExpr("h AS h2", "x AS x2"), F.col("h2") > F.col("h1")
     )
@@ -1799,7 +1780,7 @@ def events_regression(spark, sf_dir):
     corpus folding all 9 moments, then a one-row projection.  No
     shuffle is proportional to events."""
     ev = _t(spark, sf_dir, "events").selectExpr(
-        f"FLOOR({_TS_US_SQL} / {_HOUR_US}) AS ht",
+        f"FLOOR({_TS_US} / {_HOUR_US}) AS ht",
         "CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS y",
     ).selectExpr(
         "CAST(ht % 24 AS BIGINT) AS x1",
@@ -1910,7 +1891,7 @@ def events_twap(spark, sf_dir):
     engines)."""
     ev = _t(spark, sf_dir, "events").selectExpr(
         "event_type", "event_id",
-        f"{_TS_US_SQL} AS us",
+        f"{_TS_US} AS us",
         "CAST(FLOOR(value * 1000 + 0.5) AS BIGINT) AS v_mils",
     )
     w = Window.partitionBy("event_type").orderBy("us", "event_id")
@@ -2635,13 +2616,8 @@ def events_theil_sen(spark, sf_dir):
     pair join and the ranking window run over the TIME-GRID-bounded
     pair set (~260k rows for a 720-hour grid — fixed by the calendar,
     not the data size; the events_acf boundedness argument)."""
-    hourly = (
-        _t(spark, sf_dir, "events")
-        .selectExpr(f"CAST(FLOOR({_TS_US} / {_HOUR_US}) AS BIGINT) AS h")
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("x"))
-        .localCheckpoint()  # tiny; both pair-join sides
-    )
+    # tiny; both pair-join sides
+    hourly = _hourly_counts(spark, sf_dir).localCheckpoint()
     pairs = (
         hourly.selectExpr("h AS h1", "x AS x1")
         .join(hourly.selectExpr("h AS h2", "x AS x2"),
@@ -2734,13 +2710,8 @@ def events_mad(spark, sf_dir):
     lower-median ROW_NUMBER picks over the TIME-GRID-bounded hourly
     relation (deterministic total orders: (x, h) then (dev, h));
     everything BIGINT."""
-    hourly = (
-        _t(spark, sf_dir, "events")
-        .selectExpr(f"CAST(FLOOR({_TS_US} / {_HOUR_US}) AS BIGINT) AS h")
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("x"))
-        .localCheckpoint()  # median pick + deviation branch
-    )
+    # median pick + deviation branch
+    hourly = _hourly_counts(spark, sf_dir).localCheckpoint()
     n = hourly.agg(F.count(F.lit(1)).alias("n_hours"))
     w1 = Window.orderBy("x", "h")
     med = (
@@ -2840,12 +2811,7 @@ def events_runs_test(spark, sf_dir):
     Plan shape: one hash agg to the hourly series, two lag windows over
     that tiny series, one global fold.  Nothing after the first agg
     scales with rows."""
-    hourly = (
-        _t(spark, sf_dir, "events")
-        .selectExpr(f"CAST(FLOOR({_TS_US} / {_HOUR_US}) AS BIGINT) AS h")
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
+    hourly = _hourly_counts(spark, sf_dir)
     w = Window.orderBy("h")
     signs = (
         hourly.withColumn("d", F.col("x") - F.lag("x").over(w))
@@ -3054,12 +3020,7 @@ def events_forecast_ols(spark, sf_dir):
     Plan shape: one hash agg to the hourly series; two lag-window
     passes over that tiny series (windowed relation = observed hours,
     never rows); one global fold."""
-    hourly = (
-        _t(spark, sf_dir, "events")
-        .selectExpr(f"CAST(FLOOR({_TS_US} / {_HOUR_US}) AS BIGINT) AS h")
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
+    hourly = _hourly_counts(spark, sf_dir)
     k = _FC_K
     w = Window.orderBy("h").rowsBetween(-k, -1)
     wl = Window.orderBy("h")
@@ -3238,12 +3199,7 @@ def events_bootstrap_ci(spark, sf_dir):
     explode is bounded by B * observed hours (never rows); replicate
     means are exact integer DIV micros; the rank picks run over the
     32-row replicate table."""
-    hourly = (
-        _t(spark, sf_dir, "events")
-        .selectExpr(f"CAST(FLOOR({_TS_US} / {_HOUR_US}) AS BIGINT) AS h")
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
+    hourly = _hourly_counts(spark, sf_dir)
     idx = hourly.selectExpr(
         "x",
         "CAST(ROW_NUMBER() OVER (ORDER BY h) - 1 AS BIGINT) AS i",
@@ -3282,7 +3238,6 @@ def events_bootstrap_ci(spark, sf_dir):
 
 
 _HOLD_US = 1_800_000_000  # 30-minute hold per event
-_HOUR_US_R5D = 3_600_000_000
 
 
 _MIN_US = 60_000_000
@@ -3567,7 +3522,7 @@ def events_hourly_peaks(spark, sf_dir):
     hourly = (
         _t(spark, sf_dir, "events")
         .selectExpr(
-            f"{_TS_US} DIV {_HOUR_US_R5D} AS h",
+            f"{_TS_US} DIV {_HOUR_US} AS h",
             "CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents",
         )
         .groupBy("h")

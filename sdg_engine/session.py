@@ -38,9 +38,8 @@ ENGINE_CONFS = {
     # wrong width signal for them.  64k only affects post-shuffle
     # partitions already under 64 KB; at production scale such
     # partitions are degenerate and the cost of not merging them is a
-    # few extra no-op tasks (parameterized for cluster tuning).
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize":
-        os.environ.get("SPARK_GRAFT_MIN_COALESCE", "64k"),
+    # few extra no-op tasks.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
     # Align Spark's whole-stage-codegen fallback with the JVM JIT's
     # DontCompileHugeMethods limit (8000 bytecodes): a fused stage whose
     # generated method exceeds it is NEVER JIT-compiled and silently runs
@@ -56,7 +55,7 @@ ENGINE_CONFS = {
     # measurement sessions don't need origin-decorated errors.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
     # at 100 TB these become cluster-level; locally keep shuffle small
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
+    "spark.sql.shuffle.partitions": "32",
     "spark.sql.files.maxPartitionBytes": "128m",
     "spark.sql.autoBroadcastJoinThreshold": "64m",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),

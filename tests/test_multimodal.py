@@ -50,7 +50,7 @@ def test_audio_wav_roundtrip_exact():
 def test_audio_real_decode_raises_for_compressed_codecs(spark):
     audio = MM.synth_opaque_audio_table(spark, 2)
     with pytest.raises(PythonException, match="NotImplementedError"):
-        MM.audio_features(audio, deterministic_fake=False).collect()
+        MM.audio_features(audio).collect()
 
 
 def test_video_frame_sampling_shape(spark):
@@ -90,4 +90,4 @@ def test_video_rawvid_roundtrip():
 def test_video_compressed_codec_raises(spark):
     video = MM.synth_opaque_video_table(spark, 2)
     with pytest.raises(PythonException, match="NotImplementedError"):
-        MM.video_frame_sample(video, deterministic_fake=False).collect()
+        MM.video_frame_sample(video).collect()

@@ -566,59 +566,50 @@ def test_skyline_and_interpolate_are_joinless(spark):
 
 def test_sobel_is_map_only(spark):
     """Sobel edge stats: payload bytes never shuffle — zero Exchange."""
-    from sdg_engine.queries.image import image_sobel_edges
+    from sdg_engine.queries.image import QUERIES
 
-    assert "Exchange" not in _plan(image_sobel_edges(spark, SF))
+    assert "Exchange" not in _plan(QUERIES["image_sobel_edges"](spark, SF))
 
 
 def test_flow_d8_is_map_only(spark):
     """D8 flow accumulation: payload bytes never shuffle — zero
     Exchange (the per-image DAG sweep is local under clamp borders)."""
-    from sdg_engine.queries.image import image_flow_d8
+    from sdg_engine.queries.image import QUERIES
 
-    assert "Exchange" not in _plan(image_flow_d8(spark, SF))
+    assert "Exchange" not in _plan(QUERIES["image_flow_d8"](spark, SF))
 
 
 def test_terrain_trio_is_map_only(spark):
     """Watershed / viewshed / pit-fill: payload bytes never shuffle —
     zero Exchange in all three plans."""
-    from sdg_engine.queries.image import (
-        image_pit_fill,
-        image_viewshed,
-        image_watershed,
-    )
+    from sdg_engine.queries.image import QUERIES
 
-    for fn in (image_watershed, image_viewshed, image_pit_fill):
-        assert "Exchange" not in _plan(fn(spark, SF)), fn.__name__
+    for name in ("image_watershed", "image_viewshed", "image_pit_fill"):
+        assert "Exchange" not in _plan(QUERIES[name](spark, SF)), name
 
 
 def test_terrain_r5b_is_map_only(spark):
     """Slope/aspect, Strahler, equalization, morphology: payload bytes
     never shuffle — zero Exchange in all four plans."""
-    from sdg_engine.queries.image import (
-        image_hist_equalize,
-        image_morphology,
-        image_slope_aspect,
-        image_strahler,
-    )
+    from sdg_engine.queries.image import QUERIES
 
-    for fn in (image_slope_aspect, image_strahler, image_hist_equalize,
-               image_morphology):
-        assert "Exchange" not in _plan(fn(spark, SF)), fn.__name__
+    for name in ("image_slope_aspect", "image_strahler",
+                 "image_hist_equalize", "image_morphology"):
+        assert "Exchange" not in _plan(QUERIES[name](spark, SF)), name
 
 
 def test_glcm_is_map_only(spark):
     """GLCM texture stats: payload bytes never shuffle."""
-    from sdg_engine.queries.image import image_texture_glcm
+    from sdg_engine.queries.image import QUERIES
 
-    assert "Exchange" not in _plan(image_texture_glcm(spark, SF))
+    assert "Exchange" not in _plan(QUERIES["image_texture_glcm"](spark, SF))
 
 
 def test_quadtree_is_map_only(spark):
     """Quadtree compression stats: payload bytes never shuffle."""
-    from sdg_engine.queries.image import image_quadtree
+    from sdg_engine.queries.image import QUERIES
 
-    assert "Exchange" not in _plan(image_quadtree(spark, SF))
+    assert "Exchange" not in _plan(QUERIES["image_quadtree"](spark, SF))
 
 
 def test_voronoi_broadcast_bounded_fanout(spark):
@@ -808,10 +799,10 @@ def test_q11_global_threshold_is_single_broadcast_row(spark):
 def test_terrain_r5c_is_map_only(spark):
     """TPI/TRI and flow length: payload bytes never shuffle — zero
     Exchange in both plans."""
-    from sdg_engine.queries.image import image_flow_length, image_tpi_tri
+    from sdg_engine.queries.image import QUERIES
 
-    for fn in (image_tpi_tri, image_flow_length):
-        assert "Exchange" not in _plan(fn(spark, SF)), fn.__name__
+    for name in ("image_tpi_tri", "image_flow_length"):
+        assert "Exchange" not in _plan(QUERIES[name](spark, SF)), name
 
 
 def test_lateral_topk_decorrelates_to_window_group_limit(spark):
@@ -831,32 +822,25 @@ def test_snap_and_edt_stay_map_shaped(spark):
     """points_snap_roads reduces candidates with a map-side partial
     min(struct) agg (no window over raw candidate pairs); image_edt is
     map-only — payload bytes never shuffle."""
-    from sdg_engine.queries.image import image_edt
+    from sdg_engine.queries.image import QUERIES
     from sdg_engine.queries.spatial import points_snap_roads
 
     plan = _plan(points_snap_roads(spark, SF))
     assert "partial_min" in plan or "partial min" in plan.lower()
     assert "Window" not in plan
-    eplan = _plan(image_edt(spark, SF))
+    eplan = _plan(QUERIES["image_edt"](spark, SF))
     assert "Exchange" not in eplan
 
 
 def test_wave26plus_kernels_are_map_only(spark):
     """Harris / skeleton / LBP / Canny-NMS / dither / DoG: payload
     bytes never shuffle — zero Exchange in all six plans."""
-    from sdg_engine.queries.image import (
-        image_canny_nms,
-        image_dither_fs,
-        image_dog_blobs,
-        image_harris_corners,
-        image_lbp_texture,
-        image_skeleton_zs,
-    )
+    from sdg_engine.queries.image import QUERIES
 
-    for fn in (image_harris_corners, image_skeleton_zs,
-               image_lbp_texture, image_canny_nms, image_dither_fs,
-               image_dog_blobs):
-        assert "Exchange" not in _plan(fn(spark, SF)), fn.__name__
+    for name in ("image_harris_corners", "image_skeleton_zs",
+                 "image_lbp_texture", "image_canny_nms", "image_dither_fs",
+                 "image_dog_blobs"):
+        assert "Exchange" not in _plan(QUERIES[name](spark, SF)), name
 
 
 def test_simhash_band_join_no_cartesian(spark):
@@ -882,19 +866,19 @@ def test_tfidf_topk_probe_is_broadcast(spark):
 def test_wave37_kernels_are_map_only(spark):
     """Haar DWT + seam carving: payload bytes never shuffle — zero
     Exchange in both plans."""
-    from sdg_engine.queries.image import image_haar_energy, image_seam_carve
+    from sdg_engine.queries.image import QUERIES
 
-    for fn in (image_haar_energy, image_seam_carve):
-        assert "Exchange" not in _plan(fn(spark, SF)), fn.__name__
+    for name in ("image_haar_energy", "image_seam_carve"):
+        assert "Exchange" not in _plan(QUERIES[name](spark, SF)), name
 
 
 def test_wave44_kernels_are_map_only(spark):
     """Template match + VW simplify: payload/geometry never shuffles —
     zero Exchange in both plans."""
-    from sdg_engine.queries.image import image_template_match
+    from sdg_engine.queries.image import QUERIES
     from sdg_engine.queries.spatial import roads_simplify_vw
 
-    for fn in (image_template_match, roads_simplify_vw):
+    for fn in (QUERIES["image_template_match"], roads_simplify_vw):
         assert "Exchange" not in _plan(fn(spark, SF)), fn.__name__
 
 
@@ -915,6 +899,7 @@ def test_payload_row_maps_plan_map_only(spark):
     from sdg_engine.ops import multimodal as MM
     from sdg_engine.ops import payload as PL
     from sdg_engine.ops import raster as RS
+    from sdg_engine.queries.image import _KERNELS
 
     images = spark.read.parquet(os.path.join(fixture_dir(0.001), "images.parquet"))
     geo = SP.with_geo(images)
@@ -928,15 +913,14 @@ def test_payload_row_maps_plan_map_only(spark):
         "transcode_geotiff": PL.transcode_geotiff(geo),
         "transcode_png_geotiff": PL.transcode_png_geotiff(geo),
         "hillshade_stats": PL.hillshade_stats(images),
-        "sobel_stats": PL.sobel_stats(images),
-        "d8_flow_stats": PL.d8_flow_stats(images),
-        "watershed_stats": PL.watershed_stats(images),
         "contour_stats": PL.contour_stats(images),
         "palette_mediancut_stats": PL.palette_mediancut_stats(images),
         "region_stats": RS.region_stats(images),
         "audio_stft_frames": MM.audio_stft_frames(audio),
         "video_motion_blocks": MM.video_motion_blocks(video),
     }
+    for name in ("image_sobel_edges", "image_flow_d8", "image_watershed"):
+        ops[name] = PL._int_terrain_op(images, *_KERNELS[name])
     for name, df in ops.items():
         plan = _plan(df)
         assert plan.count("MapInPandas") == 1, name
