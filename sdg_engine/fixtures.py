@@ -295,18 +295,13 @@ def write_fixture_parquet(out_dir: str, sf: float) -> None:
     same files or pin a torn fixture; the loser discards its copy (both
     are deterministic functions of the SPEC, so either is correct)."""
     import os
-    import shutil
-    import tempfile
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    if os.path.isdir(out_dir):
-        return
-    parent = os.path.dirname(out_dir)
-    os.makedirs(parent, exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix=os.path.basename(out_dir) + ".tmp.", dir=parent)
-    try:
+    from .storage import publish_dir  # lazy: importing fixtures stays Spark-free
+
+    def _write(tmp: str) -> None:
         # small row groups: a single-row-group 185 MB binary-column file
         # is unsplittable and OOMs a default-1g-heap session's scan task
         pq.write_table(
@@ -322,11 +317,5 @@ def write_fixture_parquet(out_dir: str, sf: float) -> None:
             pa.Table.from_pylist(countries_records()),
             os.path.join(tmp, "countries.parquet"),
         )
-        os.rename(tmp, out_dir)  # atomic publish (same filesystem)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the race — reuse winner
-        if not os.path.isdir(out_dir):
-            raise
-    except Exception:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
+
+    publish_dir(out_dir, _write)

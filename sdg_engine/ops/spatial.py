@@ -849,46 +849,6 @@ def _rings_key(rings: dict[str, np.ndarray]) -> tuple:
     return tuple((cc, r.shape[0], float(r.sum())) for cc, r in sorted(rings.items()))
 
 
-def _publish_dim_dir(tag: str, write_fn) -> str:
-    """Atomically publish a small dim-table directory under a PER-USER
-    unique path (ADVICE r02: the old fixed /tmp path + after-the-fact
-    marker file let two concurrent sessions overwrite each other's
-    parquet and pin the corrupted result forever, and was pre-seedable
-    by other users).
-
-    ``write_fn(tmp_dir)`` materializes the content into a fresh private
-    temp dir; the dir is then published with one atomic ``os.rename``.
-    If a concurrent session won the race (or the dir already exists),
-    the freshly written copy is discarded and the committed one is used
-    — both copies are deterministic functions of ``tag``'s inputs, so
-    either is correct, but no reader can ever observe a half-written
-    directory."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    base = _os.path.join(
-        _tempfile.gettempdir(), f"sdg_dims_u{_os.getuid()}", tag
-    )
-    if _os.path.isdir(base):
-        return base
-    _os.makedirs(_os.path.dirname(base), exist_ok=True)
-    tmp = _tempfile.mkdtemp(prefix=f"{tag}.tmp.", dir=_os.path.dirname(base))
-    try:
-        write_fn(tmp)
-        _os.rename(tmp, base)  # atomic publish (same filesystem)
-    except OSError:
-        _shutil.rmtree(tmp, ignore_errors=True)  # lost the race — reuse winner
-        if not _os.path.isdir(base):
-            raise
-    except Exception:
-        # r03 review: a Spark write failure (Py4JJavaError/Analysis…)
-        # is not an OSError — still remove the half-written private dir
-        _shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    return base
-
-
 def _country_dims(spark, rings: dict[str, np.ndarray], level: int):
     """Cached tiny dimension DataFrames for J2 (per session + rings + level).
 
@@ -910,13 +870,14 @@ def _country_dims(spark, rings: dict[str, np.ndarray], level: int):
     # createDataFrame ExistingRDD re-runs a Python deserialization pass
     # inside EVERY broadcast build (~0.8 s serial per query execution —
     # measured); a parquet scan is JVM-only and OS-cached.  On a real
-    # cluster these are Iceberg dim tables.  Published atomically via
-    # _publish_dim_dir (per-user path + rename — no concurrent-session
-    # corruption, no pre-seeding).
+    # cluster these are Iceberg dim tables.
     import hashlib as _hl
     import os as _os
+    import tempfile as _tempfile
 
     import pandas as _pd
+
+    from ..storage import publish_dir
 
     # the subdirectory layout is part of the key, so a directory holding
     # another layout is never picked up as this one
@@ -936,7 +897,14 @@ def _country_dims(spark, rings: dict[str, np.ndarray], level: int):
                                               dtype="int64")})
         ).coalesce(1).write.mode("overwrite").parquet(_os.path.join(tmp, "boundary"))
 
-    base = _publish_dim_dir(tag, _write)
+    # a PER-USER path, published atomically by publish_dir: a fixed
+    # shared /tmp path plus an after-the-fact marker file let two
+    # concurrent sessions overwrite each other's parquet and pin the
+    # torn result forever, and could be pre-seeded by another user
+    base = publish_dir(
+        _os.path.join(_tempfile.gettempdir(), f"sdg_dims_u{_os.getuid()}", tag),
+        _write,
+    )
     interior_df = spark.read.parquet(_os.path.join(base, "interior"))
     boundary_df = spark.read.parquet(_os.path.join(base, "boundary"))
     result = (interior_df, boundary_df)

@@ -5,17 +5,25 @@ Design scale (10^12 rows): the images table is written partitioned by
 ``bucket(cell_id at BUCKET_LEVEL)`` and SORTED by ``cell_id`` within
 files, so that (a) per-cell work prunes partitions at scan time and
 (b) parquet min/max row-group stats skip within files — the stand-in
-for Iceberg's bucket partition transform + sort order.  The real
-Iceberg catalog path is config-gated (`format="iceberg"`) and needs
-the runtime jars a cluster would ship; this sandbox has none
-(SURVEY.md §0), so local tests run the parquet layout and assert the
-pruning behavior that carries over 1:1.
+for Iceberg's bucket partition transform + sort order.  The layout is
+always parquet: no Iceberg runtime jars are present (SURVEY.md §0), so
+there is no Iceberg catalog path, and the tests assert the pruning
+behavior that carries over 1:1.
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
+import os
+import shutil
+import tempfile
+import uuid
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 BUCKET_LEVEL = 7
 N_BUCKETS = 16
@@ -23,7 +31,6 @@ N_BUCKETS = 16
 
 def write_images_layout(
     images_geo: DataFrame, path: str, n_buckets: int = N_BUCKETS,
-    fmt: str = "parquet",
 ) -> None:
     """Write partitioned-by-cell-bucket, sorted-by-cell layout."""
     from .ops.spatial import with_point_cell
@@ -37,13 +44,12 @@ def write_images_layout(
         .sortWithinPartitions("cell_l7")
         .write.mode("overwrite")
         .partitionBy("cell_bucket")
-        .format(fmt)
-        .save(path)
+        .parquet(path)
     )
 
 
-def read_images_layout(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
-    return spark.read.format(fmt).load(path)
+def read_images_layout(spark: SparkSession, path: str) -> DataFrame:
+    return spark.read.parquet(path)
 
 
 _P1 = 0x9E3779B185EBCA87
@@ -92,7 +98,6 @@ def cells_to_buckets(cells, n_buckets: int = N_BUCKETS):
 
 def read_images_for_cells(
     spark: SparkSession, path: str, cells, n_buckets: int = N_BUCKETS,
-    fmt: str = "parquet",
 ) -> DataFrame:
     """Partition-pruned read of the bucketed images layout for a cell
     set (e.g. a country's compacted cover uncompacted to BUCKET_LEVEL):
@@ -101,14 +106,44 @@ def read_images_for_cells(
     (PartitionFilters; pinned in test_plans).  The residual exact
     cell-membership test stays on the query (buckets are a superset)."""
     buckets = cells_to_buckets(cells, n_buckets)
-    df = read_images_layout(spark, path, fmt)
+    df = read_images_layout(spark, path)
     return df.filter(F.col("cell_bucket").isin(buckets))
 
 
+def publish_dir(out_dir: str, write_fn) -> str:
+    """Atomically publish a directory of deterministic content:
+    ``write_fn(tmp_dir)`` writes it into a private sibling temp dir,
+    which one ``os.rename`` publishes as ``out_dir``.  An existing
+    ``out_dir`` is reused without calling ``write_fn``; if a concurrent
+    writer wins the race, this copy is discarded and the winner's is
+    used (either is correct).  No reader ever sees a half-written
+    directory, and no write interleaves with another.  Returns
+    ``out_dir``."""
+    if os.path.isdir(out_dir):
+        return out_dir
+    parent = os.path.dirname(out_dir)
+    os.makedirs(parent, exist_ok=True)
+    tmp = tempfile.mkdtemp(prefix=os.path.basename(out_dir) + ".tmp.",
+                           dir=parent)
+    try:
+        write_fn(tmp)
+        os.rename(tmp, out_dir)  # atomic publish (same filesystem)
+    except OSError:
+        shutil.rmtree(tmp, ignore_errors=True)  # lost the race — reuse winner
+        if not os.path.isdir(out_dir):
+            raise
+    except Exception:
+        # a Spark write failure (Py4JJavaError, AnalysisException) is
+        # not an OSError — still remove the half-written private dir
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    return out_dir
+
+
 # ---------------------------------------------------------------------------
-# Snapshot commits + time travel (Iceberg metadata shape on local parquet;
-# r04).  The real catalog path stays config-gated (module docstring) —
-# this is the metadata PROTOCOL: immutable data directories + an atomic
+# Snapshot commits + time travel (Iceberg metadata shape on local
+# parquet).  There is no catalog path (module docstring) — this is the
+# metadata PROTOCOL: immutable data directories + an atomic
 # manifest commit per snapshot, so readers get time travel and writers
 # get safe concurrent commits, without any table service.
 # ---------------------------------------------------------------------------
@@ -118,15 +153,11 @@ def _manifest_dir(path: str) -> str:
     """Pure path helper — READS must not create directories as a side
     effect (r04 review: read_snapshot on a typo'd path used to mkdir
     it before raising)."""
-    import os
-
     return os.path.join(path, "manifests")
 
 
 def snapshot_history(path: str) -> list[int]:
     """Committed snapshot ids, ascending (empty for a fresh table)."""
-    import os
-
     d = _manifest_dir(path)
     if not os.path.isdir(d):
         return []
@@ -137,10 +168,53 @@ def snapshot_history(path: str) -> list[int]:
     return sorted(out)
 
 
-def _read_manifest(path: str, snap_id: int) -> dict:
-    import json
-    import os
+def _head(path: str, as_of: int | None = None) -> tuple[int, dict]:
+    """The one way to resolve a snapshot: ``(id, manifest)`` of ``as_of``
+    (default: the head).  Raises ``ValueError`` on a table with no
+    committed snapshot and on an id that is not in its history."""
+    hist = snapshot_history(path)
+    if not hist:
+        raise ValueError(f"no snapshots committed at {path!r}")
+    snap_id = hist[-1] if as_of is None else as_of
+    if snap_id not in hist:
+        raise ValueError(f"snapshot {snap_id} not in history {hist}")
+    return snap_id, _read_manifest(path, snap_id)
 
+
+def _commit(path: str, build) -> int:
+    """Commit one snapshot — the Iceberg optimistic commit in miniature.
+    ``build(parent_id, parent)`` returns the new manifest's fields for
+    the current head (``(None, None)`` on a fresh table); ``_commit``
+    stamps ``snapshot_id`` and ``parent`` and hard-links the manifest
+    into ``manifests/<id>.json``.  link(2) fails with EEXIST if another
+    writer took the id; the loser calls ``build`` again against the
+    newer head.  So ``build`` must derive every field it does not set
+    itself from the ``parent`` it is given, never from an earlier read
+    — a field copied from a stale head silently undoes the concurrent
+    commit.  Returns the committed snapshot id (1-based)."""
+    mdir = _manifest_dir(path)
+    os.makedirs(mdir, exist_ok=True)  # writes may create; reads never do
+    tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex[:12]}")
+    try:
+        while True:
+            hist = snapshot_history(path)
+            parent_id = hist[-1] if hist else None
+            parent = _read_manifest(path, parent_id) if hist else None
+            snap_id = (parent_id or 0) + 1
+            with open(tmp, "w") as f:
+                json.dump({**build(parent_id, parent),
+                           "snapshot_id": snap_id, "parent": parent_id}, f)
+            try:
+                os.link(tmp, os.path.join(mdir, f"{snap_id}.json"))
+                return snap_id
+            except FileExistsError:
+                continue  # lost the race — rebuild against the new head
+    finally:
+        if os.path.exists(tmp):  # never leave a .tmp behind
+            os.remove(tmp)
+
+
+def _read_manifest(path: str, snap_id: int) -> dict:
     with open(os.path.join(_manifest_dir(path), f"{snap_id}.json")) as f:
         return json.load(f)
 
@@ -152,8 +226,6 @@ def _merge_schema(parent_json: dict | None, new_schema) -> dict:
     with a DIFFERENT type is a real evolution conflict and raises —
     silent type widening is how tables rot.  Returns schema JSON for
     the manifest."""
-    from pyspark.sql.types import StructType
-
     if parent_json is None:
         return new_schema.jsonValue()
     parent = StructType.fromJson(parent_json)
@@ -182,8 +254,6 @@ def _bloom_cells(value) -> list[int]:
     """The 3 bit positions a value sets/probes — md5 of the value's
     string form, 4 hex digits per probe (deterministic, no RNG; the
     same conv()-free idiom as the engine's other sketch hashes)."""
-    import hashlib
-
     h = hashlib.md5(str(value).encode()).hexdigest()
     return [int(h[4 * j:4 * j + 4], 16) % _BLOOM_M for j in range(_BLOOM_K)]
 
@@ -213,8 +283,6 @@ def _file_stats(data_dir: str, cols: list[str],
     O(files), not O(rows).  A column missing stats in any row group is
     simply not recorded for that file (⇒ the file is never pruned —
     fail-open, the only safe direction for data skipping)."""
-    import os
-
     import pyarrow.parquet as pq
 
     names = []
@@ -316,13 +384,7 @@ def _read_pruned(spark: SparkSession, path: str, as_of: int | None,
     merge-on-read deletes and renames as ``read_snapshot``.  ``hint``
     names the ``write_snapshot`` option that records the per-file
     manifest.  Returns ``(df, files_scanned, files_total)``."""
-    import os
-
-    hist = snapshot_history(path)
-    if not hist:
-        raise ValueError(f"no snapshots at {path}")
-    snap_id = hist[-1] if as_of is None else as_of
-    m = _read_manifest(path, snap_id)
+    snap_id, m = _head(path, as_of)
     files_map = m.get("files") or {}
     dir_files: dict[str, list[str]] = {}
     n_keep = 0
@@ -352,10 +414,6 @@ def set_ref(path: str, name: str, snap_id: int) -> None:
     until one rename flips the pointer.  Refs follow the Iceberg
     branching model: tiny named heads into the SHARED snapshot log —
     branches share all data and manifests, so creating one is O(1)."""
-    import json
-    import os
-    import uuid
-
     if snap_id not in snapshot_history(path):
         raise ValueError(f"snapshot {snap_id} not committed at {path}")
     rdir = os.path.join(path, "refs")
@@ -368,9 +426,6 @@ def set_ref(path: str, name: str, snap_id: int) -> None:
 
 def get_ref(path: str, name: str) -> int | None:
     """Resolve a branch ref to its snapshot id (None if unset)."""
-    import json
-    import os
-
     p = os.path.join(path, "refs", f"{name}.json")
     if not os.path.exists(p):
         return None
@@ -382,8 +437,6 @@ def drop_ref(path: str, name: str) -> None:
     """Delete a branch ref (the audit-FAIL rollback of WAP: the staged
     snapshot stays in the log for debugging — expire_snapshots reclaims
     it — but no ref reader ever saw it)."""
-    import os
-
     p = os.path.join(path, "refs", f"{name}.json")
     if os.path.exists(p):
         os.remove(p)
@@ -417,9 +470,7 @@ def read_snapshot_point(spark: SparkSession, path: str, col: str,
 def table_check(path: str) -> str | None:
     """The CHECK constraint recorded by the newest snapshot (if any)."""
     hist = snapshot_history(path)
-    if not hist:
-        return None
-    return _read_manifest(path, hist[-1]).get("check")
+    return _read_manifest(path, hist[-1]).get("check") if hist else None
 
 
 def write_snapshot(df: DataFrame, path: str, mode: str = "append",
@@ -438,53 +489,44 @@ def write_snapshot(df: DataFrame, path: str, mode: str = "append",
     INHERIT the table's recorded constraint and re-validate.
 
     Data files land in an immutable per-snapshot directory
-    (``data/snap-<uuid>``); the snapshot is COMMITTED by hard-linking a
-    manifest JSON into ``manifests/<id>.json`` — link(2) fails with
-    EEXIST if another writer took the id, and the loser retries against
-    the newer parent (optimistic concurrency, the Iceberg commit
-    protocol in miniature).  ``append`` snapshots reference the
-    parent's data dirs + the new one; ``overwrite`` references only the
-    new one.  Returns the committed snapshot id (1-based)."""
-    import json
-    import os
-    import uuid
-
+    (``data/snap-<uuid>``) and the manifest commits through
+    ``_commit``.  ``append`` snapshots reference the parent's data dirs
+    + the new one; ``overwrite`` references only the new one.  Returns
+    the committed snapshot id (1-based)."""
     assert mode in ("append", "overwrite")
-    renames: dict = {}
-    if mode == "append":
-        hist0 = snapshot_history(path)
-        if hist0:
-            renames = _read_manifest(path, hist0[-1]).get("renames") or {}
-            # incoming frames use CURRENT names; files are written in
-            # DISK-name space so every snapshot's data stays uniform.
-            # ONE simultaneous projection (ADVICE r05 — the chained
-            # per-column form turned a temp-name swap, renames =
-            # {a: b, b: a}, into a silent no-op here and duplicate
-            # columns on the read side).  The full reverse mapping
-            # handles the swap atomically; the duplicate-target check
-            # keeps the old skip behavior for frames that (against
-            # the documented contract) already carry a disk name next
-            # to its current name.
-            rev = {cur: disk for disk, cur in renames.items()}
-            # per-column collision skip (r06 review): keep a current
-            # name untouched when its disk target already exists as
-            # ANOTHER column that is NOT itself being renamed away —
-            # the old per-column guard's semantics.  A swap's targets
-            # all belong to renamed columns, so it maps atomically.
-            targets = [
-                rev[c]
-                if c in rev and not (rev[c] in df.columns and rev[c] not in rev)
-                else c
-                for c in df.columns
-            ]
-            if targets != list(df.columns) and (
-                len(set(targets)) == len(targets)
-            ):
-                df = df.select(
-                    *[F.col(c).alias(t) for c, t in zip(df.columns, targets)]
-                )
-    if check is None and mode == "append":
-        check = table_check(path)  # inherit the table's constraint
+    hist0 = snapshot_history(path) if mode == "append" else []
+    head = _read_manifest(path, hist0[-1]) if hist0 else {}
+    renames = head.get("renames") or {}
+    if renames:
+        # incoming frames use CURRENT names; files are written in
+        # DISK-name space so every snapshot's data stays uniform.
+        # ONE simultaneous projection (the chained per-column form
+        # turned a temp-name swap, renames = {a: b, b: a}, into a
+        # silent no-op here and duplicate columns on the read side).
+        # The full reverse mapping handles the swap atomically; the
+        # duplicate-target check keeps the old skip behavior for
+        # frames that (against the documented contract) already
+        # carry a disk name next to its current name.
+        rev = {cur: disk for disk, cur in renames.items()}
+        # per-column collision skip: keep a current name untouched
+        # when its disk target already exists as ANOTHER column that
+        # is NOT itself being renamed away — the old per-column
+        # guard's semantics.  A swap's targets all belong to renamed
+        # columns, so it maps atomically.
+        targets = [
+            rev[c]
+            if c in rev and not (rev[c] in df.columns and rev[c] not in rev)
+            else c
+            for c in df.columns
+        ]
+        if targets != list(df.columns) and (
+            len(set(targets)) == len(targets)
+        ):
+            df = df.select(
+                *[F.col(c).alias(t) for c, t in zip(df.columns, targets)]
+            )
+    if check is None:
+        check = head.get("check")  # an append inherits the constraint
     if check is not None:
         n_bad = df.filter(f"NOT ({check})").count()
         if n_bad:
@@ -501,57 +543,37 @@ def write_snapshot(df: DataFrame, path: str, mode: str = "append",
         _file_stats(data_dir, stats_cols or [], bloom_cols)
         if (stats_cols or partition_by or bloom_cols) else None
     )
-    mdir = _manifest_dir(path)
-    os.makedirs(mdir, exist_ok=True)  # writes may create; reads never do
-    tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex[:12]}")
-    try:
-        while True:
-            hist = snapshot_history(path)
-            snap_id = (hist[-1] + 1) if hist else 1
-            dirs = [data_dir]
-            deletes: list = []
-            pos_deletes: list = []
-            schema_json = df.schema.jsonValue()
-            if mode == "append" and hist:
-                parent_m = _read_manifest(path, hist[-1])
-                dirs = parent_m["dirs"] + dirs
+
+    def build(_parent_id, parent: dict | None) -> dict:
+        man = {"mode": mode, "dirs": [data_dir], "files": {},
+               "deletes": [], "pos_deletes": [], "check": check,
+               "renames": None, "schema": df.schema.jsonValue()}
+        if mode == "append" and parent is not None:
+            man.update(
+                dirs=parent["dirs"] + [data_dir],
                 # merge-on-read tombstones ride appends: they still
                 # apply to the parent dirs they scoped (sequence
                 # semantics — the NEW dir is not in applies_to, so
                 # appended rows may re-insert a deleted key)
-                deletes = parent_m.get("deletes") or []
-                pos_deletes = parent_m.get("pos_deletes") or []
+                deletes=parent.get("deletes") or [],
+                pos_deletes=parent.get("pos_deletes") or [],
+                # a rename committed after this writer read the head
+                # stays: the new files are in disk-name space, which
+                # no rename changes
+                renames=parent.get("renames") or None,
                 # add-column evolution: appends commit the MERGED schema
                 # so every snapshot's manifest is self-describing (r05)
-                schema_json = _merge_schema(
-                    parent_m.get("schema"), df.schema
-                )
-            # zone maps ride the manifest: new dir's footer stats plus
-            # every parent dir's stats carried forward (append keeps
-            # old files prunable without re-reading their footers)
-            files_json: dict = {}
-            if mode == "append" and hist:
-                files_json.update(parent_m.get("files") or {})
-            if new_stats is not None:
-                files_json[data_dir] = new_stats
-            with open(tmp, "w") as f:
-                json.dump({"snapshot_id": snap_id,
-                           "parent": hist[-1] if hist else None,
-                           "mode": mode, "dirs": dirs,
-                           "files": files_json,
-                           "deletes": deletes,
-                           "pos_deletes": pos_deletes,
-                           "check": check,
-                           "renames": renames or None,
-                           "schema": schema_json}, f)
-            try:
-                os.link(tmp, os.path.join(mdir, f"{snap_id}.json"))
-                return snap_id
-            except FileExistsError:
-                continue  # lost the race — recompute against the new head
-    finally:
-        if os.path.exists(tmp):  # never leave a .tmp behind (review)
-            os.remove(tmp)
+                schema=_merge_schema(parent.get("schema"), df.schema),
+                # zone maps ride the manifest: new dir's footer stats plus
+                # every parent dir's stats carried forward (append keeps
+                # old files prunable without re-reading their footers)
+                files=dict(parent.get("files") or {}),
+            )
+        if new_stats is not None:
+            man["files"][data_dir] = new_stats
+        return man
+
+    return _commit(path, build)
 
 
 def read_snapshot_partitioned(spark: SparkSession, path: str, eq: dict,
@@ -566,7 +588,6 @@ def read_snapshot_partitioned(spark: SparkSession, path: str, eq: dict,
     schema apply exactly as in ``read_snapshot``.  Returns
     ``(df, files_scanned, files_total)``.
     """
-
     def keep(e: dict) -> bool:
         parts = e.get("parts") or {}
         return all(parts.get(k, str(v)) == str(v) for k, v in eq.items())
@@ -578,35 +599,22 @@ def read_snapshot_partitioned(spark: SparkSession, path: str, eq: dict,
     return df, n_scan, total
 
 
+def _scan(spark: SparkSession, manifest: dict, paths: list[str],
+          base: str | None = None) -> DataFrame:
+    """One parquet scan of ``paths`` under ``manifest``'s committed
+    schema (when it records one); ``base`` is the ``basePath`` that
+    lets Spark derive hive partition columns from leaf files."""
+    r = spark.read
+    if manifest.get("schema") is not None:
+        r = r.schema(StructType.fromJson(manifest["schema"]))
+    if base is not None:
+        r = r.option("basePath", base)
+    return r.parquet(*paths)
+
+
 def _read_manifest_df(spark: SparkSession, m: dict,
                       dir_files: dict[str, list[str]] | None = None
                       ) -> DataFrame:
-    """Materialize a manifest as a DataFrame, then surface RENAMED
-    columns under their current names (r05 wave 46): on-disk files
-    keep their original column names forever — rename_column is
-    metadata-only, exactly Iceberg's field-id indirection realized as
-    a name mapping — so the scan runs in disk-name space (schemas,
-    zone maps, delete keys all stay valid) and the rename is one
-    zero-cost projection at the end."""
-    df = _read_manifest_df_disk(spark, m, dir_files)
-    renames = m.get("renames") or {}
-    if renames:
-        # ONE simultaneous projection, not chained withColumnRenamed
-        # (ADVICE r05): a swap done through a temp name leaves
-        # renames = {a: b, b: a}, and the sequential chain's first
-        # rename creates a duplicate column the second then renames
-        # twice — the table read back with two identically-named
-        # columns.  A single select maps every disk name to its
-        # current name atomically.
-        df = df.select(
-            *[F.col(c).alias(renames.get(c, c)) for c in df.columns]
-        )
-    return df
-
-
-def _read_manifest_df_disk(spark: SparkSession, m: dict,
-                           dir_files: dict[str, list[str]] | None = None
-                           ) -> DataFrame:
     """Materialize a manifest as a DataFrame: read its data dirs under
     the committed schema and apply MERGE-ON-READ equality deletes with
     Iceberg-v2 sequence semantics — a delete commit suppresses keys
@@ -619,31 +627,25 @@ def _read_manifest_df_disk(spark: SparkSession, m: dict,
     list (the zone-map / Bloom / partition pruning paths); the files of
     a hive-partitioned dir are read with that dir as ``basePath``, so
     Spark still derives the partition columns from the kept leaf
-    files."""
-    from functools import reduce
+    files.
 
-    from pyspark.sql.types import StructType
-
-    schema = (StructType.fromJson(m["schema"])
-              if m.get("schema") is not None else None)
+    RENAMED columns then surface under their current names: on-disk
+    files keep their original column names forever — rename_column is
+    metadata-only, exactly Iceberg's field-id indirection realized as
+    a name mapping — so the scan runs in disk-name space (schemas,
+    zone maps, delete keys all stay valid) and the rename is one
+    zero-cost projection at the end."""
     files_map = m.get("files") or {}
-
-    def _scan(paths: list[str], base: str | None = None) -> DataFrame:
-        r = spark.read
-        if schema is not None:
-            r = r.schema(schema)
-        if base is not None:
-            r = r.option("basePath", base)
-        return r.parquet(*paths)
 
     def _read(dirs: list[str]) -> DataFrame:
         if dir_files is None:
-            return _scan(dirs)
+            return _scan(spark, m, dirs)
         hive = {d for d in dirs
                 if any(e.get("parts") for e in files_map.get(d, []))}
         flat = [f for d in dirs if d not in hive for f in dir_files[d]]
-        scans = [_scan(flat)] if flat else []
-        scans += [_scan(dir_files[d], base=d) for d in dirs if d in hive]
+        scans = [_scan(spark, m, flat)] if flat else []
+        scans += [_scan(spark, m, dir_files[d], base=d)
+                  for d in dirs if d in hive]
         return reduce(lambda a, b: a.unionByName(b), scans)
 
     deletes = m.get("deletes") or []
@@ -653,52 +655,64 @@ def _read_manifest_df_disk(spark: SparkSession, m: dict,
     if not dirs_all:
         # everything pruned (e.g. a bloom probe for an absent value):
         # an empty relation under the committed schema, not an error
-        if schema is None:
+        if m.get("schema") is None:
             raise ValueError("all files pruned and manifest has no schema")
-        return spark.createDataFrame([], schema)
-    if not deletes and not pos_deletes:
-        return _read(dirs_all)
-    groups: dict[tuple, list[str]] = {}
-    for d in dirs_all:
-        sig = tuple(
-            [("e", i) for i, e in enumerate(deletes)
-             if d in e["applies_to"]]
-            + [("p", j) for j, e in enumerate(pos_deletes)
-               if d in e["applies_to"]]
-        )
-        groups.setdefault(sig, []).append(d)
-    parts = []
-    for sig, dirs in sorted(groups.items()):
-        df = _read(dirs)
-        pos_idx = [j for kind, j in sig if kind == "p"]
-        if pos_idx:
-            # position deletes key on the PHYSICAL row address — the
-            # parquet source's hidden _metadata struct supplies it
-            # exactly (file_path, row_index), no content column is
-            # touched; the anti-join broadcasts (tombstone files are
-            # tiny by construction — that is the point of the format)
-            df = df.select(
-                F.col("_metadata.file_path").alias("_pd_file"),
-                F.col("_metadata.row_index").alias("_pd_pos"),
-                "*",
+        df = spark.createDataFrame([], StructType.fromJson(m["schema"]))
+    elif not deletes and not pos_deletes:
+        df = _read(dirs_all)
+    else:
+        groups: dict[tuple, list[str]] = {}
+        for d in dirs_all:
+            sig = tuple(
+                [("e", i) for i, e in enumerate(deletes)
+                 if d in e["applies_to"]]
+                + [("p", j) for j, e in enumerate(pos_deletes)
+                   if d in e["applies_to"]]
             )
-            for j in pos_idx:
-                e = pos_deletes[j]
-                tomb = spark.read.parquet(e["dir"]).select(
-                    F.col("file_path").alias("_pd_file"),
-                    F.col("pos").alias("_pd_pos"),
+            groups.setdefault(sig, []).append(d)
+        parts = []
+        for sig, dirs in sorted(groups.items()):
+            part = _read(dirs)
+            pos_idx = [j for kind, j in sig if kind == "p"]
+            if pos_idx:
+                # position deletes key on the PHYSICAL row address — the
+                # parquet source's hidden _metadata struct supplies it
+                # exactly (file_path, row_index), no content column is
+                # touched; the anti-join broadcasts (tombstone files are
+                # tiny by construction — that is the point of the format)
+                part = part.select(
+                    F.col("_metadata.file_path").alias("_pd_file"),
+                    F.col("_metadata.row_index").alias("_pd_pos"),
+                    "*",
                 )
-                df = df.join(F.broadcast(tomb), ["_pd_file", "_pd_pos"],
-                             "left_anti")
-            df = df.drop("_pd_file", "_pd_pos")
-        for kind, i in sig:
-            if kind != "e":
-                continue
-            e = deletes[i]
-            ks = spark.read.parquet(e["dir"]).select(e["key"]).distinct()
-            df = df.join(F.broadcast(ks), e["key"], "left_anti")
-        parts.append(df)
-    return reduce(lambda a, b: a.unionByName(b), parts)
+                for j in pos_idx:
+                    tomb = spark.read.parquet(pos_deletes[j]["dir"]).select(
+                        F.col("file_path").alias("_pd_file"),
+                        F.col("pos").alias("_pd_pos"),
+                    )
+                    part = part.join(F.broadcast(tomb),
+                                     ["_pd_file", "_pd_pos"], "left_anti")
+                part = part.drop("_pd_file", "_pd_pos")
+            for kind, i in sig:
+                if kind == "e":
+                    e = deletes[i]
+                    ks = spark.read.parquet(e["dir"]).select(e["key"]).distinct()
+                    part = part.join(F.broadcast(ks), e["key"], "left_anti")
+            parts.append(part)
+        df = reduce(lambda a, b: a.unionByName(b), parts)
+    renames = m.get("renames") or {}
+    if renames:
+        # ONE simultaneous projection, not chained withColumnRenamed:
+        # a swap done through a temp name leaves
+        # renames = {a: b, b: a}, and the sequential chain's first
+        # rename creates a duplicate column the second then renames
+        # twice — the table read back with two identically-named
+        # columns.  A single select maps every disk name to its
+        # current name atomically.
+        df = df.select(
+            *[F.col(c).alias(renames.get(c, c)) for c in df.columns]
+        )
+    return df
 
 
 def delete_from_snapshot(spark: SparkSession, path: str,
@@ -712,42 +726,16 @@ def delete_from_snapshot(spark: SparkSession, path: str,
     is O(|keys|) regardless of table size — the trickle-delete write
     path at 100 TB, where copy-on-write would rewrite petabytes —
     and ``compact_snapshot`` later materializes + clears the
-    tombstones.  Same hard-link optimistic-concurrency commit."""
-    import json
-    import os
-    import uuid
-
+    tombstones.  Commits through ``_commit``."""
+    _head(path)  # an empty table raises before any delete file lands
     ddir = os.path.join(path, "deletes", f"snap-{uuid.uuid4().hex[:12]}")
     keys.select(key).distinct().coalesce(1).write.mode("error").parquet(ddir)
-    mdir = _manifest_dir(path)
-    tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex[:12]}")
-    try:
-        while True:
-            hist = snapshot_history(path)
-            if not hist:
-                raise ValueError(f"no snapshots committed at {path!r}")
-            snap_id = hist[-1] + 1
-            parent = _read_manifest(path, hist[-1])
-            man = dict(parent)
-            man.update({
-                "snapshot_id": snap_id,
-                "parent": hist[-1],
-                "mode": "delete",
-                "deletes": (parent.get("deletes") or []) + [
-                    {"dir": ddir, "key": key,
-                     "applies_to": list(parent["dirs"])}
-                ],
-            })
-            with open(tmp, "w") as f:
-                json.dump(man, f)
-            try:
-                os.link(tmp, os.path.join(mdir, f"{snap_id}.json"))
-                return snap_id
-            except FileExistsError:
-                continue  # lost the race — recompute against the new head
-    finally:
-        if os.path.exists(tmp):
-            os.remove(tmp)
+    return _commit(path, lambda _pid, parent: {
+        **parent, "mode": "delete",
+        "deletes": (parent.get("deletes") or []) + [
+            {"dir": ddir, "key": key, "applies_to": list(parent["dirs"])}
+        ],
+    })
 
 
 def delete_positions_where(spark: SparkSession, path: str,
@@ -764,14 +752,7 @@ def delete_positions_where(spark: SparkSession, path: str,
     Sequence semantics match equality deletes: applies_to pins the
     dirs that exist NOW, so later appends may re-insert equal-valued
     rows.  Returns (snapshot_id, n_positions)."""
-    import json
-    import os
-    import uuid
-
-    hist = snapshot_history(path)
-    if not hist:
-        raise ValueError(f"no snapshots committed at {path!r}")
-    head = _read_manifest(path, hist[-1])
+    _, head = _head(path)
     scan = spark.read.parquet(*head["dirs"]).select(
         F.col("_metadata.file_path").alias("file_path"),
         F.col("_metadata.row_index").alias("pos"),
@@ -781,32 +762,13 @@ def delete_positions_where(spark: SparkSession, path: str,
     ddir = os.path.join(path, "deletes", f"pos-{uuid.uuid4().hex[:12]}")
     pos.coalesce(1).write.mode("error").parquet(ddir)
     n_pos = spark.read.parquet(ddir).count()
-    mdir = _manifest_dir(path)
-    tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex[:12]}")
-    try:
-        while True:
-            hist = snapshot_history(path)
-            snap_id = hist[-1] + 1
-            parent = _read_manifest(path, hist[-1])
-            man = dict(parent)
-            man.update({
-                "snapshot_id": snap_id,
-                "parent": hist[-1],
-                "mode": "delete",
-                "pos_deletes": (parent.get("pos_deletes") or []) + [
-                    {"dir": ddir, "applies_to": list(parent["dirs"])}
-                ],
-            })
-            with open(tmp, "w") as f:
-                json.dump(man, f)
-            try:
-                os.link(tmp, os.path.join(mdir, f"{snap_id}.json"))
-                return snap_id, int(n_pos)
-            except FileExistsError:
-                continue  # lost the race — recompute against the new head
-    finally:
-        if os.path.exists(tmp):
-            os.remove(tmp)
+    snap_id = _commit(path, lambda _pid, parent: {
+        **parent, "mode": "delete",
+        "pos_deletes": (parent.get("pos_deletes") or []) + [
+            {"dir": ddir, "applies_to": list(parent["dirs"])}
+        ],
+    })
+    return snap_id, int(n_pos)
 
 
 def delete_where_cow(spark: SparkSession, path: str,
@@ -829,35 +791,21 @@ def delete_where_cow(spark: SparkSession, path: str,
     Victim location is ONE planning pass over the head keyed on the
     parquet ``_metadata.file_path`` (the same physical address the
     position-delete path uses); at cluster scale this pass is itself
-    prunable by the manifest's zone maps.  Returns
+    prunable by the manifest's zone maps.  The commit carries the
+    PARENT's dirs minus the rewritten ones, so a concurrent append
+    survives; it raises a conflict if a rewritten dir has left the
+    parent or the parent gained tombstones (either would resurrect
+    deleted rows).  Returns
     ``(snapshot_id, n_dirs_rewritten, n_dirs_carried)``."""
-    import json
-    import os
-    import uuid
-
-    from pyspark.sql.types import StructType
-
-    hist = snapshot_history(path)
-    if not hist:
-        raise ValueError(f"no snapshots committed at {path!r}")
-    head = _read_manifest(path, hist[-1])
+    head_id, head = _head(path)
     if head.get("deletes") or head.get("pos_deletes"):
         raise ValueError(
             "COW delete requires a compacted head — pending "
             "merge-on-read tombstones (run compact_snapshot first)"
         )
-    schema = (StructType.fromJson(head["schema"])
-              if head.get("schema") is not None else None)
-
-    def _scan(dirs: list[str]) -> DataFrame:
-        r = spark.read
-        if schema is not None:
-            r = r.schema(schema)
-        return r.parquet(*dirs)
-
     hit_files = [
         row[0]
-        for row in _scan(head["dirs"])
+        for row in _scan(spark, head, head["dirs"])
         .select(F.col("_metadata.file_path").alias("_f"), "*")
         .filter(condition)
         .select("_f")
@@ -871,46 +819,36 @@ def delete_where_cow(spark: SparkSession, path: str,
 
     affected = [d for d in head["dirs"]
                 if any(_owns(d, f) for f in hit_files)]
-    carried = [d for d in head["dirs"] if d not in affected]
     if not affected:  # nothing matched: the head already IS the result
-        return hist[-1], 0, len(carried)
+        return head_id, 0, len(head["dirs"])
     new_dir = os.path.join(path, "data", f"snap-{uuid.uuid4().hex[:12]}")
-    _scan(affected).filter(f"NOT ({condition})").write.mode(
+    _scan(spark, head, affected).filter(f"NOT ({condition})").write.mode(
         "error"
     ).parquet(new_dir)
-    mdir = _manifest_dir(path)
-    tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex[:12]}")
-    try:
-        while True:
-            hist = snapshot_history(path)
-            snap_id = hist[-1] + 1
-            parent = _read_manifest(path, hist[-1])
-            files_json = {
+    carried: list[str] = []
+
+    def build(_parent_id, parent: dict) -> dict:
+        nonlocal carried
+        if (parent.get("deletes") or parent.get("pos_deletes")
+                or not set(affected) <= set(parent["dirs"])):
+            raise ValueError(
+                "COW delete conflict: a concurrent commit rewrote a "
+                "victim dir or added merge-on-read tombstones"
+            )
+        carried = [d for d in parent["dirs"] if d not in affected]
+        return {
+            **parent, "mode": "cowdelete", "dirs": carried + [new_dir],
+            "files": {  # rewritten dirs' stats are stale
                 d: s for d, s in (parent.get("files") or {}).items()
-                if d in carried  # rewritten dirs' stats are stale
-            }
-            man = dict(parent)
-            man.update({
-                "snapshot_id": snap_id,
-                "parent": hist[-1],
-                "mode": "cowdelete",
-                "dirs": carried + [new_dir],
-                "files": files_json,
-            })
-            with open(tmp, "w") as f:
-                json.dump(man, f)
-            try:
-                os.link(tmp, os.path.join(mdir, f"{snap_id}.json"))
-                return snap_id, len(affected), len(carried)
-            except FileExistsError:
-                continue  # lost the race — recompute against the new head
-    finally:
-        if os.path.exists(tmp):
-            os.remove(tmp)
+                if d in carried
+            },
+        }
+
+    snap_id = _commit(path, build)
+    return snap_id, len(affected), len(carried)
 
 
 def _walk_parquet(d: str) -> list[str]:
-    import os
 
     out = []
     for root, _dirs, files in os.walk(d):
@@ -927,15 +865,9 @@ def snapshot_files_df(spark: SparkSession, path: str,
     design; no executor scan of any data page).  This is the surface
     maintenance jobs plan against (compaction targets, small-file
     counts, row accounting)."""
-    import os
-
     import pyarrow.parquet as pq
 
-    hist = snapshot_history(path)
-    if not hist:
-        raise ValueError(f"no snapshots committed at {path!r}")
-    snap_id = hist[-1] if as_of is None else as_of
-    m = _read_manifest(path, snap_id)
+    _, m = _head(path, as_of)
     rows = []
     for pos, d in enumerate(m["dirs"]):
         for f in _walk_parquet(d):
@@ -981,23 +913,15 @@ def read_snapshot(spark: SparkSession, path: str,
     ``schema_as_of`` (r05): read ``as_of``'s DATA under a different
     snapshot's committed schema — Iceberg's 'old snapshot, current
     schema' read; columns added after ``as_of`` come back NULL."""
-    hist = snapshot_history(path)
-    if not hist:
-        raise ValueError(f"no snapshots committed at {path!r}")
     if ref is not None:
         if as_of is not None:
             raise ValueError("pass as_of or ref, not both")
         as_of = get_ref(path, ref)
         if as_of is None:
             raise ValueError(f"no ref {ref!r} at {path}")
-    snap_id = hist[-1] if as_of is None else as_of
-    if snap_id not in hist:
-        raise ValueError(f"snapshot {snap_id} not in history {hist}")
-    m = _read_manifest(path, snap_id)
+    _, m = _head(path, as_of)
     if schema_as_of is not None:
-        if schema_as_of not in hist:
-            raise ValueError(f"snapshot {schema_as_of} not in history {hist}")
-        m["schema"] = _read_manifest(path, schema_as_of).get("schema")
+        m["schema"] = _head(path, schema_as_of)[1].get("schema")
     # the manifest's (evolution-merged) schema is applied to the scan:
     # files from pre-evolution snapshots simply lack the added columns
     # and the parquet reader fills them with NULL — no mergeSchema
@@ -1038,46 +962,23 @@ def rename_column(path: str, old: str, new: str) -> int:
     disk-name -> current-name mapping.  Readers of PRE-rename snapshots
     still see the old name (each manifest is self-describing); appends
     after the rename may use the new name — write_snapshot maps them
-    back to disk-name space.  Same hard-link optimistic commit."""
-    import json
-    import os
-    import uuid
+    back to disk-name space.  Commits through ``_commit``."""
+    _head(path)
 
-    hist = snapshot_history(path)
-    if not hist:
-        raise ValueError(f"no snapshots committed at {path!r}")
-    mdir = _manifest_dir(path)
-    tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex[:12]}")
-    try:
-        while True:
-            hist = snapshot_history(path)
-            parent = _read_manifest(path, hist[-1])
-            ren = dict(parent.get("renames") or {})
-            disk_fields = [f["name"] for f in parent["schema"]["fields"]]
-            cur_of = {d: ren.get(d, d) for d in disk_fields}
-            if old not in cur_of.values():
-                raise ValueError(f"no column {old!r} (have "
-                                 f"{sorted(cur_of.values())})")
-            if new in cur_of.values():
-                raise ValueError(f"column {new!r} already exists")
-            disk = next(d for d, c in cur_of.items() if c == old)
-            ren[disk] = new
-            snap_id = hist[-1] + 1
-            m = dict(parent)
-            m["snapshot_id"] = snap_id
-            m["parent"] = hist[-1]
-            m["mode"] = "rename"
-            m["renames"] = ren
-            with open(tmp, "w") as f:
-                json.dump(m, f)
-            try:
-                os.link(tmp, os.path.join(mdir, f"{snap_id}.json"))
-                return snap_id
-            except FileExistsError:
-                continue
-    finally:
-        if os.path.exists(tmp):
-            os.remove(tmp)
+    def build(_parent_id, parent: dict) -> dict:
+        ren = dict(parent.get("renames") or {})
+        disk_fields = [f["name"] for f in parent["schema"]["fields"]]
+        cur_of = {d: ren.get(d, d) for d in disk_fields}
+        if old not in cur_of.values():
+            raise ValueError(f"no column {old!r} (have "
+                             f"{sorted(cur_of.values())})")
+        if new in cur_of.values():
+            raise ValueError(f"column {new!r} already exists")
+        disk = next(d for d, c in cur_of.items() if c == old)
+        ren[disk] = new
+        return {**parent, "mode": "rename", "renames": ren}
+
+    return _commit(path, build)
 
 
 def expire_snapshots(path: str, keep_last: int = 1) -> dict:
@@ -1087,9 +988,6 @@ def expire_snapshots(path: str, keep_last: int = 1) -> dict:
     cleanup pair).  Readers of surviving snapshots are unaffected —
     their manifests still pin every directory they need; expired as-of
     reads fail loudly ('not in history').  Returns counts for audit."""
-    import os
-    import shutil
-
     hist = snapshot_history(path)
     keep = hist[-keep_last:] if keep_last > 0 else []
     drop = [s for s in hist if s not in keep]
@@ -1122,48 +1020,19 @@ def rollback_snapshot(path: str, to_snap: int) -> int:
     the target snapshot's exact dirs/deletes/schema — the bad commits
     stay in history for audit (as-of reads still see them) but the
     head now serves the old content.  A metadata-only O(1) commit:
-    no data moves, same hard-link optimistic concurrency."""
-    import json
-    import os
-    import uuid
-
-    hist = snapshot_history(path)
-    if to_snap not in hist:
-        raise ValueError(f"snapshot {to_snap} not in history {hist}")
-    target = _read_manifest(path, to_snap)
-    mdir = _manifest_dir(path)
-    tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex[:12]}")
-    try:
-        while True:
-            hist = snapshot_history(path)
-            snap_id = hist[-1] + 1
-            man = dict(target)
-            man.update({"snapshot_id": snap_id, "parent": hist[-1],
-                        "mode": "rollback", "rolled_back_to": to_snap})
-            with open(tmp, "w") as f:
-                json.dump(man, f)
-            try:
-                os.link(tmp, os.path.join(mdir, f"{snap_id}.json"))
-                return snap_id
-            except FileExistsError:
-                continue  # lost the race — recompute against the new head
-    finally:
-        if os.path.exists(tmp):
-            os.remove(tmp)
+    no data moves; commits through ``_commit``."""
+    _, target = _head(path, to_snap)
+    return _commit(path, lambda _pid, _parent: {
+        **target, "mode": "rollback", "rolled_back_to": to_snap,
+    })
 
 
 def count_data_files(path: str, snap_id: int) -> int:
     """Number of parquet data files referenced by a snapshot's manifest
     — the metric compaction improves (driver-side listing of the
-    manifest's dirs only; never a full-table scan)."""
-    import os
-
-    m = _read_manifest(path, snap_id)
-    n = 0
-    for d in m["dirs"]:
-        n += sum(1 for f in os.listdir(d)
-                 if f.endswith(".parquet") and not f.startswith("."))
-    return n
+    manifest's dirs only, hive-partitioned ones included; never a
+    full-table scan)."""
+    return sum(len(_walk_parquet(d)) for d in _head(path, snap_id)[1]["dirs"])
 
 
 def compact_snapshot(spark: SparkSession, path: str,

@@ -200,7 +200,8 @@ def test_snapshot_commits_and_time_travel(spark, tmp_path):
     import pandas as pd
     import pytest as _pytest
 
-    from sdg_engine.storage import (read_snapshot, snapshot_history,
+    from sdg_engine.storage import (read_snapshot, read_snapshot_pruned,
+                                    snapshot_files_df, snapshot_history,
                                     write_snapshot)
 
     tbl = str(tmp_path / "snap_tbl")
@@ -218,6 +219,11 @@ def test_snapshot_commits_and_time_travel(spark, tmp_path):
     assert sorted(r.k for r in read_snapshot(spark, tbl, as_of=2).collect()) == [1, 2, 3]
     with _pytest.raises(ValueError, match="not in history"):
         read_snapshot(spark, tbl, as_of=99)
+    # the pruned and metadata-table readers resolve as_of the same way
+    with _pytest.raises(ValueError, match="not in history"):
+        read_snapshot_pruned(spark, tbl, "k", 0, 9, as_of=99)
+    with _pytest.raises(ValueError, match="not in history"):
+        snapshot_files_df(spark, tbl, as_of=99)
     # commit-race: inject a CONFLICTING manifest between the writer's
     # snapshot_history() read and its os.link commit (r04 review: a
     # pre-written manifest was visible to history already, so the
