@@ -751,7 +751,9 @@ def delete_positions_where(spark: SparkSession, path: str,
     engines emit after a scan has already located the victims.
     Sequence semantics match equality deletes: applies_to pins the
     dirs that exist NOW, so later appends may re-insert equal-valued
-    rows.  Returns (snapshot_id, n_positions)."""
+    rows.  The commit raises a conflict if a scanned dir has left the
+    parent (a concurrent rewrite moved the victims to files the
+    tombstones do not address).  Returns (snapshot_id, n_positions)."""
     _, head = _head(path)
     scan = spark.read.parquet(*head["dirs"]).select(
         F.col("_metadata.file_path").alias("file_path"),
@@ -762,13 +764,21 @@ def delete_positions_where(spark: SparkSession, path: str,
     ddir = os.path.join(path, "deletes", f"pos-{uuid.uuid4().hex[:12]}")
     pos.coalesce(1).write.mode("error").parquet(ddir)
     n_pos = spark.read.parquet(ddir).count()
-    snap_id = _commit(path, lambda _pid, parent: {
-        **parent, "mode": "delete",
-        "pos_deletes": (parent.get("pos_deletes") or []) + [
-            {"dir": ddir, "applies_to": list(parent["dirs"])}
-        ],
-    })
-    return snap_id, int(n_pos)
+
+    def build(_parent_id, parent: dict) -> dict:
+        if not set(head["dirs"]) <= set(parent["dirs"]):
+            raise ValueError(
+                "position delete conflict: a concurrent commit "
+                "rewrote a scanned dir"
+            )
+        return {
+            **parent, "mode": "delete",
+            "pos_deletes": (parent.get("pos_deletes") or []) + [
+                {"dir": ddir, "applies_to": list(parent["dirs"])}
+            ],
+        }
+
+    return _commit(path, build), int(n_pos)
 
 
 def delete_where_cow(spark: SparkSession, path: str,

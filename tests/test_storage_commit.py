@@ -1,10 +1,11 @@
-"""Snapshot-table commits under a racing writer.
+"""Snapshot-table commits under racing writers.
 
-Each test injects a competing commit between a committer's head read
-and its manifest link (a patched ``os.link`` that runs the competitor
-once, on the first link), so the committer loses its snapshot id and
-rebuilds against the new head.  The rebuilt manifest must keep what
-the competitor committed."""
+The race tests inject a competing commit between a committer's head
+read and its manifest link (a patched ``os.link`` that runs the
+competitor once, on the first link), so the committer loses its
+snapshot id and rebuilds against the new head.  The rebuilt manifest
+must keep what the competitor committed, or raise a conflict where
+keeping it would resurrect deleted rows."""
 
 import os
 
@@ -72,6 +73,27 @@ def test_cow_delete_conflicts_with_concurrent_tombstone(spark, tmp_path,
     assert fired["n"] == 1
     assert snapshot_history(tbl) == [1, 2]  # only the tombstone committed
     assert _ks(spark, tbl) == [1, 3]
+
+
+def test_position_delete_conflicts_with_concurrent_rewrite(spark, tmp_path,
+                                                          monkeypatch):
+    """A COW delete that rewrites the dir holding a position delete's
+    victim, inside that delete's window, makes the position commit
+    raise: its tombstones address files no longer in the table, so
+    committing them would resurrect the victim."""
+    from sdg_engine.storage import (delete_positions_where, delete_where_cow,
+                                    snapshot_history, write_snapshot)
+
+    tbl = str(tmp_path / "pos_cow")
+    write_snapshot(spark.createDataFrame([(1,), (2,), (3,)], "k int"), tbl)
+    fired = _racing_link(monkeypatch,
+                         lambda: delete_where_cow(spark, tbl, "k = 1"))
+    with pytest.raises(ValueError, match="conflict"):
+        delete_positions_where(spark, tbl, "k = 2")
+    monkeypatch.undo()
+    assert fired["n"] == 1
+    assert snapshot_history(tbl) == [1, 2]  # only the COW rewrite committed
+    assert _ks(spark, tbl) == [2, 3]
 
 
 def test_append_keeps_concurrent_rename(spark, tmp_path, monkeypatch):
