@@ -103,12 +103,12 @@ def unpack(cell_id: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return level, ix, iy
 
 
-def parent(cell_id: np.ndarray, steps: int = 1) -> np.ndarray:
-    """Ancestor ``steps`` levels up (quadtree prefix truncation)."""
+def parent(cell_id: np.ndarray) -> np.ndarray:
+    """The parent cell (quadtree prefix truncation by one level)."""
     cell_id = np.asarray(cell_id, dtype=np.int64)
     level = cell_id >> np.int64(_LEVEL_SHIFT)
     code = cell_id & _CODE_MASK
-    return ((level - steps) << np.int64(_LEVEL_SHIFT)) | (code >> np.int64(2 * steps))
+    return ((level - 1) << np.int64(_LEVEL_SHIFT)) | (code >> np.int64(2))
 
 
 def children(cell_id: np.ndarray) -> np.ndarray:

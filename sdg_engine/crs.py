@@ -51,11 +51,15 @@ def _tm_meridian_arc(lat: np.ndarray) -> np.ndarray:
     )
 
 
-def tmerc_forward(lon, lat, lon0: float, k0: float = 0.9996,
-                  false_e: float = 500_000.0, false_n: float = 0.0):
-    """(deg, deg) → (easting, northing) for a Transverse Mercator zone
-    centred on ``lon0`` (UTM: k0=0.9996, FE=500 km; FN=10,000 km on the
-    southern hemisphere — caller's choice)."""
+# UTM scale factor and false easting; the false northing is 0 (the
+# northern-hemisphere convention of the engine's 0..10° world patch).
+UTM_K0 = 0.9996
+UTM_FALSE_E = 500_000.0
+
+
+def tmerc_forward(lon, lat, lon0: float):
+    """(deg, deg) → (easting, northing) for the UTM Transverse Mercator
+    zone centred on ``lon0`` (k0=0.9996, FE=500 km, FN=0)."""
     lon = np.radians(_asarr(lon))
     lat = np.radians(_asarr(lat))
     e2 = WGS84_E2
@@ -67,12 +71,12 @@ def tmerc_forward(lon, lat, lon0: float, k0: float = 0.9996,
     c = ep2 * cos_lat * cos_lat
     a_ = (lon - np.radians(lon0)) * cos_lat
     m = _tm_meridian_arc(lat)
-    easting = false_e + k0 * n * (
+    easting = UTM_FALSE_E + UTM_K0 * n * (
         a_
         + (1 - t + c) * a_**3 / 6
         + (5 - 18 * t + t * t + 72 * c - 58 * ep2) * a_**5 / 120
     )
-    northing = false_n + k0 * (
+    northing = UTM_K0 * (
         m
         + n * np.tan(lat) * (
             a_**2 / 2
@@ -83,15 +87,14 @@ def tmerc_forward(lon, lat, lon0: float, k0: float = 0.9996,
     return easting, northing
 
 
-def tmerc_inverse(easting, northing, lon0: float, k0: float = 0.9996,
-                  false_e: float = 500_000.0, false_n: float = 0.0):
-    """Inverse Transverse Mercator (Snyder eqs. 8-18..8-25)."""
-    x = _asarr(easting) - false_e
-    y = _asarr(northing) - false_n
+def tmerc_inverse(easting, northing, lon0: float):
+    """Inverse UTM Transverse Mercator (Snyder eqs. 8-18..8-25)."""
+    x = _asarr(easting) - UTM_FALSE_E
+    y = _asarr(northing)
     e2 = WGS84_E2
     ep2 = e2 / (1 - e2)
     e1 = (1 - np.sqrt(1 - e2)) / (1 + np.sqrt(1 - e2))
-    m = y / k0
+    m = y / UTM_K0
     mu = m / (WGS84_A * (1 - e2 / 4 - 3 * e2 * e2 / 64 - 5 * e2**3 / 256))
     lat1 = (
         mu
@@ -106,7 +109,7 @@ def tmerc_inverse(easting, northing, lon0: float, k0: float = 0.9996,
     t1 = np.tan(lat1) ** 2
     n1 = WGS84_A / np.sqrt(1 - e2 * sin1 * sin1)
     r1 = WGS84_A * (1 - e2) / (1 - e2 * sin1 * sin1) ** 1.5
-    d = x / (n1 * k0)
+    d = x / (n1 * UTM_K0)
     lat = lat1 - (n1 * np.tan(lat1) / r1) * (
         d * d / 2
         - (5 + 3 * t1 + 10 * c1 - 4 * c1 * c1 - 9 * ep2) * d**4 / 24
@@ -257,9 +260,8 @@ def transform(src: str, dst: str, x, y):
     return _from_lonlat(dst, lon, lat)
 
 
-def with_transformed(df, src: str, dst: str, x_col: str, y_col: str,
-                     out_x: str = "tx", out_y: str = "ty"):
-    """DataFrame operator: append (out_x, out_y) = transform(src→dst).
+def with_transformed(df, src: str, dst: str, x_col: str, y_col: str):
+    """DataFrame operator: append (tx, ty) = transform(src→dst).
 
     Arrow-vectorized pandas UDF (transcendentals → no SQL codegen path;
     one batch-at-a-time numpy call, no per-row Python)."""
@@ -275,8 +277,8 @@ def with_transformed(df, src: str, dst: str, x_col: str, y_col: str,
 
     return (
         df.withColumn("_t", _tf(F.col(x_col), F.col(y_col)))
-        .withColumn(out_x, F.col("_t.x"))
-        .withColumn(out_y, F.col("_t.y"))
+        .withColumn("tx", F.col("_t.x"))
+        .withColumn("ty", F.col("_t.y"))
         .drop("_t")
     )
 

@@ -111,12 +111,12 @@ def make_image_pixels(i: int, lon: float, lat: float, w: int, h: int) -> np.ndar
     return img
 
 
-def images_pdf(sf: float, with_lossy: bool = True):
+def images_pdf(sf: float):
     """pandas.DataFrame of the images table at scale ``sf``."""
     import pandas as pd
 
     n, n_roads = _sizes(sf)
-    fmts = FMTS + (["qnt"] if with_lossy else [])
+    fmts = FMTS + ["qnt"]
     recs = []
     size_mix = [64] if sf <= 0.001 else [32, 64, 128]
     for i in range(n):

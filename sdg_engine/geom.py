@@ -241,13 +241,13 @@ MERC_Y_SQL = (
 )
 
 
-def with_webmercator(df, lon: str = "lon", lat: str = "lat",
-                     x: str = "merc_x", y: str = "merc_y"):
-    """JVM-side forward transform as generated SQL (codegen; no UDF)."""
+def with_webmercator(df):
+    """JVM-side forward transform as generated SQL (codegen; no UDF):
+    (lon, lat) → (merc_x, merc_y)."""
     from pyspark.sql import functions as F
 
-    return df.withColumn(x, F.expr(MERC_X_SQL.format(lon=lon))).withColumn(
-        y, F.expr(MERC_Y_SQL.format(lat=lat))
+    return df.withColumn("merc_x", F.expr(MERC_X_SQL.format(lon="lon"))).withColumn(
+        "merc_y", F.expr(MERC_Y_SQL.format(lat="lat"))
     )
 
 

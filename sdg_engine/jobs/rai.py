@@ -60,7 +60,6 @@ def load_inputs(spark: SparkSession, sf: float):
 
 def rai_summaries(
     spark: SparkSession, images: DataFrame, roads: DataFrame,
-    cutoff_m: float = CUTOFF_M,
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (per_image, per_country) summary DataFrames.
 
@@ -88,7 +87,7 @@ def rai_summaries(
         geo.select("image_id", "lon", "lat", "bytes", "fmt",
                    "w", "h", "fp_xmin", "fp_ymin", "fp_xmax", "fp_ymax"),
         segs,
-        cutoff_m=cutoff_m,
+        cutoff_m=CUTOFF_M,
     )
     per_image = tiles.join(
         cc.select("image_id", "country_code"), "image_id", "inner"

@@ -50,7 +50,6 @@ def run_bucketed(
     out_dir: str,
     cell_col: str = "cell_id",
     n_buckets: int = 8,
-    snapshot_id: str = "local-parquet",
     fail_at_bucket: int | None = None,
 ) -> list[int]:
     """Write ``df`` bucketed by ``pmod(hash(cell_col))`` with lineage.
@@ -118,7 +117,7 @@ def run_bucketed(
     recs = [
         (
             b,
-            snapshot_id,
+            "local-parquet",
             stats[b].cell_min if b in stats else None,
             stats[b].cell_max if b in stats else None,
             stats[b].n_rows if b in stats else 0,

@@ -121,7 +121,7 @@ def encode_value(v) -> bytes:
     return _len_field(1, b)
 
 
-def encode_layer(name: str, features: list[dict], extent: int = EXTENT) -> bytes:
+def encode_layer(name: str, features: list[dict]) -> bytes:
     """features: [{id:int, type:int, lines:[(n,2) arrays], tags:{k: v}}]"""
     keys: list[str] = []
     values: list = []
@@ -152,13 +152,13 @@ def encode_layer(name: str, features: list[dict], extent: int = EXTENT) -> bytes
         out += _len_field(3, k.encode("utf-8"))
     for v in values:
         out += _len_field(4, encode_value(v))
-    out += _field(5, 0) + _varint(extent)
+    out += _field(5, 0) + _varint(EXTENT)
     out += _field(15, 0) + _varint(2)  # version 2
     return bytes(out)
 
 
-def encode_tile(layers: dict[str, list[dict]], extent: int = EXTENT) -> bytes:
-    return b"".join(_len_field(3, encode_layer(n, f, extent)) for n, f in layers.items())
+def encode_tile(layers: dict[str, list[dict]]) -> bytes:
+    return b"".join(_len_field(3, encode_layer(n, f)) for n, f in layers.items())
 
 
 # --- minimal decoder (tests/round-trip only) --------------------------------
@@ -282,11 +282,10 @@ def decode_tile(buf: bytes) -> dict:
 _TILE_SCHEMA = "z int, tx int, ty int, mvt binary, n_features int"
 
 
-def write_road_mvt(
-    segs: DataFrame, out_dir: str, level: int = 6, layer: str = "roads"
-) -> DataFrame:
+def write_road_mvt(segs: DataFrame, out_dir: str, level: int = 6) -> DataFrame:
     """C4 tile cut + S7 sink: clip road segments to tile rects, quantize
-    to tile-local EXTENT coords, encode one MVT blob per tile, write
+    to tile-local EXTENT coords, encode one ``roads``-layer MVT blob per
+    tile, write
     (z, tx, ty, mvt) parquet.  Returns the tile DataFrame.
 
     Execution shape: segment→tile cover (JVM cell explode) then ONE
@@ -361,7 +360,7 @@ def write_road_mvt(
                 "lines": [[[qax_l[k], qay_l[k]], [qbx_l[k], qby_l[k]]]],
                 "tags": {"road_id": rid_l[k]},
             })
-        blob = encode_tile({layer: feats})
+        blob = encode_tile({"roads": feats})
         return pd.DataFrame(
             [(level, tx, ty, blob, len(feats))],
             columns=["z", "tx", "ty", "mvt", "n_features"],
@@ -377,7 +376,6 @@ def write_road_mvt(
 
 def write_road_mvt_pyramid(
     segs: DataFrame, out_dir: str, z_min: int = 3, z_max: int = 5,
-    layer: str = "roads",
 ) -> DataFrame:
     """S7b (r05): MULTI-ZOOM vector-tile pyramid — the reference's
     visualization output shape (one tileset per zoom z_min..z_max,
@@ -404,8 +402,7 @@ def write_road_mvt_pyramid(
     try:
         for z in range(z_min, z_max + 1):
             parts.append(
-                write_road_mvt(segs, os.path.join(out_dir, f"zl={z}"),
-                               level=z, layer=layer)
+                write_road_mvt(segs, os.path.join(out_dir, f"zl={z}"), level=z)
             )
     finally:
         segs.unpersist()

@@ -232,13 +232,13 @@ def audio_spectral_features(audio: DataFrame) -> DataFrame:
     )
 
 
-def video_scene_cuts(video: DataFrame, threshold: float = 3.0) -> DataFrame:
+def video_scene_cuts(video: DataFrame) -> DataFrame:
     """Scene-cut detection (r04): per clip, frames whose mean-luma jump
-    from the previous frame exceeds ``threshold`` gray levels — the
+    from the previous frame exceeds 3 gray levels — the
     keyframe-selection primitive of a video training pipeline.  Emits
     (n_frames, n_cuts, first_cut) per clip; ``first_cut`` is −1 when
     the clip has none."""
-    thr = float(threshold)
+    thr = 3.0
 
     def _cuts(r):
         stack = _video_stack(r)
@@ -254,17 +254,17 @@ def video_scene_cuts(video: DataFrame, threshold: float = 3.0) -> DataFrame:
     )
 
 
-def audio_stft_frames(audio: DataFrame, frame: int = 256,
-                      hop: int = 128) -> DataFrame:
+def audio_stft_frames(audio: DataFrame) -> DataFrame:
     """STFT frame features (r05): decode → mono → FULL frames of
-    ``frame`` samples at ``hop`` stride → per-frame rfft magnitude →
-    (energy, spectral centroid in Hz) per frame — the spectrogram
+    ``frame`` = 256 samples at ``hop`` = 128 stride → per-frame rfft
+    magnitude → (energy, spectral centroid in Hz) per frame — the spectrogram
     primitive (VAD / audio-quality filters operate on these frames).
 
     SPEC (the golden twin regenerates the identical waveform and runs
     the same framing): frame f covers samples [f*hop, f*hop + frame);
     partial tails are dropped; centroid 0.0 for an all-zero frame.
     Map-only mapInPandas like the other payload ops."""
+    frame, hop = 256, 128
 
     def _stft(r):
         mono = _mono(r)
@@ -316,11 +316,11 @@ def audio_pitch_autocorr(audio: DataFrame) -> DataFrame:
     )
 
 
-def video_motion_blocks(video: DataFrame, block: int = 8,
-                        search: int = 4) -> DataFrame:
+def video_motion_blocks(video: DataFrame) -> DataFrame:
     """BLOCK-MATCHING MOTION ESTIMATION (r05 wave 11): for every
-    consecutive frame pair, every interior ``block``x``block`` block of
-    the current frame finds the shift (dy, dx) in [-search, search]^2
+    consecutive frame pair, every interior ``block``x``block`` block
+    (``block`` = 8) of the current frame finds the shift (dy, dx) in
+    [-search, search]^2 (``search`` = 4)
     minimizing the integer SAD against the previous frame — the motion
     primitive video curation ranks clips by (static vs dynamic).
 
@@ -333,7 +333,7 @@ def video_motion_blocks(video: DataFrame, block: int = 8,
     position-weighted checksum of the (dy, dx) codes.  Engine path:
     vectorized numpy over the block stack per shift; the golden twin
     runs scalar per-block loops instead."""
-    blk, srch = int(block), int(search)
+    blk, srch = 8, 4
 
     def _motion(r):
         stack = _video_stack(r)
@@ -396,8 +396,6 @@ def video_motion_blocks(video: DataFrame, block: int = 8,
 #          for every n with 2n-3 >= 0 and 2n+3 < len(x)  (// = floor)
 #   chk  = sum of y[n] * ((n % 97) + 1)
 # ---------------------------------------------------------------------------
-
-DECIMATE_TAPS = (-1, 0, 9, 16, 9, 0, -1)  # classic half-band, sum 32
 
 
 def audio_decimate_stats(audio: DataFrame) -> DataFrame:

@@ -222,10 +222,9 @@ def phash_near_dup_pairs(images: DataFrame, max_hamming: int = 12) -> DataFrame:
     )
 
 
-def warp_checksums(images_geo: DataFrame, dst_crs: str,
-                   out_w: int = 32, out_h: int = 32) -> DataFrame:
+def warp_checksums(images_geo: DataFrame, dst_crs: str) -> DataFrame:
     """X6 reprojection surface (r04): decode each tile and WARP it from
-    its plate-carrée footprint onto a regular ``dst_crs`` grid
+    its plate-carrée footprint onto a regular 32×32 ``dst_crs`` grid
     (crs.warp_tile, nearest-neighbour — the GeoTrellis tile.reproject
     analogue).  Emits INTEGER checksums (sum of all warped channel
     bytes, count of non-fill pixels), which are hash-stable, so the
@@ -236,7 +235,7 @@ def warp_checksums(images_geo: DataFrame, dst_crs: str,
     def _warp(r):
         warped = warp_tile(
             _decode(r), (r.fp_xmin, r.fp_ymin, r.fp_xmax, r.fp_ymax),
-            dst_crs, out_w, out_h,
+            dst_crs, 32, 32,
         )
         yield (
             r.image_id,
@@ -797,16 +796,17 @@ def quadtree_stats_kernel(lum: np.ndarray) -> tuple[int, int, int, int, int]:
 # contouring analogue (GeoTrellis-world: toVector/contour ops).
 # ---------------------------------------------------------------------------
 
-# SPEC shared with the golden twin: corner mask m = (lum >= iso);
+# SPEC shared with the golden twin: corner mask m = (lum >= CONTOUR_ISO);
 # case(i,j) = m[i,j] + 2*m[i,j+1] + 4*m[i+1,j+1] + 8*m[i+1,j];
 # segments per case: 0 for {0,15}, 2 for the saddles {5,10}, else 1.
 CONTOUR_ISO = 128.0
 
 
-def marching_squares_stats(lum: np.ndarray, iso: float = CONTOUR_ISO):
+def marching_squares_stats(lum: np.ndarray):
     """(n_cells, n_cells_crossed, n_segments, sum_case) of the
-    marching-squares case grid — all integers, fold-order exact."""
-    m = lum >= iso
+    marching-squares case grid at ``CONTOUR_ISO`` — all integers,
+    fold-order exact."""
+    m = lum >= CONTOUR_ISO
     case = (
         m[:-1, :-1].astype(np.int64)
         + 2 * m[:-1, 1:].astype(np.int64)
@@ -824,14 +824,14 @@ def marching_squares_stats(lum: np.ndarray, iso: float = CONTOUR_ISO):
     )
 
 
-def contour_stats(images: DataFrame, iso: float = CONTOUR_ISO) -> DataFrame:
+def contour_stats(images: DataFrame) -> DataFrame:
     """Per-image marching-squares contour stats at the iso-luminance
     level — decode -> threshold -> 2x2 case grid -> integer sums.
     Map-only like decode_stats/hillshade_stats: payload bytes never
     shuffle."""
     return map_rows(
         images.select(*_IMG_COLS),
-        lambda r: [(r.image_id, *marching_squares_stats(luma(_decode(r)), iso))],
+        lambda r: [(r.image_id, *marching_squares_stats(luma(_decode(r))))],
         "image_id string, n_cells int, n_crossed int, n_segments int, "
         "sum_case bigint",
     )

@@ -153,9 +153,7 @@ def chamfer_distance_batch(masks: np.ndarray) -> np.ndarray:
     return d / 3.0
 
 
-def weighted_cost_batch(
-    masks: np.ndarray, frictions: np.ndarray, max_sweeps: int | None = None
-) -> np.ndarray:
+def weighted_cost_batch(masks: np.ndarray, frictions: np.ndarray) -> np.ndarray:
     """A2 FULL: cost-distance accumulation over a NON-UNIFORM friction
     surface — the real GeoTrellis ``CostDistance`` semantic the uniform
     chamfer approximated.
@@ -174,8 +172,8 @@ def weighted_cost_batch(
     tests/test_pipeline_ops.py.  Values are cost/3.0 like the chamfer
     (multiply by metres-per-pixel for metre·friction units).
 
-    Convergence contract (r04 review): sweeps run TO THE FIXPOINT —
-    ``max_sweeps`` defaults to the 4·(h+w)+8 bound (an optimal path's
+    Convergence contract (r04 review): sweeps run TO THE FIXPOINT,
+    at most 4·(h+w)+8 of them (an optimal path's
     vertical direction changes are what each fwd+bwd pair resolves, and
     a simple path cannot reverse more often than the grid perimeter);
     a pathological surface that still hasn't converged RAISES instead
@@ -183,8 +181,7 @@ def weighted_cost_batch(
     wall/gap friction contrast needs >16 alternations — measured).
     """
     n, h, w = masks.shape
-    if max_sweeps is None:
-        max_sweeps = 4 * (h + w) + 8
+    max_sweeps = 4 * (h + w) + 8
     f = np.asarray(frictions, dtype=np.float64)
     big = np.float64(1e18)
     d = np.where(masks, 0.0, big)
@@ -234,8 +231,8 @@ def weighted_cost_batch(
     else:
         raise ValueError(
             f"weighted cost-distance did not reach its fixpoint within "
-            f"{max_sweeps} sweeps — pass a larger max_sweeps (surface "
-            "has pathological friction alternation)"
+            f"{max_sweeps} sweeps, the 4·(h+w)+8 bound for a {h}x{w} "
+            "surface (pathological friction alternation)"
         )
     return d / 3.0
 
@@ -477,14 +474,14 @@ def label_region_stats(mask: np.ndarray) -> tuple[int, int, int]:
     return len(roots), max(roots.values()), n_fg
 
 
-def region_stats(images, iso: float = 128.0):
-    """Per-image connected-region stats of the (lum >= iso) mask —
+def region_stats(images):
+    """Per-image connected-region stats of the (lum >= 128) mask —
     map-only mapInPandas; payload bytes never shuffle.  Cross-TILE
     region stitching at mosaic scale is the kring(1) halo pattern
     (ops/raster burn) + a component merge on border runs — out of
     scope here where tiles are whole images."""
     return map_rows(
         images.select(*_IMG_COLS),
-        lambda r: [(r.image_id, *label_region_stats(luma(_decode(r)) >= iso))],
+        lambda r: [(r.image_id, *label_region_stats(luma(_decode(r)) >= 128.0))],
         "image_id string, n_regions int, largest_px int, n_fg int",
     )

@@ -114,7 +114,6 @@ def cover_bbox_cells(
     ymin: str,
     xmax: str,
     ymax: str,
-    out: str = "cell_id",
 ) -> DataFrame:
     """C1 (bbox case): explode every cell intersecting the bbox.
 
@@ -133,9 +132,9 @@ def cover_bbox_cells(
 
     # COALESCE → non-nullable join key (see with_point_cell)
     df = df.withColumn(
-        out, F.coalesce(F.expr(pack_cell_expr("_cix", "_ciy", level)), F.lit(-1))
+        "cell_id", F.coalesce(F.expr(pack_cell_expr("_cix", "_ciy", level)), F.lit(-1))
     )
-    df = df.withColumnRenamed("_cix", f"{out}_ix").withColumnRenamed("_ciy", f"{out}_iy")
+    df = df.withColumnRenamed("_cix", "cell_id_ix").withColumnRenamed("_ciy", "cell_id_iy")
     return df.drop("_ix0", "_iy0", "_ix1", "_iy1")
 
 
@@ -242,7 +241,7 @@ def ring_cover(segs: DataFrame, level: int) -> DataFrame:
     )
 
 
-def compact_cover(dense_cells: DataFrame, level: int, cell: str = "cell_id") -> DataFrame:
+def compact_cover(dense_cells: DataFrame, level: int) -> DataFrame:
     """C2 ★ distributed: minimal mixed-level cover of a dense single-level
     cell set (the DataFrame twin of cells.compact).
 
@@ -264,7 +263,7 @@ def compact_cover(dense_cells: DataFrame, level: int, cell: str = "cell_id") -> 
             F.expr(
                 f"transform(sequence(0, {level}), k -> "
                 f"shiftleft(CAST({level} - k AS BIGINT), {LEVEL_SHIFT}) | "
-                f"shiftright({cell} & {mask}, 2 * k))"
+                f"shiftright(cell_id & {mask}, 2 * k))"
             )
         ).alias("anc")
     )
@@ -281,7 +280,7 @@ def compact_cover(dense_cells: DataFrame, level: int, cell: str = "cell_id") -> 
         full.select(F.col("anc").alias("_p")), "_p", "left_anti"
     )
     return comp.select(
-        F.col("anc").alias(cell),
+        F.col("anc").alias("cell_id"),
         F.expr(f"CAST(shiftright(anc, {LEVEL_SHIFT}) AS INT)").alias("level"),
     )
 
@@ -291,7 +290,6 @@ def range_join_compacted(
     cover: DataFrame,
     point_level: int,
     bin_level: int = 3,
-    cell: str = "cell_id",
 ) -> DataFrame:
     """J6 ★: Z-order RANGE join of fine-level point cells against a
     compacted mixed-level cover — planned as a HASH equi-join, never a
@@ -331,7 +329,7 @@ def range_join_compacted(
 
     mask = (1 << LEVEL_SHIFT) - 1
     build = (
-        cover.withColumn("_code", F.expr(f"({cell} & {mask})"))
+        cover.withColumn("_code", F.expr(f"(cell_id & {mask})"))
         .withColumn(
             "_lo",
             F.expr(
@@ -365,7 +363,7 @@ def range_join_compacted(
         # COALESCE → non-nullable equi-key (see with_point_cell)
         .withColumn("_bin", F.coalesce(F.expr("_bin_base + _i"), F.lit(-1)))
         .select(
-            F.col(cell).alias("cover_cell"),
+            F.col("cell_id").alias("cover_cell"),
             F.col("level").alias("cover_level"),
             "_lo",
             "_hi",
@@ -376,7 +374,7 @@ def range_join_compacted(
         "_bin",
         F.coalesce(
             F.expr(
-                f"shiftright({cell} & {mask}, 2 * ({point_level} - {bin_level}))"
+                f"shiftright(cell_id & {mask}, 2 * ({point_level} - {bin_level}))"
             ),
             F.lit(-1),
         ),
@@ -384,8 +382,8 @@ def range_join_compacted(
     joined = probe.join(
         build,
         (probe["_bin"] == build["_bin"])
-        & (probe[cell] >= build["_lo"])
-        & (probe[cell] < build["_hi"]),
+        & (probe["cell_id"] >= build["_lo"])
+        & (probe["cell_id"] < build["_hi"]),
         "inner",
     )
     return joined.drop("_bin", "_lo", "_hi")
@@ -404,7 +402,6 @@ def spatial_join_salted(
     points_cells: DataFrame,
     road_cells: DataFrame,
     target_rows_per_cell: int = 50_000,
-    id_col: str = "image_id",
 ) -> DataFrame:
     """J1 ★ skew-hardened: the cell equi-join with EXPLICIT
     cell-frequency salting (A5 → skew.plan_salts), for when a dense
@@ -428,7 +425,7 @@ def spatial_join_salted(
     salts = plan_salts(cell_histogram(points_cells), target_rows_per_cell)
     # probe side: the shared salting helper (r03 review: this logic was
     # re-implemented here — pmod(xxhash64(id), n_salt), cold cells 0)
-    probe = with_salt(points_cells, salts, id_col)
+    probe = with_salt(points_cells, salts, "image_id")
     # build side: EXPLODE over all n_salt values so every original pair
     # matches exactly once — the only part with_salt can't express
     build = (
@@ -469,13 +466,12 @@ def knn_nearest_road(
     images_geo: DataFrame,
     segs: DataFrame,
     cutoff_m: float = 2000.0,
-    level: int | None = None,
     id_col: str = "image_id",
 ) -> DataFrame:
     """J4 ★ + W1: nearest road within ``cutoff_m`` per image, exact.
 
-    k-ring-expansion kNN, collapsed to ONE shuffle: at ``level`` the
-    cell size is >= cutoff, so every segment within cutoff of a point
+    k-ring-expansion kNN, collapsed to ONE shuffle: at
+    ``level_for_cutoff(cutoff_m)`` the cell size is >= cutoff, so every segment within cutoff of a point
     lies in the point's 3×3 cell block (proof: |p-q|∞ <= |p-q|₂ <
     cellsize ⇒ q's cell is a Chebyshev-1 neighbor).  We pre-expand the
     *road* side by kring(1) (small side, exploded once) and join the
@@ -485,8 +481,7 @@ def knn_nearest_road(
     Emits: image_id, road_id, dist_m, k_ring (Chebyshev distance from
     the image's cell to the matched segment's covering cell).
     """
-    if level is None:
-        level = level_for_cutoff(cutoff_m)
+    level = level_for_cutoff(cutoff_m)
     # a segment can reach the same ring cell from several covering
     # cells — keep the MIN Chebyshev distance so k_ring is
     # deterministic (endpoints are constant per (road_id, seg_id))
@@ -524,7 +519,6 @@ def knn_topk_roads(
     segs: DataFrame,
     cutoff_m: float = 2000.0,
     k: int = 3,
-    level: int | None = None,
     id_col: str = "image_id",
 ) -> DataFrame:
     """J4b (r05): the k NEAREST roads per point within ``cutoff_m``,
@@ -549,8 +543,7 @@ def knn_topk_roads(
     Emits: id_col, road_id, dist_m, rnk (1-based, rnk <= k); points
     with fewer than k roads in range emit fewer rows.
     """
-    if level is None:
-        level = level_for_cutoff(cutoff_m)
+    level = level_for_cutoff(cutoff_m)
     # a segment reaches the same ring cell from several covering
     # cells; endpoints are functionally dependent on (road, seg)
     cover = ring_cover(segs, level).dropDuplicates(["cell_id", "road_id", "seg_id"])
@@ -571,7 +564,6 @@ def snap_nearest_road(
     points_geo: DataFrame,
     segs: DataFrame,
     cutoff_m: float = 2000.0,
-    level: int | None = None,
     id_col: str = "image_id",
 ) -> DataFrame:
     """MAP-MATCHING snap (J4c): nearest road segment per point WITH the
@@ -587,8 +579,7 @@ def snap_nearest_road(
     (the double chain is shared text with the DuckDB oracle; every
     term already has a DOUBLE operand per CLAUDE.md gotcha 17).
     """
-    if level is None:
-        level = level_for_cutoff(cutoff_m)
+    level = level_for_cutoff(cutoff_m)
     cover = ring_cover(segs, level).dropDuplicates(["cell_id", "road_id", "seg_id"])
     joined = _within_cutoff(points_geo, cover, level, cutoff_m, id_col)
     # argmin via min(struct): (dist, road, seg) is the deterministic
@@ -656,8 +647,6 @@ def with_near_road_flag(
     points_geo: DataFrame,
     segs: DataFrame,
     cutoff_m: float,
-    level: int | None = None,
-    out: str = "near_road",
 ) -> DataFrame:
     """Map-side 'within cutoff of any road' boolean column.
 
@@ -677,8 +666,7 @@ def with_near_road_flag(
     non-matching rows the flagship's n_points still needs.)"""
     from ..sqlgen import point_seg_dist_expr
 
-    if level is None:
-        level = level_for_cutoff(cutoff_m)
+    level = level_for_cutoff(cutoff_m)
     probe = with_point_cell(points_geo, level, "lon", "lat", "_ncell").alias("p")
     # duplicates (a segment reaching one ring cell via several cover
     # cells) cannot change EXISTS semantics — skipping the dedup saves
@@ -693,14 +681,13 @@ def with_near_road_flag(
         (F.col("s.rcell") == F.col("p._ncell").outer())
         & (dist <= F.lit(float(cutoff_m)))
     ).exists()
-    return probe.select(*[F.col(f"p.{c}") for c in points_geo.columns], near.alias(out))
+    return probe.select(*[F.col(f"p.{c}") for c in points_geo.columns], near.alias("near_road"))
 
 
 def knn_ring_iterative(
     points_geo: DataFrame,
     segs: DataFrame,
     level: int = 6,
-    k_schedule: tuple[int, ...] = (1, 2, 4),
     id_col: str = "image_id",
 ) -> DataFrame:
     """J4 ★ unbounded form: literal k-ring-expansion kNN (no cutoff).
@@ -711,7 +698,7 @@ def knn_ring_iterative(
     distance ≤ k·cellsize — any unsearched segment lies in a cell at
     Chebyshev > k, hence at distance ≥ k·cellsize (proof in cells.py
     terms: the gap between a point's cell and a cell k+1 away spans k
-    full cells).  Points still unsettled after the schedule fall back
+    full cells).  Points still unsettled after k = 1, 2, 4 fall back
     to one exact broadcast cross-join (the frontier is tiny by then) —
     bounded work, exact result, deterministic (dist, road_id, seg_id)
     tie-break.
@@ -745,7 +732,7 @@ def knn_ring_iterative(
             F.first("lat").alias("lat"),
         )
 
-    for k in k_schedule:
+    for k in (1, 2, 4):
         ring_cells = with_kring(
             frontier, level, k, "cell_id", "ring_cell_id",
             idx_cols=("cell_id_ix", "cell_id_iy"),

@@ -122,9 +122,9 @@ def read_osm_orc(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
 # ---------------------------------------------------------------------------
 
 
-def write_mbtiles(tiles: DataFrame, path: str, name: str = "roads",
-                  layer: str = "roads") -> int:
-    """Commit a (z, tx, ty, mvt) tile DataFrame as an MbTiles file.
+def write_mbtiles(tiles: DataFrame, path: str) -> int:
+    """Commit a (z, tx, ty, mvt) tile DataFrame as an MbTiles file: the
+    ``roads`` tileset of one ``roads`` vector layer.
 
     ``ty`` arrives in the engine's south-origin cell orientation, which
     IS the TMS row — stored as-is; readers addressing tiles in XYZ must
@@ -156,9 +156,9 @@ def write_mbtiles(tiles: DataFrame, path: str, name: str = "roads",
             "CREATE UNIQUE INDEX tile_index ON tiles "
             "(zoom_level, tile_column, tile_row)"
         )
-        meta = [("name", name), ("format", "pbf"), ("version", "1"),
+        meta = [("name", "roads"), ("format", "pbf"), ("version", "1"),
                 ("type", "baselayer"), ("json",
-                 '{"vector_layers": [{"id": "%s"}]}' % layer)]
+                 '{"vector_layers": [{"id": "roads"}]}')]
         con.executemany("INSERT INTO metadata VALUES (?, ?)", meta)
         n = 0
         for r in rows:

@@ -52,9 +52,9 @@ def _prep(spark: SparkSession) -> None:
     ensure_pyfiles(spark)
 
 
-def _drain_confs(spark, parts: str = "8", nodata: bool = True):
+def _drain_confs(spark, nodata: bool = True):
     """Scoped confs for a streaming drain or tiny-relation iterative
-    loop (saved/restored): shuffle partitions down to ``parts``
+    loop (saved/restored): shuffle partitions down to 8
     (gotcha 16d — state stores / loop fixed cost = partitions ×
     batches) and whole-stage codegen OFF (r06: every micro-batch's
     incremental plan compiles FRESH janino classes — measured
@@ -74,7 +74,7 @@ def _drain_confs(spark, parts: str = "8", nodata: bool = True):
     no-data batch (native session windows, chained aggs — measured
     FAIL with the conf off) keep the default."""
     confs = {
-        "spark.sql.shuffle.partitions": parts,
+        "spark.sql.shuffle.partitions": "8",
         "spark.sql.codegen.wholeStage": "false",
     }
     if not nodata:
@@ -199,8 +199,7 @@ def _b12_cells(h: str, k: int) -> list[str]:
     ]
 
 
-def _components_jump(edges, verts_k, max_iter: int = 12,
-                     n_parts: int = 8):
+def _components_jump(edges, verts_k):
     """Min-label connected components WITH POINTER JUMPING:
     label ← min(label, min-neighbor-label), then label ← label(label).
     The jump halves the remaining label-tree depth each round, so
@@ -211,16 +210,16 @@ def _components_jump(edges, verts_k, max_iter: int = 12,
     Same persisted-frontier discipline (gotcha 15); converge-or-raise
     like the plain variant.
 
-    The loop runs at ``n_parts`` shuffle partitions (saved/restored):
-    the label table is CELLS, orders of magnitude smaller than the
-    vertex input, and the iterative fixed cost is partitions × rounds
-    × stages (the gotcha-16d shape — measured 6.9 s -> 3.6 s at sf0.1
-    with 8 vs the session's 32).  At real scale size n_parts to the
-    core-cell count, not the fact-table width.
+    The loop runs under ``_drain_confs`` (8 shuffle partitions,
+    saved/restored): the label table is CELLS, orders of magnitude
+    smaller than the vertex input, and the iterative fixed cost is
+    partitions × rounds × stages (the gotcha-16d shape — measured
+    6.9 s -> 3.6 s at sf0.1 with 8 vs the session's 32).  At real
+    scale size the partitions to the core-cell count, not the
+    fact-table width.
     """
-    spark = edges.sparkSession
     # r06 (review consolidation): one shared scoped-conf helper —
-    # shuffle partitions down to n_parts AND whole-stage codegen OFF
+    # shuffle partitions down to 8 AND whole-stage codegen OFF
     # for the loop: every round plans fresh tiny jobs over the label
     # relation, so janino compile time dominates and never amortizes —
     # measured 17.9 s -> 6.6 s first-invocation on mst_roads (which
@@ -228,60 +227,56 @@ def _components_jump(edges, verts_k, max_iter: int = 12,
     # relation is the SMALL side by construction (cells / component
     # ids), so interpreted row processing is the right trade at any
     # scale; fact-table stages elsewhere keep codegen.
-    with _drain_confs(spark, parts=str(n_parts)):
-        return _components_jump_inner(edges, verts_k, max_iter)
-
-
-def _components_jump_inner(edges, verts_k, max_iter: int):
-    # r06 job-count reduction (these iterative loops are pure
-    # fixed-cost: ~20 ms stages, so ACTIONS per round dominate —
-    # measured via event-log stage attribution on mst_roads):
-    #  * step and jump fold into ONE localCheckpoint per round — the
-    #    step side is referenced twice by the jump self-join and is
-    #    recomputed inside that single job (two parallel branches off
-    #    the checkpointed labels) instead of paying a second
-    #    materialization action;
-    #  * the convergence probe rides ON the checkpointed frame as a
-    #    `changed` flag, so the old join-against-previous-labels job
-    #    becomes a filter+isEmpty scan of already-local blocks.
-    # Labels produced are identical (LEAST chain unchanged).
-    und = edges.unionByName(
-        edges.selectExpr("dst AS src", "src AS dst")
-    ).localCheckpoint()
-    labels = verts_k.selectExpr("k AS v", "k AS label").localCheckpoint()
-    for _ in range(max_iter):
-        nbr = (
-            und.join(labels, und.src == labels.v)
-            .groupBy("dst")
-            .agg(F.min("label").alias("nl"))
-        )
-        stepped = (
-            labels.join(nbr, labels.v == nbr.dst, "left")
-            .selectExpr(
-                "v",
-                "label AS old",
-                "LEAST(label, COALESCE(nl, label)) AS label",
+    with _drain_confs(edges.sparkSession):
+        # r06 job-count reduction (these iterative loops are pure
+        # fixed-cost: ~20 ms stages, so ACTIONS per round dominate —
+        # measured via event-log stage attribution on mst_roads):
+        #  * step and jump fold into ONE localCheckpoint per round — the
+        #    step side is referenced twice by the jump self-join and is
+        #    recomputed inside that single job (two parallel branches off
+        #    the checkpointed labels) instead of paying a second
+        #    materialization action;
+        #  * the convergence probe rides ON the checkpointed frame as a
+        #    `changed` flag, so the old join-against-previous-labels job
+        #    becomes a filter+isEmpty scan of already-local blocks.
+        # Labels produced are identical (LEAST chain unchanged).
+        und = edges.unionByName(
+            edges.selectExpr("dst AS src", "src AS dst")
+        ).localCheckpoint()
+        labels = verts_k.selectExpr("k AS v", "k AS label").localCheckpoint()
+        for _ in range(12):
+            nbr = (
+                und.join(labels, und.src == labels.v)
+                .groupBy("dst")
+                .agg(F.min("label").alias("nl"))
             )
-        )
-        j = stepped.selectExpr("v AS lv", "label AS l2")
-        jumped = (
-            stepped.join(j, stepped.label == j.lv)
-            .selectExpr(
-                "v",
-                "LEAST(label, l2) AS label",
-                "LEAST(label, l2) < old AS changed",
+            stepped = (
+                labels.join(nbr, labels.v == nbr.dst, "left")
+                .selectExpr(
+                    "v",
+                    "label AS old",
+                    "LEAST(label, COALESCE(nl, label)) AS label",
+                )
             )
-            .localCheckpoint()
-        )
-        done = jumped.filter("changed").isEmpty()
-        labels = jumped.select("v", "label")
-        if done:
-            break
-    else:
-        raise RuntimeError(
-            f"_components_jump did not converge in {max_iter} rounds"
-        )
-    return labels
+            j = stepped.selectExpr("v AS lv", "label AS l2")
+            jumped = (
+                stepped.join(j, stepped.label == j.lv)
+                .selectExpr(
+                    "v",
+                    "LEAST(label, l2) AS label",
+                    "LEAST(label, l2) < old AS changed",
+                )
+                .localCheckpoint()
+            )
+            done = jumped.filter("changed").isEmpty()
+            labels = jumped.select("v", "label")
+            if done:
+                break
+        else:
+            raise RuntimeError(
+                "_components_jump did not converge in 12 rounds"
+            )
+        return labels
 
 
 # events.ts is TIMESTAMP_NTZ in the parquet; _prep pins the session to

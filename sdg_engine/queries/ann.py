@@ -416,7 +416,7 @@ def embedding_cosine_neardup(spark, sf_dir):
     return result
 
 
-def kmeans_embeddings(spark, sf_dir, k: int = 8, iters: int = 2):
+def kmeans_embeddings(spark, sf_dir):
     """Deterministic Lloyd k-means over the embedding table (2 unrolled
     iterations, k=8, seeds = vec_id 0..7) — the canonical iterative
     clustering shape for a training-data pipeline (topic bucketing /
@@ -453,23 +453,22 @@ def kmeans_embeddings(spark, sf_dir, k: int = 8, iters: int = 2):
             .select("vec_id", F.col("_m.cid").alias("cid"))
         )
 
-    cents = emb.filter(F.col("vec_id") < k).select(
+    cents = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").cast("int").alias("cid"), F.col("emb").alias("cent")
     )
-    for _ in range(iters - 1):
-        a = assign(emb, cents)
-        cents = (
-            a.join(emb, "vec_id")
-            .select("cid", F.posexplode("emb").alias("pos", "x"))
-            .groupBy("cid", "pos")
-            .agg(F.round(F.avg("x"), 6).alias("c"))
-            .groupBy("cid")
-            .agg(
-                F.expr(
-                    "transform(sort_array(collect_list(struct(pos, c))), s -> s.c)"
-                ).alias("cent")
-            )
+    # iteration 1 updates the centroids; iteration 2 is the final assign
+    cents = (
+        assign(emb, cents).join(emb, "vec_id")
+        .select("cid", F.posexplode("emb").alias("pos", "x"))
+        .groupBy("cid", "pos")
+        .agg(F.round(F.avg("x"), 6).alias("c"))
+        .groupBy("cid")
+        .agg(
+            F.expr(
+                "transform(sort_array(collect_list(struct(pos, c))), s -> s.c)"
+            ).alias("cent")
         )
+    )
     final = assign(emb, cents)
     norm = F.expr(
         "ROUND(SQRT(aggregate(cent, CAST(0 AS DOUBLE), "

@@ -22,8 +22,8 @@ _PR_UNIT = 1_000_000_000  # total rank mass in micro-units
 _PR_DAMP = 85  # damping 0.85, held as integer percent
 
 
-def pagerank(edges: DataFrame, iters: int = _PR_ITERS) -> DataFrame:
-    """Fixed-iteration PageRank over (src, dst) edge rows, INTEGER-EXACT:
+def pagerank(edges: DataFrame) -> DataFrame:
+    """``_PR_ITERS``-iteration PageRank over (src, dst) edge rows, INTEGER-EXACT:
     rank mass lives in BIGINT micro-units and every division is an
     explicit FLOOR, so iteration order and fold order cannot perturb the
     result (the oracle unrolls the identical recurrence in SQL).
@@ -48,7 +48,7 @@ def pagerank(edges: DataFrame, iters: int = _PR_ITERS) -> DataFrame:
         pr = nodes.crossJoin(F.broadcast(n_df)).selectExpr(
             "node", f"CAST(FLOOR({_PR_UNIT}.0 / CAST(n AS DOUBLE)) AS BIGINT) AS pr"
         )
-        for _ in range(iters):
+        for _ in range(_PR_ITERS):
             contrib = (
                 edeg.join(pr, edeg.src == pr.node)
                 .select(
@@ -755,7 +755,7 @@ def mst_roads(spark, sf_dir):
     # _drain_confs scope (review consolidation; nested _components_
     # jump calls re-enter it safely, restoring to THIS scope's confs).
     # r06 job-count reduction (the loop is fixed-cost-bound: ~20 ms
-    # stages — see _components_jump_inner): the forest's THREE output
+    # stages — see _components_jump): the forest's THREE output
     # aggregates (edge count, Σw, Σ(u·1000003+v)) are associative, so
     # each round folds its chosen-edge aggregate into driver-side ints
     # with ONE tiny job instead of materializing a growing

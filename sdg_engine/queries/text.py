@@ -101,7 +101,7 @@ def minhash_signatures(spark, sf_dir):
     return _minhash_sig_df(docs)
 
 
-def minhash_lsh_pairs(spark, sf_dir, target_rows_per_bucket: int = 8):
+def minhash_lsh_pairs(spark, sf_dir):
     """LSH candidate pairs: docs sharing ≥1 of 4 minhash bands.
 
     Classic shingle→minhash→band→bucket-join, hardened for scale:
@@ -115,7 +115,7 @@ def minhash_lsh_pairs(spark, sf_dir, target_rows_per_bucket: int = 8):
       ``salt = pmod(xxhash64(doc_id), n_salt(bucket))`` and the build
       side EXPLODES over all n_salt values, so the join key becomes
       (band, mh, salt), each original pair matches exactly once, and a
-      hot bucket's work splits n_salt ways.  Cold buckets keep salt 0 —
+      hot bucket (over 8 rows) splits n_salt ways.  Cold buckets keep salt 0 —
       no replication cost.  Result set is hash-identical to the
       unsalted join (oracle-checked).
     """
@@ -133,7 +133,7 @@ def minhash_lsh_pairs(spark, sf_dir, target_rows_per_bucket: int = 8):
     # not accumulate heap in a default-1g driver session
     bands = bands.persist(StorageLevel.DISK_ONLY)
     hist = bands.groupBy("bkey").agg(F.count(F.lit(1)).alias("n_rows"))
-    salts = plan_salts(hist, target_rows_per_bucket, cell_col="bkey")
+    salts = plan_salts(hist, 8, cell_col="bkey")
     salted = (
         bands.join(F.broadcast(salts), bands.bkey == salts["_salt_cell"], "left")
         .drop("_salt_cell")
@@ -322,13 +322,12 @@ def sample_stratified(spark, sf_dir):
     )
 
 
-def ngram_jaccard_indexed(spark, sf_dir, max_shingle_freq: int = 10,
-                          min_jaccard: float = 0.2):
+def ngram_jaccard_indexed(spark, sf_dir):
     """n-gram Jaccard WITHOUT the cross join (the scale path): an
     inverted shingle index generates candidate pairs — only docs
-    sharing a shingle rarer than ``max_shingle_freq`` meet (stop-shingle
-    drop bounds the worst bucket at freq² pairs) — then the exact
-    Jaccard runs on candidates only.  Exactness caveat vs the
+    sharing a shingle held by at most 10 docs meet (stop-shingle
+    drop bounds the worst bucket at 10² pairs) — then the exact
+    Jaccard runs on candidates only, keeping pairs at Jaccard >= 0.2.  Exactness caveat vs the
     brute-force baseline is PRECISELY characterized: a pair is missed
     iff every shared shingle is a stop-shingle."""
     docs = _t(spark, sf_dir, "documents")
@@ -336,7 +335,7 @@ def ngram_jaccard_indexed(spark, sf_dir, max_shingle_freq: int = 10,
     inv = sets.select("doc_id", F.explode("sh").alias("s"))
     rare = (
         inv.groupBy("s").agg(F.count(F.lit(1)).alias("nf"))
-        .filter((F.col("nf") >= 2) & (F.col("nf") <= max_shingle_freq))
+        .filter((F.col("nf") >= 2) & (F.col("nf") <= 10))
         .select("s")
     )
     postings = inv.join(rare, "s")
@@ -361,13 +360,13 @@ def ngram_jaccard_indexed(spark, sf_dir, max_shingle_freq: int = 10,
             ).alias("jaccard"),
         )
     )
-    return scored.filter(F.col("jaccard") >= min_jaccard)
+    return scored.filter(F.col("jaccard") >= 0.2)
 
 
-def connected_components(edges, vertices, id_col: str = "doc_id",
-                         max_iter: int = 20):
+def connected_components(edges, vertices):
     """Iterative min-label propagation (the dedup-cluster primitive):
-    label(v) converges to min(id) of v's connected component.
+    label(v) converges to min(doc_id) of v's connected component, in
+    at most 20 rounds.
 
     Per round: one groupBy over the (undirected) edge-label join, one
     join back, persist, driver-side convergence check on the count of
@@ -389,7 +388,7 @@ def connected_components(edges, vertices, id_col: str = "doc_id",
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint()
     labels = vertices.select(
-        F.col(id_col).alias("v"), F.col(id_col).alias("label")
+        F.col("doc_id").alias("v"), F.col("doc_id").alias("label")
     ).localCheckpoint()
     # r06: the rounds run under _drain_confs (8 shuffle partitions +
     # whole-stage codegen OFF, restored after) — per-round plan churn
@@ -398,7 +397,7 @@ def connected_components(edges, vertices, id_col: str = "doc_id",
     spark_ = edges.sparkSession
     converged = False
     with _drain_confs(spark_):
-        for _ in range(max_iter):
+        for _ in range(20):
             nbr_min = (
                 und.join(labels, und.src == labels.v)
                 .groupBy("dst").agg(F.min("label").alias("nbr_label"))
@@ -421,10 +420,10 @@ def connected_components(edges, vertices, id_col: str = "doc_id",
     if not converged:
         # r03 review: silently returning unconverged labels diverges
         # from the fully-converged recursive-CTE oracle with no hint —
-        # a >max_iter-diameter component must fail loudly instead
+        # a >20-diameter component must fail loudly instead
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"(component diameter exceeds max_iter — raise max_iter)"
+            "connected_components did not converge in 20 rounds "
+            "(component diameter exceeds 20)"
         )
     return labels
 

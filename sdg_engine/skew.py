@@ -36,9 +36,9 @@ def spread(df: DataFrame, key: str) -> DataFrame:
     return df
 
 
-def cell_histogram(df: DataFrame, cell_col: str = "cell_id") -> DataFrame:
+def cell_histogram(df: DataFrame) -> DataFrame:
     """A5: per-cell row counts (drives the salting plan)."""
-    return df.groupBy(cell_col).agg(F.count(F.lit(1)).alias("n_rows"))
+    return df.groupBy("cell_id").agg(F.count(F.lit(1)).alias("n_rows"))
 
 
 def plan_salts(
@@ -61,19 +61,17 @@ def with_salt(
     df: DataFrame,
     salts: DataFrame,
     id_col: str,
-    cell_col: str = "cell_id",
-    out: str = "salt",
 ) -> DataFrame:
     """Add deterministic salt: pmod(xxhash64(id), s(cell)) (0 if cold).
 
-    Group/cogroup on (cell_col, salt) afterwards; the build/static side
+    Group/cogroup on (cell_id, salt) afterwards; the build/static side
     of a join must be EXPANDED to all salt values (explode) — see
     salted_group_demo in tests for the pattern."""
     joined = df.join(
-        F.broadcast(salts), df[cell_col] == salts["_salt_cell"], "left"
+        F.broadcast(salts), df["cell_id"] == salts["_salt_cell"], "left"
     ).drop("_salt_cell")
     return joined.withColumn(
-        out,
+        "salt",
         F.when(
             F.col("n_salt").isNotNull(),
             F.pmod(F.xxhash64(F.col(id_col)), F.col("n_salt")).cast("int"),

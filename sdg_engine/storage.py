@@ -60,9 +60,9 @@ _P5 = 0x27D4EB2F165667C5
 _M64 = (1 << 64) - 1
 
 
-def xxhash64_long(values, seed: int = 42):
+def xxhash64_long(values):
     """Numpy twin of Spark's ``xxhash64(bigint)`` (XXH64 single-long path,
-    default seed 42) — lets the DRIVER compute bucket assignments without
+    Spark's fixed seed 42) — lets the DRIVER compute bucket assignments without
     a Spark job.  Verified bit-equal against F.xxhash64 in tests.
 
     Returns signed int64, like the Spark expression."""
@@ -70,7 +70,7 @@ def xxhash64_long(values, seed: int = 42):
 
     v = np.asarray(values, dtype=np.int64).astype(np.uint64)
     with np.errstate(over="ignore"):
-        h = np.uint64((seed + _P5 + 8) & _M64)
+        h = np.uint64((42 + _P5 + 8) & _M64)
         k1 = v * np.uint64(_P2)
         k1 = (k1 << np.uint64(31)) | (k1 >> np.uint64(33))  # rotl 31
         k1 = k1 * np.uint64(_P1)
@@ -181,7 +181,7 @@ def _head(path: str, as_of: int | None = None) -> tuple[int, dict]:
     return snap_id, _read_manifest(path, snap_id)
 
 
-def _commit(path: str, build) -> int:
+def _commit(path: str, build, written: str | None) -> int:
     """Commit one snapshot — the Iceberg optimistic commit in miniature.
     ``build(parent_id, parent)`` returns the new manifest's fields for
     the current head (``(None, None)`` on a fresh table); ``_commit``
@@ -191,7 +191,10 @@ def _commit(path: str, build) -> int:
     newer head.  So ``build`` must derive every field it does not set
     itself from the ``parent`` it is given, never from an earlier read
     — a field copied from a stale head silently undoes the concurrent
-    commit.  Returns the committed snapshot id (1-based)."""
+    commit.  ``written`` is the data or tombstone dir the caller wrote
+    for this commit (None if none): a commit that raises before the
+    link removes it, so a rejected commit leaves no orphan dir.
+    Returns the committed snapshot id (1-based)."""
     mdir = _manifest_dir(path)
     os.makedirs(mdir, exist_ok=True)  # writes may create; reads never do
     tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex[:12]}")
@@ -209,6 +212,10 @@ def _commit(path: str, build) -> int:
                 return snap_id
             except FileExistsError:
                 continue  # lost the race — rebuild against the new head
+    except BaseException:
+        if written is not None:
+            shutil.rmtree(written, ignore_errors=True)
+        raise
     finally:
         if os.path.exists(tmp):  # never leave a .tmp behind
             os.remove(tmp)
@@ -442,8 +449,7 @@ def drop_ref(path: str, name: str) -> None:
         os.remove(p)
 
 
-def read_snapshot_point(spark: SparkSession, path: str, col: str,
-                        value, as_of: int | None = None):
+def read_snapshot_point(spark: SparkSession, path: str, col: str, value):
     """BLOOM-INDEX point lookup: open only the data files whose
     committed per-file Bloom bitmap (``write_snapshot(...,
     bloom_cols=[col])``) says MIGHT contain ``value`` — the data-
@@ -454,8 +460,8 @@ def read_snapshot_point(spark: SparkSession, path: str, col: str,
     kept files may include deterministic false positives (the
     row-level residual filter removes their rows).  Files without a
     committed bloom for ``col`` are always read (fail-open, like zone
-    maps).  Merge-on-read deletes still apply.  Returns
-    ``(df, files_scanned, files_total)``."""
+    maps).  Merge-on-read deletes still apply.  Reads the head
+    snapshot.  Returns ``(df, files_scanned, files_total)``."""
     cells = _bloom_cells(value)
 
     def keep(e: dict) -> bool:
@@ -464,7 +470,7 @@ def read_snapshot_point(spark: SparkSession, path: str, col: str,
             words[c // 64] >> (c % 64) & 1 for c in cells
         )
 
-    return _read_pruned(spark, path, as_of, keep, "bloom_cols")
+    return _read_pruned(spark, path, None, keep, "bloom_cols")
 
 
 def table_check(path: str) -> str | None:
@@ -573,11 +579,10 @@ def write_snapshot(df: DataFrame, path: str, mode: str = "append",
             man["files"][data_dir] = new_stats
         return man
 
-    return _commit(path, build)
+    return _commit(path, build, data_dir)
 
 
-def read_snapshot_partitioned(spark: SparkSession, path: str, eq: dict,
-                              as_of: int | None = None):
+def read_snapshot_partitioned(spark: SparkSession, path: str, eq: dict):
     """IDENTITY-PARTITION pruning (the other half of Iceberg data
     skipping, next to ``read_snapshot_pruned``'s zone maps): keep only
     the data files whose hive-layout partition values match every
@@ -585,14 +590,14 @@ def read_snapshot_partitioned(spark: SparkSession, path: str, eq: dict,
     pruning happens before Spark plans the scan.  Values compare as
     their hive dir-name strings; files with no recorded value for a key
     are always read (fail-open).  Deletes, renames and the committed
-    schema apply exactly as in ``read_snapshot``.  Returns
-    ``(df, files_scanned, files_total)``.
+    schema apply exactly as in ``read_snapshot``.  Reads the head
+    snapshot.  Returns ``(df, files_scanned, files_total)``.
     """
     def keep(e: dict) -> bool:
         parts = e.get("parts") or {}
         return all(parts.get(k, str(v)) == str(v) for k, v in eq.items())
 
-    df, n_scan, total = _read_pruned(spark, path, as_of, keep,
+    df, n_scan, total = _read_pruned(spark, path, None, keep,
                                      "partition_by")
     if not n_scan:
         raise ValueError(f"no files match partitions {eq} at {path}")
@@ -735,7 +740,7 @@ def delete_from_snapshot(spark: SparkSession, path: str,
         "deletes": (parent.get("deletes") or []) + [
             {"dir": ddir, "key": key, "applies_to": list(parent["dirs"])}
         ],
-    })
+    }, ddir)
 
 
 def delete_positions_where(spark: SparkSession, path: str,
@@ -778,7 +783,7 @@ def delete_positions_where(spark: SparkSession, path: str,
             ],
         }
 
-    return _commit(path, build), int(n_pos)
+    return _commit(path, build, ddir), int(n_pos)
 
 
 def delete_where_cow(spark: SparkSession, path: str,
@@ -854,7 +859,7 @@ def delete_where_cow(spark: SparkSession, path: str,
             },
         }
 
-    snap_id = _commit(path, build)
+    snap_id = _commit(path, build, new_dir)
     return snap_id, len(affected), len(carried)
 
 
@@ -988,7 +993,7 @@ def rename_column(path: str, old: str, new: str) -> int:
         ren[disk] = new
         return {**parent, "mode": "rename", "renames": ren}
 
-    return _commit(path, build)
+    return _commit(path, build, None)
 
 
 def expire_snapshots(path: str, keep_last: int = 1) -> dict:
@@ -1034,7 +1039,7 @@ def rollback_snapshot(path: str, to_snap: int) -> int:
     _, target = _head(path, to_snap)
     return _commit(path, lambda _pid, _parent: {
         **target, "mode": "rollback", "rolled_back_to": to_snap,
-    })
+    }, None)
 
 
 def count_data_files(path: str, snap_id: int) -> int:

@@ -38,6 +38,10 @@ EVENTS_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
     "value double, props string"
 )
+# Event-time lateness of the drains; batch_hourly_closed closes its
+# windows at the same horizon, so a stream and its batch twin agree.
+WATERMARK_S = 7200
+WATERMARK = f"{WATERMARK_S // 3600} hours"
 
 
 def _source(
@@ -67,18 +71,17 @@ def stream_events_hourly(
     in_dir: str,
     out_dir: str,
     checkpoint: str,
-    watermark: str = "2 hours",
 ) -> None:
     """Watermarked hourly counts per event_type, file source → parquet
     sink, availableNow trigger (drain-and-stop).
 
     Watermark bounds state: windows older than max(event time) −
-    ``watermark`` are finalized and evicted — late rows beyond it are
+    ``WATERMARK`` are finalized and evicted — late rows beyond it are
     dropped, which is the documented streaming-vs-batch difference.
     Append output mode emits each window exactly once, on close."""
     src = _source(spark, in_dir, EVENTS_SCHEMA, 4)
     agg = (
-        src.withWatermark("ts", watermark)
+        src.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -161,6 +164,7 @@ def stream_dedup_docs_watermarked(
 # Click bound of the outer interval joins (see stream_interval_join);
 # the full-join oracle states the same bound.
 _OUTER_CLICK_BOUND = "2024-01-10 00:00:00"
+_INTERVAL_S = 1800
 
 
 def stream_interval_join(
@@ -168,13 +172,11 @@ def stream_interval_join(
     in_dir: str,
     out_dir: str,
     checkpoint: str,
-    watermark: str = "2 hours",
-    interval_s: int = 1800,
     how: str = "inner",
 ) -> None:
     """Stream-stream INTERVAL join (the canonical two-stream shape):
     click events joined to the same user's view events from the
-    preceding ``interval_s`` seconds; ``how`` is ``"inner"``,
+    preceding ``_INTERVAL_S`` seconds; ``how`` is ``"inner"``,
     ``"left"`` or ``"full"``.
 
     Both sides carry an event-time watermark and the join condition
@@ -224,7 +226,7 @@ def stream_interval_join(
         F.col("user_id").alias("c_user"),
         F.col("event_id").alias("click_id"),
         F.col("ts").alias("c_ts"),
-    ).withWatermark("c_ts", watermark)
+    ).withWatermark("c_ts", WATERMARK)
     views = (
         _source(spark, in_dir, EVENTS_SCHEMA, max_files)
         .filter(F.col("event_type") == "view")
@@ -233,7 +235,7 @@ def stream_interval_join(
             F.col("event_id").alias("view_id"),
             F.col("ts").alias("v_ts"),
         )
-        .withWatermark("v_ts", watermark)
+        .withWatermark("v_ts", WATERMARK)
     )
     user = F.col("c_user").alias("user_id")
     cols = {
@@ -245,7 +247,7 @@ def stream_interval_join(
     joined = clicks.join(
         views,
         F.expr(
-            f"c_user = v_user AND v_ts >= c_ts - INTERVAL {interval_s} SECOND "
+            f"c_user = v_user AND v_ts >= c_ts - INTERVAL {_INTERVAL_S} SECOND "
             f"AND v_ts <= c_ts"
         ),
         how,
@@ -318,13 +320,12 @@ def stream_sessionize(
     in_dir: str,
     out_dir: str,
     checkpoint: str,
-    watermark: str = "2 hours",
 ) -> None:
     """Custom stateful streaming operator: per-user sessionization with
     a 30-min gap, state timeout driven by the event-time watermark."""
     src = _source(spark, in_dir, EVENTS_SCHEMA, 4)
     sessions = (
-        src.withWatermark("ts", watermark)
+        src.withWatermark("ts", WATERMARK)
         .groupBy("user_id")
         .applyInPandasWithState(
             _sessionize_fn,
@@ -363,7 +364,6 @@ def stream_snapshot_sink(
     in_dir: str,
     table_path: str,
     checkpoint: str,
-    schema: str = EVENTS_SCHEMA,
 ) -> None:
     """EXACTLY-ONCE streaming ingestion into the snapshot table (the
     streaming→Iceberg pattern): every micro-batch commits as ONE
@@ -385,7 +385,7 @@ def stream_snapshot_sink(
 
     from .storage import write_snapshot
 
-    src = _source(spark, in_dir, schema, 1)
+    src = _source(spark, in_dir, EVENTS_SCHEMA, 1)
     marker = os.path.join(table_path, "_last_batch")
 
     def _commit(df: DataFrame, batch_id: int) -> None:
@@ -411,12 +411,11 @@ def stream_snapshot_sink(
     )
 
 
-def batch_hourly_closed(spark: SparkSession, events: DataFrame,
-                        watermark_s: int = 7200) -> DataFrame:
+def batch_hourly_closed(spark: SparkSession, events: DataFrame) -> DataFrame:
     """Batch twin of stream_events_hourly's APPEND output: only windows
-    CLOSED at the final watermark (max ts − watermark) are emitted."""
+    CLOSED at the final watermark (max ts − WATERMARK_S) are emitted."""
     max_ts = events.agg(F.max(F.unix_timestamp("ts"))).first()[0]
-    cutoff = max_ts - watermark_s
+    cutoff = max_ts - WATERMARK_S
     return (
         events.groupBy(
             F.window("ts", "1 hour").alias("win"), "event_type"
@@ -438,8 +437,6 @@ def stream_sessions_native(
     in_dir: str,
     out_dir: str,
     checkpoint: str,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
 ) -> None:
     """NATIVE session windows (``F.session_window`` — Spark's built-in
     merging-session state operator, the declarative counterpart to the
@@ -452,8 +449,9 @@ def stream_sessions_native(
     cleared max(event time) − delay."""
     src = _source(spark, in_dir, EVENTS_SCHEMA, 4)
     agg = (
-        src.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
+        src.withWatermark("ts", WATERMARK)
+        .groupBy(F.session_window("ts", f"{GAP_S // 60} minutes").alias("sw"),
+                 "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(
@@ -532,7 +530,6 @@ def stream_chained_windows(
     in_dir: str,
     out_dir: str,
     checkpoint: str,
-    watermark: str = "2 hours",
 ) -> None:
     """CHAINED STATEFUL AGGREGATIONS (Spark 4 multiple-stateful-operator
     support, §2.10): 15-minute windowed counts re-aggregated into
@@ -544,7 +541,7 @@ def stream_chained_windows(
     (verified empirically — row-identical with the batch twin)."""
     src = _source(spark, in_dir, EVENTS_SCHEMA, 4)
     q15 = (
-        src.withWatermark("ts", watermark)
+        src.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "15 minutes").alias("w15"), "event_type")
         .agg(F.count(F.lit(1)).alias("n15"))
     )
@@ -569,7 +566,6 @@ def stream_dedup_then_window(
     in_dir: str,
     out_dir: str,
     checkpoint: str,
-    watermark: str = "2 hours",
 ) -> None:
     """MULTI-STATEFUL CHAIN #2 (§2.10): watermark-bounded streaming
     DEDUP feeding a windowed aggregation inside one query — the
@@ -581,7 +577,7 @@ def stream_dedup_then_window(
     doubled input)."""
     src = _source(spark, in_dir, EVENTS_SCHEMA, 1)
     dd = (
-        src.withWatermark("ts", watermark)
+        src.withWatermark("ts", WATERMARK)
         .dropDuplicatesWithinWatermark(["event_id"])
     )
     # cents BEFORE the fold (gotcha 8): a streaming state merge sums in

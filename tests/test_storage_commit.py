@@ -28,6 +28,12 @@ def _racing_link(monkeypatch, compete):
     return fired
 
 
+def _dirs(tbl, sub):
+    """The dirs under the table's ``data/`` or ``deletes/``."""
+    root = os.path.join(tbl, sub)
+    return set(os.listdir(root)) if os.path.isdir(root) else set()
+
+
 def _ks(spark, tbl):
     from sdg_engine.storage import read_snapshot
 
@@ -65,6 +71,7 @@ def test_cow_delete_conflicts_with_concurrent_tombstone(spark, tmp_path,
 
     tbl = str(tmp_path / "cow_mor")
     write_snapshot(spark.createDataFrame([(1,), (2,), (3,)], "k int"), tbl)
+    data_before = _dirs(tbl, "data")
     fired = _racing_link(monkeypatch, lambda: delete_from_snapshot(
         spark, tbl, spark.createDataFrame([(2,)], "k int"), "k"))
     with pytest.raises(ValueError, match="conflict"):
@@ -72,6 +79,7 @@ def test_cow_delete_conflicts_with_concurrent_tombstone(spark, tmp_path,
     monkeypatch.undo()
     assert fired["n"] == 1
     assert snapshot_history(tbl) == [1, 2]  # only the tombstone committed
+    assert _dirs(tbl, "data") == data_before  # the rewrite left no orphan
     assert _ks(spark, tbl) == [1, 3]
 
 
@@ -86,6 +94,7 @@ def test_position_delete_conflicts_with_concurrent_rewrite(spark, tmp_path,
 
     tbl = str(tmp_path / "pos_cow")
     write_snapshot(spark.createDataFrame([(1,), (2,), (3,)], "k int"), tbl)
+    deletes_before = _dirs(tbl, "deletes")
     fired = _racing_link(monkeypatch,
                          lambda: delete_where_cow(spark, tbl, "k = 1"))
     with pytest.raises(ValueError, match="conflict"):
@@ -94,6 +103,22 @@ def test_position_delete_conflicts_with_concurrent_rewrite(spark, tmp_path,
     assert fired["n"] == 1
     assert snapshot_history(tbl) == [1, 2]  # only the COW rewrite committed
     assert _ks(spark, tbl) == [2, 3]
+    # the rejected commit removed its tombstone dir
+    assert _dirs(tbl, "deletes") == deletes_before
+
+
+def test_rejected_append_leaves_no_orphan_dir(spark, tmp_path):
+    """An append whose schema conflicts with the table's raises and
+    removes the data dir it wrote before the commit's checks ran."""
+    from sdg_engine.storage import snapshot_history, write_snapshot
+
+    tbl = str(tmp_path / "schema_clash")
+    write_snapshot(spark.createDataFrame([(1,)], "k int"), tbl)
+    data_before = _dirs(tbl, "data")
+    with pytest.raises(ValueError, match="schema evolution conflict"):
+        write_snapshot(spark.createDataFrame([("a",)], "k string"), tbl)
+    assert snapshot_history(tbl) == [1]
+    assert _dirs(tbl, "data") == data_before
 
 
 def test_append_keeps_concurrent_rename(spark, tmp_path, monkeypatch):
@@ -142,7 +167,7 @@ def test_concurrent_commits_lose_no_update(tmp_path):
     from sdg_engine.storage import _commit, _head, snapshot_history
 
     tbl = str(tmp_path / "stress")
-    _commit(tbl, lambda _pid, _parent: {"mode": "overwrite", "dirs": []})
+    _commit(tbl, lambda _pid, _parent: {"mode": "overwrite", "dirs": []}, None)
     errors = []
 
     def worker(w: int) -> None:
@@ -150,7 +175,7 @@ def test_concurrent_commits_lose_no_update(tmp_path):
             for i in range(5):
                 _commit(tbl, lambda _pid, parent, d=f"w{w}-{i}": {
                     **parent, "mode": "append", "dirs": parent["dirs"] + [d],
-                })
+                }, None)
         except Exception as e:  # noqa: BLE001 — surfaced by the assert
             errors.append(e)
 

@@ -10,6 +10,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from sdg_engine import streaming as STR
+from sdg_engine.queries._common import _drain_confs
 from sdg_engine.queries.streaming import _stage_inputs
 
 SF = "/root/testdata/sf0.001"
@@ -51,7 +52,9 @@ def test_stream_sessionize_matches_batch(spark):
     batch window-chain sessionization, for sessions that END before the
     final watermark (the streaming-visible subset)."""
     in_dir, out, ck = _split_events(spark, "t_sessionize_")
-    STR.stream_sessionize(spark, in_dir, out, ck)
+    # the drain conf of the sibling streaming_session_window query
+    with _drain_confs(spark):
+        STR.stream_sessionize(spark, in_dir, out, ck)
     got = spark.read.parquet(out).toPandas()
     assert len(got) > 0
 
@@ -182,7 +185,8 @@ def test_stream_sessionize_late_event_does_not_crash(spark):
         # timeout fires and the merged session is emitted
         ("c6.parquet", _events([(7, 6 * 86400, 3)])),
     ])
-    STR.stream_sessionize(spark, in_dir, out, ck)  # must not raise
+    with _drain_confs(spark):
+        STR.stream_sessionize(spark, in_dir, out, ck)  # must not raise
     got = spark.read.parquet(out)
     # user 1's t=0 session was closed by the event-time timeout
     assert got.filter(F.col("user_id") == 1).count() >= 1
