@@ -246,9 +246,9 @@ def with_webmercator(df):
     (lon, lat) → (merc_x, merc_y)."""
     from pyspark.sql import functions as F
 
-    return df.withColumn("merc_x", F.expr(MERC_X_SQL.format(lon="lon"))).withColumn(
-        "merc_y", F.expr(MERC_Y_SQL.format(lat="lat"))
-    )
+    return df.withColumn(
+        "merc_x", F.expr(MERC_X_SQL.format(lon="lon"))
+    ).withColumn("merc_y", F.expr(MERC_Y_SQL.format(lat="lat")))
 
 
 # ---------------------------------------------------------------------------

@@ -285,8 +285,7 @@ _TILE_SCHEMA = "z int, tx int, ty int, mvt binary, n_features int"
 def write_road_mvt(segs: DataFrame, out_dir: str, level: int = 6) -> DataFrame:
     """C4 tile cut + S7 sink: clip road segments to tile rects, quantize
     to tile-local EXTENT coords, encode one ``roads``-layer MVT blob per
-    tile, write
-    (z, tx, ty, mvt) parquet.  Returns the tile DataFrame.
+    tile, write (z, tx, ty, mvt) parquet.  Returns the tile DataFrame.
 
     Execution shape: segment→tile cover (JVM cell explode) then ONE
     groupBy(tile).applyInPandas whose per-group numpy does clip +

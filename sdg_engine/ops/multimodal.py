@@ -257,8 +257,9 @@ def video_scene_cuts(video: DataFrame) -> DataFrame:
 def audio_stft_frames(audio: DataFrame) -> DataFrame:
     """STFT frame features (r05): decode → mono → FULL frames of
     ``frame`` = 256 samples at ``hop`` = 128 stride → per-frame rfft
-    magnitude → (energy, spectral centroid in Hz) per frame — the spectrogram
-    primitive (VAD / audio-quality filters operate on these frames).
+    magnitude → (energy, spectral centroid in Hz) per frame — the
+    spectrogram primitive (VAD / audio-quality filters operate on these
+    frames).
 
     SPEC (the golden twin regenerates the identical waveform and runs
     the same framing): frame f covers samples [f*hop, f*hop + frame);

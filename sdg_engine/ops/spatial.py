@@ -132,9 +132,12 @@ def cover_bbox_cells(
 
     # COALESCE → non-nullable join key (see with_point_cell)
     df = df.withColumn(
-        "cell_id", F.coalesce(F.expr(pack_cell_expr("_cix", "_ciy", level)), F.lit(-1))
+        "cell_id",
+        F.coalesce(F.expr(pack_cell_expr("_cix", "_ciy", level)), F.lit(-1)),
     )
-    df = df.withColumnRenamed("_cix", "cell_id_ix").withColumnRenamed("_ciy", "cell_id_iy")
+    df = df.withColumnRenamed("_cix", "cell_id_ix").withColumnRenamed(
+        "_ciy", "cell_id_iy"
+    )
     return df.drop("_ix0", "_iy0", "_ix1", "_iy1")
 
 
@@ -471,11 +474,12 @@ def knn_nearest_road(
     """J4 ★ + W1: nearest road within ``cutoff_m`` per image, exact.
 
     k-ring-expansion kNN, collapsed to ONE shuffle: at
-    ``level_for_cutoff(cutoff_m)`` the cell size is >= cutoff, so every segment within cutoff of a point
-    lies in the point's 3×3 cell block (proof: |p-q|∞ <= |p-q|₂ <
-    cellsize ⇒ q's cell is a Chebyshev-1 neighbor).  We pre-expand the
-    *road* side by kring(1) (small side, exploded once) and join the
-    image side on its single point cell — no probe-side row blowup.
+    ``level_for_cutoff(cutoff_m)`` the cell size is >= cutoff, so every
+    segment within cutoff of a point lies in the point's 3×3 cell block
+    (proof: |p-q|∞ <= |p-q|₂ < cellsize ⇒ q's cell is a Chebyshev-1
+    neighbor).  We pre-expand the *road* side by kring(1) (small side,
+    exploded once) and join the image side on its single point cell —
+    no probe-side row blowup.
     Exact point→segment distance + (dist, road_id) window tie-break.
 
     Emits: image_id, road_id, dist_m, k_ring (Chebyshev distance from
@@ -681,7 +685,9 @@ def with_near_road_flag(
         (F.col("s.rcell") == F.col("p._ncell").outer())
         & (dist <= F.lit(float(cutoff_m)))
     ).exists()
-    return probe.select(*[F.col(f"p.{c}") for c in points_geo.columns], near.alias("near_road"))
+    return probe.select(
+        *[F.col(f"p.{c}") for c in points_geo.columns], near.alias("near_road")
+    )
 
 
 def knn_ring_iterative(

@@ -23,10 +23,11 @@ _PR_DAMP = 85  # damping 0.85, held as integer percent
 
 
 def pagerank(edges: DataFrame) -> DataFrame:
-    """``_PR_ITERS``-iteration PageRank over (src, dst) edge rows, INTEGER-EXACT:
-    rank mass lives in BIGINT micro-units and every division is an
-    explicit FLOOR, so iteration order and fold order cannot perturb the
-    result (the oracle unrolls the identical recurrence in SQL).
+    """``_PR_ITERS``-iteration PageRank over (src, dst) edge rows,
+    INTEGER-EXACT: rank mass lives in BIGINT micro-units and every
+    division is an explicit FLOOR, so iteration order and fold order
+    cannot perturb the result (the oracle unrolls the identical
+    recurrence in SQL).
 
     Plan shape per iteration: edges⋈rank equi-join on src (hash
     partition on the edge key — at planet scale both sides co-partition

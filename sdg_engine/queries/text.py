@@ -115,8 +115,8 @@ def minhash_lsh_pairs(spark, sf_dir):
       ``salt = pmod(xxhash64(doc_id), n_salt(bucket))`` and the build
       side EXPLODES over all n_salt values, so the join key becomes
       (band, mh, salt), each original pair matches exactly once, and a
-      hot bucket (over 8 rows) splits n_salt ways.  Cold buckets keep salt 0 —
-      no replication cost.  Result set is hash-identical to the
+      hot bucket (over 8 rows) splits n_salt ways.  Cold buckets keep
+      salt 0 — no replication cost.  Result set is hash-identical to the
       unsalted join (oracle-checked).
     """
     from ..skew import plan_salts
@@ -327,9 +327,10 @@ def ngram_jaccard_indexed(spark, sf_dir):
     inverted shingle index generates candidate pairs — only docs
     sharing a shingle held by at most 10 docs meet (stop-shingle
     drop bounds the worst bucket at 10² pairs) — then the exact
-    Jaccard runs on candidates only, keeping pairs at Jaccard >= 0.2.  Exactness caveat vs the
-    brute-force baseline is PRECISELY characterized: a pair is missed
-    iff every shared shingle is a stop-shingle."""
+    Jaccard runs on candidates only, keeping pairs at Jaccard >= 0.2.
+    Exactness caveat vs the brute-force baseline is PRECISELY
+    characterized: a pair is missed iff every shared shingle is a
+    stop-shingle."""
     docs = _t(spark, sf_dir, "documents")
     sets = _shingle_sets(docs)
     inv = sets.select("doc_id", F.explode("sh").alias("s"))

@@ -62,8 +62,8 @@ _M64 = (1 << 64) - 1
 
 def xxhash64_long(values):
     """Numpy twin of Spark's ``xxhash64(bigint)`` (XXH64 single-long path,
-    Spark's fixed seed 42) — lets the DRIVER compute bucket assignments without
-    a Spark job.  Verified bit-equal against F.xxhash64 in tests.
+    Spark's fixed seed 42) — lets the DRIVER compute bucket assignments
+    without a Spark job.  Verified bit-equal against F.xxhash64 in tests.
 
     Returns signed int64, like the Spark expression."""
     import numpy as np
