@@ -321,9 +321,9 @@ def video_motion_blocks(video: DataFrame) -> DataFrame:
     """BLOCK-MATCHING MOTION ESTIMATION (r05 wave 11): for every
     consecutive frame pair, every interior ``block``x``block`` block
     (``block`` = 8) of the current frame finds the shift (dy, dx) in
-    [-search, search]^2 (``search`` = 4)
-    minimizing the integer SAD against the previous frame — the motion
-    primitive video curation ranks clips by (static vs dynamic).
+    [-search, search]^2 (``search`` = 4) minimizing the integer SAD
+    against the previous frame — the motion primitive video curation
+    ranks clips by (static vs dynamic).
 
     SPEC (shared with the golden twin): blocks tile the grid starting
     at (search, search) with stride ``block`` so every candidate shift
