@@ -1,10 +1,10 @@
 #!/usr/bin/env python
 """Capture .explain("formatted") for a list of queries into plans/r06/.
 
-Usage: PYTHONPATH=<tree> python scripts/capture_plans.py <suffix> q1,q2,...
-Writes plans/r06/<query>_<suffix>.txt (suffix = before|after).
-Run from a checkout of the tree whose plans you want (a git worktree of
-the round-start commit for "before").
+Usage: PYTHONPATH=<tree> python <tree>/scripts/capture_plans.py <suffix> q1,q2,... [out_dir]
+Writes <query>_<suffix>.txt (suffix = before|after) into ``out_dir``,
+by default the plans/r06/ of the checkout this script sits in, so a
+clone of the parent commit captures into its own tree.
 """
 from __future__ import annotations
 
@@ -15,7 +15,9 @@ import sys
 def main() -> None:
     suffix = sys.argv[1]
     names = sys.argv[2].split(",")
-    out_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/repo/plans/r06"
+    out_dir = sys.argv[3] if len(sys.argv) > 3 else os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r06"
+    )
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from sdg_engine.session import get_spark

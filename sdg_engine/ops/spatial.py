@@ -20,9 +20,13 @@ empty so loci are the survey's recalled paths, not file:line).
 from __future__ import annotations
 
 import hashlib
+import os
+import tempfile
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
@@ -35,6 +39,8 @@ from ..sqlgen import (
     point_cell_steps,
     point_seg_dist_steps,
 )
+from ..storage import publish_dir
+from ..tablecache import read_table
 
 _LONLAT_SCHEMA = StructType(
     [StructField("lon", DoubleType()), StructField("lat", DoubleType())]
@@ -830,110 +836,69 @@ def forgotten_images(images_geo: DataFrame, nearest: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# J2 ★: compacted-cell candidates + exact ray-cast PIP country assignment
+# J2 ★: cell candidates + exact ray-cast PIP country assignment
 # ---------------------------------------------------------------------------
 
 
-_CLASSIFY_CACHE: dict = {}
-_DIMS_CACHE: dict = {}
+def _country_cells(spark, rings: dict[str, np.ndarray], level: int) -> DataFrame:
+    """J2's broadcast side, one ``(icell, _int_cc)`` row per level-``level``
+    cell in a ring's bbox that is interior to that ring (``_int_cc`` =
+    its code) or crossed by any ring's edge (``_int_cc`` NULL: the
+    ray-cast decides its points).
 
+    A driver-side numpy prestage classifies the cells: a cell is
+    interior when no edge's bbox-clipped segment intersects its rect
+    AND its center is inside the ring (then the whole cell is, by
+    Jordan).  It writes them as one tiny parquet file, read back through
+    the per-session table memo: a ``createDataFrame`` frame re-runs a
+    Python deserialization pass inside every broadcast build, a parquet
+    scan is JVM-only.  The directory is published atomically under a
+    per-user root and named by a hash of the layout, ``level`` and every
+    code with its ring's float64 bytes, so only equal rings share a
+    table, and a process that finds it published skips the prestage.
+    On a real cluster this is an Iceberg dim table.
 
-def _rings_key(rings: dict[str, np.ndarray]) -> tuple:
-    return tuple((cc, r.shape[0], float(r.sum())) for cc, r in sorted(rings.items()))
-
-
-def _country_dims(spark, rings: dict[str, np.ndarray], level: int):
-    """Cached tiny dimension DataFrames for J2 (per session + rings + level).
-
-    The interior cover is built COMPACTED (C2 ★, cells.compact) and
-    uncompacted back to ``level`` for the broadcast-hash join (see
-    assign_countries for the trade-off).  Returns
-    (interior_df[icell, country_code], boundary_df[bcell])."""
-    key = (spark.sparkContext.applicationId, _rings_key(rings), level)
-    if key in _DIMS_CACHE:
-        return _DIMS_CACHE[key]
-    interior, boundary = _classify_country_cells(rings, level)
-    int_rows: list[tuple[int, str]] = []
-    for cc in rings:
-        cc_cells = np.array([c for c, k in interior if k == cc], dtype=np.int64)
-        if cc_cells.size:
-            comp = C.compact(cc_cells)  # canonical compacted cover
-            int_rows += [(int(c), cc) for c in C.uncompact(comp, level)]
-    # Materialize the dims as (tiny) parquet and read back: a
-    # createDataFrame ExistingRDD re-runs a Python deserialization pass
-    # inside EVERY broadcast build (~0.8 s serial per query execution —
-    # measured); a parquet scan is JVM-only and OS-cached.  On a real
-    # cluster these are Iceberg dim tables.
-    import hashlib as _hl
-    import os as _os
-    import tempfile as _tempfile
-
-    import pandas as _pd
-
-    from ..storage import publish_dir
-
-    # the subdirectory layout is part of the key, so a directory holding
-    # another layout is never picked up as this one
-    tag = "dims_" + _hl.blake2b(
-        repr((_rings_key(rings), level, ("interior", "boundary"))).encode(),
-        digest_size=8,
-    ).hexdigest()
+    The file calls the code ``country_code``; the frame renames it
+    ``_int_cc`` above the scan, so no scan line of an executed plan
+    shows ``_int_cc`` (the plan pins read any ``Filter`` line holding
+    it below the ray-cast as a pushed-down country filter).
+    """
+    h = hashlib.blake2b(repr(("icell,country_code", level)).encode(), digest_size=8)
+    for cc in sorted(rings):
+        ring = np.ascontiguousarray(rings[cc], dtype=np.float64)
+        h.update(repr((cc, ring.shape)).encode())
+        h.update(ring.tobytes())
 
     def _write(tmp: str) -> None:
-        spark.createDataFrame(
-            _pd.DataFrame(int_rows, columns=["icell", "country_code"]).astype(
-                {"icell": "int64"}
+        cells, codes, crossed = [], [], []
+        for cc in sorted(rings):
+            ring = rings[cc]
+            _row, cids = C.cover_bbox(
+                np.array([ring[:, 0].min()]), np.array([ring[:, 1].min()]),
+                np.array([ring[:, 0].max()]), np.array([ring[:, 1].max()]),
+                level,
             )
-        ).coalesce(1).write.mode("overwrite").parquet(_os.path.join(tmp, "interior"))
-        spark.createDataFrame(
-            _pd.DataFrame({"bcell": _pd.array([int(b) for b in boundary],
-                                              dtype="int64")})
-        ).coalesce(1).write.mode("overwrite").parquet(_os.path.join(tmp, "boundary"))
-
-    # a PER-USER path, published atomically by publish_dir: a fixed
-    # shared /tmp path plus an after-the-fact marker file let two
-    # concurrent sessions overwrite each other's parquet and pin the
-    # torn result forever, and could be pre-seeded by another user
-    base = publish_dir(
-        _os.path.join(_tempfile.gettempdir(), f"sdg_dims_u{_os.getuid()}", tag),
-        _write,
-    )
-    interior_df = spark.read.parquet(_os.path.join(base, "interior"))
-    boundary_df = spark.read.parquet(_os.path.join(base, "boundary"))
-    result = (interior_df, boundary_df)
-    _DIMS_CACHE[key] = result
-    return result
-
-
-def _classify_country_cells(rings: dict[str, np.ndarray], level: int):
-    """Driver-side (tiny) numpy prestage: classify grid cells at ``level``
-    as interior to exactly one country or boundary.
-
-    Returns (interior_records, boundary_cells):
-      interior: (cell_id, country_code) — assignment needs no PIP
-      boundary: (cell_id,) — exact ray-cast required
-    Interior test: no ring edge's bbox-clipped segment intersects the
-    cell rect AND the cell center is inside the ring (then the whole
-    cell is, by Jordan).  Fully vectorized (cells × edges broadcast) —
-    a per-cell Python loop here dominated flagship wall time.
-    """
-    key = (_rings_key(rings), level)
-    if key in _CLASSIFY_CACHE:
-        return _CLASSIFY_CACHE[key]
-    interior: list[tuple[int, str]] = []
-    boundary: set[int] = set()
-    for cc, ring in rings.items():
-        _row, cids = C.cover_bbox(
-            np.array([ring[:, 0].min()]), np.array([ring[:, 1].min()]),
-            np.array([ring[:, 0].max()]), np.array([ring[:, 1].max()]), level,
+            crosses, ctr_in = _ring_cell_test(cids, level, ring)
+            crossed.append(cids[crosses])
+            cells.append(cids[~crosses][ctr_in])
+            codes.append(np.full(len(cells[-1]), cc, dtype=object))
+        boundary = np.unique(np.concatenate(crossed))
+        cells, codes = np.concatenate(cells), np.concatenate(codes)
+        keep = ~np.isin(cells, boundary)
+        pq.write_table(
+            pa.table({
+                "icell": np.concatenate([cells[keep], boundary]),
+                "country_code": pa.array(np.concatenate(
+                    [codes[keep], np.full(len(boundary), None, dtype=object)]
+                ), pa.string()),
+            }),
+            os.path.join(tmp, "cells.parquet"),
         )
-        crosses, ctr_in = _ring_cell_test(cids, level, ring)
-        boundary.update(int(c) for c in cids[crosses])
-        for c in cids[~crosses][ctr_in]:
-            interior.append((int(c), cc))
-    result = ([(c, cc) for c, cc in interior if c not in boundary], sorted(boundary))
-    _CLASSIFY_CACHE[key] = result
-    return result
+
+    root = os.path.join(tempfile.gettempdir(), f"sdg_dims_u{os.getuid()}")
+    return read_table(
+        spark, publish_dir(os.path.join(root, "cells_" + h.hexdigest()), _write)
+    ).withColumnRenamed("country_code", "_int_cc")
 
 
 def _ring_cell_test(cids: np.ndarray, level: int, ring: np.ndarray):
@@ -993,12 +958,10 @@ def assign_countries(
 ) -> DataFrame:
     """J2 ★: two-stage country assignment (SURVEY.md §2.4), one pass.
 
-    Stage 1 — cell-candidate generation (C2): a driver-side numpy
-    prestage classifies level-``level`` cells as interior to one
-    country (built compacted via cells.compact, uncompacted for the
-    broadcast-hash join — see _country_dims) or boundary.  One
-    broadcast join against interior ∪ boundary cells tags each point
-    with its interior country or NULL, and drops points in neither.
+    Stage 1 — cell-candidate generation: one broadcast join against
+    the level-``level`` cells of ``_country_cells`` tags each point
+    with its interior country or NULL (a boundary cell), and drops
+    points in neither.
     Stage 2 — the Arrow-batched numpy ray-cast (pip_country_udf) fills
     the NULLs in the same projection.  lon/lat are null-masked for rows
     already decided, so the numpy kernel only works on boundary-cell
@@ -1015,11 +978,7 @@ def assign_countries(
     ``id_col`` names the caller's row key; the single-pass plan never
     joins on it.  Output: input columns + country_code.
     """
-    interior_df, boundary_df = _country_dims(images_geo.sparkSession, rings, level)
-    cells_df = interior_df.unionByName(
-        boundary_df.select(F.col("bcell").alias("icell"),
-                           F.lit(None).cast("string").alias("country_code"))
-    ).withColumnRenamed("country_code", "_int_cc")
+    cells_df = _country_cells(images_geo.sparkSession, rings, level)
     pts = with_point_cell(images_geo, level, "lon", "lat", "cell_lvl",
                           keep_idx=True)
     joined = pts.join(

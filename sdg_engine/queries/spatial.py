@@ -82,9 +82,8 @@ AOI_RING.append(AOI_RING[0])  # closed
 def spatial_region_query(spark, sf_dir):
     """J2b (r04): ad-hoc REGION query — which points fall inside a
     user-supplied polygon (the reusable form of the country machinery:
-    ``assign_countries`` with a one-ring dict runs the same compacted
-    interior dims + boundary-strip + exact ray-cast pipeline for any
-    AOI).  Returns the inside point ids; the oracle ray-casts the same
+    ``assign_countries`` with a one-ring dict runs the same cell-table
+    join + exact ray-cast pipeline for any AOI).  Returns the inside point ids; the oracle ray-casts the same
     pentagon edges relationally."""
     import numpy as np
 
@@ -146,7 +145,7 @@ def spatial_knn_topk(spark, sf_dir):
 
 
 def spatial_pip_country(spark, sf_dir):
-    """J2 ★: compacted-cell candidates + exact ray-cast assignment."""
+    """J2 ★: cell candidates + exact ray-cast assignment."""
     cc = SP.assign_countries(
         points_df(spark, sf_dir), harness_rings(), level=9, id_col="point_id"
     )

@@ -527,12 +527,10 @@ def test_buffer_cells_superset_of_hit_cells(spark, sf_dir):
     assert all(r["n_cells"] <= 64 * 64 for r in rows)
 
 
-def test_streaming_left_join_emits_nulls(spark, sf_dir):
+def test_streaming_left_join_emits_nulls(query_result):
     """The outer-ness is load-bearing: unmatched clicks appear with
     NULL view (counted), matched never exceed total."""
-    from sdg_engine.queries.streaming import streaming_left_join
-
-    rows = streaming_left_join(spark, sf_dir).collect()
+    rows = query_result("streaming_left_join").collect()
     assert rows and any(r["n_unmatched"] > 0 for r in rows)
     for r in rows:
         assert 0 <= r["n_unmatched"] <= r["n_rows"]

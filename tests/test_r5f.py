@@ -301,15 +301,12 @@ def test_zhang_suen_line_is_fixed_point():
 # Streaming python data source — multi-batch drain + python twin
 # ---------------------------------------------------------------------------
 
-def test_ticker_stream_matches_python_twin(spark):
+def test_ticker_stream_matches_python_twin(query_result):
     from collections import defaultdict
 
-    from sdg_engine.queries.streaming import (
-        _TICK_N,
-        streaming_pysource_windows,
-    )
+    from sdg_engine.queries.streaming import _TICK_N
 
-    out = _pdf(streaming_pysource_windows(spark, SF))
+    out = _pdf(query_result("streaming_pysource_windows"))
     want = defaultdict(lambda: [0, 0, 0])
     for i in range(_TICK_N):
         hr = (1_600_000_000_000_000 + i * 37_000_000) // 3_600_000_000

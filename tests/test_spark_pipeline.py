@@ -107,7 +107,7 @@ def test_knn_exact_vs_brute_force(spark, geo, oracle_lonlat):
 
 
 def test_assign_countries_exact(spark, geo, oracle_lonlat):
-    """J2: two-stage (compacted cells + ray-cast) == pure numpy PIP."""
+    """J2: two-stage (cell candidates + ray-cast) == pure numpy PIP."""
     lons, lats = oracle_lonlat
     cc = (
         SP.assign_countries(geo, FX.get_country_rings(), 7)
@@ -117,6 +117,75 @@ def test_assign_countries_exact(spark, geo, oracle_lonlat):
     want = FX.country_of_points(lons, lats)
     assert len(cc) == N_IMG
     assert list(cc["country_code"]) == list(want)
+
+
+def test_assign_countries_tells_apart_rings_with_equal_sums(spark):
+    """J2's cell table is keyed on the ring bytes: a square and the same
+    square shifted by (+d, -d) have one code, one vertex count and one
+    coordinate sum, yet each call must assign exactly the points inside
+    its own square (numpy brute force)."""
+    rng = np.random.default_rng(15)
+    lon, lat = rng.uniform(0.0, 10.0, (2, 4000))
+    pts = spark.createDataFrame(pd.DataFrame(
+        {"point_id": np.arange(len(lon)), "lon": lon, "lat": lat}))
+    for dx in (0.0, 1.5):
+        x0, y0, x1, y1 = 2.0 + dx, 2.0 - dx, 4.0 + dx, 4.0 - dx
+        ring = np.array([(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)])
+        got = SP.assign_countries(pts, {"SQ": ring}, 7, id_col="point_id")
+        want = np.flatnonzero((x0 < lon) & (lon < x1) & (y0 < lat) & (lat < y1))
+        assert sorted(r.point_id for r in got.collect()) == list(want), dx
+
+
+def test_country_cells_bind_to_the_calling_session(spark):
+    """A newSession() sibling shares the applicationId but gets its own
+    J2 cell frame, bound to itself."""
+    s2 = spark.newSession()
+    rings = FX.get_country_rings()
+    assert SP._country_cells(spark, rings, 7).sparkSession is spark
+    assert SP._country_cells(s2, rings, 7).sparkSession is s2
+
+
+@pytest.mark.parametrize("cover", ["random", "coarser_than_bin", "world"])
+def test_range_join_matches_nested_loop(spark, cover):
+    """J6 brute-force twin: ``range_join_compacted`` returns exactly the
+    (point, cover cell) pairs whose cells nest by grid index, on a
+    seeded random mixed-level cover, on cells all coarser than
+    ``bin_level``, and on the single level-0 cell.  The probe holds
+    random cells plus each cover cell's first and last descendant and
+    both neighbours, and the first and last cell of every bin."""
+    L, B = 8, 3
+    rng = np.random.default_rng(6)
+    if cover == "world":
+        lv = np.zeros(1, dtype=np.int64)
+    else:
+        hi_lv = B if cover == "coarser_than_bin" else L + 1
+        lv = rng.integers(0, hi_lv, 40)
+    cover_ids = C.pack(lv, rng.integers(0, 1 << lv), rng.integers(0, 1 << lv))
+    code = cover_ids & ((1 << 54) - 1)
+    lo, hi = code << 2 * (L - lv), (code + 1) << 2 * (L - lv)
+    bins = np.arange(1 << 2 * B) << 2 * (L - B)
+    pcodes = np.concatenate([
+        rng.integers(0, 1 << 2 * L, 300), lo - 1, lo, hi - 1, hi,
+        bins, bins - 1,
+    ])
+    pcodes = pcodes[(pcodes >= 0) & (pcodes < 1 << 2 * L)]
+    pcells = (np.int64(L) << 54) | pcodes
+    got = SP.range_join_compacted(
+        spark.createDataFrame(pd.DataFrame(
+            {"point_id": np.arange(len(pcells)), "cell_id": pcells})),
+        spark.createDataFrame(pd.DataFrame({"cell_id": cover_ids, "level": lv})),
+        point_level=L, bin_level=B,
+    )
+    _l, px, py = C.unpack(pcells)
+    _l, cx, cy = C.unpack(cover_ids)
+    shift = L - lv
+    hit = ((px[:, None] >> shift) == cx) & ((py[:, None] >> shift) == cy)
+    want = sorted((int(p), int(cover_ids[c]), int(lv[c]))
+                  for p, c in zip(*np.nonzero(hit)))
+    assert want
+    assert sorted(
+        (r.point_id, r.cover_cell, r.cover_level) for r in got.collect()
+    ) == want
 
 
 def test_forgotten_is_complement(spark, geo):
@@ -209,14 +278,12 @@ def test_scoped_confs_restores_and_unsets(spark):
         "streaming_full_outer_join",
     ],
 )
-def test_oracle_parity_subset(spark, sf_dir, name):
+def test_oracle_parity_subset(query_result, sf_dir, name):
     """Driver-shaped compare on the judge-critical queries and on every
     streaming drain (full sweep runs in paritycheck.check_all; kept to a
     subset here for runtime)."""
     from sdg_engine.oracles import ORACLES
     from sdg_engine.paritycheck import compare, run_oracle
-    from sdg_engine.queries import QUERIES
 
-    sdf = QUERIES[name](spark, sf_dir)
-    ok, msg = compare(sdf, run_oracle(ORACLES[name], sf_dir))
+    ok, msg = compare(query_result(name), run_oracle(ORACLES[name], sf_dir))
     assert ok, msg
