@@ -190,11 +190,11 @@ def seg_bbox_dist_sq(
     xmax: float,
     ymax: float,
 ) -> np.ndarray:
-    """Lower bound: squared distance between segments and a rectangle.
-
-    Used to prune kNN candidates ring-by-ring (SURVEY.md J4): if the
-    bound already exceeds the current best, skip the exact test.
-    Conservative (0 when bboxes overlap)."""
+    """Lower bound on each segment's squared distance to a rectangle:
+    the squared distance between the segment's bbox and the rectangle
+    (0 when they overlap).  Nothing in the engine calls it: kNN prunes
+    by growing k-rings of cells (``ops/spatial.knn_ring_iterative``),
+    not by this bound."""
     sxmin = np.minimum(ax, bx)
     sxmax = np.maximum(ax, bx)
     symin = np.minimum(ay, by)

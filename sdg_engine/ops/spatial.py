@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import hashlib
 import os
-import tempfile
 
 import numpy as np
 import pandas as pd
@@ -39,7 +38,7 @@ from ..sqlgen import (
     point_cell_steps,
     point_seg_dist_steps,
 )
-from ..storage import publish_dir
+from ..storage import publish_dir, scratch_root
 from ..tablecache import read_table
 
 _LONLAT_SCHEMA = StructType(
@@ -147,28 +146,22 @@ def cover_bbox_cells(
     return df.drop("_ix0", "_iy0", "_ix1", "_iy1")
 
 
-def with_kring(df: DataFrame, level: int, k: int, cell: str = "cell_id",
-               out: str = "ring_cell_id", idx_cols: tuple[str, str] | None = None) -> DataFrame:
+def with_kring(df: DataFrame, level: int, k: int, out: str = "ring_cell_id",
+               *, idx_cols: tuple[str, str]) -> DataFrame:
     """C3: explode the (2k+1)² Chebyshev neighborhood of each cell.
 
     JVM-side; out-of-world neighbors are filtered.  Also emits
     ``k_ring`` = Chebyshev distance of each neighbor (used by J4's
-    golden output).  Pass ``idx_cols=(ix, iy)`` when the producer kept
-    the grid indices (with_point_cell/cover_bbox_cells do) — decoding
-    them from the packed id works but re-inlines the upstream cell
-    expression per bit after projection collapse.
+    golden output).  The cell is given by its grid indices
+    ``idx_cols=(ix, iy)``, which the cell producers keep
+    (with_point_cell/cover_bbox_cells do); decoding them from the
+    packed id would re-inline the upstream cell expression per bit
+    after projection collapse.
     """
-    from ..sqlgen import LEVEL_SHIFT, morton_squeeze_expr, pack_cell_expr
+    from ..sqlgen import pack_cell_expr
 
     n = 1 << level
-    if idx_cols is not None:
-        df = df.withColumn("_vx", F.col(idx_cols[0])).withColumn("_vy", F.col(idx_cols[1]))
-    else:
-        # decode ix, iy from the morton code (linear squeeze)
-        df = df.withColumn("_code", F.expr(f"({cell} & {(1 << LEVEL_SHIFT) - 1})"))
-        df = df.withColumn("_vx", F.expr(morton_squeeze_expr("_code", level, odd=False)))
-        df = df.withColumn("_vy", F.expr(morton_squeeze_expr("_code", level, odd=True)))
-        df = df.drop("_code")
+    df = df.withColumn("_vx", F.col(idx_cols[0])).withColumn("_vy", F.col(idx_cols[1]))
     df = (
         df.withColumn("_dx", F.explode(F.expr(f"sequence({-k}, {k})")))
         .withColumn("_dy", F.explode(F.expr(f"sequence({-k}, {k})")))
@@ -241,7 +234,7 @@ def ring_cover(segs: DataFrame, level: int) -> DataFrame:
     caller picks its own reduction.
     """
     ring = with_kring(
-        segments_with_cells(segs, level), level, 1, "cell_id", "ring_cell_id",
+        segments_with_cells(segs, level), level, 1, "ring_cell_id",
         idx_cols=("cell_id_ix", "cell_id_iy"),
     )
     return ring.select(
@@ -746,7 +739,7 @@ def knn_ring_iterative(
 
     for k in (1, 2, 4):
         ring_cells = with_kring(
-            frontier, level, k, "cell_id", "ring_cell_id",
+            frontier, level, k, "ring_cell_id",
             idx_cols=("cell_id_ix", "cell_id_iy"),
         )
         cands = ring_cells.join(
@@ -852,16 +845,15 @@ def _country_cells(spark, rings: dict[str, np.ndarray], level: int) -> DataFrame
     Jordan).  It writes them as one tiny parquet file, read back through
     the per-session table memo: a ``createDataFrame`` frame re-runs a
     Python deserialization pass inside every broadcast build, a parquet
-    scan is JVM-only.  The directory is published atomically under a
-    per-user root and named by a hash of the layout, ``level`` and every
-    code with its ring's float64 bytes, so only equal rings share a
-    table, and a process that finds it published skips the prestage.
-    On a real cluster this is an Iceberg dim table.
+    scan is JVM-only.  The directory is published atomically under the
+    application's :func:`storage.scratch_root` and named by a hash of
+    the layout, ``level`` and every code with its ring's float64 bytes,
+    so only equal rings share a table, and a later call in the same
+    application that finds it published skips the prestage.  On a real
+    cluster this is an Iceberg dim table.
 
     The file calls the code ``country_code``; the frame renames it
-    ``_int_cc`` above the scan, so no scan line of an executed plan
-    shows ``_int_cc`` (the plan pins read any ``Filter`` line holding
-    it below the ray-cast as a pushed-down country filter).
+    ``_int_cc`` above the scan.
     """
     h = hashlib.blake2b(repr(("icell,country_code", level)).encode(), digest_size=8)
     for cc in sorted(rings):
@@ -895,10 +887,10 @@ def _country_cells(spark, rings: dict[str, np.ndarray], level: int) -> DataFrame
             os.path.join(tmp, "cells.parquet"),
         )
 
-    root = os.path.join(tempfile.gettempdir(), f"sdg_dims_u{os.getuid()}")
-    return read_table(
-        spark, publish_dir(os.path.join(root, "cells_" + h.hexdigest()), _write)
-    ).withColumnRenamed("country_code", "_int_cc")
+    out = os.path.join(scratch_root(spark), "cells_" + h.hexdigest())
+    return read_table(spark, publish_dir(out, _write)).withColumnRenamed(
+        "country_code", "_int_cc"
+    )
 
 
 def _ring_cell_test(cids: np.ndarray, level: int, ring: np.ndarray):

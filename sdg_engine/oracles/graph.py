@@ -108,14 +108,8 @@ d{k + 1} AS (
 )"""
         for k in range(_SPW_ROUNDS)
     )
-    return f"""
-WITH nds AS (SELECT list_transform(coords, c -> {node}) AS nds
-             FROM read_parquet('{roads_pq}')),
-ab AS (SELECT nds[i] AS a, nds[i + 1] AS b
-       FROM nds, UNNEST(generate_series(1, len(nds) - 1)) AS u(i)),
-und AS (SELECT DISTINCT LEAST(a, b) AS u, GREATEST(a, b) AS v
-        FROM ab WHERE a <> b),
-wed AS (SELECT u, v, {w} AS w FROM und),
+    prelude = _UND_PRELUDE.format(node=node, roads=roads_pq)
+    return prelude + f"""wed AS (SELECT u, v, {w} AS w FROM und),
 e0 AS (SELECT u AS src, v AS dst, w FROM wed
        UNION ALL SELECT v, u, w FROM wed),
 nodes AS (SELECT DISTINCT src FROM e0),
@@ -292,13 +286,12 @@ ORACLES.update({
 })
 
 
-def fixture_oracles() -> dict[str, str]:
-    """Oracles that embed the absolute sf0.01 fixture and goldens paths.
-    Built on call: building them at import would generate the fixture
-    on every import."""
-    fdir, roads, img, gdir = fixture_paths()
-    node = _BFS_NODE.format(x="c.x", y="c.y")
-    bfs = f"""
+# The quantized road graph over the sf0.01 roads parquet, as the CTE
+# preludes its oracles start from: `e` the symmetric edge list and
+# `deg` its node degrees (the recursive-walk oracles), or `und` one
+# (u < v) row per undirected edge.  Each ends with the comma before
+# the oracle's own CTEs.
+_WALK_PRELUDE = """
 WITH RECURSIVE
 nds AS (SELECT list_transform(coords, c -> {node}) AS nds
         FROM read_parquet('{roads}')),
@@ -309,7 +302,26 @@ e AS (SELECT DISTINCT src, dst FROM (
         UNION ALL SELECT b AS src, a AS dst FROM ab)
       WHERE src <> dst),
 deg AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY src),
-seed AS (SELECT src AS node FROM deg ORDER BY deg DESC, src ASC LIMIT 1),
+"""
+_UND_PRELUDE = """
+WITH nds AS (SELECT list_transform(coords, c -> {node}) AS nds
+             FROM read_parquet('{roads}')),
+ab AS (SELECT nds[i] AS a, nds[i + 1] AS b
+       FROM nds, UNNEST(generate_series(1, len(nds) - 1)) AS u(i)),
+und AS (SELECT DISTINCT LEAST(a, b) AS u, GREATEST(a, b) AS v
+        FROM ab WHERE a <> b),
+"""
+
+
+def fixture_oracles() -> dict[str, str]:
+    """Oracles that embed the absolute sf0.01 fixture and goldens paths.
+    Built on call: building them at import would generate the fixture
+    on every import."""
+    fdir, roads, img, gdir = fixture_paths()
+    node = _BFS_NODE.format(x="c.x", y="c.y")
+    walk = _WALK_PRELUDE.format(node=node, roads=roads)
+    und = _UND_PRELUDE.format(node=node, roads=roads)
+    bfs = walk + """seed AS (SELECT src AS node FROM deg ORDER BY deg DESC, src ASC LIMIT 1),
 walk(node, hops) AS (
   SELECT node, 0 FROM seed
   UNION
@@ -323,18 +335,7 @@ FROM lab GROUP BY hops
 """
     # closeness_roads: the BFS recursive walk generalized to a labeled
     # (seed, node) pair walk over the SAME quantized graph.
-    closeness = f"""
-WITH RECURSIVE
-nds AS (SELECT list_transform(coords, c -> {node}) AS nds
-        FROM read_parquet('{roads}')),
-ab AS (SELECT nds[i] AS a, nds[i + 1] AS b
-       FROM nds, UNNEST(generate_series(1, len(nds) - 1)) AS u(i)),
-e AS (SELECT DISTINCT src, dst FROM (
-        SELECT a AS src, b AS dst FROM ab
-        UNION ALL SELECT b AS src, a AS dst FROM ab)
-      WHERE src <> dst),
-deg AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY src),
-seeds AS (SELECT src AS seed FROM deg ORDER BY deg DESC, src ASC LIMIT 5),
+    closeness = walk + """seeds AS (SELECT src AS seed FROM deg ORDER BY deg DESC, src ASC LIMIT 5),
 walk(seed, node, hops) AS (
   SELECT seed, seed, 0 FROM seeds
   UNION
@@ -350,14 +351,7 @@ FROM lab GROUP BY seed
 """
     # triangle_count_roads: identical degree-ordered orientation over
     # the same quantized road graph (shared _BFS_NODE fragment).
-    tri = f"""
-WITH nds AS (SELECT list_transform(coords, c -> {node}) AS nds
-             FROM read_parquet('{roads}')),
-ab AS (SELECT nds[i] AS a, nds[i + 1] AS b
-       FROM nds, UNNEST(generate_series(1, len(nds) - 1)) AS u(i)),
-und AS (SELECT DISTINCT LEAST(a, b) AS u, GREATEST(a, b) AS v
-        FROM ab WHERE a <> b),
-deg AS (SELECT nd, COUNT(*) AS deg FROM (
+    tri = und + """deg AS (SELECT nd, COUNT(*) AS deg FROM (
           SELECT u AS nd FROM und UNION ALL SELECT v AS nd FROM und)
         GROUP BY nd),
 o AS (SELECT CASE WHEN du.deg < dv.deg OR (du.deg = dv.deg AND u < v)
@@ -374,14 +368,7 @@ FROM tri
 """
     # link_prediction_roads: identical und/deg/wedge construction with
     # the same deg<=32 hub bound and FLOOR(1e6/deg) BIGINT RA terms.
-    lp = f"""
-WITH nds AS (SELECT list_transform(coords, c -> {node}) AS nds
-             FROM read_parquet('{roads}')),
-ab AS (SELECT nds[i] AS a, nds[i + 1] AS b
-       FROM nds, UNNEST(generate_series(1, len(nds) - 1)) AS u(i)),
-und AS (SELECT DISTINCT LEAST(a, b) AS u, GREATEST(a, b) AS v
-        FROM ab WHERE a <> b),
-deg AS (SELECT nd, COUNT(*) AS deg FROM (
+    lp = und + """deg AS (SELECT nd, COUNT(*) AS deg FROM (
           SELECT u AS nd FROM und UNION ALL SELECT v AS nd FROM und)
         GROUP BY nd),
 nbr AS (SELECT u AS z, v AS nb FROM und
@@ -406,14 +393,7 @@ FROM cand GROUP BY 1, 2 HAVING COUNT(*) >= 2
             f"  QUALIFY ROW_NUMBER() OVER (PARTITION BY v2"
             f" ORDER BY cnt DESC, label) = 1)"
         )
-    lpa = f"""
-WITH nds AS (SELECT list_transform(coords, c -> {node}) AS nds
-             FROM read_parquet('{roads}')),
-ab AS (SELECT nds[i] AS a, nds[i + 1] AS b
-       FROM nds, UNNEST(generate_series(1, len(nds) - 1)) AS u(i)),
-und AS (SELECT DISTINCT LEAST(a, b) AS u, GREATEST(a, b) AS v
-        FROM ab WHERE a <> b),
-dirs AS (SELECT u AS src, v AS dst FROM und
+    lpa = und + f"""dirs AS (SELECT u AS src, v AS dst FROM und
          UNION ALL SELECT v AS src, u AS dst FROM und),
 l0 AS (SELECT DISTINCT src AS v, src AS label FROM dirs),
 {",".join(rounds_sql)}
@@ -421,18 +401,7 @@ SELECT label, CAST(COUNT(*) AS BIGINT) AS n_nodes,
        CAST(SUM(v) AS BIGINT) AS checksum
 FROM l{_LPA_ROUNDS} GROUP BY 1
 """
-    diameter = f"""
-WITH RECURSIVE
-nds AS (SELECT list_transform(coords, c -> {node}) AS nds
-        FROM read_parquet('{roads}')),
-ab AS (SELECT nds[i] AS a, nds[i + 1] AS b
-       FROM nds, UNNEST(generate_series(1, len(nds) - 1)) AS u(i)),
-e AS (SELECT DISTINCT src, dst FROM (
-        SELECT a AS src, b AS dst FROM ab
-        UNION ALL SELECT b AS src, a AS dst FROM ab)
-      WHERE src <> dst),
-deg AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY src),
-hub AS (SELECT src AS node FROM deg ORDER BY deg DESC, src ASC LIMIT 1),
+    diameter = walk + f"""hub AS (SELECT src AS node FROM deg ORDER BY deg DESC, src ASC LIMIT 1),
 walk1(node, hops) AS (
   SELECT node, 0 FROM hub
   UNION
@@ -458,18 +427,7 @@ SELECT hub.node AS hub, CAST(far1.hops AS INT) AS ecc_hub,
        (SELECT CAST(SUM(node) AS BIGINT) FROM lab2) AS chk
 FROM hub, far1, far2
 """
-    bipartite = f"""
-WITH RECURSIVE
-nds AS (SELECT list_transform(coords, c -> {node}) AS nds
-        FROM read_parquet('{roads}')),
-ab AS (SELECT nds[i] AS a, nds[i + 1] AS b
-       FROM nds, UNNEST(generate_series(1, len(nds) - 1)) AS u(i)),
-e AS (SELECT DISTINCT src, dst FROM (
-        SELECT a AS src, b AS dst FROM ab
-        UNION ALL SELECT b AS src, a AS dst FROM ab)
-      WHERE src <> dst),
-deg AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY src),
-hub AS (SELECT src AS node FROM deg ORDER BY deg DESC, src ASC LIMIT 1),
+    bipartite = walk + f"""hub AS (SELECT src AS node FROM deg ORDER BY deg DESC, src ASC LIMIT 1),
 walk(node, hops) AS (
   SELECT node, 0 FROM hub
   UNION
@@ -492,14 +450,7 @@ SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM lab) AS n_visited,
          AS is_bipartite
 FROM conf
 """
-    modularity = f"""
-WITH nds AS (SELECT list_transform(coords, c -> {node}) AS nds
-             FROM read_parquet('{roads}')),
-ab AS (SELECT nds[i] AS a, nds[i + 1] AS b
-       FROM nds, UNNEST(generate_series(1, len(nds) - 1)) AS u(i)),
-und AS (SELECT DISTINCT LEAST(a, b) AS u, GREATEST(a, b) AS v
-        FROM ab WHERE a <> b),
-dirs AS (SELECT u AS src, v AS dst FROM und
+    modularity = und + f"""dirs AS (SELECT u AS src, v AS dst FROM und
          UNION ALL SELECT v AS src, u AS dst FROM und),
 l0 AS (SELECT DISTINCT src AS v, src AS label FROM dirs),
 {",".join(rounds_sql)},

@@ -203,13 +203,9 @@ def read_qatiles(spark: SparkSession, path: str,
 
     if n_splits is None:
         n_splits = spark.sparkContext.defaultParallelism
-    lo, hi = _rowid_bounds(path)
-    if lo is None:
+    ranges = _rowid_ranges(path, n_splits)
+    if not ranges:
         return spark.createDataFrame([], QATILE_FEATURE_SCHEMA)
-    bounds = [lo + ((hi - lo + 1) * i) // n_splits for i in range(n_splits)]
-    bounds.append(hi + 1)
-    ranges = [(bounds[i], bounds[i + 1] - 1) for i in range(n_splits)
-              if bounds[i] <= bounds[i + 1] - 1]
     rdf = spark.createDataFrame(ranges, "lo bigint, hi bigint").repartition(
         len(ranges), "lo"
     )
@@ -221,15 +217,23 @@ def read_qatiles(spark: SparkSession, path: str,
     return map_rows(rdf, _scan, QATILE_FEATURE_SCHEMA)
 
 
-def _rowid_bounds(path: str) -> tuple[int | None, int | None]:
+def _rowid_ranges(path: str, n: int) -> list[tuple[int, int]]:
+    """Up to ``n`` disjoint, non-empty, inclusive ``(lo, hi)`` rowid
+    ranges covering an MbTiles file's ``tiles`` table, from its min and
+    max rowid alone (two index lookups, no tile bytes); ``[]`` for an
+    empty table."""
     import sqlite3
 
     con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
     try:
-        row = con.execute("SELECT MIN(rowid), MAX(rowid) FROM tiles").fetchone()
-        return (row[0], row[1]) if row and row[0] is not None else (None, None)
+        lo, hi = con.execute("SELECT MIN(rowid), MAX(rowid) FROM tiles").fetchone()
     finally:
         con.close()
+    if lo is None:
+        return []
+    bounds = [lo + ((hi - lo + 1) * i) // n for i in range(n)] + [hi + 1]
+    return [(bounds[i], bounds[i + 1] - 1) for i in range(n)
+            if bounds[i] <= bounds[i + 1] - 1]
 
 
 def _decode_mbtiles_rows(path: str, lo: int, hi: int):
@@ -307,18 +311,9 @@ def make_mbtiles_datasource():
             self._n = int(options.get("n_splits", "8"))
 
         def partitions(self):
-            lo, hi = _rowid_bounds(self._path)
-            if lo is None:
-                return [_RowidRange(1, 0)]  # empty table: 1 no-op split
-            bounds = [
-                lo + ((hi - lo + 1) * i) // self._n for i in range(self._n)
-            ]
-            bounds.append(hi + 1)
-            return [
-                _RowidRange(bounds[i], bounds[i + 1] - 1)
-                for i in range(self._n)
-                if bounds[i] <= bounds[i + 1] - 1
-            ]
+            ranges = _rowid_ranges(self._path, self._n)
+            # empty table: 1 no-op split
+            return [_RowidRange(lo, hi) for lo, hi in ranges or [(1, 0)]]
 
         def read(self, part):
             yield from _decode_mbtiles_rows(self._path, part.lo, part.hi)

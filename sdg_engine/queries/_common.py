@@ -3,8 +3,6 @@ session prep, the image-fixture and streaming-drain set-up."""
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -82,95 +80,36 @@ def _drain_confs(spark, nodata: bool = True):
     return scoped_confs(spark, confs)
 
 
-def _fixture_sf(sf_dir: str) -> float:
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    return float(m.group(1)) if m else 0.001
-
-
-def _fixture_images(spark, sf_dir, pin_sf: float | None = None):
-    """Image fixture tables.  ``pin_sf`` pins a FIXED scale factor
-    regardless of sf_dir — required for the golden-backed oracle-checked
-    image queries, whose DuckDB oracles and committed goldens embed the
-    sf0.01 fixture (r03 review: following sf_dir made Spark and oracle
-    read different fixtures at any other scale)."""
+def _fixture_images(spark):
+    """The sf0.01 image fixture tables ``(images, roads)``, whatever the
+    query's sf_dir: the golden-backed oracle-checked image queries'
+    DuckDB oracles and committed goldens embed that fixture, so Spark
+    and oracle must read the same one at every scale."""
     import os
 
     from ..jobs.rai import fixture_dir
-
-    d = fixture_dir(pin_sf if pin_sf is not None else _fixture_sf(sf_dir))
     from ..tablecache import read_table
 
+    d = fixture_dir(0.01)
     return (
         read_table(spark, os.path.join(d, "images.parquet")),
         read_table(spark, os.path.join(d, "roads.parquet")),
     )
 
 
-_STREAM_ROOTS: set = set()
-
-
 def _stream_base(spark, prefix: str) -> str:
-    """Private temp dir for one streaming invocation (input copy +
-    checkpoint + sink), under a per-(user, Spark-app) root that is
-    deleted at interpreter exit — so streaming builders can return
-    their sink DataFrames LAZILY (r04 verdict item 8: the old
-    _drain_and_cleanup collect()ed every streaming result into the
+    """Private temp dir for one streaming or lakehouse invocation (input
+    copy + checkpoint + sink) under :func:`storage.scratch_root`, which
+    outlives the call and is deleted at interpreter exit — so builders
+    can return their sink DataFrames LAZILY (r04 verdict item 8: the
+    old _drain_and_cleanup collect()ed every streaming result into the
     driver, silently capping result size; no queries() builder calls
-    .collect() anymore).  Stale sibling roots from dead sessions are
-    reaped opportunistically after 7 days — never the current session's
-    root, whose mtime heartbeats on every call — bounding /tmp growth
-    the same way the dim-table publish does."""
-    import atexit
-    import os
-    import shutil
+    .collect() anymore)."""
     import tempfile
-    import time
 
-    # r06 guide §6: these dirs hold ONLY ephemeral per-invocation state
-    # (input copy, micro-batch checkpoint, sink) deleted at exit — on
-    # the bench host the HDFS-backed state stores fsync+rename a delta
-    # file per store per partition per batch, which on a slow-syscall
-    # ext4 /tmp is the dominant drain cost.  Prefer tmpfs when present
-    # ($TMPDIR still wins); a production deployment configures durable
-    # checkpoint locations through its own conf, never this helper.
-    tmp = tempfile.gettempdir()
-    if tmp == "/tmp" and os.path.isdir("/dev/shm") and os.access(
-        "/dev/shm", os.W_OK
-    ):
-        try:
-            # r06 review fix: containers commonly mount /dev/shm at
-            # 64 MB — only prefer it with real headroom (≥ 4 GB free),
-            # else the drains would ENOSPC where /tmp worked.
-            sv = os.statvfs("/dev/shm")
-            if sv.f_bavail * sv.f_frsize >= 4 << 30:
-                tmp = "/dev/shm"
-        except OSError:
-            pass
-    base = os.path.join(tmp, f"sdg_stream_u{os.getuid()}")
-    os.makedirs(base, exist_ok=True)
-    root = os.path.join(
-        base, spark.sparkContext.applicationId.replace("/", "_")
-    )
-    os.makedirs(root, exist_ok=True)
-    os.utime(root)  # heartbeat: a live session keeps its root fresh
-    now = time.time()
-    for name in os.listdir(base):
-        p = os.path.join(base, name)
-        # NEVER the current session's root (r04 review: an idle-then-
-        # resumed session used to reap its OWN sink files out from
-        # under lazily-returned DataFrames); 7-day TTL + the heartbeat
-        # above keeps the cross-session window theoretical
-        if p == root:
-            continue
-        try:
-            if os.path.isdir(p) and now - os.path.getmtime(p) > 7 * 86400:
-                shutil.rmtree(p, ignore_errors=True)
-        except OSError:
-            pass  # concurrent reaper / permission race — best effort
-    if root not in _STREAM_ROOTS:
-        _STREAM_ROOTS.add(root)
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return tempfile.mkdtemp(prefix=prefix, dir=root)
+    from ..storage import scratch_root
+
+    return tempfile.mkdtemp(prefix=prefix, dir=scratch_root(spark))
 
 
 # node id of a polyline vertex at 0.1-degree cells — shared fragment

@@ -31,6 +31,32 @@ def embedding_norms(spark, sf_dir):
     )
 
 
+def _cosine_ranked(emb):
+    """``(query_id, neighbor_id, cos_sim, rnk)``: every other vector of
+    ``(vec_id, embedding)`` ranked by exact cosine similarity to each
+    query vector (``vec_id < 10``), ties to the smaller neighbour id.
+    The ≤10-row query side is broadcast."""
+    norm = F.expr(
+        "SQRT(aggregate(embedding, CAST(0 AS DOUBLE), "
+        "(acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
+    )
+    with_norm = emb.select("vec_id", "embedding", norm.alias("nrm"))
+    queries_ = F.broadcast(with_norm.filter(F.col("vec_id") < 10)).alias("a")
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        queries_.crossJoin(with_norm.alias("b"))
+        .filter(F.col("a.vec_id") != F.col("b.vec_id"))
+        .select(
+            F.col("a.vec_id").alias("query_id"),
+            F.col("b.vec_id").alias("neighbor_id"),
+            F.expr(f"{_DOT} / (a.nrm * b.nrm)").alias("cos_sim"),
+        )
+        .withColumn("rnk", F.row_number().over(w))
+    )
+
+
 def ann_cosine_topk(spark, sf_dir):
     """Brute-force cosine top-5 per query vector (the exactness baseline
     for approximate variants; SURVEY.md training-data extras).
@@ -41,28 +67,8 @@ def ann_cosine_topk(spark, sf_dir):
     pinned in tests/test_plans.py) — never an unbounded shuffle
     cartesian.  Scale replacements: ann_lsh_topk / ann_ivf_topk (bucket
     equi-joins, both oracle-checked)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    norm = F.expr(
-        "SQRT(aggregate(embedding, CAST(0 AS DOUBLE), "
-        "(acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-    )
-    with_norm = emb.select("vec_id", "embedding", norm.alias("nrm"))
-    queries_ = F.broadcast(with_norm.filter(F.col("vec_id") < 10)).alias("a")
-    targets = with_norm.alias("b")
-    pairs = (
-        queries_.crossJoin(targets)
-        .filter(F.col("a.vec_id") != F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("query_id"),
-            F.col("b.vec_id").alias("neighbor_id"),
-            F.expr(f"{_DOT} / (a.nrm * b.nrm)").alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
     return (
-        pairs.withColumn("rnk", F.row_number().over(w))
+        _cosine_ranked(_t(spark, sf_dir, "embeddings"))
         .filter(F.col("rnk") <= 5)
         .select("query_id", "neighbor_id", "rnk", F.round("cos_sim", 4).alias("cos_sim"))
     )
@@ -584,6 +590,38 @@ def ann_pq_topk(spark, sf_dir):
     )
 
 
+def _exact_top3(spark, sf_dir):
+    """``(query_id, neighbor_id)``: the exact cosine top-3 of each query
+    (ann_cosine_topk), the ground truth the recall evals score against;
+    checkpointed, as it feeds both the hits join and the query
+    universe."""
+    from . import QUERIES as _Q
+
+    return (
+        _Q["ann_cosine_topk"](spark, sf_dir)
+        .filter("rnk <= 3")
+        .select("query_id", "neighbor_id")
+        .localCheckpoint()
+    )
+
+
+def _recall_at3(exact, approx):
+    """Per query of ``exact``: ``n_hit``, the ``approx`` answers in its
+    exact top-3, and recall@3 in FLOOR mils (0 for a query with no
+    hit)."""
+    hits = (
+        exact.join(approx, ["query_id", "neighbor_id"])
+        .groupBy("query_id")
+        .agg(F.count(F.lit(1)).alias("n_hit"))
+    )
+    qs = exact.select("query_id").distinct()
+    return qs.join(hits, "query_id", "left").selectExpr(
+        "query_id",
+        "CAST(COALESCE(n_hit, 0) AS BIGINT) AS n_hit",
+        "CAST(FLOOR(COALESCE(n_hit, 0) * 1000 / 3) AS BIGINT) AS recall_mils",
+    )
+
+
 def ann_recall_eval(spark, sf_dir):
     """ANN INDEX-QUALITY EVALUATION — recall@3 of the IVF index against
     the exact brute-force baseline, per query.  This is the eval stage
@@ -597,28 +635,13 @@ def ann_recall_eval(spark, sf_dir):
     """
     from . import QUERIES as _Q
 
-    exact = (
-        _Q["ann_cosine_topk"](spark, sf_dir)
-        .filter("rnk <= 3")
-        .select("query_id", "neighbor_id")
-        .localCheckpoint()  # ground truth: hits join + query universe
-    )
+    exact = _exact_top3(spark, sf_dir)
     ivf = (
         _Q["ann_ivf_topk"](spark, sf_dir)
         .filter("query_id < 10 AND rnk <= 3")
         .select("query_id", "neighbor_id")
     )
-    hits = (
-        exact.join(ivf, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_hit"))
-    )
-    qs = exact.select("query_id").distinct()
-    return qs.join(hits, "query_id", "left").selectExpr(
-        "query_id",
-        "CAST(COALESCE(n_hit, 0) AS BIGINT) AS n_hit",
-        "CAST(FLOOR(COALESCE(n_hit, 0) * 1000 / 3) AS BIGINT) AS recall_mils",
-    )
+    return _recall_at3(exact, ivf)
 
 
 # SQ8 SPEC (shared with the oracle): per-tensor scalar quantization
@@ -644,8 +667,6 @@ def ann_sq8_recall(spark, sf_dir):
     never touches floats until the final normalization.  The pair scan
     is broadcast-bounded (<=10 query rows) exactly like the exact
     baseline it is scored against."""
-    from . import QUERIES as _Q
-
     emb = _t(spark, sf_dir, "embeddings")
     rng_row = emb.selectExpr("explode(embedding) AS v").agg(
         F.min("v").alias("mn"), F.max("v").alias("mx")
@@ -681,21 +702,8 @@ def ann_sq8_recall(spark, sf_dir):
         .filter("rnk <= 3")
         .select("query_id", "neighbor_id")
     )
-    exact = (
-        _Q["ann_cosine_topk"](spark, sf_dir)
-        .filter("rnk <= 3")
-        .select("query_id", "neighbor_id")
-        .localCheckpoint()
-    )
-    hits = exact.join(approx, ["query_id", "neighbor_id"]).groupBy(
-        "query_id"
-    ).agg(F.count(F.lit(1)).alias("n_hit"))
-    qs = exact.select("query_id").distinct()
-    return qs.join(hits, "query_id", "left").selectExpr(
-        "query_id",
-        "CAST(COALESCE(n_hit, 0) AS BIGINT) AS n_hit",
-        "CAST(FLOOR(COALESCE(n_hit, 0) * 1000 / 3) AS BIGINT) AS recall_mils",
-    )
+    exact = _exact_top3(spark, sf_dir)
+    return _recall_at3(exact, approx)
 
 
 _PCA_DIM = 64
@@ -786,6 +794,19 @@ def pca_power_iteration(spark, sf_dir):
     return v.selectExpr("j", "v AS loading")
 
 
+def _quantized_components(emb):
+    """``(vec_id, label, j, qx)``: one row per embedding component,
+    ``qx`` the component in mils rounded half up.  The quantize runs
+    through DOUBLE (the PCA-oracle form — float*int arithmetic would
+    round differently across engines)."""
+    return emb.selectExpr(
+        "vec_id", "label", "posexplode(embedding) AS (j, e)"
+    ).selectExpr(
+        "vec_id", "label", "j",
+        "CAST(FLOOR(CAST(e AS DOUBLE) * 1000.0 + 0.5) AS BIGINT) AS qx",
+    )
+
+
 def embeddings_davies_bouldin(spark, sf_dir):
     """DAVIES-BOULDIN INDEX of the embeddings' labeled clustering —
     the clustering-quality eval next to kmeans and the ANN recall
@@ -800,14 +821,7 @@ def embeddings_davies_bouldin(spark, sf_dir):
     hash agg -> broadcast centroid join back -> per-vector distance
     agg -> label rollup; the k x k centroid table is driver-tiny."""
     emb = _t(spark, sf_dir, "embeddings")
-    # per-component quantize through DOUBLE (the PCA-oracle form —
-    # float*int arithmetic would round differently across engines)
-    comp = emb.selectExpr(
-        "vec_id", "label", "posexplode(embedding) AS (j, e)"
-    ).selectExpr(
-        "vec_id", "label", "j",
-        "CAST(FLOOR(CAST(e AS DOUBLE) * 1000.0 + 0.5) AS BIGINT) AS qx",
-    )
+    comp = _quantized_components(emb)
     cent = comp.groupBy("label", "j").agg(
         F.sum("qx").alias("s"), F.count(F.lit(1)).alias("m")
     ).selectExpr("label", "j", "s DIV m AS c")
@@ -867,12 +881,7 @@ def embeddings_silhouette(spark, sf_dir):
     table -> x k fanout join on component index -> two stacked hash
     aggs (per vector-centroid, then per vector) -> label rollup."""
     emb = _t(spark, sf_dir, "embeddings")
-    comp = emb.selectExpr(
-        "vec_id", "label", "posexplode(embedding) AS (j, e)"
-    ).selectExpr(
-        "vec_id", "label", "j",
-        "CAST(FLOOR(CAST(e AS DOUBLE) * 1000.0 + 0.5) AS BIGINT) AS qx",
-    )
+    comp = _quantized_components(emb)
     cent = (
         comp.groupBy("label", "j")
         .agg(F.sum("qx").alias("s"), F.count(F.lit(1)).alias("m"))
@@ -919,42 +928,12 @@ def ann_matryoshka_recall(spark, sf_dir):
     neighbor); recall in integer mils.  The oracle composes the same
     two rankings in DuckDB, so the measured truncation loss is pinned
     exactly."""
-    from . import QUERIES as _Q
-
-    exact = (
-        _Q["ann_cosine_topk"](spark, sf_dir)
-        .filter("rnk <= 3")
-        .select("query_id", "neighbor_id")
-        .localCheckpoint()  # ground truth: hits join + query universe
-    )
+    exact = _exact_top3(spark, sf_dir)
     emb16 = _t(spark, sf_dir, "embeddings").selectExpr(
         "vec_id", "slice(embedding, 1, 16) AS embedding"
     )
-    norm = F.expr(
-        "SQRT(aggregate(embedding, CAST(0 AS DOUBLE), "
-        "(acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-    )
-    with_norm = emb16.select("vec_id", "embedding", norm.alias("nrm"))
-    qs = F.broadcast(with_norm.filter(F.col("vec_id") < 10)).alias("a")
-    dot = (
-        "aggregate(zip_with(CAST(a.embedding AS ARRAY<DOUBLE>), "
-        "CAST(b.embedding AS ARRAY<DOUBLE>), (x, y) -> x * y), "
-        "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
     trunc = (
-        qs.crossJoin(with_norm.alias("b"))
-        .filter(F.col("a.vec_id") != F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("query_id"),
-            F.col("b.vec_id").alias("neighbor_id"),
-            F.expr(f"{dot} / (a.nrm * b.nrm)").alias("cos_sim"),
-        )
-        .withColumn("rnk", F.row_number().over(w))
+        _cosine_ranked(emb16)
         .filter("rnk <= 3")
         .select("query_id", "neighbor_id")
     )

@@ -105,13 +105,13 @@ def pagerank_roads(spark, sf_dir):
     return pagerank(edges).select("node", "pr")
 
 
-def _road_node_pairs(spark, sf_dir) -> DataFrame:
+def _road_node_pairs(spark) -> DataFrame:
     """The road graph's edges as ``(a, b)`` node pairs, one per
     consecutive vertex pair of every sf0.01 road polyline, each vertex
     quantized to its 0.1-degree node id (``_BFS_NODE``, shared with the
     DuckDB oracles).  Not deduplicated, self-loops kept: each caller
     orients, filters and checkpoints them itself."""
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     node = _BFS_NODE.format(x="c.x", y="c.y")
     return roads.selectExpr(
         f"transform(coords, c -> {node}) AS nds"
@@ -119,6 +119,60 @@ def _road_node_pairs(spark, sf_dir) -> DataFrame:
         "explode(transform(sequence(1, size(nds) - 1), "
         "i -> struct(nds[i - 1] AS a, nds[i] AS b))) AS e"
     ).select("e.a", "e.b")
+
+
+def _sym_edges(segs: DataFrame) -> DataFrame:
+    """The symmetric ``(src, dst)`` edge list of ``(a, b)`` node pairs:
+    both directions of every pair, self-loops dropped (they add no
+    hops), deduplicated."""
+    return (
+        segs.selectExpr("a AS src", "b AS dst")
+        .unionAll(segs.selectExpr("b AS src", "a AS dst"))
+        .filter(F.col("src") != F.col("dst"))
+        .distinct()
+    )
+
+
+def _und_edges(segs: DataFrame) -> DataFrame:
+    """One ``(u, v)`` row per undirected edge of ``(a, b)`` node pairs,
+    ``u < v``: self-loops dropped, deduplicated."""
+    return (
+        segs.selectExpr("least(a, b) AS u", "greatest(a, b) AS v")
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+    )
+
+
+def _hubs(edges: DataFrame, n: int) -> DataFrame:
+    """The ``n`` max-degree nodes of a symmetric edge list as ``(src,
+    deg)`` rows, degree ties to the smaller id — the seeds that make a
+    walk explore a real component, not a 2-node fragment of the
+    quantized grid."""
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    return deg.orderBy(F.col("deg").desc(), F.col("src").asc()).limit(n)
+
+
+def _bfs_labels(edges, seed, max_hops: int):
+    """Hop labels ``(node, hops)`` from ``seed`` (a ``node`` DataFrame)
+    over a symmetric edge list: per round one equi-join + distinct +
+    anti-join against the visited set, localCheckpointed (gotcha 15);
+    stops early once a round reaches no new node."""
+    visited = seed.selectExpr("node", "CAST(0 AS INT) AS hops") \
+        .localCheckpoint()
+    frontier = visited
+    for hop in range(1, max_hops + 1):
+        nxt = (
+            frontier.join(edges, frontier.node == edges.src)
+            .selectExpr("dst AS node", f"CAST({hop} AS INT) AS hops")
+            .distinct()
+            .join(visited.select("node"), "node", "left_anti")
+            .localCheckpoint()
+        )
+        if nxt.isEmpty():
+            break
+        visited = visited.unionByName(nxt).localCheckpoint()
+        frontier = nxt
+    return visited
 
 
 def road_graph_bfs(spark, sf_dir):
@@ -134,40 +188,12 @@ def road_graph_bfs(spark, sf_dir):
     RECURSIVE CTE over the same roads parquet.
     Output: hops -> node count + node-id checksum (BIGINT sums, exact).
     """
-    segs = _road_node_pairs(spark, sf_dir)
-    edges = (
-        segs.selectExpr("a AS src", "b AS dst")
-        .unionAll(segs.selectExpr("b AS src", "a AS dst"))
-        .filter(F.col("src") != F.col("dst"))  # self-loops add no hops
-        .distinct()
-        .localCheckpoint()
-    )
-    # seed at the max-degree hub (tie-break min id) so the walk explores
-    # a real component, not a 2-node fragment of the quantized grid
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    seed = (
-        deg.orderBy(F.col("deg").desc(), F.col("src").asc())
-        .limit(1)
-        .select(F.col("src").alias("node"), F.lit(0).cast("int").alias("hops"))
-    )
+    edges = _sym_edges(_road_node_pairs(spark)).localCheckpoint()
+    seed = _hubs(edges, 1).selectExpr("src AS node")
     # r06: loop under _drain_confs (codegen off + 8 partitions,
     # restored) — per-round plan churn, the _components_jump lesson
     with _drain_confs(spark):
-        visited = seed.localCheckpoint()
-        frontier = visited
-        for hop in range(1, 17):  # matches the oracle CTE's hop bound
-            nxt = (
-                frontier.join(edges, frontier.node == edges.src)
-                .select(F.col("dst").alias("node"))
-                .distinct()
-                .join(visited.select("node"), "node", "left_anti")
-                .withColumn("hops", F.lit(hop).cast("int"))
-                .localCheckpoint()
-            )
-            if nxt.isEmpty():
-                break
-            visited = visited.unionByName(nxt).localCheckpoint()
-            frontier = nxt
+        visited = _bfs_labels(edges, seed, 16)  # the oracle CTE's hop bound
     return visited.groupBy("hops").agg(
         F.count(F.lit(1)).alias("n_nodes"),
         F.sum("node").alias("sum_node"),
@@ -187,15 +213,8 @@ def triangle_count_roads(spark, sf_dir):
     construction in DuckDB over the same roads parquet.
     Output: one row — triangle count + node-id checksum.
     """
-    segs = _road_node_pairs(spark, sf_dir)
-    und = (
-        segs.selectExpr(
-            "least(a, b) AS u", "greatest(a, b) AS v"
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()  # referenced by deg + both orientation sides
-    )
+    # referenced by deg + both orientation sides
+    und = _und_edges(_road_node_pairs(spark)).localCheckpoint()
     deg = (
         und.selectExpr("u AS nd").unionAll(und.selectExpr("v AS nd"))
         .groupBy("nd")
@@ -229,16 +248,11 @@ def triangle_count_roads(spark, sf_dir):
 _SPW_ROUNDS = 12
 
 
-def _spw_edges(spark, sf_dir):
+def _spw_edges(spark):
     """Weighted road-graph edges: the BFS cell quantization plus an
     integer Euclidean weight in cell-mils between cell centers
     (FLOOR(sqrt*1000) of integer deltas — deterministic)."""
-    segs = _road_node_pairs(spark, sf_dir)
-    und = (
-        segs.selectExpr("least(a, b) AS u", "greatest(a, b) AS v")
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    und = _und_edges(_road_node_pairs(spark))
     w = (
         "CAST(FLOOR(SQRT(CAST((FLOOR(u / 1000) - FLOOR(v / 1000)) "
         "* (FLOOR(u / 1000) - FLOOR(v / 1000)) "
@@ -262,12 +276,9 @@ def shortest_path_weighted(spark, sf_dir):
     length exactly like the oracle's unrolled recurrence.
     Output: distance-band histogram + node-id checksums.
     """
-    edges = _spw_edges(spark, sf_dir).localCheckpoint()
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    seed = (
-        deg.orderBy(F.col("deg").desc(), F.col("src").asc())
-        .limit(1)
-        .select(F.col("src").alias("node"), F.lit(0).cast("long").alias("d"))
+    edges = _spw_edges(spark).localCheckpoint()
+    seed = _hubs(edges, 1).select(
+        F.col("src").alias("node"), F.lit(0).cast("long").alias("d")
     )
     # r06: loop under _drain_confs (codegen off + 8 partitions,
     # restored) — per-round plan churn, the _components_jump lesson
@@ -309,13 +320,8 @@ def link_prediction_roads(spark, sf_dir):
     standard LP truncation); existing edges leave via a left-anti
     equi-join.  Same und/deg construction as triangle_count_roads.
     """
-    segs = _road_node_pairs(spark, sf_dir)
-    und = (
-        segs.selectExpr("least(a, b) AS u", "greatest(a, b) AS v")
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()  # deg + wedge sides + anti-join probe
-    )
+    # deg + wedge sides + anti-join probe
+    und = _und_edges(_road_node_pairs(spark)).localCheckpoint()
     deg = (
         und.selectExpr("u AS nd")
         .unionAll(und.selectExpr("v AS nd"))
@@ -350,6 +356,29 @@ def link_prediction_roads(spark, sf_dir):
 _LPA_ROUNDS = 4
 
 
+def _lpa_labels(dirs: DataFrame) -> DataFrame:
+    """``_LPA_ROUNDS`` synchronous label-propagation rounds over a
+    symmetric ``(src, dst)`` edge list, every node starting as its own
+    label: each round a node adopts the most frequent label among its
+    neighbours, ties to the smallest.  Returns ``(v, label)`` rows,
+    localCheckpointed per round (gotcha 15)."""
+    labels = dirs.selectExpr("src AS v", "src AS label").distinct()
+    pick = Window.partitionBy("dst").orderBy(F.desc("cnt"), F.asc("label"))
+    for _ in range(_LPA_ROUNDS):
+        cnt = (
+            dirs.join(labels, dirs.src == labels.v)
+            .groupBy("dst", "label")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+        )
+        labels = (
+            cnt.withColumn("rn", F.row_number().over(pick))
+            .filter("rn = 1")
+            .selectExpr("dst AS v", "label")
+            .localCheckpoint()
+        )
+    return labels
+
+
 def label_propagation_roads(spark, sf_dir):
     """COMMUNITY DETECTION via label propagation on the road graph
     (same 0.1° quantization as road_graph_bfs): FIXED 4 synchronous
@@ -367,32 +396,14 @@ def label_propagation_roads(spark, sf_dir):
     shortest_path_weighted does not arise).
     Output: community size + node-id checksum per surviving label.
     """
-    segs = _road_node_pairs(spark, sf_dir)
-    und = (
-        segs.selectExpr("least(a, b) AS u", "greatest(a, b) AS v")
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    und = _und_edges(_road_node_pairs(spark))
     dirs = und.selectExpr("u AS src", "v AS dst").unionAll(
         und.selectExpr("v AS src", "u AS dst")
     ).localCheckpoint()  # probed every round
     # r06: loop under _drain_confs (codegen off + 8 partitions,
     # restored) — per-round plan churn, the _components_jump lesson
     with _drain_confs(spark):
-        labels = dirs.selectExpr("src AS v", "src AS label").distinct()
-        pick = Window.partitionBy("dst").orderBy(F.desc("cnt"), F.asc("label"))
-        for _ in range(_LPA_ROUNDS):
-            cnt = (
-                dirs.join(labels, dirs.src == labels.v)
-                .groupBy("dst", "label")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-            )
-            labels = (
-                cnt.withColumn("rn", F.row_number().over(pick))
-                .filter("rn = 1")
-                .selectExpr("dst AS v", "label")
-                .localCheckpoint()
-            )
+        labels = _lpa_labels(dirs)
     return labels.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_nodes"),
         F.sum("v").alias("checksum"),
@@ -421,14 +432,7 @@ def kcore_roads(spark, sf_dir):
     (an extra round changes nothing).  Output: one row — core node
     count, node-id checksum, core edge count.
     """
-    segs = _road_node_pairs(spark, sf_dir)
-    sym = (
-        segs.selectExpr("a AS src", "b AS dst")
-        .unionAll(segs.selectExpr("b AS src", "a AS dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
+    sym = _sym_edges(_road_node_pairs(spark)).localCheckpoint()
     # r06: peel rounds under _drain_confs (codegen off + 8 partitions,
     # restored) — per-round plan churn, the _components_jump lesson
     with _drain_confs(spark):
@@ -464,8 +468,6 @@ def textrank_keywords(spark, sf_dir):
     unrolled recurrence in SQL over the same bigrams.
     Output: top-15 words by rank, deterministic (pr DESC, word) ties.
     """
-    from pyspark.sql import Window
-
     docs = _t(spark, sf_dir, "documents")
     ws = docs.selectExpr("split(text, ' ') AS ws")
     pairs = (
@@ -569,20 +571,9 @@ def closeness_roads(spark, sf_dir):
     (reached - 1) / sum(hops) in FLOOR micros.  Oracle: DuckDB
     recursive CTE over (seed, node) pairs with MIN(hops) dedup — the
     road_graph_bfs twin generalized to a labeled walk."""
-    segs = _road_node_pairs(spark, sf_dir)
-    edges = (
-        segs.selectExpr("a AS src", "b AS dst")
-        .unionAll(segs.selectExpr("b AS src", "a AS dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    seeds = (
-        deg.orderBy(F.col("deg").desc(), F.col("src").asc())
-        .limit(5)
-        .selectExpr("src AS seed", "src AS node",
-                    "CAST(0 AS INT) AS hops")
+    edges = _sym_edges(_road_node_pairs(spark)).localCheckpoint()
+    seeds = _hubs(edges, 5).selectExpr(
+        "src AS seed", "src AS node", "CAST(0 AS INT) AS hops"
     )
     # r06: loop under _drain_confs (codegen off + 8 partitions,
     # restored) — per-round plan churn, the _components_jump lesson
@@ -634,20 +625,8 @@ def betweenness_roads(spark, sf_dir):
     Oracle: the identical recurrence as a generated linear CTE chain
     (single back-reference per round, MATERIALIZED multi-referenced
     bases — the label_propagation/shortest_path pattern)."""
-    segs = _road_node_pairs(spark, sf_dir)
-    edges = (
-        segs.selectExpr("a AS src", "b AS dst")
-        .unionAll(segs.selectExpr("b AS src", "a AS dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    seeds = (
-        deg.orderBy(F.col("deg").desc(), F.col("src").asc())
-        .limit(_BC_SEEDS)
-        .selectExpr("src AS seed")
-    )
+    edges = _sym_edges(_road_node_pairs(spark)).localCheckpoint()
+    seeds = _hubs(edges, _BC_SEEDS).selectExpr("src AS seed")
     # r06: both sweep loops under _drain_confs (codegen off + 8
     # partitions, restored) — per-round plan churn over layer-sized
     # relations, the _components_jump lesson
@@ -741,7 +720,7 @@ def mst_roads(spark, sf_dir):
     union-find over the same edges (scripts/make_goldens.py) — plus a
     LIVE relational node count over the roads parquet (load-bearing).
     """
-    edges_sym = _spw_edges(spark, sf_dir)
+    edges_sym = _spw_edges(spark)
     eu = (
         edges_sym.filter("src < dst")
         .selectExpr("src AS u", "dst AS v", "w")
@@ -830,28 +809,6 @@ def mst_roads(spark, sf_dir):
 _DIAM_MAX_HOPS = 32  # shared bound — mirrored in the oracle CTEs
 
 
-def _bfs_labels(edges, seed, max_hops: int):
-    """Hop labels from ``seed`` (node DataFrame) — the road_graph_bfs
-    frontier loop, factored for reuse: per round one equi-join +
-    distinct + anti-join, localCheckpointed (gotcha 15)."""
-    visited = seed.selectExpr("node", "CAST(0 AS INT) AS hops") \
-        .localCheckpoint()
-    frontier = visited
-    for hop in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(edges, frontier.node == edges.src)
-            .selectExpr("dst AS node", f"CAST({hop} AS INT) AS hops")
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .localCheckpoint()
-        )
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt).localCheckpoint()
-        frontier = nxt
-    return visited
-
-
 def roads_graph_diameter(spark, sf_dir):
     """DOUBLE-SWEEP DIAMETER estimate of the road graph — the classic
     2-BFS lower bound (sweep 1 from the max-degree hub finds the
@@ -861,20 +818,8 @@ def roads_graph_diameter(spark, sf_dir):
     (hops desc, node asc) deterministic.  Oracle: TWO chained
     recursive CTEs over the same quantized graph, identical 32-hop
     bound."""
-    segs = _road_node_pairs(spark, sf_dir)
-    edges = (
-        segs.selectExpr("a AS src", "b AS dst")
-        .unionAll(segs.selectExpr("b AS src", "a AS dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    hub = (
-        deg.orderBy(F.col("deg").desc(), F.col("src").asc())
-        .limit(1)
-        .selectExpr("src AS node")
-    )
+    edges = _sym_edges(_road_node_pairs(spark)).localCheckpoint()
+    hub = _hubs(edges, 1).selectExpr("src AS node")
     # the frontier tables are graph-sized, not corpus-sized — run the
     # ~2x32 tiny rounds at 8 shuffle partitions (gotcha 16d: iterative
     # fixed cost = partitions x rounds x stages) with codegen OFF for
@@ -916,17 +861,8 @@ def roads_bipartite_check(spark, sf_dir):
     certified frontier loop), then one pass over the edges counts
     same-parity endpoints — each is an odd cycle witness.  Oracle:
     recursive-CTE BFS + identical conflict count."""
-    segs = _road_node_pairs(spark, sf_dir)
-    edges = (
-        segs.selectExpr("a AS src", "b AS dst")
-        .unionAll(segs.selectExpr("b AS src", "a AS dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    hub = deg.orderBy(F.col("deg").desc(), F.col("src").asc()).limit(1) \
-        .selectExpr("src AS node")
+    edges = _sym_edges(_road_node_pairs(spark)).localCheckpoint()
+    hub = _hubs(edges, 1).selectExpr("src AS node")
     visited = _bfs_labels(edges, hub, _DIAM_MAX_HOPS).localCheckpoint()
     lab = visited.selectExpr("node", "hops % 2 AS par")
     conf = (
@@ -959,32 +895,12 @@ def community_modularity(spark, sf_dir):
     ppm; negative-numerator DIV truncation differs across engines, so
     the division runs in DOUBLE, gotcha-7 discipline).  The Q window
     sum runs over the communities relation (small by construction)."""
-    from pyspark.sql import Window
-
-    segs = _road_node_pairs(spark, sf_dir)
-    und = (
-        segs.selectExpr("least(a, b) AS u", "greatest(a, b) AS v")
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()  # probed by LP rounds AND the intra-edge pass
-    )
+    # probed by LP rounds AND the intra-edge pass
+    und = _und_edges(_road_node_pairs(spark)).localCheckpoint()
     dirs = und.selectExpr("u AS src", "v AS dst").unionAll(
         und.selectExpr("v AS src", "u AS dst")
     ).localCheckpoint()
-    labels = dirs.selectExpr("src AS v", "src AS label").distinct()
-    pick = Window.partitionBy("dst").orderBy(F.desc("cnt"), F.asc("label"))
-    for _ in range(_LPA_ROUNDS):
-        cnt = (
-            dirs.join(labels, dirs.src == labels.v)
-            .groupBy("dst", "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        labels = (
-            cnt.withColumn("rn", F.row_number().over(pick))
-            .filter("rn = 1")
-            .selectExpr("dst AS v", "label")
-            .localCheckpoint()
-        )
+    labels = _lpa_labels(dirs)
     m_df = und.agg(F.count(F.lit(1)).alias("m"))
     deg = dirs.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     lab_u = labels.selectExpr("v AS u", "label AS lu")

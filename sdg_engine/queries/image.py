@@ -15,14 +15,14 @@ from ._common import _fixture_images
 _FIRST_500 = "img000000000500"
 
 
-def _golden_tiles(spark, sf_dir):
+def _golden_tiles(spark):
     """The subset every golden-backed per-tile query reads: the first
     500 tiles of the sf0.01 image fixture by key, jpg excluded.  sf0.01
     whatever ``sf_dir`` is, because the DuckDB oracles and the committed
     goldens embed that fixture.  No jpg, because a lossy decode has no
     independent twin (the decode-stats NULL policy); jpg pixel fidelity
     is PSNR-gated in tests/test_jpeg.py."""
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    images, _roads = _fixture_images(spark)
     return images.filter(
         (F.col("image_id") < _FIRST_500) & (F.col("fmt") != "jpg")
     )
@@ -49,7 +49,7 @@ def image_rai_summary(spark, sf_dir):
     needed here."""
     from ..jobs.rai import rai_summaries
 
-    images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    images, roads = _fixture_images(spark)
     per_image, _per_country = rai_summaries(spark, images, roads)
     mils = per_image.select(
         "country_code",
@@ -82,7 +82,7 @@ def image_cost_distance(spark, sf_dir):
     from ..ops import raster as RS
     from ..ops import spatial as SP
 
-    images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    images, roads = _fixture_images(spark)
     subset = images.filter(F.col("image_id") < "img000000002000")
     geo = SP.with_geo(subset)
     tiles = RS.burn_cost_summaries(
@@ -110,7 +110,7 @@ def image_warp_utm(spark, sf_dir):
     generator pixels."""
     from ..ops import spatial as SP
 
-    return PL.warp_checksums(SP.with_geo(_golden_tiles(spark, sf_dir)),
+    return PL.warp_checksums(SP.with_geo(_golden_tiles(spark)),
                              "UTM:31")
 
 
@@ -126,7 +126,7 @@ def image_decode_stats(spark, sf_dir):
     written); their pixel fidelity is gated ≥40 dB in tests/test_jpeg.py.
     min/max pixel stats stay pytest-pinned (test_decode_stats_all_ok).
     """
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    images, _roads = _fixture_images(spark)
     subset = images.filter(F.col("image_id") < _FIRST_500)
     stats = PL.decode_stats(subset)
     meta = subset.select(
@@ -151,7 +151,7 @@ def image_thumbnails(spark, sf_dir):
     mean_lum (lossy decode; PSNR-gated in tests/test_jpeg.py).  The
     thumb bytes themselves are pinned in tests/test_codecs.py-style
     invariants (test_pipeline_ops)."""
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    images, _roads = _fixture_images(spark)
     subset = images.filter(F.col("image_id") < _FIRST_500)
     th = PL.thumbnails(subset, 16, 16)
     meta = subset.select("image_id", "fmt")
@@ -174,7 +174,7 @@ def image_near_dup_pairs(spark, sf_dir):
     from decoded bytes through a lossy transcode — cannot be expressed
     relationally and stays pinned in
     tests/test_payload_lineage_skew.py::test_phash_near_dup_pairs."""
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    images, _roads = _fixture_images(spark)
     subset = images.filter(F.col("image_id") < "img000000000400")
     return PL.phash_near_dup_pairs(subset, max_hamming=12)
 
@@ -252,7 +252,7 @@ def image_hillshade(spark, sf_dir):
     classic GeoTrellis focal op re-expressed as a map-only Spark
     stage).  Oracle: committed INDEPENDENT golden (generator pixels +
     clamp-indexed Horn twin)."""
-    return PL.hillshade_stats(_golden_tiles(spark, sf_dir))
+    return PL.hillshade_stats(_golden_tiles(spark))
 
 
 def image_zonal_stats(spark, sf_dir):
@@ -273,7 +273,7 @@ def image_zonal_stats(spark, sf_dir):
     from .. import fixtures as FX
     from ..ops import spatial as SP
 
-    sel = _golden_tiles(spark, sf_dir)
+    sel = _golden_tiles(spark)
     cc = SP.assign_countries(SP.with_geo(sel), FX.get_country_rings(), level=9)
     stats = PL.decode_stats(sel)
     mils = "CAST(FLOOR(mean_lum * 1000.0 + 0.5) AS BIGINT)"
@@ -296,7 +296,7 @@ def image_contours(spark, sf_dir):
     (the raster->vector contouring op): decode -> case grid -> integer
     segment/case sums.  Oracle: committed independent golden (generator
     pixels + explicit 16-entry LUT twin)."""
-    return PL.contour_stats(_golden_tiles(spark, sf_dir))
+    return PL.contour_stats(_golden_tiles(spark))
 
 
 def image_regions(spark, sf_dir):
@@ -305,7 +305,7 @@ def image_regions(spark, sf_dir):
     a map-only stage.  Oracle: committed INDEPENDENT flood-fill golden."""
     from ..ops.raster import region_stats
 
-    return region_stats(_golden_tiles(spark, sf_dir))
+    return region_stats(_golden_tiles(spark))
 
 
 def multimodal_audio_stft(spark, sf_dir):
@@ -347,7 +347,7 @@ def multimodal_caption_consistency(spark, sf_dir):
     curation pipeline runs before training.  Pure relational over the
     binding (phash, caption) columns, so the oracle reruns it verbatim;
     emits the pairs with their hamming and the agreement flag."""
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    images, _roads = _fixture_images(spark)
     subset = images.filter(F.col("image_id") < "img000000000400")
     pairs = PL.phash_near_dup_pairs(subset, max_hamming=6)
     caps = subset.select("image_id", "caption")
@@ -402,7 +402,7 @@ def image_palette_mediancut(spark, sf_dir):
     All integer; error = SSD of each pixel to ITS box's mean.  Golden:
     the same SPEC over scalar python dicts (vs the engine's sorted
     numpy distinct-color arrays)."""
-    return PL.palette_mediancut_stats(_golden_tiles(spark, sf_dir))
+    return PL.palette_mediancut_stats(_golden_tiles(spark))
 
 
 # The per-image integer kernel queries, one row each: query name ->
@@ -558,7 +558,7 @@ _KERNELS = {
 
 def _kernel_query(name, kernel, schema):
     def build(spark, sf_dir):
-        return PL._int_terrain_op(_golden_tiles(spark, sf_dir), kernel,
+        return PL._int_terrain_op(_golden_tiles(spark), kernel,
                                   schema)
 
     build.__name__ = build.__qualname__ = name

@@ -140,7 +140,7 @@ def geojson_roundtrip_roads(spark, sf_dir):
     boundaries and OSM extracts commonly arrive in."""
     import os
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     feat = F.to_json(F.struct(
         F.lit("Feature").alias("type"),
         F.struct(
@@ -362,7 +362,7 @@ def source_binaryfile_images(spark, sf_dir):
     """
     import os
 
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    images, _roads = _fixture_images(spark)
     out = f"{_stream_base(spark, 'binfiles_')}/files"
     flag = os.path.join(out, "_done")
     if not os.path.exists(flag):
@@ -1100,7 +1100,7 @@ def webdataset_roundtrip_images(spark, sf_dir):
     a sum."""
     import os
 
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    images, _roads = _fixture_images(spark)
     sel = images.filter("image_id < 'img000000000200'").select(
         "image_id", "fmt", "bytes", "caption"
     )
@@ -1387,7 +1387,7 @@ def polyline_roundtrip_roads(spark, sf_dir):
     sums, net eastward drift) are computed entirely from DECODED
     integers and checked against DuckDB quantizing the source coords
     directly.  Map-only; geometry never shuffles."""
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
 
     def _encode(batches):
         from sdg_engine.polyline import encode_polyline

@@ -443,7 +443,7 @@ def roads_simplify_dp(spark, sf_dir):
     """
     from ..geom import dp_keep_mask
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
 
     def _dp(r):
         pts = np.array([[p["x"], p["y"]] for p in r.coords])
@@ -513,7 +513,7 @@ def mvt_pyramid_simplified(spark, sf_dir):
 
     from .. import mvt as MVT
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     roads = roads.select("road_id", "coords").repartition(8).localCheckpoint()
     base = _stream_base(spark, "pyrsimp_")
 
@@ -545,7 +545,7 @@ def country_convex_hull(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     verts = roads.select(
         "country_code", F.explode("coords").alias("c")
     ).select("country_code", F.col("c.x").alias("x"), F.col("c.y").alias("y"))
@@ -592,7 +592,7 @@ def roads_buffer_cells(spark, sf_dir):
     from ..ops.spatial import road_segments
     from ..sqlgen import apply_steps, grid_index_expr, point_seg_dist_steps
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     segs = road_segments(roads)
     g = segs.selectExpr(
         "kind", "ax", "ay", "bx", "by",
@@ -669,7 +669,7 @@ def road_intersections(spark, sf_dir):
     """
     from ..ops.spatial import road_segments, segments_with_cells
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     segs = road_segments(roads).select(
         "road_id", "kind", "seg_id", "ax", "ay", "bx", "by"
     )
@@ -817,6 +817,31 @@ def cells_morans_i(spark, sf_dir):
     )
 
 
+def _road_seg_lengths(roads):
+    """One row per consecutive vertex pair of every road polyline:
+    ``road_id, kind, i, x, y, x2, y2``, its length ``slen`` and ``cum``,
+    the road's running length through it.  ``cum`` is a running-sum
+    window ordered by vertex index — a SEQUENTIAL fold, identical in
+    both engines, never a partial-agg double SUM (gotcha 8)."""
+    verts = roads.selectExpr(
+        "road_id", "kind", "posexplode(coords) AS (i, c)"
+    ).selectExpr("road_id", "kind", "i", "c.x AS x", "c.y AS y")
+    wo = Window.partitionBy("road_id").orderBy("i")
+    return (
+        verts.withColumn("x2", F.lead("x").over(wo))
+        .withColumn("y2", F.lead("y").over(wo))
+        .filter(F.col("x2").isNotNull())
+        .withColumn(
+            "slen",
+            F.expr("SQRT((x2 - x) * (x2 - x) + (y2 - y) * (y2 - y))"),
+        )
+        .withColumn(
+            "cum",
+            F.sum("slen").over(wo.rowsBetween(Window.unboundedPreceding, 0)),
+        )
+    )
+
+
 def route_interpolate(spark, sf_dir):
     """POINT-ALONG-LINE interpolation: the arc-length MIDPOINT of every
     road polyline (the t=0.5 case of linear referencing / dynamic
@@ -832,27 +857,13 @@ def route_interpolate(spark, sf_dir):
     windows); output one row per road, aggregated per kind here so the
     driver compare stays tiny.
     """
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    verts = roads.selectExpr(
-        "road_id", "kind", "posexplode(coords) AS (i, c)"
-    ).selectExpr("road_id", "kind", "i", "c.x AS x", "c.y AS y")
-    wo = Window.partitionBy("road_id").orderBy("i")
-    seg = (
-        verts.withColumn("x2", F.lead("x").over(wo))
-        .withColumn("y2", F.lead("y").over(wo))
-        .filter(F.col("x2").isNotNull())
-        .withColumn(
-            "slen",
-            F.expr("SQRT((x2 - x) * (x2 - x) + (y2 - y) * (y2 - y))"),
-        )
-    )
-    wcum = wo.rowsBetween(Window.unboundedPreceding, 0)
+    _images, roads = _fixture_images(spark)
+    seg = _road_seg_lengths(roads)
     wall = Window.partitionBy("road_id").rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
     mid = (
-        seg.withColumn("cum", F.sum("slen").over(wcum))
-        .withColumn("start", F.expr("cum - slen"))
+        seg.withColumn("start", F.expr("cum - slen"))
         .withColumn("total", F.max("cum").over(wall))
         .filter(
             F.expr("total > 0 AND start <= total / 2 AND total / 2 < cum")
@@ -960,7 +971,7 @@ def spatial_dbscan(spark, sf_dir):
     both come from a 9-offset explode, never a distance join.  Oracle:
     identical fragments + a pruned recursive-CTE reachability min.
     """
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     g = roads.selectExpr("explode(coords) AS c").selectExpr(
         "c.x AS x", "c.y AS y"
     ).selectExpr(f"{_DB_IX} AS ix", f"{_DB_IY} AS iy")
@@ -1042,7 +1053,7 @@ def voronoi_assign(spark, sf_dir):
     keyed by vertex, then a 16-row rollup — the fact table never hash-
     exchanges on anything wider than the vertex key.
     """
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     px = _VOR_Q.format(c="c.x")
     py = _VOR_Q.format(c="c.y")
     pts = roads.selectExpr(
@@ -1159,26 +1170,9 @@ def roads_sinuosity(spark, sf_dir):
     coords array (no window), micro-unit snap on the final ratio
     (only + - * / sqrt floor on the float path).  One hash exchange
     on road_id; per-kind rollup keeps the compare tiny."""
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    verts = roads.selectExpr(
-        "road_id", "kind", "posexplode(coords) AS (i, c)"
-    ).selectExpr("road_id", "kind", "i", "c.x AS x", "c.y AS y")
-    wo = Window.partitionBy("road_id").orderBy("i")
-    seg = (
-        verts.withColumn("x2", F.lead("x").over(wo))
-        .withColumn("y2", F.lead("y").over(wo))
-        .filter(F.col("x2").isNotNull())
-        .withColumn(
-            "slen",
-            F.expr("SQRT((x2 - x) * (x2 - x) + (y2 - y) * (y2 - y))"),
-        )
-    )
-    wcum = wo.rowsBetween(Window.unboundedPreceding, 0)
-    tot = (
-        seg.withColumn("cum", F.sum("slen").over(wcum))
-        .groupBy("road_id")
-        .agg(F.max("cum").alias("total"))
-    )
+    _images, roads = _fixture_images(spark)
+    seg = _road_seg_lengths(roads)
+    tot = seg.groupBy("road_id").agg(F.max("cum").alias("total"))
     ends = roads.selectExpr(
         "road_id", "kind",
         "element_at(coords, 1).x AS x0",
@@ -1218,7 +1212,7 @@ def cells_line_density(spark, sf_dir):
     """
     from ..sqlgen import grid_index_expr
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     segs = roads.selectExpr("coords AS cs").selectExpr(
         "explode(transform(sequence(1, size(cs) - 1), "
         "i -> struct(cs[i - 1].x AS x1, cs[i - 1].y AS y1, "
@@ -1318,7 +1312,7 @@ def roads_supercover_cells(spark, sf_dir):
 
     n = 1 << _SC_LEVEL
     bnd = f"(CAST({{k}} AS DOUBLE) * (CAST(10 AS DOUBLE) / CAST({n} AS DOUBLE)))"
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     segs = roads.selectExpr("kind", "coords AS cs").selectExpr(
         "kind",
         "explode(transform(sequence(1, size(cs) - 1), "
@@ -1374,7 +1368,7 @@ def roads_dissolve(spark, sf_dir):
     components primitive (O(log diameter) rounds, kind-scoped node
     keys so components never cross kinds).  Oracle: pruned
     recursive-CTE reachability min over the identical node keys."""
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     na = _BFS_NODE.format(
         x="element_at(coords, 1).x", y="element_at(coords, 1).y"
     )
@@ -1449,6 +1443,17 @@ _VX = "CAST(FLOOR({c}.x * 1000000) AS BIGINT)"
 _VY = "CAST(FLOOR({c}.y * 1000000) AS BIGINT)"
 
 
+def _road_first_cells(roads):
+    """``(road_id, cell)``: the 0.1-degree cell of each road's FIRST
+    vertex, the blocking key of the road-pair conflation queries
+    (COALESCE-wrapped, gotcha 11)."""
+    return roads.selectExpr(
+        "road_id",
+        "COALESCE(CAST(FLOOR(coords[0].x * 10) AS BIGINT) * 100000 "
+        "+ CAST(FLOOR(coords[0].y * 10) AS BIGINT), -1) AS cell",
+    )
+
+
 def roads_hausdorff(spark, sf_dir):
     """DIRECTED HAUSDORFF distance h(A -> B) = max_a min_b |a - b| for
     road pairs whose FIRST vertices share a 0.1-degree cell — the
@@ -1462,12 +1467,8 @@ def roads_hausdorff(spark, sf_dir):
     vertex fanout per pair is |A| x |B| <= a few hundred rows, grouped
     twice (min over B per a-vertex, then max over a-vertices).  The
     blocking key is COALESCE-wrapped (gotcha 11)."""
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    first = roads.selectExpr(
-        "road_id",
-        "COALESCE(CAST(FLOOR(coords[0].x * 10) AS BIGINT) * 100000 "
-        "+ CAST(FLOOR(coords[0].y * 10) AS BIGINT), -1) AS cell",
-    )
+    _images, roads = _fixture_images(spark)
+    first = _road_first_cells(roads)
     verts = roads.selectExpr(
         "road_id", "posexplode(coords) AS (i, c)"
     ).selectExpr(
@@ -1513,27 +1514,13 @@ def roads_resample_points(spark, sf_dir):
     Plan shape: one hash exchange on road_id (the windows), a 7x
     explode on the segment rows, one filtered projection; per-(kind,k)
     rollup keeps the compare tiny."""
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    verts = roads.selectExpr(
-        "road_id", "kind", "posexplode(coords) AS (i, c)"
-    ).selectExpr("road_id", "kind", "i", "c.x AS x", "c.y AS y")
-    wo = Window.partitionBy("road_id").orderBy("i")
-    seg = (
-        verts.withColumn("x2", F.lead("x").over(wo))
-        .withColumn("y2", F.lead("y").over(wo))
-        .filter(F.col("x2").isNotNull())
-        .withColumn(
-            "slen",
-            F.expr("SQRT((x2 - x) * (x2 - x) + (y2 - y) * (y2 - y))"),
-        )
-    )
-    wcum = wo.rowsBetween(Window.unboundedPreceding, 0)
+    _images, roads = _fixture_images(spark)
+    seg = _road_seg_lengths(roads)
     wall = Window.partitionBy("road_id").rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
     picks = (
-        seg.withColumn("cum", F.sum("slen").over(wcum))
-        .withColumn("start", F.expr("cum - slen"))
+        seg.withColumn("start", F.expr("cum - slen"))
         .withColumn("total", F.max("cum").over(wall))
         .selectExpr("*", "explode(sequence(1, 7)) AS k")
         .filter(F.expr(
@@ -1567,12 +1554,8 @@ def roads_frechet(spark, sf_dir):
     lattice, Bellman-relaxed with MATERIALIZED unrolled rounds and
     self-loop moves (the events_dtw technique with a max-min
     semiring)."""
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    first = roads.selectExpr(
-        "road_id",
-        "COALESCE(CAST(FLOOR(coords[0].x * 10) AS BIGINT) * 100000 "
-        "+ CAST(FLOOR(coords[0].y * 10) AS BIGINT), -1) AS cell",
-    )
+    _images, roads = _fixture_images(spark)
+    first = _road_first_cells(roads)
     qc = (
         "transform(coords, c -> struct("
         "CAST(FLOOR(c.x * 1000000) AS BIGINT) AS x, "
@@ -1729,7 +1712,7 @@ def roads_bearing_octants(spark, sf_dir):
     hash agg onto the (kind, octant) grid — |kinds| x 8 groups at any
     scale.  The oracle derives segments by direct list indexing (no
     window at all), so the window plumbing is independently checked."""
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     verts = roads.selectExpr(
         "road_id", "kind", "posexplode(coords) AS (i, c)"
     ).selectExpr(
@@ -1842,7 +1825,7 @@ def roads_topology_errors(spark, sf_dir):
     one kind rollup."""
     from ..sqlgen import apply_steps, point_seg_dist_steps
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     ends = roads.selectExpr(
         "road_id", "kind",
         "explode(array("
@@ -1952,7 +1935,7 @@ def roads_in_aoi_length(spark, sf_dir):
     cells_line_density rule), so sums are exact BIGINTs at any
     partitioning."""
     lo, hi, feas = _aoi_halfplane_exprs()
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     verts = roads.selectExpr(
         "road_id", "kind", "posexplode(coords) AS (i, c)"
     ).selectExpr("road_id", "kind", "i", "c.x AS vx", "c.y AS vy")
@@ -2000,7 +1983,7 @@ def roads_strokes(spark, sf_dir):
     Stroke lengths fold FLOOR-micro segment lengths (exact BIGINTs).
     Oracle: identical fragments + the pruned recursive-CTE
     reachability min (the dissolve technique) in DuckDB."""
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     segs = (
         roads.selectExpr(
             "CAST(road_id AS STRING) AS rid", "kind", "coords",
@@ -2082,7 +2065,7 @@ def roads_simplify_vw(spark, sf_dir):
     twin, so one flipped keep decision fails the hash."""
     from ..geom import vw_keep_mask
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
 
     def _vw(r):
         q = np.array([

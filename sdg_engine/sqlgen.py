@@ -42,13 +42,6 @@ def morton_spread_expr(src: str, nbits: int) -> str:
     return "(" + " | ".join(terms) + ")"
 
 
-def morton_squeeze_expr(src: str, nbits: int, odd: bool = False) -> str:
-    """Inverse spread: collect even (or odd) bits of ``src`` into an int."""
-    off = 1 if odd else 0
-    terms = [f"((({src}) >> {2 * i + off} & 1) << {i})" for i in range(nbits)]
-    return "(" + " | ".join(terms) + ")"
-
-
 def grid_index_expr(coord: str, level: int) -> str:
     """Continuous coordinate -> clipped integer grid index at ``level``."""
     n = 1 << level

@@ -13,11 +13,13 @@ behavior that carries over 1:1.
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import json
 import os
 import shutil
 import tempfile
+import time
 import uuid
 from functools import reduce
 
@@ -108,6 +110,53 @@ def read_images_for_cells(
     buckets = cells_to_buckets(cells, n_buckets)
     df = read_images_layout(spark, path)
     return df.filter(F.col("cell_bucket").isin(buckets))
+
+
+def scratch_root(spark) -> str:
+    """This Spark application's private scratch directory, the one root
+    under which the engine writes its ephemeral files: the per-call
+    dirs of ``queries/_common._stream_base`` and J2's country cell
+    table.  It lives under a per-user ``sdg_scratch_u<uid>`` dir in the
+    temp dir, is removed at interpreter exit, and its mtime heartbeats
+    on every call.  The first call in an application also reaps the
+    sibling roots of dead applications idle for more than 7 days —
+    never the current one, whose heartbeat keeps it fresh.  Later
+    calls cost a few syscalls and no JVM round trip."""
+    sc = spark.sparkContext
+    root = sc.__dict__.get("_sdg_scratch_root")
+    if root is None:
+        # these dirs hold ONLY ephemeral state deleted at exit — on a
+        # slow-syscall ext4 /tmp the streaming state stores' per-batch
+        # fsync+rename dominates a drain, so prefer tmpfs when present
+        # ($TMPDIR still wins); a production deployment configures
+        # durable checkpoint locations through its own conf.
+        tmp = tempfile.gettempdir()
+        if tmp == "/tmp" and os.access("/dev/shm", os.W_OK):
+            try:
+                # containers commonly mount /dev/shm at 64 MB — only
+                # prefer it with real headroom (>= 4 GB free), else the
+                # drains would ENOSPC where /tmp worked
+                sv = os.statvfs("/dev/shm")
+                if sv.f_bavail * sv.f_frsize >= 4 << 30:
+                    tmp = "/dev/shm"
+            except OSError:
+                pass
+        base = os.path.join(tmp, f"sdg_scratch_u{os.getuid()}")
+        root = os.path.join(base, sc.applicationId.replace("/", "_"))
+        os.makedirs(root, exist_ok=True)
+        now = time.time()
+        for name in os.listdir(base):
+            p = os.path.join(base, name)
+            try:
+                if p != root and now - os.path.getmtime(p) > 7 * 86400:
+                    shutil.rmtree(p, ignore_errors=True)
+            except OSError:
+                pass  # concurrent reaper / permission race — best effort
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        sc._sdg_scratch_root = root
+    os.makedirs(root, exist_ok=True)
+    os.utime(root)  # heartbeat: a live application keeps its root fresh
+    return root
 
 
 def publish_dir(out_dir: str, write_fn) -> str:

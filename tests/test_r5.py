@@ -334,7 +334,7 @@ def test_simplified_pyramid_coarser_zoom_fewer_vertices(spark, sf_dir):
     )
     from sdg_engine.queries._common import _fixture_images
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     counts = {
         z: _simplified_segments(roads, eps).count()
         for z, eps in PYR_SIMPLIFY_EPS.items()

@@ -95,7 +95,7 @@ def test_bearing_octants_match_trig(spark):
     out = _pdf(roads_bearing_octants(spark, SF))
     from sdg_engine.queries._common import _fixture_images
 
-    _imgs, roads = _fixture_images(spark, SF, pin_sf=0.01)
+    _imgs, roads = _fixture_images(spark)
     rp = _pdf(roads.selectExpr("kind", "coords"))
     n = {}
     ln = {}
@@ -171,7 +171,7 @@ def test_mst_matches_prim(spark):
     from sdg_engine.queries.graph import _spw_edges
 
     out = _pdf(mst_roads(spark, SF)).iloc[0]
-    ed = _pdf(_spw_edges(spark, SF).filter("src < dst"))
+    ed = _pdf(_spw_edges(spark).filter("src < dst"))
     adj = {}
     for r in ed.itertuples():
         adj.setdefault(r.src, []).append((int(r.w), r.dst))
@@ -546,7 +546,7 @@ def test_topology_errors_match_bruteforce(spark):
     from sdg_engine import METERS_PER_DEG
 
     out = _pdf(roads_topology_errors(spark, SF)).set_index("kind")
-    rp = _pdf(_fixture_images(spark, SF, pin_sf=0.01)[1])
+    rp = _pdf(_fixture_images(spark)[1])
     segs = []  # (rs, ax, ay, bx, by, cellkey)
     for r in rp.itertuples():
         cs = [(c["x"], c["y"]) for c in r.coords]
@@ -642,7 +642,7 @@ def test_webdataset_shards_parse_and_group(spark):
 
     out = _pdf(webdataset_roundtrip_images(spark, SF)).set_index("fmt")
     src = _pdf(
-        _fixture_images(spark, SF, pin_sf=0.01)[0]
+        _fixture_images(spark)[0]
         .filter("image_id < 'img000000000200'")
         .select("image_id", "fmt", "bytes", "caption")
     )
@@ -711,7 +711,7 @@ def test_aoi_length_matches_sampling(spark):
     out = _pdf(roads_in_aoi_length(spark, SF))
     assert (out.sum_in_micros <= out.sum_len_micros).all()
     ring = np.array(AOI_RING[:-1])
-    rp = _pdf(_fixture_images(spark, SF, pin_sf=0.01)[1])
+    rp = _pdf(_fixture_images(spark)[1])
     t = (np.arange(2000) + 0.5) / 2000
 
     def inside(px, py):

@@ -19,7 +19,7 @@ def test_graph_diameter_matches_python_bfs(spark):
     from sdg_engine.queries._common import _fixture_images
 
     out = _pdf(roads_graph_diameter(spark, SF)).iloc[0]
-    rp = _pdf(_fixture_images(spark, SF, pin_sf=0.01)[1])
+    rp = _pdf(_fixture_images(spark)[1])
     adj: dict = {}
     for r in rp.itertuples():
         nds = [

@@ -797,7 +797,7 @@ def test_bipartite_check_matches_python_bfs(spark):
     from sdg_engine.queries.graph import roads_bipartite_check
 
     out = _pdf(roads_bipartite_check(spark, SF)).iloc[0]
-    rp = _pdf(_fixture_images(spark, SF, pin_sf=0.01)[1])
+    rp = _pdf(_fixture_images(spark)[1])
     adj: dict = {}
     for r in rp.itertuples():
         nds = [

@@ -145,6 +145,21 @@ def test_country_cells_bind_to_the_calling_session(spark):
     assert SP._country_cells(s2, rings, 7).sparkSession is s2
 
 
+def test_country_cells_live_under_the_scratch_root(spark):
+    """J2's cell table is published under the application's scratch
+    root, which is removed at exit, not under a root nothing reaps."""
+    import os
+    from urllib.parse import urlparse
+
+    from sdg_engine.storage import scratch_root
+
+    root = os.path.realpath(scratch_root(spark)) + os.sep
+    files = SP._country_cells(spark, FX.get_country_rings(), 7).inputFiles()
+    assert files
+    for f in files:
+        assert os.path.realpath(urlparse(f).path).startswith(root), f
+
+
 @pytest.mark.parametrize("cover", ["random", "coarser_than_bin", "world"])
 def test_range_join_matches_nested_loop(spark, cover):
     """J6 brute-force twin: ``range_join_compacted`` returns exactly the
