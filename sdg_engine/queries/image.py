@@ -18,10 +18,10 @@ _FIRST_500 = "img000000000500"
 def _golden_tiles(spark):
     """The subset every golden-backed per-tile query reads: the first
     500 tiles of the sf0.01 image fixture by key, jpg excluded.  sf0.01
-    whatever ``sf_dir`` is, because the DuckDB oracles and the committed
-    goldens embed that fixture.  No jpg, because a lossy decode has no
-    independent twin (the decode-stats NULL policy); jpg pixel fidelity
-    is PSNR-gated in tests/test_jpeg.py."""
+    whatever the query's ``sf_dir`` is, because the DuckDB oracles and
+    the committed goldens embed that fixture.  No jpg, because a lossy
+    decode has no independent twin (the decode-stats NULL policy); jpg
+    pixel fidelity is PSNR-gated in tests/test_jpeg.py."""
     images, _roads = _fixture_images(spark)
     return images.filter(
         (F.col("image_id") < _FIRST_500) & (F.col("fmt") != "jpg")
