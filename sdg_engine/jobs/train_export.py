@@ -85,7 +85,7 @@ def export_tfrecords(selected: DataFrame, out_dir: str) -> None:
 
 def verify_shards(spark: SparkSession, out_dir: str) -> dict:
     """CRC-verified re-ingest: counts + a 48-bit text fingerprint sum."""
-    from ..queries._common import _b12_cells
+    from ..queries._common import _h48
 
     bf = (
         spark.read.format("binaryFile")
@@ -102,10 +102,7 @@ def verify_shards(spark: SparkSession, out_dir: str) -> dict:
 
     parsed = map_rows(bf.select("content"), _parse,
                       "doc_id bigint, text string")
-    fp = " + ".join(
-        f"({c} * {4096 ** (3 - j)})"
-        for j, c in enumerate(_b12_cells("h", 4))
-    )
+    fp = _h48("h")
     row = (
         parsed.select("doc_id", F.md5("text").alias("h"))
         .selectExpr("doc_id", f"CAST({fp} AS BIGINT) AS fp")

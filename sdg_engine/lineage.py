@@ -92,9 +92,7 @@ def run_bucketed(
         bucketed.write.mode("overwrite").partitionBy("bucket").parquet(out_dir)
     wall = round(time.time() - t0, 3)
 
-    committed = spark.read.option("basePath", out_dir).parquet(
-        os.path.join(out_dir, "bucket=*")
-    )
+    committed = read_bucketed(spark, out_dir)
     data_cols = [c for c in committed.columns if c != "bucket"]
     stats = {
         r["bucket"]: r
@@ -135,6 +133,8 @@ def run_bucketed(
 
 
 def read_bucketed(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Every committed bucket of ``out_dir``, with its ``bucket``
+    partition column."""
     return spark.read.option("basePath", out_dir).parquet(
         os.path.join(out_dir, "bucket=*")
     )

@@ -383,9 +383,6 @@ def burn_cost_summaries(
     # here.  It is released by Spark's ContextCleaner once the frame
     # (and this closure) are garbage-collected; small-heap harness
     # sessions additionally force that GC in queries._common._prep.
-    # Callers that loop many distinct road networks through one
-    # big-heap session should materialize the result and call
-    # ``df._sdg_road_lut_bc.unpersist()`` between iterations.
     bc = images_geo.sparkSession.sparkContext.broadcast(lut)
 
     def _map_batches(batches):
@@ -402,13 +399,11 @@ def burn_cost_summaries(
     # local fixture files scan as 1-2 partitions — spread them on
     # image_id so the map-only stage uses the cluster; a production
     # multi-file table already has enough partitions and skips it
-    result = spread(
+    return spread(
         pts.select("cell_id", "image_id", "bytes", "fmt", "w", "h",
                    "fp_xmin", "fp_ymin", "fp_xmax", "fp_ymax"),
         "image_id",
     ).mapInPandas(_map_batches, _SUMMARY_SCHEMA)
-    result._sdg_road_lut_bc = bc  # explicit cleanup handle (see above)
-    return result
 
 
 # ---------------------------------------------------------------------------

@@ -35,6 +35,7 @@ from .. import cells as C
 from ..sqlgen import (
     apply_steps,
     grid_index_expr,
+    inline_steps,
     point_cell_steps,
     point_seg_dist_steps,
 )
@@ -667,8 +668,6 @@ def with_near_road_flag(
     computes the same thing but is evaluated interpreted — measured ~9×
     slower; a left-semi join computes the filter but loses the
     non-matching rows the flagship's n_points still needs.)"""
-    from ..sqlgen import point_seg_dist_expr
-
     level = level_for_cutoff(cutoff_m)
     probe = with_point_cell(points_geo, level, "lon", "lat", "_ncell").alias("p")
     # duplicates (a segment reaching one ring cell via several cover
@@ -679,7 +678,9 @@ def with_near_road_flag(
     ).alias("s")
     # p.lon / p.lat resolve as outer references once the subquery is
     # analyzed lazily, which the explicit .outer() key below triggers
-    dist = F.expr(point_seg_dist_expr("p.lon", "p.lat", "s.ax", "s.ay", "s.bx", "s.by"))
+    dist = F.expr(inline_steps(
+        point_seg_dist_steps("p.lon", "p.lat", "s.ax", "s.ay", "s.bx", "s.by")
+    ))
     near = build.where(
         (F.col("s.rcell") == F.col("p._ncell").outer())
         & (dist <= F.lit(float(cutoff_m)))

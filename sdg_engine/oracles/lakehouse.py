@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import os
 
-from ..queries._common import _b12_cells as _b12
+from ..queries._common import _h48
 from ._common import fixture_paths
 
 ORACLES: dict[str, str] = {}
@@ -304,12 +304,7 @@ FROM documents
 def _tfrecord_sql() -> str:
     """Per-language twin straight off the source parquet (the engine's
     numbers come back through the TFRecord round trip)."""
-    from ..queries._common import _b12_cells
-
-    fp = " + ".join(
-        f"({c} * {4096 ** (3 - j)})"
-        for j, c in enumerate(_b12_cells("h", 4))
-    )
+    fp = _h48("h")
     return f"""
 WITH f AS (
   SELECT lang, doc_id, CAST(length(text) AS BIGINT) AS len,
@@ -325,16 +320,8 @@ FROM f GROUP BY 1
 
 
 def _webdataset_sql(img: str) -> str:
-    from ..queries._common import _b12_cells
-
-    fpb = " + ".join(
-        f"({c} * {4096 ** (3 - j)})"
-        for j, c in enumerate(_b12_cells("hb", 4))
-    )
-    fpc = " + ".join(
-        f"({c} * {4096 ** (3 - j)})"
-        for j, c in enumerate(_b12_cells("hc", 4))
-    )
+    fpb = _h48("hb")
+    fpc = _h48("hc")
     return f"""
 WITH f AS (
   SELECT fmt, CAST(octet_length(bytes) AS BIGINT) AS len,
@@ -435,10 +422,7 @@ SELECT kind, COUNT(*) AS n_roads,
          AS sum_x_mils
 FROM read_parquet('{roads}') GROUP BY kind
 """
-    bf_cells = _b12("h", 4)
-    bf_fp = " + ".join(
-        f"({c} * {4096 ** (3 - j)})" for j, c in enumerate(bf_cells)
-    )
+    bf_fp = _h48("h")
     binf = f"""
 WITH f AS (
   SELECT fmt, CAST(octet_length(bytes) AS BIGINT) AS len,

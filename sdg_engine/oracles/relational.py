@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from ..queries._common import _b12_cells
+from ..queries._common import _b12_cells, _h48
 from ..queries.relational import (
     CC,
     CENTS,
@@ -500,7 +500,7 @@ def _kmv_set_similarity_sql() -> str:
     """Identical KMV construction: same 48-bit md5 hash (shared _h48
     fragment), same k, same union-sketch CASE when the true union is
     smaller than k."""
-    from ..queries.relational import _H48_SCALE, _KMV_K, _h48
+    from ..queries.relational import _H48_SCALE, _KMV_K
 
     h48 = _h48("hm")
     return f"""
@@ -1636,9 +1636,9 @@ FROM ranked GROUP BY 1, 2
 
 
 def _bootstrap_sql() -> str:
-    from ..queries.relational import _BS_B, _bs_h48
+    from ..queries.relational import _BS_B
 
-    h48 = _bs_h48("concat('bs', b, ':', s)")
+    h48 = _h48("md5(concat('bs', b, ':', s))")
     return f"""
 WITH hourly AS (
   SELECT CAST(FLOOR(epoch_us(ts) / 3600000000) AS BIGINT) AS h,
@@ -1652,7 +1652,7 @@ idx AS (
 ),
 slots AS (SELECT i AS s FROM idx),
 draws AS (
-  SELECT u.b AS b, s, ({h48}) % 1000000 AS h48
+  SELECT u.b AS b, s, {h48} % 1000000 AS h48
   FROM slots, UNNEST(range(0, {_BS_B})) AS u(b)
 ),
 joined AS (

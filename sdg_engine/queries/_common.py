@@ -120,9 +120,9 @@ _BFS_NODE = (
 )
 
 
-# 12-bit cell from 3 hex digits of a precomputed md5 column {h} at
-# 1-based positions {a}..{c} — the same conv()-free hex->int idiom as
-# the 48-bit sampling hashes; shared verbatim with the oracle.
+# 12-bit cell from 3 hex digits of an md5 hex string {h} at 1-based
+# positions {a}..{c} — conv()-free hex->int (conv() is absent in
+# DuckDB); shared verbatim with the oracle.
 _B12_CELL = (
     "(CAST((instr('0123456789abcdef', substring({h}, {a}, 1)) - 1) * 256 "
     "+ (instr('0123456789abcdef', substring({h}, {b}, 1)) - 1) * 16 "
@@ -138,16 +138,27 @@ def _b12_cells(h: str, k: int) -> list[str]:
     ]
 
 
+def _h48(h: str) -> str:
+    """48-bit integer from the first 12 hex digits of the md5 hex
+    string {h} (a column or an expression): the four 12-bit cells of
+    _b12_cells weighted 4096^3 .. 4096^0.  Exact in BIGINT and DOUBLE
+    in both engines; shared verbatim with the oracles."""
+    terms = " + ".join(
+        f"({c} * {4096 ** (3 - j)})" for j, c in enumerate(_b12_cells(h, 4))
+    )
+    return f"({terms})"
+
+
 def _components_jump(edges, verts_k):
     """Min-label connected components WITH POINTER JUMPING:
     label ← min(label, min-neighbor-label), then label ← label(label).
     The jump halves the remaining label-tree depth each round, so
     convergence is O(log diameter) instead of O(diameter) — road
     corridors form chain-shaped components whose diameter would cost
-    one join round per cell under plain propagation
-    (connected_components), but 12 jump rounds cover diameter 2^12.
-    Same persisted-frontier discipline (gotcha 15); converge-or-raise
-    like the plain variant.
+    one join round per cell under plain propagation, but 12 jump
+    rounds cover diameter 2^12.  Persisted-frontier discipline (gotcha
+    15): each round's labels are localCheckpointed, so the plan stays
+    O(1) per round; it raises rather than return unconverged labels.
 
     The loop runs under ``_drain_confs`` (8 shuffle partitions,
     saved/restored): the label table is CELLS, orders of magnitude

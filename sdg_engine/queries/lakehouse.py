@@ -11,8 +11,8 @@ from ..ops.payload import map_rows
 from ..skew import spread
 from ._common import (
     _TS_US,
-    _b12_cells,
     _fixture_images,
+    _h48,
     _stream_base,
     _t,
 )
@@ -384,10 +384,7 @@ def source_binaryfile_images(spark, sf_dir):
         .option("pathGlobFilter", "img*")
         .load(out)
     )
-    cells = _b12_cells("h", 4)
-    fp = " + ".join(
-        f"({c} * {4096 ** (3 - j)})" for j, c in enumerate(cells)
-    )
+    fp = _h48("h")
     return (
         bf.select(
             F.regexp_extract("path", r"\.([a-z]+)$", 1).alias("fmt"),
@@ -1068,8 +1065,7 @@ def tfrecord_roundtrip_docs(spark, sf_dir):
 
     parsed = map_rows(bf.select("content"), _parse,
                       "doc_id bigint, lang string, text string")
-    cells = _b12_cells("h", 4)
-    fp = " + ".join(f"({c} * {4096 ** (3 - j)})" for j, c in enumerate(cells))
+    fp = _h48("h")
     return (
         parsed.select(
             "lang", "doc_id",
@@ -1157,14 +1153,8 @@ def webdataset_roundtrip_images(spark, sf_dir):
         bf.select("content"), _untar,
         "image_id string, fmt string, content binary, caption string",
     )
-    cells_b = _b12_cells("hb", 4)
-    fp_b = " + ".join(
-        f"({c} * {4096 ** (3 - j)})" for j, c in enumerate(cells_b)
-    )
-    cells_c = _b12_cells("hc", 4)
-    fp_c = " + ".join(
-        f"({c} * {4096 ** (3 - j)})" for j, c in enumerate(cells_c)
-    )
+    fp_b = _h48("hb")
+    fp_c = _h48("hc")
     return (
         parsed.select(
             "fmt",

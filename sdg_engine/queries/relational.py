@@ -9,7 +9,7 @@ from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..ops.payload import map_rows
-from ._common import _TS_US, _b12_cells, _drain_confs, _t
+from ._common import _TS_US, _b12_cells, _drain_confs, _h48, _t
 
 
 def _utc(spark: SparkSession) -> None:
@@ -482,20 +482,9 @@ def hll_distinct(spark, sf_dir):
 # priorities.  Content-derived md5 key -> reproducible across runs,
 # partitionings, and engines; heavier docs draw proportionally more.
 _WS_K = 25
-# 12 hex chars = 48 bits: exact in BIGINT and DOUBLE in both engines.
-# Shared Spark/DuckDB fragment: 48-bit integer from md5 via four
-# 3-hex-digit strpos chunks (no conv() — absent in DuckDB).
-_WS_CHUNK = (
-    "(CAST((instr('0123456789abcdef', substring(md5(text), {a}, 1)) - 1) * 256 "
-    "+ (instr('0123456789abcdef', substring(md5(text), {b}, 1)) - 1) * 16 "
-    "+ (instr('0123456789abcdef', substring(md5(text), {c}, 1)) - 1) AS BIGINT))"
-)
-_WS_H48 = " + ".join(
-    f"({_WS_CHUNK.format(a=3 * i + 1, b=3 * i + 2, c=3 * i + 3)} * {4096 ** (3 - i)})"
-    for i in range(4)
-)
 _WS_PRI_SQL = (
-    f"CAST(FLOOR(CAST(({_WS_H48}) AS DOUBLE) / CAST(n_chars AS DOUBLE)) AS BIGINT)"
+    f"CAST(FLOOR(CAST({_h48('md5(text)')} AS DOUBLE)"
+    " / CAST(n_chars AS DOUBLE)) AS BIGINT)"
 )
 
 
@@ -786,21 +775,6 @@ def cms_heavy_hitters(spark, sf_dir):
 
 _KMV_K = 64
 _H48_SCALE = 281474976710656  # 2^48, the hash value space
-
-
-def _h48(h: str) -> str:
-    """48-bit integer hash from the first 12 hex digits of a
-    precomputed md5 column {h} — 4 weighted 12-bit chunks, the same
-    conv()-free digit math as _b12_cells; shared verbatim with the
-    oracle."""
-    cells = _b12_cells(h, 4)
-    return (
-        "("
-        + " + ".join(
-            f"({c} * {4096 ** (3 - i)})" for i, c in enumerate(cells)
-        )
-        + ")"
-    )
 
 
 def kmv_set_similarity(spark, sf_dir):
@@ -1512,14 +1486,14 @@ def events_variant_json(spark, sf_dir):
 
 def events_sessionize_batch(spark, sf_dir):
     """BATCH SESSIONIZATION (gaps-and-islands, the batch twin of the
-    stateful streaming sessionize): a new session starts at every
-    >30-minute gap in a user's event stream — lag + running-sum
-    windows partitioned by user_id (ONE hash exchange on the user
-    key; per-partition state is O(1) per row, so the same plan holds
-    at 10^12 events), then per-session aggregates rolled into a
-    session-length histogram with exact BIGINT durations in unix
-    micros (engines cannot disagree on sub-second ordering; ties
-    break on event_id)."""
+    native streaming session windows in streaming_session_window): a new
+    session starts at every >30-minute gap in a user's event stream —
+    lag + running-sum windows partitioned by user_id (ONE hash exchange
+    on the user key; per-partition state is O(1) per row, so the same
+    plan holds at 10^12 events), then per-session aggregates rolled into
+    a session-length histogram with exact BIGINT durations in unix
+    micros (engines cannot disagree on sub-second ordering; ties break
+    on event_id)."""
     ev = _t(spark, sf_dir, "events").selectExpr(
         "user_id", "event_id", f"{_TS_US} AS us"
     )
@@ -3167,23 +3141,6 @@ def events_markov_stationary(spark, sf_dir):
 
 
 _BS_B = 32
-# 48-bit integer from md5 of (replicate, slot) — the sample_weighted
-# hex->int fragment over a synthesized key string.
-_BS_CHUNK = (
-    "(CAST((instr('0123456789abcdef', substring(md5({key}), {a}, 1)) - 1)"
-    " * 256 "
-    "+ (instr('0123456789abcdef', substring(md5({key}), {b}, 1)) - 1) * 16 "
-    "+ (instr('0123456789abcdef', substring(md5({key}), {c}, 1)) - 1)"
-    " AS BIGINT))"
-)
-
-
-def _bs_h48(key: str) -> str:
-    return " + ".join(
-        f"({_BS_CHUNK.format(key=key, a=3 * i + 1, b=3 * i + 2, c=3 * i + 3)}"
-        f" * {4096 ** (3 - i)})"
-        for i in range(4)
-    )
 
 
 def events_bootstrap_ci(spark, sf_dir):
@@ -3211,7 +3168,7 @@ def events_bootstrap_ci(spark, sf_dir):
         .join(
             idx.selectExpr("i AS s", "n AS n2")
             .selectExpr("s", f"explode(sequence(0, {_BS_B - 1})) AS b")
-            .selectExpr("b", "s", f"({_bs_h48(key)}) % 1000000 AS h48"),
+            .selectExpr("b", "s", f"{_h48(f'md5({key})')} % 1000000 AS h48"),
             F.expr("slot_i = h48 % n"),
         )
         .groupBy("b")

@@ -16,7 +16,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .. import streaming as STR
-from ..session import scoped_confs
 from ._common import _drain_confs, _stream_base, _t
 
 
@@ -274,15 +273,14 @@ def streaming_static_enrich(spark, sf_dir):
 
 def streaming_session_window(spark, sf_dir):
     """NATIVE SESSION WINDOWS in Structured Streaming
-    (``F.session_window`` — the built-in merging-session operator,
-    §2.10 API breadth next to the applyInPandasWithState sessionizer):
-    per-user 30-min-gap sessions over the watermarked event stream,
-    append mode, availableNow drain.  The sink holds exactly the
-    sessions whose end (last event + gap) cleared the final watermark
-    (max event time − 2 h) — the oracle reproduces that set with a
-    batch gaps-and-islands CTE plus the closure filter, so the
-    watermark semantics themselves are oracle-checked.  Output is the
-    one-row session ledger (counts/cents/single-event sessions/max
+    (``F.session_window`` — the built-in merging-session operator, the
+    engine's one sessionizer): per-user 30-min-gap sessions over the
+    watermarked event stream, append mode, availableNow drain.  The sink
+    holds exactly the sessions whose end (last event + gap) cleared the
+    final watermark (max event time − 2 h) — the oracle reproduces that
+    set with a batch gaps-and-islands CTE plus the closure filter, so
+    the watermark semantics themselves are oracle-checked.  Output is
+    the one-row session ledger (counts/cents/single-event sessions/max
     padded duration)."""
     in_dir, out, ck = _stage_inputs(
         spark, "sesswin_", [("events.parquet", f"{sf_dir}/events.parquet")]
@@ -305,22 +303,22 @@ def streaming_session_window(spark, sf_dir):
 
 
 def streaming_user_streaks(spark, sf_dir):
-    """LONGEST PER-USER EVENT-TYPE STREAK through a REAL streaming run
-    — the second custom stateful operator next to sessionize, and one
-    no built-in streaming aggregate expresses (the fold is
-    order-sensitive).  Input is written as 2 time-ordered chunk files
-    (r06: was 4 — the answer is each user's FINAL state row, so any
-    chunk count ≥ 2 exercises the cross-batch state composition and
-    extra chunks only re-paid per-batch fixed cost; parity PASS) and
-    drained with maxFilesPerTrigger=1, so micro-batch order equals
-    event-time order and the applyInPandasWithState run-length fold
-    composes across batch boundaries through its state row.  Each
-    batch emits the running state; the final row per user (max
-    n_events — strictly increasing per appearance) is the answer.
-    State-store fixed cost follows gotcha 16d: the drain runs at 8
-    shuffle partitions (1 store x partitions x 2 batches), restored
-    after.  Oracle: the classic batch gaps-and-islands run analysis
-    (rn - run ROW_NUMBER grouping), earliest-max tie-break."""
+    """LONGEST PER-USER EVENT-TYPE STREAK through a REAL streaming run —
+    the engine's custom stateful operator, and one no built-in streaming
+    aggregate expresses (the fold is order-sensitive).  Input is written
+    as 2 time-ordered chunk files (r06: was 4 — the answer is each
+    user's FINAL state row, so any chunk count ≥ 2 exercises the
+    cross-batch state composition and extra chunks only re-paid
+    per-batch fixed cost; parity PASS) and drained with
+    maxFilesPerTrigger=1, so micro-batch order equals event-time order
+    and the applyInPandasWithState run-length fold composes across batch
+    boundaries through its state row.  Each batch emits the running
+    state; the final row per user (max n_events — strictly increasing
+    per appearance) is the answer.  State-store fixed cost follows gotcha
+    16d: the drain runs at 8 shuffle partitions (1 store x partitions x
+    2 batches), restored after.  Oracle: the classic batch
+    gaps-and-islands run analysis (rn - run ROW_NUMBER grouping),
+    earliest-max tie-break."""
     in_dir, out, ck = _stage_inputs(
         spark, "streak_", _ntile_chunks(sf_dir, 2)
     )
@@ -430,45 +428,6 @@ def streaming_pysource_windows(spark, sf_dir):
         finally:
             q.stop()
     return spark.table(name)
-
-
-def streaming_tws_totals(spark, sf_dir):
-    """transformWithStateInPandas END-TO-END — the Spark 4 arbitrary-
-    stateful API (typed ValueState + MapState primitives on the
-    RocksDB store, the SPARK-42931 successor of the two
-    applyInPandasWithState operators already certified): per-user
-    running spend totals and a per-type count map over 4 time-ordered
-    micro-batches (maxFilesPerTrigger=1 over ts-chunked files).  The
-    drain runs with the RocksDB state-store provider (required by the
-    API) and 8 shuffle partitions (gotcha 16d), both restored after.
-    Final row per user = max n_events (strictly increasing per
-    appearance); oracle is the plain per-user batch aggregate.
-
-    ENV-GATED (not in QUERIES): the tws state-server protocol
-    needs the python ``protobuf`` package
-    (pyspark/sql/streaming/proto/StateMessage_pb2), absent in this
-    container — the driver worker crashes with ImportError before the
-    first batch (measured r05 wave 39).  The full path is kept wired
-    and pytest runs it wherever protobuf exists (the
-    applyInPandasWithState twins cover stateful semantics here)."""
-    in_dir, out, ck = _stage_inputs(
-        spark, "tws_", _ntile_chunks(sf_dir, 4)
-    )
-    with scoped_confs(spark, {
-        "spark.sql.shuffle.partitions": "8",
-        "spark.sql.streaming.stateStore.providerClass":
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-    }):
-        STR.stream_tws_running_totals(spark, in_dir, out, ck)
-    sink = spark.read.parquet(out)
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        sink.withColumn("rk", F.row_number().over(w))
-        .filter("rk = 1")
-        .select("user_id", "n_events", "cents_total", "n_types")
-        .orderBy("user_id")
-    )
 
 
 def streaming_full_outer_join(spark, sf_dir):

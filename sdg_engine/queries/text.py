@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from ..ops.payload import map_rows
 from ..skew import spread
-from ._common import _drain_confs, _t
+from ._common import _components_jump, _t
 
 
 def dedup_fingerprint(spark, sf_dir):
@@ -364,77 +364,12 @@ def ngram_jaccard_indexed(spark, sf_dir):
     return scored.filter(F.col("jaccard") >= 0.2)
 
 
-def connected_components(edges, vertices):
-    """Iterative min-label propagation (the dedup-cluster primitive):
-    label(v) converges to min(doc_id) of v's connected component, in
-    at most 20 rounds.
-
-    Per round: one groupBy over the (undirected) edge-label join, one
-    join back, persist, driver-side convergence check on the count of
-    changed labels — the same persisted-frontier discipline as
-    knn_ring_iterative.  Rounds needed = graph diameter (near-dup
-    clusters are shallow); at 10^12 rows this is the standard
-    large/small-star shape with labels never wider than the vertex set.
-    """
-    # localCheckpoint is LOAD-BEARING and persist() is NOT a substitute:
-    # persist caches data but leaves the LOGICAL plan intact, so round
-    # k's analyzed plan still embeds every earlier round plus the whole
-    # upstream (e.g. the LSH candidate pipeline) — Spark's SQL-listener
-    # explainString then renders a combinatorially growing plan string
-    # and OOMs the driver (measured stack: StringConcat.append inside
-    # QueryExecution.explainString).  localCheckpoint truncates the
-    # plan to a LogicalRDD leaf, keeping every round O(1).  The
-    # checkpointed label frames are tiny (one row per vertex).
-    und = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
-    labels = vertices.select(
-        F.col("doc_id").alias("v"), F.col("doc_id").alias("label")
-    ).localCheckpoint()
-    # r06: the rounds run under _drain_confs (8 shuffle partitions +
-    # whole-stage codegen OFF, restored after) — per-round plan churn
-    # over the label relation means janino compile dominates these
-    # tiny jobs (the _components_jump / mst_roads measurement)
-    spark_ = edges.sparkSession
-    converged = False
-    with _drain_confs(spark_):
-        for _ in range(20):
-            nbr_min = (
-                und.join(labels, und.src == labels.v)
-                .groupBy("dst").agg(F.min("label").alias("nbr_label"))
-            )
-            new = (
-                labels.join(nbr_min, labels.v == nbr_min.dst, "left")
-                .select(
-                    "v",
-                    F.least(
-                        F.col("label"), F.coalesce("nbr_label", F.col("label"))
-                    ).alias("label"),
-                    (F.col("nbr_label") < F.col("label")).alias("_chg"),
-                )
-                .localCheckpoint()
-            )
-            converged = new.filter(F.col("_chg")).isEmpty()
-            labels = new.drop("_chg")
-            if converged:
-                break
-    if not converged:
-        # r03 review: silently returning unconverged labels diverges
-        # from the fully-converged recursive-CTE oracle with no hint —
-        # a >20-diameter component must fail loudly instead
-        raise RuntimeError(
-            "connected_components did not converge in 20 rounds "
-            "(component diameter exceeds 20)"
-        )
-    return labels
-
-
 def dedup_clusters(spark, sf_dir):
     """Near-dup CLUSTERS: MinHash-LSH candidate pairs → connected
-    components (iterative min-label propagation) → one row per
-    multi-doc cluster with its canonical keeper (min doc_id) and size.
-    Oracle: DuckDB recursive CTE propagating labels over the same
-    edge set."""
+    components (``_components_jump``: min-label propagation with
+    pointer jumping) → one row per multi-doc cluster with its canonical
+    keeper (min doc_id) and size.  Oracle: DuckDB recursive CTE
+    propagating labels over the same edge set."""
     # bounded to doc_id < 300 in the HARNESS (a default-1g driver
     # session runs 50 queries back-to-back; the unbounded operator is
     # exercised by the union-find pytest and composes at any scale)
@@ -444,7 +379,7 @@ def dedup_clusters(spark, sf_dir):
         .filter((F.col("doc_a") < 300) & (F.col("doc_b") < 300))
         .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     )
-    comp = connected_components(pairs, docs.select("doc_id"))
+    comp = _components_jump(pairs, docs.selectExpr("doc_id AS k"))
     return (
         comp.groupBy("label")
         .agg(F.count(F.lit(1)).alias("n_docs"))
@@ -1005,7 +940,7 @@ def phrase_search(spark, sf_dir):
         .filter(F.col("tok") != "")
         .localCheckpoint()  # postings reused by both phrase legs
     )
-    terms = list({t for p in _PHRASES for t in p})
+    terms = sorted({t for p in _PHRASES for t in p})
     post = toks.filter(F.col("tok").isin(terms))
     qa = spark.createDataFrame(
         [(f"{a} {b}", a, b) for a, b in _PHRASES], "phrase string, ta string, tb string"
@@ -1919,7 +1854,7 @@ def arrow_doc_stats(spark, sf_dir):
     materialization, kernels run on Arrow buffers) that completes the
     vectorized-Python API ladder next to mapInPandas (codecs),
     grouped applyInPandas (MVT sink), applyInPandasWithState
-    (sessionize), arrow-optimized pandas UDFs, and the Python UDTF.
+    (streaks), arrow-optimized pandas UDFs, and the Python UDTF.
     Map-only over the scan; the per-lang rollup is the only exchange.
     At 100 TB this is the shape of every decode pass in the repo."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")

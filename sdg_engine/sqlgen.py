@@ -22,6 +22,8 @@ leaves the JVM), while the oracle side chains them into nested
 
 from __future__ import annotations
 
+import re
+
 WORLD_MIN_SQL = "CAST(0 AS DOUBLE)"
 WORLD_SIZE_SQL = "CAST(10 AS DOUBLE)"
 METERS_SQL = "CAST(111320 AS DOUBLE)"
@@ -90,26 +92,6 @@ def point_seg_dist_steps(
         (out, f"(SQRT(({p}_ex * {p}_ex) + ({p}_ey * {p}_ey)) * {METERS_SQL})"),
     ]
     return steps
-
-
-def point_seg_dist_expr(px: str, py: str, ax: str, ay: str, bx: str, by: str) -> str:
-    """Single-expression point->segment distance (meters).
-
-    Same math as :func:`point_seg_dist_steps` but inlined, for use as a
-    JOIN condition (a broadcast hash join can carry non-equi predicates
-    beside the cell equi-key — the shuffle-free 'within cutoff' test)."""
-    dx = f"(({bx}) - ({ax}))"
-    dy = f"(({by}) - ({ay}))"
-    len2 = f"(({dx} * {dx}) + ({dy} * {dy}))"
-    t = (
-        f"(CASE WHEN {len2} > CAST(0 AS DOUBLE) THEN "
-        f"LEAST(CAST(1 AS DOUBLE), GREATEST(CAST(0 AS DOUBLE), "
-        f"(((({px}) - ({ax})) * {dx}) + ((({py}) - ({ay})) * {dy})) / {len2})) "
-        f"ELSE CAST(0 AS DOUBLE) END)"
-    )
-    ex = f"(({px}) - (({ax}) + {t} * {dx}))"
-    ey = f"(({py}) - (({ay}) + {t} * {dy}))"
-    return f"(SQRT(({ex} * {ex}) + ({ey} * {ey})) * {METERS_SQL})"
 
 
 def hex_cell_steps(px: str, py: str, size: float, out: str = "hex_id") -> list[tuple[str, str]]:
@@ -222,6 +204,20 @@ def chain_select(base_sql: str, steps: list[tuple[str, str]], keep: list[str]) -
         cur = f"(SELECT *, {expr} AS {name} FROM {cur} t{i})"
     cols = ", ".join(keep)
     return f"SELECT {cols} FROM {cur} tz"
+
+
+def inline_steps(steps: list[tuple[str, str]]) -> str:
+    """Compose a step list into ONE expression (the last step's): each
+    step's name is replaced by its expression in every later step,
+    matched on word boundaries.  For a step list used where no columns
+    can be added first, e.g. a JOIN condition.  The text grows with
+    each reuse of a name, so keep it to short chains."""
+    done: dict[str, str] = {}
+    for name, expr in steps:
+        for prev, sub in done.items():
+            expr = re.sub(rf"\b{re.escape(prev)}\b", lambda _m, s=sub: s, expr)
+        done[name] = expr
+    return expr
 
 
 def apply_steps(df, steps: list[tuple[str, str]]):

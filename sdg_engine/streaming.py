@@ -18,11 +18,10 @@ drain built from the same three pieces:
 
 Between source and sink sit the drains' own operators: watermarked
 windows (single and chained), dedup (plain and watermark-bounded),
-native session windows, a stream-static broadcast join and the custom
-stateful operators (``applyInPandasWithState`` sessionize and streaks,
-``transformWithStateInPandas`` running totals).  The exactly-once
-snapshot sink keeps its own ``foreachBatch`` sink, and the Python
-ticker source feeds a memory sink (Python sources cannot run
+native session windows, a stream-static broadcast join and one custom
+stateful operator (the ``applyInPandasWithState`` streaks fold).  The
+exactly-once snapshot sink keeps its own ``foreachBatch`` sink, and the
+Python ticker source feeds a memory sink (Python sources cannot run
 availableNow).  Each drain is checked against a batch twin of the same
 semantics, in tests or by its DuckDB oracle.
 """
@@ -255,89 +254,6 @@ def stream_interval_join(
     _sink(joined, out_dir, checkpoint)
 
 
-_SESSION_STATE_SCHEMA = "start long, last long, n int"
-_SESSION_OUT_SCHEMA = (
-    "user_id bigint, session_start timestamp, session_end timestamp, n_events int"
-)
-GAP_S = 1800
-
-
-def _sessionize_fn(key, pdfs, state: GroupState):
-    """applyInPandasWithState body: fold this batch's events into the
-    open session; emit every CLOSED session (gap > 30 min between
-    consecutive events, or state timeout at the watermark)."""
-    if state.hasTimedOut:
-        start, last, n = state.get
-        state.remove()
-        yield pd.DataFrame(
-            {"user_id": [key[0]],
-             "session_start": [pd.Timestamp(start, unit="s")],
-             "session_end": [pd.Timestamp(last, unit="s")],
-             "n_events": [n]}
-        )
-        return
-    rows = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-    # normalize to ns first — parquet timestamps may arrive as
-    # datetime64[us], whose int64 view is MICROseconds
-    ts = rows["ts"].astype("datetime64[ns]").astype("int64") // 1_000_000_000
-    out = []
-    if state.exists:
-        start, last, n = state.get
-    else:
-        start = last = int(ts.iloc[0])
-        n = 0
-    for t in ts:
-        t = int(t)
-        if n > 0 and t - last > GAP_S:
-            out.append((key[0], start, last, n))
-            n = 0
-        if n == 0:
-            start = t
-        last = t
-        n += 1
-    state.update((start, last, n))
-    # clamp above the current watermark: Spark rejects an event-time
-    # timeout <= watermark with IllegalArgumentException (r03 review —
-    # reachable when a user's newest event is already older than
-    # watermark - GAP_S in a later micro-batch)
-    timeout_ms = (last + GAP_S) * 1000
-    try:
-        wm = state.getCurrentWatermarkMs()
-        timeout_ms = max(timeout_ms, wm + 1)
-    except Exception:
-        pass
-    state.setTimeoutTimestamp(timeout_ms)
-    yield pd.DataFrame(
-        {"user_id": [r[0] for r in out],
-         "session_start": [pd.Timestamp(r[1], unit="s") for r in out],
-         "session_end": [pd.Timestamp(r[2], unit="s") for r in out],
-         "n_events": [r[3] for r in out]}
-    )
-
-
-def stream_sessionize(
-    spark: SparkSession,
-    in_dir: str,
-    out_dir: str,
-    checkpoint: str,
-) -> None:
-    """Custom stateful streaming operator: per-user sessionization with
-    a 30-min gap, state timeout driven by the event-time watermark."""
-    src = _source(spark, in_dir, EVENTS_SCHEMA, 4)
-    sessions = (
-        src.withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _sessionize_fn,
-            _SESSION_OUT_SCHEMA,
-            _SESSION_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-    _sink(sessions, out_dir, checkpoint)
-
-
 def stream_static_enrich(
     spark: SparkSession,
     in_dir: str,
@@ -432,6 +348,9 @@ def batch_hourly_closed(spark: SparkSession, events: DataFrame) -> DataFrame:
     )
 
 
+GAP_S = 1800
+
+
 def stream_sessions_native(
     spark: SparkSession,
     in_dir: str,
@@ -439,14 +358,13 @@ def stream_sessions_native(
     checkpoint: str,
 ) -> None:
     """NATIVE session windows (``F.session_window`` — Spark's built-in
-    merging-session state operator, the declarative counterpart to the
-    applyInPandasWithState sessionizer in stream_sessionize): per-user
-    gap-merged sessions, watermarked, append mode — each session emits
-    exactly once, when the watermark passes its end (last event + gap).
-    State is bounded by the watermark exactly like the hourly windows;
-    the availableNow drain applies the final watermark before
-    terminating, so the sink holds precisely the sessions whose end
-    cleared max(event time) − delay."""
+    merging-session state operator, the engine's one sessionizer):
+    per-user gap-merged sessions, watermarked, append mode — each
+    session emits exactly once, when the watermark passes its end (last
+    event + gap).  State is bounded by the watermark exactly like the
+    hourly windows; the availableNow drain applies the final watermark
+    before terminating, so the sink holds precisely the sessions whose
+    end cleared max(event time) − delay."""
     src = _source(spark, in_dir, EVENTS_SCHEMA, 4)
     agg = (
         src.withWatermark("ts", WATERMARK)
@@ -510,7 +428,7 @@ def _streak_fn(key, pdfs, state: GroupState):
 def stream_user_streaks(
     spark: SparkSession, in_dir: str, out_dir: str, checkpoint: str
 ) -> None:
-    """Custom stateful operator #2 (next to sessionize): longest
+    """Custom stateful operator (``applyInPandasWithState``): longest
     per-user event-type streak over time-ordered micro-batches
     (maxFilesPerTrigger=1 over ts-chunked input files — batch order =
     event-time order, the property the run-length fold needs)."""
@@ -674,90 +592,3 @@ def make_ticker_datasource():
             return _TickerStreamReader(self.options)
 
     return TickerDataSource
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas (r05 wave 39) — the Spark 4 arbitrary-
-# stateful-processing API (SPARK-42931 successor of applyInPandasWith-
-# State): a StatefulProcessor object with TYPED state primitives
-# (ValueState + MapState here) instead of one opaque state tuple.
-# Requires the RocksDB state-store provider; the query builder sets it
-# around the drain and restores the previous provider after.
-# ---------------------------------------------------------------------------
-
-_TWS_OUT_SCHEMA = (
-    "user_id bigint, n_events bigint, cents_total bigint, n_types bigint"
-)
-
-
-def _make_tws_processor():
-    """Built lazily so the class body (which subclasses a pyspark ABC)
-    ships to workers via the pyfiles zip, not a driver closure."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        """Per-user RUNNING SPEND TOTALS with a per-type seen-count
-        map: ValueState carries (cents, n) across micro-batches,
-        MapState carries event_type -> count (n_types = its key
-        cardinality — the state shape applyInPandasWithState's single
-        tuple cannot express without serializing a dict by hand)."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._tot = handle.getValueState("tot", "cents long, n long")
-            self._types = handle.getMapState(
-                "types", "t string", "c long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            cents = 0
-            n = 0
-            counts: dict = {}
-            for pdf in rows:
-                if not len(pdf):
-                    continue
-                cents += int(pdf["cents"].sum())
-                n += len(pdf)
-                for t, c in pdf["event_type"].value_counts().items():
-                    counts[t] = counts.get(t, 0) + int(c)
-            if self._tot.exists():
-                pc, pn = self._tot.get()
-                cents += int(pc)
-                n += int(pn)
-            self._tot.update((cents, n))
-            for t, c in counts.items():
-                if self._types.containsKey((t,)):
-                    c += int(self._types.getValue((t,))[0])
-                self._types.updateValue((t,), (c,))
-            n_types = sum(1 for _ in self._types.keys())
-            yield pd.DataFrame(
-                {"user_id": [int(key[0])], "n_events": [n],
-                 "cents_total": [cents], "n_types": [n_types]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return RunningTotals()
-
-
-def stream_tws_running_totals(
-    spark: SparkSession, in_dir: str, out_dir: str, checkpoint: str
-) -> None:
-    """transformWithStateInPandas drain: per-user running totals over
-    the ts-chunked file source (maxFilesPerTrigger=1 — each chunk is
-    one micro-batch, so every user emits a strictly-growing n_events
-    row per batch it appears in)."""
-    src = _source(spark, in_dir, EVENTS_SCHEMA, 1).selectExpr(
-        "user_id", "event_type",
-        "CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents",
-    )
-    totals = src.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_make_tws_processor(),
-        outputStructType=_TWS_OUT_SCHEMA,
-        outputMode="Append",
-        timeMode="None",
-    )
-    _sink(totals, out_dir, checkpoint)

@@ -1,5 +1,6 @@
 """M3/M4: payload invariants (BASELINE.json:15), raster burn goldens,
-lineage resume, and skew salting."""
+lineage resume, skew salting, and twins of the shared connected-
+components loop and 48-bit md5 fingerprint."""
 
 import os
 
@@ -157,12 +158,13 @@ def test_skew_salting_splits_hot_cell(spark):
 
 
 def test_connected_components_union_find_oracle(spark):
-    """Iterative min-label propagation == classic union-find on the
-    same edge set (seeded random graph with shallow clusters)."""
+    """Min-label propagation with pointer jumping (``_components_jump``)
+    == classic union-find on the same edge set (seeded random graph with
+    shallow clusters)."""
     import numpy as np
     import pandas as pd
 
-    from sdg_engine.queries.text import connected_components
+    from sdg_engine.queries._common import _components_jump
 
     rng = np.random.default_rng(11)
     n = 300
@@ -188,9 +190,30 @@ def test_connected_components_union_find_oracle(spark):
     want = {v: min(members) for r, members in roots.items() for v in members}
 
     e_df = spark.createDataFrame(pd.DataFrame(edges, columns=["src", "dst"]))
-    v_df = spark.createDataFrame(pd.DataFrame({"doc_id": range(n)}))
-    got = {r.v: r.label for r in connected_components(e_df, v_df).collect()}
+    v_df = spark.createDataFrame(pd.DataFrame({"k": range(n)}))
+    got = {r.v: r.label for r in _components_jump(e_df, v_df).collect()}
     assert got == want
+
+
+def test_h48_matches_int_of_md5_prefix():
+    """``_h48`` (the one 48-bit md5 fingerprint fragment, shared by the
+    queries and their oracles) evaluated in DuckDB == int(h[:12], 16)
+    over seeded random md5 hex strings plus the all-0 / all-f edges."""
+    import hashlib
+    import random
+
+    import duckdb
+
+    from sdg_engine.queries._common import _h48
+
+    rng = random.Random(48)
+    hs = [hashlib.md5(rng.randbytes(16)).hexdigest() for _ in range(500)]
+    hs += ["0" * 32, "f" * 32]
+    con = duckdb.connect()
+    con.register("t", pd.DataFrame({"h": hs}))
+    got = dict(con.execute(f"SELECT h, {_h48('h')} FROM t").fetchall())
+    assert got == {h: int(h[:12], 16) for h in hs}
+    assert got["f" * 32] == 2 ** 48 - 1
 
 
 def test_snapshot_commits_and_time_travel(spark, tmp_path):

@@ -343,41 +343,6 @@ def test_polyline_roundtrip_properties():
 
 
 # ---------------------------------------------------------------------------
-# Wave 39: transformWithStateInPandas (env-gated on python protobuf)
-# ---------------------------------------------------------------------------
-
-def test_tws_running_totals_where_protobuf_exists(spark):
-    """transformWithStateInPandas needs the python protobuf package
-    (the tws state-server wire protocol, StateMessage_pb2); in
-    containers without it the driver worker crashes with ImportError
-    before batch 0 — so the end-to-end check runs only where the dep
-    exists, and the query stays out of the oracle registry (see
-    queries.streaming.streaming_tws_totals docstring)."""
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("python protobuf not installed (tws wire protocol)")
-    from sdg_engine.queries.streaming import streaming_tws_totals
-
-    out = _pdf(streaming_tws_totals(spark, SF))
-    ev = pd.read_parquet(SF + "/events.parquet",
-                         columns=["user_id", "event_type", "value"])
-    ev["cents"] = (ev["value"] * 100 + 0.5).apply(int)
-    want = ev.groupby("user_id").agg(
-        n_events=("cents", "size"), cents_total=("cents", "sum"),
-        n_types=("event_type", "nunique"),
-    ).reset_index()
-    got = out.sort_values("user_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(
-        got, want.astype({"user_id": "int64", "n_events": "int64",
-                          "cents_total": "int64", "n_types": "int64"}),
-        check_dtype=False,
-    )
-
-
-# ---------------------------------------------------------------------------
 # Wave 40: modularity + language classifier
 # ---------------------------------------------------------------------------
 

@@ -1,7 +1,7 @@
-"""§2.10 streaming: watermarked window agg + custom stateful operator,
-each verified against the batch implementation of the same semantics."""
+"""§2.10 streaming: watermarked window agg, dedup, interval join and the
+exactly-once snapshot sink, each verified against the batch
+implementation of the same semantics."""
 
-import datetime as dt
 import os
 
 import pyarrow as pa
@@ -10,7 +10,6 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from sdg_engine import streaming as STR
-from sdg_engine.queries._common import _drain_confs
 from sdg_engine.queries.streaming import _stage_inputs
 
 SF = "/root/testdata/sf0.001"
@@ -45,53 +44,6 @@ def test_stream_hourly_checkpoint_incremental(spark):
     n1 = spark.read.parquet(out).count()
     STR.stream_events_hourly(spark, in_dir, out, ck)  # no new input
     assert spark.read.parquet(out).count() == n1
-
-
-def test_stream_sessionize_matches_batch(spark):
-    """Closed sessions from the stateful streaming operator equal the
-    batch window-chain sessionization, for sessions that END before the
-    final watermark (the streaming-visible subset)."""
-    in_dir, out, ck = _split_events(spark, "t_sessionize_")
-    # the drain conf of the sibling streaming_session_window query
-    with _drain_confs(spark):
-        STR.stream_sessionize(spark, in_dir, out, ck)
-    got = spark.read.parquet(out).toPandas()
-    assert len(got) > 0
-
-    # batch oracle: same 30-min-gap sessionization in pandas
-    ev = pq.read_table(f"{SF}/events.parquet").to_pandas().sort_values(
-        ["user_id", "ts", "event_id"]
-    )
-    max_ts = ev["ts"].max().value // 1_000_000_000
-    cutoff = max_ts - 7200  # watermark
-    want = []
-    for uid, g in ev.groupby("user_id"):
-        ts = (g["ts"].astype("datetime64[ns]").astype("int64")
-              // 1_000_000_000).tolist()
-        start = last = ts[0]
-        n = 0
-        for t in ts:
-            if n > 0 and t - last > STR.GAP_S:
-                want.append((uid, start, last, n))
-                n = 0
-            if n == 0:
-                start = t
-            last = t
-            n += 1
-        if n > 0:
-            want.append((uid, start, last, n))  # open tail
-    want_all = set(want)
-    got_set = {
-        (r.user_id, r.session_start.value // 10**9,
-         r.session_end.value // 10**9, r.n_events)
-        for r in got.itertuples(index=False)
-    }
-    # nothing the stream emitted may disagree with the batch oracle
-    assert got_set <= want_all
-    # every session whose timeout fires before the final watermark MUST
-    # have been emitted
-    must = {(u, s, e, n) for u, s, e, n in want if e + STR.GAP_S <= cutoff}
-    assert must <= got_set
 
 
 def test_stream_dedup_docs_dedupes_across_batches(spark):
@@ -148,48 +100,6 @@ def test_stream_interval_join_matches_batch(spark):
     ).select(F.col("c_user").alias("user_id"), "click_id", "view_id")
     assert got.count() > 0
     assert got.exceptAll(want).count() + want.exceptAll(got).count() == 0
-
-
-def test_stream_sessionize_late_event_does_not_crash(spark):
-    """r03 review regression pin: a user whose (late-arriving) newest
-    event satisfies last + GAP <= watermark used to make _sessionize_fn
-    set an event-time timeout at/below the watermark — Spark rejects
-    that with IllegalArgumentException and kills the query.  The clamp
-    (max(timeout, watermark+1)) must let the stream drain cleanly."""
-    base = dt.datetime(2024, 1, 1)
-
-    def _events(rows):
-        return pa.table({
-            "event_id": [r[0] for r in rows],
-            # Spark reads TIMESTAMP(us), not ns INT64
-            "ts": pa.array([base + dt.timedelta(seconds=r[1]) for r in rows],
-                           pa.timestamp("us")),
-            "user_id": [r[2] for r in rows],
-            "event_type": ["click"] * len(rows),
-            "value": [1.0] * len(rows),
-            "props": ["{}"] * len(rows),
-        })
-
-    in_dir, out, ck = _stage_inputs(spark, "t_late_", [
-        # batch 1 (maxFilesPerTrigger=4): user 1 at t=0 plus user 2 far
-        # in the future -> watermark jumps ~3 days
-        ("a1.parquet", _events([(1, 0, 1), (2, 3 * 86400, 2)])),
-        ("a2.parquet", _events([(3, 3 * 86400 + 60, 2)])),
-        ("a3.parquet", _events([(4, 3 * 86400 + 120, 2)])),
-        ("a4.parquet", _events([(5, 3 * 86400 + 180, 2)])),
-        # batch 2: a LATE event for user 1 (t=60s — far below the
-        # watermark; last + GAP is ~3 days below it too) — pre-fix this
-        # crashed with 'timeout timestamp cannot be earlier than watermark'
-        ("b5.parquet", _events([(6, 60, 1)])),
-        # batch 3: advance the watermark further so user 1's (clamped)
-        # timeout fires and the merged session is emitted
-        ("c6.parquet", _events([(7, 6 * 86400, 3)])),
-    ])
-    with _drain_confs(spark):
-        STR.stream_sessionize(spark, in_dir, out, ck)  # must not raise
-    got = spark.read.parquet(out)
-    # user 1's t=0 session was closed by the event-time timeout
-    assert got.filter(F.col("user_id") == 1).count() >= 1
 
 
 def test_stream_dedup_watermarked_state_is_horizon_bounded(spark):
